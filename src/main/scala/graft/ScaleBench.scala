@@ -294,7 +294,7 @@ object ScaleBench {
       ("q_hll_rollup", q("q_hll_rollup"), null),
       // finance core (events is the 100 TB table; copies are disjoint
       // user populations — per-user event counts unchanged, k× users)
-      ("q_j3_asof", q("q_j3_asof"), null),       // as-of join (union+lead)
+      ("q_j3_asof", q("q_j3_asof"), null),       // as-of join (union+window)
       ("q_a1_oi", q("q_a1_oi"), null),           // OI panel (map-side agg)
       ("q_w3_rolling", q("q_w3_rolling"), null), // per-key feature window
       ("q_m8_rolling_refit", q("q_m8_rolling_refit"), null), // rolling OLS

@@ -1,7 +1,7 @@
 package graft.domain
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 import graft.core.Schema.EventType
@@ -11,7 +11,9 @@ import graft.functions.Microstructure
   * (SURVEY §2 W2/W3/P8/F2; `/root/reference/prediction_ML_pipeline.py:
   * 131-262`). All windows are ordered by the explicit (event_time, seq)
   * event order — the #1 pandas-parity trap (SURVEY §7.4.1). One shuffle on
-  * (ticker, date); every window below reuses that partitioning.
+  * (ticker, date); every window below reuses that partitioning. Every
+  * frame is bounded or grows from the partition start, so each window is
+  * linear in the events of a ticker-day.
   */
 object Features {
 
@@ -43,21 +45,36 @@ object Features {
 
   /** W2: direction of the most recent / next event of type `t`
     * (`prediction_ML_pipeline.py:135-146`): masked direction, then
-    * ffill/bfill excluding the current row, fill 0. */
+    * ffill/bfill excluding the current row, fill 0.
+    *
+    * Both lookups are growing frames, `(-inf, current-1]`, which Spark
+    * evaluates in one pass: `next_dir` runs over the exact reverse of the
+    * event order (both keys descending, nulls last), because a shrinking
+    * `[current+1, +inf)` frame is re-aggregated for every row. The
+    * reversed order costs one extra per-partition sort on the same
+    * (ticker, date) exchange. */
   def addAdjacentDirections(df: DataFrame,
                             types: Seq[Int] = Seq(EventType.Submit,
                               EventType.Delete, EventType.VisibleExec))
       : DataFrame = {
-    val w = evOrder
-    types.foldLeft(df) { (d, t) =>
-      val masked = when(col("event_type") === t, col("direction"))
-      d.withColumn(s"prev_dir_$t",
-          coalesce(last(masked, ignoreNulls = true)
-            .over(w.rowsBetween(Window.unboundedPreceding, -1)), lit(0)))
-        .withColumn(s"next_dir_$t",
-          coalesce(first(masked, ignoreNulls = true)
-            .over(w.rowsBetween(1, Window.unboundedFollowing)), lit(0)))
-    }
+    val w = evOrder.rowsBetween(Window.unboundedPreceding, -1)
+    val wRev = Window.partitionBy(col("ticker"), col("date"))
+      .orderBy(col("event_time").desc, col("seq").desc)
+      .rowsBetween(Window.unboundedPreceding, -1)
+    def lastDir(t: Int, over: WindowSpec): Column =
+      coalesce(last(when(col("event_type") === t, col("direction")),
+        ignoreNulls = true).over(over), lit(0))
+    val names = types.flatMap(t => Seq(s"prev_dir_$t", s"next_dir_$t"))
+    // next_dir first: the descending windows then sit below the ascending
+    // ones, whose order the (event_time, seq) windows after them reuse.
+    // One column per window keeps a single masked input (the first
+    // window's) computed before the exchange.
+    val withNext = types.foldLeft(df)((d, t) =>
+      d.withColumn(s"next_dir_$t", lastDir(t, wRev)))
+    types.foldLeft(withNext)((d, t) =>
+        d.withColumn(s"prev_dir_$t", lastDir(t, w)))
+      .select((df.columns.toSeq.filterNot(names.contains) ++ names)
+        .map(col): _*)
   }
 
   /** W3: trade sentiment — signed size summed over the previous 5 and next

@@ -15,13 +15,17 @@ import org.apache.spark.sql.functions._
   * pandas).
   *
   * Implementation: union the two inputs, tag the source, and run ONE ordered
-  * window per key group — `first(payload, ignoreNulls)` over
-  * `[current, +inf)` (forward) or `last(payload, ignoreNulls)` over
-  * `(-inf, current]` (backward). This costs a single shuffle on the `by`
-  * keys (same partitioning the surrounding pipeline already uses) and never
-  * builds the row-pair blowup a range join would; it scales linearly in
-  * events per key and is AQE-skew-splittable. A dedicated SparkStrategy
-  * (SURVEY §4.3) is only warranted if this shuffle ever dominates.
+  * window per key group — `last(payload, ignoreNulls)` over
+  * `(-inf, current]`. Backward orders by `(time, source, tie)` ascending;
+  * forward orders by the same keys descending, which makes "the first
+  * right row at or after" the last one seen so far. Both are growing
+  * frames, which Spark evaluates in one pass; the forward lookup is never
+  * a shrinking `[current, +inf)` frame, which Spark re-aggregates per row.
+  * This costs a single shuffle on the `by` keys (same partitioning the
+  * surrounding pipeline already uses) and never builds the row-pair
+  * blowup a range join would; it is linear in events per key and
+  * AQE-skew-splittable. A dedicated SparkStrategy (SURVEY §4.3) is only
+  * warranted if this shuffle ever dominates.
   */
 object AsOfJoin {
 
@@ -32,7 +36,11 @@ object AsOfJoin {
     * @param attach    right columns to attach (renamed with `prefix`)
     * @param forward   direction: true = first right at-or-after
     * @param toleranceNs inclusive tolerance in nanos (None = unbounded)
-    * @param rightTieBreak deterministic order among equal-time right rows
+    * @param rightTieBreak deterministic order among equal-time right rows:
+    *                  forward takes the smallest value at the earliest
+    *                  matching time, backward the largest at the latest.
+    *                  Without it, which of several equal-time right rows
+    *                  is attached is unspecified.
     */
   def asOf(left: DataFrame, right: DataFrame, timeCol: String,
            by: Seq[String], attach: Seq[String], forward: Boolean,
@@ -47,9 +55,10 @@ object AsOfJoin {
     val rU = right.select(
       (by.map(col) :+ t.as("__time") :+ payload.as("__p") :+
         tie.as("__tie")): _*)
-      // left rows sort before right at equal time for forward (so an
-      // equal-time right row is inside [current, +inf)), and after for
-      // backward — matching pandas' inclusive equality on both directions.
+      // at equal time, right rows come before left rows in the window
+      // order of either direction (forward's order is descending), so an
+      // equal-time right row is inside the left row's (-inf, current]
+      // frame — pandas' inclusive equality on both directions.
       .withColumn("__ord", lit(if (forward) 1 else 0))
     val pType = rU.schema("__p").dataType
     val lU = left
@@ -63,15 +72,13 @@ object AsOfJoin {
     }
     val unioned = lU.unionByName(rAligned.select(lU.columns.map(col): _*))
 
+    // forward = the exact reverse of the ascending order (desc is nulls
+    // last), so the nearest right row at or after is the last one before
+    val keys = Seq(col("__time"), col("__ord"), col("__tie"))
     val w = Window.partitionBy(by.map(col): _*)
-      .orderBy(col("__time").asc, col("__ord").asc, col("__tie").asc)
-    val matched =
-      if (forward)
-        first(col("__p"), ignoreNulls = true)
-          .over(w.rowsBetween(Window.currentRow, Window.unboundedFollowing))
-      else
-        last(col("__p"), ignoreNulls = true)
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+      .orderBy((if (forward) keys.map(_.desc) else keys.map(_.asc)): _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val matched = last(col("__p"), ignoreNulls = true).over(w)
 
     val withMatch = unioned.withColumn("__m", matched)
       .filter(col("__ord") === lit(if (forward) 0 else 1) &&

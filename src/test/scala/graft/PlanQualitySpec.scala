@@ -1,6 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{RowFrame,
+  SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding,
+  WindowExpression}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.window.WindowExec
 
 /** Plan-quality regression guards: the physical plans the 100 TB design
   * depends on (SCALE.md) must survive refactors. Checked against sf0.001
@@ -465,6 +470,59 @@ class PlanQualitySpec extends SparkSpec {
     assert(seg.count() > 0)
   }
 
+  /** Every gate's pre-AQE physical plan, built once for the plan walks
+    * below. */
+  private lazy val gatePlans: Seq[(String, SparkPlan)] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> fn(spark, sf).queryExecution.sparkPlan
+    }
+
+  /** Window frames that end at the partition end but start after the
+    * partition start, such as `[current+k, +inf)`. Spark re-aggregates
+    * such a shrinking frame for every row, so its cost grows with the
+    * square of the rows in one window partition; the same lookup over the
+    * reversed order is a growing frame Spark evaluates in one pass. A
+    * whole-partition frame is fine. */
+  private def shrinkingFrames(plan: SparkPlan): Seq[String] =
+    plan.collect { case w: WindowExec => w.windowExpression }.flatten
+      .flatMap(_.collect {
+        case we: WindowExpression => we.windowSpec.frameSpecification
+      })
+      .collect {
+        case f @ SpecifiedWindowFrame(RowFrame, lower, UnboundedFollowing)
+            if lower != UnboundedPreceding => f.sql
+      }
+
+  test("no shrinking window frame in any gate plan, the feature frame or " +
+    "the iceberg tag; features shuffle once on (ticker, date) and sort " +
+    "once per event order") {
+    import scala.jdk.CollectionConverters._
+    // a small prepped ticker-day as a local relation, so the plans hold
+    // only what the code under test adds
+    val d = graft.fixtures.LobsterFixture.preppedDay(spark, nEvents = 400)
+    val localDay = spark.createDataFrame(d.collect().toSeq.asJava, d.schema)
+    val features = graft.domain.Features.hiddenExecFeatures(localDay)
+    val icebergs = graft.domain.Oi.tagIcebergs(localDay)
+    val plans = gatePlans ++ Seq(
+      "Features.hiddenExecFeatures" -> features.queryExecution.sparkPlan,
+      "Oi.tagIcebergs" -> icebergs.queryExecution.sparkPlan)
+    val offenders = plans.flatMap { case (name, plan) =>
+      shrinkingFrames(plan).map(f => s"$name: $f")
+    }
+    assert(offenders.isEmpty,
+      "shrinking frames (quadratic per window partition):\n" +
+        offenders.mkString("\n"))
+    val p = features.queryExecution.executedPlan.toString
+    val byTickerDate =
+      "Exchange hashpartitioning\\(ticker#\\d+, date#\\d+,".r
+    assert(byTickerDate.findAllIn(p).size == 1,
+      "every feature window must reuse ONE (ticker, date) exchange:\n" + p)
+    assert(occurrences(p, "Exchange") == 1,
+      "the feature frame must shuffle nothing else:\n" + p)
+    assert(occurrences(p, "Sort [") == 2,
+      "one sort per event order (ascending and descending):\n" + p)
+  }
+
   test("gate-plan WindowExec audit: no unpartitioned window outside " +
     "the whitelisted bounded sites (COVERAGE.md inventory)") {
     // COVERAGE.md's r14 inventory documents every INTENDED
@@ -479,7 +537,6 @@ class PlanQualitySpec extends SparkSpec {
     // exceeding its whitelisted count — or any NEW gate with one —
     // goes red and must either partition the window or justify a
     // whitelist entry with the bounded frame it runs over.
-    import org.apache.spark.sql.execution.window.WindowExec
     // gate -> allowed unpartitioned-WindowExec count; the bounded frame
     // is noted per entry (sites: COVERAGE.md "WindowExec warning
     // inventory"). Counts are per PLAN NODE in the pre-AQE sparkPlan,
@@ -510,9 +567,9 @@ class PlanQualitySpec extends SparkSpec {
       "q_unimax_apply" -> 3,
       // hybrid RRF ranking: <= 20-row fused top-k frame
       "q_hybrid_rrf" -> 1)
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1)
-      .flatMap { case (name, fn) =>
-        val n = fn(spark, sf).queryExecution.sparkPlan.collect {
+    val offenders = gatePlans
+      .flatMap { case (name, plan) =>
+        val n = plan.collect {
           case w: WindowExec if w.partitionSpec.isEmpty => w
         }.size
         val cap = allowed.getOrElse(name, 0)

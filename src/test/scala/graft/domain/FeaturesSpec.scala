@@ -40,6 +40,66 @@ class FeaturesSpec extends SparkSpec {
     assert(out.map(_.getInt(1)).sameElements(Array(-1, -1, -1, -1, 0, 0)))
   }
 
+  private case class Ev(tk: String, day: Int, seq: Long, sec: Int,
+                        et: Int, dir: Int)
+
+  test("W2 adjacent directions match a brute force over randomized " +
+    "ticker-days with equal event times ordered only by seq") {
+    // few distinct seconds per day, so most rows share their event_time
+    // with others and only seq orders them. The rows reach Spark
+    // shuffled, so an order that leaves equal-time rows to the input
+    // order disagrees.
+    val rng = new scala.util.Random(17)
+    val types = Seq(1, 3, 4)
+    val evs = for {
+      tk <- Seq("A", "B", "C"); day <- 15 to 17
+      n = rng.nextInt(40)
+      // per day one type appears only in the middle, so it is missing at
+      // both the start and the end of the day
+      rare = types(rng.nextInt(types.size))
+      i <- 0 until n
+      et = Seq(1, 3, 4, 5)(rng.nextInt(4)) match {
+        case t if t == rare && (i < n / 4 || i >= 3 * n / 4) => 5
+        case t => t
+      }
+    } yield Ev(tk, day, i.toLong, i * 4 / n, et,
+      if (rng.nextBoolean()) 1 else -1)
+    val rows = rng.shuffle(evs).map(e =>
+      Row(e.tk, java.sql.Date.valueOf(s"2024-01-${e.day}"), e.seq,
+        java.sql.Timestamp.valueOf(s"2024-01-${e.day} 10:00:0${e.sec}"),
+        e.et, e.dir))
+    val in = df("ticker STRING, date DATE, seq BIGINT, " +
+      "event_time TIMESTAMP, event_type INT, direction INT", rows: _*)
+    val dirCols = types.flatMap(t => Seq(s"prev_dir_$t", s"next_dir_$t"))
+    val got = Features.addAdjacentDirections(in, types)
+      .select((Seq("ticker", "date", "seq") ++ dirCols).map(col): _*)
+      .collect().map { r =>
+        (r.getString(0), r.getDate(1).toString, r.getLong(2)) ->
+          dirCols.indices.map(i => r.getInt(3 + i))
+      }.toMap
+    assert(got.size == evs.size)
+    var prevMissing, nextMissing = 0
+    evs.groupBy(e => (e.tk, e.day)).values.foreach { dayEvs =>
+      // seconds rise with seq, so seq alone is the event order
+      val ordered = dayEvs.sortBy(_.seq).toIndexedSeq
+      ordered.indices.foreach { i =>
+        val want = types.flatMap { t =>
+          val prev = ordered.take(i).findLast(_.et == t)
+          val next = ordered.drop(i + 1).find(_.et == t)
+          if (prev.isEmpty) prevMissing += 1
+          if (next.isEmpty) nextMissing += 1
+          Seq(prev.fold(0)(_.dir), next.fold(0)(_.dir))
+        }
+        val e = ordered(i)
+        val key = (e.tk, s"2024-01-${e.day}", e.seq)
+        assert(got(key) == want, s"$key: got ${got(key)}, want $want " +
+          s"(columns ${dirCols.mkString(",")})")
+      }
+    }
+    assert(prevMissing > 0 && nextMissing > 0,
+      "generator lost the missing-neighbour rows (expect 0) it exists for")
+  }
+
   test("W3 sentiment: signed-size rolling sums incl current, 5-window") {
     // signed: seq0 +10 (t1), seq1 -20 (t4 dir-1: -1*20... np.select: type 4
     // => dir*size = -20), seq2 0 (t5), seq3 -40 (t3: -dir*size), seq4 -50,
