@@ -1,9997 +1,56 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.Tables
-import graft.functions.{Microstructure, Stats, TextFunctions}
-import graft.operators._
-import graft.sources.AuxSources
+import graft.gates._
 
-/** Driver contract (see SURVEY.md §7 + the builder prompt): one `queries`
-  * entry per implemented operator from SURVEY.md §2, each with equivalent
-  * DuckDB SQL in `oracleSql` over the same parquet tables.
+/** Driver contract (see SURVEY.md §7): one gate per implemented
+  * operator from SURVEY.md §2.
+  *  - `queries(name)(session, sfDir)` builds the gate's Spark result;
+  *  - `oracleSql(name)` is DuckDB SQL over the same parquet tables that
+  *    must hash-match it (columns sorted by name, rows sorted);
+  *  - `entry` is the flagship query the driver smoke-checks;
+  *  - `sharedFixtureRddIds` / `drainFixtureBuilds` let Bench spare and
+  *    attribute the shared per-(session, dir) fixtures.
   *
-  * Cross-engine float parity rules (SURVEY §7.4.8), used throughout:
-  *  - money/product sums go through DECIMAL(18,4) inside the aggregate:
-  *    decimal addition is exact and order-independent, so Spark and DuckDB
-  *    produce bit-identical doubles after the final cast;
-  *  - ratios / means / moments are emitted as micro-units via
-  *    floor(x*1e6 + 0.5) cast to BIGINT — the SAME pure-IEEE expression on
-  *    both engines (Spark round() rounds the shortest-decimal string,
-  *    DuckDB round() rounds the binary value: they disagree on exact
-  *    halves, floor-scaling does not);
-  *  - event time is int64 epoch-NANOS end-to-end (`ts_ns`): Spark reads
-  *    parquet TIMESTAMP(NANOS) via nanosAsLong, DuckDB via epoch_ns(ts).
-  *    All bin arithmetic is integer (nanos exceed Double's 2^53).
+  * The gates live in `graft.gates`, one `Seq[Gate]` per operator family;
+  * each [[graft.gates.Gate]] holds a query and its oracle together. To
+  * add a gate, add one `Gate` value to its family. Helpers shared across
+  * families are in [[graft.gates.Shared]] (with the cross-engine float
+  * parity rules), scratch paths and fixtures in [[graft.gates.Fixtures]].
   */
 object SparkEntry {
 
-  // ---- shared helpers -----------------------------------------------------
-
-  /** Micro-unit fixed-point: floor(x*1e6+0.5) as BIGINT (see header). */
-  private def r6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)).cast("long")
-  /** SQL twin of [[r6]]. */
-  private def R6(e: String): String = s"CAST(floor(($e) * 1e6 + 0.5) AS BIGINT)"
-
-  /** Exact (order-independent) money sum: decimal inside, double outside. */
-  private def moneySum(c: Column): Column =
-    sum(c.cast("decimal(18,4)")).cast("double")
-  private def MoneySum(e: String): String =
-    s"CAST(SUM(CAST(($e) AS DECIMAL(18,4))) AS DOUBLE)"
-
-  /** DuckDB twin of one language's marker score in
-    * [[TextFunctions.langId]]: the Spark face counts positions where a
-    * zero-width lookahead alternation `(?=(m1|m2|...))` matches — i.e.
-    * positions where ANY marker starts, overlapping hits included, at
-    * most one count per position. RE2 has no lookahead, so the twin
-    * scans positions explicitly: `substr(p, i, |m|) = m` over
-    * `generate_series(1, length(p))`. Identical by construction on BMP
-    * text (char-counting `length`/`substr` agree between engines there;
-    * the driver corpus is ASCII). Built from the SAME
-    * [[TextFunctions.langMarkers]] list the Spark face uses. */
-  private def LangScoreSql(markers: Seq[String]): String =
-    "len(list_filter(generate_series(1, length(p)), i -> " +
-      markers.map(m => s"substr(p, i, ${m.length}) = '$m'")
-        .mkString(" OR ") + "))"
-
-  /** Shared CTE chain of the two DSIR gates: target model (every 31st
-    * doc), raw model, per-token add-0.5 LLR, DECIMAL per-doc sums —
-    * mirrors [[graft.operators.Dsir.importanceScores]] exactly. */
-  private val DsirCtes =
-    s"""tgt AS (
-       |  SELECT unnest(string_split_regex(trim(lower(text)), '\\s+'))
-       |    AS term
-       |  FROM documents WHERE doc_id % 31 = 0),
-       |tc AS (SELECT term, COUNT(*) AS ct FROM tgt GROUP BY term),
-       |tt AS (SELECT CAST(SUM(ct) AS BIGINT) AS nt, COUNT(*) AS vt
-       |       FROM tc),
-       |rawt AS (
-       |  SELECT doc_id,
-       |    unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
-       |  FROM documents WHERE doc_id % 31 <> 0),
-       |rc AS (SELECT term, COUNT(*) AS cr FROM rawt GROUP BY term),
-       |rt AS (SELECT CAST(SUM(cr) AS BIGINT) AS nr, COUNT(*) AS vr
-       |       FROM rc),
-       |sc AS (
-       |  SELECT r.doc_id,
-       |    ln((COALESCE(t.ct, 0) + 0.5) / (nt + 0.5 * vt)) -
-       |    ln((COALESCE(c.cr, 0) + 0.5) / (nr + 0.5 * vr)) AS llr_t
-       |  FROM rawt r
-       |  LEFT JOIN tc t ON r.term = t.term
-       |  LEFT JOIN rc c ON r.term = c.term, tt, rt),
-       |agg AS (
-       |  SELECT doc_id, COUNT(*) AS n_tokens,
-       |    CAST(SUM(CAST(llr_t AS DECIMAL(18,9))) AS DOUBLE) AS llr
-       |  FROM sc GROUP BY 1)""".stripMargin
-
-  /** DuckDB twin of the exact cosine between two double-list columns —
-    * the same left-to-right fold as `plans.CosineExpr` / `exactCosine`
-    * (list_sum over a preserved-order list), the pattern q_ann_cosine
-    * proved engine-exact down to raw-double rank ordering. */
-  private def CosSql(a: String, b: String): String =
-    s"list_sum(list_transform(generate_series(1, len($a)), " +
-      s"i -> $a[i] * $b[i])) / " +
-      s"(sqrt(list_sum(list_transform($a, x -> x*x))) * " +
-      s"sqrt(list_sum(list_transform($b, x -> x*x))))"
-
-  /** Per-(process, dataset) root for the TableOps gate fixtures — same
-    * isolation rule as the JSONL fixture: concurrent Verify and Bench
-    * JVMs must not race on one overwrite-then-read directory. */
-  private def tableOpsRoot(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_table_" +
-      java.lang.Integer.toHexString(dir.hashCode) + "_" +
-      java.lang.ProcessHandle.current().pid()
-
-  private def rmTree(root: String): Unit = {
-    def rm(p: java.nio.file.Path): Unit = {
-      if (java.nio.file.Files.isDirectory(p)) {
-        val it = java.nio.file.Files.list(p).iterator()
-        val children = scala.collection.mutable.ArrayBuffer
-          .empty[java.nio.file.Path]
-        while (it.hasNext) children += it.next()
-        children.foreach(rm)
-      }
-      java.nio.file.Files.deleteIfExists(p)
-    }
-    rm(java.nio.file.Paths.get(root))
-  }
-
-  /** (Re)build the versioned-table fixture the TableOps gates read:
-    * v1 = every-7th order (overwrite), v2 = MERGE INTO of doubled-price
-    * updates (every-14th) plus inserted %7==3 rows, v3 = DELETE WHERE
-    * o_totalprice < 50000. Rebuilt from scratch on every call so bench
-    * repetitions and reruns see an identical three-version history. */
-  private def tableOpsFixture(s: SparkSession, dir: String): String = {
-    val root = tableOpsRoot(dir)
-    rmTree(root)
-    val ord = Tables.orders(s, dir)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    graft.tables.TableOps.overwrite(
-      ord.filter(col("o_orderkey") % 7 === 0), root)
-    val updates = ord.filter(col("o_orderkey") % 14 === 0)
-      .withColumn("o_totalprice", col("o_totalprice") * 2.0)
-      .unionByName(ord.filter(col("o_orderkey") % 7 === 3))
-    graft.tables.TableOps.merge(s, root, updates, Seq("o_orderkey"))
-    graft.tables.TableOps.deleteWhere(s, root,
-      col("o_totalprice") < 50000.0)
-    root
-  }
-
-  /** Replay directory for the q_stream_iceberg gate: the events table
-    * mapped onto the iceberg state machine's input shape (clicks =
-    * visible execs / type 4, purchases = refilling submits / type 1,
-    * user_id = the key), written as ONE data file, followed by two
-    * single-row "~flush~" sentinel files at +2 and +4 days past the max
-    * event time. With maxFilesPerTrigger=1 the sentinels replay as
-    * separate micro-batches, so the watermark provably passes every real
-    * exec's tolerance window AND a data batch runs afterwards to fire
-    * the event-time timeouts — no reliance on no-data micro-batches.
-    * Sentinel rows are type-1 submits with no pending exec on their key,
-    * so they emit nothing. */
-  // memoized per (JVM, sf dir) like the other stream fixtures: pure
-  // function of the events table; Bench rebuilds per rep otherwise
-  private val iceFixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val decontamGramCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-  private def streamIcebergFixture(s: SparkSession, dir: String): String =
-    iceFixtureCache.computeIfAbsent(dir,
-      d => buildStreamIcebergFixture(s, d))
-  private def buildStreamIcebergFixture(s: SparkSession, dir: String)
-      : String = {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_stream_ice_" +
-      java.lang.Integer.toHexString(dir.hashCode) + "_" +
-      java.lang.ProcessHandle.current().pid()
-    rmTree(root)
-    val base = eventsNs(s, dir)
-      .filter(col("event_type").isin("click", "purchase"))
-      .select(
-        timestamp_micros(expr("ts_ns div 1000"))
-          .as("event_time"),
-        col("event_id"),
-        col("user_id").cast("string").as("ticker"),
-        lit(0L).as("price"),
-        col("ts_ns"),
-        when(col("event_type") === "click", 4).otherwise(1)
-          .as("event_type"))
-    base.coalesce(1).write.parquet(root)
-    val maxTs = base.agg(max(col("ts_ns"))).head().getLong(0)
-    import s.implicits._
-    def flush(id: Long, tsNs: Long) = Seq(
-      (new java.sql.Timestamp(tsNs / 1000000L), id, "~flush~", 0L,
-        tsNs, 1))
-      .toDF("event_time", "event_id", "ticker", "price", "ts_ns",
-        "event_type")
-    // distinct modification times keep the file-source replay order
-    Thread.sleep(15)
-    flush(-1L, maxTs + 2 * DAY).coalesce(1).write.mode("append")
-      .parquet(root)
-    Thread.sleep(15)
-    flush(-2L, maxTs + 4 * DAY).coalesce(1).write.mode("append")
-      .parquet(root)
-    root
-  }
-
-  /** Late-data fixture for the q_stream_oi_late watermark gate: three
-    * modification-time-ordered parquet files replayed one per
-    * micro-batch.
-    *   file 0 — the on-time bulk (event_id % 7 != 0), original times;
-    *   file 1 — the % 7 == 0 rows arriving LATE: half re-timed to
-    *     maxT - 30 min (inside the 1 h watermark -> must be absorbed),
-    *     half rewound to the stream's FIRST window (hours past the
-    *     watermark -> must be dropped);
-    *   file 2+3 — two far-future sentinels (the q_stream_iceberg trick):
-    *     the first advances the watermark past every real window, the
-    *     second's batch runs UNDER that watermark so append emits all
-    *     closed windows before processAllAvailable returns.
-    * Margins are 30 min / hours — no window boundary sits near the
-    * watermark, so the kept/dropped split is deterministic. */
-  /** Run `f` with the session's shuffle-partition count — which fixes a
-    * streaming query's STATE partitioning at start — temporarily set to
-    * `n`. State-store fixed cost per partition per micro-batch dominates
-    * these bounded-state finite replays (measured on q_stream_join at
-    * sf0.1: 6.5 s at 16 state partitions, 3.7 s at 8, 2.7 s at 4 — same
-    * ~40k-row state). Results are partitioning-independent; at cluster
-    * scale the same knob goes UP with state volume.
-    * SEQUENTIAL-ONLY: this mutates the shared session's conf and restores
-    * it in finally — safe because gate queries plan strictly one at a
-    * time (Verify and Bench both iterate serially). A future parallel
-    * harness must scope the override per query (SparkSession.newSession)
-    * instead of calling this. */
-  private def withStatePartitions[A](s: SparkSession, n: Int)(f: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try f finally s.conf.set(key, prev)
-  }
-
-  /** Fixture for the q_stream_join stream-stream outer-join gate:
-    * file 0 — every click + purchase row; files 1-2 — sentinel PAIRS
-    * (one row per stream side, users -1/-2, never matching each other)
-    * two days and four days past the data, so BOTH sides' watermarks
-    * advance and the left-outer null rows provably emit before the
-    * replay ends (the two-sentinel q_stream_iceberg trick — outer
-    * emission uses the watermark from the PREVIOUS batch). */
-  private val joinFixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def streamJoinFixture(s: SparkSession, dir: String): String =
-    joinFixtureCache.computeIfAbsent(dir, d => buildStreamJoinFixture(s, d))
-  private def buildStreamJoinFixture(s: SparkSession, dir: String): String = {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_stream_join_" +
-      java.lang.Integer.toHexString(dir.hashCode) + "_" +
-      java.lang.ProcessHandle.current().pid()
-    rmTree(root)
-    def withTime(df: DataFrame): DataFrame = df.withColumn("event_time",
-      timestamp_micros(expr("ts_ns div 1000")))
-    val base = eventsNs(s, dir)
-      .filter(col("event_type").isin("click", "purchase"))
-      .select(col("event_id"), col("ts_ns"), col("user_id"),
-        col("event_type"))
-    withTime(base).coalesce(1).write.parquet(root)
-    val maxTs = base.agg(max(col("ts_ns"))).head().getLong(0)
-    import s.implicits._
-    def sentinels(idBase: Long, tsNs: Long) = withTime(Seq(
-      (idBase, tsNs, -1L, "click"),
-      (idBase - 1, tsNs, -2L, "purchase"))
-      .toDF("event_id", "ts_ns", "user_id", "event_type"))
-    Thread.sleep(15)
-    sentinels(-10L, maxTs + 2 * DAY).coalesce(1).write.mode("append")
-      .parquet(root)
-    Thread.sleep(15)
-    sentinels(-20L, maxTs + 4 * DAY).coalesce(1).write.mode("append")
-      .parquet(root)
-    root
-  }
-
-  /** Fixture for q_stream_join_xbatch — the CROSS-BATCH face of the
-    * stream-stream join (the one-batch gate above never probes the
-    * symmetric join state with a match arriving in a LATER micro-batch).
-    * One synthetic probe PAIR per base row with event_id % 13 == 0, on a
-    * user-id range (1e6 + event_id, unique per probe) disjoint from every
-    * real user — so probes can ONLY match their own partner and the base
-    * join surface is untouched. Replayed one file per micro-batch:
-    *   file 0 — every click + purchase row PLUS the probe clicks
-    *     (c_ts = maxT - 50 min); its end advances both watermarks to
-    *     maxT - 1 h;
-    *   file 1 — the probe purchases (p_ts = maxT - 30 min): 20 min into
-    *     their click's 1 h join window AND 30 min ABOVE the batch-0
-    *     watermark, so a correct engine MUST absorb them and join them
-    *     against batch-0 click state — an engine that dropped that state
-    *     across the batch boundary emits outer null rows for every probe
-    *     click instead and hash-mismatches. The first sentinel pair
-    *     rides in this file (watermark advance applies at batch END,
-    *     after the probes joined);
-    *   file 2 — the second sentinel pair, whose batch runs UNDER the
-    *     advanced watermark so every outer null row provably emits
-    *     before the replay ends. */
-  private val joinXbatchFixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def streamJoinXbatchFixture(s: SparkSession, dir: String): String =
-    joinXbatchFixtureCache.computeIfAbsent(dir,
-      d => buildStreamJoinXbatchFixture(s, d))
-  private def buildStreamJoinXbatchFixture(s: SparkSession, dir: String)
-      : String = {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_stream_joinx_" +
-      java.lang.Integer.toHexString(dir.hashCode) + "_" +
-      java.lang.ProcessHandle.current().pid()
-    rmTree(root)
-    def withTime(df: DataFrame): DataFrame = df.withColumn("event_time",
-      timestamp_micros(expr("ts_ns div 1000")))
-    val base = eventsNs(s, dir)
-      .filter(col("event_type").isin("click", "purchase"))
-      .select(col("event_id"), col("ts_ns"), col("user_id"),
-        col("event_type"))
-    val maxTs = base.agg(max(col("ts_ns"))).head().getLong(0)
-    def probeSide(idBase: Long, tsNs: Long, et: String): DataFrame =
-      base.filter(col("event_id") % 13 === 0)
-        .select((lit(idBase) - col("event_id")).as("event_id"),
-          lit(tsNs).as("ts_ns"),
-          (lit(1000000L) + col("event_id")).as("user_id"),
-          lit(et).as("event_type"))
-    val probeClicks = probeSide(-1000000L, maxTs - 5 * M10, "click")
-    val xbatch = probeSide(-2000000L, maxTs - M30, "purchase")
-    withTime(base.unionByName(probeClicks)).coalesce(1).write.parquet(root)
-    import s.implicits._
-    def sentinels(idBase: Long, tsNs: Long) = withTime(Seq(
-      (idBase, tsNs, -1L, "click"),
-      (idBase - 1, tsNs, -2L, "purchase"))
-      .toDF("event_id", "ts_ns", "user_id", "event_type"))
-    Thread.sleep(15)
-    withTime(xbatch).unionByName(sentinels(-10L, maxTs + 2 * DAY))
-      .coalesce(1).write.mode("append").parquet(root)
-    Thread.sleep(15)
-    sentinels(-20L, maxTs + 4 * DAY).coalesce(1).write.mode("append")
-      .parquet(root)
-    root
-  }
-
-  /** Fixture for the q_stream_dedup_late eviction gate, replayed one
-    * file per micro-batch:
-    *   file 0 — every event (content key "k<id>"), plus an IDENTICAL
-    *     in-batch duplicate for id % 11 == 0 (either copy hashing the
-    *     same, so which survives is immaterial);
-    *   file 1 — the max-ts row(s), carved out as the settle batch;
-    *   file 2 — a fresh-key sentinel at maxT (a second interposed batch,
-    *     so state EVICTION under the advanced watermark has provably run
-    *     before the re-arrivals, whatever the engine's one-batch lag);
-    *   file 3 — the probes: re-arrivals of keys whose originals are
-    *     OLDER than maxT-3h (state evicted -> KEPT again, the
-    *     at-least-once horizon semantics), re-arrivals of keys from the
-    *     last hour (state alive -> dropped), and fresh-key rows rewound
-    *     to minT (late -> dropped; they carry shifted ids so a wrongly
-    *     kept one shows up in the hash instead of being filtered away).
-    * Watermark 1 h; eviction boundary maxT-2h — every probe sits >= 1 h
-    * from it, so the kept set is deterministic. */
-  private val dedupLateFixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def streamDedupLateFixture(s: SparkSession, dir: String): String =
-    dedupLateFixtureCache.computeIfAbsent(dir,
-      d => buildStreamDedupLateFixture(s, d))
-  private def buildStreamDedupLateFixture(s: SparkSession, dir: String)
-      : String = {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_stream_dl_" +
-      java.lang.Integer.toHexString(dir.hashCode) + "_" +
-      java.lang.ProcessHandle.current().pid()
-    rmTree(root)
-    val base = eventsNs(s, dir)
-      .select(col("event_id"), col("ts_ns"), col("value"))
-      .withColumn("content", concat(lit("k"), col("event_id")))
-    def withTime(df: DataFrame): DataFrame = df.withColumn("event_time",
-      timestamp_micros(expr("ts_ns div 1000")))
-    val Array(minTs, maxTs) = base
-      .agg(min(col("ts_ns")), max(col("ts_ns"))).head() match {
-      case r => Array(r.getLong(0), r.getLong(1))
-    }
-    val withDupes = base.unionByName(base.filter(col("event_id") % 11 === 0))
-    withTime(withDupes.filter(col("ts_ns") =!= maxTs)).coalesce(1)
-      .write.parquet(root)
-    Thread.sleep(15)
-    withTime(withDupes.filter(col("ts_ns") === maxTs)).coalesce(1)
-      .write.mode("append").parquet(root)
-    Thread.sleep(15)
-    import s.implicits._
-    withTime(Seq((-1L, maxTs, 0.0, "~s~"))
-        .toDF("event_id", "ts_ns", "value", "content")).coalesce(1)
-      .write.mode("append").parquet(root)
-    Thread.sleep(15)
-    val sevens = base.filter(col("event_id") % 7 === 0)
-    val re = sevens.filter(col("ts_ns") < maxTs - 3 * H)
-      .withColumn("ts_ns", lit(maxTs - M30))
-    val alive = sevens.filter(col("ts_ns") >= maxTs - H)
-      .withColumn("ts_ns", lit(maxTs - M30))
-    val late = base.filter(col("event_id") % 13 === 0)
-      .withColumn("content", concat(lit("late"), col("event_id")))
-      .withColumn("event_id", col("event_id") + lit(10000000L))
-      .withColumn("ts_ns", lit(minTs))
-    withTime(re.unionByName(alive).unionByName(late)).coalesce(1)
-      .write.mode("append").parquet(root)
-    root
-  }
-
-  // memoized per (JVM, sf dir): the fixture is a pure function of the
-  // events table, and Bench rebuilds each query per rep — re-deriving
-  // and re-writing the four files added ~3 s/rep of pure fixture IO
-  private val oiLateFixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def streamOiLateFixture(s: SparkSession, dir: String): String =
-    oiLateFixtureCache.computeIfAbsent(dir, d => buildOiLateFixture(s, d))
-  private def buildOiLateFixture(s: SparkSession, dir: String): String = {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_stream_oilate_" +
-      java.lang.Integer.toHexString(dir.hashCode) + "_" +
-      java.lang.ProcessHandle.current().pid()
-    rmTree(root)
-    val base = eventsNs(s, dir).select(
-      col("event_id"), col("ts_ns"),
-      pmod(col("user_id"), lit(5L)).cast("string").as("ticker"),
-      side(col("event_type")).as("direction"),
-      col("value").as("size"))
-    def withTime(df: DataFrame): DataFrame = df.withColumn("event_time",
-      timestamp_micros(expr("ts_ns div 1000")))
-    val onTime = base.filter(col("event_id") % 7 =!= 0)
-    val Array(minTs, maxTs) = onTime
-      .agg(min(col("ts_ns")), max(col("ts_ns"))).head() match {
-      case r => Array(r.getLong(0), r.getLong(1))
-    }
-    // the bulk, then the max-ts row(s) as a SETTLE batch: the file
-    // source's filtering watermark lags one batch behind the displayed
-    // one (measured: a late row arriving in the very next batch after
-    // the bulk is absorbed, dropped=0; with one interposed batch it is
-    // dropped) — the settle file makes the bulk's watermark effective
-    // before the late file arrives
-    withTime(onTime.filter(col("ts_ns") =!= maxTs)).coalesce(1)
-      .write.parquet(root)
-    Thread.sleep(15)
-    withTime(onTime.filter(col("ts_ns") === maxTs)).coalesce(1)
-      .write.mode("append").parquet(root)
-    Thread.sleep(15)
-    val late = base.filter(col("event_id") % 7 === 0)
-      .withColumn("ts_ns", when(col("event_id") % 14 =!= 0,
-        lit(maxTs - M30)).otherwise(lit(minTs)))
-    withTime(late).coalesce(1).write.mode("append").parquet(root)
-    import s.implicits._
-    def sentinel(id: Long, tsNs: Long) = withTime(
-      Seq((id, tsNs, "~flush~", 1, 0.0))
-        .toDF("event_id", "ts_ns", "ticker", "direction", "size"))
-    Thread.sleep(15)
-    sentinel(-1L, maxTs + 2 * DAY).coalesce(1).write.mode("append")
-      .parquet(root)
-    Thread.sleep(15)
-    sentinel(-2L, maxTs + 4 * DAY).coalesce(1).write.mode("append")
-      .parquet(root)
-    root
-  }
-
-  /** DuckDB twin of [[Sampling.bucketHash]] — the top 20 bits of the
-    * mix31 avalanche draw, so sampling gates are bit-exact. All
-    * positive-BIGINT arithmetic (see [[Mix31Sql]] for the sign-of-mod
-    * handling on negative keys). */
-  private def HashSql(key: String, seed: Long): String =
-    s"((${Mix31Sql(key, seed.toString)}) // 2048)"
-
-  /** DuckDB twin of [[Sampling.mix31]] — three multiply-shift-truncate
-    * rounds with xor-folding; all BIGINT arithmetic (every intermediate
-    * < 2^63) plus `xor()`. `seed` is a SQL expression so the CMS twin
-    * can derive per-row seeds. */
-  private def Mix31Sql(key: String, seed: String): String =
-    Seq(2654435761L, 2246822519L, 3266489917L).foldLeft(
-      s"((($key + $seed) % 2147483648 + 2147483648) % 2147483648)") {
-      (x, c) =>
-        val y = s"((($x * $c) // 8192) % 2147483648)"
-        s"xor($y, $y // 65536)"
-    }
-
-  /** DuckDB twin of [[Sampling.unimaxPlan]]: water-filling CTE chain
-    * ending in relation `uplan`(source, n_tokens, quota, epochs). The
-    * arithmetic mirrors the Spark plan operation-for-operation (same
-    * IEEE double steps in the same order), so both engines take the
-    * same capped/uncapped branches and produce identical doubles. */
-  private def UnimaxPlanSql(table: String, srcCol: String,
-                            tokCol: String, budget: Long,
-                            maxEpochs: Double): String =
-    s"""c AS (
-       |  SELECT $srcCol AS source,
-       |    COALESCE(CAST(SUM($tokCol) AS BIGINT), 0) AS n_tokens
-       |  FROM $table WHERE $srcCol IS NOT NULL GROUP BY 1),
-       |w AS (
-       |  SELECT source, n_tokens,
-       |    CAST(n_tokens AS DOUBLE) * CAST($maxEpochs AS DOUBLE) AS cap,
-       |    ROW_NUMBER() OVER (
-       |      ORDER BY CAST(n_tokens AS DOUBLE) * CAST($maxEpochs AS DOUBLE),
-       |        source) AS rn,
-       |    SUM(CAST(n_tokens AS DOUBLE) * CAST($maxEpochs AS DOUBLE)) OVER (
-       |      ORDER BY CAST(n_tokens AS DOUBLE) * CAST($maxEpochs AS DOUBLE),
-       |        source) AS cum,
-       |    COUNT(*) OVER () AS n
-       |  FROM c),
-       |f AS (
-       |  SELECT *,
-       |    cap * CAST(n - rn + 1 AS DOUBLE)
-       |      <= CAST($budget AS DOUBLE) - (cum - cap) AS capped
-       |  FROM w),
-       |g AS (
-       |  SELECT *,
-       |    CAST(SUM(CASE WHEN capped THEN 1 ELSE 0 END) OVER () AS BIGINT)
-       |      AS k,
-       |    SUM(CASE WHEN capped THEN cap ELSE 0.0e0 END) OVER () AS cumcap
-       |  FROM f),
-       |uplan AS (
-       |  SELECT source, n_tokens, quota,
-       |    CASE WHEN n_tokens > 0
-       |      THEN quota / CAST(n_tokens AS DOUBLE) ELSE 0.0e0 END AS epochs
-       |  FROM (
-       |    SELECT source, n_tokens,
-       |      CASE WHEN k = n THEN cap
-       |        WHEN capped THEN cap
-       |        ELSE LEAST(cap, GREATEST(
-       |          (CAST($budget AS DOUBLE) - cumcap) / CAST(n - k AS DOUBLE),
-       |          0.0e0)) END AS quota
-       |    FROM g))""".stripMargin
-
-  /** DuckDB twin of [[Sampling.stringKey31]] — the base-31 code-point
-    * fold, mod 2^31, as a list_reduce. Exact on BMP text. */
-  private def StringKey31Sql(e: String): String =
-    s"CASE WHEN $e IS NULL THEN NULL WHEN length($e) = 0 THEN 0 " +
-      s"ELSE list_reduce([0::BIGINT] || list_transform(" +
-      s"generate_series(1, length($e)), i -> unicode(substr($e, i, 1))" +
-      s"::BIGINT), (a, b) -> (a * 31 + b) % 2147483648) END"
-
-  /** The quality-classifier gates' held-out-split predicate (seed 12,
-    * rate 0.3) — the [[graft.operators.Sampling.hashSplitTag]] twin. */
-  private def QClsSplitSql: String =
-    s"${HashSql("doc_id", 12L)} < ${Sampling.threshold(0.3)}"
-
-  /** DuckDB twin of the quality-classifier SCORING fold (r16): reads
-    * the per-run weight fixture at `wdir` (written by the gate in this
-    * same process), rebuilds the portable-hash margin left-fold over
-    * the held-out split in TOKEN ORDER — identical adds on identical
-    * doubles, so the margin is bit-exact cross-engine. Ends in
-    * `qm(doc_id, margin)`. A NULL-text doc has NO qtok rows (unnest of
-    * a NULL list), so qm is built by LEFT join from the split itself
-    * and folds just the intercept for it — matching the Spark side's
-    * coalesce-to-empty-array margin — instead of silently dropping the
-    * doc from the compared set (r16 ADVICE). */
-  private def QClsMarginCtes(wdir: String): String =
-    s"""wt AS (SELECT idx, w FROM read_parquet('$wdir/*.parquet')),
-       |warr AS (SELECT list(w ORDER BY idx) AS arr FROM wt WHERE idx >= 0),
-       |icept AS (SELECT w AS b0 FROM wt WHERE idx = -1),
-       |qtoks AS (
-       |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS t
-       |  FROM documents WHERE $QClsSplitSql),
-       |qtok AS (
-       |  SELECT doc_id, unnest(t) AS tok,
-       |    generate_subscripts(t, 1) AS ord
-       |  FROM qtoks),
-       |qw AS (
-       |  SELECT doc_id, ord, arr[((${
-           Mix31Sql(StringKey31Sql("tok"), QClsSeed.toString)
-         }) % $QClsFeatures) + 1] AS w
-       |  FROM qtok, warr),
-       |qws AS (
-       |  SELECT doc_id, list(w ORDER BY ord) AS ws FROM qw GROUP BY doc_id),
-       |qm AS (
-       |  SELECT q.doc_id, list_reduce(
-       |      [(SELECT b0 FROM icept)] ||
-       |        coalesce(g.ws, []::DOUBLE[]),
-       |      (a, b) -> a + b) AS margin
-       |  FROM qtoks q LEFT JOIN qws g USING (doc_id))""".stripMargin
-
-  /** DuckDB twin of [[graft.operators.Dedup.minHashSignaturePortable]]:
-    * CTE chain ending in `sigs(doc_id, sig)` — distinct 3-word shingles,
-    * base-31 string keys, per-slot mix31 draws, min per slot, the k
-    * mins gathered slot-ordered into a list. Docs with an empty shingle
-    * set get NO sigs row (the Spark side's all-null signature; callers
-    * handle the sentinel). */
-  private def MinhashSigCtes(k: Int): String =
-    s"""mtoks AS (
-       |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS t
-       |  FROM documents),
-       |""".stripMargin + MinhashSigCtesTok("mtoks", k)
-
-  /** [[MinhashSigCtes]] over an existing `(doc_id, t)` token-list
-    * relation (the curate twin reuses its survivor CTE's ltoks). */
-  private def MinhashSigCtesTok(src: String, k: Int): String =
-    s"""msh AS (
-       |  SELECT doc_id,
-       |    list_distinct(list_transform(generate_series(1, len(t) - 2),
-       |      i -> array_to_string(t[i:i+2], ' '))) AS shset
-       |  FROM $src),
-       |mkeys AS (
-       |  SELECT doc_id, ${StringKey31Sql("shingle")} AS skey
-       |  FROM (SELECT doc_id, unnest(shset) AS shingle FROM msh)),
-       |mslots AS (
-       |  SELECT doc_id, skey, unnest(generate_series(0, ${k - 1})) AS slot
-       |  FROM mkeys),
-       |mmins AS (
-       |  SELECT doc_id, slot,
-       |    MIN(${Mix31Sql("skey", "slot * 1000003")}) AS mv
-       |  FROM mslots GROUP BY 1, 2),
-       |sigs AS (
-       |  SELECT doc_id, list(mv ORDER BY slot) AS sig
-       |  FROM mmins GROUP BY 1)""".stripMargin
-
-  /** DuckDB twin of [[graft.operators.Dedup.simHash64Portable]]: CTE
-    * chain ending in `sfp(doc_id, fp)` — per-token mix31 draw pair
-    * (hi << 31 | lo, 62 bits), per-bit votes over every token
-    * OCCURRENCE, sign-of-vote fingerprint assembly. Docs with no
-    * tokens get no sfp row (callers COALESCE to the kernel's 0). */
-  private def SimhashFpCtes(seed: Long): String =
-    s"""stoks AS (
-       |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS t
-       |  FROM documents),
-       |skeys AS (
-       |  SELECT doc_id, ${StringKey31Sql("token")} AS skey
-       |  FROM (SELECT doc_id, unnest(t) AS token FROM stoks)),
-       |sdraw AS (
-       |  SELECT doc_id, ${Mix31Sql("skey", seed.toString)} AS lo,
-       |    ${Mix31Sql("skey", (seed + 500009L).toString)} AS hi
-       |  FROM skeys),
-       |svote AS (
-       |  SELECT doc_id, j,
-       |    SUM(CASE WHEN j < 31 THEN ((lo >> j) & 1) * 2 - 1
-       |        ELSE ((hi >> (j - 31)) & 1) * 2 - 1 END) AS v
-       |  FROM sdraw, (SELECT unnest(generate_series(0, 61)) AS j)
-       |  GROUP BY 1, 2),
-       |sfp AS (
-       |  SELECT doc_id,
-       |    CAST(SUM(CASE WHEN v > 0 THEN 1::BIGINT << j ELSE 0 END)
-       |      AS BIGINT) AS fp
-       |  FROM svote GROUP BY 1)""".stripMargin
-
-  /** DuckDB twin of the HLL estimator ([[Sketches.hllSketch]] +
-    * [[Sketches.hllEstimate]], portable backend): expects a preceding
-    * CTE `hkeys(g, k)` and emits the chain ending in `hll(g, est)`.
-    * Identical registers (mix31 draws), exact dyadic register sum
-    * (every 2^-rho term and the sum of <= 2^p of them are exact
-    * doubles in any order), alpha*m as a round-tripping double
-    * literal — bit-reproducible end to end. */
-  private def HllRegsSql(seed: Long, p: Int, sfx: String): String =
-    s"""hh$sfx AS (
-       |  SELECT g, ${Mix31Sql("k", seed.toString)} AS h1,
-       |    (${Mix31Sql("k", (seed + 1000003L).toString)}) % 1048576 AS h2
-       |  FROM hkeys$sfx),
-       |hr$sfx AS (
-       |  SELECT g, h1 // ${1L << (31 - p)} AS register,
-       |    MAX(CASE WHEN h2 = 0 THEN 21
-       |        ELSE 21 - length(bin(h2)) END) AS rho
-       |  FROM hh$sfx GROUP BY 1, 2)""".stripMargin
-
-  private def HllEstSql(p: Int, sfx: String): String = {
-    val m = 1 << p
-    val alphaM = (0.7213 / (1.0 + 1.079 / m)) * m
-    s"""ha$sfx AS (
-       |  SELECT g, COUNT(*) AS np,
-       |    SUM(1.0 / (CAST(1 AS BIGINT) << rho)) AS sp
-       |  FROM hr$sfx GROUP BY 1),
-       |he$sfx AS (
-       |  SELECT g, $m - np AS v,
-       |    (CAST($alphaM AS DOUBLE) * $m.0e0) / (sp + ($m - np)) AS raw
-       |  FROM ha$sfx),
-       |hll$sfx AS (
-       |  SELECT g, CASE WHEN raw <= ${2.5 * m}e0 AND v > 0
-       |    THEN $m.0e0 * ln($m.0e0 / v) ELSE raw END AS est
-       |  FROM he$sfx)""".stripMargin
-  }
-
-  private def HllChainSql(seed: Long, p: Int = 10): String =
-    HllRegsSql(seed, p, "") + ",\n" + HllEstSql(p, "")
-
-  /** DuckDB twin of the q_seg_dedup_* gates: 3-token segmentation,
-    * corpus-wide counts, drop-or-keep-first, ordered reassembly. */
-  private def SegDedupSql(keepFirst: Boolean): String = {
-    val keep = if (keepFirst) "cnt < 2 OR rk = 1" else "cnt < 2"
-    s"""WITH t AS (
-       |  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
-       |  FROM documents),
-       |segs AS (
-       |  SELECT doc_id,
-       |    unnest(generate_series(0,
-       |      CAST(floor((len(toks) - 1) / 3.0) AS INT))) AS pos,
-       |    unnest(list_transform(generate_series(0,
-       |      CAST(floor((len(toks) - 1) / 3.0) AS INT)),
-       |      i -> array_to_string(toks[i*3+1 : i*3+3], ' '))) AS seg
-       |  FROM t WHERE len(toks) > 0),
-       |rk AS (
-       |  SELECT doc_id, pos, seg,
-       |    COUNT(*) OVER (PARTITION BY seg) AS cnt,
-       |    ROW_NUMBER() OVER (PARTITION BY seg
-       |      ORDER BY doc_id, pos) AS rk
-       |  FROM segs),
-       |agg AS (
-       |  SELECT doc_id, string_agg(seg, ' ' ORDER BY pos) AS cleaned,
-       |    COUNT(*) AS n_kept
-       |  FROM rk WHERE $keep GROUP BY doc_id)
-       |SELECT t.doc_id, md5(COALESCE(a.cleaned, '')) AS cleaned_md5,
-       |  CAST(CASE WHEN toks IS NULL THEN 0
-       |    ELSE CAST(floor((len(toks) - 1) / 3.0) AS INT) + 1 END
-       |    AS BIGINT) AS n_segments,
-       |  CAST(COALESCE(a.n_kept, 0) AS BIGINT) AS n_kept
-       |FROM t LEFT JOIN agg a USING (doc_id)""".stripMargin
-  }
-
-  /** Shared CTE chain for the 3-gram / threshold-0.5 / source-blocked
-    * Jaccard duplicate pair set (the q_dedup_jaccard shape) ending in
-    * `dup_pairs(id_a, id_b)`. Spliced into the cluster-family oracles. */
-  private val JaccardDupCtes =
-    s"""toks AS (
-       |  SELECT doc_id, source,
-       |    string_split_regex(trim(lower(text)), '\\s+') AS t
-       |  FROM documents),
-       |shs AS (
-       |  SELECT doc_id, source,
-       |    list_distinct(list_transform(generate_series(1, len(t) - 2),
-       |      i -> array_to_string(t[i:i+2], ' '))) AS shset
-       |  FROM toks),
-       |sized AS (SELECT doc_id, source, shset, len(shset) AS sz FROM shs),
-       |exsh AS (SELECT doc_id, source, sz, unnest(shset) AS shingle
-       |         FROM sized),
-       |jp AS (
-       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |    a.sz AS size_a, b.sz AS size_b, COUNT(*) AS inter
-       |  FROM exsh a
-       |  JOIN exsh b ON a.source = b.source AND a.shingle = b.shingle
-       |  WHERE a.doc_id < b.doc_id GROUP BY 1, 2, 3, 4),
-       |dup_pairs AS (
-       |  SELECT id_a, id_b FROM jp
-       |  WHERE inter::DOUBLE / (size_a + size_b - inter)::DOUBLE >= 0.5)""".stripMargin
-
-  /** DuckDB twin of [[graft.operators.Bpe.train]]: the full BPE trainer
-    * with `rounds` merge rounds unrolled to CTEs. `words` is the one
-    * corpus tokenize pass (distinct lowercased tokens + frequencies),
-    * `st0` splits each word into code-point symbol lists; per round r,
-    * `pc{r}` explodes adjacent symbol pairs ("a b" strings — symbols
-    * never contain spaces), `b{r}` is the single-row argmax (count
-    * desc, pair asc — DuckDB's binary UTF-8 collation matches Spark's
-    * UTF8String ordering), and `st{r}` replays the Spark side's
-    * left-fold merge via `list_reduce` (init = first symbol, exactly
-    * the fold's acc=="" bootstrap; once a pair merges, the new symbol
-    * no longer matches the pair's left side — left-to-right
-    * non-overlapping semantics on both engines by the same mechanism).
-    * Ends in the merge table `b1 UNION ALL .. b{rounds}`. */
-  private def BpeTrainSql(rounds: Int): String = {
-    val sel = (1 to rounds).map(r =>
-      s"""SELECT CAST(round AS BIGINT) AS round, ca AS sym_a, cb AS sym_b,
-         |  ca || cb AS merged, pc AS pair_count FROM b$r""".stripMargin)
-      .mkString("\nUNION ALL\n")
-    "WITH " + BpeTrainCtes(rounds) + "\n" + sel
-  }
-
-  /** The [[BpeTrainSql]] CTE chain without the final merge-table SELECT
-    * (`toks` .. `b{rounds}`), shared with the segmentation twin. */
-  private def BpeTrainCtes(rounds: Int): String = {
-    val ctes = new StringBuilder(
-      s"""toks AS (
-         |  SELECT string_split_regex(trim(lower(text)), '\\s+') AS t
-         |  FROM documents),
-         |words AS (
-         |  SELECT w, COUNT(*)::BIGINT AS cnt
-         |  FROM (SELECT unnest(t) AS w FROM toks)
-         |  WHERE length(w) > 0 GROUP BY 1),
-         |st0 AS (
-         |  SELECT w, cnt, list_transform(generate_series(1, length(w)),
-         |    i -> substr(w, i, 1)) AS sl FROM words)""".stripMargin)
-    for (r <- 1 to rounds) {
-      ctes.append(s""",
-         |pc$r AS (
-         |  SELECT unnest(list_transform(generate_series(1, len(sl) - 1),
-         |    i -> sl[i] || ' ' || sl[i + 1])) AS bg, cnt
-         |  FROM st${r - 1}),
-         |b$r AS (
-         |  SELECT $r AS round, split_part(bg, ' ', 1) AS ca,
-         |    split_part(bg, ' ', 2) AS cb, SUM(cnt)::BIGINT AS pc
-         |  FROM pc$r GROUP BY bg ORDER BY pc DESC, bg LIMIT 1)""".stripMargin)
-      if (r < rounds) ctes.append(s""",
-         |st$r AS (
-         |  SELECT w, cnt, string_split(list_reduce(sl, (acc, s) -> CASE
-         |    WHEN s = cb AND acc = ca THEN ca || cb
-         |    WHEN s = cb AND ends_with(acc, ' ' || ca)
-         |      THEN substr(acc, 1, length(acc) - length(ca)) || ca || cb
-         |    ELSE acc || ' ' || s END), ' ') AS sl
-         |  FROM st${r - 1} CROSS JOIN b$r)""".stripMargin)
-    }
-    ctes.result()
-  }
-
-  /** DuckDB twin of [[graft.operators.Bpe.applyMerges]] with the
-    * merge table learned in-query: the [[BpeTrainCtes]] chain's six
-    * argmax rows cross-joined into one row `m(ma1,mb1,..)`, then every
-    * document token runs the same six nested left-folds the Spark
-    * column expression chains — segmentation under the oracle even
-    * though the merges themselves are data-dependent. */
-  private def BpeSegmentSql(rounds: Int): String = {
-    val mCols = (1 to rounds)
-      .map(r => s"b$r.ca AS ma$r, b$r.cb AS mb$r").mkString(", ")
-    val mFrom = (1 to rounds).map(r => s"b$r").mkString(", ")
-    var f = "array_to_string(list_transform(generate_series(1, " +
-      "length(tok)), i -> substr(tok, i, 1)), ' ')"
-    for (r <- 1 to rounds)
-      f = s"""list_reduce(string_split($f, ' '), (acc, s) -> CASE
-         |    WHEN s = mb$r AND acc = ma$r THEN ma$r || mb$r
-         |    WHEN s = mb$r AND ends_with(acc, ' ' || ma$r)
-         |      THEN substr(acc, 1, length(acc) - length(ma$r)) || ma$r || mb$r
-         |    ELSE acc || ' ' || s END)""".stripMargin
-    "WITH " + BpeTrainCtes(rounds) +
-      s""",
-         |m AS (SELECT $mCols FROM $mFrom),
-         |dtoks AS (
-         |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS dt
-         |  FROM documents),
-         |seg AS (
-         |  SELECT doc_id,
-         |    array_to_string(list_transform(dt, tok -> $f), ' | ')
-         |      AS bpe_pieces
-         |  FROM dtoks CROSS JOIN m)
-         |SELECT doc_id, bpe_pieces,
-         |  CAST(len(string_split(bpe_pieces, ' ')) -
-         |    (len(string_split(bpe_pieces, ' | ')) - 1) AS BIGINT)
-         |    AS n_pieces,
-         |  CAST(len(string_split(bpe_pieces, ' | ')) AS BIGINT) AS n_words
-         |FROM seg""".stripMargin
-  }
-
-  /** DuckDB twin of [[graft.operators.Clustering.kmeans]] over the
-    * embeddings table: Lloyd iterations unrolled to CTEs. Emits `v`
-    * (vectors as doubles), `c0` (init = k smallest ids), per iteration
-    * `a{i}` (micro-rounded argmin assignment), `m{i}` (DECIMAL dim
-    * means), `c{i}` (means with emptied clusters keeping the previous
-    * centroid), and `af` — the final assignment (vec_id, vec, c). */
-  /** [[KmeansCtes]] generalized over any source relation `src`(vec_id,
-    * vec) with suffixed CTE names, so several independent k-means can
-    * live in one query (the PQ twin runs one per subspace). Emits
-    * `c0$sfx` .. `c$iters$sfx` and the final assignment `af$sfx`. */
-  private def KmeansCtesOver(src: String, k: Int, iters: Int,
-                             sfx: String): String = {
-    def assignSql(cent: String) =
-      s"""SELECT vec_id, vec, c FROM (
-         |  SELECT p.vec_id, p.vec, cc.c,
-         |    ROW_NUMBER() OVER (PARTITION BY p.vec_id ORDER BY
-         |      CAST(floor(list_sum(list_transform(
-         |        generate_series(1, len(p.vec)),
-         |        i -> (p.vec[i] - cc.vec[i]) * (p.vec[i] - cc.vec[i])))
-         |        * 1e6 + 0.5) AS BIGINT), cc.c) AS rk
-         |  FROM $src p, $cent cc) WHERE rk = 1""".stripMargin
-    val sb = new StringBuilder
-    sb.append(
-      s"""c0$sfx AS (
-         |  SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS c, vec
-         |  FROM (SELECT vec_id, vec FROM $src ORDER BY vec_id LIMIT $k))""".stripMargin)
-    for (i <- 1 to iters) {
-      sb.append(
-        s""",
-           |a$i$sfx AS (${assignSql(s"c${i - 1}$sfx")}),
-           |m$i$sfx AS (
-           |  SELECT c, list(mean ORDER BY dim) AS vec FROM (
-           |    SELECT c, dim,
-           |      CAST(SUM(CAST(val AS DECIMAL(18,9))) AS DOUBLE) / COUNT(*)
-           |        AS mean
-           |    FROM (SELECT c,
-           |            unnest(generate_series(0, len(vec) - 1)) AS dim,
-           |            unnest(vec) AS val
-           |          FROM a$i$sfx)
-           |    GROUP BY c, dim) GROUP BY c),
-           |c$i$sfx AS (
-           |  SELECT p.c, COALESCE(m.vec, p.vec) AS vec
-           |  FROM c${i - 1}$sfx p LEFT JOIN m$i$sfx m ON p.c = m.c)""".stripMargin)
-    }
-    sb.append(s",\naf$sfx AS (${assignSql(s"c$iters$sfx")})")
-    sb.toString
-  }
-
-  /** Unrolled integer-PageRank oracle chain (DuckDB twin of
-    * [[graft.operators.Graph.pageRank]] on the customer<->supplier
-    * trade graph). `edgeCte` must define `e(src, dst, w)` on top of the
-    * provided `er` pair CTE; all arithmetic is BIGINT `//`, bit-matching
-    * the engine's LONG steps. `seedWhere` (a predicate over `node`)
-    * switches to the PERSONALIZED chain: teleport, dangling share, and
-    * the initial mass go to the seed set only, divided by the seed
-    * count — the twin of [[graft.operators.Graph.personalizedPageRank]]. */
-  private def PageRankSql(edgeCte: String, iters: Int,
-                          seedWhere: Option[String] = None): String = {
-    val pico = graft.operators.Graph.Pico
-    // receiver count: all N nodes, or the |S| seeds (rc CTE)
-    val rc = seedWhere.fold("(SELECT n FROM nn)")(_ => "(SELECT s FROM ss)")
-    def seeded(term: String): String =
-      seedWhere.fold(term)(w => s"CASE WHEN $w THEN $term ELSE 0 END")
-    val base = seeded(s"($pico - $pico * 85 // 100) // $rc")
-    val iterCtes = (1 to iters).map { i =>
-      val p = i - 1
-      val dangShare = seeded(s"(SELECT dang FROM d$i) // $rc")
-      s"""d$i AS MATERIALIZED (
-         |  SELECT COALESCE(CAST(SUM(r) AS BIGINT), 0) AS dang
-         |  FROM r$p WHERE node NOT IN (SELECT src FROM od)),
-         |in$i AS MATERIALIZED (SELECT e.dst AS node,
-         |    CAST(SUM(r.r * e.w // od.outw) AS BIGINT) AS ins
-         |  FROM e JOIN od USING (src) JOIN r$p r ON r.node = e.src
-         |  GROUP BY 1),
-         |r$i AS MATERIALIZED (SELECT nd.node, $base
-         |    + 85 * (COALESCE(i.ins, 0)
-         |      + $dangShare) // 100
-         |    AS r
-         |  FROM nodes nd LEFT JOIN in$i i USING (node))""".stripMargin
-    }.mkString(",\n")
-    val seedCte = seedWhere.fold("")(w =>
-      s",\nss AS MATERIALIZED (SELECT COUNT(*) AS s FROM nodes WHERE $w)")
-    // every iteration CTE is referenced more than once downstream —
-    // MATERIALIZED stops plain-CTE inlining from re-expanding the chain
-    // exponentially (2^iters scans)
-    s"""WITH er AS MATERIALIZED (
-       |  SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-       |$edgeCte,
-       |nodes AS MATERIALIZED (SELECT DISTINCT node FROM (
-       |  SELECT src AS node FROM e UNION ALL SELECT dst AS node FROM e)),
-       |nn AS MATERIALIZED (SELECT COUNT(*) AS n FROM nodes)$seedCte,
-       |od AS MATERIALIZED (SELECT src, CAST(SUM(w) AS BIGINT) AS outw
-       |  FROM e GROUP BY 1),
-       |r0 AS MATERIALIZED (
-       |  SELECT node, ${seeded(s"$pico // $rc")} AS r FROM nodes),
-       |$iterCtes
-       |SELECT node, r AS rank_pico FROM r$iters""".stripMargin
-  }
-
-  private def KmeansCtes(k: Int, iters: Int): String =
-    s"""v AS (
-       |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS vec
-       |  FROM embeddings),
-       |""".stripMargin + KmeansCtesOver("v", k, iters, "") +
-      // historical alias: the ungeneralized builder exposed `af`
-      ""
-
-  /** DuckDB twin of [[graft.operators.Embeddings.pcaPowerProject]] over
-    * the embeddings table: exact-decimal covariance, `iters` power
-    * iterations per component, canonical sign, Rayleigh deflation — all
-    * unrolled to CTEs replaying the engine's DECIMAL(30,12) sums and
-    * IEEE double scalar steps bit-for-bit. Emits `xc` (centered long
-    * frame), `u0..u{k-1}` (canonical components), and `comps`
-    * (comp, i, v). MATERIALIZED stops plain-CTE inlining from
-    * re-expanding the deflation chain exponentially (the PageRankSql
-    * lesson). */
-  private def PcaCtes(k: Int, iters: Int): String = {
-    val sb = new StringBuilder
-    sb.append(
-      s"""x AS MATERIALIZED (
-         |  SELECT vec_id,
-         |    unnest(generate_series(0, len(embedding) - 1)) AS dim,
-         |    unnest(list_transform(embedding, e -> e::DOUBLE)) AS xv
-         |  FROM embeddings),
-         |nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM embeddings),
-         |dd AS (SELECT CAST(COUNT(DISTINCT dim) AS DOUBLE) AS d FROM x),
-         |mu AS MATERIALIZED (
-         |  SELECT dim,
-         |    CAST(SUM(CAST(xv AS DECIMAL(30,12))) AS DOUBLE) / COUNT(*) AS m
-         |  FROM x GROUP BY dim),
-         |xc AS MATERIALIZED (
-         |  SELECT vec_id, dim, xv - m AS v FROM x JOIN mu USING (dim)),
-         |covt AS MATERIALIZED (
-         |  SELECT a.dim AS i, b.dim AS j,
-         |    CAST(SUM(CAST(a.v * b.v AS DECIMAL(30,12))) AS DOUBLE)
-         |      / (SELECT n FROM nn) AS c
-         |  FROM xc a JOIN xc b USING (vec_id)
-         |  WHERE a.dim <= b.dim GROUP BY 1, 2),
-         |cov0 AS MATERIALIZED (
-         |  SELECT i, j, c FROM covt
-         |  UNION ALL
-         |  SELECT j AS i, i AS j, c FROM covt WHERE i < j)""".stripMargin)
-    for (c <- 0 until k) {
-      sb.append(
-        s""",
-           |v${c}_0 AS (SELECT DISTINCT dim AS i,
-           |  1.0 / sqrt((SELECT d FROM dd)) AS v FROM x)""".stripMargin)
-      for (t <- 1 to iters) {
-        sb.append(
-          s""",
-             |w${c}_$t AS MATERIALIZED (
-             |  SELECT cv.i,
-             |    CAST(SUM(CAST(cv.c * v.v AS DECIMAL(30,12))) AS DOUBLE) AS w
-             |  FROM cov$c cv JOIN v${c}_${t - 1} v ON cv.j = v.i GROUP BY 1),
-             |nr${c}_$t AS (SELECT sqrt(CAST(SUM(CAST(w * w
-             |  AS DECIMAL(30,12))) AS DOUBLE)) AS nr FROM w${c}_$t),
-             |v${c}_$t AS MATERIALIZED (
-             |  SELECT i, w / (SELECT nr FROM nr${c}_$t) AS v
-             |  FROM w${c}_$t)""".stripMargin)
-      }
-      sb.append(
-        s""",
-           |sg$c AS (SELECT CASE WHEN v < 0 THEN -1.0 ELSE 1.0 END AS s
-           |  FROM v${c}_$iters ORDER BY abs(v) DESC, i LIMIT 1),
-           |u$c AS MATERIALIZED (
-           |  SELECT i, v * (SELECT s FROM sg$c) AS v FROM v${c}_$iters)""".stripMargin)
-      if (c < k - 1) {
-        sb.append(
-          s""",
-             |lam$c AS (SELECT CAST(SUM(CAST(cv.c * a.v * b.v
-             |    AS DECIMAL(30,12))) AS DOUBLE) AS l
-             |  FROM cov$c cv JOIN u$c a ON cv.i = a.i
-             |    JOIN u$c b ON cv.j = b.i),
-             |cov${c + 1} AS MATERIALIZED (
-             |  SELECT cv.i, cv.j,
-             |    cv.c - (SELECT l FROM lam$c) * a.v * b.v AS c
-             |  FROM cov$c cv JOIN u$c a ON cv.i = a.i
-             |    JOIN u$c b ON cv.j = b.i)""".stripMargin)
-      }
-    }
-    sb.append(",\ncomps AS (" + (0 until k).map(c =>
-      s"SELECT $c AS comp, i, v FROM u$c").mkString("\n  UNION ALL ") + ")")
-    sb.toString
-  }
-
-  /** events with ts as epoch-nanos long (column `ts_ns`), truncated to
-    * whole microseconds: DuckDB (the oracle) reads parquet TIMESTAMP(NANOS)
-    * as µs TIMESTAMP, so sub-µs nanos exist only on the Spark side —
-    * truncating BOTH sides (idempotent under either DuckDB behavior) makes
-    * every downstream timestamp, diff, and bin label bit-identical. Bin
-    * floor/ceil at ≥1µs steps is unaffected (edges are multiples of 1000ns).
-    */
-  private def eventsNs(s: SparkSession, dir: String): DataFrame =
-    Tables.tsToNs(Tables.events(s, dir))
-      .withColumnRenamed("ts", "ts_ns")
-  /** DuckDB twin of [[eventsNs]]. */
-  private val EventsNs =
-    "SELECT event_id, (epoch_ns(ts) // 1000) * 1000 AS ts_ns, user_id, event_type, value, props FROM events"
-
-  private val H  = 3600L * 1000 * 1000 * 1000  // 1 hour in ns
-  private val M15 = 15L * 60 * 1000 * 1000 * 1000
-  private val M30 = 30L * 60 * 1000 * 1000 * 1000
-  private val M5  = 5L * 60 * 1000 * 1000 * 1000
-  private val S10 = 10L * 1000 * 1000 * 1000  // 10 s in ns (Cont OFI resample)
-  private val M10 = 10L * 60 * 1000 * 1000 * 1000  // 10 min in ns
-  private val DAY = 24L * H
-
-  /** DuckDB twin of TimeBins.ceilNs (positive ts). */
-  private def CeilNs(e: String, step: Long): String =
-    s"((($e) + ${step} - 1) // ${step}) * ${step}"
-  private def FloorNs(e: String, step: Long): String =
-    s"(($e) // ${step}) * ${step}"
-
-  /** Buyer/seller side tag used to give `events` an OI shape: interaction
-    * events are "buys" (side -1, per the LOBSTER convention that -1 means
-    * buyer-initiated), lifecycle events "sells". */
-  private def side(c: Column): Column =
-    when(c.isin("click", "view", "purchase"), -1).otherwise(1)
-  private val Side =
-    "CASE WHEN event_type IN ('click','view','purchase') THEN -1 ELSE 1 END"
-
-  /** Planted-signal training frame for the M1-M3 gates: `f_sig`'s sign IS
-    * the direction label by construction (plus two hash-noise features),
-    * so any working trainer clears an 0.8 accuracy bar — the reference's
-    * own sanity check (chunk_pipeline.py:82). Every piece is
-    * deterministic and layout-independent: a CONSTANT event-id cap (gate
-    * cost and counts don't scale with SF), the portable hash split, and
-    * hash-derived noise. */
-  /** Shared probe frame of the calibration gates (batch + streaming
-    * faces): binary label from the side tag, score on a dyadic grid so
-    * bin sums are exact in double (see q_calibration). */
-  private def calibrationFrame(ev: DataFrame): DataFrame =
-    ev.withColumn("label",
-        when(side(col("event_type")) === -1, 1L).otherwise(0L))
-      .withColumn("p",
-        lit(0.5) * Sampling.unitHash(col("event_id"), 7L)
-          + lit(0.25) * col("label").cast("double") + lit(0.125))
-
-  private val MlGateCols = Seq("f_sig", "f_n1", "f_n2")
-  private def mlPlanted(s: SparkSession, dir: String): DataFrame = {
-    val base = eventsNs(s, dir)
-      .filter(col("event_id") < 1024L)
-      .withColumn("direction", side(col("event_type")))
-      .withColumn("f_sig",
-        col("direction") * (abs(col("value")) + lit(1.0)))
-      .withColumn("f_n1", Sampling.unitHash(col("event_id"), 9L))
-      .withColumn("f_n2", pmod(col("event_id"), lit(7L)).cast("double"))
-    Sampling.hashSplitTag(
-      graft.ml.DirectionModel.prepareTraining(base, MlGateCols),
-      "event_id", 0.25, seed = 42L)
-  }
-
-  /** XOR of two hash features: linearly inseparable, so a depth-1 stump
-    * scores ~chance while any depth >= 2 tree separates it cleanly — the
-    * planted performance gap that lets the M3 CV gate PROVE model
-    * selection happened (a grid where every point ties demonstrates
-    * nothing). f_n1 is a pure-noise decoy. */
-  private val MlInteractionCols = Seq("f_a", "f_b", "f_n1")
-  private def mlInteraction(s: SparkSession, dir: String): DataFrame = {
-    val base = eventsNs(s, dir)
-      .filter(col("event_id") < 1024L)
-      .withColumn("f_a", Sampling.unitHash(col("event_id"), 11L))
-      .withColumn("f_b", Sampling.unitHash(col("event_id"), 13L))
-      .withColumn("f_n1", Sampling.unitHash(col("event_id"), 9L))
-      .withColumn("direction",
-        when((col("f_a") > 0.5) =!= (col("f_b") > 0.5), 1).otherwise(-1))
-    Sampling.hashSplitTag(
-      graft.ml.DirectionModel.prepareTraining(base, MlInteractionCols),
-      "event_id", 0.25, seed = 42L)
-  }
-
-  /** EP1 input: a deterministic LOBSTER-shaped event frame derived from the
-    * events table — every column is integer/dyadic arithmetic on
-    * (event_id, user_id, ts_ns), so the DuckDB twin reproduces it exactly:
-    *  - 8 tickers from user_id, trade date from the event's UTC day;
-    *  - time_s folded into the 10:00-15:30 core session (integer seconds,
-    *    exact as double);
-    *  - every 5th event a type-1 submit (filtered out by the vis panel —
-    *    the event-type filter inside Oi.panel stays a real filter);
-    *  - quote prices on a 0.25 grid (midprice dyadic => first/last midprice
-    *    and the log-return ratio are bit-identical across engines);
-    *  - integer sizes (conditional-sum OI numerator/denominator are exact
-    *    integer-valued doubles => the OI division is bit-identical). */
-  private def ep1LobsterFrame(s: SparkSession, dir: String): DataFrame =
-    eventsNs(s, dir).select(
-      pmod(col("user_id"), lit(8L)).cast("string").as("ticker"),
-      date_add(to_date(lit("1970-01-01")),
-        expr(s"ts_ns div $DAY").cast("int")).as("date"),
-      (pmod(expr("ts_ns div 1000000000"), lit(19800L)) + lit(36000L))
-        .cast("double").as("time_s"),
-      when(pmod(col("event_id"), lit(5L)) === 0,
-        lit(graft.core.Schema.EventType.Submit))
-        .otherwise(lit(graft.core.Schema.EventType.VisibleExec))
-        .as("event_type"),
-      side(col("event_type")).as("direction"),
-      (lit(1L) + pmod(col("event_id"), lit(100L))).as("size"),
-      (lit(99.0) + pmod(col("event_id"), lit(5L)).cast("double") * 0.25)
-        .as("price"),
-      (lit(100.0) + pmod(col("event_id"), lit(7L)).cast("double") * 0.25)
-        .as("ask_price_1"),
-      (lit(99.0) + pmod(col("event_id"), lit(5L)).cast("double") * 0.25)
-        .as("bid_price_1"),
-      (lit(100L) + pmod(col("event_id"), lit(37L))).cast("double")
-        .as("ask_size_1"),
-      (lit(100L) + pmod(col("event_id"), lit(50L))).cast("double")
-        .as("bid_size_1"),
-      col("event_id").as("seq"))
-
-  /** DuckDB twin of [[ep1LobsterFrame]] (visible-exec rows only, with the
-    * derived columns the EP1 panel needs), as a CTE body. */
-  private val Ep1LobsterVis =
-    s"""SELECT CAST(user_id % 8 AS VARCHAR) AS ticker,
-       |  ts_ns // $DAY AS day_i,
-       |  (ts_ns // 1000000000) % 19800 + 36000 AS time_s,
-       |  CASE WHEN ($Side) = -1 THEN -1 ELSE 1 END AS dir,
-       |  1 + event_id % 100 AS size,
-       |  ((100.0 + (event_id % 7) * 0.25) + (99.0 + (event_id % 5) * 0.25))
-       |    / 2.0 AS mid,
-       |  event_id AS seq
-       |FROM e WHERE event_id % 5 <> 0""".stripMargin
-
-  /** DuckDB twin of the EP1 per-delta panel chain (vis OI panel at
-    * `stepS`-second ceil bins, session spine densification with zero-fill,
-    * last-bin drop, log returns) ending in a CTE named `panel` with columns
-    * (ticker, day_i, bin_s, oi, log_ret). Mirrors Oi.panel ->
-    * Oi.densifyPanel -> Returns.addLogReturns for integer-second inputs. */
-  private def ep1PanelSql(stepS: Long): String =
-    s"""lob AS ($Ep1LobsterVis),
-       |raw AS (
-       |  SELECT ticker, day_i, ((time_s + ${stepS - 1}) // $stepS) * $stepS AS bin_s,
-       |    (CAST(SUM(CASE WHEN dir = -1 THEN size ELSE 0 END) AS DOUBLE)
-       |      - CAST(SUM(CASE WHEN dir = 1 THEN size ELSE 0 END) AS DOUBLE))
-       |      / NULLIF(CAST(SUM(size) AS DOUBLE), 0.0) AS oi,
-       |    arg_min(mid, seq) AS first_mid, arg_max(mid, seq) AS last_mid
-       |  FROM lob GROUP BY 1, 2, 3),
-       |days AS (SELECT DISTINCT ticker, day_i FROM raw),
-       |spine AS (
-       |  SELECT d.ticker, d.day_i, g.bin_s
-       |  FROM days d, (SELECT UNNEST(generate_series(${36000 + stepS}, 55800,
-       |    $stepS)) AS bin_s) g),
-       |dense AS (
-       |  SELECT s.ticker, s.day_i, s.bin_s, COALESCE(r.oi, 0.0) AS oi,
-       |    r.first_mid, r.last_mid
-       |  FROM spine s LEFT JOIN raw r
-       |    ON s.ticker = r.ticker AND s.day_i = r.day_i AND s.bin_s = r.bin_s
-       |  WHERE s.bin_s < 55800),
-       |panel AS (
-       |  SELECT ticker, day_i, bin_s, oi,
-       |    CASE WHEN first_mid > 0 AND last_mid > 0
-       |      THEN ln(last_mid / first_mid) END AS log_ret
-       |  FROM dense)""".stripMargin
-
-  /** Per-process tag keying every artifact-WRITING gate's scratch path
-    * (S4/S5/S8/S9/S10): two concurrent Verify/Bench JVMs must not
-    * cross-read each other's fixtures, and a stale artifact left by a
-    * crashed run must not satisfy a later one. The tag is interpolated
-    * into the oracle SQL this same process dumps, so the DuckDB check
-    * always reads THIS run's artifacts. */
-  private val RunTag =
-    s"${ProcessHandle.current().pid()}_${java.lang.Long.toHexString(System.nanoTime())}"
-
-  /** Sweep stale RunTag-keyed scratch (> 48 h old) left by earlier
-    * runs: per-run tags never self-overwrite the way the old fixed
-    * paths did, so without this /tmp grows one fixture set per
-    * Verify/Bench invocation forever (r16 ADVICE). Deleting on exit is
-    * deliberately NOT an option — the driver's DuckDB oracle reads
-    * THIS run's fixtures after the Verify JVM exits — so age-based
-    * sweep at startup is the correct lifecycle. Runs once at object
-    * init (RunTag's first use). */
-  private val sweepStaleScratch: Unit = try {
-    val cutoff = System.currentTimeMillis() - 48L * 3600 * 1000
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(); ()
-    }
-    Option(new java.io.File("/tmp").listFiles()).foreach(_.foreach { f =>
-      if (f.getName.startsWith("graft_") && f.lastModified() < cutoff) rm(f)
-    })
-  } catch { case _: Throwable => () }
-
-  // ---- S5 FF CSV fixture (shared by query + oracle; see q_s5_ff_csv) ----
-
-  private val FfFixturePath = s"/tmp/graft_ff_fixture_$RunTag.csv"
-  private val FfFixtureCsv =
-    """This file mirrors the Ken-French data library daily-factor layout
-      |Daily factors in percent; the annual section at the bottom is dropped
-      |,SMB,HML,RF,CMA,RMW
-      |20171228,0.11,-0.22,0.009,0.05,0.15
-      |20171229,0.10,-0.20,0.010,0.04,0.16
-      |20180102,0.25,0.30,0.010,-0.10,0.05
-      |20180103,-0.15,0.40,0.010,0.20,-0.25
-      |20180104,0.05,-0.10,0.010,0.00,0.30
-      |Annual Factors: January-December
-      |2018,1.00,2.00,0.50,0.30,0.10
-      |""".stripMargin
-
-  /** S4 multi-file glob fixture dir (shared by query + oracle). */
-  private val MultiCsvDir = s"/tmp/graft_multi_csv_$RunTag"
-
-  // ---- S8 gzip CSV fixture (shared by query + oracle) ----
-
-  private val GzFixturePath = s"/tmp/graft_prices_fixture_$RunTag.csv.gz"
-
-  /** S9 CSV sink dir (shared by query + oracle). */
-  private val CsvSinkDir = s"/tmp/graft_csv_sink_$RunTag"
-
-  /** Quality-classifier oracle faces (r16): per-run weight-fixture dirs
-    * — one per gate, so each stays self-contained under
-    * SPARK_GRAFT_ONLY subsets — plus the shared portable-hash
-    * parameters. The gate trains, persists the learned weights, and
-    * the oracle re-reads THIS run's fixture to replay the scoring
-    * fold in SQL. */
-  private val QClsWeightsDir = s"/tmp/graft_qcls_weights_$RunTag"
-  private val QScoreWeightsDir = s"/tmp/graft_qscore_weights_$RunTag"
-
-  /** q_m2_predict's per-run fixture (r17): the LR fit's raw per-row
-    * P(label=1) — the one piece SQL cannot replay; everything
-    * downstream (threshold, {-1,+1} remap, per-row correctness against
-    * the side-tag direction) is oracled from it. */
-  private val M2ScoresDir = s"/tmp/graft_m2_scores_$RunTag"
-
-  /** q_m1_gbt / q_m3_rf_lr per-run fixtures (r17): each training gate
-    * persists its fit's per-row test predictions; the oracle replays
-    * split membership and counts, the planted-direction twin, and the
-    * accuracy fold from the fixture — so the whole gate row is
-    * SQL-gated and only the raw fits themselves stay un-replayed. */
-  private val M1PredsDir = s"/tmp/graft_m1_preds_$RunTag"
-  private val M3PredsDir = s"/tmp/graft_m3_preds_$RunTag"
-
-  /** DuckDB twin of [[graft.operators.Sampling.unitHash]]'s strict
-    * `> 0.5` compare: bucketHash is the unit value times 2^20, so
-    * f > 0.5 iff the integer bucket exceeds 524288. */
-  private def UnitHashGtHalfSql(key: String, seed: Long): String =
-    s"${HashSql(key, seed)} > 524288"
-  private val QClsFeatures = 512
-  private val QClsSeed = 7L
-
-  /** The quality gates' ONE trained model per (process, sf dir):
-    * q_quality_classifier and q_quality_score_oracle fit the IDENTICAL
-    * LR (same corpus, planted label, split seed, portable hash,
-    * iterations) — as two independent fits they were the two most
-    * expensive bench entries (13.1 s = 7.9% of the r16 run). Trained
-    * lazily on first use and shared; each gate still persists its OWN
-    * weight fixture from this scorer, so SPARK_GRAFT_ONLY subsets stay
-    * self-contained (the oracle always reads the fixture the gate
-    * itself wrote this run). Keyed by dir: one Verify/Bench process
-    * runs one sf dir, but a test session may touch several. */
-  private val qClsScorerCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, graft.ml.QualityClassifier.LinearScorer]()
-  private def qClsSharedScorer(s: SparkSession, dir: String)
-      : graft.ml.QualityClassifier.LinearScorer =
-    qClsScorerCache.computeIfAbsent(dir, _ => {
-      val docs = Tables.documents(s, dir).withColumn("label",
-        (TextFunctions.qualityScore(col("text")) >= 0.6).cast("double"))
-      val trainDf = Sampling.hashSplitTag(docs, "doc_id", 0.3, seed = 12L)
-        .filter(!col("is_test"))
-      graft.ml.QualityClassifier.train(trainDf, "text", "label",
-        numFeatures = QClsFeatures, maxIter = 30,
-        portableSeed = Some(QClsSeed))
-    })
-
-  /** The graph gates' ONE trade-graph edge prep per (session, sf dir):
-    * q_pagerank / q_ppr / q_pagerank_weighted all build the identical
-    * lineitem⋈orders customer<->supplier frame — as three independent
-    * preps they were the largest duplicated block in the r17 bench
-    * (13.1 s combined = 8.6% of the run), the same shape the shared
-    * quality scorer eliminated. Cached as the DEDUPED forward edge
-    * frame with per-pair co-order line counts, localCheckpoint'd so
-    * all three gates read the pinned result. Semantics are UNCHANGED
-    * for every face:
-    *  - unweighted/ppr: project (src, dst) — pageRank's distinct sees
-    *    an already-unique set, the identical edge set the per-line
-    *    input deduped to;
-    *  - weighted: project (src, dst, w = line count) — pageRank's
-    *    duplicate-edge SUM contract sees one pre-summed row per edge,
-    *    and the sums are identical because the forward (even→odd) and
-    *    reversed (odd→even) key spaces are disjoint.
-    * Keyed by (session, dir): checkpointed frames are session-tied,
-    * and a test session may touch several sf dirs. ScaleBench sets
-    * -Dgraft.noSharedFixtures=1 to bypass the cache: its q_pagerank
-    * entry must keep measuring the FULL uncached edge prep at every
-    * scale and rep — the prep contains the one memory-marginal stage
-    * the 16g protocol exists for, and a warm-rep cache would silently
-    * remove it from the growth law. */
-  private val fixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String), DataFrame]()
-
-  /** A cached localCheckpoint'd frame's blocks can be swept out from
-    * under the cache by RDD-level hygiene (Bench/ScaleBench/SoakSpec
-    * drop all persistent RDDs between queries; checkpoint blocks are
-    * NOT recomputable) — a hit on a dead checkpoint throws
-    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND at read time. Liveness =
-    * the analyzed plan is still a pinned LogicalRDD leaf. */
-  private def checkpointLive(df: DataFrame): Boolean =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE
-      case _ => false
-    }
-
-  /** Drop cache entries whose owning SparkContext has stopped: RDD
-    * ids are per-SparkContext counters, so a stale session's id can
-    * collide with an unrelated live RDD in a later session (making a
-    * block sweep spare the wrong RDD), and a stopped entry also pins
-    * the dead SparkSession + DataFrame (r18 ADVICE). */
-  private def evictStoppedSessions(): Unit = {
-    import scala.jdk.CollectionConverters._
-    fixtureCache.keySet.asScala
-      .filter(_._1.sparkContext.isStopped).toList
-      .foreach(fixtureCache.remove)
-    mlLrFitCache.keySet.asScala
-      .filter(_._1.sparkContext.isStopped).toList
-      .foreach(mlLrFitCache.remove)
-  }
-
-  /** RDD ids of the currently-LIVE shared fixtures OWNED BY `s`:
-    * Bench's between-query block sweep spares these (and only these),
-    * so the fixture actually survives across its reader gates instead
-    * of being rebuilt per gate — every other persistent RDD is still
-    * dropped (they are recomputable or never read again; a fixture
-    * is neither, being a checkpoint that IS read again). Scoped to
-    * the sweeping session because RDD ids are per-SparkContext
-    * counters — another session's fixture id would spare an arbitrary
-    * unrelated RDD here (r18 ADVICE). */
-  def sharedFixtureRddIds(s: SparkSession): Set[Int] = {
-    import scala.jdk.CollectionConverters._
-    evictStoppedSessions()
-    fixtureCache.entrySet.asScala.toSeq
-      .filter(_.getKey._1 eq s)
-      .flatMap { e =>
-        val df = e.getValue
-        df.queryExecution.analyzed match {
-          case lr: org.apache.spark.sql.execution.LogicalRDD
-              if checkpointLive(df) => Some(lr.rdd.id)
-          case _ => None
-        }
-      }.toSet
-  }
-
-  /** Per-process log of shared-fixture builds (fixture name, build
-    * wall seconds). Bench drains it after its warmup pass and after
-    * each timed query, stamping WHO paid each build into the bench
-    * artifact — without the stamp, a family's per-query times are
-    * order-dependent (the first reader pays the prep) and misread
-    * across rounds (r18 verdict). */
-  private val fixtureBuilds =
-    new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()
-  def drainFixtureBuilds(): Seq[(String, Double)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    var e = fixtureBuilds.poll()
-    while (e != null) { out += e; e = fixtureBuilds.poll() }
-    out.toSeq
-  }
-
-  /** Lazily-built, liveness-revalidated per-(session, dir) checkpoint
-    * fixture — the shared-prep pattern (r17 quality scorer, r18 trade
-    * graph / Jaccard pairs). `graft.noSharedFixtures=1` (set by
-    * ScaleBench) bypasses the cache entirely so scale entries keep
-    * measuring full uncached per-invocation cost. */
-  private def sharedFixture(s: SparkSession, dir: String, name: String)
-      (build: => DataFrame): DataFrame =
-    if (sys.props.get("graft.noSharedFixtures").contains("1")) build
-    else fixtureCache.compute((s, dir, name), (_, prev) =>
-      // revalidate on every hit: rebuild if an RDD sweep killed the
-      // pinned blocks since the last use
-      if (prev != null && checkpointLive(prev)) prev
-      else {
-        val t0 = System.nanoTime()
-        val built = build.localCheckpoint()
-        fixtureBuilds.add((name, (System.nanoTime() - t0) / 1e9))
-        built
-      })
-
-  // package-visible: ScaleBench's q_pagerank_prep attribution entry
-  // measures this prep alone (uncached, via the noSharedFixtures
-  // bypass) to separate prep growth from iteration growth
-  private[graft] def tradeGraphEdges(s: SparkSession, dir: String): DataFrame =
-    sharedFixture(s, dir, "tradeEdges") {
-      val li = Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val ord = Tables.orders(s, dir)
-        .select(col("o_orderkey"), col("o_custkey"))
-      // disjoint node spaces: customers on even ids, suppliers on odd
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).cast("long").as("src"),
-          (col("l_suppkey") * 2 + 1).cast("long").as("dst"))
-        .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-    }
-
-  /** The duplicate-cluster family's ONE exact Jaccard pair set per
-    * (session, dir): q_dedup_jaccard, q_dup_clusters, q_group_split
-    * and q_cluster_dedup all compute the identical
-    * `jaccardPairs(documents, n=3, t=0.5, block=source)` — three of
-    * the four preps were duplicated work (the family cost 8.35 s on
-    * the committed yardstick, most of it the PPJoin prep). The output
-    * is O(near-dup pairs) — tiny — so the checkpoint pins almost
-    * nothing while the downstream gates (CC labels, leakage-safe
-    * split, cluster dedup) keep exercising their own operators in
-    * full. Oracles are unaffected: each gate's DuckDB twin recomputes
-    * the pair set from the raw documents table, so the fixture is
-    * itself differentially verified four ways every run. */
-  private def jaccardDupPairs(s: SparkSession, dir: String): DataFrame =
-    sharedFixture(s, dir, "jaccardDupPairs") {
-      Dedup.jaccardPairs(Tables.documents(s, dir), "doc_id", "text",
-        n = 3, threshold = 0.5, blockCols = Seq("source"))
-    }
-
-  /** The part-graph family's ONE repeat-co-purchase pair set per
-    * (session, dir): q_triangles, q_link_pred, q_kcore,
-    * q_degree_dist, q_clustering_coef, q_khop and q_assortativity all
-    * start from the IDENTICAL `lineitem self-join -> (l_partkey,
-    * l_partkey) pairs -> co-order count >= 2` frame — seven copies of
-    * the most expensive prep on the board (family 14.4 s = 11% of the
-    * r18 quiet yardstick). The output is O(edges) — small relative to
-    * the self-join input — so the checkpoint pins little while every
-    * downstream gate keeps exercising its own graph operator in full.
-    * Oracles are unaffected: each gate's DuckDB twin recomputes the
-    * pair set from raw lineitem, so the fixture is differentially
-    * verified seven ways every run. ScaleBench's
-    * `graft.noSharedFixtures=1` bypass keeps scale entries measuring
-    * the full uncached prep. */
-  // package-visible: ScaleBench's q_kcore_prep attribution entry
-  private[graft] def coPurchasePairs(s: SparkSession, dir: String): DataFrame =
-    sharedFixture(s, dir, "coPurchasePairs") {
-      val li = Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_partkey"))
-      li.as("a").join(li.as("b"),
-          col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_partkey") < col("b.l_partkey"))
-        .groupBy(col("a.l_partkey").as("src"),
-          col("b.l_partkey").as("dst"))
-        .agg(count(lit(1)).as("__n"))
-        .filter(col("__n") >= 2)
-    }
-
-  /** The ML gates' ONE logistic fit on the mlPlanted train split per
-    * (session, sf dir): q_m2_predict, q_m3_rf_lr's lr face and
-    * q_s10_model_io all fit the IDENTICAL pipeline (same feature
-    * columns, same deterministic hash split, same data) — the fits
-    * were bit-interchangeable already, so sharing changes no gate's
-    * output, and each gate still persists/replays its OWN per-run
-    * fixture from this model, keeping SPARK_GRAFT_ONLY subsets
-    * self-contained (r17 verdict item 7). Not oracle-weakening: every
-    * oracle fold reads the fixture the gate itself wrote this run. */
-  private val mlLrFitCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), org.apache.spark.ml.PipelineModel]()
-  private def mlPlantedLrFit(s: SparkSession, dir: String)
-      : org.apache.spark.ml.PipelineModel =
-    if (sys.props.get("graft.noSharedFixtures").contains("1"))
-      graft.ml.DirectionModel.logisticPipeline(MlGateCols)
-        .fit(mlPlanted(s, dir).filter(!col("is_test")))
-    else mlLrFitCache.computeIfAbsent((s, dir), _ =>
-      graft.ml.DirectionModel.logisticPipeline(MlGateCols)
-        .fit(mlPlanted(s, dir).filter(!col("is_test"))))
-
-  /** Persist a trained LinearScorer as (idx, w) parquet rows — idx -1
-    * carries the intercept — the oracle-side fixture. */
-  private def writeScorer(s: SparkSession,
-                          scorer: graft.ml.QualityClassifier.LinearScorer,
-                          path: String): Unit = {
-    import s.implicits._
-    (scorer.weights.toSeq.zipWithIndex
-        .map { case (w, i) => (i.toLong, w) } :+ ((-1L, scorer.intercept)))
-      .toDF("idx", "w").coalesce(1).write.mode("overwrite").parquet(path)
-  }
-  private val GzFixtureCsv =
-    """AAPL,190.5,100
-      |MSFT,410.25,50
-      |GOOG,170.0,80
-      |AMZN,185.75,60
-      |META,505.5,30
-      |NVDA,880.0,20
-      |""".stripMargin
-
-  /** Laplace-expansion determinant over symbolic SQL entries — used by the
-    * q_m5_full oracle to spell the 5x5 Cramer solve as plain arithmetic.
-    * DuckDB evaluates it with IEEE semantics; the Spark side solves the
-    * same normal equations via QR (commons-math), identical to ~1e-13
-    * relative, which micro-rounding absorbs. */
-  private def sqlDet(m: Vector[Vector[String]]): String =
-    if (m.size == 1) m(0)(0)
-    else {
-      val terms = m(0).indices.map { j =>
-        val minor = m.tail.map(row => row.patch(j, Nil, 1))
-        s"(${m(0)(j)} * ${sqlDet(minor)})"
-      }
-      terms.zipWithIndex.tail.foldLeft(terms.head) { case (acc, (t, j)) =>
-        if (j % 2 == 1) s"($acc - $t)" else s"($acc + $t)"
-      }
-    }
-
-  /** Symbolic X'X (moment names m<i><j>, i<=j) for 4 regressors+intercept. */
-  private val M5FullXtX: Vector[Vector[String]] =
-    Vector.tabulate(5, 5)((i, j) =>
-      s"m${math.min(i, j)}${math.max(i, j)}")
-  private val M5FullRhs: Vector[String] =
-    Vector.tabulate(5)(i => s"r$i")
-  /** Cramer numerator: X'X with column `j` replaced by the RHS. */
-  private def m5FullNum(j: Int): String =
-    sqlDet(M5FullXtX.zipWithIndex.map { case (row, i) =>
-      row.updated(j, M5FullRhs(i))
-    })
-
-  // ---- driver contract ----------------------------------------------------
+  private val byName: Map[String, Gate] = Gate.index(
+    LobsterGates.gates ++ StreamingGates.gates ++ TableGates.gates ++
+      DedupGates.gates ++ CurationGates.gates ++ TextGates.gates ++
+      VectorGates.gates ++ GraphGates.gates ++ SketchGates.gates ++
+      MlGates.gates)
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    byName.map { case (n, g) => n -> g.build }
+
+  val oracleSql: Map[String, String] =
+    byName.map { case (n, g) => n -> g.oracleSql }
 
   /** Flagship query on sf=0.001 (driver smoke-checks rows>0): the EP1
     * spine — scan, join, conditional-sum OI aggregation per time bin. */
   def entry(spark: SparkSession): DataFrame =
     queries("q_a1_oi")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // --- A1: plain conditional-sum order imbalance per hour bin (ceil) ---
-    "q_a1_oi" -> ((s, dir) => {
-      val ev = eventsNs(s, dir)
-        .withColumn("bin_ns", TimeBins.ceilNs(col("ts_ns"), H))
-      Imbalance.orderImbalance(ev, Seq(col("bin_ns")),
-          side(col("event_type")), col("value"))
-        .select(col("bin_ns"), r6(col("order_imbalance")).as("oi_micro"))
-    }),
-
-    // --- §2.10: the SAME hourly-OI aggregation through the Structured
-    //     Streaming engine — finite parquet replay, complete-mode memory
-    //     sink — hash-matched against q_a1_oi's batch oracle. The gate
-    //     that promotes the stream==batch spec pattern to the driver ---
-    "q_stream_oi" -> ((s, dir) => {
-      // batch loader first: resolves the on-disk ts layout (legacy LONG
-      // epoch-ns or TIMESTAMP micros) so the streaming schema matches
-      val schema = Tables.events(s, dir).schema
-      // the streaming file source wants a directory: scan the sf dir,
-      // glob-filtered to the events table file
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir)
-      val ev = Tables.tsToNs(stream).withColumnRenamed("ts", "ts_ns")
-        .withColumn("bin_ns", TimeBins.ceilNs(col("ts_ns"), H))
-      val oi = Imbalance.orderImbalance(ev, Seq(col("bin_ns")),
-          side(col("event_type")), col("value"))
-        .select(col("bin_ns"), r6(col("order_imbalance")).as("oi_micro"))
-      withStatePartitions(s, 8) {
-        graft.streaming.StreamingOi.replayComplete(oi,
-          "graft_stream_oi_" + graft.streaming.StreamingOi.nextSinkId())
-      }
-    }),
-
-    // --- §2.10: the EVICTION face of streaming dedup — state for a key
-    //     lives exactly one watermark horizon: an in-batch duplicate and
-    //     a re-arrival of a still-live key drop; a re-arrival AFTER the
-    //     horizon is kept again (the documented at-least-once
-    //     trade-off); a sub-watermark row drops as late. The oracle is
-    //     the exact expected kept set, so any deviation — a resurrected
-    //     duplicate, a lost re-arrival, a kept late row — hash-misses ---
-    "q_stream_dedup_late" -> ((s, dir) => {
-      val root = streamDedupLateFixture(s, dir)
-      val schema = s.read.parquet(root).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(root)
-      val kept = graft.streaming.StreamingDedup.firstCopy(stream,
-        "content", "event_time", "1 hour")
-      withStatePartitions(s, 8) {
-        graft.streaming.StreamingOi.replayAppend(kept,
-          "graft_stream_dl_" + graft.streaming.StreamingOi.nextSinkId())
-      }
-        .select(col("event_id").as("k"), col("ts_ns"), col("value"))
-    }),
-
-    // --- §2.10: the WATERMARK face of windowedOi — out-of-order events
-    //     injected mid-replay: late rows INSIDE the 1 h watermark must be
-    //     absorbed into their (still-open) window, rows HOURS past it
-    //     must drop; append emits each window once on close. The oracle
-    //     is the batch aggregation over exactly the absorbable rows, so
-    //     a stream that kept a hopeless row (or lost a recoverable one)
-    //     hash-mismatches ---
-    "q_stream_oi_late" -> ((s, dir) => {
-      val root = streamOiLateFixture(s, dir)
-      val schema = s.read.parquet(root).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(root)
-      val oi = graft.streaming.StreamingOi.windowedOi(stream,
-        delta = "1 hour", watermark = "1 hour")
-      withStatePartitions(s, 8) {
-        graft.streaming.StreamingOi.replayAppend(oi,
-          "graft_stream_oilate_" + graft.streaming.StreamingOi.nextSinkId())
-      }
-        .filter(col("ticker") =!= "~flush~")
-        .select((unix_micros(col("bin_start")) * 1000L).as("bin_ns"),
-          col("ticker"),
-          r6(col("order_imbalance")).as("oi_micro"),
-          col("n_events"))
-    }),
-
-    // --- §2.10: STREAM-STREAM left-outer interval join — the one big
-    //     Structured Streaming primitive the other gates don't touch:
-    //     each click joined to same-user purchases within the following
-    //     hour, with watermarked state on BOTH sides; unmatched clicks
-    //     emit their null row only when the purchase watermark proves no
-    //     match can still arrive. Finite replay + sentinel pairs, gated
-    //     against the batch LEFT JOIN twin ---
-    "q_stream_join" -> ((s, dir) => {
-      val root = streamJoinFixture(s, dir)
-      val schema = s.read.parquet(root).schema
-      // no maxFilesPerTrigger: everything (sentinels included) lands in
-      // ONE batch — inner matches emit there, the watermark computed
-      // from it covers every click, and the engine's no-data batch then
-      // emits all outer null rows. Each extra micro-batch costs ~2.5 s
-      // of state-store commit at sf0.1 (measured), and per-file
-      // progression adds nothing here: join results don't depend on
-      // arrival order, only on the final watermark.
-      def sideStream(t: String): DataFrame =
-        s.readStream.schema(schema)
-          .parquet(root).filter(col("event_type") === t)
-      val clicks = sideStream("click")
-        .select(col("event_id").as("click_id"), col("user_id"),
-          col("ts_ns").as("c_ts"), col("event_time").as("c_time"))
-        .withWatermark("c_time", "1 hour")
-      val purchases = sideStream("purchase")
-        .select(col("event_id").as("purchase_id"),
-          col("user_id").as("p_user"), col("ts_ns").as("p_ts"),
-          col("event_time").as("p_time"))
-        .withWatermark("p_time", "1 hour")
-      val joined = clicks.join(purchases,
-        expr("user_id = p_user AND p_time >= c_time AND " +
-          "p_time <= c_time + interval 1 hour"),
-        "left_outer")
-      withStatePartitions(s, 8) {
-        graft.streaming.StreamingOi.replayAppend(joined,
-          "graft_stream_join_" + graft.streaming.StreamingOi.nextSinkId())
-      }
-        .filter(col("user_id") >= 0)
-        .select(col("click_id"), col("user_id"), col("c_ts"),
-          col("purchase_id"), col("p_ts"))
-    }),
-
-    // --- §2.10: CROSS-BATCH face of the stream-stream join — same join,
-    //     replayed one file per micro-batch with synthetic purchases
-    //     arriving a batch AFTER their clicks (inside the window, above
-    //     the watermark). Proves the symmetric join state survives batch
-    //     boundaries: dropped click state would surface as outer null
-    //     rows where the batch LEFT JOIN twin has matches ---
-    "q_stream_join_xbatch" -> ((s, dir) => {
-      val root = streamJoinXbatchFixture(s, dir)
-      val schema = s.read.parquet(root).schema
-      def sideStream(t: String): DataFrame =
-        s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-          .parquet(root).filter(col("event_type") === t)
-      val clicks = sideStream("click")
-        .select(col("event_id").as("click_id"), col("user_id"),
-          col("ts_ns").as("c_ts"), col("event_time").as("c_time"))
-        .withWatermark("c_time", "1 hour")
-      val purchases = sideStream("purchase")
-        .select(col("event_id").as("purchase_id"),
-          col("user_id").as("p_user"), col("ts_ns").as("p_ts"),
-          col("event_time").as("p_time"))
-        .withWatermark("p_time", "1 hour")
-      val joined = clicks.join(purchases,
-        expr("user_id = p_user AND p_time >= c_time AND " +
-          "p_time <= c_time + interval 1 hour"),
-        "left_outer")
-      withStatePartitions(s, 8) {
-        graft.streaming.StreamingOi.replayAppend(joined,
-          "graft_stream_joinx_" + graft.streaming.StreamingOi.nextSinkId())
-      }
-        .filter(col("user_id") >= 0)
-        .select(col("click_id"), col("user_id"), col("c_ts"),
-          col("purchase_id"), col("p_ts"))
-    }),
-
-    // --- §2.10: streaming iceberg-refill tagging — the
-    //     flatMapGroupsWithState state machine (J3's streaming twin)
-    //     replayed over the events table and hash-matched against the
-    //     batch forward-as-of oracle restricted to the tag surface.
-    //     clicks play the visible execs (type 4), purchases the
-    //     refilling submits (type 1), user_id the (ticker, price) key.
-    //     Two far-future sentinel flush files force the watermark past
-    //     every exec's tolerance window, so unmatched execs provably
-    //     emit their timeout iceberg=0 rows before the replay ends —
-    //     EVERY click appears exactly once, matched or not ---
-    "q_stream_iceberg" -> ((s, dir) => {
-      val root = streamIcebergFixture(s, dir)
-      val schema = s.read.parquet(root).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(root)
-      val tagged = graft.streaming.StreamingIceberg
-        .tagStream(stream, H, watermark = "10 seconds")
-        .filter(col("ticker") =!= "~flush~")
-        .select(col("execId").as("event_id"),
-          col("ticker").cast("long").as("user_id"),
-          col("tsNs").as("ts_ns"),
-          col("iceberg").cast("long").as("matched"))
-      withStatePartitions(s, 8) {
-        graft.streaming.StreamingOi.replayAppend(tagged,
-          "graft_stream_ice_" + graft.streaming.StreamingOi.nextSinkId())
-      }
-    }),
-
-    // --- §2.10: streaming sessionization — the SAME gaps-and-islands
-    //     sessions via the engine's native session_window (merging
-    //     session state, complete mode on the finite replay),
-    //     hash-matched against q_sessionize's batch oracle. Gap contract:
-    //     the batch rule keeps a session when gap <= 30 min, while
-    //     session_window merges on strict <, so the stream gap is
-    //     30 min + 1 us (ts is us-truncated — see eventsNs), making the
-    //     two rules identical. The per-user session INDEX is presentation
-    //     (row_number over the materialized session starts); the sessions
-    //     themselves — bounds, counts, sums — come out of the streaming
-    //     state store ---
-    "q_stream_sessionize" -> ((s, dir) => {
-      val schema = Tables.events(s, dir).schema
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-      val ev = Tables.tsToNs(stream).withColumnRenamed("ts", "ts_ns")
-        .withColumn("event_time",
-          timestamp_micros(expr("ts_ns div 1000")))
-      val sess = ev
-        .groupBy(session_window(col("event_time"),
-          "30 minutes 1 microseconds"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"),
-          min(col("ts_ns")).as("session_start"),
-          max(col("ts_ns")).as("session_end"),
-          moneySum(col("value")).as("sum_value"))
-        .select(col("user_id"), col("n_events"), col("session_start"),
-          col("session_end"), col("sum_value"))
-      val mat = withStatePartitions(s, 8) {
-        graft.streaming.StreamingOi.replayComplete(sess,
-          "graft_stream_sess_" + graft.streaming.StreamingOi.nextSinkId())
-      }
-      // session windows of one user are disjoint, so session_start alone
-      // is already a total order; session_end in the orderBy makes the
-      // determinism self-evident rather than a disjointness argument
-      mat.withColumn("session_id",
-          (row_number().over(Window.partitionBy(col("user_id"))
-            .orderBy(col("session_start"), col("session_end"))) - 1)
-            .cast("long"))
-        .select(col("user_id"), col("session_id"), col("n_events"),
-          col("session_start"), col("session_end"),
-          (col("session_end") - col("session_start")).as("duration_ns"),
-          col("sum_value"))
-    }),
-
-    // --- §2.10: streaming HLL — the register sketch maintained BY the
-    //     streaming engine (bounded state: groups x 2^p rows, max-rho
-    //     is an algebraic agg), estimate read off the materialized
-    //     registers. Registers are set-semantics (max), so the stream
-    //     result equals the batch sketch exactly and the batch HLL
-    //     oracle twin gates the streaming engine itself ---
-    "q_stream_hll" -> ((s, dir) => {
-      val schema = Tables.events(s, dir).schema
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-      val regs = Sketches.hllSketch(stream, Seq("event_type"), "user_id",
-        p = 10, seed = 4L)
-      val materialized = withStatePartitions(s, 8) {
-        graft.streaming.StreamingOi.replayComplete(regs,
-          "graft_stream_hll_" + graft.streaming.StreamingOi.nextSinkId())
-      }
-      val est = Sketches.hllEstimate(materialized, Seq("event_type"))
-      val exact = Tables.events(s, dir).groupBy(col("event_type"))
-        .agg(countDistinct(col("user_id")).as("exact_distinct"))
-      est.join(exact, Seq("event_type"))
-        .select(col("event_type"), r6(col("distinct_est")).as("est_micro"),
-          col("exact_distinct"))
-    }),
-
-    // --- §2.10: streaming Count-Min — cells are a sum aggregation
-    //     (depth x width bounded state); stream == batch because counts
-    //     add across micro-batches. Probe runs on the materialized
-    //     cells ---
-    "q_stream_cms" -> ((s, dir) => {
-      val schema = Tables.events(s, dir).schema
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-        .select(col("user_id"))
-      val cells = Sketches.cmsSketch(stream, "user_id", depth = 4,
-        width = 256, seed = 5L)
-      val materialized = withStatePartitions(s, 8) {
-        graft.streaming.StreamingOi.replayComplete(cells,
-          "graft_stream_cms_" + graft.streaming.StreamingOi.nextSinkId())
-      }
-      val ev = Tables.events(s, dir).select(col("user_id"))
-      Sketches.cmsLookup(materialized, ev.distinct(), "user_id",
-          depth = 4, width = 256, seed = 5L)
-        .join(ev.groupBy(col("user_id"))
-          .agg(count(lit(1)).as("exact_cnt")), Seq("user_id"))
-        .select(col("user_id"), col("est"), col("exact_cnt"))
-    }),
-
-    // --- §2.10: streaming exact dedup — first-copy-wins over a finite
-    //     replay of the documents table. WHICH physical row wins a
-    //     content group is engine-chosen (arrival order inside a
-    //     micro-batch), so the deterministic surface is the surviving
-    //     CONTENT set — digest + length, functions of the content alone —
-    //     which must equal batch DISTINCT exactly ---
-    "q_stream_dedup" -> ((s, dir) => {
-      val schema = Tables.documents(s, dir).schema
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      // synthetic event time (docs carry none): all rows land inside one
-      // watermark horizon, so no state evicts and the dedup is global —
-      // the configuration under which stream == batch is exact. The +1h
-      // base keeps every row strictly ABOVE the engine's initial
-      // watermark (epoch 0): a row AT the watermark is "late" and
-      // silently dropped — doc_id 0 at timestamp_micros(0) vanished
-      val kept = graft.streaming.StreamingDedup.firstCopy(
-          stream.withColumn("event_time",
-            timestamp_micros(col("doc_id") + lit(3600000000L))),
-          "text", watermark = "10 minutes")
-        .select(md5(col("text")).as("digest"),
-          length(col("text")).cast("long").as("text_len"))
-      withStatePartitions(s, 8) {
-        graft.streaming.StreamingOi.replayAppend(kept,
-          "graft_stream_dedup_" + graft.streaming.StreamingOi.nextSinkId())
-      }
-    }),
-
-    // --- §2.10: streaming quality scoring — the row-local batch scorer
-    //     verbatim on a streaming frame (stateless, so append-replay
-    //     equals batch per-row including doc_id); same oracle as
-    //     q_quality_score ---
-    "q_stream_quality" -> ((s, dir) => {
-      val schema = Tables.documents(s, dir).schema
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      val scored = stream.select(col("doc_id"),
-        r6(TextFunctions.qualityScore(col("text"))).as("quality_micro"))
-      withStatePartitions(s, 8) {
-        graft.streaming.StreamingOi.replayAppend(scored,
-          "graft_stream_quality_" + graft.streaming.StreamingOi.nextSinkId())
-      }
-    }),
-
-    // --- §2.10: streaming deterministic sampling + split tagging — the
-    //     batch operators verbatim on a streaming frame (the POINT of
-    //     hashing content keys instead of drawing per-partition randoms:
-    //     the same rows survive under micro-batch replay/retry); batch
-    //     oracles reused with the same fraction/seed ---
-    "q_stream_sample" -> ((s, dir) => {
-      val schema = Tables.documents(s, dir).schema
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      val kept = graft.streaming.StreamingDedup.sampleStream(
-          stream, "doc_id", 0.1, seed = 1L)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      withStatePartitions(s, 8) {
-        graft.streaming.StreamingOi.replayAppend(kept,
-          "graft_stream_sample_" + graft.streaming.StreamingOi.nextSinkId())
-      }
-    }),
-
-    "q_stream_split" -> ((s, dir) => {
-      val schema = Tables.documents(s, dir).schema
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      val tagged = graft.streaming.StreamingDedup.splitStream(
-          stream, "doc_id", 0.25, seed = 3L)
-        .select(col("doc_id"), col("is_test"))
-      withStatePartitions(s, 8) {
-        graft.streaming.StreamingOi.replayAppend(tagged,
-          "graft_stream_split_" + graft.streaming.StreamingOi.nextSinkId())
-      }
-    }),
-
-    // --- §2.10: streaming decontamination — bench grams built batch-side
-    //     (bounded by the eval set), embedded row-locally in the stream's
-    //     tag expression; same oracle as q_decontam_tag ---
-    "q_stream_decontam" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      // gram set memoized per sf dir (pure function of the table) —
-      // collecting it anew per bench rep added ~2 s of batch-side cost
-      // that isn't the streaming operator under test
-      val grams = decontamGramCache.computeIfAbsent(dir, d =>
-        Decontam.benchGramSet(
-          Tables.documents(s, d)
-            .filter(pmod(col("doc_id"), lit(53L)) === 0)
-            .select(col("text").as("q")), "q"))
-      val stream = s.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      val tagged = Decontam.tagContamination(
-          stream.filter(pmod(col("doc_id"), lit(53L)) =!= 0), grams, "text")
-        .select(col("doc_id"), col("n_overlap"))
-      withStatePartitions(s, 8) {
-        graft.streaming.StreamingOi.replayAppend(tagged,
-          "graft_stream_decontam_" + graft.streaming.StreamingOi.nextSinkId())
-      }
-    }),
-
-    // --- A2: probability-weighted OI (lineitem: discount as pseudo-prob) ---
-    "q_a2_weighted_oi" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      li.groupBy(col("l_returnflag"))
-        .agg((sum(col("l_extendedprice") * (lit(1.0) - lit(2.0) * col("l_discount"))) /
-              sum(col("l_extendedprice"))).as("woi"))
-        .select(col("l_returnflag"), r6(col("woi")).as("woi_micro"))
-    }),
-
-    // --- A3: split OI (two flag classes in one pass) ---
-    "q_a3_split_oi" -> ((s, dir) => {
-      val ev = eventsNs(s, dir)
-        .withColumn("bin_ns", TimeBins.ceilNs(col("ts_ns"), H * 6))
-        .withColumn("flag", (col("event_id") % 2).cast("int"))
-      Imbalance.splitOrderImbalance(ev, Seq(col("bin_ns")),
-          side(col("event_type")), col("value"), col("flag"))
-        .select(col("bin_ns"),
-          r6(col("order_imbalance_vis")).as("oi_vis_micro"),
-          r6(col("order_imbalance_ib")).as("oi_ib_micro"))
-    }),
-
-    // --- A5: ordered first/last per group (min_by/max_by) ---
-    "q_a5_first_last" -> ((s, dir) => {
-      val ev = eventsNs(s, dir)
-      ev.groupBy(col("user_id")).agg(
-        min_by(col("value"), col("event_id")).as("first_value"),
-        max_by(col("value"), col("event_id")).as("last_value"),
-        min(col("ts_ns")).as("first_ts_ns"),
-        max(col("ts_ns")).as("last_ts_ns"),
-        count(lit(1)).as("n"))
-    }),
-
-    // --- A6: event number within group (cumcount) ---
-    "q_a6_event_number" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_ns"), col("event_id"))
-      eventsNs(s, dir)
-        .select(col("event_id"),
-          (row_number().over(w) - 1).cast("long").as("event_number"))
-    }),
-
-    // --- A7: resample (15-min floor bins, mean+sum) ---
-    "q_a7_resample" -> ((s, dir) => {
-      eventsNs(s, dir)
-        .withColumn("bin_ns", TimeBins.floorNs(col("ts_ns"), M15))
-        .groupBy(col("bin_ns"), col("event_type"))
-        .agg(count(lit(1)).as("n"), r6(avg(col("value"))).as("avg_micro"),
-          moneySum(col("value")).as("sum_value"))
-    }),
-
-    // --- A7 extension: hourly per-user TWAP — holding-time-weighted
-    //     average (staircase, no bin carry); exact ns weights, decimal
-    //     value·dt sums ---
-    "q_twap" -> ((s, dir) => {
-      TimeBins.twap(eventsNs(s, dir), Seq("user_id"), "ts_ns", "value",
-          H, tieBreak = "event_id")
-        .select(col("user_id"), col("bin_ns"), col("n_obs"),
-          col("weight_ns"), r6(col("twap")).as("twap_micro"))
-    }),
-
-    // --- A8: summary stats per group ---
-    "q_a8_summary" -> ((s, dir) => {
-      eventsNs(s, dir).groupBy(col("event_type")).agg(
-        count(lit(1)).as("n"),
-        r6(avg(col("value"))).as("mean_micro"),
-        r6(stddev_samp(col("value"))).as("std_micro"),
-        min(col("value")).as("min_value"),
-        max(col("value")).as("max_value"))
-    }),
-
-    // --- A10: Pearson correlation per group ---
-    "q_a10_corr" -> ((s, dir) => {
-      Tables.lineitem(s, dir).groupBy(col("l_returnflag"))
-        .agg(r6(corr(col("l_quantity"), col("l_extendedprice")))
-          .as("corr_micro"))
-    }),
-
-    // --- A12: grouped counts / distinct counts / money sums ---
-    "q_a12_counts" -> ((s, dir) => {
-      Tables.orders(s, dir).groupBy(col("o_orderpriority")).agg(
-        count(lit(1)).as("n_orders"),
-        countDistinct(col("o_custkey")).as("n_customers"),
-        moneySum(col("o_totalprice")).as("sum_price"))
-    }),
-
-    // --- A13: population skewness / raw kurtosis (power-sum moments) ---
-    "q_a13_moments" -> ((s, dir) => {
-      eventsNs(s, dir).groupBy(col("event_type")).agg(
-        r6(Stats.skewnessPop(col("value"))).as("skew_micro"),
-        r6(Stats.kurtosisRaw(col("value"))).as("kurt_micro"))
-    }),
-
-    // --- J2: multi-table equi-join + aggregate (TPC-H Q5 shape) ---
-    "q_j2_equi_join" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val o  = Tables.orders(s, dir)
-      val c  = Tables.customer(s, dir)
-      val n  = Tables.nation(s, dir)
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(moneySum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .as("revenue"), count(lit(1)).as("n_items"))
-    }),
-
-    // --- J3: as-of join forward w/ tolerance (iceberg-tag shape) ---
-    "q_j3_asof" -> ((s, dir) => {
-      val ev = eventsNs(s, dir)
-      val clicks = ev.filter(col("event_type") === "click")
-      val purchases = ev.filter(col("event_type") === "purchase")
-      AsOfJoin.forward(clicks, purchases, "ts_ns", Seq("user_id"),
-          attach = Nil, toleranceNs = Some(H))
-        .select(col("event_id"), col("user_id"), col("ts_ns"),
-          col("asof_time"),
-          col("asof_time").isNotNull.cast("int").cast("long").as("matched"))
-    }),
-
-    // --- J5: bin-spine densification (left join to full spine, fill 0) ---
-    "q_j5_spine" -> ((s, dir) => {
-      val ev = eventsNs(s, dir)
-        .withColumn("bin_ns", TimeBins.floorNs(col("ts_ns"), H * 6))
-      val agg = ev.groupBy(col("bin_ns")).agg(count(lit(1)).as("n"))
-      val bounds = ev.agg(min(col("bin_ns")).as("lo"), max(col("bin_ns")).as("hi"))
-        .collect()(0)
-      val spine = TimeBins.spine(agg, bounds.getLong(0), bounds.getLong(1), H * 6)
-      TimeBins.densify(agg, spine, "bin_ns", Nil, Seq("n"))
-    }),
-
-    // --- J6: broadcast dimension joins (orders->customer->nation->region) ---
-    "q_j6_dim_join" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      val c = Tables.customer(s, dir)
-      val n = Tables.nation(s, dir)
-      val r = Tables.region(s, dir)
-      o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"))
-        .agg(count(lit(1)).as("n_orders"),
-          moneySum(col("o_totalprice")).as("sum_price"))
-    }),
-
-    // --- J8: full-outer join + zero fill ---
-    "q_j8_outer_fill" -> ((s, dir) => {
-      val ev = eventsNs(s, dir)
-      val clicks = ev.filter(col("event_type") === "click")
-        .groupBy(col("user_id")).agg(count(lit(1)).as("n_clicks"))
-      val errors = ev.filter(col("event_type") === "error")
-        .groupBy(col("user_id")).agg(count(lit(1)).as("n_errors"))
-      clicks.join(errors, Seq("user_id"), "full_outer")
-        .na.fill(0, Seq("n_clicks", "n_errors"))
-    }),
-
-    // --- W1: lag/lead + log return ---
-    "q_w1_lag_lead" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_ns"), col("event_id"))
-      eventsNs(s, dir).select(col("event_id"), col("user_id"),
-        lag(col("value"), 1).over(w).as("prev_value"),
-        lead(col("value"), 1).over(w).as("next_value"),
-        r6(log(col("value") / lag(col("value"), 1).over(w))).as("log_ret_micro"))
-    }),
-
-    // --- W2: conditional forward fill (last non-null over preceding) ---
-    "q_w2_cond_fill" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_ns"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      eventsNs(s, dir).select(col("event_id"),
-        coalesce(last(when(col("event_type") === "purchase", col("value")),
-          ignoreNulls = true).over(w), lit(0.0)).as("last_purchase_value"))
-    }),
-
-    // --- W3: rolling window sum (previous 5 events incl. current) ---
-    "q_w3_rolling" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_ns"), col("event_id")).rowsBetween(-4, 0)
-      eventsNs(s, dir).select(col("event_id"),
-        r6(sum(col("value")).over(w)).as("rolling5_micro"))
-    }),
-
-    // --- W4: per-group rank (method='first' => row_number) + top-k ---
-    "q_w4_rank_topk" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_orderpriority"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      Tables.orders(s, dir)
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 3)
-        .select(col("o_orderpriority"), col("rk"), col("o_orderkey"),
-          col("o_totalprice"))
-    }),
-
-    // --- W5: cumulative sum + cumulative product (exp-sum-log1p) ---
-    "q_w5_cum" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_ns"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      eventsNs(s, dir).select(col("event_id"),
-        r6(sum(col("value")).over(w)).as("cumsum_micro"),
-        r6(exp(sum(log(lit(1.0) + col("value") / lit(10000.0))).over(w)))
-          .as("cumprod_micro"))
-    }),
-
-    // --- W6: diff (value - lag) — pass-through doubles, no rounding ---
-    "q_w6_diff" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_ns"), col("event_id"))
-      eventsNs(s, dir).select(col("event_id"),
-        (col("value") - lag(col("value"), 1).over(w)).as("dvalue"),
-        (col("ts_ns") - lag(col("ts_ns"), 1).over(w)).as("dts_ns"))
-    }),
-
-    // --- W7: right-closed ceil binning (pandas .ceil parity) ---
-    "q_w7_ceil_bins" -> ((s, dir) => {
-      eventsNs(s, dir)
-        .withColumn("bin_ns", TimeBins.ceilNs(col("ts_ns"), M5))
-        .groupBy(col("bin_ns"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-    }),
-
-    // --- O2: global top-k with deterministic tiebreak ---
-    "q_o2_topk" -> ((s, dir) => {
-      Tables.orders(s, dir)
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(10)
-        .select(col("o_orderkey"), col("o_totalprice"))
-    }),
-
-    // --- U1: union all + tag ---
-    "q_u1_union" -> ((s, dir) => {
-      val ev = eventsNs(s, dir)
-      val a = ev.filter(col("event_type") === "purchase" && col("value") > 150)
-        .select(col("event_id"), lit("big_purchase").as("tag"))
-      val b = ev.filter(col("event_type") === "error")
-        .select(col("event_id"), lit("error").as("tag"))
-      a.unionByName(b)
-    }),
-
-    // --- U2: semi-join membership filter ---
-    "q_u2_semi" -> ((s, dir) => {
-      val c = Tables.customer(s, dir)
-      val bigOrders = Tables.orders(s, dir).filter(col("o_totalprice") > 200000)
-      c.join(bigOrders, col("c_custkey") === col("o_custkey"), "left_semi")
-        .select(col("c_custkey"), col("c_name"))
-    }),
-
-    // --- P2+F2: filter + row-level derived columns (pass-through doubles) ---
-    "q_p2_filter_project" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .filter(col("l_returnflag") === "R" && col("l_quantity") >= 30)
-        .select(col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
-          (col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"),
-          (col("l_extendedprice") * (lit(1.0) - col("l_discount")) *
-            (lit(1.0) + col("l_tax"))).as("charge"))
-    }),
-
-    // --- P6: quantile band bounds — exact interpolated percentiles via a
-    //     distributed sort (Quantiles.exactPercentiles; the built-in exact
-    //     `percentile` buffers all rows in one reducer), then one scan
-    //     counts the band ---
-    "q_p6_quantile_band" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir).select(col("l_extendedprice"))
-      val Seq(lo, hi) =
-        Quantiles.exactPercentiles(li, "l_extendedprice", Seq(0.025, 0.975))
-      li.agg(sum(when(col("l_extendedprice").between(lo, hi), 1L)
-          .otherwise(0L)).as("n_in_band"))
-        .select(r6(lit(lo)).as("lo_micro"), r6(lit(hi)).as("hi_micro"),
-          col("n_in_band"))
-    }),
-
-    // --- F7: z-score standardization per group ---
-    "q_f7_zscore" -> ((s, dir) => {
-      val w = Window.partitionBy(col("event_type"))
-      eventsNs(s, dir).select(col("event_id"),
-        r6((col("value") - avg(col("value")).over(w)) /
-          stddev_samp(col("value")).over(w)).as("z_micro"))
-    }),
-
-    // --- O1: the full-frame time sort, hashable — global ordinal under
-    //     ORDER BY (ts_ns, event_id) via the two-level scan (no
-    //     corpus-wide window) ---
-    "q_o1_sort" -> ((s, dir) => {
-      graft.core.Prep.timeOrderSeq(eventsNs(s, dir), "ts_ns", "event_id")
-        .select(col("event_id"), col("pos"))
-    }),
-
-    // --- F4: datetime family — epoch-ns to calendar fields and a
-    //     formatted day string, then back to epoch-ns (round-trip) ---
-    "q_f4_datetime" -> ((s, dir) => {
-      val ts = timestamp_micros(expr("ts_ns div 1000"))
-      eventsNs(s, dir).select(col("event_id"),
-        year(ts).cast("long").as("y"),
-        month(ts).cast("long").as("mo"),
-        dayofmonth(ts).cast("long").as("d"),
-        hour(ts).cast("long").as("h"),
-        minute(ts).cast("long").as("mi"),
-        second(ts).cast("long").as("sec"),
-        date_format(ts, "yyyy-MM-dd").as("day_str"),
-        (unix_micros(ts) * 1000).as("rt_ns"))
-    }),
-
-    // --- F5: string family — the reference's filename split('_') +
-    //     numeric-field extract + substring membership, over a
-    //     synthesized LOBSTER-style name (source_lang_id.csv) ---
-    "q_f5_string" -> ((s, dir) => {
-      // concat with explicit separators, NOT concat_ws: concat_ws DROPS
-      // null fields while the oracle's || propagates them — a latent
-      // hash divergence the moment the table gains a NULL source/lang
-      Tables.documents(s, dir)
-        .withColumn("fname", concat(col("source"), lit("_"), col("lang"),
-          lit("_"), col("doc_id").cast("string"), lit(".csv")))
-        .select(col("doc_id"), col("fname"),
-          element_at(split(col("fname"), "_"), 1).as("src_part"),
-          element_at(split(col("fname"), "_"), 2).as("lang_part"),
-          regexp_extract(col("fname"), "([0-9]+)\\.csv$", 1)
-            .cast("long").as("id_num"),
-          col("fname").contains("en").as("has_en"))
-    }),
-
-    // --- F6: pd.cut twin — right-closed labeled spread buckets
-    //     (reference bins 0/500/1000/1500/2000/inf), counted against a
-    //     correctness flag; below-range rows drop like pandas NaN cut ---
-    "q_f6_bucketize" -> ((s, dir) => {
-      val spread = col("value") * 10.0
-      val bucket = when(spread > 0 && spread <= 500, "0-500")
-        .when(spread > 500 && spread <= 1000, "500-1000")
-        .when(spread > 1000 && spread <= 1500, "1000-1500")
-        .when(spread > 1500 && spread <= 2000, "1500-2000")
-        .when(spread > 2000, ">2000")
-      eventsNs(s, dir)
-        .withColumn("bucket", bucket)
-        .withColumn("correct", col("event_id") % 3 === 0)
-        .filter(col("bucket").isNotNull)
-        .groupBy(col("bucket"), col("correct"))
-        .agg(count(lit(1)).as("n"))
-    }),
-
-    // --- M5: simple OLS per group via regr_* aggregates ---
-    "q_m5_regression" -> ((s, dir) => {
-      Regression.simpleOlsByGroup(Tables.lineitem(s, dir),
-          y = "l_extendedprice", x = "l_quantity", Seq("l_returnflag"))
-        .select(col("l_returnflag"), r6(col("slope")).as("slope_micro"),
-          r6(col("intercept")).as("intercept_micro"),
-          r6(col("r2")).as("r2_micro"), col("n"))
-    }),
-
-    // --- M10: skew/kurt-adjusted Sharpe test per "strategy" (user) ---
-    "q_m10_sharpe" -> ((s, dir) => {
-      val daily = eventsNs(s, dir)
-        .withColumn("day_ns", TimeBins.floorNs(col("ts_ns"), DAY))
-        .groupBy(col("user_id"), col("day_ns"))
-        .agg(sum(side(col("event_type")) * col("value")).as("ret"))
-      val aggs = Stats.sharpeColumns(col("ret"))
-      daily.groupBy(col("user_id")).agg(aggs.head, aggs.tail: _*)
-        .filter(col("n") >= 3 && col("sd_ret") > 0)
-        .select(col("user_id"), col("n").cast("long").as("n_days"),
-          r6(col("mean_ret")).as("mean_micro"),
-          r6(col("sd_ret")).as("sd_micro"),
-          r6(col("sharpe")).as("sharpe_micro"),
-          r6(col("sharpe_tstat")).as("tstat_micro"),
-          r6(col("sharpe_annual")).as("annual_micro"))
-    }),
-
-    // --- M11: portfolio construction (rank per bin, top/bottom, PnL) ---
-    "q_m11_portfolio" -> ((s, dir) => {
-      val binned = eventsNs(s, dir)
-        .withColumn("bin_ns", TimeBins.floorNs(col("ts_ns"), H * 6))
-        .groupBy(col("bin_ns"), col("user_id"))
-        .agg(sum(side(col("event_type")) * col("value")).as("signal"))
-      val w = Window.partitionBy(col("bin_ns"))
-        .orderBy(col("signal").desc, col("user_id"))
-      val n = Window.partitionBy(col("bin_ns"))
-      val ranked = binned
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .withColumn("n_users", count(lit(1)).over(n).cast("long"))
-      ranked.groupBy(col("bin_ns")).agg(
-        r6(sum(when(col("rk") <= 2, col("signal")).otherwise(0.0)) -
-           sum(when(col("rk") > col("n_users") - 2, col("signal"))
-             .otherwise(0.0))).as("pnl_micro"),
-        count(lit(1)).as("n_users_out"))
-    }),
-
-    // --- S3: filename metadata extraction (partition-pruning analog) ---
-    "q_s3_file_meta" -> ((s, dir) => {
-      eventsNs(s, dir)
-        .select(regexp_extract(input_file_name(), "(sf[0-9.]+)", 1).as("sf"),
-          lit("events").as("table_name"))
-        .distinct()
-    }),
-
-    // --- A4: size-tercile conditional weighted OI (exact per-group
-    //     percentile terciles; discount plays pred_prob) ---
-    "q_a4_size_oi" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val terciles = li.groupBy(col("l_returnflag")).agg(
-        expr("percentile(l_quantity, 0.3333333333333333)").as("q1"),
-        expr("percentile(l_quantity, 0.6666666666666666)").as("q2"))
-      // reference bucket boundaries: strict < q1, [q1,q2], > q2
-      val tagged = li.join(broadcast(terciles), Seq("l_returnflag"))
-        .withColumn("bucket", when(col("l_quantity") < col("q1"), "small")
-          .when(col("l_quantity") <= col("q2"), "medium")
-          .otherwise("large"))
-      def woi(b: String): Column = {
-        val cond = col("bucket") === b
-        val num = sum(when(cond, col("l_extendedprice") *
-          (lit(1.0) - lit(2.0) * col("l_discount"))).otherwise(0.0))
-        val den = sum(when(cond, col("l_extendedprice")).otherwise(0.0))
-        (num / when(den =!= 0.0, den)).as(b)
-      }
-      tagged.groupBy(col("l_returnflag")).agg(
-          woi("small"), woi("medium"), woi("large"))
-        .select(col("l_returnflag"), r6(col("small")).as("oi_small_micro"),
-          r6(col("medium")).as("oi_medium_micro"),
-          r6(col("large")).as("oi_large_micro"))
-    }),
-
-    // --- P3: time-of-day session window filter ---
-    "q_p3_session" -> ((s, dir) => {
-      // integer floor division to match the oracle's `//`
-      val secOfDay = floor((col("ts_ns") % lit(86400L * 1000000000L)) /
-        lit(1000000000L)).cast("long")
-      eventsNs(s, dir)
-        .filter(secOfDay >= 10 * 3600 && secOfDay <= 15 * 3600 + 1800)
-        .groupBy(col("event_type")).agg(count(lit(1)).as("n"),
-          moneySum(col("value")).as("sum_value"))
-    }),
-
-    // --- P4: duplicate-key drop, keep first in explicit order ---
-    "q_p4_dedup_keys" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"), col("event_type"))
-        .orderBy(col("ts_ns"), col("event_id"))
-      eventsNs(s, dir)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("user_id"), col("event_type"), col("event_id"),
-          col("ts_ns"))
-    }),
-
-    // --- A9: mean +/- std by hour-of-day ---
-    "q_a9_time_of_day" -> ((s, dir) => {
-      val hour = floor((col("ts_ns") % lit(86400L * 1000000000L)) /
-        lit(3600L * 1000000000L)).cast("long")
-      eventsNs(s, dir).groupBy(hour.as("hour_of_day"))
-        .agg(count(lit(1)).as("n"), r6(avg(col("value"))).as("mean_micro"),
-          r6(stddev_samp(col("value"))).as("std_micro"))
-    }),
-
-    // --- W8: Gaussian-kernel smoothing over an ordered window (sigma=1,
-    //     radius 2; same explicit lag/lead arithmetic as the oracle) ---
-    "q_w8_gauss_smooth" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_ns"), col("event_id"))
-      val ker = Seq(-2, -1, 0, 1, 2)
-        .map(k => k -> math.exp(-k * k / 2.0))
-      val num = ker.map { case (k, wt) =>
-        when(lag(col("value"), -k).over(w).isNotNull,
-          lag(col("value"), -k).over(w) * lit(wt)).otherwise(0.0)
-      }.reduce(_ + _)
-      val den = ker.map { case (k, wt) =>
-        when(lag(col("value"), -k).over(w).isNotNull, lit(wt))
-          .otherwise(0.0)
-      }.reduce(_ + _)
-      eventsNs(s, dir).select(col("event_id"),
-        r6(num / den).as("smooth_micro"))
-    }),
-
-    // --- W9: ACF at lags 1..3 per user (corr of value with lag-k) ---
-    "q_w9_acf" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_ns"), col("event_id"))
-      val withLags = eventsNs(s, dir).select(col("user_id"), col("value"),
-        lag(col("value"), 1).over(w).as("l1"),
-        lag(col("value"), 2).over(w).as("l2"),
-        lag(col("value"), 3).over(w).as("l3"))
-      withLags.groupBy(col("user_id")).agg(
-        r6(corr(col("value"), col("l1"))).as("acf1_micro"),
-        r6(corr(col("value"), col("l2"))).as("acf2_micro"),
-        r6(corr(col("value"), col("l3"))).as("acf3_micro"))
-    }),
-
-    // --- M7: multi-regressor OLS (2 regressors + intercept) via power
-    //     sums; closed-form Cramer solve both sides ---
-    "q_m7_multi_ols" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val x1 = col("l_quantity"); val x2 = col("l_discount")
-      val y = col("l_extendedprice")
-      val g = li.groupBy(col("l_returnflag")).agg(
-        count(lit(1)).cast("double").as("n"),
-        sum(x1).as("s1"), sum(x2).as("s2"), sum(x1 * x1).as("s11"),
-        sum(x1 * x2).as("s12"), sum(x2 * x2).as("s22"),
-        sum(y).as("sy"), sum(x1 * y).as("s1y"), sum(x2 * y).as("s2y"))
-      // normal equations [n s1 s2; s1 s11 s12; s2 s12 s22] b = [sy s1y s2y]
-      val det = col("n") * (col("s11") * col("s22") - col("s12") * col("s12")) -
-        col("s1") * (col("s1") * col("s22") - col("s12") * col("s2")) +
-        col("s2") * (col("s1") * col("s12") - col("s11") * col("s2"))
-      val b0 = (col("sy") * (col("s11") * col("s22") - col("s12") * col("s12")) -
-        col("s1") * (col("s1y") * col("s22") - col("s12") * col("s2y")) +
-        col("s2") * (col("s1y") * col("s12") - col("s11") * col("s2y"))) / det
-      val b1 = (col("n") * (col("s1y") * col("s22") - col("s2y") * col("s12")) -
-        col("sy") * (col("s1") * col("s22") - col("s12") * col("s2")) +
-        col("s2") * (col("s1") * col("s2y") - col("s1y") * col("s2"))) / det
-      val b2 = (col("n") * (col("s11") * col("s2y") - col("s12") * col("s1y")) -
-        col("s1") * (col("s1") * col("s2y") - col("s1y") * col("s2")) +
-        col("sy") * (col("s1") * col("s12") - col("s11") * col("s2"))) / det
-      g.select(col("l_returnflag"), r6(b0).as("b0_micro"),
-        r6(b1).as("b1_micro"), r6(b2).as("b2_micro"))
-    }),
-
-    // --- M8: rolling refit — per user, regress daily value-sum on day
-    //     index over the previous 3 days, predict today ---
-    "q_m8_rolling_refit" -> ((s, dir) => {
-      val daily = eventsNs(s, dir)
-        .withColumn("day", expr(s"ts_ns div $DAY"))
-        .groupBy(col("user_id"), col("day"))
-        .agg(sum(col("value")).as("v"))
-      val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
-        .rowsBetween(-3, -1)
-      daily.select(col("user_id"), col("day"),
-          regr_slope(col("v"), col("day")).over(w).as("slope"),
-          regr_intercept(col("v"), col("day")).over(w).as("icept"),
-          regr_count(col("v"), col("day")).over(w).as("n_train"))
-        .filter(col("n_train") === 3)
-        .select(col("user_id"), col("day"),
-          r6(col("icept") + col("slope") * col("day")).as("pred_micro"))
-    }),
-
-    // --- EP2 end-to-end: the reference's headline deliverable as ONE
-    //     chain of the ENGINE'S OWN operators
-    //     (`portfolio_strategy_workflow.py:60-63` ->
-    //     `trading_strategy.py:347-464`): daily panel -> M8
-    //     Strategy.rollingRefitSignals (pooled cross-sectional OLS of ret
-    //     on OI over the previous 3 sessions, distributed power sums +
-    //     per-day QR solve) -> out-of-sample signal -> magnitude veto ->
-    //     M11/W4 Strategy.portfolio (per-day rank, top/bottom 25% with
-    //     sign agreement) -> daily long-short PnL on FORWARD returns (F9)
-    //     -> one M10 Stats.sharpeColumns row. The DuckDB twin re-derives
-    //     the SAME pooled rolling normal equations in closed form ---
-    "q_ep2_full" -> ((s, dir) => {
-      val daily = eventsNs(s, dir)
-        .withColumn("date", expr(s"ts_ns div $DAY"))
-        .groupBy(col("user_id"), col("date"))
-        .agg(sum(side(col("event_type")) * col("value")).as("oi"),
-          avg(col("value")).as("ret"))
-      val wLead = Window.partitionBy(col("user_id")).orderBy(col("date"))
-      val panel = daily.withColumn("fret", lead(col("ret"), 1).over(wLead))
-      val sig = graft.domain.Strategy
-        .rollingRefitSignals(panel, "ret", Seq("oi"), lookback = 3)
-        .filter(col("fret").isNotNull &&
-          abs(col("signal")) > lit(0.05)) // magnitude veto
-        .select(col("date").as("bin_ns"), col("user_id").as("ticker"),
-          col("signal"), col("fret"))
-      val (pnl, _) = graft.domain.Strategy
-        .portfolio(sig, pct = 0.25, retCol = "fret")
-      val aggs = Stats.sharpeColumns(col("pnl"))
-      pnl.agg(aggs.head, aggs.tail: _*)
-        .filter(col("n") >= 3 && col("sd_ret") > 0)
-        .select(col("n").cast("long").as("n_days"),
-          r6(col("mean_ret")).as("mean_micro"),
-          r6(col("sd_ret")).as("sd_micro"),
-          r6(col("sharpe")).as("sharpe_micro"),
-          r6(col("sharpe_tstat")).as("tstat_micro"),
-          r6(col("sharpe_annual")).as("annual_micro"))
-    }),
-
-    // --- EP1 end-to-end: the reference's PRIMARY workload
-    //     (`test_workflow.py:46-112` -> `chunk_pipeline.py`) as ONE chain of
-    //     the engine's own pipeline — `Pipelines.ep1`: microstructure
-    //     features (F2) -> pred_prob -> vis OI panel (A1/A5/W7) -> session
-    //     spine densification (J5) -> log returns (W1) -> per-ticker OLS of
-    //     log_ret on OI (M5). Input is the deterministic LOBSTER-shaped
-    //     frame above; the oracle re-derives every stage in SQL and solves
-    //     the same normal equations in closed form ---
-    "q_ep1_full" -> ((s, dir) => {
-      val (panel, fits) = graft.domain.Pipelines.ep1(
-        ep1LobsterFrame(s, dir), deltaNs = M15, kind = "vis")
-      val panelAgg = panel.groupBy(col("ticker")).agg(
-        count(lit(1)).as("n_bins"),
-        sum(when(col("log_ret").isNull, 1L).otherwise(0L)).as("n_empty"),
-        r6(sum(col("order_imbalance_vis"))).as("oi_sum_micro"))
-      def micro(v: Double): Long = math.floor(v * 1e6 + 0.5).toLong
-      import s.implicits._
-      val fitDf = fits.map(f => (f.group(0).asInstanceOf[String],
-          micro(f.intercept), micro(f.coefs(0)), f.n))
-        .toDF("ticker", "b0_micro", "b_oi_micro", "n_fit")
-      panelAgg.join(fitDf, Seq("ticker"))
-    }),
-
-    // --- EP1 multi-delta fan-out (`Pipelines.ep1MultiDelta`): ONE cached
-    //     feature frame, panels for several bin widths computed off it (the
-    //     reference re-reads raw CSVs per delta — SURVEY §4.1). Gate output
-    //     is the per-(delta, ticker) panel summary, so both the shared-scan
-    //     caching path and every per-delta panel are under the oracle ---
-    "q_ep1_multidelta" -> ((s, dir) => {
-      val deltas = Seq(M15, M30)
-      val run = graft.domain.Pipelines.ep1MultiDelta(
-        ep1LobsterFrame(s, dir), deltas, kind = "vis")
-      val out = deltas.map { d =>
-        run.panels(d).groupBy(col("ticker")).agg(
-            count(lit(1)).as("n_bins"),
-            sum(when(col("log_ret").isNull, 1L).otherwise(0L)).as("n_empty"),
-            r6(sum(col("order_imbalance_vis"))).as("oi_sum_micro"))
-          .withColumn("delta_min", lit(d / (60L * 1000000000L)))
-      }.reduce(_ unionByName _)
-      // materialize the (tiny, aggregated) result while the shared
-      // feature frame is still cached, then RELEASE it — the operator's
-      // ownership contract (MultiDeltaPanels.release). The result comes
-      // back as LOCAL rows re-framed on the driver (bounded: one row
-      // per delta x ticker), not the cached frame itself — returning a
-      // persisted frame would pin it for the session's lifetime outside
-      // any caller's unpersist reach (r16 ADVICE)
-      val rows = out.collect().toSeq
-      run.release()
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
-    }),
-
-    // --- EP3 end-to-end (`trading_strategy.py:469-524` via
-    //     `Pipelines.ep3ClOpSignal`): daily vis-OI panel -> Close-to-Open
-    //     returns from a daily-bars table (J6 broadcast) -> saved-coefficient
-    //     linear signal (F8). Bars and params are deterministic dyadic
-    //     functions of (ticker, day), so ClOp's ln(open/prev_close) and the
-    //     signal combination are reproducible on the oracle side ---
-    "q_ep3_full" -> ((s, dir) => {
-      val prepped = ep1LobsterFrame(s, dir)
-      val dayI = unix_date(col("date")).cast("long")
-      val bars = prepped
-        .filter(col("event_type") === graft.core.Schema.EventType.VisibleExec)
-        .select(col("ticker"), col("date")).distinct()
-        .withColumn("open", lit(100.0) +
-          pmod(dayI * 8 + col("ticker").cast("long"), lit(7L))
-            .cast("double") * 0.25)
-        .withColumn("close", lit(100.0) +
-          (pmod(dayI * 8 + col("ticker").cast("long"), lit(5L)) + 1)
-            .cast("double") * 0.25)
-      val params = prepped.select(col("ticker")).distinct()
-        .withColumn("intercept",
-          (pmod(col("ticker").cast("long"), lit(3L)) - 1)
-            .cast("double") * 0.125)
-        .withColumn("b_oi", lit(0.5) +
-          pmod(col("ticker").cast("long"), lit(2L)).cast("double") * 0.25)
-        .withColumn("b_clop", lit(-0.25) +
-          pmod(col("ticker").cast("long"), lit(3L)).cast("double") * 0.125)
-      graft.domain.Pipelines.ep3ClOpSignal(prepped, bars, params, "vis")
-        .select(col("ticker"), dayI.as("day_i"),
-          r6(col("order_imbalance_vis")).as("oi_micro"),
-          r6(col("ClOp")).as("clop_micro"),
-          r6(col("signal")).as("signal_micro"))
-    }),
-
-    // --- F8+F9: linear signal + threshold/sign PnL per user ---
-    "q_f8_f9_signal_pnl" -> ((s, dir) => {
-      val daily = eventsNs(s, dir)
-        .withColumn("day", expr(s"ts_ns div $DAY"))
-        .groupBy(col("user_id"), col("day"))
-        .agg(sum(side(col("event_type")) * col("value")).as("oi"),
-          avg(col("value")).as("ret"))
-      val sig = daily.withColumn("signal",
-        lit(0.5) + lit(2.0) * col("oi"))
-      sig.groupBy(col("user_id")).agg(
-        r6(sum(when(col("signal") > 0, col("ret")).otherwise(0.0)) -
-          sum(when(col("signal") < 0, col("ret")).otherwise(0.0)))
-          .as("pnl_thresh_micro"),
-        r6(sum(signum(col("signal")) * col("ret"))).as("pnl_sign_micro"))
-    }),
-
-    // --- J9/M12: bet-size normalization by per-group median ---
-    "q_j9_bet_size" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val pnl = li.groupBy(col("l_suppkey"))
-        .agg(moneySum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .as("revenue"))
-      val med = li.groupBy(col("l_suppkey"))
-        .agg(expr("percentile(l_extendedprice, 0.5)").as("med_price"))
-      pnl.join(med, Seq("l_suppkey"))
-        .select(col("l_suppkey"),
-          r6(col("revenue") / col("med_price")).as("sized_micro"))
-    }),
-
-    // --- A14: Mann-Whitney U between two event-type samples per user ---
-    "q_a14_mannwhitney" -> ((s, dir) => {
-      val ev = eventsNs(s, dir)
-        .filter(col("event_type").isin("click", "error"))
-      val w = Window.partitionBy(col("user_id")).orderBy(col("value"))
-      // average ranks for ties via rank ranges: use dense approach with
-      // (rank() + count-1/2) — simpler: average_rank = (2*rank() +
-      // cnt_equal - 1) / 2 where rank() is min-rank
-      val cntEq = count(lit(1)).over(Window.partitionBy(col("user_id"),
-        col("value")))
-      val avgRank = (rank().over(w) * 2 + cntEq - 1).cast("double") / 2.0
-      val ranked = ev.select(col("user_id"), col("event_type"),
-        avgRank.as("r"))
-      ranked.groupBy(col("user_id")).agg(
-        sum(when(col("event_type") === "click", col("r"))
-          .otherwise(0.0)).as("rank_sum_click"),
-        sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("n_click"),
-        sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("n_error"))
-        .select(col("user_id"),
-          r6(col("rank_sum_click") -
-            col("n_click") * (col("n_click") + 1) / 2.0).as("u_micro"),
-          col("n_click"), col("n_error"))
-    }),
-
-    // --- A14b: Anderson-Darling k-sample across event types per user ---
-    "q_ad_ksample" -> ((s, dir) => {
-      DistTests.andersonDarlingK(eventsNs(s, dir), Seq("user_id"),
-          "event_type", "value", "event_id")
-        .select(col("user_id"), r6(col("a2kn")).as("a2kn_micro"),
-          col("n_pooled"), col("k_samples"))
-    }),
-
-    // --- Sessionization (gaps-and-islands; 30-min gap) ---
-    "q_sessionize" -> ((s, dir) => {
-      Sessionize.sessions(eventsNs(s, dir), Seq("user_id"), "ts_ns",
-          gapNs = 30L * 60 * 1000000000L, tieBreak = "event_id",
-          aggs = Seq(moneySum(col("value")).as("sum_value")))
-        .select(col("user_id"), col("session_id"), col("n_events"),
-          col("session_start"), col("session_end"), col("duration_ns"),
-          col("sum_value"))
-    }),
-
-    // --- session path mining: within-session event-type transition
-    //     counts (the funnel table) — one per-key window shuffle +
-    //     one partial-agg count, no (key, session) re-exchange ---
-    "q_session_paths" -> ((s, dir) => {
-      Sessionize.transitions(eventsNs(s, dir), Seq("user_id"), "ts_ns",
-        "event_type", gapNs = 30L * 60 * 1000000000L,
-        tieBreak = "event_id")
-    }),
-
-    // --- A-family extension: weekly cohort retention over purchase
-    //     activity (Cohorts scaladoc: everything after the first
-    //     shuffle runs on the distinct (user, week) activity frame,
-    //     counts are plain count(*) by construction) ---
-    "q_retention" -> ((s, dir) => {
-      Cohorts.retention(
-          eventsNs(s, dir).filter(col("event_type") === "purchase"),
-          "user_id", "ts_ns", periodNs = 7L * DAY)
-        .select(col("cohort_period").as("cohort_week"),
-          col("period_offset").as("week_offset"), col("n_users"),
-          col("cohort_size"), r6(col("retention")).as("retention_micro"))
-    }),
-
-    // --- J-family extension: interval (range) join — points matched to
-    //     the irregular intervals containing them via the cell-bucketed
-    //     equi-join (RangeJoin: no cartesian/BNLJ, points never
-    //     replicated). Intervals = 12h-gap click sessions per user;
-    //     points = that user's non-click events ---
-    "q_range_join" -> ((s, dir) => {
-      val e = eventsNs(s, dir)
-      val sess = Sessionize.sessions(
-          e.filter(col("event_type") === "click"), Seq("user_id"),
-          "ts_ns", gapNs = 12L * H, tieBreak = "event_id")
-        .select(col("user_id"), col("session_id"),
-          col("session_start"), col("session_end"))
-      val pts = e.filter(col("event_type") =!= "click")
-        .select(col("user_id"), col("ts_ns"), col("value"))
-      RangeJoin.pointInInterval(pts, sess, Seq("user_id"), "ts_ns",
-          "session_start", "session_end", cellNs = 6L * H)
-        .groupBy("user_id", "session_id", "session_start", "session_end")
-        .agg(count(lit(1)).as("n_inside"),
-          moneySum(col("value")).as("sum_value"))
-    }),
-
-    // --- LLM ops: exact dedup groups ---
-    "q_dedup_exact" -> ((s, dir) => {
-      Dedup.exactGroups(Tables.documents(s, dir), "text", "doc_id")
-    }),
-
-    // --- LLM ops: 3-gram Jaccard near-dup pairs (prefix-filtered exact
-    //     set-similarity join, blocked by source) ---
-    "q_dedup_jaccard" -> ((s, dir) => {
-      // pair set shared across the duplicate-cluster family (r18)
-      jaccardDupPairs(s, dir)
-        .select(col("id_a"), col("id_b"), r6(col("jaccard")).as("jaccard_micro"))
-    }),
-
-    // --- LLM ops: DIRECTED containment pairs (|A∩B|/|A| — doc-in-doc
-    //     partial duplication symmetric Jaccard misses; contained-side
-    //     prefix filter, container side indexed in full) ---
-    "q_containment" -> ((s, dir) => {
-      Dedup.containmentPairs(Tables.documents(s, dir), "doc_id", "text",
-          n = 3, threshold = 0.7, blockCols = Seq("source"))
-        .select(col("id_a"), col("id_b"),
-          r6(col("containment")).as("containment_micro"))
-    }),
-
-    // --- LLM ops: duplicate-cluster connected components over the exact
-    //     Jaccard pair set (alternating large-star/small-star; labels =
-    //     component-minimum doc_id; singletons labeled with their own id).
-    //     DuckDB oracle: recursive-CTE transitive closure + MIN — fine at
-    //     sf0.01 where clusters are small; the Spark side is the
-    //     O(log^2 n)-round scale path ---
-    "q_dup_clusters" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val prs = jaccardDupPairs(s, dir) // shared pair fixture (r18)
-      val labels = DupClusters.connectedComponents(prs, "id_a", "id_b")
-      DupClusters.assignClusters(docs, "doc_id", labels)
-        .select(col("doc_id"), col("cluster_id"))
-    }),
-
-    // --- LLM ops: leakage-safe split — near-dup clusters resolved first,
-    //     then train/test tagged by a hash of the CLUSTER id, so two
-    //     near-identical docs can never straddle the split and turn the
-    //     eval into a memorization test ---
-    "q_group_split" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val prs = jaccardDupPairs(s, dir) // shared pair fixture (r18)
-      DupClusters.leakageSafeSplitTag(docs, "doc_id", prs, "id_a", "id_b",
-          testFraction = 0.25, seed = 7L)
-        .select(col("doc_id"), col("cluster_id"), col("is_test"))
-    }),
-
-    // --- LLM ops: cluster-aware dedup — one representative per duplicate
-    //     component, chosen by quality score (ties -> smallest doc_id).
-    //     The transitive-chain-safe drop step real pipelines run after
-    //     LSH, not greedy pair deletion ---
-    "q_cluster_dedup" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val prs = jaccardDupPairs(s, dir) // shared pair fixture (r18)
-      DupClusters.dedupByCluster(docs, "doc_id", prs, "id_a", "id_b",
-          orderBy = Seq(r6(TextFunctions.qualityScore(col("text"))).desc))
-        .select(col("doc_id"), col("source"))
-    }),
-
-    // --- LLM ops: corpus-level repeated-segment removal (the C4
-    //     "discard repeated lines" rule on 3-token segments — this corpus
-    //     has no line structure). Cleaned text pinned via md5 ---
-    "q_seg_dedup_drop" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.dropRepeatedSegments(docs, "doc_id",
-          Dedup.tokenSegments(col("text"), 3))
-        .select(col("doc_id"), md5(col("cleaned")).as("cleaned_md5"),
-          col("n_segments"), col("n_kept"))
-    }),
-
-    // --- LLM ops: repeated-SUBSTRING removal on sliding 8-token windows
-    //     (the ExactSubstr rule of Lee et al. 2022 at window resolution)
-    //     — unlike the fixed segment grid above, a repeated passage is
-    //     caught at ANY token offset; marked spans union row-locally ---
-    "q_substr_dedup" -> ((s, dir) => {
-      Dedup.dropRepeatedWindows(Tables.documents(s, dir), "doc_id",
-          "text", windowTokens = 8, minCopies = 2)
-        .select(col("doc_id"), md5(col("cleaned")).as("cleaned_md5"),
-          col("n_tokens"), col("n_kept"))
-    }),
-
-    // --- LLM ops: same, keep-first variant (smallest (doc_id, pos)
-    //     occurrence survives — the dedup that preserves one copy of
-    //     boilerplate instead of erasing it corpus-wide) ---
-    "q_seg_dedup_first" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.dropRepeatedSegments(docs, "doc_id",
-          Dedup.tokenSegments(col("text"), 3), keepFirst = true)
-        .select(col("doc_id"), md5(col("cleaned")).as("cleaned_md5"),
-          col("n_segments"), col("n_kept"))
-    }),
-
-    // --- LLM ops: Gopher repetition filters (Rae et al. 2021 Table A1,
-    //     word-soup analogs): duplicate-token fraction, top-2-gram char
-    //     coverage, duplicated-3-gram char coverage ---
-    "q_repetition" -> ((s, dir) => {
-      Tables.documents(s, dir).select(col("doc_id"),
-        r6(TextFunctions.dupTokenFrac(col("text"))).as("dup_token_micro"),
-        r6(TextFunctions.topNgramCharFrac(col("text"), 2))
-          .as("top_2gram_micro"),
-        r6(TextFunctions.dupNgramCharFrac(col("text"), 3))
-          .as("dup_3gram_micro"))
-    }),
-
-    // --- LLM ops: sqrt-temperature token-budget mixture plan (one
-    //     aggregation pass; integer-exact driver math over #sources
-    //     rows; epochs capped at 4) ---
-    "q_mixture_plan" -> ((s, dir) => {
-      Sampling.mixturePlan(Tables.documents(s, dir), "source", "n_chars",
-        budgetTokens = 50000L, alpha = 0.5, maxEpochs = 4.0)
-    }),
-
-    // --- LLM ops: the plan applied — deterministic epoch replication
-    //     per source (broadcast plan join + portable-hash fractional
-    //     copy; zero shuffles beyond the one-pass plan aggregation) ---
-    "q_mixture_apply" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val plan = Sampling.mixturePlan(docs, "source", "n_chars",
-        budgetTokens = 50000L, alpha = 0.5, maxEpochs = 4.0)
-      Sampling.applyMixture(docs, "source", "doc_id", plan, seed = 9L)
-        .select(col("doc_id"), col("epoch_copy"))
-    }),
-
-    // --- LLM ops: incremental exact dedup — a new ingest batch
-    //     (source != src0) deduped against the existing corpus snapshot
-    //     (source = src0) via its hash index, then within-batch ---
-    "q_incr_dedup" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val idx = IncrementalDedup.exactIndex(
-        docs.filter(col("source") === "src0"), "text")
-      IncrementalDedup.dedupAgainst(
-          docs.filter(col("source") =!= "src0"), idx, "text", "doc_id")
-        .select(col("doc_id"), col("source"))
-    }),
-
-    // --- LLM ops: the same incremental dedup through the Bloom
-    //     prefilter path — "definitely new" rows skip the anti-join as a
-    //     row-local filter, bloom-positives get exact verification. The
-    //     answer is bit-identical to q_incr_dedup by construction, so the
-    //     oracle is the plain anti-join SQL: a hash-match here proves the
-    //     no-false-negative routing end-to-end ---
-    "q_bloom_incr_dedup" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val idx = IncrementalDedup.exactIndex(
-        docs.filter(col("source") === "src0"), "text")
-      IncrementalDedup.dedupAgainstBloom(
-          docs.filter(col("source") =!= "src0"), idx, "text", "doc_id",
-          numBits = 1 << 13)
-        .select(col("doc_id"), col("source"))
-    }),
-
-    // --- LLM ops: incremental near-dup — batch MinHash sigs probed
-    //     against the corpus signature index via cross-frame LSH bands
-    //     (no oracle: xxhash64 signatures) ---
-    // PORTABLE backend since round 10: the cross-frame probe (new batch
-    // vs corpus signature index) is DuckDB-oracled end to end —
-    // signatures, shared band buckets, agreement threshold
-    "q_incr_neardup" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      def sigs(d: DataFrame) = d.select(col("doc_id").as("id"),
-        Dedup.minHashSignaturePortable(col("text"), n = 3, k = 32)
-          .as("sig"))
-      IncrementalDedup.nearDupAgainst(
-          sigs(docs.filter(col("source") =!= "src0")),
-          sigs(docs.filter(col("source") === "src0")),
-          bands = 8, rowsPerBand = 4, minEstJaccard = 0.5,
-          portable = true)
-        .select(col("new_id"), col("corpus_id"),
-          r6(col("est_jaccard")).as("est_jaccard_micro"))
-    }),
-
-    // --- LLM ops: JSONL round-trip with corrupt-line accounting (the
-    //     pretraining interchange format; text + from_json read, so the
-    //     bad-line audit needs no corpus cache). Two injected garbage
-    //     lines must surface in the corrupt count, never as rows ---
-    "q_jsonl_roundtrip" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      // per-process path: two JVMs against the same dataset (Verify and
-      // Bench in parallel) must not race on one overwrite-then-read dir
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_jsonl_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_" +
-        java.lang.ProcessHandle.current().pid()
-      AuxSources.writeJsonl(
-        docs.select(col("doc_id"), col("text"), col("lang"), col("source")),
-        out)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(out, "zz_corrupt.json"),
-        "{\"doc_id\": oops}\nnot json either\n".getBytes("UTF-8"))
-      val back = AuxSources.readJsonl(s, out,
-        "doc_id BIGINT, text STRING, lang STRING, source STRING")
-      val (good, bad) = AuxSources.jsonlSplit(back)
-      val nBad = bad.count()
-      good.select(col("doc_id"), md5(col("text")).as("text_md5"),
-        lit(nBad).as("n_corrupt"))
-    }),
-
-    // --- Iceberg-style table ops under the DuckDB gate: the final
-    //     snapshot after overwrite -> MERGE INTO (update + insert) ->
-    //     DELETE WHERE must equal the same relational algebra computed
-    //     directly over the source table ---
-    "q_table_merge" -> ((s, dir) => {
-      val root = tableOpsFixture(s, dir)
-      graft.tables.TableOps.read(s, root)
-        .select(col("o_orderkey"), col("o_custkey"),
-          r6(col("o_totalprice")).as("price_micro"))
-    }),
-
-    // --- SCD Type-2 dimension history: init without the %7 keys at
-    //     t=0, one merge batch at t=1000 that doubles %5 balances
-    //     (changed -> close + reopen), repeats the rest verbatim
-    //     (no-op), and introduces the %7 keys (insert). The final
-    //     history must reproduce the relational replay exactly ---
-    "q_scd2" -> ((s, dir) => {
-      val root = tableOpsRoot(dir) + "_scd2"
-      rmTree(root)
-      val dim = Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-      graft.tables.TableOps.scd2Overwrite(
-        dim.filter(col("c_custkey") % 7 =!= 0), root, asOfNs = 0L)
-      val batch = dim.withColumn("c_acctbal",
-        when(col("c_custkey") % 5 === 0, col("c_acctbal") * 2.0)
-          .otherwise(col("c_acctbal")))
-      graft.tables.TableOps.scd2Merge(s, root, batch,
-        Seq("c_custkey"), asOfNs = 1000L)
-      graft.tables.TableOps.read(s, root)
-        .select(col("c_custkey"), col("c_name"),
-          r6(col("c_acctbal")).as("bal_micro"),
-          col("valid_from"), col("valid_to"), col("is_current"))
-    }),
-
-    // --- Iceberg-style time travel: per-snapshot row count + exact
-    //     money sum across the WHOLE version history (v1 base, v2 after
-    //     the merge, v3 after the delete) — each VERSION AS OF read must
-    //     reproduce the state the oracle recomputes from scratch ---
-    "q_table_history" -> ((s, dir) => {
-      val root = tableOpsFixture(s, dir)
-      graft.tables.TableOps.versions(root).map { v =>
-        graft.tables.TableOps.read(s, root, Some(v))
-          .agg(count(lit(1)).as("n_rows"),
-            r6(moneySum(col("o_totalprice"))).as("sum_price_micro"))
-          .select(lit(v.toLong).as("version"), col("n_rows"),
-            col("sum_price_micro"))
-      }.reduce(_ unionByName _)
-    }),
-
-    // --- Iceberg-style Z-order clustering: the rewrite reorganizes file
-    //     layout for two-dimensional data skipping but must be a PURE
-    //     reorganization — the read-back content equals the source
-    //     exactly (the skipping itself is pinned by TableOpsSpec's
-    //     per-file range-narrowing tests) ---
-    "q_table_zorder" -> ((s, dir) => {
-      val root = tableOpsRoot(dir) + "_zo"
-      rmTree(root)
-      val ord = Tables.orders(s, dir)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      graft.tables.TableOps.overwrite(ord, root)
-      graft.tables.TableOps.clusterBy(s, root,
-        Seq("o_custkey", "o_totalprice"))
-      graft.tables.TableOps.read(s, root)
-        .select(col("o_orderkey"), col("o_custkey"),
-          r6(col("o_totalprice")).as("price_micro"))
-    }),
-
-    // --- Iceberg-style dynamic partition overwrite: replace exactly the
-    //     partitions present in the replacement frame, keep the rest ---
-    "q_table_part_overwrite" -> ((s, dir) => {
-      val root = tableOpsRoot(dir) + "_po"
-      rmTree(root)
-      val ord = Tables.orders(s, dir)
-        .select(col("o_orderkey"), col("o_orderpriority"),
-          col("o_totalprice"))
-      graft.tables.TableOps.overwrite(ord, root,
-        partitionBy = Seq("o_orderpriority"))
-      val repl = ord.filter(col("o_orderpriority") === "1-URGENT")
-        .withColumn("o_totalprice", col("o_totalprice") * 0.5)
-      graft.tables.TableOps.overwritePartitions(s, root, repl,
-        Seq("o_orderpriority"))
-      graft.tables.TableOps.read(s, root)
-        .select(col("o_orderkey"), col("o_orderpriority"),
-          r6(col("o_totalprice")).as("price_micro"))
-    }),
-
-    // --- Iceberg-style compaction (rewrite_data_files): a PURE layout
-    //     rewrite — read-back content equals the source row-for-row —
-    //     whose file-count effect is carried as constant columns the
-    //     oracle pins to literal 1 (a failed compaction flips them to 0
-    //     and hash-mismatches) ---
-    "q_table_compact" -> ((s, dir) => {
-      val root = tableOpsRoot(dir) + "_cp"
-      rmTree(root)
-      val ord = Tables.orders(s, dir)
-        .select(col("o_orderkey"), col("o_totalprice"))
-      // 16-way fragmented base snapshot: guarantees files to compact
-      // even at the small verify SFs
-      graft.tables.TableOps.overwrite(ord.repartition(16), root)
-      graft.tables.TableOps.compact(s, root, targetFiles = 2)
-      val before = graft.tables.TableOps.dataFileCount(root, 1)
-      val after = graft.tables.TableOps.dataFileCount(root, 2)
-      graft.tables.TableOps.read(s, root)
-        .select(col("o_orderkey"),
-          r6(col("o_totalprice")).as("price_micro"),
-          lit(if (after < before) 1L else 0L).as("files_dropped"),
-          lit(if (after == 2) 1L else 0L).as("files_at_target"))
-    }),
-
-    // --- Iceberg-style snapshot expiry: after expireSnapshots(keep=2)
-    //     on a three-version history, v1's VERSION AS OF read must FAIL
-    //     (its data files are gone), v2 and v3 must reproduce exactly
-    //     the states the oracle recomputes from scratch ---
-    "q_table_expire" -> ((s, dir) => {
-      val root = tableOpsRoot(dir) + "_ex"
-      rmTree(root)
-      val ord = Tables.orders(s, dir)
-        .select(col("o_orderkey"), col("o_totalprice"))
-      graft.tables.TableOps.overwrite(ord, root)
-      graft.tables.TableOps.deleteWhere(s, root,
-        col("o_totalprice") < 100000.0)
-      graft.tables.TableOps.deleteWhere(s, root,
-        col("o_orderkey") % 2 === 0)
-      graft.tables.TableOps.expireSnapshots(root, keep = 2)
-      import s.implicits._
-      (1 to 3).map { v =>
-        try {
-          val r = graft.tables.TableOps.read(s, root, Some(v))
-            .agg(count(lit(1)).as("n"),
-              r6(moneySum(col("o_totalprice"))).as("m"))
-            .head()
-          (v.toLong, 1L, r.getLong(0), r.getLong(1))
-        } catch { case scala.util.control.NonFatal(_) =>
-          (v.toLong, 0L, 0L, 0L)
-        }
-      }.toDF("version", "readable", "n_rows", "sum_price_micro")
-    }),
-
-    // --- LLM ops: the full modern curation pipeline, end-to-end under
-    //     one DuckDB hash-match: exact dedup -> corpus segment dedup ->
-    //     repetition gate -> quality gate -> sqrt-temperature mixture ---
-    "q_curate_full" -> ((s, dir) => {
-      Curation.curateFull(Tables.documents(s, dir), "doc_id", "text",
-          "source", Curation.FullConfig(segTokens = 3, segMinCopies = 2,
-            maxDupTokenFrac = 0.6, minQuality = 0.3,
-            budgetTokens = 50000L, alpha = 0.5, maxEpochs = 4.0,
-            seed = 0L))
-        .select(col("doc_id"), col("source"), col("epoch_copy"),
-          md5(col("cleaned")).as("cleaned_md5"),
-          r6(col("quality_score")).as("quality_micro"),
-          col("n_tokens_clean"))
-    }),
-
-    // --- LLM ops: fastText-style quality classifier — FULLY ORACLED
-    //     since r16 (was rows-only): train LR on PORTABLE-hashed BoW
-    //     (mix31∘stringKey31 — same accuracy as the Murmur3 production
-    //     face, reproducible in plain SQL) against the planted label
-    //     (quality heuristic at 0.6 — ~50/50 at these SFs), persist the
-    //     LEARNED weights as a per-run parquet fixture, score the
-    //     held-out split with the pure-Column margin fold. The oracle
-    //     re-reads THIS run's weights and replays split, label, fold,
-    //     and the accuracy gate in SQL — any hash, fold-order, or
-    //     weight-persist drift hash-misses. The TRAINING remains an
-    //     iterative ML fit (not SQL-expressible); what graduated is
-    //     everything downstream of the learned weights ---
-    "q_quality_classifier" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).withColumn("label",
-        (TextFunctions.qualityScore(col("text")) >= 0.6).cast("double"))
-      val tagged = Sampling.hashSplitTag(docs, "doc_id", 0.3, seed = 12L)
-      val nTrain = tagged.filter(!col("is_test")).count()
-      val scorer = qClsSharedScorer(s, dir)
-      writeScorer(s, scorer, QClsWeightsDir)
-      val margin = graft.ml.QualityClassifier.marginExpr(col("text"),
-        scorer, Some(QClsSeed))
-      tagged.filter(col("is_test"))
-        .withColumn("__pred", (margin >= 0.0).cast("double"))
-        .agg(count(lit(1)).as("n_test"),
-          sum(when(col("__pred") === col("label"), 1L).otherwise(0L))
-            .as("__correct"))
-        .select(lit("hashed_bow_lr").as("model"),
-          lit(nTrain).as("n_train"), col("n_test"),
-          (col("__correct") >= col("n_test") * lit(0.7))
-            .as("beats_planted"))
-    }),
-
-    // --- LLM ops: the classifier's per-document SCORING face — the
-    //     decision margin per held-out doc, oracled ROW BY ROW (a far
-    //     finer hash surface than the aggregate accuracy gate: one
-    //     mis-hashed token anywhere moves some margin_micro). The
-    //     margin, not the sigmoid, is the gated number: pure +/index
-    //     arithmetic over the persisted weights is bit-identical on
-    //     any IEEE engine folding the same token order, where exp()
-    //     may differ in the last ULP; margin >= 0 IS the prob >= 0.5
-    //     keep decision, also emitted. Shares the per-run trained
-    //     scorer with q_quality_classifier (identical fit by
-    //     construction) but writes its OWN fixture so the gate stays
-    //     self-contained under SPARK_GRAFT_ONLY subsets ---
-    "q_quality_score_oracle" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).withColumn("label",
-        (TextFunctions.qualityScore(col("text")) >= 0.6).cast("double"))
-      val tagged = Sampling.hashSplitTag(docs, "doc_id", 0.3, seed = 12L)
-      val scorer = qClsSharedScorer(s, dir)
-      writeScorer(s, scorer, QScoreWeightsDir)
-      val margin = graft.ml.QualityClassifier.marginExpr(col("text"),
-        scorer, Some(QClsSeed))
-      tagged.filter(col("is_test"))
-        .select(col("doc_id"), r6(margin).as("margin_micro"),
-          (margin >= 0.0).as("keep"))
-    }),
-
-    // --- LLM ops: corpus snapshot diff + per-source churn (derived
-    //     old/new releases: old drops id%7==0, new drops id%5==0 and
-    //     edits id%3==0) ---
-    "q_corpus_diff" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val old = docs.filter(col("doc_id") % 7 =!= 0)
-      val neu = docs.filter(col("doc_id") % 5 =!= 0)
-        .withColumn("text", when(col("doc_id") % 3 === 0,
-          concat(col("text"), lit(" v2"))).otherwise(col("text")))
-      CorpusDiff.diff(old, neu, "doc_id", "text")
-    }),
-
-    // --- LLM ops: mixture drift between releases — per-source share
-    //     shift + Jensen-Shannon contribution (finite on appearing /
-    //     disappearing sources, unlike KL) ---
-    "q_dist_drift" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val old = docs.filter(col("doc_id") % 7 =!= 0)
-      val neu = docs.filter(col("doc_id") % 5 =!= 0)
-      CorpusDiff.distributionDrift(old, neu, "source")
-        .select(col("source"), col("n_old"), col("n_new"),
-          r6(col("old_share")).as("old_share_micro"),
-          r6(col("new_share")).as("new_share_micro"),
-          r6(col("js_contrib") * lit(1000.0)).as("js_milli_micro"))
-    }),
-
-    // --- LLM ops: PSI drift — the model-monitoring industry's number
-    //     next to q_dist_drift's JS: same shares, eps-floored, weight
-    //     is the share DIFFERENCE so every term is >= 0 ---
-    "q_psi_drift" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val old = docs.filter(col("doc_id") % 7 =!= 0)
-      val neu = docs.filter(col("doc_id") % 5 =!= 0)
-      CorpusDiff.psiDrift(old, neu, "source")
-        .select(col("source"), col("n_old"), col("n_new"),
-          r6(col("psi_contrib") * lit(1000.0)).as("psi_milli_micro"))
-    }),
-
-    // --- LLM ops: semantic snapshot drift — per-label embedding
-    //     centroids (exact DECIMAL means) compared by cosine and L2;
-    //     the content-moved check next to q_dist_drift's volume shares ---
-    "q_embed_drift" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val old = emb.filter(col("vec_id") % 7 =!= 0)
-      val neu = emb.filter(col("vec_id") % 5 =!= 0)
-      CorpusDiff.embeddingDrift(old, neu, Seq("label"), "embedding")
-        .select(col("label"), col("n_old"), col("n_new"),
-          r6(col("centroid_cos")).as("cos_micro"),
-          r6(col("centroid_l2")).as("l2_micro"))
-    }),
-
-    "q_corpus_churn" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val old = docs.filter(col("doc_id") % 7 =!= 0)
-      val neu = docs.filter(col("doc_id") % 5 =!= 0)
-        .withColumn("text", when(col("doc_id") % 3 === 0,
-          concat(col("text"), lit(" v2"))).otherwise(col("text")))
-      CorpusDiff.churn(old, neu, "doc_id", "text", "source")
-    }),
-
-    // --- LLM ops: deterministic training-shard assignment (pure
-    //     function of the key — stable under reruns/retries/layout,
-    //     unlike repartition's placement) ---
-    "q_shard_assign" -> ((s, dir) => {
-      Sharding.shardTag(Tables.documents(s, dir), "doc_id", 16,
-          seed = 13L)
-        .groupBy("shard").agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).cast("long").as("sum_chars"))
-    }),
-
-    // --- LLM ops: bag-of-words document fingerprint ---
-    "q_text_fingerprint" -> ((s, dir) => {
-      Tables.documents(s, dir).select(col("doc_id"),
-        TextFunctions.bowFingerprint(col("text")).as("bow_fingerprint"))
-    }),
-
-    // --- LLM ops: token counting + quality signals ---
-    "q_text_stats" -> ((s, dir) => {
-      Tables.documents(s, dir).select(col("doc_id"),
-        TextFunctions.nTokens(col("text")).cast("long").as("n_tokens"),
-        r6(TextFunctions.avgTokenLen(col("text"))).as("avg_token_len_micro"),
-        r6(TextFunctions.stopwordRatio(col("text"))).as("stopword_ratio_micro"),
-        length(col("text")).cast("long").as("n_chars_calc"))
-    }),
-
-    // --- LLM ops: language-ID heuristic (no SQL oracle: marker tables) ---
-    "q_lang_id" -> ((s, dir) => {
-      Tables.documents(s, dir).select(col("doc_id"),
-        TextFunctions.langId(col("text")).as("lang_id"))
-    }),
-
-    // --- LLM ops: MinHash signatures (no SQL oracle: xxhash64). The raw
-    //     array<bigint> is folded to ONE scalar per row: array columns are
-    //     unsortable by the driver's pandas row comparator (round-1 crash),
-    //     and the md5 of the joined signature pins every element anyway.
-    //     Null slots (empty shingle set) map to an explicit sentinel before
-    //     the join — concat_ws silently DROPS nulls, which would make
-    //     signatures differing only in null positions collide. PORTABLE
-    //     backend (mix31 over stringKey31 shingle keys) since round 10,
-    //     so the full signature is DuckDB-oracled; the xxhash64
-    //     production backend stays differentially pinned in DedupSpec
-    //     and exercised by the q_curate LSH face ---
-    "q_minhash_sig" -> ((s, dir) => {
-      Tables.documents(s, dir).select(col("doc_id"),
-        md5(concat_ws(",",
-          transform(
-            Dedup.minHashSignaturePortable(col("text"), n = 3, k = 16),
-            e => coalesce(e.cast("string"), lit("null"))))).as("sig_md5"))
-    }),
-
-    // --- LLM ops: MinHash+LSH banded candidate pairs — the portable
-    //     backend makes the ENTIRE pipeline (signatures, band-fold
-    //     buckets, bucket cap, pair agreement rates) oracle-checkable ---
-    "q_minhash_lsh_pairs" -> ((s, dir) => {
-      Dedup.minHashLshPairsPortable(Tables.documents(s, dir), "doc_id",
-          "text")
-        .select(col("id_a"), col("id_b"), r6(col("est_jaccard"))
-          .as("est_jaccard_micro"))
-    }),
-
-    // --- Governance: measured LSH (b, r) operating point — banded
-    //     candidates vs exact PPJoin-verified Jaccard ground truth,
-    //     confusion counts + precision/recall + the theoretical S-curve
-    //     capture at the threshold. The gate demonstrates the operator's
-    //     own scale contract (Dedup.scala: "runs on a SAMPLE at corpus
-    //     scale — the exact side is worst-case quadratic"): a
-    //     deterministic bernoulliSample feeds the probe, the oracle
-    //     samples with the identical portable hash ---
-    "q_lsh_tuning" -> ((s, dir) => {
-      Dedup.lshOperatingPoint(
-        Sampling.bernoulliSample(Tables.documents(s, dir), "doc_id", 0.5,
-          seed = 11L),
-        "doc_id", "text", n = 3, threshold = 0.5, bands = 8,
-        rowsPerBand = 4)
-    }),
-
-    // --- LLM ops: SimHash near-dup pairs via chunk blocking (rows-only).
-    //     maxDist=3 -> classic 4x16-bit pigeonhole: recall 1.0 by
-    //     construction AND 16-bit bucket keys keep candidate volume
-    //     ~n^2/65536 per chunk. Larger d is supported by the operator
-    //     ((d+1)-chunk blocking) but narrows keys to 64/(d+1) bits and
-    //     degrades toward O(n^2/2^width) candidates. NOTE: the gate ran
-    //     d=10 through round 2 (r1 2.98s / r2 ~3s at sf0.1 — the r2 71s
-    //     entry was q_dedup_jaccard's cache pollution, not simhash);
-    //     d=3 since round 3 is a WORKLOAD change (pairs at hamming 4..10
-    //     no longer emitted), so r3+ bench times for this query are not
-    //     comparable to r1/r2. PORTABLE 62-bit backend since round 10:
-    //     the whole pipeline (fingerprints, chunk keys, bucket cap,
-    //     Hamming filter) is DuckDB-oracled; chunk blocking itself is
-    //     hash-free, so the machinery is shared with the xxhash64
-    //     production face ---
-    "q_simhash_pairs" -> ((s, dir) => {
-      Dedup.simHashPairsPortable(Tables.documents(s, dir), "doc_id",
-          "text", maxDist = 3)
-        .select(col("id_a"), col("id_b"), col("hamming").cast("long")
-          .as("hamming"))
-    }),
-
-    // --- LLM ops: SRP-LSH bucketed ANN on the PORTABLE plane backend
-    //     (round 10) — mix31-derived hyperplane weights are exact
-    //     dyadics, so the oracle recomputes planes, sign signatures,
-    //     band buckets, candidates, and the cosine top-k end to end;
-    //     the Gaussian-plane face stays available (recall spec-pinned
-    //     for both) ---
-    "q_lsh_ann" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("vec"))
-      val dims = emb.select(size(col("vec"))).first().getInt(0)
-      Similarity.lshTopK(emb.filter(col("vec_id") < 10), emb,
-          "vec_id", "vec_id", "vec", "vec", k = 3, dims = dims,
-          portable = true)
-        .select(col("query_id"), col("corpus_id"),
-          col("rank").cast("long").as("rank"),
-          r6(col("cosine")).as("cosine_micro"))
-    }),
-
-    // --- LLM ops: IVF-bucketed ANN (rows-only: xxhash64 centroid seeding
-    //     has no DuckDB twin; recall vs brute force spec-pinned) ---
-    // --- LLM ops: IVF ANN with the portable seeded-row-pick coarse
-    //     quantizer — mix31-ordered draw since round 10, so the pick,
-    //     assignment, probing, and top-k are ALL recomputed by the
-    //     DuckDB oracle (kmeans-centroid face below shares the
-    //     machinery) ---
-    "q_ivf_ann" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("vec"))
-      Similarity.ivfTopK(emb.filter(col("vec_id") < 10), emb,
-          "vec_id", "vec_id", "vec", "vec", k = 3, nCells = 8, nProbe = 3)
-        .select(col("query_id"), col("corpus_id"),
-          col("rank").cast("long").as("rank"),
-          r6(col("cosine")).as("cosine_micro"))
-    }),
-
-    // --- LLM ops: IVF ANN with kmeans-TRAINED centroids as the coarse
-    //     quantizer — cells follow the data's geometry instead of a
-    //     seeded row pick. Fully oracle-checked: deterministic
-    //     centroids (q_kmeans CTEs) + cosine assignment/probing/top-k
-    //     recomputed in SQL ---
-    "q_ivf_kmeans_ann" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("vec"))
-      val cents = Clustering.kmeansCentroids(emb, "vec_id", "vec",
-        k = 8, maxIter = 2)
-      Similarity.ivfTopK(emb.filter(col("vec_id") < 10), emb,
-          "vec_id", "vec_id", "vec", "vec", k = 3, nProbe = 3,
-          centroids = Some(cents))
-        .select(col("query_id"), col("corpus_id"),
-          col("rank").cast("long").as("rank"),
-          r6(col("cosine")).as("cosine_micro"))
-    }),
-
-    // --- LLM ops: the composite quality score alone IS oracle-portable
-    //     (split/list/char-class regex only — no lookahead); the bpe-ish
-    //     token count stays rows-only in q_text_quality below ---
-    "q_quality_score" -> ((s, dir) => {
-      Tables.documents(s, dir).select(col("doc_id"),
-        r6(TextFunctions.qualityScore(col("text"))).as("quality_micro"))
-    }),
-
-    // --- LLM ops: composite quality score + BPE-ish token count
-    //     (rows-only: the (?=...) lookahead has no RE2 equivalent) ---
-    // r10: full oracle — the BPE-ish count's lookahead-free closed form
-    // and the mix31-chain fingerprint are both SQL-expressible (the
-    // xxhash64 fingerprint face stays the production default;
-    // TextFunctionsSpec pins the differentials)
-    "q_text_quality" -> ((s, dir) => {
-      Tables.documents(s, dir).select(col("doc_id"),
-        r6(TextFunctions.qualityScore(col("text"))).as("quality_micro"),
-        TextFunctions.nTokensBpeIsh(col("text")).cast("long")
-          .as("n_tokens_bpeish"),
-        TextFunctions.seqFingerprintPortable(col("text"))
-          .as("seq_fingerprint"))
-    }),
-
-    // --- LLM ops: Unicode canonicalization before dedup/hashing — the
-    //     native NFC normalizer expression (composed == decomposed
-    //     accents) + the full dedup-prep chain (NBSP-aware whitespace
-    //     collapse, Cc/Cf strip, lower, trim). The corpus is ASCII, so
-    //     each doc is decorated with deterministic doc_id-derived
-    //     unicode trouble (combining acute, precomposed é, NBSP, ZWSP,
-    //     tab, a control byte) that BOTH engines synthesize from the
-    //     same code points; the normalized strings hash-match only if
-    //     the two engines' NFC and category classes agree ---
-    "q_text_normalize" -> ((s, dir) => {
-      val dec = concat(
-        // decomposed e + COMBINING ACUTE U+0301 (NFC composes to U+00E9)
-        when(col("doc_id") % 3 === 0, lit("Cafe\u0301 ")).otherwise(lit("")),
-        // precomposed U+00E9 + NBSP (already NFC; NBSP folds to space)
-        when(col("doc_id") % 3 === 1, lit("Caf\u00E9\u00A0")).otherwise(lit("")),
-        // ZWSP (Cf, stripped), tab (collapsed), SOH control (Cc, stripped)
-        when(col("doc_id") % 2 === 0, lit("A\u200BB\tC\u0001 "))
-          .otherwise(lit("")),
-        // VT U+000B: in Java's \s but NOT RE2's — the explicit
-        // whitespace class must make it a separator on BOTH engines
-        when(col("doc_id") % 5 === 0, lit("V\u000BW "))
-          .otherwise(lit("")),
-        col("text"))
-      Tables.documents(s, dir).select(col("doc_id"),
-        length(dec).as("n_raw"),
-        TextFunctions.normalizeUnicode(dec, "NFC").as("nfc"),
-        length(TextFunctions.normalizeUnicode(dec, "NFC")).as("n_nfc"),
-        TextFunctions.canonicalizeForDedup(dec).as("canonical"))
-    }),
-
-    // --- Multimodal: REAL image-header parse over BINARY payloads
-    //     (r12, judge item 6) — per doc a well-formed PNG (even doc_id)
-    //     or baseline JFIF JPEG (odd; every third carries an extra APP1
-    //     segment so the length-prefixed segment walk is exercised, with
-    //     a doc-varying APP0 pad so SOF never sits at a fixed offset) is
-    //     synthesized with doc-derived dimensions, then the dimensions
-    //     are read BACK off the bytes by ImageHeaders.parse — pure
-    //     public-format byte arithmetic the DuckDB twin replays
-    //     hex-digit-for-hex-digit. Zero UDFs, zero shuffles; the stub
-    //     codec surface (withMetadata/extractFeatures/resize/
-    //     sampleFrames) stays spec-pinned in MultimodalSpec ---
-    "q_mm_features" -> ((s, dir) => {
-      import graft.multimodal.ImageHeaders
-      val d = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"))
-        .withColumn("__w", (lit(16L) + pmod(col("doc_id"), lit(2048L)))
-          .cast("long"))
-        .withColumn("__h", (lit(16L) + pmod(col("doc_id") * 7L,
-          lit(2048L))).cast("long"))
-        .withColumn("__pad", pmod(col("doc_id"), lit(64L)).cast("long"))
-      val content = when(pmod(col("doc_id"), lit(2L)) === 0L,
-          ImageHeaders.pngBytes(col("__w"), col("__h"), col("text")))
-        .otherwise(ImageHeaders.jpegBytes(col("__w"), col("__h"),
-          col("__pad"), pmod(col("doc_id"), lit(3L)) === 0L, col("text")))
-      d.withColumn("__content", content)
-        .withColumn("__meta", ImageHeaders.parse(col("__content")))
-        .select(col("doc_id"), col("__meta.format").as("format"),
-          col("__meta.width").cast("long").as("width"),
-          col("__meta.height").cast("long").as("height"),
-          length(col("__content")).cast("long").as("n_bytes"))
-    }),
-
-    // --- Multimodal: REAL WAV/RIFF audio-header parse (r13, the audio
-    //     twin of q_mm_features) — per doc a canonical PCM WAV with
-    //     doc-derived channels / rate / bit depth (every third doc
-    //     carries a doc-varying LIST chunk so the little-endian
-    //     length-prefixed chunk walk is exercised) is synthesized, then
-    //     channels / rate / bits / data size / integral duration are
-    //     read BACK off the bytes by WavHeaders.parse. Zero UDFs, zero
-    //     shuffles; the DuckDB twin replays the same hex walk ---
-    "q_mm_audio" -> ((s, dir) => {
-      import graft.multimodal.WavHeaders
-      val d = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"))
-        .withColumn("__ch", lit(1L) + pmod(col("doc_id"), lit(2L)))
-        .withColumn("__rate",
-          lit(8000L) + pmod(col("doc_id"), lit(5L)) * 1000L)
-        .withColumn("__bits", lit(8L) + pmod(col("doc_id"), lit(2L)) * 8L)
-        .withColumn("__pad", pmod(col("doc_id"), lit(32L)) * 2L)
-      val content = WavHeaders.wavBytes(col("__ch"), col("__rate"),
-        col("__bits"), col("__pad"), pmod(col("doc_id"), lit(3L)) === 0L,
-        col("text"))
-      d.withColumn("__content", content)
-        .withColumn("__meta", WavHeaders.parse(col("__content")))
-        .select(col("doc_id"),
-          col("__meta.format").as("format"),
-          col("__meta.channels").cast("long").as("channels"),
-          col("__meta.sample_rate").as("sample_rate"),
-          col("__meta.bits").cast("long").as("bits"),
-          col("__meta.data_bytes").as("data_bytes"),
-          col("__meta.duration_ms").as("duration_ms"),
-          length(col("__content")).cast("long").as("n_bytes"))
-    }),
-
-    // --- LLM ops: SimHash fingerprints (no SQL oracle: xxhash64) ---
-    // --- LLM ops: SimHash fingerprint on the PORTABLE 62-bit backend
-    //     (round 10) — the per-token mix31 draws are recomputed by the
-    //     DuckDB oracle bit-for-bit; the xxhash64 64-bit face stays the
-    //     production default (DedupSpec differential) ---
-    "q_simhash" -> ((s, dir) => {
-      Tables.documents(s, dir).select(col("doc_id"),
-        Dedup.simHash64Portable(col("text")).as("simhash62"))
-    }),
-
-    // --- LLM ops: brute-force cosine top-k ANN ---
-    "q_ann_cosine" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("vec"))
-      val queries = emb.filter(col("vec_id") < 10)
-      Similarity.bruteForceTopK(queries, emb, "vec_id", "vec_id",
-          "vec", "vec", k = 3)
-        .select(col("query_id"), col("rank").cast("long").as("rank"),
-          col("corpus_id"), r6(col("cosine")).as("cosine_micro"))
-    }),
-
-    // --- LLM ops: hard-negative mining — per anchor, the top-5 most
-    //     similar vectors with a DIFFERENT label (near-boundary
-    //     negatives for contrastive training); same TopKAgg ranking as
-    //     q_ann_cosine with the label predicate filtered pre-aggregate ---
-    "q_hard_negatives" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("label"),
-          transform(col("embedding"), x => x.cast("double")).as("vec"))
-      val anchors = emb.filter(col("vec_id") < 10)
-      Similarity.hardNegatives(anchors, emb, "vec_id", "vec_id",
-          "vec", "vec", "label", "label", k = 5)
-        .select(col("query_id"), col("rank").cast("long").as("rank"),
-          col("corpus_id"), r6(col("cosine")).as("cosine_micro"))
-    }),
-
-    // --- LLM ops: embedding near-dup pairs (cosine >= 0.95). At gate SFs
-    //     the corpus is under nearDupPairs' broadcastLimit so the EXACT
-    //     block-nested-loop runs; past the limit the operator switches to
-    //     SRP-bucketed candidates + exact verify (equality spec-pinned) ---
-    "q_embed_neardup" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("vec"))
-      Similarity.nearDupPairs(emb, "vec_id", "vec", 0.95)
-        .select(col("id_a"), col("id_b"), r6(col("cosine")).as("cosine_micro"))
-    }),
-
-    // --- M6: t-values + adjusted R^2 for the M5 simple OLS, closed-form
-    //     power sums on both sides (chunk_pipeline.py:201-243) ---
-    "q_m6_tvalues" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val x = col("l_quantity"); val y = col("l_extendedprice")
-      val g = li.groupBy(col("l_returnflag")).agg(
-        count(lit(1)).cast("double").as("n"),
-        sum(x).as("sx"), sum(y).as("sy"), sum(x * x).as("sxx"),
-        sum(x * y).as("sxy"), sum(y * y).as("syy"))
-      val sxxC = col("sxx") - col("sx") * col("sx") / col("n")
-      val tss = col("syy") - col("sy") * col("sy") / col("n")
-      val slope = (col("sxy") - col("sx") * col("sy") / col("n")) / sxxC
-      val icept = (col("sy") - slope * col("sx")) / col("n")
-      val rss = col("syy") - icept * col("sy") - slope * col("sxy")
-      val sigma2 = rss / (col("n") - 2)
-      g.select(col("l_returnflag"),
-        r6(slope / sqrt(sigma2 / sxxC)).as("t_slope_micro"),
-        r6(icept / sqrt(sigma2 * col("sxx") / (col("n") * sxxC)))
-          .as("t_icept_micro"),
-        r6(lit(1.0) - (rss / tss) * (col("n") - 1) / (col("n") - 2))
-          .as("adj_r2_micro"),
-        col("n").cast("long").as("n"))
-    }),
-
-    // --- A4 aggressiveness variant: conditional weighted OI by the
-    //     reference's agg_low/agg_mid/agg_high selection
-    //     (order_imbalance.py:419-432): low = passively-priced given the
-    //     predicted direction, mid = exactly at the half-spread, high =
-    //     aggressively priced. pred_dir from linenumber parity, agg_ratio
-    //     in [0,1] from the discount ---
-    "q_a4_agg_oi" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-        .withColumn("pred_dir",
-          when(col("l_linenumber") % 2 === 0, 1).otherwise(-1))
-        .withColumn("agg_ratio", col("l_discount") * 10.0)
-      val low = (col("pred_dir") === 1 && col("agg_ratio") < 0.5) ||
-        (col("pred_dir") === -1 && col("agg_ratio") > 0.5)
-      val mid = col("agg_ratio") === 0.5
-      val high = (col("pred_dir") === 1 && col("agg_ratio") > 0.5) ||
-        (col("pred_dir") === -1 && col("agg_ratio") < 0.5)
-      def woi(cond: Column, name: String): Column = {
-        val num = sum(when(cond, col("l_extendedprice") *
-          (lit(1.0) - lit(2.0) * col("l_discount"))).otherwise(0.0))
-        val den = sum(when(cond, col("l_extendedprice")).otherwise(0.0))
-        r6(num / when(den =!= 0.0, den)).as(name)
-      }
-      li.groupBy(col("l_returnflag")).agg(
-        woi(low, "oi_agg_low_micro"), woi(mid, "oi_agg_mid_micro"),
-        woi(high, "oi_agg_high_micro"))
-    }),
-
-    // --- P5: sentinel-quote validity filter (EDA.ipynb cell 25; LOBSTER
-    //     one-sided-book sentinels +/-9999999999). Quotes synthesized
-    //     deterministically; Microstructure.validQuote does the tagging ---
-    "q_p5_sentinel" -> ((s, dir) => {
-      val ev = eventsNs(s, dir)
-        .withColumn("ask", when(col("event_id") % 97 === 0,
-          lit(9999999999L).cast("double")).otherwise(col("value") + 1.0))
-        .withColumn("bid", when(col("event_id") % 89 === 0,
-          lit(-9999999999L).cast("double")).otherwise(col("value") - 1.0))
-      ev.filter(Microstructure.validQuote(col("ask"), col("bid")))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), moneySum(col("value")).as("sum_value"))
-    }),
-
-    // --- P8: outside-spread direction remap
-    //     (prediction_ML_pipeline.py:247-262): agg_ratio <= 0 -> forced buy
-    //     (dir 1, prob 1), >= 1 -> forced sell (dir -1, prob 0), inside the
-    //     spread keeps the model output. agg_ratio lands in
-    //     {-0.5, 0, 0.5, 1} by construction, covering every branch ---
-    "q_p8_outside_spread" -> ((s, dir) => {
-      val ev = eventsNs(s, dir)
-        .withColumn("bid", col("value"))
-        .withColumn("ask", col("value") + 2.0)
-        .withColumn("price",
-          col("value") - 1.0 + (col("event_id") % 4).cast("double"))
-      val tagged = ev.withColumn("agg_ratio",
-        Microstructure.aggRatio(col("price"), col("ask"), col("bid")))
-      tagged.select(col("event_id"),
-        when(col("agg_ratio") <= 0, 1).when(col("agg_ratio") >= 1, -1)
-          .otherwise(side(col("event_type"))).cast("long").as("pred_dir"),
-        r6(when(col("agg_ratio") <= 0, 1.0).when(col("agg_ratio") >= 1, 0.0)
-          .otherwise(0.5)).as("pred_prob_micro"))
-    }),
-
-    // --- F2: Cont-style quote-change OFI e_n (EDA_SPY.ipynb cells 22-24):
-    //     sentinel filter -> per-user quote changes vs the previous quote
-    //     -> e_n indicator arithmetic -> 10 s resample (sum e_n, first
-    //     midprice) -> midprice diff across bins. Quotes synthesized on a
-    //     quarter-tick integer grid so zero price changes (both
-    //     indicators firing) actually occur and every sum is exact in
-    //     double. One keyed window per stage — no global window ---
-    "q_f2_cont_ofi" -> ((s, dir) => {
-      val q = eventsNs(s, dir)
-        .withColumn("ask", when(col("event_id") % 97 === 0,
-          lit(9999999999L).cast("double"))
-          .otherwise(lit(100.0) + (col("event_id") % 7).cast("double") * 0.25))
-        .withColumn("bid", when(col("event_id") % 89 === 0,
-          lit(-9999999999L).cast("double"))
-          .otherwise(lit(99.0) + (col("event_id") % 5).cast("double") * 0.25))
-        .withColumn("bid_size", (lit(100L) + col("event_id") % 50).cast("double"))
-        .withColumn("ask_size", (lit(100L) + col("event_id") % 37).cast("double"))
-        .filter(Microstructure.validQuote(col("ask"), col("bid")))
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_ns"), col("event_id"))
-      val lagged = q.select(col("user_id"), col("ts_ns"), col("event_id"),
-        col("ask"), col("bid"), col("ask_size"), col("bid_size"),
-        lag(col("ask"), 1).over(w).as("p_ask"),
-        lag(col("bid"), 1).over(w).as("p_bid"),
-        lag(col("ask_size"), 1).over(w).as("p_ask_size"),
-        lag(col("bid_size"), 1).over(w).as("p_bid_size"))
-      val binned = lagged
-        .withColumn("en", Microstructure.contOfi(
-          col("bid"), col("ask"), col("bid_size"), col("ask_size"),
-          col("p_bid"), col("p_ask"), col("p_bid_size"), col("p_ask_size")))
-        .withColumn("mid", Microstructure.midprice(col("ask"), col("bid")))
-        .withColumn("bin_ns", TimeBins.floorNs(col("ts_ns"), S10))
-      val wB = Window.partitionBy(col("user_id"), col("bin_ns"))
-        .orderBy(col("ts_ns"), col("event_id"))
-      val agg = binned.withColumn("__rn", row_number().over(wB))
-        .groupBy(col("user_id"), col("bin_ns"))
-        .agg(sum(col("en")).as("en_sum"),
-          max(when(col("__rn") === 1, col("mid"))).as("mid_first"))
-      val wU = Window.partitionBy(col("user_id")).orderBy(col("bin_ns"))
-      agg.select(col("user_id"), col("bin_ns"),
-        r6(col("en_sum")).as("en_micro"),
-        r6(col("mid_first")).as("mid_micro"),
-        r6(col("mid_first") - lag(col("mid_first"), 1).over(wU))
-          .as("dmid_micro"))
-    }),
-
-    // --- J1: positional 1:1 alignment of two parallel streams (the
-    //     reference aligns message/orderbook files row-by-row,
-    //     Ingest.scala J1): i-th click joined to i-th view per user ---
-    "q_j1_align" -> ((s, dir) => {
-      val ev = eventsNs(s, dir)
-      def stream(t: String, p: String): DataFrame = {
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts_ns"), col("event_id"))
-        ev.filter(col("event_type") === t)
-          .select(col("user_id"), col("event_id").as(s"${p}_id"),
-            col("value").as(s"${p}_value"),
-            row_number().over(w).cast("long").as("rn"))
-      }
-      stream("click", "m").join(stream("view", "q"), Seq("user_id", "rn"))
-        .select(col("user_id"), col("rn"), col("m_id"), col("q_id"),
-          r6(col("m_value") - col("q_value")).as("diff_micro"))
-    }),
-
-    // --- S5: Fama-French factor CSV parse (order_imbalance.py:116-129).
-    //     The driver ships no CSV table, so the gate writes a fixed
-    //     Ken-French-layout fixture (banners, yyyyMMdd dates, trailing
-    //     annual section) and both engines parse THE SAME FILE ---
-    "q_s5_ff_csv" -> ((s, dir) => {
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(FfFixturePath),
-        FfFixtureCsv.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      graft.sources.AuxSources.ffFactorsCsv(s, FfFixturePath)
-        .select(col("date"), col("SMB").as("smb"), col("HML").as("hml"),
-          col("RF").as("rf"), col("CMA").as("cma"), col("RMW").as("rmw"))
-    }),
-
-    // --- M5 full design matrix (EP1, chunk_pipeline.py:271-304): daily
-    //     returns regressed on OI + two factor columns + momentum lag,
-    //     composed through Returns.addFactors + Regression.olsByGroup.
-    //     Spark solves via QR on distributed power sums; the oracle solves
-    //     the same normal equations via literal Cramer expansion ---
-    "q_m5_full" -> ((s, dir) => {
-      val daily = eventsNs(s, dir)
-        .withColumn("day", expr(s"ts_ns div $DAY"))
-        .groupBy(col("user_id"), col("day"))
-        .agg(sum(side(col("event_type")) * col("value")).as("ret"),
-          sum(col("value")).as("vsum"))
-        .withColumn("oi", col("ret") / when(col("vsum") =!= 0.0, col("vsum")))
-        .withColumn("date", col("day"))
-      // deterministic per-day factor table (FF stand-in), broadcast-joined
-      // through the same operator the EP1 pipeline uses
-      val ff = daily.select(col("date")).distinct()
-        .withColumn("f1", ((col("date") % 5) - 2) / 10.0)
-        .withColumn("f2", ((col("date") % 7) - 3) / 100.0)
-      val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
-      val panel = graft.domain.Returns.addFactors(daily, ff)
-        .withColumn("mom", lag(col("ret"), 1).over(w))
-        .withColumn("fut_ret", lead(col("ret"), 1).over(w))
-        .filter(col("fut_ret").isNotNull && col("oi").isNotNull &&
-          col("mom").isNotNull)
-      val fit = Regression.olsByGroup(panel, "fut_ret",
-        Seq("oi", "f1", "f2", "mom"), Nil).head
-      def micro(v: Double): Long = math.floor(v * 1e6 + 0.5).toLong
-      import s.implicits._
-      Seq((micro(fit.intercept), micro(fit.coefs(0)), micro(fit.coefs(1)),
-        micro(fit.coefs(2)), micro(fit.coefs(3)), fit.n))
-        .toDF("b0_micro", "b_oi_micro", "b_f1_micro", "b_f2_micro",
-          "b_mom_micro", "n")
-    }),
-
-    // --- P7: NaN/±inf scrub (chunk_pipeline.py:325-326 semantics: bad
-    //     values -> 0.0; dirt synthesized deterministically) ---
-    "q_p7_scrub" -> ((s, dir) => {
-      val dirty = eventsNs(s, dir).withColumn("v",
-        when(col("event_id") % 101 === 0, lit(Double.NaN))
-          .when(col("event_id") % 103 === 0, lit(Double.PositiveInfinity))
-          .when(col("event_id") % 107 === 0, lit(Double.NegativeInfinity))
-          .otherwise(col("value")))
-      val flagged = dirty.withColumn("bad",
-        isnan(col("v")) || abs(col("v")) === Double.PositiveInfinity)
-      flagged
-        .withColumn("v",
-          when(col("bad"), 0.0).otherwise(coalesce(col("v"), lit(0.0))))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("bad"), 1L).otherwise(0L)).as("n_scrubbed"),
-          moneySum(col("v")).as("sum_clean"))
-    }),
-
-    // --- P9: month-cutoff filter: keep calendar months (UTC) up to the
-    //     midpoint of the observed range — a real filter at sf>=0.01 and
-    //     still non-degenerate when one month spans the whole SF ---
-    "q_p9_month_cutoff" -> ((s, dir) => {
-      val t = eventsNs(s, dir)
-        // integer µs division (double division would round ns near 2^53)
-        .withColumn("ts_us", expr("ts_ns div 1000"))
-        .withColumn("y", year(timestamp_micros(col("ts_us"))).cast("long"))
-        .withColumn("m", month(timestamp_micros(col("ts_us"))).cast("long"))
-        .withColumn("ym", col("y") * 12 + col("m"))
-      val mx = t.agg(expr("(min(ym) + max(ym)) div 2").as("ym_cut"))
-      t.crossJoin(broadcast(mx))
-        .filter(col("ym") <= col("ym_cut"))
-        .groupBy(col("y"), col("m"))
-        .agg(count(lit(1)).as("n"), moneySum(col("value")).as("sum_value"))
-    }),
-
-    // --- J4: binned-panel equi-join — per-user bin OI joined to the
-    //     all-users (market) bin OI at the same delta (Oi.scala J4 shape).
-    //     Decimal sums inside the ratio: exact, order-independent ---
-    "q_j4_binned_panel" -> ((s, dir) => {
-      val ev = eventsNs(s, dir)
-        .withColumn("bin_ns", TimeBins.floorNs(col("ts_ns"), H * 6))
-      def oi(df: DataFrame, keys: Seq[Column], name: String): DataFrame = {
-        val num = sum((side(col("event_type")) * col("value"))
-          .cast("decimal(18,4)")).cast("double")
-        val den = sum(col("value").cast("decimal(18,4)")).cast("double")
-        df.groupBy(keys: _*)
-          .agg((num / when(den =!= 0.0, den)).as(name))
-      }
-      val user = oi(ev, Seq(col("bin_ns"), col("user_id")), "user_oi")
-      val mkt = oi(ev, Seq(col("bin_ns")), "mkt_oi")
-      user.join(mkt, Seq("bin_ns"))
-        .select(col("bin_ns"), col("user_id"),
-          r6(col("user_oi")).as("user_oi_micro"),
-          r6(col("mkt_oi")).as("mkt_oi_micro"))
-    }),
-
-    // --- A15: incremental OLS moments — olsByGroup's one-pass power-sum
-    //     accumulation per group; oracle solves the same closed form ---
-    "q_a15_inc_ols" -> ((s, dir) => {
-      val input = eventsNs(s, dir).withColumn("x",
-        (col("ts_ns") % lit(86400L * 1000000000L)).cast("double") / lit(1e9))
-      val fits = Regression.olsByGroup(input, "value", Seq("x"),
-        Seq("event_type"))
-      def micro(v: Double): Long = math.floor(v * 1e6 + 0.5).toLong
-      import s.implicits._
-      fits.map(f => (f.group(0).asInstanceOf[String], micro(f.coefs(0)),
-          micro(f.intercept), f.n))
-        .toDF("event_type", "slope_micro", "icept_micro", "n")
-    }),
-
-    // --- S8: gzip CSV source (native .gz codec on both engines; fixture
-    //     written by the gate, parsed by both) ---
-    "q_s8_gzip_csv" -> ((s, dir) => {
-      val out = new java.util.zip.GZIPOutputStream(
-        new java.io.FileOutputStream(GzFixturePath))
-      out.write(GzFixtureCsv.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      out.close()
-      s.read.schema("ticker STRING, price DOUBLE, qty BIGINT")
-        .option("header", "false").csv(GzFixturePath)
-    }),
-
-    // --- S9: CSV sink round-trip — writeCsv (header, overwrite-per-folder,
-    //     prediction_ML_pipeline.py:366-374), read back by both engines ---
-    "q_s9_csv_sink" -> ((s, dir) => {
-      val path = CsvSinkDir
-      val agg = eventsNs(s, dir).groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"))
-      // one part file: the oracle's glob must not see empty parts
-      graft.sources.AuxSources.writeCsv(agg.coalesce(1), path)
-      s.read.schema("event_type STRING, n BIGINT")
-        .option("header", "true").csv(path)
-    }),
-
-    // --- S11: trading calendar (weekdays minus holidays, generated
-    //     distributedly; trading_strategy.py:114-120) ---
-    "q_s11_trading_calendar" -> ((s, dir) => {
-      graft.sources.AuxSources.tradingDays(s, "2024-01-01", "2024-06-30",
-        Seq("2024-01-15", "2024-02-19"))
-    }),
-
-    // --- M9: confusion matrix (EDA_ML.ipynb cells 11-16) over a
-    //     deterministic prediction rule ---
-    "q_m9_confusion" -> ((s, dir) => {
-      val preds = eventsNs(s, dir)
-        .withColumn("actual", side(col("event_type")).cast("long"))
-        .withColumn("pred",
-          when(col("event_id") % 3 === 0, -1L).otherwise(1L))
-      graft.ml.DirectionModel.confusionMatrix(preds, "actual", "pred")
-    }),
-
-    // --- M9 extension: Cohen's kappa — chance-corrected agreement on
-    //     the same deterministic (actual, pred) frame as q_m9_confusion;
-    //     all inputs integer counts, so po/pe/kappa are identical double
-    //     arithmetic cross-engine ---
-    "q_kappa" -> ((s, dir) => {
-      val preds = eventsNs(s, dir)
-        .withColumn("actual", side(col("event_type")).cast("long"))
-        .withColumn("pred",
-          when(col("event_id") % 3 === 0, -1L).otherwise(1L))
-      graft.ml.DirectionModel.cohenKappa(preds, "actual", "pred")
-        .select(col("n"), r6(col("po")).as("po_micro"),
-          r6(col("pe")).as("pe_micro"),
-          r6(col("kappa")).as("kappa_micro"))
-    }),
-
-    // --- M9 extension: calibration/reliability bins. The probe score
-    //     is built on a DYADIC grid (hash/2^20 halved, quarter-weight
-    //     label, eighth offset), so every bin's double sum is exact and
-    //     order-independent — mean_p gates bit-for-bit cross-engine ---
-    "q_calibration" -> ((s, dir) => {
-      val preds = calibrationFrame(eventsNs(s, dir))
-      graft.ml.DirectionModel.calibrationBins(preds, "p", "label")
-        .select(col("bin"), col("n"), col("n_pos"),
-          r6(col("mean_p")).as("mean_p_micro"),
-          r6(col("frac_pos")).as("frac_pos_micro"))
-    }),
-
-    // --- dependence probe: mutual information between event_type and
-    //     a user segment — one joint-count shuffle, pico-nat-quantized
-    //     term sum (order-independent, engine-exact) ---
-    "q_mutual_info" -> ((s, dir) => {
-      val ev = eventsNs(s, dir)
-        .withColumn("seg", pmod(col("user_id"), lit(8L)))
-      DistTests.mutualInformation(ev, "event_type", "seg")
-    }),
-
-    // --- dependence probe: chi-square independence test + Cramér's V
-    //     on the same contingency machinery (zero cells densified) ---
-    "q_chi_square" -> ((s, dir) => {
-      val ev = eventsNs(s, dir)
-        .withColumn("seg", pmod(col("user_id"), lit(8L)))
-      DistTests.chiSquare(ev, "event_type", "seg")
-    }),
-
-    // --- M9 extension: per-segment ROC-AUC via the Mann-Whitney
-    //     identity (tie-averaged ranks; ONE ordered-window shuffle) ---
-    "q_auc" -> ((s, dir) => {
-      val preds = calibrationFrame(eventsNs(s, dir))
-        .withColumn("seg", pmod(col("user_id"), lit(4L)))
-      graft.ml.DirectionModel.rocAuc(preds, "p", "label", Seq("seg"))
-        .select(col("seg"), col("n_pos"), col("n_neg"),
-          r6(col("auc")).as("auc_micro"))
-    }),
-
-    // --- §2.10: streaming calibration — the SAME reliability
-    //     aggregation maintained BY the streaming engine (complete
-    //     mode; bounded state: ≤ nBins groups of sums/counts). Counts
-    //     and the exact dyadic sums add across micro-batches, so the
-    //     stream equals the batch table bit-for-bit and the batch
-    //     oracle gates the streaming engine itself ---
-    // --- §2.10: streaming confusion matrix — counts are algebraic, so
-    //     the complete-mode stream aggregate equals the batch operator
-    //     exactly and the batch oracle gates the streaming engine ---
-    "q_stream_confusion" -> ((s, dir) => {
-      val schema = Tables.events(s, dir).schema
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-      val ev = Tables.tsToNs(stream).withColumnRenamed("ts", "ts_ns")
-      val preds = ev
-        .withColumn("actual", side(col("event_type")).cast("long"))
-        .withColumn("pred",
-          when(col("event_id") % 3 === 0, -1L).otherwise(1L))
-      val cm = graft.ml.DirectionModel.confusionMatrix(preds, "actual",
-        "pred")
-      withStatePartitions(s, 8) {
-        graft.streaming.StreamingOi.replayComplete(cm,
-          "graft_stream_conf_" + graft.streaming.StreamingOi.nextSinkId())
-      }
-    }),
-
-    "q_stream_calibration" -> ((s, dir) => {
-      val schema = Tables.events(s, dir).schema
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-      val preds = calibrationFrame(
-        Tables.tsToNs(stream).withColumnRenamed("ts", "ts_ns"))
-      val bins = graft.ml.DirectionModel.calibrationBins(preds, "p",
-        "label")
-      withStatePartitions(s, 8) {
-        graft.streaming.StreamingOi.replayComplete(bins,
-          "graft_stream_cal_" + graft.streaming.StreamingOi.nextSinkId())
-      }
-        .select(col("bin"), col("n"), col("n_pos"),
-          r6(col("mean_p")).as("mean_p_micro"),
-          r6(col("frac_pos")).as("frac_pos_micro"))
-    }),
-
-    // --- M13: per-row regression diagnostics (leverage, standardized
-    //     residual, Cook's D; order_imbalance.py:603-670). The fit scalars
-    //     are computed with the SAME closed-form arithmetic as the oracle
-    //     (shared-bit inputs), then Regression.diagnostics does the
-    //     distributed per-row pass ---
-    "q_m13_diagnostics" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val x = col("l_quantity"); val y = col("l_extendedprice")
-      val g = li.agg(count(lit(1)).cast("double").as("n"),
-        sum(x).as("sx"), sum(y).as("sy"), sum(x * x).as("sxx"),
-        sum(x * y).as("sxy"), sum(y * y).as("syy")).collect()(0)
-      val (n, sx, sy, sxx, sxy, syy) = (g.getDouble(0), g.getDouble(1),
-        g.getDouble(2), g.getDouble(3), g.getDouble(4), g.getDouble(5))
-      // identical op order to the oracle SQL (bit-equal given equal sums)
-      val slope = (sxy - sx * sy / n) / (sxx - sx * sx / n)
-      val icept = (sy - slope * sx) / n
-      val det = n * sxx - sx * sx
-      val sigma2 = (syy - icept * sy - slope * sxy) / (n - 2)
-      val fit = Regression.OlsFit(Nil, icept, Array(slope), Array.empty,
-        Double.NaN, Double.NaN, Double.NaN, n.toLong,
-        xtxInv = Array(sxx / det, -sx / det, -sx / det, n / det),
-        sigma2 = sigma2)
-      Regression.diagnostics(li, "l_extendedprice", Seq("l_quantity"), fit)
-        .select(col("l_orderkey"),
-          col("l_linenumber").cast("long").as("l_linenumber"),
-          r6(col("residual")).as("residual_micro"),
-          r6(col("leverage") * 1e3).as("leverage_milli_micro"),
-          r6(col("std_residual")).as("std_resid_micro"),
-          r6(col("cooks_d") * 1e3).as("cooks_milli_micro"))
-    }),
-
-    // --- W9 PACF: Durbin-Levinson on the per-series ACF vector
-    //     (Stats.pacfFromAcf, driver-side over 150 tiny rows); the oracle
-    //     spells the k=2 recursion closed-form ---
-    "q_w9_pacf" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_ns"), col("event_id"))
-      val withLags = eventsNs(s, dir).select(col("user_id"), col("value"),
-        lag(col("value"), 1).over(w).as("l1"),
-        lag(col("value"), 2).over(w).as("l2"))
-      val acfs = withLags.groupBy(col("user_id")).agg(
-        corr(col("value"), col("l1")).as("acf1"),
-        corr(col("value"), col("l2")).as("acf2")).collect()
-      def micro(v: Double): Option[Long] =
-        if (v.isNaN) None else Some(math.floor(v * 1e6 + 0.5).toLong)
-      import s.implicits._
-      acfs.toSeq.map { r =>
-        if (r.isNullAt(1) || r.isNullAt(2)) (r.getLong(0), None, None)
-        else {
-          val p = Stats.pacfFromAcf(Seq(r.getDouble(1), r.getDouble(2)))
-          (r.getLong(0), micro(p(0)), micro(p(1)))
-        }
-      }.toDF("user_id", "pacf1_micro", "pacf2_micro")
-    }),
-
-    // --- S6 + market-excess returns: per-user bin panel vs the all-users
-    //     ("SPY") bin panel through Returns.addLogReturns +
-    //     Returns.addExcessVsSpy ---
-    "q_s6_excess_vs_spy" -> ((s, dir) => {
-      val ev = eventsNs(s, dir)
-        .withColumn("bin_ns", TimeBins.floorNs(col("ts_ns"), H * 6))
-      def binPanel(df: DataFrame, keys: Seq[Column]): DataFrame =
-        df.groupBy(keys: _*).agg(
-          min_by(col("value"), struct(col("ts_ns"), col("event_id")))
-            .as("first_midprice"),
-          max_by(col("value"), struct(col("ts_ns"), col("event_id")))
-            .as("last_midprice"))
-      val user = binPanel(ev, Seq(col("user_id"), col("bin_ns")))
-        .withColumn("ticker", col("user_id"))
-        .withColumn("date", lit(java.sql.Date.valueOf("2024-01-01")))
-      val spy = binPanel(ev, Seq(col("bin_ns")))
-      val panel = graft.domain.Returns.addLogReturns(user)
-      graft.domain.Returns.addExcessVsSpy(panel, spy)
-        .select(col("user_id"), col("bin_ns"),
-          r6(col("log_ret")).as("log_ret_micro"),
-          r6(col("excess_ret")).as("excess_micro"),
-          r6(col("fut_excess_ret")).as("fut_excess_micro"))
-    }),
-
-    // --- P1: rename / assign (column projection algebra) ---
-    "q_p1_rename" -> ((s, dir) => {
-      eventsNs(s, dir)
-        .withColumnRenamed("event_id", "id")
-        .withColumn("value_x2", col("value") * 2.0)
-        .select(col("id"), col("user_id"), col("value_x2"))
-    }),
-
-    // --- S4: multi-file concat scan — glob union of two CSV parts, file
-    //     provenance from the filename on both engines ---
-    "q_s4_multifile" -> ((s, dir) => {
-      val d = new java.io.File(MultiCsvDir)
-      d.mkdirs()
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$MultiCsvDir/a.csv"),
-        "1,alpha\n2,beta\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$MultiCsvDir/b.csv"),
-        "3,gamma\n4,delta\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      s.read.schema("id BIGINT, name STRING").option("header", "false")
-        .csv(MultiCsvDir)
-        .withColumn("src",
-          regexp_extract(input_file_name(), "([ab])\\.csv", 1))
-    }),
-
-    // --- S7: daily-bars ClOp/ClCl composition (Returns.addClOp) — bars
-    //     synthesized as per-(user, day) open/close from the event stream ---
-    "q_s7_clop" -> ((s, dir) => {
-      val ev = eventsNs(s, dir).withColumn("day", expr(s"ts_ns div $DAY"))
-      val bars = ev.groupBy(col("user_id"), col("day")).agg(
-          min_by(col("value"), struct(col("ts_ns"), col("event_id")))
-            .as("open"),
-          max_by(col("value"), struct(col("ts_ns"), col("event_id")))
-            .as("close"))
-        .select(col("user_id").as("ticker"), col("day").as("date"),
-          col("open"), col("close"))
-      val panel = ev.groupBy(col("user_id"), col("day"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("ticker", col("user_id"))
-        .withColumn("date", col("day"))
-      graft.domain.Returns.addClOp(panel, bars)
-        .select(col("user_id"), col("day"), col("n"),
-          r6(col("ClOp")).as("clop_micro"),
-          r6(col("ClCl")).as("clcl_micro"),
-          r6(col("fut_ClOp")).as("fut_clop_micro"))
-    }),
-
-    // --- LLM ops: deterministic hash sampling — layout/rerun-stable
-    //     Bernoulli sample (portable integer arithmetic; Sampling.scala) ---
-    "q_sample_bernoulli" -> ((s, dir) => {
-      Sampling.bernoulliSample(Tables.documents(s, dir), "doc_id", 0.1,
-          seed = 1L)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-    }),
-
-    // --- LLM ops: exact-N-per-stratum deterministic reservoir ---
-    "q_sample_stratified" -> ((s, dir) => {
-      Sampling.stratifiedExactN(Tables.documents(s, dir), Seq("lang"),
-          "doc_id", n = 10, seed = 2L)
-        .select(col("doc_id"), col("lang"))
-    }),
-
-    // --- LLM ops / M4 scale path: deterministic train/test hash split ---
-    "q_split_hash" -> ((s, dir) => {
-      Sampling.hashSplitTag(Tables.documents(s, dir), "doc_id", 0.25,
-          seed = 3L)
-        .groupBy(col("is_test"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"))
-    }),
-
-    // --- M4 extension: purged k-fold time-series CV with embargo
-    //     (Lopez de Prado 2018 ch.7) — fold by the O1 global time
-    //     ordinal, purge = exact LONG-ns label-window overlap with the
-    //     test fold's label extent, embargo strip after it. The
-    //     leakage-safe k-fold face of the reference's forward-horizon
-    //     time split (prediction_ML_pipeline.py:183-204) ---
-    "q_purged_cv" -> ((s, dir) => {
-      graft.operators.PurgedSplit.purgedKFold(eventsNs(s, dir),
-        "ts_ns", "event_id", k = 5, labelHorizonNs = H, embargoNs = M30)
-    }),
-
-    // --- Governance: declarative constraint audit (Deequ shape) —
-    //     every row-local rule is one conditional sum in a SHARED
-    //     aggregation pass; uniqueness rules get their own partial-agg
-    //     groupBy. The per-ingest-batch quality gate ---
-    "q_audit" -> ((s, dir) => {
-      import graft.operators.Audit.Rule._
-      graft.operators.Audit.audit(eventsNs(s, dir)
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            col("value")),
-        Seq(NotNull("user_id"), InRange("value", 0.0, 100.0),
-          Matches("event_type", "[a-z]{4,6}"),
-          AcceptedValues("event_type", Seq("click", "view", "purchase")),
-          Unique(Seq("event_id")), Unique(Seq("user_id", "event_type"))))
-    }),
-
-    // --- LLM ops: per-row weighted acceptance sampling (quality-weighted
-    //     downsampling; weight derived from doc length here) ---
-    "q_weighted_sample" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-        .withColumn("w", least(col("n_chars") / lit(3000.0), lit(1.0)))
-      Sampling.weightedSample(d, "doc_id", "w", seed = 6L)
-        .select(col("doc_id"), col("n_chars"))
-    }),
-
-    // --- LLM ops / M4: three-way train/val/test split from one draw ---
-    "q_split3" -> ((s, dir) => {
-      Sampling.hashSplit3Tag(Tables.documents(s, dir), "doc_id",
-          testFraction = 0.1, valFraction = 0.2, seed = 7L)
-        .groupBy(col("split"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"))
-    }),
-
-    // --- LLM ops: deterministic epoch replication counts (Llama-style
-    //     data-mix upweighting; the explode itself is row-local) ---
-    "q_upsample" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-        .withColumn("w", col("n_chars") / lit(2000.0))
-      d.select(col("doc_id"),
-        Sampling.epochCopies(col("doc_id"), col("w"), seed = 8L)
-          .as("copies"))
-    }),
-
-    // --- LLM ops: weighted pretrain source mixing in one pass ---
-    "q_mix_sources" -> ((s, dir) => {
-      Sampling.mixSources(Tables.documents(s, dir), "source",
-          Map("src0" -> 1.0, "src1" -> 0.5, "src2" -> 0.25, "src3" -> 0.1),
-          "doc_id", seed = 4L)
-        .groupBy(col("source")).agg(count(lit(1)).as("n"))
-    }),
-
-    // --- LLM ops: concat-then-chunk sequence packing (distributed
-    //     two-level prefix sum; Packing.scala). n_chars stands in for the
-    //     token count — any per-row cost column works ---
-    "q_pack_chunks" -> ((s, dir) => {
-      val packed = Packing.concatChunks(Tables.documents(s, dir), "doc_id",
-        "n_chars", budget = 16384L, nShards = 16)
-      Packing.chunkStats(packed, "n_chars", budget = 16384L)
-    }),
-
-    // --- M9: full per-class classification report (zero-TP classes
-    //     included, sklearn zero conventions) ---
-    "q_m9_report" -> ((s, dir) => {
-      val preds = eventsNs(s, dir)
-        .withColumn("actual", side(col("event_type")).cast("long"))
-        .withColumn("pred",
-          when(col("event_id") % 3 === 0, -1L).otherwise(1L))
-      graft.ml.DirectionModel.classificationReport(preds, "actual", "pred")
-        .select(col("class"), r6(col("precision")).as("precision_micro"),
-          r6(col("recall")).as("recall_micro"), col("tp"), col("support"),
-          r6(col("f1")).as("f1_micro"))
-    }),
-
-    // --- LLM ops: the composed curation pipeline (exact dedup -> quality
-    //     gate -> deterministic sample -> MinHash-LSH near-dup removal ->
-    //     group-scoped packing). Rows-only: the near-dup stage is
-    //     xxhash64-based, which DuckDB cannot reproduce ---
-    // --- LLM ops: the composed pipeline with the LSH stage ON, on the
-    //     PORTABLE MinHash backend (round 10) — signatures, band
-    //     buckets, pair agreement, greedy drop, and packing all
-    //     recomputed by the DuckDB oracle; the xxhash64 LSH face stays
-    //     the production default (DedupSpec/CurationSpec-pinned) ---
-    "q_curate" -> ((s, dir) => {
-      Curation.curate(Tables.documents(s, dir), "doc_id", "text",
-          "n_chars", Curation.Config(minQuality = 0.2, sampleRate = 0.9,
-            nearDupJaccard = 0.9, nearDupPortable = true,
-            packBudget = 16384L, seed = 5L, groupCols = Seq("lang")))
-        .select(col("doc_id"), col("lang"), col("chunk_id"),
-          col("chunk_offset"), r6(col("quality_score")).as("quality_micro"))
-    }),
-
-    // --- LLM ops: oracle-checkable curation sibling — the same composed
-    //     pipeline with the near-dup (xxhash64 LSH) stage OFF, so every
-    //     remaining stage (md5 dedup winner, quality gate, hash sample,
-    //     prefix-sum packing) has an exact DuckDB twin and the gate is a
-    //     full hash match instead of rows-only ---
-    "q_curate_sql" -> ((s, dir) => {
-      Curation.curate(Tables.documents(s, dir), "doc_id", "text",
-          "n_chars", Curation.Config(minQuality = 0.2, sampleRate = 0.9,
-            nearDupJaccard = 0.0, packBudget = 16384L, seed = 5L,
-            groupCols = Seq("lang")))
-        .select(col("doc_id"), col("lang"), col("chunk_id"),
-          col("chunk_offset"), r6(col("quality_score")).as("quality_micro"))
-    }),
-
-    // --- LLM ops: the composed pipeline with the pairwise near-dup
-    //     stage ON and deterministic — exact 3-gram Jaccard pairs
-    //     (PPJoin-pruned) replace the xxhash64 MinHash estimates, so the
-    //     ENTIRE five-stage composition (dedup -> quality -> sample ->
-    //     near-dup anti-join -> packing) hash-matches a DuckDB twin;
-    //     q_curate (LSH face) stays rows-only by hash construction.
-    //     Threshold 0.8 (practical near-dup range): the PPJoin prefix is
-    //     |A|(1-t)+1, so t=0.5 made every prefix HALF the doc — at 0.8
-    //     the candidate join carries a fifth of the shingles for the
-    //     same surviving pairs (planted near-dups sit at ~0.97) ---
-    "q_curate_jaccard" -> ((s, dir) => {
-      Curation.curate(Tables.documents(s, dir), "doc_id", "text",
-          "n_chars", Curation.Config(minQuality = 0.2, sampleRate = 0.9,
-            nearDupJaccard = 0.8, nearDupExact = true,
-            packBudget = 16384L, seed = 5L, groupCols = Seq("lang")))
-        .select(col("doc_id"), col("lang"), col("chunk_id"),
-          col("chunk_offset"), r6(col("quality_score")).as("quality_micro"))
-    }),
-
-    // --- LLM ops: benchmark decontamination — distinct shared 3-grams
-    //     between each corpus doc and a held-out eval slice (every 53rd
-    //     doc id plays the "benchmark" with its own text-column name).
-    //     One broadcast semi-join over exploded corpus n-grams; fully
-    //     SQL-expressible, so this is a real hash-match gate ---
-    "q_decontam" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val bench = docs.filter(pmod(col("doc_id"), lit(53L)) === 0)
-        .select(col("text").as("q"))
-      Decontam.contaminationScores(
-          docs.filter(pmod(col("doc_id"), lit(53L)) =!= 0), bench,
-          "doc_id", "text", benchTextCol = "q", n = 3)
-        .select(col("doc_id"), col("n_overlap"),
-          r6(col("overlap_frac")).as("overlap_frac_micro"))
-    }),
-
-    // --- LLM ops: SEMANTIC decontamination — max cosine of each corpus
-    //     embedding to an eval slice (every 17th vector); catches
-    //     paraphrased benchmark leakage the n-gram overlap misses ---
-    "q_sem_decontam" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("vec"))
-      Decontam.semanticContamination(
-          emb.filter(pmod(col("vec_id"), lit(17L)) =!= 0),
-          emb.filter(pmod(col("vec_id"), lit(17L)) === 0),
-          "vec_id", "vec", "vec", threshold = 0.9)
-        .select(col("vec_id"),
-          r6(col("max_eval_cos")).as("max_eval_cos_micro"),
-          col("contaminated"))
-    }),
-
-    // --- OLAP: hierarchical subtotals in one pass (ROLLUP — Catalyst
-    //     Expand feeds one shuffle for all levels; gid is the standard
-    //     grouping bitmask both engines share) ---
-    "q_rollup" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(grouping_id().as("gid"), count(lit(1)).as("n"),
-          sum(col("l_quantity").cast("long")).as("qty"))
-        .select(col("l_returnflag"), col("l_linestatus"),
-          col("gid"), col("n"), col("qty"))
-    }),
-
-    // --- OLAP: full cross-tab subtotals (CUBE: all 2^k grouping sets
-    //     from one Expand + one shuffle) ---
-    "q_cube" -> ((s, dir) => {
-      Tables.documents(s, dir)
-        .cube(col("lang"), col("source"))
-        .agg(grouping_id().as("gid"), count(lit(1)).as("n"),
-          sum(col("n_chars")).as("chars"))
-        .select(col("lang"), col("source"), col("gid"), col("n"),
-          col("chars"))
-    }),
-
-    // --- OLAP sketches: HLL distinct estimate per group (engine-portable
-    //     registers; est is deterministic, so the DuckDB twin computes
-    //     the identical sketch and the gate hash-matches) ---
-    "q_hll_distinct" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val est = Sketches.hllDistinct(li, Seq("l_returnflag"),
-        "l_orderkey", p = 10, seed = 0L)
-      val exact = li.groupBy(col("l_returnflag"))
-        .agg(countDistinct(col("l_orderkey")).as("exact_distinct"))
-      est.join(exact, Seq("l_returnflag"))
-        .select(col("l_returnflag"),
-          r6(col("distinct_est")).as("est_micro"),
-          col("exact_distinct"))
-    }),
-
-    // --- LLM ops: product-quantized ANN (Jegou et al. 2011) — 32x
-    //     index compression (64 floats -> 8 byte-codes), integer ADC
-    //     ranking; codebooks from the deterministic per-subspace
-    //     k-means, so the full train/encode/search path is
-    //     engine-reproducible and hash-gated ---
-    "q_pq_ann" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir).select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("vec"))
-      val books = Pq.train(e, "vec_id", "vec", m = 8, k = 8, maxIter = 2)
-      val codes = Pq.encode(e, "vec", books)
-      val queries = e.filter(pmod(col("vec_id"), lit(25L)) === 0)
-      Pq.searchTopK(queries, codes, "vec_id", "vec_id", "vec", books,
-          k = 3)
-        .select(col("query_id"), col("corpus_id"), col("rank"),
-          col("adc_dist"))
-    }),
-
-    // --- OLAP sketches: HLL set overlap by inclusion-exclusion —
-    //     registers union losslessly, so cross-corpus intersection
-    //     comes without joining the corpora ---
-    // --- LLM ops: HLL partition rollup — the incremental-maintenance
-    //     story at 100 TB: per-DAY register sketches (what a pipeline
-    //     stores per ingest partition) merged by max-rho into a global
-    //     estimate that must EQUAL the direct corpus-wide sketch.
-    //     Registers are set-semantics, so the rollup is partitioning-
-    //     independent; the oracle emits the direct estimate for both
-    //     columns — the hash match proves merged == direct ---
-    "q_hll_rollup" -> ((s, dir) => {
-      val ev = eventsNs(s, dir)
-      val withDay = ev.withColumn("day",
-        expr("ts_ns div 86400000000000"))
-      val daily = Sketches.hllSketch(withDay, Seq("day"), "user_id",
-        p = 10, seed = 0L)
-      val merged = Sketches.hllMerge(Seq(daily), Nil)
-      val mergedEst = Sketches.hllEstimate(merged, Nil)
-        .select(r6(col("distinct_est")).as("merged_micro"))
-      val direct = Sketches.hllDistinct(ev, Nil, "user_id", p = 10,
-          seed = 0L)
-        .select(r6(col("distinct_est")).as("direct_micro"))
-      val parts = withDay.agg(countDistinct(col("day")).as("n_parts"))
-      val exact = ev.agg(
-        countDistinct(col("user_id")).as("exact_distinct"))
-      mergedEst.crossJoin(direct).crossJoin(parts).crossJoin(exact)
-    }),
-
-    "q_hll_overlap" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      def sk(flag: String) = Sketches.hllSketch(
-        li.filter(col("l_returnflag") === flag), Nil, "l_orderkey",
-        p = 10, seed = 0L)
-      Sketches.hllOverlap(sk("A"), sk("R"), Nil)
-        .select(r6(col("est_a")).as("est_a_micro"),
-          r6(col("est_b")).as("est_b_micro"),
-          r6(col("est_union")).as("est_union_micro"),
-          r6(col("est_intersect")).as("est_intersect_micro"),
-          r6(col("jaccard_est")).as("jaccard_micro"))
-    }),
-
-    // --- OLAP sketches: FIXED-range histogram quantiles (the
-    //     streamable/mergeable face: pinned grid, no range pre-pass) ---
-    "q_hist_quantile_fixed" -> ((s, dir) => {
-      Sketches.histogramQuantiles(
-          Sketches.histogramSketchFixed(Tables.documents(s, dir),
-            Seq("lang"), "n_chars", lo = 0.0, hi = 4000.0, buckets = 40),
-          Seq("lang"), qs = Seq(0.5, 0.9), buckets = 40)
-        .select(col("lang"), (col("q") * 100).cast("int").as("q_pct"),
-          r6(col("est")).as("est_micro"))
-    }),
-
-    // --- OLAP sketches: equi-width histogram quantiles — one bounded
-    //     shuffle vs the exact operator's multi-pass refinement; error
-    //     bounded by one bucket width ---
-    "q_hist_quantile" -> ((s, dir) => {
-      Sketches.approxQuantiles(
-          Tables.lineitem(s, dir)
-            .select(col("l_returnflag"), col("l_extendedprice")),
-          Seq("l_returnflag"), "l_extendedprice",
-          qs = Seq(0.5, 0.95, 0.99), buckets = 64)
-        .select(col("l_returnflag"),
-          (col("q") * 100).cast("int").as("q_pct"),
-          r6(col("est")).as("est_micro"))
-    }),
-
-    // --- OLAP sketches: equi-join size estimate via the CM inner
-    //     product — the join-planning cardinality probe without
-    //     touching either table ---
-    "q_cms_join_size" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      def keyed(t: String) = ev.filter(col("event_type") === t)
-        .select(col("user_id"))
-      val est = Sketches.cmsJoinSize(
-        Sketches.cmsSketch(keyed("click"), "user_id", depth = 4,
-          width = 256, seed = 7L),
-        Sketches.cmsSketch(keyed("view"), "user_id", depth = 4,
-          width = 256, seed = 7L))
-      val exact = keyed("click").groupBy(col("user_id"))
-        .agg(count(lit(1)).as("na"))
-        .join(keyed("view").groupBy(col("user_id"))
-          .agg(count(lit(1)).as("nb")), Seq("user_id"))
-        .agg(sum(col("na") * col("nb")).as("exact_join_size"))
-      est.crossJoin(exact)
-    }),
-
-    // --- OLAP sketches: Count-Min point estimates + heavy-hitter flag
-    //     (est >= true always; deterministic cells → hash gate) ---
-    "q_cms_counts" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select(col("user_id"))
-      val sk = Sketches.cmsSketch(ev, "user_id", depth = 4, width = 256,
-        seed = 5L)
-      val est = Sketches.cmsLookup(sk, ev.distinct(), "user_id",
-        depth = 4, width = 256, seed = 5L)
-      val exact = ev.groupBy(col("user_id"))
-        .agg(count(lit(1)).as("exact_cnt"))
-      est.join(exact, Seq("user_id"))
-        .select(col("user_id"), col("est"), col("exact_cnt"),
-          (col("est") >= lit(80L)).as("is_heavy"))
-    }),
-
-    // --- OLAP sketches: per-lang vocabulary-size HLL estimate over
-    //     string-keyed words (stringKey31 fold) — the tiny synthetic
-    //     vocab lands in the LINEAR-COUNTING branch, the complement of
-    //     q_hll_distinct's harmonic-mean branch ---
-    "q_hll_vocab" -> ((s, dir) => {
-      val words = Tables.documents(s, dir)
-        .select(col("lang"),
-          explode(split(trim(col("text")), "\\s+")).as("word"))
-        .filter(length(col("word")) > 0)
-        .withColumn("wkey", Sampling.stringKey31(col("word")))
-      val est = Sketches.hllDistinct(words, Seq("lang"), "wkey",
-        p = 10, seed = 2L)
-      val exact = words.groupBy(col("lang"))
-        .agg(countDistinct(col("word")).as("exact_distinct"))
-      est.join(exact, Seq("lang"))
-        .select(col("lang"), r6(col("distinct_est")).as("est_micro"),
-          col("exact_distinct"))
-    }),
-
-    // --- OLAP sketches: Count-Min word frequencies via the portable
-    //     string key; heavy flag from the est upper bound ---
-    "q_cms_words" -> ((s, dir) => {
-      val words = Tables.documents(s, dir)
-        .select(explode(split(trim(col("text")), "\\s+")).as("word"))
-        .filter(length(col("word")) > 0)
-        .withColumn("wkey", Sampling.stringKey31(col("word")))
-      val sk = Sketches.cmsSketch(words, "wkey", depth = 4, width = 256,
-        seed = 3L)
-      val est = Sketches.cmsLookup(sk,
-        words.select(col("wkey")).distinct(), "wkey",
-        depth = 4, width = 256, seed = 3L)
-      val exact = words.groupBy(col("word"), col("wkey"))
-        .agg(count(lit(1)).as("exact_cnt"))
-      exact.join(est, Seq("wkey"))
-        .select(col("word"), col("est"), col("exact_cnt"),
-          (col("est") >= lit(940L)).as("is_heavy"))
-    }),
-
-    // --- LLM ops: deterministic weighted sample without replacement
-    //     (Efraimidis-Spirakis): quality-weighted top-k selection as a
-    //     TakeOrdered heap, no global sort ---
-    "q_weighted_topk" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-        .withColumn("w", col("n_chars").cast("double") / lit(1000.0))
-      Sampling.weightedTopK(docs, "doc_id", "w", k = 60, seed = 21L)
-        .select(col("doc_id"), col("source"), col("es_rank_nano"))
-    }),
-
-    // --- LLM ops: MMR diversified selection over a bounded top-N pool.
-    //     Oracle-checked since round 10: the greedy's micro-rounded
-    //     smaller-id-tie decisions are engine-portable by design, so a
-    //     DuckDB RECURSIVE CTE replays the selection exactly ---
-    "q_mmr" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir).select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("vec"))
-      val probe = e.filter(col("vec_id") === 0)
-        .select(col("vec").as("pvec"))
-      val pool = e.crossJoin(broadcast(probe))
-        .select(col("vec_id"), col("vec"),
-          Similarity.cosine(col("vec"), col("pvec")).as("rel"))
-        .filter(col("vec_id") =!= 0 && col("rel").isNotNull)
-        .orderBy(col("rel").desc, col("vec_id").asc).limit(50)
-      Similarity.mmrSelect(pool, "vec_id", "vec", "rel", k = 10,
-          lambda = 0.7)
-        .select(col("vec_id"), col("mmr_rank"),
-          r6(col("mmr_score")).as("mmr_score_micro"))
-    }),
-
-    // --- LLM ops: sketch-powered corpus profile — the governance-report
-    //     shape rebuilt on bounded-state primitives: doc volume, HLL
-    //     unique-content estimate (dedup load without a distinct), and
-    //     histogram length quantiles, per source in two bounded passes ---
-    "q_corpus_profile" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-        .withColumn("tkey", Sampling.stringKey31(col("text")))
-      val vol = docs.groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"))
-      val uniq = Sketches.hllDistinct(docs, Seq("source"), "tkey",
-        p = 10, seed = 6L)
-      val qs = Sketches.approxQuantiles(docs, Seq("source"), "n_chars",
-          qs = Seq(0.5, 0.95), buckets = 32)
-        .groupBy(col("source"))
-        .agg(max(when(col("q") === 0.5, col("est"))).as("p50"),
-          max(when(col("q") === 0.95, col("est"))).as("p95"))
-      vol.join(uniq, Seq("source")).join(qs, Seq("source"))
-        .select(col("source"), col("n_docs"),
-          r6(col("distinct_est")).as("uniq_est_micro"),
-          r6(col("p50")).as("p50_micro"), r6(col("p95")).as("p95_micro"))
-    }),
-
-    // --- LLM ops: per-language A-ES draw — best k docs per lang,
-    //     stochastically by length-weight ---
-    "q_weighted_topk_group" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-        .withColumn("w", col("n_chars").cast("double") / lit(1000.0))
-      Sampling.weightedTopKPerGroup(docs, Seq("lang"), "doc_id", "w",
-          k = 10, seed = 21L)
-        .select(col("lang"), col("doc_id"), col("es_rank_nano"))
-    }),
-
-    // --- LLM ops: UniMax language-capped mixture plan (closed-form
-    //     water-filling, all windows over the per-lang aggregate) ---
-    "q_unimax_plan" -> ((s, dir) => {
-      Sampling.unimaxPlan(Tables.documents(s, dir), "lang", "n_chars",
-          budgetTokens = 200000L, maxEpochs = 2.0)
-        .select(col("source"), col("n_tokens"),
-          r6(col("quota_tokens")).as("quota_micro"),
-          r6(col("epochs")).as("epochs_micro"))
-    }),
-
-    // --- LLM ops: the UniMax plan applied — per-lang epoch replication
-    //     capped at maxEpochs, fractional epochs by portable hash ---
-    "q_unimax_apply" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val plan = Sampling.unimaxPlan(docs, "lang", "n_chars",
-        budgetTokens = 200000L, maxEpochs = 2.0)
-      Sampling.unimaxApply(docs, "lang", "doc_id", plan, seed = 23L)
-        .select(col("doc_id"), col("lang"), col("epoch_copy"))
-    }),
-
-    // --- LLM ops: C4 page-level filter flags (Raffel et al. 2020 §2.2,
-    //     document-level subset) ---
-    "q_c4_filters" -> ((s, dir) => {
-      Tables.documents(s, dir)
-        .withColumn("__f", TextFunctions.c4Flags(col("text")))
-        .select(col("doc_id"),
-          col("__f.has_3_sentences").as("has_3_sentences"),
-          col("__f.no_lorem").as("no_lorem"),
-          col("__f.no_brace").as("no_brace"),
-          col("__f.keep").as("keep"))
-    }),
-
-    // --- LLM ops: Gopher quality-filter flags (Rae et al. 2021 Table
-    //     A1, document-level subset; minWords lowered to 10 for this
-    //     short-doc corpus so both flag values occur) ---
-    "q_gopher_quality" -> ((s, dir) => {
-      Tables.documents(s, dir)
-        .withColumn("__f",
-          TextFunctions.gopherQualityFlags(col("text"), minWords = 10))
-        .select(col("doc_id"),
-          col("__f.word_count_ok").as("word_count_ok"),
-          col("__f.mean_len_ok").as("mean_len_ok"),
-          col("__f.symbol_ok").as("symbol_ok"),
-          col("__f.alpha_ok").as("alpha_ok"),
-          col("__f.stops_ok").as("stops_ok"),
-          col("__f.keep").as("keep"))
-    }),
-
-    // --- LLM ops: DSIR importance scoring (Xie et al. 2023) — per-doc
-    //     add-k unigram log-likelihood ratio of a trusted target slice
-    //     (every 31st doc) vs the raw corpus ---
-    "q_dsir" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dsir.importanceScores(
-          docs.filter(pmod(col("doc_id"), lit(31L)) =!= 0), "doc_id",
-          "text",
-          docs.filter(pmod(col("doc_id"), lit(31L)) === 0)
-            .select(col("text").as("q")), "q")
-        .select(col("doc_id"), col("n_tokens"),
-          r6(col("llr")).as("llr_micro"))
-    }),
-
-    // --- LLM ops: DSIR importance RESAMPLING — survivors of the
-    //     micro-rounded sigmoid(llr_per_token / T) portable-hash
-    //     acceptance; deterministic, so the surviving set itself is the
-    //     oracle surface ---
-    "q_dsir_resample" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dsir.resample(
-          docs.filter(pmod(col("doc_id"), lit(31L)) =!= 0), "doc_id",
-          "text",
-          docs.filter(pmod(col("doc_id"), lit(31L)) === 0)
-            .select(col("text").as("q")), "q",
-          temperature = 0.25, seed = 11L)
-        .select(col("doc_id"), col("n_tokens"),
-          r6(col("llr")).as("llr_micro"))
-    }),
-
-    // --- LLM ops: pattern redaction (PII/boilerplate scrub shape) with a
-    //     per-doc audit count; word-boundary regex stays in the RE2-
-    //     compatible subset so Spark (Java regex) and DuckDB (RE2) agree ---
-    "q_text_redact" -> ((s, dir) => {
-      Tables.documents(s, dir).select(col("doc_id"),
-        md5(TextFunctions.redact(col("text"), "\\btable\\b", "<TBL>"))
-          .as("redacted_md5"),
-        TextFunctions.matchCount(col("text"), "\\btable\\b").cast("long")
-          .as("n_matches"))
-    }),
-
-    // --- LLM ops: group-scoped packing — chunks never mix languages,
-    //     chunk ids restart per group ---
-    "q_pack_by_lang" -> ((s, dir) => {
-      Packing.concatChunks(Tables.documents(s, dir), "doc_id", "n_chars",
-          budget = 16384L, nShards = 16, groupCols = Seq("lang"))
-        .groupBy(col("lang"), col("chunk_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("tokens"))
-    }),
-
-    // --- P6 sibling: winsorization (clip at exact percentiles, keep all
-    //     rows — the outlier treatment bandFilter's drop variant implies) ---
-    "q_winsorize" -> ((s, dir) => {
-      val e = eventsNs(s, dir)
-      Quantiles.winsorize(e, "value", 0.05, 0.95, outCol = "value_w")
-        .select(col("event_id"), r6(col("value_w")).as("value_w_micro"))
-    }),
-
-    // --- robust outlier tagging: per-type median/MAD modified z —
-    //     the heavy-tail-safe scrub (two grouped aggs + broadcast
-    //     stats joins; flag is a single-multiply bit-portable cut) ---
-    "q_mad_outliers" -> ((s, dir) => {
-      Quantiles.madOutliers(eventsNs(s, dir), Seq("event_type"), "value")
-        .select(col("event_id"), col("event_type"),
-          r6(col("group_median")).as("med_micro"),
-          r6(col("group_mad")).as("mad_micro"),
-          r6(col("robust_z")).as("robust_z_micro"),
-          col("is_outlier"))
-    }),
-
-    // --- graph: PageRank over the customer<->supplier trade graph
-    //     (who-trades-with-whom importance). Integer pico-grid power
-    //     iteration — every step LONG-exact, so the DuckDB twin replays
-    //     the same 5 iterations bit-for-bit ---
-    "q_pagerank" -> ((s, dir) => {
-      // edge prep shared across the three PageRank-family gates (r18);
-      // the projection drops the line counts — the unweighted contract
-      // deduplicates, and the fixture is already one row per edge
-      val fwd = tradeGraphEdges(s, dir).select(col("src"), col("dst"))
-      val edges = fwd.union(
-        fwd.select(col("dst").as("src"), col("src").as("dst")))
-      Graph.pageRank(edges, "src", "dst", iterations = 5)
-        .select(col("node"), col("rank_pico"))
-    }),
-
-    // --- graph: PERSONALIZED PageRank — teleport/dangling mass to a
-    //     seed set only (every 10th customer: node % 20 = 0 — even ids
-    //     are customers, and the modulus keeps seeds present down to
-    //     sf0.001). Rank = importance relative to the seeds; same
-    //     pico-grid chain, replayed by the seeded oracle variant ---
-    "q_ppr" -> ((s, dir) => {
-      // same shared edge fixture as q_pagerank (r18)
-      val fwd = tradeGraphEdges(s, dir).select(col("src"), col("dst"))
-      val edges = fwd.union(
-        fwd.select(col("dst").as("src"), col("src").as("dst")))
-      Graph.personalizedPageRank(edges, "src", "dst",
-          n => pmod(n, lit(20L)) === 0L, iterations = 5)
-        .select(col("node"), col("rank_pico"))
-    }),
-
-    // --- graph: WEIGHTED PageRank — same trade graph, mass split
-    //     proportional to the pair's co-order line count ---
-    "q_pagerank_weighted" -> ((s, dir) => {
-      // shared fixture carries w = co-order line count per edge (r18):
-      // the operator's duplicate-edge contract (weights SUM) sees one
-      // pre-summed row per directed edge — identical sums to the old
-      // per-line w=1 input, since forward and reversed key spaces are
-      // disjoint (even→odd vs odd→even node ids)
-      val fwd = tradeGraphEdges(s, dir)
-      val edges = fwd.union(fwd.select(col("dst").as("src"),
-        col("src").as("dst"), col("w")))
-      Graph.pageRank(edges, "src", "dst", iterations = 5,
-          weightCol = "w")
-        .select(col("node"), col("rank_pico"))
-    }),
-
-    // --- graph: exact per-node triangle counts over the REPEAT
-    //     co-purchase part graph (part pairs sharing >= 2 orders — the
-    //     affinity threshold that keeps a uniform-assignment graph from
-    //     going complete, the way a raw co-order graph does here).
-    //     Degree orientation bounds the wedge join at O(m^1.5) total ---
-    "q_triangles" -> ((s, dir) => {
-      val pairs = coPurchasePairs(s, dir)
-      Graph.triangleCounts(pairs, "src", "dst")
-    }),
-
-    // --- graph: common-neighbor link prediction on the repeat
-    //     co-purchase graph — top-50 non-adjacent pairs by shared
-    //     neighbors, with neighborhood Jaccard ---
-    "q_link_pred" -> ((s, dir) => {
-      val pairs = coPurchasePairs(s, dir)
-      Graph.linkPredictions(pairs, "src", "dst", topK = 50)
-        .select(col("x"), col("y"), col("common"), col("deg_x"),
-          col("deg_y"), r6(col("jaccard")).as("jaccard_micro"),
-          r6(col("adamic_adar")).as("adamic_adar_micro"))
-    }),
-
-    // --- graph: 2-core of the repeat-co-purchase part graph — the
-    //     dense nucleus after iterative peel (fixpoint in 4 rounds at
-    //     sf0.01; the oracle unrolls 8, safely past it) ---
-    "q_kcore" -> ((s, dir) => {
-      val pairs = coPurchasePairs(s, dir)
-      Graph.kCore(pairs, "src", "dst", k = 2)
-    }),
-
-    // --- graph: degree distribution of the repeat-co-purchase graph
-    //     (log2-binned via integer bit-length — no libm log2 parity
-    //     risk) ---
-    "q_degree_dist" -> ((s, dir) => {
-      val pairs = coPurchasePairs(s, dir)
-      Graph.degreeDistribution(pairs, "src", "dst")
-    }),
-
-    // --- graph: local clustering coefficient — community density per
-    //     node over the oriented-wedge triangle counts ---
-    "q_clustering_coef" -> ((s, dir) => {
-      val pairs = coPurchasePairs(s, dir)
-      Graph.clusteringCoefficients(pairs, "src", "dst")
-        .select(col("node"), col("degree"), col("n_triangles"),
-          r6(col("clustering_coef")).as("clustering_micro"))
-    }),
-
-    // --- graph: 2-hop neighborhood reach + truncated harmonic
-    //     centrality — the scalable (bounded-k) centrality face ---
-    "q_khop" -> ((s, dir) => {
-      val pairs = coPurchasePairs(s, dir)
-      Graph.kHopNeighborhood(pairs, "src", "dst", maxHops = 2)
-        .select(col("node"), col("n_reachable"),
-          r6(col("harmonic")).as("harmonic_micro"))
-    }),
-
-    // --- graph: degree assortativity — do hubs link to hubs? The
-    //     one-number health check for hub-cap defenses ---
-    "q_assortativity" -> ((s, dir) => {
-      val pairs = coPurchasePairs(s, dir)
-      Graph.degreeAssortativity(pairs, "src", "dst")
-        .select(col("n_pairs"),
-          r6(col("assortativity")).as("assortativity_micro"))
-    }),
-
-    // --- W4+W5 composition: trailing top-performer selection
-    //     (ClOp_analysis.ipynb cells 8-10 shape: top-N by trailing PnL,
-    //     exclusive window — no lookahead) ---
-    "q_trailing_topk" -> ((s, dir) => {
-      val daily = eventsNs(s, dir)
-        .withColumn("day", expr(s"ts_ns div $DAY"))
-        .groupBy(col("user_id"), col("day"))
-        .agg(moneySum(col("value")).as("pnl"))
-      val panel = daily.select(col("user_id").as("ticker"),
-        col("day").as("date"), col("pnl"))
-      graft.domain.Strategy.trailingTopPerformers(panel, lookback = 3, n = 2)
-        .select(col("ticker").as("user_id"), col("date").as("day"),
-          r6(col("trailing_pnl")).as("trailing_micro"), col("rank"))
-    }),
-
-    // --- M1: GBT training gate — fixed-seed fit on a planted-signal
-    //     frame (the reference's own sanity bar: the model must learn a
-    //     signal that is in the data by construction,
-    //     chunk_pipeline.py:82). FULLY ORACLED since r17 (was
-    //     rows-only): the fit's per-row test predictions persist as a
-    //     per-run fixture; the oracle replays split counts, the
-    //     side-tag direction twin, and the accuracy fold from it — the
-    //     GBT fit itself stays legitimately un-replayable ---
-    "q_m1_gbt" -> ((s, dir) => {
-      val d = mlPlanted(s, dir)
-      val train = d.filter(!col("is_test"))
-      val nTrain = train.count()
-      val model = graft.ml.DirectionModel.gbtPipeline(MlGateCols,
-        maxDepth = 3, maxIter = 5, subsample = 1.0).fit(train)
-      val preds = graft.ml.DirectionModel.attachPredictions(
-        model, d.filter(col("is_test")))
-      preds.select(col("event_id"), col("pred_dir")).coalesce(1)
-        .write.mode("overwrite").parquet(M1PredsDir)
-      preds.agg(count(lit(1)).as("n_test"),
-          sum(when(col("pred_dir") === col("direction"), 1L)
-            .otherwise(0L)).as("__correct"))
-        .select(lit("gbt").as("model"), lit(nTrain).as("n_train"),
-          col("n_test"),
-          (col("__correct") >= col("n_test") * lit(0.8))
-            .as("beats_planted"))
-    }),
-
-    // --- S10: model artifact I/O (`chunk_pipeline.py:92-94,106-109`) —
-    //     train -> save -> load -> re-predict; the gate pins bit-exact
-    //     prediction parity between the in-memory and reloaded model.
-    //     FULLY oracled: n_test is the deterministic hash-split count
-    //     (computable in SQL) and parity must make every row match, so
-    //     the oracle knows the whole output row a priori — any save/load
-    //     drift (lost scaler mean, coefficient truncation) hash-misses ---
-    "q_s10_model_io" -> ((s, dir) => {
-      val d = mlPlanted(s, dir)
-      val model = mlPlantedLrFit(s, dir) // shared fit (r18)
-      val path = s"/tmp/graft_model_io_$RunTag"
-      AuxSources.saveModel(model, path)
-      val reloaded = AuxSources.loadModel(path)
-      val test = d.filter(col("is_test"))
-      val a = graft.ml.DirectionModel.attachPredictions(model, test)
-        .select(col("event_id"), col("pred_dir").as("dir_a"),
-          col("pred_prob").as("prob_a"))
-      val b = graft.ml.DirectionModel.attachPredictions(reloaded, test)
-        .select(col("event_id"), col("pred_dir").as("dir_b"),
-          col("pred_prob").as("prob_b"))
-      a.join(b, Seq("event_id"))
-        .agg(count(lit(1)).as("n_test"),
-          sum(when(col("dir_a") === col("dir_b"), 1L).otherwise(0L))
-            .as("n_dir_match"),
-          max(abs(col("prob_a") - col("prob_b"))).as("__pdiff"))
-        .select(lit("logistic").as("model"), col("n_test"),
-          col("n_dir_match"), (col("__pdiff") === 0.0).as("prob_exact"))
-    }),
-
-    // --- M2: prediction + label-remap contract — FULLY ORACLED since
-    //     r17 (was rows-only): the gate persists the fit's raw per-row
-    //     P(label=1) as a per-run fixture (the ML training is the only
-    //     piece SQL cannot replay) and emits the REMAPPED per-row face;
-    //     the oracle re-reads THIS run's scores and replays threshold,
-    //     {-1,+1} remap, and per-row correctness against the side-tag
-    //     direction — any threshold or label-indexing drift (e.g. an
-    //     inverted class index) hash-misses row by row. pred_dir must
-    //     equal (pred_prob > 0.5): Spark binary LR's prediction is the
-    //     0.5 probability threshold (raw margin > 0), which is exactly
-    //     what the CASE twin spells ---
-    "q_m2_predict" -> ((s, dir) => {
-      val d = mlPlanted(s, dir)
-      val model = mlPlantedLrFit(s, dir) // shared fit (r18)
-      val preds = graft.ml.DirectionModel.attachPredictions(
-        model, d.filter(col("is_test")))
-      preds.select(col("event_id"), col("pred_prob")).coalesce(1)
-        .write.mode("overwrite").parquet(M2ScoresDir)
-      preds.select(col("event_id"),
-        r6(col("pred_prob")).as("prob_micro"), col("pred_dir"),
-        (col("pred_dir") === col("direction")).as("correct"))
-    }),
-
-    // --- M3: RF grid-CV + LR. The RF grid is a REAL 2-point maxDepth
-    //     search {1, 5} over the planted XOR interaction: a depth-1
-    //     stump is chance on XOR, so cross-validation demonstrably
-    //     SELECTS depth 5 (chosen_depth in the output; MlGatesSpec pins
-    //     it rerun-stable). LR stays on the linear fixture — XOR is
-    //     outside its hypothesis class by design ---
-    "q_m3_rf_lr" -> ((s, dir) => {
-      val di = mlInteraction(s, dir)
-      // stage barrier for the CV grid: the 2-fold x 2-depth search fits
-      // 4 models + the winning refit, and each fit's RDD conversion
-      // re-derives the feature frame from the events scan without it
-      val diTrain = di.filter(!col("is_test"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val cvModel = graft.ml.DirectionModel.rfCrossValidated(
-          MlInteractionCols, folds = 2, numTrees = Array(10),
-          maxDepths = Array(1, 5))
-        .fit(diTrain)
-      val rf = cvModel.bestModel
-        .asInstanceOf[org.apache.spark.ml.PipelineModel]
-      val rfDepth = rf.stages.last
-        .asInstanceOf[org.apache.spark.ml.classification.RandomForestClassificationModel]
-        .getMaxDepth.toLong
-      val dl = mlPlanted(s, dir)
-      val lr = mlPlantedLrFit(s, dir) // shared fit (r18)
-      // FULLY ORACLED since r17 (was rows-only): both fits' per-row
-      // test predictions persist as ONE tagged fixture; the oracle
-      // replays split membership, the planted-direction twins (side
-      // tag for lr, the unitHash XOR for rf), the accuracy folds, and
-      // pins chosen_depth = 5 as the EXPECTED CV selection (the
-      // planted XOR makes depth 1 chance, so selection is provable —
-      // a gate that picks the stump now hash-misses the oracle, not
-      // just the spec)
-      def predRows(model: org.apache.spark.ml.PipelineModel, name: String,
-                   test: DataFrame) =
-        graft.ml.DirectionModel.attachPredictions(model, test)
-          .select(lit(name).as("model"), col("event_id"), col("pred_dir"))
-      predRows(rf, "rf", di.filter(col("is_test")))
-        .unionByName(predRows(lr, "lr", dl.filter(col("is_test"))))
-        .coalesce(1).write.mode("overwrite").parquet(M3PredsDir)
-      def gate(model: org.apache.spark.ml.PipelineModel, name: String,
-               test: DataFrame, depth: Column) =
-        graft.ml.DirectionModel.attachPredictions(model, test)
-          .agg(count(lit(1)).as("n_test"),
-            sum(when(col("pred_dir") === col("direction"), 1L)
-              .otherwise(0L)).as("__correct"))
-          .select(lit(name).as("model"), col("n_test"),
-            (col("__correct") >= col("n_test") * lit(0.8))
-              .as("beats_planted"),
-            depth.as("chosen_depth"))
-      gate(rf, "rf", di.filter(col("is_test")), lit(rfDepth))
-        .unionByName(gate(lr, "lr", dl.filter(col("is_test")),
-          lit(null).cast("long")))
-    }),
-
-    // --- LLM ops: the curation funnel audit as a declarative
-    //     (stage, survivors) frame — LSH off, so every stage count has an
-    //     exact DuckDB twin and the whole audit hash-matches ---
-    "q_funnel" -> ((s, dir) => {
-      Curation.funnelDf(Tables.documents(s, dir), "doc_id", "text",
-        Curation.Config(minQuality = 0.2, sampleRate = 0.9,
-          nearDupJaccard = 0.0, seed = 5L))
-    }),
-
-    // --- LLM ops: source-balance audit (r12) — token-mass Gini across
-    //     sources, the mixture-skew one-number check ---
-    "q_source_balance" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("source"),
-        TextFunctions.nTokens(col("text")).cast("long").as("__tok"))
-      Curation.sourceBalance(d, "source", "__tok")
-        .select(col("n_sources"), col("total_tokens"),
-          r6(col("max_share")).as("max_share_micro"),
-          r6(col("gini")).as("gini_micro"))
-    }),
-
-    // --- LLM ops: token-yield curve (r12) — cumulative token budget by
-    //     quality decile, top tier first: the "where does the quality
-    //     bar land for an N-token budget" planning curve. Decile edges
-    //     from distributed exact percentiles (never a global ntile
-    //     sort); row-local tier assignment; one partial-agg groupBy to
-    //     <= 10 rows; bounded cumulative walk ---
-    "q_token_yield" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"),
-        TextFunctions.qualityScore(col("text")).as("__q"),
-        TextFunctions.nTokens(col("text")).cast("long").as("__tok"))
-      Curation.tokenYieldCurve(d, "__q", "__tok", buckets = 10)
-        .select(col("bucket"), col("n_docs"), col("sum_tokens"),
-          col("cum_tokens"), r6(col("cum_frac")).as("cum_frac_micro"))
-    }),
-
-    // --- LLM ops: decontamination DROP face — the corpus that survives
-    //     removing docs sharing >= 2 distinct 3-grams with the eval set;
-    //     count + id checksum, fully SQL-expressible ---
-    "q_decontam_drop" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val bench = docs.filter(pmod(col("doc_id"), lit(53L)) === 0)
-        .select(col("text").as("q"))
-      Decontam.decontaminate(
-          docs.filter(pmod(col("doc_id"), lit(53L)) =!= 0), bench,
-          "doc_id", "text", benchTextCol = "q", n = 3, minOverlap = 2L)
-        .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("id_sum"))
-    }),
-
-    // --- LLM ops: smooth TF-IDF (sklearn convention) for a query term
-    //     set — inverted-index shape, term filter inside the explode ---
-    "q_tfidf" -> ((s, dir) => {
-      Retrieval.tfIdf(Tables.documents(s, dir), "doc_id", "text",
-          Seq("table", "spark", "vector"))
-        .select(col("doc_id"), col("term"), col("tf"), col("df"),
-          r6(col("tfidf")).as("tfidf_micro"))
-    }),
-
-    // --- LLM ops: PMI collocations — adjacent-pair multi-word
-    //     expressions (Church & Hanks 1990). Score is the log-free
-    //     PMI surrogate exp(PMI) = P(w1 w2)/(P(w1)P(w2)): monotone in
-    //     PMI and engine-exact (IEEE division; no libm ln in the rank) ---
-    "q_pmi" -> ((s, dir) => {
-      Retrieval.pmiCollocations(Tables.documents(s, dir), "doc_id",
-          "text", minCount = 3, topK = 50)
-        .select(col("w1"), col("w2"), col("pair_count"), col("c1"),
-          col("c2"), r6(col("pmi_ratio")).as("pmi_ratio_micro"))
-    }),
-
-    // --- LLM ops: fuzzy vocabulary pairs — SymSpell symmetric-delete
-    //     blocking + exact levenshtein verify (FuzzyMatch scaladoc):
-    //     typo/variant clusters over the corpus vocabulary without an
-    //     all-pairs scan. Oracle runs the naive quadratic join — the
-    //     semantics the blocking must reproduce with recall 1 ---
-    "q_fuzzy_vocab" -> ((s, dir) => {
-      val vocab = Tables.documents(s, dir)
-        .select(explode(TextFunctions.tokens(lower(col("text")))).as("w"))
-        .filter(length(col("w")) > 0)
-        .groupBy("w").agg(count(lit(1)).as("cnt"))
-      FuzzyMatch.editPairs(vocab, "w", maxDist = 2)
-        .join(vocab.select(col("w").as("term_a"), col("cnt").as("cnt_a")),
-          "term_a")
-        .join(vocab.select(col("w").as("term_b"), col("cnt").as("cnt_b")),
-          "term_b")
-        .select("term_a", "term_b", "dist", "cnt_a", "cnt_b")
-    }),
-
-    // --- LLM ops: BPE merge learning (Sennrich 2016) — the tokenizer-
-    //     vocabulary trainer as a gate. Six rounds; each round's pair
-    //     argmax (count desc, pair asc) and left-fold merge application
-    //     are replayed verbatim by the oracle's unrolled CTE chain, so
-    //     the learned merge TABLE — the trainer's entire output,
-    //     including every data-dependent intermediate state — is
-    //     hash-matched ---
-    "q_bpe_train" -> ((s, dir) =>
-      Bpe.trainDf(s, Tables.documents(s, dir), "text", rounds = 6)),
-
-    // --- LLM ops: BPE segmentation — the trainer's deploy face. The
-    //     six learned merges (driver-collected, data-dependent) fold
-    //     into every document row-locally; piece/word counts derive
-    //     from the segmented string by the same formula on both sides
-    //     (" | " separators add one split element per token gap) ---
-    "q_bpe_segment" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val ms = Bpe.train(docs, "text", rounds = 6)
-      docs.select(col("doc_id"), Bpe.applyMerges(col("text"), ms))
-        .withColumn("n_pieces",
-          (size(split(col("bpe_pieces"), " ")) -
-            (size(split(col("bpe_pieces"), " \\| ")) - 1)).cast("long"))
-        .withColumn("n_words",
-          size(split(col("bpe_pieces"), " \\| ")).cast("long"))
-    }),
-
-    // --- LLM ops: BM25 top-k keyword search — the lexical retrieval
-    //     complement to q_ann_cosine; per-doc scores decimal-summed so
-    //     the top-k cut is bit-stable across engines ---
-    "q_bm25" -> ((s, dir) => {
-      Retrieval.bm25TopK(Tables.documents(s, dir), "doc_id", "text",
-          Seq("table", "scan", "join", "vector"), k = 15)
-        .select(col("doc_id"), col("n_terms"),
-          r6(col("score")).as("score_micro"))
-    }),
-
-    // --- LLM ops: NDCG@10 of the BM25 ranker over three query pools
-    //     (binary relevance = all query terms matched). DECIMAL-summed
-    //     position gains make the metric bit-portable ---
-    "q_ndcg" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val pool = ndcgQueries.map { case (qid, terms) =>
-        Retrieval.bm25TopK(docs, "doc_id", "text", terms, k = 20)
-          .select(lit(qid).as("qid"), col("doc_id"),
-            (col("n_terms") === terms.size).cast("int").as("rel"),
-            col("score"))
-      }.reduce(_.unionByName(_))
-      Retrieval.ndcgAtK(pool, Seq("qid"), "doc_id", "score", "rel",
-          k = 10)
-        .select(col("qid"), col("n_candidates"),
-          r6(col("dcg")).as("dcg_micro"),
-          r6(col("ndcg")).as("ndcg_micro"))
-    }),
-
-    // --- LLM ops: reciprocal rank @10 over the same BM25 pools ---
-    "q_mrr" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val pool = ndcgQueries.map { case (qid, terms) =>
-        Retrieval.bm25TopK(docs, "doc_id", "text", terms, k = 20)
-          .select(lit(qid).as("qid"), col("doc_id"),
-            (col("n_terms") === terms.size).cast("int").as("rel"),
-            col("score"))
-      }.reduce(_.unionByName(_))
-      Retrieval.reciprocalRankAtK(pool, Seq("qid"), "doc_id", "score",
-          "rel", k = 10)
-        .select(col("qid"), col("first_rel_rank"),
-          r6(col("rr")).as("rr_micro"))
-    }),
-
-    // --- LLM ops: embedding unit-normalization (row-local, double
-    //     arithmetic end-to-end) — long format for the oracle compare ---
-    "q_embed_normalize" -> ((s, dir) => {
-      Tables.embeddings(s, dir)
-        .select(col("vec_id"),
-          posexplode(Embeddings.normalizeL2(col("embedding"))))
-        .select(col("vec_id"), col("pos").as("dim"),
-          r6(col("col")).as("v_micro"))
-    }),
-
-    // --- LLM ops: scalar int8 quantization (per-vector affine codes;
-    //     the 4x-memory ANN-index compression). Codes pinned via md5 of
-    //     the joined byte values — bit-exact round-half-up both sides ---
-    "q_embed_quantize" -> ((s, dir) => {
-      Tables.embeddings(s, dir)
-        .select(col("vec_id"),
-          Embeddings.quantizeInt8(col("embedding")).as("__qz"))
-        .select(col("vec_id"),
-          r6(col("__qz").getField("lo")).as("lo_micro"),
-          r6(col("__qz").getField("step")).as("step_micro"),
-          md5(concat_ws(",", transform(col("__qz").getField("q"),
-            c => c.cast("string")))).as("q_md5"))
-    }),
-
-    // --- LLM ops: per-label centroid (element-wise mean pooling,
-    //     decimal-summed so the mean is layout- and engine-exact) ---
-    "q_embed_meanpool" -> ((s, dir) => {
-      Embeddings.meanPoolLong(Tables.embeddings(s, dir), Seq("label"),
-          "embedding")
-        .select(col("label"), col("dim"), r6(col("mean")).as("mean_micro"))
-    }),
-
-    // --- LLM ops: PCA projection to 4 components by deterministic
-    //     power iteration (decimal-summed covariance, canonical signs,
-    //     deflation) — the oracle unrolls the SAME iterations in SQL,
-    //     so projections hash-match across engines. The LAPACK-backed
-    //     pcaProject stays the library fast path (EmbeddingsSpec pins
-    //     both agree on the spanned subspace) ---
-    "q_pca" -> ((s, dir) => {
-      Embeddings.pcaPowerProject(Tables.embeddings(s, dir), "vec_id",
-          "embedding", k = 4, iters = 6)
-        .select(col("vec_id"), col("comp").cast("long").as("comp"),
-          r6(col("value")).as("value_micro"))
-    }),
-
-    // --- LLM ops: per-source quantile rank — the normalization that
-    //     makes one global quality threshold fair across sources with
-    //     different score distributions; two-level scan, no group-wide
-    //     window ---
-    "q_group_pct" -> ((s, dir) => {
-      Quantiles.groupQuantileRank(Tables.documents(s, dir), Seq("source"),
-          "n_chars", "doc_id")
-        .select(col("doc_id"), col("source"),
-          r6(col("quantile_rank")).as("pct_micro"))
-    }),
-
-    // --- LLM ops: size-balanced deterministic sharding — round-robin
-    //     deal over a (size-magnitude DESC, hash) order via the two-level
-    //     scan; per-shard byte totals concentrate, no global window ---
-    "q_balanced_shard" -> ((s, dir) => {
-      Sharding.balancedShardTag(Tables.documents(s, dir), "doc_id",
-          "n_chars", nShards = 8, seed = 5L)
-        .select(col("doc_id"), col("shard"))
-    }),
-
-    // --- LLM ops: deterministic Lloyd's k-means (init = k smallest ids,
-    //     micro-rounded argmin, DECIMAL centroid means) — the oracle
-    //     unrolls the same two iterations in SQL, so the ASSIGNMENT
-    //     hash-matches across engines ---
-    "q_kmeans" -> ((s, dir) => {
-      Clustering.kmeans(Tables.embeddings(s, dir), "vec_id", "embedding",
-          k = 4, maxIter = 2)
-        .select(col("vec_id"), col("cluster").cast("long").as("cluster"))
-    }),
-
-    // --- LLM ops: SemDeDup — cluster, then semantic near-dup pairs only
-    //     within a cluster, transitive closure, one representative per
-    //     component (smallest id). Full hash match end-to-end ---
-    "q_semdedup" -> ((s, dir) => {
-      Clustering.semDedup(Tables.embeddings(s, dir), "vec_id", "embedding",
-          k = 4, maxIter = 2, minCosine = 0.4)
-        .select(col("vec_id"), col("label"))
-    }),
-
-    // --- LLM ops: the SHARDED SemDeDup's single-shard face under the
-    //     flat oracle (r16): with shardSizeTarget >= n the composition
-    //     must reduce BIT-identically to flat semDedup with
-    //     k = cellsPerShard (same init, argmin grid, DECIMAL means,
-    //     emptied-cell rule) — so the sharded implementation's whole
-    //     init/assign/update/pair/dedup plumbing is DuckDB-gated via
-    //     q_semdedup's kmeans CTE twin (oracle shared below, the
-    //     streaming-twin pattern). The multi-shard face is
-    //     ClusteringSpec-pinned (SRP planes are Gaussian, not
-    //     SQL-reproducible) and ScaleBench-gated linear ---
-    "q_semdedup_sharded" -> ((s, dir) => {
-      Clustering.semDedupSharded(Tables.embeddings(s, dir), "vec_id",
-          "embedding", shardSizeTarget = Int.MaxValue, cellsPerShard = 4,
-          maxIter = 2, minCosine = 0.4)
-        .select(col("vec_id"), col("label"))
-    }),
-
-    // --- LLM ops: content-defined chunking — md5-nibble boundaries make
-    //     the rule engine-portable, so the whole operator hash-matches ---
-    "q_cdc_chunks" -> ((s, dir) => {
-      Chunking.cdcChunks(Tables.documents(s, dir), "doc_id", "text")
-        .select(col("doc_id"), col("chunk_idx"), col("n_tokens"),
-          col("chunk_md5"))
-    }),
-
-    // --- LLM ops: per-(source, lang) dataset card — volumes, exact-dup
-    //     load, quality mass, in ONE aggregation pass ---
-    "q_corpus_report" -> ((s, dir) => {
-      CorpusReport.report(Tables.documents(s, dir),
-          Seq("source", "lang"), "doc_id", "text")
-        .select(col("source"), col("lang"), col("n_docs"), col("tokens"),
-          col("chars"), col("n_exact_dups"),
-          r6(col("mean_quality")).as("mean_quality_micro"))
-    }),
-
-    // --- LLM ops: top distinctive terms per language (c-TF-IDF slice
-    //     characterization) ---
-    "q_top_terms" -> ((s, dir) => {
-      Retrieval.topTermsPerGroup(Tables.documents(s, dir), Seq("lang"),
-          "text", n = 5)
-        .select(col("lang"), col("term"), col("tf"), col("df_g"),
-          r6(col("score")).as("score_micro"), col("rank"))
-    }),
-
-    // --- LLM ops: row-local decontamination tag (the zero-shuffle /
-    //     streaming-safe face of q_decontam; zero-overlap docs kept) ---
-    "q_decontam_tag" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val bench = docs.filter(pmod(col("doc_id"), lit(53L)) === 0)
-        .select(col("text").as("q"))
-      val grams = Decontam.benchGramSet(bench, "q")
-      Decontam.tagContamination(
-          docs.filter(pmod(col("doc_id"), lit(53L)) =!= 0), grams, "text")
-        .select(col("doc_id"), col("n_overlap"))
-    }),
-
-    // --- Skew machinery: two-stage salted aggregation must equal the
-    //     plain groupBy it spreads (decomposable aggregates over an
-    //     integral column — exact, so a full hash-match, with the salt
-    //     column's nondeterminism erased by the stage-2 recombine) ---
-    "q_salted_agg" -> ((s, dir) => {
-      SkewTools.saltedSumCount(Tables.documents(s, dir), Seq("lang"),
-        "n_chars", salts = 8)
-    }),
-
-    // --- Skew: salt-REPLICATED join (the JOIN half of the skew story —
-    //     q_salted_agg covers aggregation): the big side salted, the
-    //     small dim exploded x8 so a hot key spreads over 8 reducers;
-    //     the salt is provably erased — the result hash-matches the
-    //     plain join ---
-    "q_salted_join" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val dim = docs.groupBy(col("lang"))
-        .agg(avg(col("n_chars")).as("__a"))
-      SkewTools.withSalt(docs, 8)
-        .join(SkewTools.explodeSalt(dim, 8), Seq("lang", "__salt"))
-        .select(col("doc_id"), col("lang"),
-          r6(col("__a")).as("avg_chars_micro"))
-    }),
-
-    // --- LLM ops: hybrid retrieval — BM25 lexical top-20 fused with
-    //     cosine vector top-20 (vec_id plays doc_id) by reciprocal-rank
-    //     fusion; both input rankings and the fusion are DuckDB-exact ---
-    "q_hybrid_rrf" -> ((s, dir) => {
-      val lex = Retrieval.bm25TopK(Tables.documents(s, dir), "doc_id",
-          "text", Seq("table", "scan", "join", "vector"), k = 20)
-        .withColumn("rank", row_number().over(
-          // constant key: ranking a <= 20-row frame is intentionally
-          // single-partition
-          Window.partitionBy(lit(0))
-            .orderBy(col("score").desc, col("doc_id"))))
-        .select(col("doc_id"), col("rank"))
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("vec"))
-      val sem = Similarity.bruteForceTopK(emb.filter(col("vec_id") === 0),
-          emb, "vec_id", "vec_id", "vec", "vec", k = 20)
-        .select(col("corpus_id").as("doc_id"), col("rank"))
-      Retrieval.rrfFuse(Seq(lex, sem), "doc_id", topK = 10)
-        .select(col("doc_id"), col("n_lists"),
-          r6(col("rrf_score")).as("rrf_micro"))
-    }),
-
-    // --- LLM ops: CCNet-style perplexity filter — add-k unigram model
-    //     fit on the corpus, every doc scored by mean NLL ---
-    "q_lm_score" -> ((s, dir) => {
-      LmScore.scoreCorpus(Tables.documents(s, dir), "doc_id", "text")
-        .select(col("doc_id"), col("n_tokens"),
-          r6(col("mean_nll")).as("mean_nll_micro"))
-    }),
-
-    // --- LLM ops: conditional bigram perplexity (unigram fallback on
-    //     first tokens) — the actual LM shape, one rung below KenLM ---
-    "q_lm_bigram" -> ((s, dir) => {
-      LmScore.bigramScoreCorpus(Tables.documents(s, dir), "doc_id",
-          "text")
-        .select(col("doc_id"), col("n_tokens"),
-          r6(col("mean_nll")).as("mean_nll_micro"))
-    }),
-
-    // --- LLM ops: sliding-window RAG chunking — overlapping fixed
-    //     token windows (window=32, stride=24 -> 8 tokens of shared
-    //     context); ZERO shuffles, the whole operator is row-local
-    //     (Chunking.slidingChunks scaladoc) ---
-    "q_rag_chunks" -> ((s, dir) => {
-      Chunking.slidingChunks(Tables.documents(s, dir), "doc_id", "text",
-          window = 32, stride = 24)
-        .select(col("doc_id"), col("chunk_idx"), col("n_tokens"),
-          col("chunk_md5"))
-    }),
-
-    // --- LLM ops: character-entropy quality signal — gibberish /
-    //     degenerate-repetition detector; count-identity form keeps the
-    //     float math to ~1 ulp per distinct char, far under the micro
-    //     rounding ---
-    "q_char_entropy" -> ((s, dir) => {
-      Tables.documents(s, dir).select(col("doc_id"),
-        r6(TextFunctions.charEntropy(col("text")))
-          .as("char_entropy_micro"))
-    }),
-
-    // --- LLM ops: keyword-taxonomy routing — broadcast lexicon as
-    //     array literals, row-local hit counts + deterministic argmax
-    //     (ties to the smaller category name); zero shuffles ---
-    "q_taxonomy_tag" -> ((s, dir) => {
-      Taxonomy.tagCategories(Tables.documents(s, dir), "doc_id", "text",
-        taxonomyLexicon)
-    })
-  )
-
-  /** Shared query set of the q_ndcg gate — ONE constant feeds the Spark
-    * face and the SQL twin. Every term is drawn from the corpus
-    * generator's vocabulary so each pool has real hits. */
-  private val ndcgQueries: Seq[(String, Seq[String])] = Seq(
-    "q1" -> Seq("table", "scan"),
-    "q2" -> Seq("vector", "join"),
-    "q3" -> Seq("stream", "filter"))
-
-  /** Shared WITH-prefix of the q_ndcg / q_mrr oracles: the parametrized
-    * bm25 chain per [[ndcgQueries]] entry, unioned into `pool(qid,
-    * doc_id, rel, score)`. */
-  private lazy val NdcgPoolSql: String = {
-    val blocks = ndcgQueries.zipWithIndex.map { case ((qid, ts), i) =>
-      val inList = ts.map(t => s"'$t'").mkString(", ")
-      s"""p$i AS MATERIALIZED (
-         |  SELECT '$qid' AS qid, doc_id,
-         |    CASE WHEN n_terms = ${ts.size} THEN 1 ELSE 0 END AS rel,
-         |    score
-         |  FROM (
-         |    SELECT doc_id, COUNT(*) AS n_terms,
-         |      CAST(SUM(CAST(s AS DECIMAL(18,8))) AS DOUBLE) AS score
-         |    FROM (
-         |      SELECT doc_id,
-         |        (ln((n - df + 0.5) / (df + 0.5) + 1.0) * (tf * (1.2 + 1.0)))
-         |          / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)) AS s
-         |      FROM (
-         |        SELECT doc_id, dl, term, tf,
-         |          COUNT(*) OVER (PARTITION BY term) AS df
-         |        FROM (
-         |          SELECT doc_id, dl, term, COUNT(*) AS tf FROM hits
-         |          WHERE term IN ($inList) GROUP BY 1, 2, 3)), stats)
-         |    GROUP BY 1)
-         |  ORDER BY score DESC, doc_id LIMIT 20)""".stripMargin
-    }.mkString(",\n")
-    val pools = ndcgQueries.indices.map(i => s"SELECT * FROM p$i")
-      .mkString(" UNION ALL ")
-    s"""WITH toks AS MATERIALIZED (
-       |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS t
-       |  FROM documents),
-       |stats AS MATERIALIZED (
-       |  SELECT COUNT(*) AS n, AVG(len(t)) AS avgdl FROM toks),
-       |hits AS MATERIALIZED (
-       |  SELECT doc_id, len(t) AS dl, unnest(t) AS term FROM toks),
-       |$blocks,
-       |pool AS (SELECT * FROM ($pools))""".stripMargin
-  }
-
-  /** Shared lexicon of the q_taxonomy_tag gate — ONE constant feeds both
-    * the Spark face and the SQL twin (cnt columns + CASE chain are
-    * generated from it), so the two sides cannot drift. Categories must
-    * stay alphabetical — the generated ties-to-smaller-name CASE chain
-    * depends on it and the oracle builder enforces it. */
-  private val taxonomyLexicon: Seq[(String, Seq[String])] = Seq(
-    "compute" -> Seq("agg", "filter", "group", "hash", "join", "merge",
-      "query", "scan", "sort", "window"),
-    "data" -> Seq("batch", "column", "customer", "data", "key", "line",
-      "part", "row", "stream", "table", "value", "vector"),
-    "perf" -> Seq("big", "dup", "fast", "slow", "small"))
-
-  def oracleSql: Map[String, String] = oracleSqlBase ++ Map(
-    // the streaming replay faces are gated against the SAME oracle as
-    // their batch twins: append-replay of a stateless/first-copy pipeline
-    // over a finite source must equal the batch operator bit-for-bit
-    "q_stream_quality" -> oracleSqlBase("q_quality_score"),
-    "q_stream_decontam" -> oracleSqlBase("q_decontam_tag"),
-    "q_stream_sample" -> oracleSqlBase("q_sample_bernoulli"),
-    // streaming calibration == batch calibration (counts and exact
-    // dyadic sums add across micro-batches)
-    "q_stream_calibration" -> oracleSqlBase("q_calibration"),
-    // streaming confusion counts are algebraic — batch twin gates it
-    "q_stream_confusion" -> oracleSqlBase("q_m9_confusion"),
-    // sharded SemDeDup, single-shard face: bit-identical to flat
-    // semDedup by construction (see the gate comment), so the flat
-    // kmeans-CTE oracle gates the sharded implementation end to end
-    "q_semdedup_sharded" -> oracleSqlBase("q_semdedup"),
-    "q_stream_split" ->
-      s"""SELECT doc_id,
-         |  ${HashSql("doc_id", 3L)} < ${Sampling.threshold(0.25)}
-         |    AS is_test
-         |FROM documents""".stripMargin,
-    // streaming CMS == batch CMS (cells add across micro-batches)
-    "q_stream_cms" -> {
-      val bucket = s"(${Mix31Sql("user_id", "5 + row * 1000003")}) % 256"
-      s"""WITH d AS (SELECT * FROM range(0, 4) t(row)),
-         |cells AS (
-         |  SELECT row, $bucket AS bucket, COUNT(*) AS cnt
-         |  FROM events CROSS JOIN d GROUP BY 1, 2),
-         |probe AS (
-         |  SELECT user_id, MIN(COALESCE(c.cnt, 0)) AS est
-         |  FROM (
-         |    SELECT user_id, row, $bucket AS bucket
-         |    FROM (SELECT DISTINCT user_id FROM events) CROSS JOIN d) k
-         |  LEFT JOIN cells c USING (row, bucket) GROUP BY 1),
-         |exact AS (
-         |  SELECT user_id, COUNT(*) AS exact_cnt FROM events GROUP BY 1)
-         |SELECT user_id, est, exact_cnt
-         |FROM probe JOIN exact USING (user_id)""".stripMargin
-    },
-
-    // streaming HLL == batch HLL (max-rho registers are set-semantics),
-    // so the batch estimator chain gates the streaming aggregation
-    "q_stream_hll" ->
-      s"""WITH hkeys AS (
-         |  SELECT event_type AS g, user_id AS k FROM events),
-         |${HllChainSql(seed = 4L)}
-         |SELECT hll.g AS event_type, ${R6("est")} AS est_micro,
-         |  x.exact_distinct
-         |FROM hll JOIN (
-         |  SELECT event_type AS g,
-         |    COUNT(DISTINCT user_id) AS exact_distinct
-         |  FROM events GROUP BY 1) x USING (g)""".stripMargin,
-
-    // first-copy dedup: WHICH row survives is engine-chosen, so the gate
-    // surface is the content set itself — distinct (digest, length)
-    "q_stream_dedup" ->
-      s"""SELECT DISTINCT md5(text) AS digest,
-         |  CAST(length(text) AS BIGINT) AS text_len
-         |FROM documents""".stripMargin
-  )
-
-  private val oracleSqlBase: Map[String, String] = Map(
-    "q_a1_oi" ->
-      s"""WITH e AS ($EventsNs)
-         |SELECT ${CeilNs("ts_ns", H)} AS bin_ns,
-         |  ${R6(s"(SUM(CASE WHEN $Side = -1 THEN value ELSE 0 END) - SUM(CASE WHEN $Side = 1 THEN value ELSE 0 END)) / NULLIF(SUM(CASE WHEN $Side = -1 THEN value ELSE 0 END) + SUM(CASE WHEN $Side = 1 THEN value ELSE 0 END), 0)")} AS oi_micro
-         |FROM e GROUP BY 1""".stripMargin,
-
-    // identical to q_a1_oi's oracle: the streaming replay must reproduce
-    // the batch aggregation bit-for-bit
-    "q_stream_oi" ->
-      s"""WITH e AS ($EventsNs)
-         |SELECT ${CeilNs("ts_ns", H)} AS bin_ns,
-         |  ${R6(s"(SUM(CASE WHEN $Side = -1 THEN value ELSE 0 END) - SUM(CASE WHEN $Side = 1 THEN value ELSE 0 END)) / NULLIF(SUM(CASE WHEN $Side = -1 THEN value ELSE 0 END) + SUM(CASE WHEN $Side = 1 THEN value ELSE 0 END), 0)")} AS oi_micro
-         |FROM e GROUP BY 1""".stripMargin,
-
-    // the stream-stream outer join vs the plain batch LEFT JOIN on the
-    // same interval condition — engine parity incl. the null face
-    "q_stream_join" ->
-      s"""WITH e AS ($EventsNs),
-         |c AS (SELECT event_id AS click_id, user_id, ts_ns AS c_ts
-         |  FROM e WHERE event_type = 'click'),
-         |p AS (SELECT event_id AS purchase_id, user_id, ts_ns AS p_ts
-         |  FROM e WHERE event_type = 'purchase')
-         |SELECT c.click_id, c.user_id, c.c_ts, p.purchase_id, p.p_ts
-         |FROM c LEFT JOIN p ON c.user_id = p.user_id
-         |  AND p.p_ts >= c.c_ts AND p.p_ts <= c.c_ts + ${H}""".stripMargin,
-
-    // the cross-batch face: the same LEFT JOIN, with both sides extended
-    // by the fixture's probe pairs (disjoint 1e6+ user range; click in
-    // batch 0 at maxT - 50 min, purchase in batch 1 at maxT - 30 min)
-    "q_stream_join_xbatch" ->
-      s"""WITH e AS ($EventsNs),
-         |b AS (SELECT event_id, user_id, ts_ns, event_type FROM e
-         |  WHERE event_type IN ('click', 'purchase')),
-         |mx AS (SELECT MAX(ts_ns) AS mt FROM b),
-         |pr AS (SELECT event_id, 1000000 + event_id AS user_id FROM b
-         |  WHERE event_id % 13 = 0),
-         |c AS (
-         |  SELECT event_id AS click_id, user_id, ts_ns AS c_ts
-         |  FROM b WHERE event_type = 'click'
-         |  UNION ALL
-         |  SELECT -1000000 - event_id AS click_id, user_id,
-         |    (SELECT mt FROM mx) - ${5 * M10} AS c_ts FROM pr),
-         |p AS (
-         |  SELECT event_id AS purchase_id, user_id, ts_ns AS p_ts
-         |  FROM b WHERE event_type = 'purchase'
-         |  UNION ALL
-         |  SELECT -2000000 - event_id AS purchase_id, user_id,
-         |    (SELECT mt FROM mx) - $M30 AS p_ts FROM pr)
-         |SELECT c.click_id, c.user_id, c.c_ts, p.purchase_id, p.p_ts
-         |FROM c LEFT JOIN p ON c.user_id = p.user_id
-         |  AND p.p_ts >= c.c_ts AND p.p_ts <= c.c_ts + ${H}""".stripMargin,
-
-    // the dedup-eviction face: the exact expected kept set — every
-    // key's first copy, the fresh-key sentinel, and precisely the
-    // re-arrivals whose originals predate the eviction horizon
-    "q_stream_dedup_late" ->
-      s"""WITH e AS ($EventsNs),
-         |mx AS (SELECT MAX(ts_ns) AS mt FROM e)
-         |SELECT event_id AS k, ts_ns, value FROM e
-         |UNION ALL
-         |SELECT CAST(-1 AS BIGINT) AS k, (SELECT mt FROM mx) AS ts_ns,
-         |  0.0 AS value
-         |UNION ALL
-         |SELECT event_id AS k, (SELECT mt FROM mx) - $M30 AS ts_ns, value
-         |FROM e WHERE event_id % 7 = 0
-         |  AND ts_ns < (SELECT mt FROM mx) - ${3 * H}""".stripMargin,
-
-    // the watermark face: batch aggregation over exactly the rows a
-    // correct watermark replay absorbs — the on-time bulk plus the
-    // recoverable late rows (re-timed to maxT - 30 min), never the
-    // hopeless ones (rewound to the long-closed first window)
-    "q_stream_oi_late" ->
-      s"""WITH e AS ($EventsNs),
-         |b AS (
-         |  SELECT event_id, ts_ns,
-         |    CAST(user_id % 5 AS VARCHAR) AS ticker,
-         |    ($Side) AS side, value AS size
-         |  FROM e),
-         |mx AS (SELECT MAX(ts_ns) AS mt FROM b WHERE event_id % 7 <> 0),
-         |kept AS (
-         |  SELECT ticker, side, size, ts_ns FROM b WHERE event_id % 7 <> 0
-         |  UNION ALL
-         |  SELECT ticker, side, size,
-         |    (SELECT mt FROM mx) - $M30 AS ts_ns
-         |  FROM b WHERE event_id % 7 = 0 AND event_id % 14 <> 0)
-         |SELECT (ts_ns // $H) * $H AS bin_ns, ticker,
-         |  ${R6("(SUM(CASE WHEN side = -1 THEN size ELSE 0 END) - SUM(CASE WHEN side = 1 THEN size ELSE 0 END)) / NULLIF(SUM(CASE WHEN side = -1 THEN size ELSE 0 END) + SUM(CASE WHEN side = 1 THEN size ELSE 0 END), 0)")} AS oi_micro,
-         |  COUNT(*) AS n_events
-         |FROM kept GROUP BY 1, 2""".stripMargin,
-
-    // the streaming iceberg state machine vs the batch forward-as-of
-    // match indicator — q_j3_asof's oracle restricted to the tag surface
-    "q_stream_iceberg" ->
-      s"""WITH e AS ($EventsNs)
-         |SELECT l.event_id, l.user_id, l.ts_ns,
-         |  CAST((SELECT MIN(r.ts_ns) FROM e r
-         |   WHERE r.user_id = l.user_id AND r.event_type = 'purchase'
-         |     AND r.ts_ns >= l.ts_ns AND r.ts_ns <= l.ts_ns + ${H})
-         |   IS NOT NULL AS BIGINT) AS matched
-         |FROM e l WHERE l.event_type = 'click'""".stripMargin,
-
-    // identical to q_sessionize's oracle: the engine's merging
-    // session-window state must reproduce the batch gaps-and-islands
-    "q_stream_sessionize" ->
-      s"""WITH e AS ($EventsNs),
-         |tagged AS (
-         |  SELECT user_id, ts_ns, value,
-         |    CAST(SUM(CASE WHEN prev_ts IS NULL OR ts_ns - prev_ts > ${30L * 60 * 1000000000L}
-         |        THEN 1 ELSE 0 END) OVER (PARTITION BY user_id
-         |          ORDER BY ts_ns, event_id
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - 1 AS BIGINT) AS session_id
-         |  FROM (SELECT user_id, event_id, ts_ns, value,
-         |    LAG(ts_ns) OVER (PARTITION BY user_id ORDER BY ts_ns, event_id) AS prev_ts
-         |    FROM e))
-         |SELECT user_id, session_id, COUNT(*) AS n_events,
-         |  MIN(ts_ns) AS session_start, MAX(ts_ns) AS session_end,
-         |  MAX(ts_ns) - MIN(ts_ns) AS duration_ns,
-         |  ${MoneySum("value")} AS sum_value
-         |FROM tagged GROUP BY 1, 2""".stripMargin,
-
-    "q_a2_weighted_oi" ->
-      s"""SELECT l_returnflag,
-         |  ${R6("SUM(l_extendedprice * (1.0 - 2.0*l_discount)) / SUM(l_extendedprice)")} AS woi_micro
-         |FROM lineitem GROUP BY 1""".stripMargin,
-
-    "q_a3_split_oi" ->
-      s"""WITH e AS (SELECT *, event_id % 2 AS flag, ${CeilNs("ts_ns", H * 6)} AS bin_ns
-         |  FROM ($EventsNs))
-         |SELECT bin_ns,
-         |  ${R6(s"(SUM(CASE WHEN flag=0 AND $Side=-1 THEN value ELSE 0 END) - SUM(CASE WHEN flag=0 AND $Side=1 THEN value ELSE 0 END)) / NULLIF(SUM(CASE WHEN flag=0 AND $Side=-1 THEN value ELSE 0 END) + SUM(CASE WHEN flag=0 AND $Side=1 THEN value ELSE 0 END), 0)")} AS oi_vis_micro,
-         |  ${R6(s"(SUM(CASE WHEN flag=1 AND $Side=-1 THEN value ELSE 0 END) - SUM(CASE WHEN flag=1 AND $Side=1 THEN value ELSE 0 END)) / NULLIF(SUM(CASE WHEN flag=1 AND $Side=-1 THEN value ELSE 0 END) + SUM(CASE WHEN flag=1 AND $Side=1 THEN value ELSE 0 END), 0)")} AS oi_ib_micro
-         |FROM e GROUP BY 1""".stripMargin,
-
-    "q_a5_first_last" ->
-      s"""WITH e AS ($EventsNs)
-         |SELECT user_id, arg_min(value, event_id) AS first_value,
-         |  arg_max(value, event_id) AS last_value,
-         |  MIN(ts_ns) AS first_ts_ns, MAX(ts_ns) AS last_ts_ns,
-         |  COUNT(*) AS n
-         |FROM e GROUP BY 1""".stripMargin,
-
-    "q_a6_event_number" ->
-      s"""WITH e AS ($EventsNs)
-         |SELECT event_id,
-         |  ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts_ns, event_id) - 1 AS event_number
-         |FROM e""".stripMargin,
-
-    "q_a7_resample" ->
-      s"""WITH e AS ($EventsNs)
-         |SELECT ${FloorNs("ts_ns", M15)} AS bin_ns, event_type,
-         |  COUNT(*) AS n, ${R6("AVG(value)")} AS avg_micro,
-         |  ${MoneySum("value")} AS sum_value
-         |FROM e GROUP BY 1, 2""".stripMargin,
-
-    // TWAP: the same staircase holding-time weights (lead clipped at
-    // the bin edge), decimal value*dt sums
-    "q_twap" -> {
-      val binEnd = s"${FloorNs("ts_ns", H)} + $H"
-      s"""WITH e AS ($EventsNs),
-         |b AS (
-         |  -- NULL values dropped BEFORE the window (twap convention: a
-         |  -- missing observation extends the prior staircase level)
-         |  SELECT user_id, value, ${FloorNs("ts_ns", H)} AS bin_ns,
-         |    LEAST(COALESCE(LEAD(ts_ns) OVER (PARTITION BY user_id
-         |        ORDER BY ts_ns, event_id), $binEnd), $binEnd) - ts_ns
-         |      AS dt
-         |  FROM e WHERE value IS NOT NULL)
-         |SELECT user_id, bin_ns, COUNT(*) AS n_obs,
-         |  CAST(SUM(dt) AS BIGINT) AS weight_ns,
-         |  ${R6("CASE WHEN SUM(dt) > 0 THEN CAST(SUM(CAST(value * dt AS DECIMAL(28,4))) AS DOUBLE) / SUM(dt) END")} AS twap_micro
-         |FROM b GROUP BY 1, 2""".stripMargin
-    },
-
-    "q_a8_summary" ->
-      s"""SELECT event_type, COUNT(*) AS n, ${R6("AVG(value)")} AS mean_micro,
-         |  ${R6("stddev_samp(value)")} AS std_micro,
-         |  MIN(value) AS min_value, MAX(value) AS max_value
-         |FROM events GROUP BY 1""".stripMargin,
-
-    "q_a10_corr" ->
-      s"""SELECT l_returnflag, ${R6("corr(l_quantity, l_extendedprice)")} AS corr_micro
-         |FROM lineitem GROUP BY 1""".stripMargin,
-
-    "q_a12_counts" ->
-      s"""SELECT o_orderpriority, COUNT(*) AS n_orders,
-         |  COUNT(DISTINCT o_custkey) AS n_customers,
-         |  ${MoneySum("o_totalprice")} AS sum_price
-         |FROM orders GROUP BY 1""".stripMargin,
-
-    "q_a13_moments" ->
-      // population moments from power sums (same formula as the Spark side)
-      s"""WITH s AS (
-         |  SELECT event_type, COUNT(*)::DOUBLE AS n, SUM(value) AS s1,
-         |    SUM(value*value) AS s2, SUM(value*value*value) AS s3,
-         |    SUM(value*value*value*value) AS s4
-         |  FROM events GROUP BY 1)
-         |SELECT event_type,
-         |  ${R6("(s3/n - 3*(s1/n)*(s2/n) + 2*(s1/n)*(s1/n)*(s1/n)) / pow(s2/n - (s1/n)*(s1/n), 1.5)")} AS skew_micro,
-         |  ${R6("((s4 - 4*(s1/n)*s3 + 6*(s1/n)*(s1/n)*s2 - 4*(s1/n)*(s1/n)*(s1/n)*s1 + n*(s1/n)*(s1/n)*(s1/n)*(s1/n))/n) / pow(s2/n - (s1/n)*(s1/n), 2)")} AS kurt_micro
-         |FROM s""".stripMargin,
-
-    "q_j2_equi_join" ->
-      s"""SELECT n_name,
-         |  ${MoneySum("l_extendedprice * (1.0 - l_discount)")} AS revenue,
-         |  COUNT(*) AS n_items
-         |FROM lineitem
-         |JOIN orders ON l_orderkey = o_orderkey
-         |JOIN customer ON o_custkey = c_custkey
-         |JOIN nation ON c_nationkey = n_nationkey
-         |GROUP BY 1""".stripMargin,
-
-    "q_j3_asof" ->
-      s"""WITH e AS ($EventsNs)
-         |SELECT l.event_id, l.user_id, l.ts_ns,
-         |  (SELECT MIN(r.ts_ns) FROM e r
-         |   WHERE r.user_id = l.user_id AND r.event_type = 'purchase'
-         |     AND r.ts_ns >= l.ts_ns AND r.ts_ns <= l.ts_ns + ${H}) AS asof_time,
-         |  CAST((SELECT MIN(r.ts_ns) FROM e r
-         |   WHERE r.user_id = l.user_id AND r.event_type = 'purchase'
-         |     AND r.ts_ns >= l.ts_ns AND r.ts_ns <= l.ts_ns + ${H}) IS NOT NULL AS BIGINT) AS matched
-         |FROM e l WHERE l.event_type = 'click'""".stripMargin,
-
-    "q_j5_spine" ->
-      s"""WITH e AS (SELECT ${FloorNs("epoch_ns(ts)", H * 6)} AS bin_ns FROM events),
-         |agg AS (SELECT bin_ns, COUNT(*) AS n FROM e GROUP BY 1),
-         |bounds AS (SELECT MIN(bin_ns) AS lo, MAX(bin_ns) AS hi FROM e),
-         |spine AS (SELECT unnest(generate_series(lo, hi, ${H * 6})) AS bin_ns FROM bounds)
-         |SELECT s.bin_ns, COALESCE(a.n, 0) AS n
-         |FROM spine s LEFT JOIN agg a ON s.bin_ns = a.bin_ns""".stripMargin,
-
-    "q_j6_dim_join" ->
-      s"""SELECT r_name, COUNT(*) AS n_orders, ${MoneySum("o_totalprice")} AS sum_price
-         |FROM orders
-         |JOIN customer ON o_custkey = c_custkey
-         |JOIN nation ON c_nationkey = n_nationkey
-         |JOIN region ON n_regionkey = r_regionkey
-         |GROUP BY 1""".stripMargin,
-
-    "q_j8_outer_fill" ->
-      s"""WITH c AS (SELECT user_id, COUNT(*) AS n_clicks FROM events
-         |  WHERE event_type = 'click' GROUP BY 1),
-         |e AS (SELECT user_id, COUNT(*) AS n_errors FROM events
-         |  WHERE event_type = 'error' GROUP BY 1)
-         |SELECT COALESCE(c.user_id, e.user_id) AS user_id,
-         |  COALESCE(n_clicks, 0) AS n_clicks, COALESCE(n_errors, 0) AS n_errors
-         |FROM c FULL OUTER JOIN e ON c.user_id = e.user_id""".stripMargin,
-
-    "q_w1_lag_lead" ->
-      s"""WITH e AS ($EventsNs)
-         |SELECT event_id, user_id,
-         |  LAG(value, 1) OVER w AS prev_value,
-         |  LEAD(value, 1) OVER w AS next_value,
-         |  ${R6("ln(value / (LAG(value, 1) OVER w))")} AS log_ret_micro
-         |FROM e
-         |WINDOW w AS (PARTITION BY user_id ORDER BY ts_ns, event_id)""".stripMargin,
-
-    "q_w2_cond_fill" ->
-      s"""WITH e AS ($EventsNs)
-         |SELECT event_id,
-         |  COALESCE(LAST_VALUE(CASE WHEN event_type = 'purchase' THEN value END IGNORE NULLS)
-         |    OVER (PARTITION BY user_id ORDER BY ts_ns, event_id
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0.0) AS last_purchase_value
-         |FROM e""".stripMargin,
-
-    "q_w3_rolling" ->
-      s"""WITH e AS ($EventsNs)
-         |SELECT event_id,
-         |  ${R6("SUM(value) OVER (PARTITION BY user_id ORDER BY ts_ns, event_id ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)")} AS rolling5_micro
-         |FROM e""".stripMargin,
-
-    "q_w4_rank_topk" ->
-      s"""SELECT o_orderpriority, rk, o_orderkey, o_totalprice FROM (
-         |  SELECT o_orderpriority, o_orderkey, o_totalprice,
-         |    ROW_NUMBER() OVER (PARTITION BY o_orderpriority
-         |      ORDER BY o_totalprice DESC, o_orderkey) AS rk
-         |  FROM orders) WHERE rk <= 3""".stripMargin,
-
-    "q_w5_cum" ->
-      s"""WITH e AS ($EventsNs)
-         |SELECT event_id,
-         |  ${R6("SUM(value) OVER w")} AS cumsum_micro,
-         |  ${R6("exp(SUM(ln(1.0 + value/10000.0)) OVER w)")} AS cumprod_micro
-         |FROM e
-         |WINDOW w AS (PARTITION BY user_id ORDER BY ts_ns, event_id
-         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin,
-
-    "q_w6_diff" ->
-      s"""WITH e AS ($EventsNs)
-         |SELECT event_id,
-         |  value - LAG(value, 1) OVER w AS dvalue,
-         |  ts_ns - LAG(ts_ns, 1) OVER w AS dts_ns
-         |FROM e
-         |WINDOW w AS (PARTITION BY user_id ORDER BY ts_ns, event_id)""".stripMargin,
-
-    "q_w7_ceil_bins" ->
-      s"""WITH e AS ($EventsNs)
-         |SELECT ${CeilNs("ts_ns", M5)} AS bin_ns, event_type, COUNT(*) AS n
-         |FROM e GROUP BY 1, 2""".stripMargin,
-
-    "q_o2_topk" ->
-      s"""SELECT o_orderkey, o_totalprice FROM orders
-         |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin,
-
-    "q_u1_union" ->
-      s"""SELECT event_id, 'big_purchase' AS tag FROM events
-         |  WHERE event_type = 'purchase' AND value > 150
-         |UNION ALL
-         |SELECT event_id, 'error' AS tag FROM events WHERE event_type = 'error'""".stripMargin,
-
-    "q_u2_semi" ->
-      s"""SELECT c_custkey, c_name FROM customer
-         |WHERE EXISTS (SELECT 1 FROM orders
-         |  WHERE o_custkey = c_custkey AND o_totalprice > 200000)""".stripMargin,
-
-    "q_p2_filter_project" ->
-      s"""SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
-         |  l_extendedprice * (1.0 - l_discount) AS revenue,
-         |  l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax) AS charge
-         |FROM lineitem WHERE l_returnflag = 'R' AND l_quantity >= 30""".stripMargin,
-
-    "q_p6_quantile_band" ->
-      s"""WITH b AS (SELECT quantile_cont(l_extendedprice, 0.025) AS lo,
-         |  quantile_cont(l_extendedprice, 0.975) AS hi FROM lineitem)
-         |SELECT ${R6("lo")} AS lo_micro, ${R6("hi")} AS hi_micro,
-         |  (SELECT COUNT(*) FROM lineitem, b
-         |   WHERE l_extendedprice >= lo AND l_extendedprice <= hi) AS n_in_band
-         |FROM b""".stripMargin,
-
-    "q_f7_zscore" ->
-      s"""SELECT event_id,
-         |  ${R6("(value - AVG(value) OVER w) / stddev_samp(value) OVER w")} AS z_micro
-         |FROM events
-         |WINDOW w AS (PARTITION BY event_type)""".stripMargin,
-
-    // the two-level scan's ordinal IS the global ORDER BY rank
-    // NULLS FIRST is explicit: timeOrderSeq routes NULL ts to the lowest
-    // slice (Spark ascending default), but DuckDB defaults to NULLS LAST —
-    // without the modifier the twins diverge the moment events carry a
-    // NULL ts (non-null today; the contract should not depend on that)
-    "q_o1_sort" ->
-      s"""WITH e AS ($EventsNs)
-         |SELECT event_id,
-         |  ROW_NUMBER() OVER (ORDER BY ts_ns NULLS FIRST, event_id) - 1 AS pos
-         |FROM e""".stripMargin,
-
-    "q_f4_datetime" ->
-      s"""WITH e AS ($EventsNs),
-         |t AS (SELECT event_id, make_timestamp(ts_ns // 1000) AS ts
-         |      FROM e)
-         |SELECT event_id,
-         |  CAST(EXTRACT(YEAR FROM ts) AS BIGINT) AS y,
-         |  CAST(EXTRACT(MONTH FROM ts) AS BIGINT) AS mo,
-         |  CAST(EXTRACT(DAY FROM ts) AS BIGINT) AS d,
-         |  CAST(EXTRACT(HOUR FROM ts) AS BIGINT) AS h,
-         |  CAST(EXTRACT(MINUTE FROM ts) AS BIGINT) AS mi,
-         |  CAST(EXTRACT(SECOND FROM ts) AS BIGINT) AS sec,
-         |  strftime(ts, '%Y-%m-%d') AS day_str,
-         |  epoch_us(ts) * 1000 AS rt_ns
-         |FROM t""".stripMargin,
-
-    "q_f5_string" ->
-      s"""WITH f AS (
-         |  SELECT doc_id,
-         |    source || '_' || lang || '_' || CAST(doc_id AS VARCHAR)
-         |      || '.csv' AS fname
-         |  FROM documents)
-         |SELECT doc_id, fname,
-         |  string_split(fname, '_')[1] AS src_part,
-         |  string_split(fname, '_')[2] AS lang_part,
-         |  CAST(regexp_extract(fname, '([0-9]+)\\.csv$$', 1) AS BIGINT)
-         |    AS id_num,
-         |  contains(fname, 'en') AS has_en
-         |FROM f""".stripMargin,
-
-    "q_f6_bucketize" ->
-      s"""WITH e AS ($EventsNs),
-         |b AS (
-         |  SELECT event_id, value * 10.0 AS spread FROM e),
-         |t AS (
-         |  SELECT event_id,
-         |    CASE WHEN spread > 0 AND spread <= 500 THEN '0-500'
-         |         WHEN spread > 500 AND spread <= 1000 THEN '500-1000'
-         |         WHEN spread > 1000 AND spread <= 1500 THEN '1000-1500'
-         |         WHEN spread > 1500 AND spread <= 2000 THEN '1500-2000'
-         |         WHEN spread > 2000 THEN '>2000' END AS bucket,
-         |    event_id % 3 = 0 AS correct
-         |  FROM b)
-         |SELECT bucket, correct, COUNT(*) AS n
-         |FROM t WHERE bucket IS NOT NULL GROUP BY 1, 2""".stripMargin,
-
-    "q_m5_regression" ->
-      s"""SELECT l_returnflag,
-         |  ${R6("regr_slope(l_extendedprice, l_quantity)")} AS slope_micro,
-         |  ${R6("regr_intercept(l_extendedprice, l_quantity)")} AS intercept_micro,
-         |  ${R6("regr_r2(l_extendedprice, l_quantity)")} AS r2_micro,
-         |  CAST(regr_count(l_extendedprice, l_quantity) AS BIGINT) AS n
-         |FROM lineitem GROUP BY 1""".stripMargin,
-
-    "q_m10_sharpe" ->
-      s"""WITH e AS ($EventsNs),
-         |daily AS (
-         |  SELECT user_id, ${FloorNs("ts_ns", DAY)} AS day_ns,
-         |    SUM((CASE WHEN event_type IN ('click','view','purchase') THEN -1 ELSE 1 END) * value) AS ret
-         |  FROM e GROUP BY 1, 2),
-         |s AS (
-         |  SELECT user_id, COUNT(*)::DOUBLE AS n, AVG(ret) AS mean_ret,
-         |    stddev_samp(ret) AS sd_ret, SUM(ret) AS s1, SUM(ret*ret) AS s2,
-         |    SUM(ret*ret*ret) AS s3, SUM(ret*ret*ret*ret) AS s4
-         |  FROM daily GROUP BY 1),
-         |m AS (
-         |  SELECT user_id, n, mean_ret, sd_ret, mean_ret / sd_ret AS sr,
-         |    (s3/n - 3*(s1/n)*(s2/n) + 2*(s1/n)*(s1/n)*(s1/n)) / pow(s2/n - (s1/n)*(s1/n), 1.5) AS g3,
-         |    ((s4 - 4*(s1/n)*s3 + 6*(s1/n)*(s1/n)*s2 - 4*(s1/n)*(s1/n)*(s1/n)*s1 + n*(s1/n)*(s1/n)*(s1/n)*(s1/n))/n) / pow(s2/n - (s1/n)*(s1/n), 2) AS g4
-         |  FROM s WHERE n >= 3 AND sd_ret > 0)
-         |SELECT user_id, CAST(n AS BIGINT) AS n_days,
-         |  ${R6("mean_ret")} AS mean_micro, ${R6("sd_ret")} AS sd_micro,
-         |  ${R6("sr")} AS sharpe_micro,
-         |  ${R6("sr / sqrt((1.0 - g3*sr + (g4 - 1.0)*sr*sr/4.0) / (n - 1.0))")} AS tstat_micro,
-         |  ${R6("sr * sqrt(252.0)")} AS annual_micro
-         |FROM m""".stripMargin,
-
-    "q_m11_portfolio" ->
-      s"""WITH e AS ($EventsNs),
-         |sig AS (
-         |  SELECT ${FloorNs("ts_ns", H * 6)} AS bin_ns, user_id,
-         |    SUM((CASE WHEN event_type IN ('click','view','purchase') THEN -1 ELSE 1 END) * value) AS signal
-         |  FROM e GROUP BY 1, 2),
-         |ranked AS (
-         |  SELECT bin_ns, user_id, signal,
-         |    ROW_NUMBER() OVER (PARTITION BY bin_ns ORDER BY signal DESC, user_id) AS rk,
-         |    COUNT(*) OVER (PARTITION BY bin_ns) AS n_users
-         |  FROM sig)
-         |SELECT bin_ns,
-         |  ${R6("SUM(CASE WHEN rk <= 2 THEN signal ELSE 0.0 END) - SUM(CASE WHEN rk > n_users - 2 THEN signal ELSE 0.0 END)")} AS pnl_micro,
-         |  COUNT(*) AS n_users_out
-         |FROM ranked GROUP BY 1""".stripMargin,
-
-    "q_s3_file_meta" ->
-      s"""SELECT DISTINCT 'sf0.01' AS sf, 'events' AS table_name FROM events""".stripMargin,
-
-    "q_a4_size_oi" ->
-      s"""WITH t AS (
-         |  SELECT l_returnflag, quantile_cont(l_quantity, 0.3333333333333333) AS q1,
-         |    quantile_cont(l_quantity, 0.6666666666666666) AS q2
-         |  FROM lineitem GROUP BY 1),
-         |tagged AS (
-         |  SELECT l.l_returnflag, l_extendedprice, l_discount,
-         |    CASE WHEN l_quantity < q1 THEN 'small'
-         |         WHEN l_quantity <= q2 THEN 'medium' ELSE 'large' END AS bucket
-         |  FROM lineitem l JOIN t ON l.l_returnflag = t.l_returnflag)
-         |SELECT l_returnflag,
-         |  ${R6("SUM(CASE WHEN bucket='small' THEN l_extendedprice*(1.0-2.0*l_discount) ELSE 0 END) / NULLIF(SUM(CASE WHEN bucket='small' THEN l_extendedprice ELSE 0 END), 0)")} AS oi_small_micro,
-         |  ${R6("SUM(CASE WHEN bucket='medium' THEN l_extendedprice*(1.0-2.0*l_discount) ELSE 0 END) / NULLIF(SUM(CASE WHEN bucket='medium' THEN l_extendedprice ELSE 0 END), 0)")} AS oi_medium_micro,
-         |  ${R6("SUM(CASE WHEN bucket='large' THEN l_extendedprice*(1.0-2.0*l_discount) ELSE 0 END) / NULLIF(SUM(CASE WHEN bucket='large' THEN l_extendedprice ELSE 0 END), 0)")} AS oi_large_micro
-         |FROM tagged GROUP BY 1""".stripMargin,
-
-    "q_p3_session" ->
-      s"""WITH e AS ($EventsNs)
-         |SELECT event_type, COUNT(*) AS n, ${MoneySum("value")} AS sum_value
-         |FROM e
-         |WHERE (ts_ns % ${86400L * 1000000000L}) // 1000000000 BETWEEN ${10 * 3600} AND ${15 * 3600 + 1800}
-         |GROUP BY 1""".stripMargin,
-
-    "q_p4_dedup_keys" ->
-      s"""WITH e AS ($EventsNs),
-         |r AS (SELECT user_id, event_type, event_id, ts_ns,
-         |  ROW_NUMBER() OVER (PARTITION BY user_id, event_type
-         |    ORDER BY ts_ns, event_id) AS rn FROM e)
-         |SELECT user_id, event_type, event_id, ts_ns FROM r WHERE rn = 1""".stripMargin,
-
-    "q_a9_time_of_day" ->
-      s"""WITH e AS ($EventsNs)
-         |SELECT (ts_ns % ${86400L * 1000000000L}) // ${3600L * 1000000000L} AS hour_of_day,
-         |  COUNT(*) AS n, ${R6("AVG(value)")} AS mean_micro,
-         |  ${R6("stddev_samp(value)")} AS std_micro
-         |FROM e GROUP BY 1""".stripMargin,
-
-    "q_w8_gauss_smooth" -> {
-      val ker = Seq(-2, -1, 0, 1, 2).map(k => k -> math.exp(-k * k / 2.0))
-      val num = ker.map { case (k, wt) =>
-        val c = if (k < 0) s"LAG(value, ${-k}) OVER w"
-                else if (k > 0) s"LEAD(value, $k) OVER w" else "value"
-        s"(CASE WHEN $c IS NOT NULL THEN $c * $wt ELSE 0.0 END)"
-      }.mkString(" + ")
-      val den = ker.map { case (k, wt) =>
-        val c = if (k < 0) s"LAG(value, ${-k}) OVER w"
-                else if (k > 0) s"LEAD(value, $k) OVER w" else "value"
-        s"(CASE WHEN $c IS NOT NULL THEN $wt ELSE 0.0 END)"
-      }.mkString(" + ")
-      s"""WITH e AS ($EventsNs)
-         |SELECT event_id, ${R6(s"($num) / ($den)")} AS smooth_micro
-         |FROM e
-         |WINDOW w AS (PARTITION BY user_id ORDER BY ts_ns, event_id)""".stripMargin
-    },
-
-    "q_w9_acf" ->
-      s"""WITH e AS ($EventsNs),
-         |l AS (SELECT user_id, value,
-         |  LAG(value, 1) OVER w AS l1, LAG(value, 2) OVER w AS l2,
-         |  LAG(value, 3) OVER w AS l3
-         |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_ns, event_id))
-         |SELECT user_id, ${R6("corr(value, l1)")} AS acf1_micro,
-         |  ${R6("corr(value, l2)")} AS acf2_micro,
-         |  ${R6("corr(value, l3)")} AS acf3_micro
-         |FROM l GROUP BY 1""".stripMargin,
-
-    "q_m7_multi_ols" ->
-      s"""WITH g AS (
-         |  SELECT l_returnflag, COUNT(*)::DOUBLE AS n, SUM(l_quantity) AS s1,
-         |    SUM(l_discount) AS s2, SUM(l_quantity*l_quantity) AS s11,
-         |    SUM(l_quantity*l_discount) AS s12, SUM(l_discount*l_discount) AS s22,
-         |    SUM(l_extendedprice) AS sy, SUM(l_quantity*l_extendedprice) AS s1y,
-         |    SUM(l_discount*l_extendedprice) AS s2y
-         |  FROM lineitem GROUP BY 1),
-         |d AS (SELECT *,
-         |  n*(s11*s22 - s12*s12) - s1*(s1*s22 - s12*s2) + s2*(s1*s12 - s11*s2) AS det
-         |  FROM g)
-         |SELECT l_returnflag,
-         |  ${R6("(sy*(s11*s22 - s12*s12) - s1*(s1y*s22 - s12*s2y) + s2*(s1y*s12 - s11*s2y)) / det")} AS b0_micro,
-         |  ${R6("(n*(s1y*s22 - s2y*s12) - sy*(s1*s22 - s12*s2) + s2*(s1*s2y - s1y*s2)) / det")} AS b1_micro,
-         |  ${R6("(n*(s11*s2y - s12*s1y) - s1*(s1*s2y - s1y*s2) + sy*(s1*s12 - s11*s2)) / det")} AS b2_micro
-         |FROM d""".stripMargin,
-
-    "q_m8_rolling_refit" ->
-      s"""WITH e AS ($EventsNs),
-         |daily AS (
-         |  SELECT user_id, ts_ns // ${DAY} AS day, SUM(value) AS v
-         |  FROM e GROUP BY 1, 2),
-         |r AS (
-         |  SELECT user_id, day,
-         |    regr_slope(v, day) OVER w AS slope,
-         |    regr_intercept(v, day) OVER w AS icept,
-         |    regr_count(v, day) OVER w AS n_train
-         |  FROM daily
-         |  WINDOW w AS (PARTITION BY user_id ORDER BY day
-         |    ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING))
-         |SELECT user_id, day, ${R6("icept + slope * day")} AS pred_micro
-         |FROM r WHERE n_train = 3""".stripMargin,
-
-    // EP2 composition: every CTE is an already-proven oracle fragment —
-    // the M8 pooled rolling normal equations in closed form (the twin of
-    // rollingRefitSignals' power-sum + QR path), M11 portfolio
-    // rank/top-bottom with pct sizing and sign agreement, M10 power-sum
-    // Sharpe
-    "q_ep2_full" ->
-      s"""WITH e AS ($EventsNs),
-         |daily AS (
-         |  SELECT user_id, ts_ns // ${DAY} AS day,
-         |    SUM(($Side) * value) AS oi, AVG(value) AS ret
-         |  FROM e GROUP BY 1, 2),
-         |panel AS (
-         |  SELECT user_id, day, oi, ret,
-         |    lead(ret) OVER (PARTITION BY user_id ORDER BY day) AS fret
-         |  FROM daily),
-         |day_sums AS (
-         |  SELECT day, COUNT(*)::DOUBLE AS c0, SUM(oi) AS sx,
-         |    SUM(oi*oi) AS sxx, SUM(ret) AS sy, SUM(oi*ret) AS sxy
-         |  FROM panel GROUP BY 1),
-         |rolled AS (
-         |  SELECT day, SUM(c0) OVER w AS n, SUM(sx) OVER w AS sx,
-         |    SUM(sxx) OVER w AS sxx, SUM(sy) OVER w AS sy,
-         |    SUM(sxy) OVER w AS sxy, COUNT(*) OVER w AS train_days
-         |  FROM day_sums
-         |  WINDOW w AS (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING)),
-         |betas AS (
-         |  SELECT day,
-         |    (sy*sxx - sx*sxy) / (n*sxx - sx*sx) AS b0,
-         |    (n*sxy - sx*sy) / (n*sxx - sx*sx) AS b1
-         |  FROM rolled WHERE train_days = 3
-         |    AND n*sxx - sx*sx > 1e-9 * (n*sxx + sx*sx)),
-         |sig AS (
-         |  SELECT p.user_id, p.day, p.fret, b.b0 + b.b1 * p.oi AS signal
-         |  FROM panel p JOIN betas b ON p.day = b.day
-         |  WHERE p.fret IS NOT NULL),
-         |vet AS (SELECT * FROM sig WHERE abs(signal) > 0.05),
-         |ranked AS (
-         |  SELECT day, fret, signal,
-         |    ROW_NUMBER() OVER (PARTITION BY day
-         |      ORDER BY signal DESC, user_id) AS rk,
-         |    COUNT(*) OVER (PARTITION BY day) AS n_users
-         |  FROM vet),
-         |pnl AS (
-         |  SELECT day,
-         |    SUM(CASE WHEN rk <= GREATEST(FLOOR(n_users * 0.25), 1)
-         |          AND signal > 0 THEN fret ELSE 0.0 END)
-         |      - SUM(CASE WHEN rk > n_users - GREATEST(FLOOR(n_users * 0.25), 1)
-         |          AND signal < 0 THEN fret ELSE 0.0 END)
-         |      AS pnl
-         |  FROM ranked GROUP BY 1),
-         |s AS (
-         |  SELECT COUNT(*)::DOUBLE AS n, AVG(pnl) AS mean_ret,
-         |    stddev_samp(pnl) AS sd_ret, SUM(pnl) AS s1,
-         |    SUM(pnl*pnl) AS s2, SUM(pnl*pnl*pnl) AS s3,
-         |    SUM(pnl*pnl*pnl*pnl) AS s4
-         |  FROM pnl),
-         |m AS (
-         |  SELECT n, mean_ret, sd_ret, mean_ret / sd_ret AS sr,
-         |    (s3/n - 3*(s1/n)*(s2/n) + 2*(s1/n)*(s1/n)*(s1/n)) / pow(s2/n - (s1/n)*(s1/n), 1.5) AS g3,
-         |    ((s4 - 4*(s1/n)*s3 + 6*(s1/n)*(s1/n)*s2 - 4*(s1/n)*(s1/n)*(s1/n)*s1 + n*(s1/n)*(s1/n)*(s1/n)*(s1/n))/n) / pow(s2/n - (s1/n)*(s1/n), 2) AS g4
-         |  FROM s WHERE n >= 3 AND sd_ret > 0)
-         |SELECT CAST(n AS BIGINT) AS n_days,
-         |  ${R6("mean_ret")} AS mean_micro, ${R6("sd_ret")} AS sd_micro,
-         |  ${R6("mean_ret / sd_ret")} AS sharpe_micro,
-         |  ${R6("sr / sqrt((1.0 - g3*sr + (g4 - 1.0)*sr*sr/4.0) / (n - 1.0))")} AS tstat_micro,
-         |  ${R6("sr * sqrt(252.0)")} AS annual_micro
-         |FROM m""".stripMargin,
-
-    // q_ep1_full twin: the EP1 panel chain (ep1PanelSql) + per-ticker
-    // closed-form simple OLS of log_ret on OI — the same normal equations
-    // the Spark side solves via QR on distributed power sums
-    "q_ep1_full" ->
-      s"""WITH e AS ($EventsNs),
-         |${ep1PanelSql(900L)},
-         |pagg AS (
-         |  SELECT ticker, COUNT(*) AS n_bins,
-         |    CAST(SUM(CASE WHEN log_ret IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_empty,
-         |    ${R6("SUM(oi)")} AS oi_sum_micro
-         |  FROM panel GROUP BY 1),
-         |live AS (
-         |  SELECT ticker, oi, log_ret FROM panel
-         |  WHERE log_ret IS NOT NULL AND oi IS NOT NULL),
-         |sums AS (
-         |  SELECT ticker, COUNT(*)::DOUBLE AS n, SUM(oi) AS sx,
-         |    SUM(oi*oi) AS sxx, SUM(log_ret) AS sy, SUM(oi*log_ret) AS sxy
-         |  FROM live GROUP BY 1),
-         |fit AS (
-         |  SELECT ticker,
-         |    ${R6("(sy*sxx - sx*sxy) / (n*sxx - sx*sx)")} AS b0_micro,
-         |    ${R6("(n*sxy - sx*sy) / (n*sxx - sx*sx)")} AS b_oi_micro,
-         |    CAST(n AS BIGINT) AS n_fit
-         |  FROM sums)
-         |SELECT p.ticker, p.n_bins, p.n_empty, p.oi_sum_micro,
-         |  f.b0_micro, f.b_oi_micro, f.n_fit
-         |FROM pagg p JOIN fit f ON p.ticker = f.ticker""".stripMargin,
-
-    // q_ep1_multidelta twin: the same panel chain at 15- and 30-minute
-    // deltas, per-ticker summaries unioned with the delta label
-    "q_ep1_multidelta" ->
-      Seq(900L -> 15L, 1800L -> 30L).map { case (stepS, mins) =>
-        s"""SELECT ticker, n_bins, n_empty, oi_sum_micro,
-           |  CAST($mins AS BIGINT) AS delta_min
-           |FROM (
-           |  WITH e AS ($EventsNs),
-           |  ${ep1PanelSql(stepS)}
-           |  SELECT ticker, COUNT(*) AS n_bins,
-           |    CAST(SUM(CASE WHEN log_ret IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-           |      AS n_empty,
-           |    ${R6("SUM(oi)")} AS oi_sum_micro
-           |  FROM panel GROUP BY 1)""".stripMargin
-      }.mkString("\nUNION ALL\n"),
-
-    // q_ep3_full twin: daily vis-OI panel + deterministic bars/params +
-    // ClOp = ln(open / prev_close) + the same left-associated signal combo
-    "q_ep3_full" ->
-      s"""WITH e AS ($EventsNs),
-         |lob AS ($Ep1LobsterVis),
-         |daily AS (
-         |  SELECT ticker, day_i,
-         |    (CAST(SUM(CASE WHEN dir = -1 THEN size ELSE 0 END) AS DOUBLE)
-         |      - CAST(SUM(CASE WHEN dir = 1 THEN size ELSE 0 END) AS DOUBLE))
-         |      / NULLIF(CAST(SUM(size) AS DOUBLE), 0.0) AS oi
-         |  FROM lob GROUP BY 1, 2),
-         |bars AS (
-         |  SELECT ticker, day_i,
-         |    100.0 + ((day_i * 8 + CAST(ticker AS BIGINT)) % 7) * 0.25 AS open,
-         |    100.0 + ((day_i * 8 + CAST(ticker AS BIGINT)) % 5 + 1) * 0.25
-         |      AS close
-         |  FROM (SELECT DISTINCT ticker, day_i FROM lob)),
-         |clop AS (
-         |  SELECT ticker, day_i,
-         |    CASE WHEN lag(close) OVER w > 0
-         |      THEN ln(open / lag(close) OVER w) END AS clop_ret
-         |  FROM bars WINDOW w AS (PARTITION BY ticker ORDER BY day_i)),
-         |params AS (
-         |  SELECT ticker,
-         |    (CAST(ticker AS BIGINT) % 3 - 1) * 0.125 AS intercept,
-         |    0.5 + (CAST(ticker AS BIGINT) % 2) * 0.25 AS b_oi,
-         |    -0.25 + (CAST(ticker AS BIGINT) % 3) * 0.125 AS b_clop
-         |  FROM (SELECT DISTINCT ticker FROM lob))
-         |SELECT d.ticker, d.day_i, ${R6("d.oi")} AS oi_micro,
-         |  ${R6("c.clop_ret")} AS clop_micro,
-         |  ${R6("(p.intercept + COALESCE(d.oi, 0.0) * p.b_oi) + COALESCE(c.clop_ret, 0.0) * p.b_clop")}
-         |    AS signal_micro
-         |FROM daily d
-         |LEFT JOIN clop c ON d.ticker = c.ticker AND d.day_i = c.day_i
-         |LEFT JOIN params p ON d.ticker = p.ticker""".stripMargin,
-
-    "q_f8_f9_signal_pnl" ->
-      s"""WITH e AS ($EventsNs),
-         |daily AS (
-         |  SELECT user_id, ts_ns // ${DAY} AS day,
-         |    SUM(($Side) * value) AS oi, AVG(value) AS ret
-         |  FROM e GROUP BY 1, 2),
-         |sig AS (SELECT *, 0.5 + 2.0 * oi AS signal FROM daily)
-         |SELECT user_id,
-         |  ${R6("SUM(CASE WHEN signal > 0 THEN ret ELSE 0.0 END) - SUM(CASE WHEN signal < 0 THEN ret ELSE 0.0 END)")} AS pnl_thresh_micro,
-         |  ${R6("SUM(sign(signal) * ret)")} AS pnl_sign_micro
-         |FROM sig GROUP BY 1""".stripMargin,
-
-    "q_j9_bet_size" ->
-      s"""WITH pnl AS (
-         |  SELECT l_suppkey,
-         |    ${MoneySum("l_extendedprice * (1.0 - l_discount)")} AS revenue
-         |  FROM lineitem GROUP BY 1),
-         |med AS (
-         |  SELECT l_suppkey, quantile_cont(l_extendedprice, 0.5) AS med_price
-         |  FROM lineitem GROUP BY 1)
-         |SELECT pnl.l_suppkey, ${R6("revenue / med_price")} AS sized_micro
-         |FROM pnl JOIN med ON pnl.l_suppkey = med.l_suppkey""".stripMargin,
-
-    "q_a14_mannwhitney" ->
-      s"""WITH e AS ($EventsNs),
-         |f AS (SELECT * FROM e WHERE event_type IN ('click', 'error')),
-         |ranked AS (
-         |  SELECT user_id, event_type,
-         |    (2 * RANK() OVER (PARTITION BY user_id ORDER BY value) +
-         |     COUNT(*) OVER (PARTITION BY user_id, value) - 1)::DOUBLE / 2.0 AS r
-         |  FROM f)
-         |SELECT user_id,
-         |  ${R6("SUM(CASE WHEN event_type = 'click' THEN r ELSE 0.0 END) - SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) * (SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) + 1) / 2.0")} AS u_micro,
-         |  CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS n_click,
-         |  CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_error
-         |FROM ranked GROUP BY 1""".stripMargin,
-
-    "q_ad_ksample" ->
-      // M_ij via lexicographic (value, event_id) comparison — identical
-      // tie semantics to the Spark side's positional running counts
-      s"""WITH e AS ($EventsNs),
-         |pos AS (
-         |  SELECT user_id, event_type, value, event_id,
-         |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY value, event_id) AS j,
-         |    COUNT(*) OVER (PARTITION BY user_id) AS N
-         |  FROM e),
-         |ni AS (SELECT user_id, event_type, COUNT(*)::DOUBLE AS n_i
-         |  FROM e GROUP BY 1, 2),
-         |m AS (
-         |  SELECT p.user_id, p.j, p.N, r.event_type,
-         |    COUNT(CASE WHEN r.value < p.value OR
-         |      (r.value = p.value AND r.event_id <= p.event_id)
-         |      THEN 1 END)::DOUBLE AS m_ij
-         |  FROM pos p JOIN e r ON p.user_id = r.user_id
-         |  WHERE p.j < p.N
-         |  GROUP BY 1, 2, 3, 4),
-         |terms AS (
-         |  SELECT m.user_id,
-         |    (m.N * m.m_ij - m.j * ni.n_i) * (m.N * m.m_ij - m.j * ni.n_i) /
-         |      (m.j * (m.N - m.j)) / ni.n_i AS term, m.N
-         |  FROM m JOIN ni ON m.user_id = ni.user_id
-         |    AND m.event_type = ni.event_type)
-         |SELECT user_id, ${R6("SUM(term) / ANY_VALUE(N)")} AS a2kn_micro,
-         |  CAST(ANY_VALUE(N) AS BIGINT) AS n_pooled,
-         |  (SELECT COUNT(DISTINCT event_type) FROM e x
-         |    WHERE x.user_id = terms.user_id) AS k_samples
-         |FROM terms GROUP BY user_id""".stripMargin,
-
-    "q_sessionize" ->
-      s"""WITH e AS ($EventsNs),
-         |tagged AS (
-         |  SELECT user_id, ts_ns, value,
-         |    CAST(SUM(CASE WHEN prev_ts IS NULL OR ts_ns - prev_ts > ${30L * 60 * 1000000000L}
-         |        THEN 1 ELSE 0 END) OVER (PARTITION BY user_id
-         |          ORDER BY ts_ns, event_id
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - 1 AS BIGINT) AS session_id
-         |  FROM (SELECT user_id, event_id, ts_ns, value,
-         |    LAG(ts_ns) OVER (PARTITION BY user_id ORDER BY ts_ns, event_id) AS prev_ts
-         |    FROM e))
-         |SELECT user_id, session_id, COUNT(*) AS n_events,
-         |  MIN(ts_ns) AS session_start, MAX(ts_ns) AS session_end,
-         |  MAX(ts_ns) - MIN(ts_ns) AS duration_ns,
-         |  ${MoneySum("value")} AS sum_value
-         |FROM tagged GROUP BY 1, 2""".stripMargin,
-
-    // session paths: a transition = consecutive per-user events within
-    // the session gap (the same pairs the session rule groups)
-    "q_session_paths" ->
-      s"""WITH e AS ($EventsNs),
-         |nxt AS (
-         |  SELECT event_type,
-         |    LEAD(ts_ns) OVER (PARTITION BY user_id
-         |      ORDER BY ts_ns, event_id) AS next_ts,
-         |    LEAD(event_type) OVER (PARTITION BY user_id
-         |      ORDER BY ts_ns, event_id) AS next_type,
-         |    ts_ns
-         |  FROM e)
-         |SELECT event_type AS from_step, next_type AS to_step,
-         |  COUNT(*) AS n_transitions
-         |FROM nxt
-         |WHERE next_ts IS NOT NULL
-         |  AND next_ts - ts_ns <= ${30L * 60 * 1000000000L}
-         |GROUP BY 1, 2""".stripMargin,
-
-    // weekly purchase retention: the matrix replayed relationally
-    "q_retention" ->
-      s"""WITH e AS ($EventsNs),
-         |wk AS (
-         |  SELECT DISTINCT user_id, ts_ns // ${7L * DAY} AS week
-         |  FROM e WHERE event_type = 'purchase'),
-         |cohort AS (
-         |  SELECT user_id, MIN(week) AS cohort_week FROM wk GROUP BY 1),
-         |ret AS (
-         |  SELECT c.cohort_week, w.week - c.cohort_week AS week_offset,
-         |    COUNT(*)::BIGINT AS n_users
-         |  FROM wk w JOIN cohort c USING (user_id) GROUP BY 1, 2),
-         |sz AS (
-         |  SELECT cohort_week, n_users AS cohort_size FROM ret
-         |  WHERE week_offset = 0)
-         |SELECT r.cohort_week, r.week_offset, r.n_users, s.cohort_size,
-         |  ${R6("CAST(r.n_users AS DOUBLE) / CAST(s.cohort_size AS DOUBLE)")} AS retention_micro
-         |FROM ret r JOIN sz s USING (cohort_week)""".stripMargin,
-
-    // range join: sessions rebuilt by the gaps-and-islands twin (clicks
-    // only, 12h gap), then the NAIVE non-equi containment join — the
-    // semantics the bucketed decomposition must reproduce exactly
-    "q_range_join" ->
-      s"""WITH e AS ($EventsNs),
-         |tagged AS (
-         |  SELECT user_id, ts_ns,
-         |    CAST(SUM(CASE WHEN prev_ts IS NULL OR ts_ns - prev_ts > ${12L * H}
-         |        THEN 1 ELSE 0 END) OVER (PARTITION BY user_id
-         |          ORDER BY ts_ns, event_id
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - 1 AS BIGINT) AS session_id
-         |  FROM (SELECT user_id, event_id, ts_ns,
-         |    LAG(ts_ns) OVER (PARTITION BY user_id ORDER BY ts_ns, event_id) AS prev_ts
-         |    FROM e WHERE event_type = 'click')),
-         |sess AS (
-         |  SELECT user_id, session_id, MIN(ts_ns) AS session_start,
-         |    MAX(ts_ns) AS session_end
-         |  FROM tagged GROUP BY 1, 2),
-         |pts AS (
-         |  SELECT user_id, ts_ns, value FROM e WHERE event_type <> 'click')
-         |SELECT se.user_id, se.session_id, se.session_start,
-         |  se.session_end, COUNT(*) AS n_inside,
-         |  ${MoneySum("value")} AS sum_value
-         |FROM sess se JOIN pts p ON p.user_id = se.user_id
-         |  AND p.ts_ns >= se.session_start AND p.ts_ns <= se.session_end
-         |GROUP BY 1, 2, 3, 4""".stripMargin,
-
-    "q_dedup_exact" ->
-      s"""SELECT md5(text) AS text_md5, COUNT(*) AS n_copies,
-         |  MIN(doc_id) AS keep_id
-         |FROM documents GROUP BY 1""".stripMargin,
-
-    "q_dedup_jaccard" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, source,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS t
-         |  FROM documents),
-         |sh AS (
-         |  SELECT doc_id, source,
-         |    list_distinct(list_transform(generate_series(1, len(t) - 2),
-         |      i -> array_to_string(t[i:i+2], ' '))) AS shset
-         |  FROM toks),
-         |sized AS (SELECT doc_id, source, shset, len(shset) AS sz FROM sh),
-         |ex AS (SELECT doc_id, source, sz, unnest(shset) AS shingle FROM sized),
-         |pairs AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    a.sz AS size_a, b.sz AS size_b, COUNT(*) AS inter
-         |  FROM ex a JOIN ex b ON a.source = b.source AND a.shingle = b.shingle
-         |  WHERE a.doc_id < b.doc_id GROUP BY 1, 2, 3, 4)
-         |SELECT id_a, id_b,
-         |  ${R6("inter::DOUBLE / (size_a + size_b - inter)::DOUBLE")} AS jaccard_micro
-         |FROM pairs
-         |WHERE inter::DOUBLE / (size_a + size_b - inter)::DOUBLE >= 0.5""".stripMargin,
-
-    "q_simhash" ->
-      s"""WITH ${SimhashFpCtes(0L)}
-         |SELECT d.doc_id, COALESCE(f.fp, 0) AS simhash62
-         |FROM documents d LEFT JOIN sfp f USING (doc_id)""".stripMargin,
-
-    // portable simhash pairs: 4 x 16-bit chunk blocking (pigeonhole for
-    // maxDist 3), left-side bucket cap, Hamming via bit_count(xor)
-    "q_simhash_pairs" ->
-      s"""WITH ${SimhashFpCtes(0L)},
-         |sall AS (
-         |  SELECT d.doc_id, COALESCE(f.fp, 0) AS fp
-         |  FROM documents d LEFT JOIN sfp f USING (doc_id)),
-         |schk AS (
-         |  SELECT doc_id, fp, chunk,
-         |    (fp >> (chunk * 16)) & 65535 AS key
-         |  FROM (SELECT doc_id, fp,
-         |          unnest(generate_series(0, 3)) AS chunk
-         |        FROM sall)),
-         |sbsz AS (
-         |  SELECT chunk, key, COUNT(*) AS bn FROM schk GROUP BY 1, 2),
-         |sprs AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    a.fp AS fa, b.fp AS fb
-         |  FROM schk a
-         |  JOIN sbsz c ON a.chunk = c.chunk AND a.key = c.key
-         |    AND c.bn <= 4096
-         |  JOIN schk b ON a.chunk = b.chunk AND a.key = b.key
-         |  WHERE a.doc_id < b.doc_id)
-         |SELECT id_a, id_b,
-         |  CAST(bit_count(xor(fa, fb)) AS BIGINT) AS hamming
-         |FROM sprs WHERE bit_count(xor(fa, fb)) <= 3""".stripMargin,
-
-    "q_minhash_sig" ->
-      s"""WITH ${MinhashSigCtes(16)}
-         |SELECT d.doc_id,
-         |  md5(CASE WHEN s.sig IS NULL
-         |    THEN '${Seq.fill(16)("null").mkString(",")}'
-         |    ELSE array_to_string(s.sig, ',') END) AS sig_md5
-         |FROM documents d LEFT JOIN sigs s USING (doc_id)""".stripMargin,
-
-    // full portable LSH pipeline: band fold + mix31 bucket, viral-bucket
-    // cap, within-bucket pairs, signature agreement rate
-    "q_minhash_lsh_pairs" ->
-      s"""WITH ${MinhashSigCtes(32)},
-         |bnd AS (
-         |  SELECT doc_id, sig, band,
-         |    list_reduce([0::BIGINT] ||
-         |        sig[band * 4 + 1 : band * 4 + 4],
-         |      (a, b) -> (a * 1000003 + b) % 2147483648) AS bfold
-         |  FROM (SELECT doc_id, sig,
-         |          unnest(generate_series(0, 7)) AS band
-         |        FROM sigs)),
-         |bkt AS (
-         |  SELECT doc_id, sig, band,
-         |    ${Mix31Sql("bfold", "900001 + band")} AS bucket
-         |  FROM bnd),
-         |bsz AS (
-         |  SELECT band, bucket, COUNT(*) AS bn FROM bkt GROUP BY 1, 2),
-         |mpairs AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    a.sig AS sig_a, b.sig AS sig_b
-         |  FROM bkt a
-         |  JOIN bsz c ON a.band = c.band AND a.bucket = c.bucket
-         |    AND c.bn <= 4096
-         |  JOIN bkt b ON a.band = b.band AND a.bucket = b.bucket
-         |  WHERE a.doc_id < b.doc_id)
-         |SELECT id_a, id_b,
-         |  ${R6("len(list_filter(generate_series(1, 32), " +
-            "i -> sig_a[i] = sig_b[i]))::DOUBLE / 32.0e0")}
-         |    AS est_jaccard_micro
-         |FROM mpairs""".stripMargin,
-
-    // incremental near-dup: one signature pass over ALL documents, then
-    // the new-batch side (source <> src0) probes the corpus side (src0)
-    // on the shared portable band buckets; est >= 0.5 is cnt >= 16 of
-    // 32 slots exactly
-    // q_lsh_tuning twin: the q_minhash_lsh_pairs candidate CTEs + an
-    // exact all-pairs Jaccard ground truth off the SAME msh shingle
-    // sets, full-outer confusion counts; the S-curve constant is the
-    // identical driver-computed literal both engines interpolate
-    "q_lsh_tuning" ->
-      s"""WITH mtoks AS (
-         |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS t
-         |  FROM documents
-         |  WHERE ${HashSql("doc_id", 11L)} < ${Sampling.threshold(0.5)}),
-         |${MinhashSigCtesTok("mtoks", 32)},
-         |bnd AS (
-         |  SELECT doc_id, sig, band,
-         |    list_reduce([0::BIGINT] ||
-         |        sig[band * 4 + 1 : band * 4 + 4],
-         |      (a, b) -> (a * 1000003 + b) % 2147483648) AS bfold
-         |  FROM (SELECT doc_id, sig,
-         |          unnest(generate_series(0, 7)) AS band
-         |        FROM sigs)),
-         |bkt AS (
-         |  SELECT doc_id, sig, band,
-         |    ${Mix31Sql("bfold", "900001 + band")} AS bucket
-         |  FROM bnd),
-         |bsz AS (
-         |  SELECT band, bucket, COUNT(*) AS bn FROM bkt GROUP BY 1, 2),
-         |cp AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM bkt a
-         |  JOIN bsz c ON a.band = c.band AND a.bucket = c.bucket
-         |    AND c.bn <= 4096
-         |  JOIN bkt b ON a.band = b.band AND a.bucket = b.bucket
-         |  WHERE a.doc_id < b.doc_id),
-         |jex AS (
-         |  SELECT doc_id, len(shset) AS sz, unnest(shset) AS shingle
-         |  FROM msh WHERE len(shset) > 0),
-         |jp AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM jex a JOIN jex b ON a.shingle = b.shingle
-         |  WHERE a.doc_id < b.doc_id
-         |  GROUP BY 1, 2, a.sz, b.sz
-         |  HAVING COUNT(*)::DOUBLE
-         |    / (a.sz + b.sz - COUNT(*))::DOUBLE >= 0.5),
-         |fo AS (
-         |  SELECT CASE WHEN j.id_a IS NOT NULL THEN 1 ELSE 0 END AS t,
-         |    CASE WHEN c.id_a IS NOT NULL THEN 1 ELSE 0 END AS c
-         |  FROM jp j FULL OUTER JOIN cp c
-         |    ON j.id_a = c.id_a AND j.id_b = c.id_b)
-         |SELECT CAST(COALESCE(SUM(c), 0) AS BIGINT) AS candidate_pairs,
-         |  CAST(COALESCE(SUM(t), 0) AS BIGINT) AS true_pairs,
-         |  CAST(COALESCE(SUM(t * c), 0) AS BIGINT) AS tp,
-         |  CAST(COALESCE(SUM((1 - t) * c), 0) AS BIGINT) AS fp,
-         |  CAST(COALESCE(SUM(t * (1 - c)), 0) AS BIGINT) AS fn,
-         |  CASE WHEN COALESCE(SUM(c), 0) > 0 THEN
-         |    CAST(floor(SUM(t * c)::DOUBLE / SUM(c) * 1e6 + 0.5)
-         |      AS BIGINT) END AS precision_micro,
-         |  CASE WHEN COALESCE(SUM(t), 0) > 0 THEN
-         |    CAST(floor(SUM(t * c)::DOUBLE / SUM(t) * 1e6 + 0.5)
-         |      AS BIGINT) END AS recall_micro,
-         |  ${Dedup.theoryCaptureMicro(0.5, 8, 4)} AS theory_capture_micro
-         |FROM fo""".stripMargin,
-
-    "q_incr_neardup" ->
-      s"""WITH ${MinhashSigCtes(32)},
-         |sg AS (
-         |  SELECT s.doc_id, d.source, s.sig
-         |  FROM sigs s JOIN documents d USING (doc_id)),
-         |bd AS (
-         |  SELECT doc_id, source, sig, band,
-         |    list_reduce([0::BIGINT] ||
-         |        sig[band * 4 + 1 : band * 4 + 4],
-         |      (a, b) -> (a * 1000003 + b) % 2147483648) AS bfold
-         |  FROM (SELECT doc_id, source, sig,
-         |          unnest(generate_series(0, 7)) AS band
-         |        FROM sg)),
-         |bk AS (
-         |  SELECT doc_id, source, sig, band,
-         |    ${Mix31Sql("bfold", "900001 + band")} AS bucket
-         |  FROM bd),
-         |iprs AS (
-         |  SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS corpus_id,
-         |    a.sig AS sig_a, b.sig AS sig_b
-         |  FROM bk a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket
-         |  WHERE a.source <> 'src0' AND b.source = 'src0')
-         |SELECT new_id, corpus_id,
-         |  ${R6("len(list_filter(generate_series(1, 32), " +
-            "i -> sig_a[i] = sig_b[i]))::DOUBLE / 32.0e0")}
-         |    AS est_jaccard_micro
-         |FROM iprs
-         |WHERE len(list_filter(generate_series(1, 32),
-         |  i -> sig_a[i] = sig_b[i])) >= 16""".stripMargin,
-
-    "q_containment" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, source,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS t
-         |  FROM documents),
-         |sh AS (
-         |  SELECT doc_id, source,
-         |    list_distinct(list_transform(generate_series(1, len(t) - 2),
-         |      i -> array_to_string(t[i:i+2], ' '))) AS shset
-         |  FROM toks),
-         |sized AS (SELECT doc_id, source, shset, len(shset) AS sz
-         |          FROM sh WHERE len(shset) > 0),
-         |ex AS (SELECT doc_id, source, sz, unnest(shset) AS shingle FROM sized),
-         |pairs AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    a.sz AS size_a, COUNT(*) AS inter
-         |  FROM ex a JOIN ex b ON a.source = b.source AND a.shingle = b.shingle
-         |  WHERE a.doc_id <> b.doc_id GROUP BY 1, 2, 3)
-         |SELECT id_a, id_b,
-         |  ${R6("inter::DOUBLE / size_a::DOUBLE")} AS containment_micro
-         |FROM pairs
-         |WHERE inter::DOUBLE / size_a::DOUBLE >= 0.7""".stripMargin,
-
-    "q_seg_dedup_drop" -> SegDedupSql(keepFirst = false),
-
-    // sliding-window substring dedup: window strings at every offset,
-    // corpus counts, per-doc marked starts, row-local span-union cut
-    "q_substr_dedup" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
-         |  FROM documents),
-         |w AS (
-         |  SELECT doc_id, unnest(generate_series(1, len(t) - 7)) AS i, t
-         |  FROM d WHERE len(t) >= 8),
-         |w2 AS (
-         |  SELECT doc_id, i - 1 AS start,
-         |    array_to_string(t[i:i+7], ' ') AS win
-         |  FROM w),
-         |rep AS (SELECT win FROM w2 GROUP BY win HAVING COUNT(*) >= 2),
-         |mk AS (
-         |  SELECT doc_id, list(start ORDER BY start) AS starts
-         |  FROM w2 WHERE win IN (SELECT win FROM rep) GROUP BY doc_id),
-         |j AS (
-         |  SELECT d.doc_id, d.t,
-         |    COALESCE(mk.starts, CAST([] AS BIGINT[])) AS starts
-         |  FROM d LEFT JOIN mk USING (doc_id)),
-         |cut AS (
-         |  SELECT doc_id, t,
-         |    list_filter(generate_series(0, len(t) - 1), pp ->
-         |      len(list_filter(starts,
-         |        s -> s <= pp AND pp < s + 8)) = 0) AS pos
-         |  FROM j)
-         |SELECT doc_id,
-         |  md5(COALESCE(array_to_string(
-         |    list_transform(pos, pp -> t[pp + 1]), ' '), ''))
-         |    AS cleaned_md5,
-         |  CAST(len(t) AS BIGINT) AS n_tokens,
-         |  CAST(len(pos) AS BIGINT) AS n_kept
-         |FROM cut""".stripMargin,
-    "q_seg_dedup_first" -> SegDedupSql(keepFirst = true),
-
-    "q_jsonl_roundtrip" ->
-      s"""SELECT doc_id, md5(text) AS text_md5,
-         |  CAST(2 AS BIGINT) AS n_corrupt
-         |FROM documents""".stripMargin,
-
-    // the TableOps lifecycle recomputed as plain relational algebra:
-    // v1 = every-7th order, v2 = MERGE (matched keys replaced, new keys
-    // inserted), v3 = DELETE WHERE price < 50000
-    "q_table_merge" ->
-      s"""WITH v1 AS (
-         |  SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-         |  WHERE o_orderkey % 7 = 0),
-         |upd AS (
-         |  SELECT o_orderkey, o_custkey, o_totalprice * 2.0 AS o_totalprice
-         |  FROM orders WHERE o_orderkey % 14 = 0
-         |  UNION ALL
-         |  SELECT o_orderkey, o_custkey, o_totalprice
-         |  FROM orders WHERE o_orderkey % 7 = 3),
-         |v2 AS (
-         |  SELECT * FROM v1
-         |  WHERE o_orderkey NOT IN (SELECT o_orderkey FROM upd)
-         |  UNION ALL SELECT * FROM upd)
-         |SELECT o_orderkey, o_custkey, ${R6("o_totalprice")} AS price_micro
-         |FROM v2 WHERE o_totalprice >= 50000.0""".stripMargin,
-
-    // SCD2: the relational replay — changed keys contribute a closed
-    // copy plus a reopened one; no-op updates keep the t=0 row; %7
-    // keys insert at t=1000. Null-safe attribute comparison mirrors
-    // the engine's <=> per column
-    "q_scd2" ->
-      s"""WITH dim AS (SELECT c_custkey, c_name, c_acctbal FROM customer),
-         |init AS (SELECT * FROM dim WHERE c_custkey % 7 <> 0),
-         |upd AS (SELECT c_custkey, c_name,
-         |    CASE WHEN c_custkey % 5 = 0 THEN c_acctbal * 2.0
-         |         ELSE c_acctbal END AS c_acctbal FROM dim),
-         |changed AS (
-         |  SELECT i.c_custkey FROM init i JOIN upd u USING (c_custkey)
-         |  WHERE u.c_acctbal IS DISTINCT FROM i.c_acctbal
-         |     OR u.c_name IS DISTINCT FROM i.c_name),
-         |rows_out AS (
-         |  SELECT i.c_custkey, i.c_name, i.c_acctbal,
-         |    CAST(0 AS BIGINT) AS valid_from,
-         |    CAST(1000 AS BIGINT) AS valid_to, FALSE AS is_current
-         |  FROM init i JOIN changed USING (c_custkey)
-         |  UNION ALL
-         |  SELECT i.c_custkey, i.c_name, i.c_acctbal,
-         |    CAST(0 AS BIGINT), CAST(NULL AS BIGINT), TRUE
-         |  FROM init i
-         |  WHERE i.c_custkey NOT IN (SELECT c_custkey FROM changed)
-         |  UNION ALL
-         |  SELECT u.c_custkey, u.c_name, u.c_acctbal,
-         |    CAST(1000 AS BIGINT), CAST(NULL AS BIGINT), TRUE
-         |  FROM upd u
-         |  WHERE u.c_custkey % 7 = 0
-         |     OR u.c_custkey IN (SELECT c_custkey FROM changed))
-         |SELECT c_custkey, c_name, ${R6("c_acctbal")} AS bal_micro,
-         |  valid_from, valid_to, is_current
-         |FROM rows_out""".stripMargin,
-
-    "q_table_history" ->
-      s"""WITH v1 AS (
-         |  SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-         |  WHERE o_orderkey % 7 = 0),
-         |upd AS (
-         |  SELECT o_orderkey, o_custkey, o_totalprice * 2.0 AS o_totalprice
-         |  FROM orders WHERE o_orderkey % 14 = 0
-         |  UNION ALL
-         |  SELECT o_orderkey, o_custkey, o_totalprice
-         |  FROM orders WHERE o_orderkey % 7 = 3),
-         |v2 AS (
-         |  SELECT * FROM v1
-         |  WHERE o_orderkey NOT IN (SELECT o_orderkey FROM upd)
-         |  UNION ALL SELECT * FROM upd),
-         |v3 AS (SELECT * FROM v2 WHERE o_totalprice >= 50000.0)
-         |SELECT CAST(1 AS BIGINT) AS version, COUNT(*) AS n_rows,
-         |  ${R6(MoneySum("o_totalprice"))} AS sum_price_micro FROM v1
-         |UNION ALL
-         |SELECT CAST(2 AS BIGINT), COUNT(*),
-         |  ${R6(MoneySum("o_totalprice"))} FROM v2
-         |UNION ALL
-         |SELECT CAST(3 AS BIGINT), COUNT(*),
-         |  ${R6(MoneySum("o_totalprice"))} FROM v3""".stripMargin,
-
-    // compaction is a pure layout rewrite: content == source; the
-    // file-count effect rides as literal-pinned constant columns
-    "q_table_compact" ->
-      s"""SELECT o_orderkey, ${R6("o_totalprice")} AS price_micro,
-         |  CAST(1 AS BIGINT) AS files_dropped,
-         |  CAST(1 AS BIGINT) AS files_at_target
-         |FROM orders""".stripMargin,
-
-    // snapshot expiry: v1 unreadable (0-row sentinel), v2/v3 recomputed
-    // from scratch (delete < 100k, then delete even keys)
-    "q_table_expire" ->
-      s"""WITH v2 AS (
-         |  SELECT o_orderkey, o_totalprice FROM orders
-         |  WHERE NOT (o_totalprice < 100000.0)),
-         |v3 AS (SELECT * FROM v2 WHERE NOT (o_orderkey % 2 = 0))
-         |SELECT CAST(1 AS BIGINT) AS version, CAST(0 AS BIGINT) AS readable,
-         |  CAST(0 AS BIGINT) AS n_rows, CAST(0 AS BIGINT) AS sum_price_micro
-         |UNION ALL
-         |SELECT CAST(2 AS BIGINT), CAST(1 AS BIGINT), COUNT(*),
-         |  ${R6(MoneySum("o_totalprice"))} FROM v2
-         |UNION ALL
-         |SELECT CAST(3 AS BIGINT), CAST(1 AS BIGINT), COUNT(*),
-         |  ${R6(MoneySum("o_totalprice"))} FROM v3""".stripMargin,
-
-    // Z-order rewrite is a pure layout reorganization: content == source
-    "q_table_zorder" ->
-      s"""SELECT o_orderkey, o_custkey,
-         |  ${R6("o_totalprice")} AS price_micro
-         |FROM orders""".stripMargin,
-
-    // dynamic partition overwrite: only the 1-URGENT partition is
-    // replaced (half price), every other partition is untouched
-    "q_table_part_overwrite" ->
-      s"""SELECT o_orderkey, o_orderpriority,
-         |  ${R6("CASE WHEN o_orderpriority = '1-URGENT' " +
-               "THEN o_totalprice * 0.5 ELSE o_totalprice END")}
-         |    AS price_micro
-         |FROM orders""".stripMargin,
-
-    // The composed pipeline, stage by stage, in one WITH chain — each
-    // CTE mirrors an operator whose standalone gate already matches.
-    "q_curate_full" ->
-      s"""WITH winners AS (
-         |  SELECT doc_id, text, source FROM (
-         |    SELECT doc_id, text, source, ROW_NUMBER() OVER (
-         |      PARTITION BY md5(text) ORDER BY doc_id) AS rk
-         |    FROM documents) WHERE rk = 1),
-         |t AS (
-         |  SELECT doc_id, source,
-         |    string_split_regex(trim(text), '\\s+') AS toks
-         |  FROM winners),
-         |segs AS (
-         |  SELECT doc_id,
-         |    unnest(generate_series(0,
-         |      CAST(floor((len(toks) - 1) / 3.0) AS INT))) AS pos,
-         |    unnest(list_transform(generate_series(0,
-         |      CAST(floor((len(toks) - 1) / 3.0) AS INT)),
-         |      i -> array_to_string(toks[i*3+1 : i*3+3], ' '))) AS seg
-         |  FROM t WHERE len(toks) > 0),
-         |segrk AS (
-         |  SELECT doc_id, pos, seg,
-         |    COUNT(*) OVER (PARTITION BY seg) AS cnt
-         |  FROM segs),
-         |agg AS (
-         |  SELECT doc_id, string_agg(seg, ' ' ORDER BY pos) AS cleaned,
-         |    COUNT(*) AS n_kept
-         |  FROM segrk WHERE cnt < 2 GROUP BY doc_id),
-         |cl AS (
-         |  SELECT t.doc_id, t.source, a.cleaned
-         |  FROM t JOIN agg a USING (doc_id) WHERE a.n_kept > 0),
-         |ctoks AS (
-         |  SELECT doc_id, source, cleaned,
-         |    string_split_regex(trim(cleaned), '\\s+') AS ct,
-         |    string_split_regex(trim(lower(cleaned)), '\\s+') AS lct
-         |  FROM cl),
-         |rep AS (
-         |  SELECT * FROM ctoks
-         |  WHERE len(ct) = 0 OR
-         |    1.0 - len(list_distinct(ct))::DOUBLE / len(ct) <= 0.6),
-         |qm AS (
-         |  SELECT doc_id, source, cleaned, len(ct) AS ntc,
-         |    CAST(len(ct) AS DOUBLE) AS nt,
-         |    CAST(len(list_filter(lct, x -> list_contains(
-         |      ['the','a','an','and','or','of','to','in','is','are','was',
-         |       'it','that','this','for','on','with','as','at','by','be'],
-         |      x))) AS DOUBLE) / len(lct) AS stop_ratio,
-         |    CAST(length(regexp_replace(cleaned,
-         |      '[^.,;:!?''"()\\[\\]-]', '', 'g')) AS DOUBLE)
-         |      / length(cleaned) AS punct_ratio,
-         |    CAST(length(regexp_replace(cleaned, '[^A-Z]', '', 'g'))
-         |      AS DOUBLE) / length(cleaned) AS upper_ratio
-         |  FROM rep),
-         |qs AS (
-         |  SELECT doc_id, source, cleaned, ntc,
-         |    GREATEST(0.0, LEAST(1.0,
-         |      0.5 * (LEAST(nt / 50.0, 1.0) *
-         |        CASE WHEN nt > 10000 THEN 0.5 ELSE 1.0 END)
-         |      + 0.5 * LEAST(stop_ratio * 4.0, 1.0)
-         |      - LEAST(punct_ratio * 2.0, 0.5)
-         |      - LEAST(upper_ratio * 2.0, 0.5))) AS quality
-         |  FROM qm),
-         |gated AS (SELECT * FROM qs WHERE quality >= 0.3),
-         |c AS (
-         |  SELECT source, CAST(SUM(ntc) AS BIGINT) AS n_tokens
-         |  FROM gated GROUP BY 1),
-         |s AS (
-         |  SELECT source, n_tokens,
-         |    CAST(floor(sqrt(n_tokens) * 1e6 + 0.5) AS HUGEINT) AS sm
-         |  FROM c),
-         |tot AS (SELECT SUM(sm) AS stot FROM s),
-         |plan AS (
-         |  SELECT source,
-         |    CAST(CASE WHEN n_tokens <= 0 OR stot = 0 THEN 0
-         |      ELSE LEAST(
-         |        (2 * CAST(50000 AS HUGEINT) * sm * 1000000
-         |          + CAST(n_tokens AS HUGEINT) * stot)
-         |        // (2 * CAST(n_tokens AS HUGEINT) * stot),
-         |        CAST(4000000 AS HUGEINT)) END AS BIGINT) AS rate_micro
-         |  FROM s, tot),
-         |rr AS (
-         |  SELECT g.doc_id, g.source, g.cleaned, g.quality, g.ntc,
-         |    p.rate_micro / 1000000.0 AS w
-         |  FROM gated g JOIN plan p USING (source)),
-         |cp AS (
-         |  SELECT doc_id, source, cleaned, quality, ntc,
-         |    CAST(floor(w) AS BIGINT) +
-         |    CASE WHEN ${HashSql("doc_id", 0L)} <
-         |      CAST(floor((w - floor(w)) * 1048576.0 + 0.5) AS BIGINT)
-         |    THEN 1 ELSE 0 END AS copies
-         |  FROM rr)
-         |SELECT doc_id, source,
-         |  CAST(unnest(generate_series(1, copies)) AS BIGINT)
-         |    AS epoch_copy,
-         |  md5(cleaned) AS cleaned_md5,
-         |  ${R6("quality")} AS quality_micro,
-         |  CAST(ntc AS BIGINT) AS n_tokens_clean
-         |FROM cp WHERE copies >= 1""".stripMargin,
-
-    "q_shard_assign" ->
-      s"""SELECT (${HashSql("doc_id", 13L)}) % 16 AS shard,
-         |  COUNT(*) AS n_docs,
-         |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-         |FROM documents GROUP BY 1""".stripMargin,
-
-    "q_dist_drift" ->
-      s"""WITH o AS (
-         |  SELECT source, COUNT(*) AS n_old FROM documents
-         |  WHERE doc_id % 7 <> 0 GROUP BY 1),
-         |n AS (
-         |  SELECT source, COUNT(*) AS n_new FROM documents
-         |  WHERE doc_id % 5 <> 0 GROUP BY 1),
-         |j AS (
-         |  SELECT COALESCE(o.source, n.source) AS source,
-         |    CAST(COALESCE(n_old, 0) AS BIGINT) AS n_old,
-         |    CAST(COALESCE(n_new, 0) AS BIGINT) AS n_new
-         |  FROM o FULL OUTER JOIN n ON o.source = n.source),
-         |s AS (
-         |  SELECT source, n_old, n_new,
-         |    n_old::DOUBLE / SUM(n_old) OVER () AS old_share,
-         |    n_new::DOUBLE / SUM(n_new) OVER () AS new_share
-         |  FROM j)
-         |SELECT source, n_old, n_new,
-         |  ${R6("old_share")} AS old_share_micro,
-         |  ${R6("new_share")} AS new_share_micro,
-         |  ${R6(
-        """((CASE WHEN old_share > 0 THEN
-          |      old_share * ln(old_share / ((old_share + new_share) / 2))
-          |      ELSE 0 END
-          |    + CASE WHEN new_share > 0 THEN
-          |      new_share * ln(new_share / ((old_share + new_share) / 2))
-          |      ELSE 0 END) / 2) * 1000""".stripMargin)} AS js_milli_micro
-         |FROM s""".stripMargin,
-
-    // q_psi_drift twin: the q_dist_drift share CTEs + the eps-floored
-    // PSI functional (GREATEST against the 1e-6 floor on both sides)
-    "q_psi_drift" ->
-      s"""WITH o AS (
-         |  SELECT source, COUNT(*) AS n_old FROM documents
-         |  WHERE doc_id % 7 <> 0 GROUP BY 1),
-         |n AS (
-         |  SELECT source, COUNT(*) AS n_new FROM documents
-         |  WHERE doc_id % 5 <> 0 GROUP BY 1),
-         |j AS (
-         |  SELECT COALESCE(o.source, n.source) AS source,
-         |    CAST(COALESCE(n_old, 0) AS BIGINT) AS n_old,
-         |    CAST(COALESCE(n_new, 0) AS BIGINT) AS n_new
-         |  FROM o FULL OUTER JOIN n ON o.source = n.source),
-         |s AS (
-         |  SELECT source, n_old, n_new,
-         |    GREATEST(n_old::DOUBLE / SUM(n_old) OVER (), 1e-6) AS p,
-         |    GREATEST(n_new::DOUBLE / SUM(n_new) OVER (), 1e-6) AS q
-         |  FROM j)
-         |SELECT source, n_old, n_new,
-         |  ${R6("(q - p) * ln(q / p) * 1000")} AS psi_milli_micro
-         |FROM s""".stripMargin,
-
-    // centroids via the q_embed_meanpool DECIMAL-mean CTE per side,
-    // assembled dim-ordered; cosine/L2 fold dims with the q_ann_cosine
-    // list_sum shape — every step engine-exact
-    "q_embed_drift" ->
-      s"""WITH ov AS (
-         |  SELECT label, list_transform(embedding, x -> x::DOUBLE) AS vec
-         |  FROM embeddings WHERE vec_id % 7 <> 0),
-         |nv AS (
-         |  SELECT label, list_transform(embedding, x -> x::DOUBLE) AS vec
-         |  FROM embeddings WHERE vec_id % 5 <> 0),
-         |om AS (
-         |  SELECT label, dim,
-         |    CAST(SUM(CAST(val AS DECIMAL(18,9))) AS DOUBLE) / COUNT(*) AS mean
-         |  FROM (SELECT label,
-         |      unnest(generate_series(0, len(vec) - 1)) AS dim,
-         |      unnest(vec) AS val FROM ov)
-         |  GROUP BY 1, 2),
-         |nm AS (
-         |  SELECT label, dim,
-         |    CAST(SUM(CAST(val AS DECIMAL(18,9))) AS DOUBLE) / COUNT(*) AS mean
-         |  FROM (SELECT label,
-         |      unnest(generate_series(0, len(vec) - 1)) AS dim,
-         |      unnest(vec) AS val FROM nv)
-         |  GROUP BY 1, 2),
-         |oc AS (SELECT label, list(mean ORDER BY dim) AS c FROM om GROUP BY 1),
-         |nc AS (SELECT label, list(mean ORDER BY dim) AS c FROM nm GROUP BY 1),
-         |ocnt AS (SELECT label, COUNT(*) AS n_old FROM ov GROUP BY 1),
-         |ncnt AS (SELECT label, COUNT(*) AS n_new FROM nv GROUP BY 1),
-         |j AS (
-         |  SELECT COALESCE(oc.label, nc.label) AS label,
-         |    oc.c AS co, nc.c AS cn
-         |  FROM oc FULL OUTER JOIN nc ON oc.label = nc.label)
-         |SELECT j.label, COALESCE(n_old, 0) AS n_old,
-         |  COALESCE(n_new, 0) AS n_new,
-         |  ${R6(
-        """list_sum(list_transform(generate_series(1, len(co)),
-          |      i -> co[i] * cn[i])) /
-          |    (sqrt(list_sum(list_transform(co, x -> x*x))) *
-          |     sqrt(list_sum(list_transform(cn, x -> x*x))))""".stripMargin)} AS cos_micro,
-         |  ${R6(
-        """sqrt(list_sum(list_transform(generate_series(1, len(co)),
-          |      i -> (co[i] - cn[i]) * (co[i] - cn[i]))))""".stripMargin)} AS l2_micro
-         |FROM j
-         |LEFT JOIN ocnt ON j.label = ocnt.label
-         |LEFT JOIN ncnt ON j.label = ncnt.label""".stripMargin,
-
-    "q_corpus_diff" ->
-      s"""WITH old AS (
-         |  SELECT doc_id, md5(text) AS old_md5 FROM documents
-         |  WHERE doc_id % 7 <> 0),
-         |neu AS (
-         |  SELECT doc_id,
-         |    md5(CASE WHEN doc_id % 3 = 0 THEN text || ' v2'
-         |      ELSE text END) AS new_md5
-         |  FROM documents WHERE doc_id % 5 <> 0)
-         |SELECT COALESCE(o.doc_id, n.doc_id) AS doc_id,
-         |  CASE WHEN o.doc_id IS NULL THEN 'added'
-         |    WHEN n.doc_id IS NULL THEN 'removed'
-         |    WHEN o.old_md5 = n.new_md5 THEN 'unchanged'
-         |    ELSE 'changed' END AS status,
-         |  o.old_md5, n.new_md5
-         |FROM old o FULL OUTER JOIN neu n ON o.doc_id = n.doc_id""".stripMargin,
-
-    "q_corpus_churn" ->
-      s"""WITH old AS (
-         |  SELECT doc_id, source, md5(text) AS old_md5 FROM documents
-         |  WHERE doc_id % 7 <> 0),
-         |neu AS (
-         |  SELECT doc_id, source,
-         |    md5(CASE WHEN doc_id % 3 = 0 THEN text || ' v2'
-         |      ELSE text END) AS new_md5
-         |  FROM documents WHERE doc_id % 5 <> 0),
-         |d AS (
-         |  SELECT COALESCE(o.doc_id, n.doc_id) AS doc_id,
-         |    COALESCE(n.source, o.source) AS source,
-         |    CASE WHEN o.doc_id IS NULL THEN 'added'
-         |      WHEN n.doc_id IS NULL THEN 'removed'
-         |      WHEN o.old_md5 = n.new_md5 THEN 'unchanged'
-         |      ELSE 'changed' END AS status
-         |  FROM old o FULL OUTER JOIN neu n ON o.doc_id = n.doc_id)
-         |SELECT source, status, COUNT(*) AS n FROM d GROUP BY 1, 2""".stripMargin,
-
-    // Same oracle as q_incr_dedup: the Bloom path must give the exact
-    // anti-join answer — the filter routes rows, never decides them.
-    "q_bloom_incr_dedup" ->
-      s"""WITH idx AS (
-         |  SELECT DISTINCT md5(text) AS text_md5 FROM documents
-         |  WHERE source = 'src0'),
-         |batch AS (
-         |  SELECT doc_id, source, md5(text) AS h FROM documents
-         |  WHERE source <> 'src0'),
-         |unseen AS (
-         |  SELECT b.* FROM batch b
-         |  WHERE NOT EXISTS (SELECT 1 FROM idx WHERE idx.text_md5 = b.h)),
-         |rk AS (
-         |  SELECT doc_id, source, ROW_NUMBER() OVER (
-         |    PARTITION BY h ORDER BY doc_id) AS rk
-         |  FROM unseen)
-         |SELECT doc_id, source FROM rk WHERE rk = 1""".stripMargin,
-
-    "q_incr_dedup" ->
-      s"""WITH idx AS (
-         |  SELECT DISTINCT md5(text) AS text_md5 FROM documents
-         |  WHERE source = 'src0'),
-         |batch AS (
-         |  SELECT doc_id, source, md5(text) AS h FROM documents
-         |  WHERE source <> 'src0'),
-         |unseen AS (
-         |  SELECT b.* FROM batch b
-         |  WHERE NOT EXISTS (SELECT 1 FROM idx WHERE idx.text_md5 = b.h)),
-         |rk AS (
-         |  SELECT doc_id, source, ROW_NUMBER() OVER (
-         |    PARTITION BY h ORDER BY doc_id) AS rk
-         |  FROM unseen)
-         |SELECT doc_id, source FROM rk WHERE rk = 1""".stripMargin,
-
-    // Integer-exact mixture-plan twin: s_micro = floor(sqrt(n)*1e6+0.5)
-    // (sqrt is IEEE-correctly-rounded on both engines), then HUGEINT
-    // round-half-up division (2*B*s*1e6 + n*S) // (2*n*S), capped at 4
-    // epochs — bit-identical to the BigInt driver math.
-    "q_mixture_plan" ->
-      s"""WITH c AS (
-         |  SELECT source, CAST(SUM(n_chars) AS BIGINT) AS n_tokens
-         |  FROM documents GROUP BY 1),
-         |s AS (
-         |  SELECT source, n_tokens,
-         |    CAST(floor(sqrt(n_tokens) * 1e6 + 0.5) AS HUGEINT) AS sm
-         |  FROM c),
-         |tot AS (SELECT SUM(sm) AS stot FROM s)
-         |SELECT source, n_tokens,
-         |  CAST(CASE WHEN n_tokens <= 0 OR stot = 0 THEN 0
-         |    ELSE LEAST(
-         |      (2 * CAST(50000 AS HUGEINT) * sm * 1000000
-         |        + CAST(n_tokens AS HUGEINT) * stot)
-         |      // (2 * CAST(n_tokens AS HUGEINT) * stot),
-         |      CAST(4000000 AS HUGEINT)) END AS BIGINT) AS rate_micro
-         |FROM s, tot""".stripMargin,
-
-    "q_mixture_apply" ->
-      s"""WITH c AS (
-         |  SELECT source, CAST(SUM(n_chars) AS BIGINT) AS n_tokens
-         |  FROM documents GROUP BY 1),
-         |s AS (
-         |  SELECT source, n_tokens,
-         |    CAST(floor(sqrt(n_tokens) * 1e6 + 0.5) AS HUGEINT) AS sm
-         |  FROM c),
-         |tot AS (SELECT SUM(sm) AS stot FROM s),
-         |plan AS (
-         |  SELECT source,
-         |    CAST(CASE WHEN n_tokens <= 0 OR stot = 0 THEN 0
-         |      ELSE LEAST(
-         |        (2 * CAST(50000 AS HUGEINT) * sm * 1000000
-         |          + CAST(n_tokens AS HUGEINT) * stot)
-         |        // (2 * CAST(n_tokens AS HUGEINT) * stot),
-         |        CAST(4000000 AS HUGEINT)) END AS BIGINT) AS rate_micro
-         |  FROM s, tot),
-         |r AS (
-         |  SELECT doc_id, p.rate_micro / 1000000.0 AS w
-         |  FROM documents d JOIN plan p USING (source)),
-         |cp AS (
-         |  SELECT doc_id,
-         |    CAST(floor(w) AS BIGINT) +
-         |    CASE WHEN ${HashSql("doc_id", 9L)} <
-         |      CAST(floor((w - floor(w)) * 1048576.0 + 0.5) AS BIGINT)
-         |    THEN 1 ELSE 0 END AS copies
-         |  FROM r)
-         |SELECT doc_id,
-         |  CAST(unnest(generate_series(1, copies)) AS BIGINT)
-         |    AS epoch_copy
-         |FROM cp WHERE copies >= 1""".stripMargin,
-
-    // generate_series(1, 0) is empty in DuckDB, so short docs fall out of
-    // the gram lists without CASE guards, mirroring Spark's when() guard
-    "q_repetition" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, text,
-         |    string_split_regex(trim(text), '\\s+') AS toks
-         |  FROM documents),
-         |g AS (
-         |  SELECT doc_id, text, toks,
-         |    list_transform(generate_series(1, len(toks) - 1),
-         |      i -> array_to_string(toks[i:i+1], ' ')) AS g2,
-         |    list_transform(generate_series(1, len(toks) - 2),
-         |      i -> array_to_string(toks[i:i+2], ' ')) AS g3
-         |  FROM t)
-         |SELECT doc_id,
-         |  ${R6("CASE WHEN len(toks) > 0 THEN " +
-            "1.0 - len(list_distinct(toks))::DOUBLE / len(toks) " +
-            "ELSE 0.0 END")} AS dup_token_micro,
-         |  ${R6("CASE WHEN len(g2) > 0 THEN " +
-            "list_max(list_transform(list_distinct(g2), gr -> " +
-            "len(list_filter(g2, x -> x = gr)) * length(gr)))::DOUBLE " +
-            "/ length(text) ELSE 0.0 END")} AS top_2gram_micro,
-         |  ${R6("CASE WHEN len(g3) > 0 THEN " +
-            "list_sum(list_transform(list_distinct(g3), gr -> " +
-            "CASE WHEN len(list_filter(g3, x -> x = gr)) >= 2 THEN " +
-            "len(list_filter(g3, x -> x = gr)) * length(gr) " +
-            "ELSE 0 END))::DOUBLE / length(text) ELSE 0.0 END")}
-         |    AS dup_3gram_micro
-         |FROM g""".stripMargin,
-
-    // Transitive closure by recursive CTE + MIN label: O(cluster^2) rows
-    // per component — an oracle-side-only cost; the Spark side is the
-    // O(log^2 n)-round star contraction.
-    "q_dup_clusters" ->
-      s"""WITH RECURSIVE $JaccardDupCtes,
-         |edges AS (SELECT id_a AS u, id_b AS v FROM dup_pairs
-         |          UNION SELECT id_b, id_a FROM dup_pairs),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM edges
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-         |labels AS (
-         |  SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id
-         |  FROM reach GROUP BY u)
-         |SELECT d.doc_id, COALESCE(l.cluster_id, d.doc_id) AS cluster_id
-         |FROM documents d LEFT JOIN labels l USING (doc_id)""".stripMargin,
-
-    "q_group_split" ->
-      s"""WITH RECURSIVE $JaccardDupCtes,
-         |edges AS (SELECT id_a AS u, id_b AS v FROM dup_pairs
-         |          UNION SELECT id_b, id_a FROM dup_pairs),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM edges
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-         |labels AS (
-         |  SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id
-         |  FROM reach GROUP BY u),
-         |lab AS (
-         |  SELECT d.doc_id, COALESCE(l.cluster_id, d.doc_id) AS cluster_id
-         |  FROM documents d LEFT JOIN labels l USING (doc_id))
-         |SELECT doc_id, cluster_id,
-         |  ${HashSql("cluster_id", 7L)} < ${Sampling.threshold(0.25)}
-         |    AS is_test
-         |FROM lab""".stripMargin,
-
-    "q_cluster_dedup" ->
-      s"""WITH RECURSIVE $JaccardDupCtes,
-         |edges AS (SELECT id_a AS u, id_b AS v FROM dup_pairs
-         |          UNION SELECT id_b, id_a FROM dup_pairs),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM edges
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-         |labels AS (
-         |  SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id
-         |  FROM reach GROUP BY u),
-         |qt_m AS (
-         |  SELECT doc_id,
-         |    CAST(len(string_split_regex(trim(text), '\\s+')) AS DOUBLE)
-         |      AS nt,
-         |    CAST(len(list_filter(string_split_regex(trim(lower(text)),
-         |      '\\s+'), x -> list_contains(
-         |      ['the','a','an','and','or','of','to','in','is','are','was',
-         |       'it','that','this','for','on','with','as','at','by','be'],
-         |      x))) AS DOUBLE)
-         |      / len(string_split_regex(trim(lower(text)), '\\s+'))
-         |      AS stop_ratio,
-         |    CAST(length(regexp_replace(text,
-         |      '[^.,;:!?''"()\\[\\]-]', '', 'g')) AS DOUBLE)
-         |      / length(text) AS punct_ratio,
-         |    CAST(length(regexp_replace(text, '[^A-Z]', '', 'g'))
-         |      AS DOUBLE) / length(text) AS upper_ratio
-         |  FROM documents),
-         |qt AS (
-         |  SELECT doc_id, ${R6(
-        """GREATEST(0.0, LEAST(1.0,
-          |      0.5 * (LEAST(nt / 50.0, 1.0) *
-          |        CASE WHEN nt > 10000 THEN 0.5 ELSE 1.0 END)
-          |      + 0.5 * LEAST(stop_ratio * 4.0, 1.0)
-          |      - LEAST(punct_ratio * 2.0, 0.5)
-          |      - LEAST(upper_ratio * 2.0, 0.5)))""".stripMargin)}
-         |    AS quality_micro
-         |  FROM qt_m),
-         |lab AS (
-         |  SELECT d.doc_id, d.source,
-         |    COALESCE(l.cluster_id, d.doc_id) AS cid, qt.quality_micro
-         |  FROM documents d LEFT JOIN labels l USING (doc_id)
-         |  JOIN qt USING (doc_id)),
-         |rn AS (
-         |  SELECT doc_id, source, ROW_NUMBER() OVER (
-         |    PARTITION BY cid ORDER BY quality_micro DESC, doc_id) AS rk
-         |  FROM lab)
-         |SELECT doc_id, source FROM rn WHERE rk = 1""".stripMargin,
-
-    "q_text_fingerprint" ->
-      s"""SELECT doc_id,
-         |  md5(array_to_string(list_sort(list_distinct(
-         |    string_split_regex(trim(lower(text)), '\\s+'))), ' ')) AS bow_fingerprint
-         |FROM documents""".stripMargin,
-
-    "q_text_stats" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, text,
-         |    string_split_regex(trim(text), '\\s+') AS toks,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS ltoks
-         |  FROM documents)
-         |SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-         |  ${R6("length(regexp_replace(text, '\\s+', '', 'g'))::DOUBLE / len(toks)")} AS avg_token_len_micro,
-         |  ${R6("len(list_filter(ltoks, x -> x IN ('the','a','an','and','or','of','to','in','is','are','was','it','that','this','for','on','with','as','at','by','be')))::DOUBLE / len(ltoks)")} AS stopword_ratio_micro,
-         |  CAST(length(text) AS BIGINT) AS n_chars_calc
-         |FROM t""".stripMargin,
-
-    "q_ann_cosine" ->
-      s"""WITH v AS (
-         |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS vec
-         |  FROM embeddings),
-         |q AS (SELECT vec_id AS query_id, vec AS qv FROM v WHERE vec_id < 10),
-         |scored AS (
-         |  SELECT q.query_id, c.vec_id AS corpus_id,
-         |    list_sum(list_transform(generate_series(1, len(qv)),
-         |      i -> qv[i] * c.vec[i])) /
-         |    (sqrt(list_sum(list_transform(qv, x -> x*x))) *
-         |     sqrt(list_sum(list_transform(c.vec, x -> x*x)))) AS cos
-         |  FROM q, v c WHERE q.query_id <> c.vec_id),
-         |ranked AS (
-         |  SELECT query_id, corpus_id, cos,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, corpus_id) AS rank
-         |  FROM scored)
-         |SELECT query_id, rank, corpus_id, ${R6("cos")} AS cosine_micro
-         |FROM ranked WHERE rank <= 3""".stripMargin,
-
-    // q_ann_cosine's oracle with the null-safe different-label predicate
-    // in the scored CTE (IS DISTINCT FROM = Spark's NOT <=>)
-    "q_hard_negatives" ->
-      s"""WITH v AS (
-         |  SELECT vec_id, label,
-         |    list_transform(embedding, x -> x::DOUBLE) AS vec
-         |  FROM embeddings),
-         |q AS (SELECT vec_id AS query_id, label AS ql, vec AS qv
-         |      FROM v WHERE vec_id < 10),
-         |scored AS (
-         |  SELECT q.query_id, c.vec_id AS corpus_id,
-         |    list_sum(list_transform(generate_series(1, len(qv)),
-         |      i -> qv[i] * c.vec[i])) /
-         |    (sqrt(list_sum(list_transform(qv, x -> x*x))) *
-         |     sqrt(list_sum(list_transform(c.vec, x -> x*x)))) AS cos
-         |  FROM q, v c WHERE q.query_id <> c.vec_id
-         |    AND q.ql IS DISTINCT FROM c.label),
-         |ranked AS (
-         |  SELECT query_id, corpus_id, cos,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, corpus_id) AS rank
-         |  FROM scored)
-         |SELECT query_id, rank, corpus_id, ${R6("cos")} AS cosine_micro
-         |FROM ranked WHERE rank <= 5""".stripMargin,
-
-    // the FULL IVF path with kmeans-trained centroids, recomputed in SQL:
-    // unrolled Lloyd iterations (identical CTEs to q_kmeans — micro-
-    // rounded L2 assignment, DECIMAL dim means, emptied cell keeps its
-    // previous centroid), then cosine cell assignment (argmax, first-max
-    // wins), nProbe=3 probe cells per query, within-cell scoring and
-    // bounded top-3. Raw-double cosine ordering is engine-exact per the
-    // q_ann_cosine precedent; centroids are bit-identical by the
-    // DECIMAL/micro-rounding construction the q_kmeans gate pins.
-    // MMR greedy selection as a recursive CTE: the operator's selection
-    // DECISIONS are micro-rounded with smaller-id ties (engine-portable
-    // by design), so one row per iteration — argmax of
-    // lambda*rel - (1-lambda)*maxSimToChosen over the remaining pool —
-    // replays the driver greedy exactly. (1 - CAST(0.7 AS DOUBLE))
-    // reproduces Spark's 0.30000000000000004, not a clean 0.3.
-    "q_mmr" -> {
-      val L = "CAST(0.7 AS DOUBLE)"
-      def score(maxSim: String) = s"$L * p.rel - (1 - $L) * ($maxSim)"
-      val maxSim = s"SELECT MAX(${CosSql("p.vec", "q.vec")}) FROM pool q " +
-        "WHERE list_contains(s.sel_ids, q.vec_id)"
-      s"""WITH RECURSIVE v AS (
-         |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS vec
-         |  FROM embeddings),
-         |probe AS (SELECT vec AS pvec FROM v WHERE vec_id = 0),
-         |pool AS (
-         |  SELECT c.vec_id, c.vec, ${CosSql("c.vec", "p.pvec")} AS rel
-         |  FROM v c, probe p
-         |  WHERE c.vec_id <> 0 AND ${CosSql("c.vec", "p.pvec")} IS NOT NULL
-         |  ORDER BY rel DESC, c.vec_id LIMIT 50),
-         |sel AS (
-         |  (SELECT 1 AS rank, p.vec_id AS sel_id, [p.vec_id] AS sel_ids,
-         |     ${score("0")} AS sel_score
-         |   FROM pool p
-         |   ORDER BY CAST(floor((${score("0")}) * 1e6 + 0.5) AS BIGINT)
-         |     DESC, p.vec_id
-         |   LIMIT 1)
-         |  UNION ALL
-         |  SELECT s.rank + 1, c.vec_id, list_append(s.sel_ids, c.vec_id),
-         |    c.score
-         |  FROM sel s, LATERAL (
-         |    SELECT p.vec_id, ${score(maxSim)} AS score
-         |    FROM pool p WHERE NOT list_contains(s.sel_ids, p.vec_id)
-         |    ORDER BY CAST(floor((${score(maxSim)}) * 1e6 + 0.5)
-         |      AS BIGINT) DESC, p.vec_id
-         |    LIMIT 1) c
-         |  WHERE s.rank < 10)
-         |SELECT sel_id AS vec_id, rank AS mmr_rank,
-         |  ${R6("sel_score")} AS mmr_score_micro
-         |FROM sel""".stripMargin
-    },
-
-    // SRP-LSH ANN on portable planes: weight (p, i-1) = mix31 draw
-    // scaled to [-1, 1) (exact dyadic), per-plane dot via the
-    // list-ordered fold (engine-exact), sign bits packed per 8-plane
-    // band, bucket-join candidates, cosine top-3
-    "q_lsh_ann" ->
-      s"""WITH v AS (
-         |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS vec
-         |  FROM embeddings),
-         |pld AS (
-         |  SELECT p, i,
-         |    CAST(${Mix31Sql("(p * 64 + i - 1)", "42")} AS DOUBLE)
-         |      / 2147483648 * 2 - 1 AS w
-         |  FROM (SELECT unnest(generate_series(0, 31)) AS p) pp,
-         |       (SELECT unnest(generate_series(1, 64)) AS i) ii),
-         |plw AS (SELECT p, list(w ORDER BY i) AS wl FROM pld GROUP BY p),
-         |sg AS (
-         |  SELECT v.vec_id, pw.p,
-         |    CASE WHEN list_sum(list_transform(generate_series(1, 64),
-         |        i -> v.vec[i] * pw.wl[i])) >= 0
-         |      THEN 1::BIGINT << (pw.p % 8) ELSE 0 END AS bit
-         |  FROM v, plw pw),
-         |sbkt AS (
-         |  SELECT vec_id, p // 8 AS band, CAST(SUM(bit) AS BIGINT) AS bucket
-         |  FROM sg GROUP BY 1, 2),
-         |cand AS (
-         |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS corpus_id
-         |  FROM sbkt q JOIN sbkt c ON q.band = c.band
-         |    AND q.bucket = c.bucket
-         |  WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id),
-         |cosed AS (
-         |  SELECT cd.query_id, cd.corpus_id,
-         |    ${CosSql("qv.vec", "cv.vec")} AS cos
-         |  FROM cand cd
-         |  JOIN v qv ON cd.query_id = qv.vec_id
-         |  JOIN v cv ON cd.corpus_id = cv.vec_id),
-         |ranked AS (
-         |  SELECT query_id, corpus_id, cos,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY cos DESC NULLS LAST, corpus_id) AS rank
-         |  FROM cosed)
-         |SELECT query_id, corpus_id, CAST(rank AS BIGINT) AS rank,
-         |  ${R6("cos")} AS cosine_micro
-         |FROM ranked WHERE rank <= 3""".stripMargin,
-
-    // IVF with the portable seeded-row-pick centroids: c2 = the first
-    // nCells corpus rows ordered by their mix31 draw (the same rows the
-    // Spark pick collects); assignment/probe/top-k machinery shared
-    // with the kmeans face below
-    "q_ivf_ann" ->
-      s"""WITH v AS (
-         |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS vec
-         |  FROM embeddings),
-         |c2 AS (
-         |  SELECT ROW_NUMBER() OVER (
-         |      ORDER BY ${Mix31Sql("vec_id", "42")}, vec_id) - 1 AS c,
-         |    vec
-         |  FROM v ORDER BY ${Mix31Sql("vec_id", "42")}, vec_id LIMIT 8),
-         |ccos AS (
-         |  SELECT p.vec_id, cc.c, ${CosSql("p.vec", "cc.vec")} AS cos
-         |  FROM v p, c2 cc),
-         |cassign AS (
-         |  SELECT vec_id, c AS cell FROM (
-         |    SELECT vec_id, c, ROW_NUMBER() OVER (PARTITION BY vec_id
-         |      ORDER BY cos DESC, c) AS rk
-         |    FROM ccos) WHERE rk = 1),
-         |qprobe AS (
-         |  SELECT vec_id AS query_id, c AS cell FROM (
-         |    SELECT vec_id, c, ROW_NUMBER() OVER (PARTITION BY vec_id
-         |      ORDER BY cos DESC, c) AS rk
-         |    FROM ccos WHERE vec_id < 10) WHERE rk <= 3),
-         |cand AS (
-         |  SELECT DISTINCT q.query_id, ca.vec_id AS corpus_id
-         |  FROM qprobe q JOIN cassign ca ON q.cell = ca.cell
-         |  WHERE q.query_id <> ca.vec_id),
-         |cosed AS (
-         |  SELECT s.query_id, s.corpus_id,
-         |    ${CosSql("qv.vec", "cv.vec")} AS cos
-         |  FROM cand s
-         |  JOIN v qv ON s.query_id = qv.vec_id
-         |  JOIN v cv ON s.corpus_id = cv.vec_id),
-         |ranked AS (
-         |  SELECT query_id, corpus_id, cos,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY cos DESC, corpus_id) AS rank
-         |  FROM cosed)
-         |SELECT query_id, corpus_id, CAST(rank AS BIGINT) AS rank,
-         |  ${R6("cos")} AS cosine_micro
-         |FROM ranked WHERE rank <= 3""".stripMargin,
-
-    "q_ivf_kmeans_ann" ->
-      s"""WITH ${KmeansCtes(8, 2)},
-         |ccos AS (
-         |  SELECT p.vec_id, cc.c, ${CosSql("p.vec", "cc.vec")} AS cos
-         |  FROM v p, c2 cc),
-         |cassign AS (
-         |  SELECT vec_id, c AS cell FROM (
-         |    SELECT vec_id, c, ROW_NUMBER() OVER (PARTITION BY vec_id
-         |      ORDER BY cos DESC, c) AS rk
-         |    FROM ccos) WHERE rk = 1),
-         |qprobe AS (
-         |  SELECT vec_id AS query_id, c AS cell FROM (
-         |    SELECT vec_id, c, ROW_NUMBER() OVER (PARTITION BY vec_id
-         |      ORDER BY cos DESC, c) AS rk
-         |    FROM ccos WHERE vec_id < 10) WHERE rk <= 3),
-         |cand AS (
-         |  SELECT DISTINCT q.query_id, ca.vec_id AS corpus_id
-         |  FROM qprobe q JOIN cassign ca ON q.cell = ca.cell
-         |  WHERE q.query_id <> ca.vec_id),
-         |cosed AS (
-         |  SELECT s.query_id, s.corpus_id,
-         |    ${CosSql("qv.vec", "cv.vec")} AS cos
-         |  FROM cand s
-         |  JOIN v qv ON s.query_id = qv.vec_id
-         |  JOIN v cv ON s.corpus_id = cv.vec_id),
-         |ranked AS (
-         |  SELECT query_id, corpus_id, cos,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY cos DESC, corpus_id) AS rank
-         |  FROM cosed)
-         |SELECT query_id, corpus_id, CAST(rank AS BIGINT) AS rank,
-         |  ${R6("cos")} AS cosine_micro
-         |FROM ranked WHERE rank <= 3""".stripMargin,
-
-    "q_embed_neardup" ->
-      s"""WITH v AS (
-         |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS vec
-         |  FROM embeddings)
-         |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         |  ${R6("list_sum(list_transform(generate_series(1, len(a.vec)), i -> a.vec[i] * b.vec[i])) / (sqrt(list_sum(list_transform(a.vec, x -> x*x))) * sqrt(list_sum(list_transform(b.vec, x -> x*x))))")} AS cosine_micro
-         |FROM v a, v b
-         |WHERE a.vec_id < b.vec_id
-         |  AND list_sum(list_transform(generate_series(1, len(a.vec)), i -> a.vec[i] * b.vec[i])) / (sqrt(list_sum(list_transform(a.vec, x -> x*x))) * sqrt(list_sum(list_transform(b.vec, x -> x*x)))) >= 0.95""".stripMargin,
-
-    "q_m6_tvalues" ->
-      s"""WITH g AS (
-         |  SELECT l_returnflag, COUNT(*)::DOUBLE AS n,
-         |    SUM(l_quantity) AS sx, SUM(l_extendedprice) AS sy,
-         |    SUM(l_quantity*l_quantity) AS sxx,
-         |    SUM(l_quantity*l_extendedprice) AS sxy,
-         |    SUM(l_extendedprice*l_extendedprice) AS syy
-         |  FROM lineitem GROUP BY 1),
-         |d AS (SELECT *, sxx - sx*sx/n AS sxx_c, syy - sy*sy/n AS tss FROM g),
-         |b AS (SELECT *, (sxy - sx*sy/n) / sxx_c AS slope FROM d),
-         |i AS (SELECT *, (sy - slope*sx) / n AS icept FROM b),
-         |r AS (SELECT *, syy - icept*sy - slope*sxy AS rss FROM i)
-         |SELECT l_returnflag,
-         |  ${R6("slope / sqrt((rss/(n-2)) / sxx_c)")} AS t_slope_micro,
-         |  ${R6("icept / sqrt((rss/(n-2)) * sxx / (n * sxx_c))")} AS t_icept_micro,
-         |  ${R6("1.0 - (rss/tss) * (n-1) / (n-2)")} AS adj_r2_micro,
-         |  CAST(n AS BIGINT) AS n
-         |FROM r""".stripMargin,
-
-    "q_a4_agg_oi" ->
-      s"""WITH t AS (
-         |  SELECT l_returnflag, l_extendedprice, l_discount,
-         |    CASE WHEN l_linenumber % 2 = 0 THEN 1 ELSE -1 END AS pred_dir,
-         |    l_discount * 10.0 AS agg_ratio
-         |  FROM lineitem)
-         |SELECT l_returnflag,
-         |  ${R6("SUM(CASE WHEN (pred_dir = 1 AND agg_ratio < 0.5) OR (pred_dir = -1 AND agg_ratio > 0.5) THEN l_extendedprice*(1.0-2.0*l_discount) ELSE 0.0 END) / NULLIF(SUM(CASE WHEN (pred_dir = 1 AND agg_ratio < 0.5) OR (pred_dir = -1 AND agg_ratio > 0.5) THEN l_extendedprice ELSE 0.0 END), 0)")} AS oi_agg_low_micro,
-         |  ${R6("SUM(CASE WHEN agg_ratio = 0.5 THEN l_extendedprice*(1.0-2.0*l_discount) ELSE 0.0 END) / NULLIF(SUM(CASE WHEN agg_ratio = 0.5 THEN l_extendedprice ELSE 0.0 END), 0)")} AS oi_agg_mid_micro,
-         |  ${R6("SUM(CASE WHEN (pred_dir = 1 AND agg_ratio > 0.5) OR (pred_dir = -1 AND agg_ratio < 0.5) THEN l_extendedprice*(1.0-2.0*l_discount) ELSE 0.0 END) / NULLIF(SUM(CASE WHEN (pred_dir = 1 AND agg_ratio > 0.5) OR (pred_dir = -1 AND agg_ratio < 0.5) THEN l_extendedprice ELSE 0.0 END), 0)")} AS oi_agg_high_micro
-         |FROM t GROUP BY 1""".stripMargin,
-
-    "q_p5_sentinel" ->
-      s"""WITH e AS ($EventsNs),
-         |q AS (SELECT *,
-         |  CASE WHEN event_id % 97 = 0 THEN CAST(9999999999 AS DOUBLE)
-         |       ELSE value + 1.0 END AS ask,
-         |  CASE WHEN event_id % 89 = 0 THEN CAST(-9999999999 AS DOUBLE)
-         |       ELSE value - 1.0 END AS bid
-         |  FROM e)
-         |SELECT event_type, COUNT(*) AS n, ${MoneySum("value")} AS sum_value
-         |FROM q WHERE ask <> 9999999999 AND bid <> -9999999999
-         |GROUP BY 1""".stripMargin,
-
-    "q_p8_outside_spread" ->
-      s"""WITH e AS ($EventsNs),
-         |t AS (SELECT event_id, event_type, value,
-         |  value - 1.0 + (event_id % 4) AS price,
-         |  value + 2.0 AS ask, value AS bid FROM e),
-         |r AS (SELECT event_id, event_type,
-         |  CASE WHEN ask - bid <> 0 THEN (price - bid) / (ask - bid) END AS agg_ratio
-         |  FROM t)
-         |SELECT event_id,
-         |  CAST(CASE WHEN agg_ratio <= 0 THEN 1 WHEN agg_ratio >= 1 THEN -1
-         |       ELSE ($Side) END AS BIGINT) AS pred_dir,
-         |  ${R6("CASE WHEN agg_ratio <= 0 THEN 1.0 WHEN agg_ratio >= 1 THEN 0.0 ELSE 0.5 END")} AS pred_prob_micro
-         |FROM r""".stripMargin,
-
-    // NULL lag semantics match by construction: (NULL >= 0)::INT is NULL
-    // in both engines, so each user's first e_n is NULL and SUM skips it
-    "q_f2_cont_ofi" ->
-      s"""WITH e AS ($EventsNs),
-         |q AS (SELECT user_id, ts_ns, event_id,
-         |  CASE WHEN event_id % 97 = 0 THEN CAST(9999999999 AS DOUBLE)
-         |       ELSE 100.0 + (event_id % 7) * 0.25 END AS ask,
-         |  CASE WHEN event_id % 89 = 0 THEN CAST(-9999999999 AS DOUBLE)
-         |       ELSE 99.0 + (event_id % 5) * 0.25 END AS bid,
-         |  CAST(100 + event_id % 50 AS DOUBLE) AS bid_size,
-         |  CAST(100 + event_id % 37 AS DOUBLE) AS ask_size
-         |  FROM e),
-         |f AS (SELECT * FROM q
-         |  WHERE ask <> 9999999999 AND bid <> -9999999999),
-         |l AS (SELECT *,
-         |  LAG(ask) OVER w AS p_ask, LAG(bid) OVER w AS p_bid,
-         |  LAG(ask_size) OVER w AS p_ask_size,
-         |  LAG(bid_size) OVER w AS p_bid_size
-         |  FROM f WINDOW w AS (PARTITION BY user_id ORDER BY ts_ns, event_id)),
-         |en AS (SELECT user_id, ts_ns, event_id, (ask + bid) / 2 AS mid,
-         |  (bid - p_bid >= 0)::INT * bid_size - (bid - p_bid <= 0)::INT * p_bid_size
-         |    - (ask - p_ask <= 0)::INT * ask_size + (ask - p_ask >= 0)::INT * p_ask_size AS en,
-         |  ${FloorNs("ts_ns", S10)} AS bin_ns
-         |  FROM l),
-         |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id, bin_ns
-         |    ORDER BY ts_ns, event_id) AS rn FROM en),
-         |a AS (SELECT user_id, bin_ns, SUM(en) AS en_sum,
-         |  MAX(CASE WHEN rn = 1 THEN mid END) AS mid_first
-         |  FROM r GROUP BY 1, 2)
-         |SELECT user_id, bin_ns, ${R6("en_sum")} AS en_micro,
-         |  ${R6("mid_first")} AS mid_micro,
-         |  ${R6("mid_first - LAG(mid_first) OVER (PARTITION BY user_id ORDER BY bin_ns)")} AS dmid_micro
-         |FROM a""".stripMargin,
-
-    "q_j1_align" ->
-      s"""WITH e AS ($EventsNs),
-         |m AS (SELECT user_id, event_id AS m_id, value AS m_value,
-         |  ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts_ns, event_id) AS rn
-         |  FROM e WHERE event_type = 'click'),
-         |q AS (SELECT user_id, event_id AS q_id, value AS q_value,
-         |  ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts_ns, event_id) AS rn
-         |  FROM e WHERE event_type = 'view')
-         |SELECT m.user_id, m.rn, m_id, q_id,
-         |  ${R6("m_value - q_value")} AS diff_micro
-         |FROM m JOIN q ON m.user_id = q.user_id AND m.rn = q.rn""".stripMargin,
-
-    "q_s5_ff_csv" ->
-      s"""WITH raw AS (
-         |  SELECT * FROM read_csv('$FfFixturePath', header=false,
-         |    columns={'date_str': 'VARCHAR', 'smb': 'VARCHAR',
-         |             'hml': 'VARCHAR', 'rf': 'VARCHAR',
-         |             'cma': 'VARCHAR', 'rmw': 'VARCHAR'},
-         |    null_padding=true, ignore_errors=true, delim=',', quote='"',
-         |    auto_detect=false)),
-         |p AS (
-         |  SELECT CAST(strptime(trim(date_str), '%Y%m%d') AS DATE) AS date,
-         |    CAST(smb AS DOUBLE) AS smb, CAST(hml AS DOUBLE) AS hml,
-         |    CAST(rf AS DOUBLE) AS rf, CAST(cma AS DOUBLE) AS cma,
-         |    CAST(rmw AS DOUBLE) AS rmw
-         |  FROM raw
-         |  WHERE length(trim(date_str)) = 8
-         |    AND TRY_CAST(trim(date_str) AS BIGINT) IS NOT NULL)
-         |SELECT * FROM p WHERE date >= DATE '2018-01-01'""".stripMargin,
-
-    "q_m5_full" ->
-      s"""WITH e AS ($EventsNs),
-         |daily AS (
-         |  SELECT user_id, ts_ns // ${DAY} AS day,
-         |    SUM(($Side) * value) AS ret, SUM(value) AS vsum
-         |  FROM e GROUP BY 1, 2),
-         |p0 AS (
-         |  SELECT user_id, day, ret,
-         |    ret / NULLIF(vsum, 0) AS oi,
-         |    ((day % 5) - 2) / 10.0 AS f1,
-         |    ((day % 7) - 3) / 100.0 AS f2,
-         |    LAG(ret) OVER w AS mom,
-         |    LEAD(ret) OVER w AS fut_ret
-         |  FROM daily WINDOW w AS (PARTITION BY user_id ORDER BY day)),
-         |p AS (SELECT * FROM p0
-         |  WHERE fut_ret IS NOT NULL AND oi IS NOT NULL AND mom IS NOT NULL),
-         |g AS (
-         |  SELECT COUNT(*)::DOUBLE AS m00,
-         |    SUM(oi) AS m01, SUM(f1) AS m02, SUM(f2) AS m03, SUM(mom) AS m04,
-         |    SUM(oi*oi) AS m11, SUM(oi*f1) AS m12, SUM(oi*f2) AS m13,
-         |    SUM(oi*mom) AS m14, SUM(f1*f1) AS m22, SUM(f1*f2) AS m23,
-         |    SUM(f1*mom) AS m24, SUM(f2*f2) AS m33, SUM(f2*mom) AS m34,
-         |    SUM(mom*mom) AS m44,
-         |    SUM(fut_ret) AS r0, SUM(oi*fut_ret) AS r1, SUM(f1*fut_ret) AS r2,
-         |    SUM(f2*fut_ret) AS r3, SUM(mom*fut_ret) AS r4,
-         |    COUNT(*) AS n
-         |  FROM p)
-         |SELECT
-         |  ${R6(s"(${m5FullNum(0)}) / (${sqlDet(M5FullXtX)})")} AS b0_micro,
-         |  ${R6(s"(${m5FullNum(1)}) / (${sqlDet(M5FullXtX)})")} AS b_oi_micro,
-         |  ${R6(s"(${m5FullNum(2)}) / (${sqlDet(M5FullXtX)})")} AS b_f1_micro,
-         |  ${R6(s"(${m5FullNum(3)}) / (${sqlDet(M5FullXtX)})")} AS b_f2_micro,
-         |  ${R6(s"(${m5FullNum(4)}) / (${sqlDet(M5FullXtX)})")} AS b_mom_micro,
-         |  CAST(n AS BIGINT) AS n
-         |FROM g""".stripMargin,
-
-    "q_p7_scrub" ->
-      s"""WITH e AS ($EventsNs),
-         |dirty AS (
-         |  SELECT event_type,
-         |    CASE WHEN event_id % 101 = 0 THEN 'NaN'::DOUBLE
-         |         WHEN event_id % 103 = 0 THEN 'Infinity'::DOUBLE
-         |         WHEN event_id % 107 = 0 THEN '-Infinity'::DOUBLE
-         |         ELSE value END AS v
-         |  FROM e),
-         |flagged AS (
-         |  SELECT event_type,
-         |    isnan(v) OR abs(v) = 'Infinity'::DOUBLE AS bad, v
-         |  FROM dirty)
-         |SELECT event_type, COUNT(*) AS n,
-         |  CAST(SUM(CASE WHEN bad THEN 1 ELSE 0 END) AS BIGINT) AS n_scrubbed,
-         |  ${MoneySum("CASE WHEN bad THEN 0.0 ELSE COALESCE(v, 0.0) END")} AS sum_clean
-         |FROM flagged GROUP BY 1""".stripMargin,
-
-    "q_p9_month_cutoff" ->
-      s"""WITH e AS ($EventsNs),
-         |t AS (
-         |  SELECT CAST(year(make_timestamp(ts_ns // 1000)) AS BIGINT) AS y,
-         |    CAST(month(make_timestamp(ts_ns // 1000)) AS BIGINT) AS m,
-         |    value
-         |  FROM e),
-         |mx AS (SELECT (MIN(y * 12 + m) + MAX(y * 12 + m)) // 2 AS ym_cut
-         |  FROM t)
-         |SELECT y, m, COUNT(*) AS n, ${MoneySum("value")} AS sum_value
-         |FROM t, mx WHERE y * 12 + m <= ym_cut
-         |GROUP BY 1, 2""".stripMargin,
-
-    "q_j4_binned_panel" ->
-      s"""WITH e AS ($EventsNs),
-         |b AS (SELECT ${FloorNs("ts_ns", H * 6)} AS bin_ns, user_id,
-         |  event_type, value FROM e),
-         |u AS (
-         |  SELECT bin_ns, user_id,
-         |    CAST(SUM(CAST(($Side) * value AS DECIMAL(18,4))) AS DOUBLE) /
-         |      NULLIF(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 0) AS user_oi
-         |  FROM b GROUP BY 1, 2),
-         |m AS (
-         |  SELECT bin_ns,
-         |    CAST(SUM(CAST(($Side) * value AS DECIMAL(18,4))) AS DOUBLE) /
-         |      NULLIF(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 0) AS mkt_oi
-         |  FROM b GROUP BY 1)
-         |SELECT u.bin_ns, u.user_id, ${R6("user_oi")} AS user_oi_micro,
-         |  ${R6("mkt_oi")} AS mkt_oi_micro
-         |FROM u JOIN m ON u.bin_ns = m.bin_ns""".stripMargin,
-
-    "q_a15_inc_ols" ->
-      s"""WITH e AS ($EventsNs),
-         |t AS (SELECT event_type, value,
-         |  (ts_ns % ${86400L * 1000000000L})::DOUBLE / 1e9 AS x FROM e),
-         |g AS (
-         |  SELECT event_type, COUNT(*)::DOUBLE AS n, SUM(x) AS sx,
-         |    SUM(value) AS sy, SUM(x*x) AS sxx, SUM(x*value) AS sxy
-         |  FROM t GROUP BY 1),
-         |b AS (SELECT *, (sxy - sx*sy/n) / (sxx - sx*sx/n) AS slope FROM g)
-         |SELECT event_type, ${R6("slope")} AS slope_micro,
-         |  ${R6("(sy - slope*sx) / n")} AS icept_micro,
-         |  CAST(n AS BIGINT) AS n
-         |FROM b""".stripMargin,
-
-    "q_s8_gzip_csv" ->
-      s"""SELECT ticker, price, qty
-         |FROM read_csv('$GzFixturePath', header=false,
-         |  columns={'ticker': 'VARCHAR', 'price': 'DOUBLE', 'qty': 'BIGINT'},
-         |  delim=',', quote='"', auto_detect=false,
-         |  compression='gzip')""".stripMargin,
-
-    "q_s9_csv_sink" ->
-      s"""SELECT event_type, n
-         |FROM read_csv('$CsvSinkDir/*.csv', header=true,
-         |  columns={'event_type': 'VARCHAR', 'n': 'BIGINT'},
-         |  delim=',', quote='"', auto_detect=false)""".stripMargin,
-
-    "q_s11_trading_calendar" ->
-      s"""SELECT CAST(d AS DATE) AS date,
-         |  (dayofweek(d) BETWEEN 1 AND 5) AND CAST(d AS DATE) NOT IN
-         |    (DATE '2024-01-15', DATE '2024-02-19') AS is_session
-         |FROM generate_series(DATE '2024-01-01', DATE '2024-06-30',
-         |  INTERVAL 1 DAY) t(d)""".stripMargin,
-
-    "q_m9_confusion" ->
-      s"""WITH e AS ($EventsNs)
-         |SELECT CAST($Side AS BIGINT) AS actual,
-         |  CAST(CASE WHEN event_id % 3 = 0 THEN -1 ELSE 1 END AS BIGINT) AS pred,
-         |  COUNT(*) AS n
-         |FROM e GROUP BY 1, 2""".stripMargin,
-
-    // Cohen's kappa off the same confusion counts as q_m9_confusion
-    "q_kappa" ->
-      s"""WITH e AS ($EventsNs),
-         |cm AS (
-         |  SELECT CAST($Side AS BIGINT) AS l,
-         |    CAST(CASE WHEN event_id % 3 = 0 THEN -1 ELSE 1 END
-         |      AS BIGINT) AS p,
-         |    COUNT(*) AS n
-         |  FROM e GROUP BY 1, 2),
-         |tot AS (
-         |  SELECT CAST(SUM(n) AS BIGINT) AS nn,
-         |    CAST(COALESCE(SUM(CASE WHEN l = p THEN n END), 0)
-         |      AS BIGINT) AS agree
-         |  FROM cm),
-         |rm AS (SELECT l AS c, CAST(SUM(n) AS BIGINT) AS nl
-         |  FROM cm GROUP BY 1),
-         |pm AS (SELECT p AS c, CAST(SUM(n) AS BIGINT) AS np
-         |  FROM cm GROUP BY 1),
-         |ee AS (
-         |  SELECT CAST(COALESCE(SUM(rm.nl * pm.np), 0) AS BIGINT) AS e2
-         |  FROM rm JOIN pm USING (c))
-         |SELECT nn AS n,
-         |  ${R6("agree::DOUBLE / nn")} AS po_micro,
-         |  ${R6("e2::DOUBLE / (nn * nn)")} AS pe_micro,
-         |  ${R6("CASE WHEN e2::DOUBLE / (nn * nn) < 1.0 THEN (agree::DOUBLE / nn - e2::DOUBLE / (nn * nn)) / (1.0 - e2::DOUBLE / (nn * nn)) END")} AS kappa_micro
-         |FROM tot, ee""".stripMargin,
-
-    // calibration bins: the dyadic-grid score makes SUM(p) exact in
-    // double, so mean_p matches bit-for-bit without decimal plumbing
-    "q_calibration" ->
-      s"""WITH e AS ($EventsNs),
-         |p AS (
-         |  SELECT CASE WHEN ($Side) = -1 THEN 1 ELSE 0 END AS label,
-         |    0.5 * ((${HashSql("event_id", 7L)}) / 1048576.0)
-         |      + 0.25 * CAST(CASE WHEN ($Side) = -1 THEN 1 ELSE 0 END AS DOUBLE)
-         |      + 0.125 AS p
-         |  FROM e)
-         |SELECT LEAST(CAST(floor(p * 10) AS BIGINT), 9) AS bin,
-         |  COUNT(*) AS n, CAST(SUM(label) AS BIGINT) AS n_pos,
-         |  ${R6("SUM(p) / COUNT(*)")} AS mean_p_micro,
-         |  ${R6("CAST(SUM(label) AS DOUBLE) / COUNT(*)")} AS frac_pos_micro
-         |FROM p GROUP BY 1""".stripMargin,
-
-    // mutual information: exact-count ratios, ln on identical doubles,
-    // pico-nat LONG quantization before the sum — mirrors the engine
-    "q_mutual_info" ->
-      s"""WITH e AS ($EventsNs),
-         |t AS (SELECT event_type AS x, user_id % 8 AS y FROM e),
-         |j AS (SELECT x, y, COUNT(*) AS c FROM t GROUP BY 1, 2),
-         |mx AS (SELECT x, CAST(SUM(c) AS BIGINT) AS cx FROM j GROUP BY 1),
-         |my AS (SELECT y, CAST(SUM(c) AS BIGINT) AS cy FROM j GROUP BY 1),
-         |nn AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM j),
-         |terms AS (
-         |  SELECT (CAST(c AS DOUBLE) / n) *
-         |    ln((CAST(c AS DOUBLE) * n) /
-         |      (CAST(cx AS DOUBLE) * CAST(cy AS DOUBLE))) AS term
-         |  FROM j JOIN mx USING (x) JOIN my USING (y), nn),
-         |agg AS (
-         |  SELECT CAST(SUM(CAST(floor(term * 1e12 + 0.5) AS BIGINT))
-         |      AS BIGINT) AS mi_pico,
-         |    COUNT(*) AS n_pairs
-         |  FROM terms)
-         |SELECT mi_pico, CAST(mi_pico AS DOUBLE) / 1e12 AS mi_nats,
-         |  (SELECT n FROM nn) AS n, n_pairs
-         |FROM agg""".stripMargin,
-
-    // chi-square: densified grid from the marginal cross, expected
-    // counts from exact integers, micro-quantized term sum
-    "q_chi_square" ->
-      s"""WITH e AS ($EventsNs),
-         |t AS (SELECT event_type AS x, user_id % 8 AS y FROM e),
-         |j AS (SELECT x, y, COUNT(*) AS c FROM t GROUP BY 1, 2),
-         |mx AS (SELECT x, CAST(SUM(c) AS BIGINT) AS cx FROM j GROUP BY 1),
-         |my AS (SELECT y, CAST(SUM(c) AS BIGINT) AS cy FROM j GROUP BY 1),
-         |nn AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM j),
-         |kk AS (SELECT (SELECT COUNT(*) FROM mx) AS nx,
-         |  (SELECT COUNT(*) FROM my) AS ny),
-         |cells AS (
-         |  SELECT g.cx, g.cy, COALESCE(j.c, 0) AS o
-         |  FROM (SELECT mx.x, my.y, mx.cx, my.cy
-         |        FROM mx CROSS JOIN my) g
-         |  LEFT JOIN j ON j.x = g.x AND j.y = g.y),
-         |terms AS (
-         |  SELECT o, CAST(cx AS DOUBLE) * cy / n AS ex
-         |  FROM cells, nn),
-         |agg AS (
-         |  SELECT CAST(SUM(CAST(floor(
-         |      (o - ex) * (o - ex) / ex * 1e6 + 0.5) AS BIGINT))
-         |      AS BIGINT) AS chi2_micro
-         |  FROM terms)
-         |SELECT chi2_micro, (SELECT n FROM nn) AS n,
-         |  (nx - 1) * (ny - 1) AS dof,
-         |  CASE WHEN LEAST(nx, ny) > 1 THEN
-         |    CAST(floor(sqrt(CAST(chi2_micro AS DOUBLE) / 1e6 /
-         |      ((SELECT n FROM nn) * (LEAST(nx, ny) - 1))) * 1e6 + 0.5)
-         |      AS BIGINT) END AS cramers_v_micro
-         |FROM agg, kk""".stripMargin,
-
-    // per-segment AUC: the Mann-Whitney rank identity on the same
-    // dyadic score — tie-averaged ranks exactly as q_a14_mannwhitney
-    "q_auc" ->
-      s"""WITH e AS ($EventsNs),
-         |p AS (
-         |  SELECT user_id % 4 AS seg,
-         |    CASE WHEN ($Side) = -1 THEN 1 ELSE 0 END AS label,
-         |    0.5 * ((${HashSql("event_id", 7L)}) / 1048576.0)
-         |      + 0.25 * CAST(CASE WHEN ($Side) = -1 THEN 1 ELSE 0 END AS DOUBLE)
-         |      + 0.125 AS p
-         |  FROM e),
-         |ranked AS (
-         |  SELECT seg, label,
-         |    (2 * RANK() OVER (PARTITION BY seg ORDER BY p) +
-         |     COUNT(*) OVER (PARTITION BY seg, p) - 1)::DOUBLE / 2.0 AS r
-         |  FROM p)
-         |SELECT seg,
-         |  CAST(SUM(label) AS BIGINT) AS n_pos,
-         |  CAST(SUM(1 - label) AS BIGINT) AS n_neg,
-         |  ${R6("(SUM(CASE WHEN label = 1 THEN r ELSE 0.0 END) - SUM(label) * (SUM(label) + 1) / 2.0) / CAST(SUM(label) * SUM(1 - label) AS DOUBLE)")} AS auc_micro
-         |FROM ranked GROUP BY 1""".stripMargin,
-
-    "q_m13_diagnostics" ->
-      s"""WITH g AS (
-         |  SELECT COUNT(*)::DOUBLE AS n, SUM(l_quantity) AS sx,
-         |    SUM(l_extendedprice) AS sy, SUM(l_quantity*l_quantity) AS sxx,
-         |    SUM(l_quantity*l_extendedprice) AS sxy,
-         |    SUM(l_extendedprice*l_extendedprice) AS syy
-         |  FROM lineitem),
-         |f AS (SELECT *, (sxy - sx*sy/n) / (sxx - sx*sx/n) AS slope,
-         |  n*sxx - sx*sx AS det FROM g),
-         |i AS (SELECT *, (sy - slope*sx) / n AS icept FROM f),
-         |s AS (SELECT *, (syy - icept*sy - slope*sxy) / (n - 2) AS sigma2
-         |  FROM i),
-         |d AS (
-         |  SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
-         |    l_extendedprice - (icept + (l_quantity * slope)) AS residual,
-         |    ((sxx/det + (l_quantity * (-sx/det))) + (l_quantity * (-sx/det)))
-         |      + ((l_quantity * l_quantity) * (n/det)) AS leverage,
-         |    sigma2
-         |  FROM lineitem, s)
-         |SELECT l_orderkey, l_linenumber,
-         |  ${R6("residual")} AS residual_micro,
-         |  ${R6("leverage * 1e3")} AS leverage_milli_micro,
-         |  ${R6("residual / sqrt(sigma2 * (1.0 - leverage))")} AS std_resid_micro,
-         |  ${R6("(residual * residual * leverage / (((2 * sigma2) * (1.0 - leverage)) * (1.0 - leverage))) * 1e3")} AS cooks_milli_micro
-         |FROM d""".stripMargin,
-
-    "q_w9_pacf" ->
-      s"""WITH e AS ($EventsNs),
-         |l AS (SELECT user_id, value,
-         |  LAG(value, 1) OVER w AS l1, LAG(value, 2) OVER w AS l2
-         |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_ns, event_id)),
-         |a AS (SELECT user_id, corr(value, l1) AS acf1, corr(value, l2) AS acf2
-         |  FROM l GROUP BY 1)
-         |SELECT user_id, ${R6("acf1")} AS pacf1_micro,
-         |  ${R6("CASE WHEN (1.0 - acf1*acf1) = 0 THEN 0.0 ELSE (acf2 - acf1*acf1) / (1.0 - acf1*acf1) END")} AS pacf2_micro
-         |FROM a""".stripMargin,
-
-    "q_s6_excess_vs_spy" ->
-      s"""WITH e AS ($EventsNs),
-         |b AS (SELECT user_id, ${FloorNs("ts_ns", H * 6)} AS bin_ns, ts_ns,
-         |  event_id, value FROM e),
-         |rn AS (SELECT user_id, bin_ns, value,
-         |  ROW_NUMBER() OVER (PARTITION BY user_id, bin_ns
-         |    ORDER BY ts_ns, event_id) AS ra,
-         |  ROW_NUMBER() OVER (PARTITION BY user_id, bin_ns
-         |    ORDER BY ts_ns DESC, event_id DESC) AS rd
-         |  FROM b),
-         |u AS (SELECT user_id, bin_ns,
-         |  MAX(CASE WHEN ra = 1 THEN value END) AS fm,
-         |  MAX(CASE WHEN rd = 1 THEN value END) AS lm
-         |  FROM rn GROUP BY 1, 2),
-         |srn AS (SELECT bin_ns, value,
-         |  ROW_NUMBER() OVER (PARTITION BY bin_ns ORDER BY ts_ns, event_id) AS ra,
-         |  ROW_NUMBER() OVER (PARTITION BY bin_ns
-         |    ORDER BY ts_ns DESC, event_id DESC) AS rd
-         |  FROM b),
-         |sp AS (SELECT bin_ns,
-         |  MAX(CASE WHEN ra = 1 THEN value END) AS sfm,
-         |  MAX(CASE WHEN rd = 1 THEN value END) AS slm
-         |  FROM srn GROUP BY 1),
-         |p AS (SELECT user_id, u.bin_ns AS bin_ns,
-         |  CASE WHEN fm > 0 AND lm > 0 THEN ln(lm / fm) END AS log_ret,
-         |  CASE WHEN sfm > 0 AND slm > 0 THEN ln(slm / sfm) END AS spy_ret
-         |  FROM u JOIN sp ON u.bin_ns = sp.bin_ns),
-         |x AS (SELECT user_id, bin_ns, log_ret,
-         |  log_ret - spy_ret AS excess_ret FROM p)
-         |SELECT user_id, bin_ns, ${R6("log_ret")} AS log_ret_micro,
-         |  ${R6("excess_ret")} AS excess_micro,
-         |  ${R6("LEAD(excess_ret) OVER (PARTITION BY user_id ORDER BY bin_ns)")} AS fut_excess_micro
-         |FROM x""".stripMargin,
-
-    "q_p1_rename" ->
-      s"""WITH e AS ($EventsNs)
-         |SELECT event_id AS id, user_id, value * 2.0 AS value_x2
-         |FROM e""".stripMargin,
-
-    "q_s4_multifile" ->
-      s"""SELECT id, name, regexp_extract(filename, '([ab])\\.csv', 1) AS src
-         |FROM read_csv('$MultiCsvDir/*.csv', header=false,
-         |  columns={'id': 'BIGINT', 'name': 'VARCHAR'},
-         |  delim=',', quote='"', auto_detect=false, filename=true)""".stripMargin,
-
-    "q_s7_clop" ->
-      s"""WITH e AS ($EventsNs),
-         |d AS (SELECT user_id, ts_ns // ${DAY} AS day, ts_ns, event_id,
-         |  value FROM e),
-         |rn AS (SELECT user_id, day, value,
-         |  ROW_NUMBER() OVER (PARTITION BY user_id, day
-         |    ORDER BY ts_ns, event_id) AS ra,
-         |  ROW_NUMBER() OVER (PARTITION BY user_id, day
-         |    ORDER BY ts_ns DESC, event_id DESC) AS rd
-         |  FROM d),
-         |bars AS (SELECT user_id, day,
-         |  MAX(CASE WHEN ra = 1 THEN value END) AS open,
-         |  MAX(CASE WHEN rd = 1 THEN value END) AS close
-         |  FROM rn GROUP BY 1, 2),
-         |w AS (SELECT user_id, day, open, close,
-         |  LAG(close) OVER (PARTITION BY user_id ORDER BY day) AS prev_close
-         |  FROM bars),
-         |c AS (SELECT user_id, day,
-         |  CASE WHEN prev_close > 0 THEN ln(open / prev_close) END AS clop,
-         |  CASE WHEN prev_close > 0 THEN ln(close / prev_close) END AS clcl
-         |  FROM w),
-         |c2 AS (SELECT *, LEAD(clop) OVER (PARTITION BY user_id
-         |  ORDER BY day) AS fut_clop FROM c),
-         |n AS (SELECT user_id, day, COUNT(*) AS n FROM d GROUP BY 1, 2)
-         |SELECT n.user_id, n.day, n.n, ${R6("clop")} AS clop_micro,
-         |  ${R6("clcl")} AS clcl_micro, ${R6("fut_clop")} AS fut_clop_micro
-         |FROM n JOIN c2 ON n.user_id = c2.user_id AND n.day = c2.day""".stripMargin,
-
-    "q_sample_bernoulli" ->
-      s"""SELECT doc_id, lang, n_chars FROM documents
-         |WHERE ${HashSql("doc_id", 1L)} < ${Sampling.threshold(0.1)}""".stripMargin,
-
-    "q_sample_stratified" ->
-      s"""SELECT doc_id, lang FROM (
-         |  SELECT doc_id, lang, ROW_NUMBER() OVER (PARTITION BY lang
-         |    ORDER BY ${HashSql("doc_id", 2L)}, doc_id) AS rk
-         |  FROM documents) WHERE rk <= 10""".stripMargin,
-
-    "q_split_hash" ->
-      s"""SELECT ${HashSql("doc_id", 3L)} < ${Sampling.threshold(0.25)}
-         |    AS is_test,
-         |  COUNT(*) AS n, CAST(SUM(n_chars) AS BIGINT) AS chars
-         |FROM documents GROUP BY 1""".stripMargin,
-
-    // q_s10_model_io twin: save/load parity means every test row must
-    // match itself, so the oracle is the hash-split test count (the same
-    // mlPlanted split arithmetic in SQL) with full parity asserted
-    "q_s10_model_io" ->
-      s"""SELECT 'logistic' AS model, COUNT(*) AS n_test,
-         |  COUNT(*) AS n_dir_match, TRUE AS prob_exact
-         |FROM events WHERE event_id < 1024
-         |  AND ${HashSql("event_id", 42L)} < ${Sampling.threshold(0.25)}""".stripMargin,
-
-    // q_m2_predict twin (r17, graduated from rows-only): the gate
-    // persisted its fit's raw per-row P(label=1); the oracle replays
-    // the 0.5 threshold, the {-1,+1} remap, and per-row correctness
-    // against the side-tag direction over the same hash-split test set.
-    // The raw LR fit itself stays legitimately un-replayable — what
-    // graduated is everything downstream of the learned scores.
-    "q_m2_predict" ->
-      s"""WITH sc AS (
-         |  SELECT event_id, pred_prob
-         |  FROM read_parquet('$M2ScoresDir/*.parquet')),
-         |ev AS (
-         |  SELECT event_id, $Side AS direction
-         |  FROM events WHERE event_id < 1024
-         |    AND ${HashSql("event_id", 42L)} < ${Sampling.threshold(0.25)})
-         |SELECT e.event_id, ${R6("s.pred_prob")} AS prob_micro,
-         |  CASE WHEN s.pred_prob > 0.5 THEN 1 ELSE -1 END AS pred_dir,
-         |  (CASE WHEN s.pred_prob > 0.5 THEN 1 ELSE -1 END) = e.direction
-         |    AS correct
-         |FROM sc s JOIN ev e USING (event_id)""".stripMargin,
-
-    // q_m1_gbt twin (r17, graduated from rows-only): the gate persisted
-    // its fit's per-row test predictions; the oracle replays the split
-    // counts, the side-tag direction, and the accuracy fold. The inner
-    // join makes fixture coverage itself gated: a prediction row
-    // missing for any test event (or predicted for a non-test event)
-    // moves n_test off the split twin's count.
-    "q_m1_gbt" ->
-      s"""WITH pr AS (
-         |  SELECT event_id, pred_dir
-         |  FROM read_parquet('$M1PredsDir/*.parquet')),
-         |ev AS (
-         |  SELECT event_id, $Side AS direction,
-         |    ${HashSql("event_id", 42L)} < ${Sampling.threshold(0.25)}
-         |      AS is_test
-         |  FROM events WHERE event_id < 1024)
-         |SELECT 'gbt' AS model,
-         |  (SELECT COUNT(*) FROM ev WHERE NOT is_test) AS n_train,
-         |  COUNT(*) AS n_test,
-         |  SUM(CASE WHEN p.pred_dir = e.direction THEN 1 ELSE 0 END)
-         |    >= COUNT(*) * 0.8 AS beats_planted
-         |FROM pr p JOIN ev e USING (event_id) WHERE e.is_test""".stripMargin,
-
-    // q_m3_rf_lr twin (r17, graduated from rows-only): one tagged
-    // fixture carries both fits' test predictions; the rf face folds
-    // against the unitHash-XOR planted direction, the lr face against
-    // the side tag. chosen_depth = 5 is the EXPECTED CV selection
-    // (depth-1 is chance on the planted XOR), pinned here so a CV
-    // machinery regression hash-misses the oracle.
-    "q_m3_rf_lr" ->
-      s"""WITH pr AS (
-         |  SELECT model, event_id, pred_dir
-         |  FROM read_parquet('$M3PredsDir/*.parquet')),
-         |evi AS (
-         |  SELECT event_id,
-         |    CASE WHEN (${UnitHashGtHalfSql("event_id", 11L)})
-         |        != (${UnitHashGtHalfSql("event_id", 13L)})
-         |      THEN 1 ELSE -1 END AS direction
-         |  FROM events WHERE event_id < 1024
-         |    AND ${HashSql("event_id", 42L)} < ${Sampling.threshold(0.25)}),
-         |evl AS (
-         |  SELECT event_id, $Side AS direction
-         |  FROM events WHERE event_id < 1024
-         |    AND ${HashSql("event_id", 42L)} < ${Sampling.threshold(0.25)})
-         |SELECT 'rf' AS model, COUNT(*) AS n_test,
-         |  SUM(CASE WHEN p.pred_dir = e.direction THEN 1 ELSE 0 END)
-         |    >= COUNT(*) * 0.8 AS beats_planted,
-         |  CAST(5 AS BIGINT) AS chosen_depth
-         |FROM pr p JOIN evi e USING (event_id) WHERE p.model = 'rf'
-         |UNION ALL
-         |SELECT 'lr' AS model, COUNT(*) AS n_test,
-         |  SUM(CASE WHEN p.pred_dir = e.direction THEN 1 ELSE 0 END)
-         |    >= COUNT(*) * 0.8 AS beats_planted,
-         |  CAST(NULL AS BIGINT) AS chosen_depth
-         |FROM pr p JOIN evl e USING (event_id) WHERE p.model = 'lr'""".stripMargin,
-
-    // q_purged_cv twin: the same ordinal (the q_o1_sort contract), the
-    // same integer fold arithmetic, the same LONG-ns role CASE — every
-    // decision integer-exact, so the 5x-fanout role surface hash-matches
-    "q_purged_cv" ->
-      s"""WITH e AS ($EventsNs),
-         |ord AS (SELECT event_id, ts_ns,
-         |    ROW_NUMBER() OVER (ORDER BY ts_ns NULLS FIRST, event_id) - 1
-         |      AS pos,
-         |    COUNT(*) OVER () AS n FROM e),
-         |f AS (SELECT event_id, ts_ns, (pos * 5) // n AS fold FROM ord),
-         |g AS (SELECT fold AS test_fold, MIN(ts_ns) AS lo,
-         |        MAX(ts_ns) AS hi FROM f GROUP BY fold)
-         |SELECT g.test_fold AS fold, f.event_id,
-         |  CASE WHEN f.fold = g.test_fold THEN 'test'
-         |    WHEN f.ts_ns <= g.hi + $H AND f.ts_ns + $H >= g.lo
-         |      THEN 'purged'
-         |    WHEN f.ts_ns > g.hi + $H AND f.ts_ns <= g.hi + $H + $M30
-         |      THEN 'embargo'
-         |    ELSE 'train' END AS role
-         |FROM f CROSS JOIN g""".stripMargin,
-
-    // q_audit twin: one SELECT per rule UNION ALL'd; HUGEINT sums cast
-    // to BIGINT; matches() replayed via regexp_full_match (the rule's
-    // RE2-subset full-match contract)
-    "q_audit" ->
-      s"""WITH e AS ($EventsNs),
-         |r AS (
-         |  SELECT 'not_null(user_id)' AS rule,
-         |    CAST(SUM(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS violations,
-         |    COUNT(*) AS total FROM e
-         |  UNION ALL
-         |  SELECT 'in_range(value,0.0,100.0)',
-         |    CAST(SUM(CASE WHEN value IS NOT NULL
-         |      AND NOT (value BETWEEN 0.0 AND 100.0) THEN 1 ELSE 0 END)
-         |      AS BIGINT),
-         |    COUNT(*) FROM e
-         |  UNION ALL
-         |  SELECT 'matches(event_type)',
-         |    CAST(SUM(CASE WHEN event_type IS NOT NULL
-         |      AND NOT regexp_full_match(event_type, '[a-z]{4,6}')
-         |      THEN 1 ELSE 0 END) AS BIGINT),
-         |    COUNT(*) FROM e
-         |  UNION ALL
-         |  SELECT 'accepted_values(event_type)',
-         |    CAST(SUM(CASE WHEN event_type IS NOT NULL
-         |      AND event_type NOT IN ('click', 'view', 'purchase')
-         |      THEN 1 ELSE 0 END) AS BIGINT),
-         |    COUNT(*) FROM e
-         |  UNION ALL
-         |  SELECT 'unique(event_id)',
-         |    CAST(COALESCE(SUM(n - 1), 0) AS BIGINT),
-         |    CAST(COALESCE(SUM(n), 0) AS BIGINT)
-         |  FROM (SELECT COUNT(*) AS n FROM e GROUP BY event_id)
-         |  UNION ALL
-         |  SELECT 'unique(user_id,event_type)',
-         |    CAST(COALESCE(SUM(n - 1), 0) AS BIGINT),
-         |    CAST(COALESCE(SUM(n), 0) AS BIGINT)
-         |  FROM (SELECT COUNT(*) AS n FROM e GROUP BY user_id, event_type))
-         |SELECT rule, violations, total, violations = 0 AS pass
-         |FROM r""".stripMargin,
-
-    "q_weighted_sample" ->
-      s"""SELECT doc_id, n_chars FROM documents
-         |WHERE ${HashSql("doc_id", 6L)} <
-         |  CAST(floor(LEAST(GREATEST(n_chars / 3000.0, 0.0), 1.0)
-         |    * 1048576.0 + 0.5) AS BIGINT)""".stripMargin,
-
-    "q_split3" ->
-      s"""SELECT CASE
-         |    WHEN ${HashSql("doc_id", 7L)} < ${Sampling.threshold(0.1)}
-         |      THEN 'test'
-         |    WHEN ${HashSql("doc_id", 7L)} < ${Sampling.threshold(0.3)}
-         |      THEN 'val'
-         |    ELSE 'train' END AS split,
-         |  COUNT(*) AS n, CAST(SUM(n_chars) AS BIGINT) AS chars
-         |FROM documents GROUP BY 1""".stripMargin,
-
-    "q_upsample" ->
-      s"""WITH w AS (SELECT doc_id, n_chars / 2000.0 AS w FROM documents)
-         |SELECT doc_id,
-         |  CAST(floor(GREATEST(w, 0.0)) AS BIGINT) +
-         |  CASE WHEN ${HashSql("doc_id", 8L)} <
-         |    CAST(floor((GREATEST(w, 0.0) - floor(GREATEST(w, 0.0)))
-         |      * 1048576.0 + 0.5) AS BIGINT)
-         |  THEN 1 ELSE 0 END AS copies
-         |FROM w""".stripMargin,
-
-    "q_mix_sources" ->
-      s"""SELECT source, COUNT(*) AS n FROM documents
-         |WHERE ${HashSql("doc_id", 4L)} < CASE source
-         |  WHEN 'src0' THEN ${Sampling.threshold(1.0)}
-         |  WHEN 'src1' THEN ${Sampling.threshold(0.5)}
-         |  WHEN 'src2' THEN ${Sampling.threshold(0.25)}
-         |  WHEN 'src3' THEN ${Sampling.threshold(0.1)}
-         |  ELSE 0 END
-         |GROUP BY 1""".stripMargin,
-
-    "q_pack_chunks" ->
-      s"""WITH k AS (SELECT doc_id, n_chars,
-         |  ${HashSql("doc_id", 0L)} AS h FROM documents),
-         |p AS (SELECT doc_id, n_chars,
-         |  CAST(COALESCE(SUM(n_chars) OVER (ORDER BY h, doc_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |    AS BIGINT) AS pfx
-         |  FROM k)
-         |SELECT pfx // 16384 AS chunk_id, COUNT(*) AS n_docs,
-         |  CAST(SUM(n_chars) AS BIGINT) AS tokens,
-         |  GREATEST(0, CAST(MAX(pfx % 16384 + n_chars) AS BIGINT) - 16384)
-         |    AS spill
-         |FROM p GROUP BY 1""".stripMargin,
-
-    "q_m9_report" ->
-      s"""WITH e AS ($EventsNs),
-         |pr AS (SELECT CAST($Side AS BIGINT) AS actual,
-         |  CAST(CASE WHEN event_id % 3 = 0 THEN -1 ELSE 1 END AS BIGINT)
-         |    AS pred FROM e),
-         |cm AS (SELECT actual, pred, COUNT(*) AS n FROM pr GROUP BY 1, 2),
-         |lt AS (SELECT actual AS class, CAST(SUM(n) AS BIGINT) AS support
-         |  FROM cm GROUP BY 1),
-         |pt AS (SELECT pred AS class, CAST(SUM(n) AS BIGINT) AS ptot
-         |  FROM cm GROUP BY 1),
-         |dg AS (SELECT actual AS class, n AS tp FROM cm
-         |  WHERE actual = pred),
-         |j AS (SELECT COALESCE(lt.class, pt.class) AS class,
-         |  COALESCE(dg.tp, 0) AS tp, COALESCE(lt.support, 0) AS support,
-         |  COALESCE(pt.ptot, 0) AS ptot
-         |  FROM lt FULL OUTER JOIN pt ON lt.class = pt.class
-         |  LEFT JOIN dg ON COALESCE(lt.class, pt.class) = dg.class),
-         |m AS (SELECT class, tp, support,
-         |  CASE WHEN ptot > 0 THEN CAST(tp AS DOUBLE) / ptot
-         |    ELSE 0.0 END AS precision,
-         |  CASE WHEN support > 0 THEN CAST(tp AS DOUBLE) / support
-         |    ELSE 0.0 END AS recall FROM j)
-         |SELECT class, ${R6("precision")} AS precision_micro,
-         |  ${R6("recall")} AS recall_micro, tp, support,
-         |  ${R6("CASE WHEN precision + recall > 0 THEN 2.0 * precision * recall / (precision + recall) ELSE 0.0 END")}
-         |    AS f1_micro
-         |FROM m""".stripMargin,
-
-    "q_quality_score" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, text,
-         |    string_split_regex(trim(text), '\\s+') AS toks,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS ltoks
-         |  FROM documents),
-         |m AS (
-         |  SELECT doc_id,
-         |    CAST(len(toks) AS DOUBLE) AS nt,
-         |    CAST(len(list_filter(ltoks, x -> list_contains(
-         |      ['the','a','an','and','or','of','to','in','is','are','was',
-         |       'it','that','this','for','on','with','as','at','by','be'],
-         |      x))) AS DOUBLE) / len(toks) AS stop_ratio,
-         |    CAST(length(regexp_replace(text,
-         |      '[^.,;:!?''"()\\[\\]-]', '', 'g')) AS DOUBLE)
-         |      / length(text) AS punct_ratio,
-         |    CAST(length(regexp_replace(text, '[^A-Z]', '', 'g'))
-         |      AS DOUBLE) / length(text) AS upper_ratio
-         |  FROM t),
-         |q AS (
-         |  SELECT doc_id,
-         |    GREATEST(0.0, LEAST(1.0,
-         |      0.5 * (LEAST(nt / 50.0, 1.0) *
-         |        CASE WHEN nt > 10000 THEN 0.5 ELSE 1.0 END)
-         |      + 0.5 * LEAST(stop_ratio * 4.0, 1.0)
-         |      - LEAST(punct_ratio * 2.0, 0.5)
-         |      - LEAST(upper_ratio * 2.0, 0.5))) AS quality
-         |  FROM m)
-         |SELECT doc_id, ${R6("quality")} AS quality_micro FROM q""".stripMargin,
-
-    // q_quality_classifier twin (r16, graduated from rows-only): the
-    // gate persisted its LEARNED weights to a per-run fixture; the
-    // oracle replays split, portable-hash margin fold, planted label
-    // (the q_quality_score quality chain at 0.6), and the accuracy
-    // gate. (margin >= 0) IS the prob >= 0.5 decision, and the planted
-    // label's 0.6 compare is exact because both engines compute the
-    // identical IEEE quality chain.
-    "q_quality_classifier" ->
-      s"""WITH ${QClsMarginCtes(QClsWeightsDir)},
-         |qs_t AS (
-         |  SELECT doc_id, text,
-         |    string_split_regex(trim(text), '\\s+') AS toks,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS ltoks
-         |  FROM documents WHERE $QClsSplitSql),
-         |qs_m AS (
-         |  SELECT doc_id,
-         |    CAST(len(toks) AS DOUBLE) AS nt,
-         |    CAST(len(list_filter(ltoks, x -> list_contains(
-         |      ['the','a','an','and','or','of','to','in','is','are','was',
-         |       'it','that','this','for','on','with','as','at','by','be'],
-         |      x))) AS DOUBLE) / len(toks) AS stop_ratio,
-         |    CAST(length(regexp_replace(text,
-         |      '[^.,;:!?''"()\\[\\]-]', '', 'g')) AS DOUBLE)
-         |      / length(text) AS punct_ratio,
-         |    CAST(length(regexp_replace(text, '[^A-Z]', '', 'g'))
-         |      AS DOUBLE) / length(text) AS upper_ratio
-         |  FROM qs_t),
-         |qs_q AS (
-         |  SELECT doc_id,
-         |    GREATEST(0.0, LEAST(1.0,
-         |      0.5 * (LEAST(nt / 50.0, 1.0) *
-         |        CASE WHEN nt > 10000 THEN 0.5 ELSE 1.0 END)
-         |      + 0.5 * LEAST(stop_ratio * 4.0, 1.0)
-         |      - LEAST(punct_ratio * 2.0, 0.5)
-         |      - LEAST(upper_ratio * 2.0, 0.5))) AS quality
-         |  FROM qs_m)
-         |SELECT 'hashed_bow_lr' AS model,
-         |  (SELECT COUNT(*) FROM documents WHERE NOT ($QClsSplitSql))
-         |    AS n_train,
-         |  COUNT(*) AS n_test,
-         |  SUM(CASE WHEN (margin >= 0) = (quality >= 0.6)
-         |    THEN 1 ELSE 0 END) >= COUNT(*) * 0.7 AS beats_planted
-         |FROM qm JOIN qs_q USING (doc_id)""".stripMargin,
-
-    // q_quality_score_oracle twin: the per-document margin face — same
-    // fixture-fold machinery, gated row by row
-    "q_quality_score_oracle" ->
-      s"""WITH ${QClsMarginCtes(QScoreWeightsDir)}
-         |SELECT doc_id, ${R6("margin")} AS margin_micro,
-         |  margin >= 0 AS keep
-         |FROM qm""".stripMargin,
-
-    // q_quality_score's chain + the lookahead-free BPE-ish count (every
-    // non-alnum non-\s code point opens a piece, plus every alnum run
-    // at start/after-\s — RE2-expressible, unlike the historical
-    // lookahead split) + the mix31-fold fingerprint via list_reduce
-    // (init 0 prepended; every step exact BIGINT)
-    "q_text_quality" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, text,
-         |    string_split_regex(trim(text), '\\s+') AS toks,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS ltoks
-         |  FROM documents),
-         |m AS (
-         |  SELECT doc_id,
-         |    CAST(len(toks) AS DOUBLE) AS nt,
-         |    CAST(len(list_filter(ltoks, x -> list_contains(
-         |      ['the','a','an','and','or','of','to','in','is','are','was',
-         |       'it','that','this','for','on','with','as','at','by','be'],
-         |      x))) AS DOUBLE) / len(toks) AS stop_ratio,
-         |    CAST(length(regexp_replace(text,
-         |      '[^.,;:!?''"()\\[\\]-]', '', 'g')) AS DOUBLE)
-         |      / length(text) AS punct_ratio,
-         |    CAST(length(regexp_replace(text, '[^A-Z]', '', 'g'))
-         |      AS DOUBLE) / length(text) AS upper_ratio
-         |  FROM t),
-         |q AS (
-         |  SELECT doc_id,
-         |    GREATEST(0.0, LEAST(1.0,
-         |      0.5 * (LEAST(nt / 50.0, 1.0) *
-         |        CASE WHEN nt > 10000 THEN 0.5 ELSE 1.0 END)
-         |      + 0.5 * LEAST(stop_ratio * 4.0, 1.0)
-         |      - LEAST(punct_ratio * 2.0, 0.5)
-         |      - LEAST(upper_ratio * 2.0, 0.5))) AS quality
-         |  FROM m),
-         |f AS (
-         |  SELECT doc_id,
-         |    CAST(length(regexp_replace(text,
-         |        '[A-Za-z0-9 \\t\\n\\x0B\\f\\r]', '', 'g')) +
-         |      len(regexp_extract_all(text,
-         |        '(^|[ \\t\\n\\x0B\\f\\r])[A-Za-z0-9]')) AS BIGINT)
-         |      AS n_tokens_bpeish,
-         |    CASE WHEN text IS NULL THEN NULL ELSE
-         |      list_reduce([0::BIGINT] || list_transform(
-         |        string_split_regex(trim(lower(text)), '\\s+'),
-         |        tk -> ${StringKey31Sql("tk")}),
-         |      (a, b) -> ${Mix31Sql("xor(a, b)", "11")}) END
-         |      AS seq_fingerprint
-         |  FROM documents)
-         |SELECT q.doc_id, ${R6("quality")} AS quality_micro,
-         |  f.n_tokens_bpeish, f.seq_fingerprint
-         |FROM q JOIN f USING (doc_id)""".stripMargin,
-
-    // q_text_normalize twin: both engines synthesize the SAME decorated
-    // code points (chr() on the DuckDB side, unicode escapes on the
-    // Spark side), then nfc_normalize + the identical regex chain —
-    // hash equality is a cross-engine NFC + Unicode-category agreement
-    // proof, which the standard's normalization stability policy
-    // guarantees for assigned code points
-    "q_text_normalize" ->
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    (CASE WHEN doc_id % 3 = 0
-         |       THEN 'Cafe' || chr(769) || ' ' ELSE '' END)
-         |    || (CASE WHEN doc_id % 3 = 1
-         |       THEN 'Caf' || chr(233) || chr(160) ELSE '' END)
-         |    || (CASE WHEN doc_id % 2 = 0
-         |       THEN 'A' || chr(8203) || 'B' || chr(9) || 'C'
-         |         || chr(1) || ' ' ELSE '' END)
-         |    || (CASE WHEN doc_id % 5 = 0
-         |       THEN 'V' || chr(11) || 'W ' ELSE '' END)
-         |    || text AS dec
-         |  FROM documents)
-         |SELECT doc_id,
-         |  length(dec) AS n_raw,
-         |  nfc_normalize(dec) AS nfc,
-         |  length(nfc_normalize(dec)) AS n_nfc,
-         |  trim(lower(regexp_replace(regexp_replace(nfc_normalize(dec),
-         |    '[ ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)
-         |      || chr(160) || chr(8199) || chr(8239) || ']+', ' ', 'g'),
-         |    '[\\p{Cc}\\p{Cf}]', '', 'g'))) AS canonical
-         |FROM d""".stripMargin,
-
-    // langId's full decision chain: script-range shares first (exact on
-    // BMP text — char-counting length/substr agree between engines
-    // there), then marker voting with first-wins argmax in the marker
-    // list's declaration order. Marker scores are position scans — the
-    // RE2-compatible twin of the Spark face's zero-width lookahead
-    // counts (one hit per position where ANY marker starts).
-    "q_lang_id" -> {
-      val scores = TextFunctions.langMarkers
-        .map { case (l, ms) => s"    ${LangScoreSql(ms)} AS s_$l" }
-        .mkString(",\n")
-      s"""WITH t AS (
-         |  SELECT doc_id, text, ' ' || lower(text) || ' ' AS p
-         |  FROM documents),
-         |sc AS (
-         |  SELECT doc_id, text,
-         |$scores
-         |  FROM t),
-         |sh AS (
-         |  SELECT doc_id, s_de, s_fr, s_es, s_it, s_pt, s_en,
-         |    GREATEST(CAST(length(text) AS DOUBLE), 1.0) AS n,
-         |    CAST(length(regexp_replace(text,
-         |      '[^\\x{3040}-\\x{30ff}]', '', 'g')) AS DOUBLE) AS kana,
-         |    CAST(length(regexp_replace(text,
-         |      '[^\\x{4e00}-\\x{9fff}]', '', 'g')) AS DOUBLE) AS cjk,
-         |    CAST(length(regexp_replace(text,
-         |      '[^\\x{ac00}-\\x{d7af}]', '', 'g')) AS DOUBLE) AS hangul,
-         |    CAST(length(regexp_replace(text,
-         |      '[^\\x{0400}-\\x{04ff}]', '', 'g')) AS DOUBLE) AS cyr
-         |  FROM sc),
-         |m AS (SELECT *,
-         |  GREATEST(s_de, s_fr, s_es, s_it, s_pt, s_en) AS mx FROM sh)
-         |SELECT doc_id, CASE
-         |  WHEN kana / n > 0.1 THEN 'ja'
-         |  WHEN cjk / n > 0.2 THEN 'zh'
-         |  WHEN hangul / n > 0.2 THEN 'ko'
-         |  WHEN cyr / n > 0.2 THEN 'ru'
-         |  WHEN mx > 0 AND s_de = mx THEN 'de'
-         |  WHEN mx > 0 AND s_fr = mx THEN 'fr'
-         |  WHEN mx > 0 AND s_es = mx THEN 'es'
-         |  WHEN mx > 0 AND s_it = mx THEN 'it'
-         |  WHEN mx > 0 AND s_pt = mx THEN 'pt'
-         |  ELSE 'en' END AS lang_id
-         |FROM m""".stripMargin
-    },
-
-    "q_text_redact" ->
-      s"""SELECT doc_id,
-         |  md5(regexp_replace(text, '\\btable\\b', '<TBL>', 'g'))
-         |    AS redacted_md5,
-         |  CAST(length(regexp_extract_all(text, '\\btable\\b')) AS BIGINT)
-         |    AS n_matches
-         |FROM documents""".stripMargin,
-
-    "q_pack_by_lang" ->
-      s"""WITH k AS (SELECT doc_id, lang, n_chars,
-         |  ${HashSql("doc_id", 0L)} AS h FROM documents),
-         |p AS (SELECT doc_id, lang, n_chars,
-         |  CAST(COALESCE(SUM(n_chars) OVER (PARTITION BY lang
-         |    ORDER BY h, doc_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |    AS BIGINT) AS pfx
-         |  FROM k)
-         |SELECT lang, pfx // 16384 AS chunk_id, COUNT(*) AS n_docs,
-         |  CAST(SUM(n_chars) AS BIGINT) AS tokens
-         |FROM p GROUP BY 1, 2""".stripMargin,
-
-    "q_winsorize" ->
-      s"""WITH e AS ($EventsNs),
-         |b AS (SELECT quantile_cont(value, 0.05) AS lo,
-         |  quantile_cont(value, 0.95) AS hi FROM e)
-         |SELECT event_id,
-         |  ${R6("LEAST(GREATEST(value, lo), hi)")} AS value_w_micro
-         |FROM e, b""".stripMargin,
-
-    // median/MAD outliers: same single-multiply threshold constant as
-    // the Spark face (3.5 / 0.6745 precomputed in ONE double), so the
-    // flag decision is bit-identical cross-engine
-    "q_mad_outliers" ->
-      s"""WITH e AS ($EventsNs),
-         |m AS (SELECT event_type, quantile_cont(value, 0.5) AS med
-         |  FROM e GROUP BY 1),
-         |d AS (SELECT e.event_id, e.event_type, e.value, m.med,
-         |    abs(e.value - m.med) AS ad
-         |  FROM e JOIN m USING (event_type)),
-         |s AS (SELECT event_type, quantile_cont(ad, 0.5) AS mad
-         |  FROM d GROUP BY 1)
-         |SELECT d.event_id, d.event_type,
-         |  ${R6("d.med")} AS med_micro,
-         |  ${R6("s.mad")} AS mad_micro,
-         |  ${R6("CASE WHEN s.mad > 0.0 THEN 0.6745 * (d.value - d.med) / s.mad END")} AS robust_z_micro,
-         |  d.ad > ${3.5 / 0.6745} * s.mad AS is_outlier
-         |FROM d JOIN s USING (event_type)""".stripMargin,
-
-    // PageRank: the SAME integer pico-grid power iteration, unrolled —
-    // BIGINT `//` everywhere (SUMs cast back from HUGEINT), so every
-    // iteration is bit-identical to the engine's LONG arithmetic
-    "q_pagerank" -> PageRankSql(
-      """e AS MATERIALIZED (SELECT src, dst, 1 AS w FROM (
-        |  SELECT DISTINCT src, dst FROM (
-        |    SELECT src, dst FROM er
-        |    UNION ALL SELECT dst AS src, src AS dst FROM er)))""".stripMargin,
-      iters = 5),
-
-    // personalized PageRank: the same unrolled chain with teleport,
-    // dangling share, and initial mass confined to the seed predicate
-    "q_ppr" -> PageRankSql(
-      """e AS MATERIALIZED (SELECT src, dst, 1 AS w FROM (
-        |  SELECT DISTINCT src, dst FROM (
-        |    SELECT src, dst FROM er
-        |    UNION ALL SELECT dst AS src, src AS dst FROM er)))""".stripMargin,
-      iters = 5, seedWhere = Some("node % 20 = 0")),
-
-    // weighted PageRank: mass splits proportionally to the co-order
-    // line count — same chain, contributions (r * w) // out_w
-    "q_pagerank_weighted" -> PageRankSql(
-      """ew AS MATERIALIZED (
-        |  SELECT src, dst, CAST(COUNT(*) AS BIGINT) AS w
-        |  FROM er GROUP BY 1, 2),
-        |e AS MATERIALIZED (SELECT src, dst, w FROM ew
-        |  UNION ALL SELECT dst AS src, src AS dst, w FROM ew)""".stripMargin,
-      iters = 5),
-
-    // triangles: exact enumeration over the same repeat-co-purchase
-    // edge set (u < v is already canonical; counts are exact
-    // regardless of enumeration order)
-    "q_triangles" ->
-      s"""WITH e AS (
-         |  SELECT a.l_partkey AS u, b.l_partkey AS v
-         |  FROM lineitem a JOIN lineitem b
-         |    ON a.l_orderkey = b.l_orderkey
-         |    AND a.l_partkey < b.l_partkey
-         |  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         |t AS (
-         |  SELECT e1.u AS n1, e1.v AS n2, e2.v AS n3
-         |  FROM e e1
-         |  JOIN e e2 ON e2.u = e1.u AND e2.v > e1.v
-         |  JOIN e e3 ON e3.u = e1.v AND e3.v = e2.v),
-         |c AS (
-         |  SELECT n1 AS node FROM t
-         |  UNION ALL SELECT n2 FROM t
-         |  UNION ALL SELECT n3 FROM t)
-         |SELECT node, COUNT(*) AS n_triangles FROM c GROUP BY 1""".stripMargin,
-
-    // local clustering coefficient: 2T / (d(d-1)) over the same exact
-    // triangle enumeration + degree count; deg-1 nodes report 0
-    "q_clustering_coef" ->
-      s"""WITH e AS MATERIALIZED (
-         |  SELECT a.l_partkey AS u, b.l_partkey AS v
-         |  FROM lineitem a JOIN lineitem b
-         |    ON a.l_orderkey = b.l_orderkey
-         |    AND a.l_partkey < b.l_partkey
-         |  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         |t AS (
-         |  SELECT e1.u AS n1, e1.v AS n2, e2.v AS n3
-         |  FROM e e1
-         |  JOIN e e2 ON e2.u = e1.u AND e2.v > e1.v
-         |  JOIN e e3 ON e3.u = e1.v AND e3.v = e2.v),
-         |tc AS (
-         |  SELECT node, COUNT(*) AS n_triangles FROM (
-         |    SELECT n1 AS node FROM t
-         |    UNION ALL SELECT n2 FROM t
-         |    UNION ALL SELECT n3 FROM t) GROUP BY 1),
-         |deg AS (
-         |  SELECT node, COUNT(*) AS degree FROM (
-         |    SELECT u AS node FROM e UNION ALL SELECT v AS node FROM e)
-         |  GROUP BY 1)
-         |SELECT d.node, d.degree,
-         |  COALESCE(tc.n_triangles, 0) AS n_triangles,
-         |  ${R6("CASE WHEN d.degree >= 2 THEN CAST(COALESCE(tc.n_triangles, 0) * 2 AS DOUBLE) / (d.degree * (d.degree - 1)) ELSE 0.0 END")} AS clustering_micro
-         |FROM deg d LEFT JOIN tc ON tc.node = d.node""".stripMargin,
-
-    // link prediction: wedge join at the shared neighbor over the same
-    // repeat-co-purchase edges, NOT EXISTS anti vs the edge set
-    "q_link_pred" ->
-      s"""WITH e AS MATERIALIZED (
-         |  SELECT a.l_partkey AS u, b.l_partkey AS v
-         |  FROM lineitem a JOIN lineitem b
-         |    ON a.l_orderkey = b.l_orderkey
-         |    AND a.l_partkey < b.l_partkey
-         |  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         |adj AS MATERIALIZED (SELECT u AS c, v AS n FROM e
-         |  UNION ALL SELECT v AS c, u AS n FROM e),
-         |deg AS MATERIALIZED (
-         |  SELECT n AS node, COUNT(*) AS deg FROM adj GROUP BY 1),
-         |centers AS MATERIALIZED (
-         |  SELECT a.c, a.n, d.deg AS cdeg
-         |  FROM adj a JOIN deg d ON d.node = a.c
-         |  WHERE d.deg <= 1000),
-         |pairs AS (
-         |  SELECT w1.n AS x, w2.n AS y, COUNT(*) AS common,
-         |    SUM(CAST(1.0 / ln(w1.cdeg) AS DECIMAL(18,8))) AS aa
-         |  FROM centers w1 JOIN centers w2
-         |    ON w1.c = w2.c AND w1.n < w2.n
-         |  GROUP BY 1, 2),
-         |cand AS (
-         |  SELECT p.* FROM pairs p
-         |  WHERE NOT EXISTS (SELECT 1 FROM e
-         |    WHERE e.u = p.x AND e.v = p.y))
-         |SELECT x, y, common, dx.deg AS deg_x, dy.deg AS deg_y,
-         |  ${R6("CAST(common AS DOUBLE) / (dx.deg + dy.deg - common)")} AS jaccard_micro,
-         |  ${R6("CAST(aa AS DOUBLE)")} AS adamic_adar_micro
-         |FROM cand JOIN deg dx ON dx.node = x JOIN deg dy ON dy.node = y
-         |ORDER BY common DESC, x, y LIMIT 50""".stripMargin,
-
-    // degree distribution: log2 bin via integer bit-length (bin()
-    // string), never libm log2 — exact cross-engine
-    "q_degree_dist" ->
-      s"""WITH e AS (
-         |  SELECT a.l_partkey AS u, b.l_partkey AS v
-         |  FROM lineitem a JOIN lineitem b
-         |    ON a.l_orderkey = b.l_orderkey
-         |    AND a.l_partkey < b.l_partkey
-         |  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         |adj AS (SELECT u AS c, v AS n FROM e
-         |  UNION ALL SELECT v AS c, u AS n FROM e),
-         |deg AS (SELECT c AS node, COUNT(*) AS degree
-         |  FROM adj GROUP BY 1),
-         |g AS (SELECT degree, COUNT(*) AS n_nodes FROM deg GROUP BY 1)
-         |SELECT degree, n_nodes,
-         |  CAST(length(bin(degree)) - 1 AS BIGINT) AS log2_bin
-         |FROM g""".stripMargin,
-
-    // 2-hop neighborhood: distance-1 pairs are the adjacency, distance-2
-    // pairs the frontier join minus self minus known — first (minimal)
-    // distance kept, per-term 1/d DECIMAL-quantized
-    "q_khop" ->
-      s"""WITH e AS MATERIALIZED (
-         |  SELECT a.l_partkey AS u, b.l_partkey AS v
-         |  FROM lineitem a JOIN lineitem b
-         |    ON a.l_orderkey = b.l_orderkey
-         |    AND a.l_partkey < b.l_partkey
-         |  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         |adj AS MATERIALIZED (SELECT u AS c, v AS n FROM e
-         |  UNION ALL SELECT v AS c, u AS n FROM e),
-         |d1 AS MATERIALIZED (SELECT c AS node, n AS other FROM adj),
-         |n2 AS MATERIALIZED (
-         |  SELECT DISTINCT d1.node, a.n AS other
-         |  FROM d1 JOIN adj a ON a.c = d1.other
-         |  WHERE a.n <> d1.node),
-         |d2 AS (
-         |  SELECT node, other FROM n2
-         |  WHERE NOT EXISTS (SELECT 1 FROM d1
-         |    WHERE d1.node = n2.node AND d1.other = n2.other)),
-         |k AS (
-         |  SELECT node, 1 AS d FROM d1
-         |  UNION ALL SELECT node, 2 AS d FROM d2)
-         |SELECT node, COUNT(*) AS n_reachable,
-         |  ${R6("CAST(SUM(CAST(1.0 / d AS DECIMAL(18,8))) AS DOUBLE)")} AS harmonic_micro
-         |FROM k GROUP BY 1""".stripMargin,
-
-    // assortativity: Pearson corr of endpoint degrees over the
-    // both-orientations edge list
-    "q_assortativity" ->
-      s"""WITH e AS (
-         |  SELECT a.l_partkey AS u, b.l_partkey AS v
-         |  FROM lineitem a JOIN lineitem b
-         |    ON a.l_orderkey = b.l_orderkey
-         |    AND a.l_partkey < b.l_partkey
-         |  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         |adj AS (SELECT u AS c, v AS n FROM e
-         |  UNION ALL SELECT v AS c, u AS n FROM e),
-         |deg AS (SELECT c AS node, COUNT(*) AS deg
-         |  FROM adj GROUP BY 1),
-         |p AS (
-         |  SELECT da.deg AS dx, db.deg AS dy
-         |  FROM adj a JOIN deg da ON da.node = a.c
-         |  JOIN deg db ON db.node = a.n)
-         |SELECT COUNT(*) AS n_pairs,
-         |  ${R6("corr(dx, dy)")} AS assortativity_micro
-         |FROM p""".stripMargin,
-
-    // 2-core: 8 unrolled peels (fixpoint reached in 4 on this graph —
-    // extra peels are no-ops since the k-core is the unique fixpoint).
-    // Each peel references its predecessor TWICE (degree filter + edge
-    // restriction), so every CTE is MATERIALIZED — plain CTE inlining
-    // would re-expand the chain 2^8 times
-    "q_kcore" -> {
-      val k = 2
-      val peels = (1 to 8).map { i =>
-        val p = i - 1
-        s"""k$i AS MATERIALIZED (SELECT a FROM (
-           |  SELECT a, COUNT(*) AS n FROM c$p GROUP BY 1)
-           |  WHERE n >= $k),
-           |c$i AS MATERIALIZED (SELECT c.a, c.b FROM c$p c
-           |  JOIN k$i x ON c.a = x.a JOIN k$i y ON c.b = y.a)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e AS MATERIALIZED (
-         |  SELECT a.l_partkey AS u, b.l_partkey AS v
-         |  FROM lineitem a JOIN lineitem b
-         |    ON a.l_orderkey = b.l_orderkey
-         |    AND a.l_partkey < b.l_partkey
-         |  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         |c0 AS MATERIALIZED (SELECT u AS a, v AS b FROM e
-         |  UNION ALL SELECT v AS a, u AS b FROM e),
-         |$peels
-         |SELECT a AS node, COUNT(*) AS degree FROM c8 GROUP BY 1""".stripMargin
-    },
-
-    "q_trailing_topk" ->
-      s"""WITH e AS ($EventsNs),
-         |daily AS (SELECT user_id, ts_ns // ${DAY} AS day,
-         |  ${MoneySum("value")} AS pnl FROM e GROUP BY 1, 2),
-         |t AS (SELECT user_id, day,
-         |  SUM(pnl) OVER w AS trailing_pnl, COUNT(*) OVER w AS n_w
-         |  FROM daily WINDOW w AS (PARTITION BY user_id ORDER BY day
-         |    ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING)),
-         |r AS (SELECT user_id, day, trailing_pnl,
-         |  ROW_NUMBER() OVER (PARTITION BY day
-         |    ORDER BY trailing_pnl DESC, user_id) AS rank
-         |  FROM t WHERE n_w = 3)
-         |SELECT user_id, day, ${R6("trailing_pnl")} AS trailing_micro,
-         |  CAST(rank AS BIGINT) AS rank FROM r WHERE rank <= 2""".stripMargin,
-
-    // the full curation pipeline with the LSH stage off: every remaining
-    // stage (md5 dedup winner, quality score, hash sample, per-lang
-    // prefix-sum packing) has an exact DuckDB twin — quality-score CTEs
-    // identical to q_quality_score's, sampling/packing hash identical to
-    // q_sample_bernoulli/q_pack_by_lang's
-    "q_curate_sql" ->
-      s"""WITH w AS (
-         |  SELECT doc_id, lang, n_chars, text,
-         |    ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id)
-         |      AS rk
-         |  FROM documents),
-         |d AS (SELECT doc_id, lang, n_chars, text FROM w WHERE rk = 1),
-         |t AS (
-         |  SELECT doc_id, lang, n_chars, text,
-         |    string_split_regex(trim(text), '\\s+') AS toks,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS ltoks
-         |  FROM d),
-         |m AS (
-         |  SELECT doc_id, lang, n_chars,
-         |    CAST(len(toks) AS DOUBLE) AS nt,
-         |    CAST(len(list_filter(ltoks, x -> list_contains(
-         |      ['the','a','an','and','or','of','to','in','is','are','was',
-         |       'it','that','this','for','on','with','as','at','by','be'],
-         |      x))) AS DOUBLE) / len(toks) AS stop_ratio,
-         |    CAST(length(regexp_replace(text,
-         |      '[^.,;:!?''"()\\[\\]-]', '', 'g')) AS DOUBLE)
-         |      / length(text) AS punct_ratio,
-         |    CAST(length(regexp_replace(text, '[^A-Z]', '', 'g'))
-         |      AS DOUBLE) / length(text) AS upper_ratio
-         |  FROM t),
-         |q AS (
-         |  SELECT doc_id, lang, n_chars,
-         |    GREATEST(0.0, LEAST(1.0,
-         |      0.5 * (LEAST(nt / 50.0, 1.0) *
-         |        CASE WHEN nt > 10000 THEN 0.5 ELSE 1.0 END)
-         |      + 0.5 * LEAST(stop_ratio * 4.0, 1.0)
-         |      - LEAST(punct_ratio * 2.0, 0.5)
-         |      - LEAST(upper_ratio * 2.0, 0.5))) AS quality
-         |  FROM m),
-         |s AS (
-         |  SELECT doc_id, lang, n_chars, quality,
-         |    ${HashSql("doc_id", 5L)} AS h
-         |  FROM q
-         |  WHERE quality >= 0.2
-         |    AND ${HashSql("doc_id", 5L)} < ${Sampling.threshold(0.9)}),
-         |p AS (
-         |  SELECT doc_id, lang, quality,
-         |    CAST(COALESCE(SUM(n_chars) OVER (PARTITION BY lang
-         |      ORDER BY h, doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS BIGINT) AS pfx
-         |  FROM s)
-         |SELECT doc_id, lang, pfx // 16384 AS chunk_id,
-         |  pfx % 16384 AS chunk_offset, ${R6("quality")} AS quality_micro
-         |FROM p""".stripMargin,
-
-    // the composed pipeline with the PORTABLE LSH stage ON:
-    // q_curate_sql's dedup/quality/sample CTEs (ltoks carried through),
-    // then mix31 MinHash signatures + band buckets over the SURVIVORS,
-    // pairs at >= 29/32 slot agreement (= est_jaccard >= 0.9 exactly on
-    // integers), greedy higher-id drop, same per-lang prefix packing
-    "q_curate" ->
-      s"""WITH w AS (
-         |  SELECT doc_id, lang, n_chars, text,
-         |    ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id)
-         |      AS rk
-         |  FROM documents),
-         |d AS (SELECT doc_id, lang, n_chars, text FROM w WHERE rk = 1),
-         |t AS (
-         |  SELECT doc_id, lang, n_chars, text,
-         |    string_split_regex(trim(text), '\\s+') AS toks,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS ltoks
-         |  FROM d),
-         |m AS (
-         |  SELECT doc_id, lang, n_chars, text, ltoks,
-         |    CAST(len(toks) AS DOUBLE) AS nt,
-         |    CAST(len(list_filter(ltoks, x -> list_contains(
-         |      ['the','a','an','and','or','of','to','in','is','are','was',
-         |       'it','that','this','for','on','with','as','at','by','be'],
-         |      x))) AS DOUBLE) / len(toks) AS stop_ratio,
-         |    CAST(length(regexp_replace(text,
-         |      '[^.,;:!?''"()\\[\\]-]', '', 'g')) AS DOUBLE)
-         |      / length(text) AS punct_ratio,
-         |    CAST(length(regexp_replace(text, '[^A-Z]', '', 'g'))
-         |      AS DOUBLE) / length(text) AS upper_ratio
-         |  FROM t),
-         |q AS (
-         |  SELECT doc_id, lang, n_chars, ltoks,
-         |    GREATEST(0.0, LEAST(1.0,
-         |      0.5 * (LEAST(nt / 50.0, 1.0) *
-         |        CASE WHEN nt > 10000 THEN 0.5 ELSE 1.0 END)
-         |      + 0.5 * LEAST(stop_ratio * 4.0, 1.0)
-         |      - LEAST(punct_ratio * 2.0, 0.5)
-         |      - LEAST(upper_ratio * 2.0, 0.5))) AS quality
-         |  FROM m),
-         |s AS (
-         |  SELECT doc_id, lang, n_chars, quality, ltoks,
-         |    ${HashSql("doc_id", 5L)} AS h
-         |  FROM q
-         |  WHERE quality >= 0.2
-         |    AND ${HashSql("doc_id", 5L)} < ${Sampling.threshold(0.9)}),
-         |surv AS (SELECT doc_id, ltoks AS t FROM s),
-         |${MinhashSigCtesTok("surv", 32)},
-         |bnd AS (
-         |  SELECT doc_id, sig, band,
-         |    list_reduce([0::BIGINT] ||
-         |        sig[band * 4 + 1 : band * 4 + 4],
-         |      (a, b) -> (a * 1000003 + b) % 2147483648) AS bfold
-         |  FROM (SELECT doc_id, sig,
-         |          unnest(generate_series(0, 7)) AS band
-         |        FROM sigs)),
-         |bkt AS (
-         |  SELECT doc_id, sig, band,
-         |    ${Mix31Sql("bfold", "900001 + band")} AS bucket
-         |  FROM bnd),
-         |bsz AS (
-         |  SELECT band, bucket, COUNT(*) AS bn FROM bkt GROUP BY 1, 2),
-         |mpairs AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    a.sig AS sig_a, b.sig AS sig_b
-         |  FROM bkt a
-         |  JOIN bsz c ON a.band = c.band AND a.bucket = c.bucket
-         |    AND c.bn <= 4096
-         |  JOIN bkt b ON a.band = b.band AND a.bucket = b.bucket
-         |  WHERE a.doc_id < b.doc_id),
-         |u AS (
-         |  SELECT * FROM s WHERE doc_id NOT IN (
-         |    SELECT id_b FROM mpairs
-         |    WHERE len(list_filter(generate_series(1, 32),
-         |      i -> sig_a[i] = sig_b[i])) >= 29)),
-         |p AS (
-         |  SELECT doc_id, lang, quality,
-         |    CAST(COALESCE(SUM(n_chars) OVER (PARTITION BY lang
-         |      ORDER BY h, doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS BIGINT) AS pfx
-         |  FROM u)
-         |SELECT doc_id, lang, pfx // 16384 AS chunk_id,
-         |  pfx % 16384 AS chunk_offset, ${R6("quality")} AS quality_micro
-         |FROM p""".stripMargin,
-
-    // the composed pipeline with the pairwise stage ON: q_curate_sql's
-    // dedup/quality/sample CTEs (text carried through), then the exact
-    // 3-gram Jaccard dup pairs over the SURVIVORS (q_dedup_jaccard's
-    // shingle shape, unblocked, threshold 0.5), greedy higher-id drop,
-    // and the same per-lang prefix-sum packing
-    "q_curate_jaccard" ->
-      s"""WITH w AS (
-         |  SELECT doc_id, lang, n_chars, text,
-         |    ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id)
-         |      AS rk
-         |  FROM documents),
-         |d AS (SELECT doc_id, lang, n_chars, text FROM w WHERE rk = 1),
-         |t AS (
-         |  SELECT doc_id, lang, n_chars, text,
-         |    string_split_regex(trim(text), '\\s+') AS toks,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS ltoks
-         |  FROM d),
-         |m AS (
-         |  SELECT doc_id, lang, n_chars, text, ltoks,
-         |    CAST(len(toks) AS DOUBLE) AS nt,
-         |    CAST(len(list_filter(ltoks, x -> list_contains(
-         |      ['the','a','an','and','or','of','to','in','is','are','was',
-         |       'it','that','this','for','on','with','as','at','by','be'],
-         |      x))) AS DOUBLE) / len(toks) AS stop_ratio,
-         |    CAST(length(regexp_replace(text,
-         |      '[^.,;:!?''"()\\[\\]-]', '', 'g')) AS DOUBLE)
-         |      / length(text) AS punct_ratio,
-         |    CAST(length(regexp_replace(text, '[^A-Z]', '', 'g'))
-         |      AS DOUBLE) / length(text) AS upper_ratio
-         |  FROM t),
-         |q AS (
-         |  SELECT doc_id, lang, n_chars, ltoks,
-         |    GREATEST(0.0, LEAST(1.0,
-         |      0.5 * (LEAST(nt / 50.0, 1.0) *
-         |        CASE WHEN nt > 10000 THEN 0.5 ELSE 1.0 END)
-         |      + 0.5 * LEAST(stop_ratio * 4.0, 1.0)
-         |      - LEAST(punct_ratio * 2.0, 0.5)
-         |      - LEAST(upper_ratio * 2.0, 0.5))) AS quality
-         |  FROM m),
-         |s AS (
-         |  SELECT doc_id, lang, n_chars, quality, ltoks,
-         |    ${HashSql("doc_id", 5L)} AS h
-         |  FROM q
-         |  WHERE quality >= 0.2
-         |    AND ${HashSql("doc_id", 5L)} < ${Sampling.threshold(0.9)}),
-         |shs AS (
-         |  SELECT doc_id,
-         |    list_distinct(list_transform(
-         |      generate_series(1, len(ltoks) - 2),
-         |      i -> array_to_string(ltoks[i:i+2], ' '))) AS shset
-         |  FROM s),
-         |sized AS (SELECT doc_id, shset, len(shset) AS sz FROM shs
-         |          WHERE len(shset) > 0),
-         |exsh AS (SELECT doc_id, sz, unnest(shset) AS shingle FROM sized),
-         |jp AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    a.sz AS size_a, b.sz AS size_b, COUNT(*) AS inter
-         |  FROM exsh a
-         |  JOIN exsh b ON a.shingle = b.shingle
-         |  WHERE a.doc_id < b.doc_id GROUP BY 1, 2, 3, 4),
-         |dup_pairs AS (
-         |  SELECT id_a, id_b FROM jp
-         |  WHERE inter::DOUBLE / (size_a + size_b - inter)::DOUBLE >= 0.8),
-         |u AS (
-         |  SELECT * FROM s
-         |  WHERE doc_id NOT IN (SELECT id_b FROM dup_pairs)),
-         |p AS (
-         |  SELECT doc_id, lang, quality,
-         |    CAST(COALESCE(SUM(n_chars) OVER (PARTITION BY lang
-         |      ORDER BY h, doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS BIGINT) AS pfx
-         |  FROM u)
-         |SELECT doc_id, lang, pfx // 16384 AS chunk_id,
-         |  pfx % 16384 AS chunk_offset, ${R6("quality")} AS quality_micro
-         |FROM p""".stripMargin,
-
-    "q_sem_decontam" ->
-      s"""WITH v AS (
-         |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS vec
-         |  FROM embeddings),
-         |e AS (SELECT vec AS ev FROM v WHERE vec_id % 17 = 0),
-         |sc AS (
-         |  SELECT c.vec_id, MAX(${CosSql("c.vec", "ev")}) AS mx
-         |  FROM v c, e WHERE c.vec_id % 17 <> 0 GROUP BY 1)
-         |SELECT vec_id, ${R6("mx")} AS max_eval_cos_micro,
-         |  mx >= 0.9 AS contaminated
-         |FROM sc""".stripMargin,
-
-    "q_rollup" ->
-      s"""SELECT l_returnflag, l_linestatus,
-         |  CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
-         |  COUNT(*) AS n,
-         |  CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty
-         |FROM lineitem
-         |GROUP BY ROLLUP(l_returnflag, l_linestatus)""".stripMargin,
-
-    "q_cube" ->
-      s"""SELECT lang, source,
-         |  CAST(GROUPING(lang, source) AS BIGINT) AS gid,
-         |  COUNT(*) AS n, CAST(SUM(n_chars) AS BIGINT) AS chars
-         |FROM documents GROUP BY CUBE(lang, source)""".stripMargin,
-
-    // HLL estimator bit-reproducible in SQL — see HllChainSql.
-    "q_hll_distinct" ->
-      s"""WITH hkeys AS (
-         |  SELECT l_returnflag AS g, l_orderkey AS k FROM lineitem),
-         |${HllChainSql(seed = 0L)}
-         |SELECT hll.g AS l_returnflag, ${R6("est")} AS est_micro,
-         |  x.exact_distinct
-         |FROM hll JOIN (
-         |  SELECT l_returnflag AS g,
-         |    COUNT(DISTINCT l_orderkey) AS exact_distinct
-         |  FROM lineitem GROUP BY 1) x USING (g)""".stripMargin,
-
-    // Word-level HLL through the portable string key; tiny vocab lands
-    // in the linear-counting branch (the other estimator face).
-    "q_hll_vocab" ->
-      s"""WITH words AS (
-         |  SELECT lang, word FROM (
-         |    SELECT lang,
-         |      unnest(string_split_regex(trim(text), '\\s+')) AS word
-         |    FROM documents) WHERE length(word) > 0),
-         |hkeys AS (
-         |  SELECT lang AS g, ${StringKey31Sql("word")} AS k FROM words),
-         |${HllChainSql(seed = 2L)}
-         |SELECT hll.g AS lang, ${R6("est")} AS est_micro,
-         |  x.exact_distinct
-         |FROM hll JOIN (
-         |  SELECT lang AS g, COUNT(DISTINCT word) AS exact_distinct
-         |  FROM words GROUP BY 1) x USING (g)""".stripMargin,
-
-    // CMS over string-keyed words: integer cells, bit-exact.
-    "q_cms_words" -> {
-      val bucket = s"(${Mix31Sql("wkey", "3 + row * 1000003")}) % 256"
-      s"""WITH words AS (
-         |  SELECT word, ${StringKey31Sql("word")} AS wkey FROM (
-         |    SELECT unnest(string_split_regex(trim(text), '\\s+')) AS word
-         |    FROM documents) WHERE length(word) > 0),
-         |d AS (SELECT * FROM range(0, 4) t(row)),
-         |cells AS (
-         |  SELECT row, $bucket AS bucket, COUNT(*) AS cnt
-         |  FROM words CROSS JOIN d GROUP BY 1, 2),
-         |probe AS (
-         |  SELECT wkey, MIN(COALESCE(c.cnt, 0)) AS est
-         |  FROM (
-         |    SELECT wkey, row, $bucket AS bucket
-         |    FROM (SELECT DISTINCT wkey FROM words) CROSS JOIN d) k
-         |  LEFT JOIN cells c USING (row, bucket) GROUP BY 1),
-         |exact AS (
-         |  SELECT word, wkey, COUNT(*) AS exact_cnt
-         |  FROM words GROUP BY 1, 2)
-         |SELECT word, est, exact_cnt, est >= 940 AS is_heavy
-         |FROM exact JOIN probe USING (wkey)""".stripMargin
-    },
-
-    // A-ES weighted top-k: identical u and w doubles; the only libm
-    // call is pow, absorbed by the nano-rounded rank (a selection flip
-    // needs two ranks within 1e-9 of each other and of the cut).
-    "q_weighted_topk" ->
-      s"""WITH r AS (
-         |  SELECT doc_id, source,
-         |    CAST(n_chars AS DOUBLE) / CAST(1000.0 AS DOUBLE) AS w,
-         |    (CAST(${HashSql("doc_id", 21L)} AS DOUBLE) + 1.0e0)
-         |      / 1048576.0e0 AS u
-         |  FROM documents)
-         |SELECT doc_id, source,
-         |  CAST(floor(pow(u, 1.0e0 / w) * 1e9 + 0.5) AS BIGINT)
-         |    AS es_rank_nano
-         |FROM r WHERE w > 0
-         |ORDER BY es_rank_nano DESC, doc_id LIMIT 60""".stripMargin,
-
-    // Sketch-composed profile: HLL chain + histogram-quantile chain
-    // per source, volumes joined on — all deterministic primitives.
-    "q_corpus_profile" ->
-      s"""WITH hkeys AS (
-         |  SELECT source AS g, ${StringKey31Sql("text")} AS k
-         |  FROM documents),
-         |${HllChainSql(seed = 6L)},
-         |src AS (
-         |  SELECT source AS g, CAST(n_chars AS DOUBLE) AS v
-         |  FROM documents
-         |  WHERE n_chars IS NOT NULL
-         |    AND NOT isnan(CAST(n_chars AS DOUBLE))),
-         |rng AS (
-         |  SELECT g, MIN(v) AS lo, MAX(v) AS hi, COUNT(*) AS n
-         |  FROM src GROUP BY 1),
-         |b AS (
-         |  SELECT g, lo, hi, n,
-         |    CASE WHEN hi = lo THEN 0
-         |      ELSE LEAST(CAST(floor((v - lo) / ((hi - lo) / 32.0e0))
-         |        AS BIGINT), 31) END AS bucket
-         |  FROM src JOIN rng USING (g)),
-         |h AS (
-         |  SELECT g, lo, hi, n, bucket, COUNT(*) AS cnt
-         |  FROM b GROUP BY 1, 2, 3, 4, 5),
-         |c AS (
-         |  SELECT *, SUM(cnt) OVER (PARTITION BY g ORDER BY bucket)
-         |    AS cum FROM h),
-         |qv AS (SELECT * FROM (VALUES (0.5e0), (0.95e0)) t(q)),
-         |j AS (
-         |  SELECT c.*, q,
-         |    GREATEST(1, CAST(ceil(q * n) AS BIGINT)) AS r,
-         |    cum - cnt AS cumBefore
-         |  FROM c CROSS JOIN qv
-         |  WHERE cum >= GREATEST(1, CAST(ceil(q * n) AS BIGINT))),
-         |p AS (
-         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY g, q ORDER BY bucket)
-         |    AS rn FROM j),
-         |est AS (
-         |  SELECT g, q,
-         |    CASE WHEN hi = lo THEN lo ELSE lo
-         |      + ((hi - lo) / 32.0e0) * CAST(bucket AS DOUBLE)
-         |      + ((hi - lo) / 32.0e0) * (CAST(r - cumBefore AS DOUBLE)
-         |        / CAST(cnt AS DOUBLE)) END AS v
-         |  FROM p WHERE rn = 1),
-         |piv AS (
-         |  SELECT g, MAX(CASE WHEN q = 0.5e0 THEN v END) AS p50,
-         |    MAX(CASE WHEN q = 0.95e0 THEN v END) AS p95
-         |  FROM est GROUP BY 1),
-         |vol AS (SELECT source AS g, COUNT(*) AS n_docs
-         |        FROM documents GROUP BY 1)
-         |SELECT vol.g AS source, vol.n_docs,
-         |  ${R6("hll.est")} AS uniq_est_micro,
-         |  ${R6("piv.p50")} AS p50_micro, ${R6("piv.p95")} AS p95_micro
-         |FROM vol JOIN hll USING (g) JOIN piv USING (g)""".stripMargin,
-
-    "q_weighted_topk_group" ->
-      s"""WITH r AS (
-         |  SELECT lang, doc_id,
-         |    CAST(n_chars AS DOUBLE) / CAST(1000.0 AS DOUBLE) AS w,
-         |    (CAST(${HashSql("doc_id", 21L)} AS DOUBLE) + 1.0e0)
-         |      / 1048576.0e0 AS u
-         |  FROM documents),
-         |s AS (
-         |  SELECT lang, doc_id,
-         |    CAST(floor(pow(u, 1.0e0 / w) * 1e9 + 0.5) AS BIGINT)
-         |      AS es_rank_nano
-         |  FROM r WHERE w > 0),
-         |p AS (
-         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY lang
-         |    ORDER BY es_rank_nano DESC, doc_id) AS rk FROM s)
-         |SELECT lang, doc_id, es_rank_nano FROM p WHERE rk <= 10""".stripMargin,
-
-    "q_unimax_plan" ->
-      s"""WITH ${UnimaxPlanSql("documents", "lang", "n_chars",
-             200000L, 2.0)}
-         |SELECT source, n_tokens, ${R6("quota")} AS quota_micro,
-         |  ${R6("epochs")} AS epochs_micro
-         |FROM uplan""".stripMargin,
-
-    "q_unimax_apply" ->
-      s"""WITH ${UnimaxPlanSql("documents", "lang", "n_chars",
-             200000L, 2.0)},
-         |r AS (
-         |  SELECT doc_id, lang, epochs AS w
-         |  FROM documents d JOIN uplan p ON d.lang = p.source),
-         |cp AS (
-         |  SELECT doc_id, lang,
-         |    CAST(floor(GREATEST(w, 0.0e0)) AS BIGINT) +
-         |    CASE WHEN ${HashSql("doc_id", 23L)} <
-         |      CAST(floor((GREATEST(w, 0.0e0) - floor(GREATEST(w, 0.0e0)))
-         |        * 1048576.0 + 0.5) AS BIGINT)
-         |    THEN 1 ELSE 0 END AS copies
-         |  FROM r)
-         |SELECT doc_id, lang,
-         |  CAST(unnest(generate_series(1, copies)) AS BIGINT)
-         |    AS epoch_copy
-         |FROM cp WHERE copies >= 1""".stripMargin,
-
-    // PQ: eight per-subspace unrolled k-means (KmeansCtesOver), encode
-    // by micro-rounded argmin, integer ADC sum — the whole pipeline in
-    // SQL. Subspace slices are 1-based inclusive list ranges.
-    "q_pq_ann" -> {
-      val m = 8; val dsub = 8
-      val subspaces = (0 until m).map { j =>
-        s"vs$j AS (SELECT vec_id, vec[${j * dsub + 1}:${(j + 1) * dsub}]" +
-          s" AS vec FROM v)"
-      }.mkString(",\n")
-      val kmeansChains = (0 until m).map { j =>
-        KmeansCtesOver(s"vs$j", 8, 2, s"s$j")
-      }.mkString(",\n")
-      val cents = (0 until m).map { j =>
-        s"SELECT $j AS j, c, vec FROM c2s$j"
-      }.mkString(" UNION ALL ")
-      val enc = (0 until m).map { j =>
-        s"SELECT vec_id, $j AS j, c FROM afs$j"
-      }.mkString(" UNION ALL ")
-      s"""WITH v AS (
-         |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS vec
-         |  FROM embeddings),
-         |$subspaces,
-         |$kmeansChains,
-         |cents AS ($cents),
-         |enc AS ($enc),
-         |q AS (SELECT vec_id, vec FROM v WHERE vec_id % 25 = 0),
-         |qs AS (
-         |  SELECT q.vec_id, cc.j, cc.c,
-         |    CAST(floor(list_sum(list_transform(
-         |      generate_series(1, $dsub),
-         |      i -> (q.vec[cc.j * $dsub + i] - cc.vec[i])
-         |         * (q.vec[cc.j * $dsub + i] - cc.vec[i])))
-         |      * 1e6 + 0.5) AS BIGINT) AS d
-         |  FROM q CROSS JOIN cents cc),
-         |dist AS (
-         |  SELECT qs.vec_id AS query_id, e.vec_id AS corpus_id,
-         |    CAST(SUM(qs.d) AS BIGINT) AS adc_dist
-         |  FROM enc e JOIN qs ON qs.j = e.j AND qs.c = e.c
-         |  GROUP BY 1, 2),
-         |p AS (
-         |  SELECT query_id, corpus_id, adc_dist,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY adc_dist, corpus_id) AS INT) AS rank
-         |  FROM dist WHERE query_id <> corpus_id)
-         |SELECT query_id, corpus_id, rank, adc_dist
-         |FROM p WHERE rank <= 3""".stripMargin
-    },
-
-    // HLL rollup: registers are set-semantics, so the per-day rollup is
-    // mathematically the direct sketch — the oracle computes the direct
-    // chain once and emits it for BOTH estimate columns; Spark's side
-    // computing them via different plans (daily merge vs one pass) and
-    // still hashing equal is the proof
-    "q_hll_rollup" ->
-      s"""WITH e AS ($EventsNs),
-         |hkeys AS (SELECT 1 AS g, user_id AS k FROM e),
-         |${HllChainSql(seed = 0L)}
-         |SELECT ${R6("est")} AS merged_micro, ${R6("est")} AS direct_micro,
-         |  (SELECT COUNT(DISTINCT ts_ns // 86400000000000) FROM e)
-         |    AS n_parts,
-         |  (SELECT COUNT(DISTINCT user_id) FROM e) AS exact_distinct
-         |FROM hll""".stripMargin,
-
-    // HLL overlap: three estimator instances (A, B, register-union) and
-    // the same inclusion-exclusion doubles.
-    "q_hll_overlap" ->
-      s"""WITH hkeysa AS (
-         |  SELECT 1 AS g, l_orderkey AS k FROM lineitem
-         |  WHERE l_returnflag = 'A'),
-         |hkeysb AS (
-         |  SELECT 1 AS g, l_orderkey AS k FROM lineitem
-         |  WHERE l_returnflag = 'R'),
-         |${HllRegsSql(0L, 10, "a")},
-         |${HllRegsSql(0L, 10, "b")},
-         |hru AS (
-         |  SELECT g, register, MAX(rho) AS rho FROM (
-         |    SELECT * FROM hra UNION ALL SELECT * FROM hrb)
-         |  GROUP BY 1, 2),
-         |${HllEstSql(10, "a")},
-         |${HllEstSql(10, "b")},
-         |${HllEstSql(10, "u")},
-         |x AS (
-         |  SELECT hlla.est AS ea, hllb.est AS eb, hllu.est AS eu,
-         |    GREATEST(hlla.est + hllb.est - hllu.est, 0.0e0) AS ei
-         |  FROM hlla, hllb, hllu)
-         |SELECT ${R6("ea")} AS est_a_micro, ${R6("eb")} AS est_b_micro,
-         |  ${R6("eu")} AS est_union_micro,
-         |  ${R6("ei")} AS est_intersect_micro,
-         |  ${R6("CASE WHEN eu > 0 THEN ei / eu ELSE 0.0e0 END")}
-         |    AS jaccard_micro
-         |FROM x""".stripMargin,
-
-    // Fixed-range histogram: pinned grid (rail clamps), n derived from
-    // the cells, same interpolation.
-    "q_hist_quantile_fixed" ->
-      s"""WITH src AS (
-         |  SELECT lang AS g, CAST(n_chars AS DOUBLE) AS v
-         |  FROM documents
-         |  WHERE n_chars IS NOT NULL
-         |    AND NOT isnan(CAST(n_chars AS DOUBLE))),
-         |h AS (
-         |  SELECT g, 0.0e0 AS lo, 4000.0e0 AS hi,
-         |    LEAST(GREATEST(CAST(floor((v - 0.0e0) / 100.0e0) AS BIGINT),
-         |      0), 39) AS bucket, COUNT(*) AS cnt
-         |  FROM src GROUP BY 1, 2, 3, 4),
-         |sized AS (
-         |  SELECT *, SUM(cnt) OVER (PARTITION BY g) AS n FROM h),
-         |c AS (
-         |  SELECT *, SUM(cnt) OVER (PARTITION BY g ORDER BY bucket)
-         |    AS cum FROM sized),
-         |qv AS (SELECT * FROM (VALUES (0.5e0), (0.9e0)) t(q)),
-         |j AS (
-         |  SELECT c.*, q,
-         |    GREATEST(1, CAST(ceil(q * n) AS BIGINT)) AS r,
-         |    cum - cnt AS cumBefore
-         |  FROM c CROSS JOIN qv
-         |  WHERE cum >= GREATEST(1, CAST(ceil(q * n) AS BIGINT))),
-         |p AS (
-         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY g, q ORDER BY bucket)
-         |    AS rn FROM j)
-         |SELECT g AS lang, CAST(q * 100 AS INT) AS q_pct,
-         |  ${R6("CASE WHEN hi = lo THEN lo ELSE lo " +
-             "+ ((hi - lo) / 40.0e0) * CAST(bucket AS DOUBLE) " +
-             "+ ((hi - lo) / 40.0e0) * (CAST(r - cumBefore AS DOUBLE) " +
-             "/ CAST(cnt AS DOUBLE)) END")} AS est_micro
-         |FROM p WHERE rn = 1""".stripMargin,
-
-    // Histogram quantiles: identical bucket grid (same IEEE steps in
-    // the same order), integer cumulative walk, one interpolation.
-    "q_hist_quantile" ->
-      s"""WITH src AS (
-         |  SELECT l_returnflag AS g, CAST(l_extendedprice AS DOUBLE) AS v
-         |  FROM lineitem
-         |  WHERE l_extendedprice IS NOT NULL
-         |    AND NOT isnan(CAST(l_extendedprice AS DOUBLE))),
-         |rng AS (
-         |  SELECT g, MIN(v) AS lo, MAX(v) AS hi, COUNT(*) AS n
-         |  FROM src GROUP BY 1),
-         |b AS (
-         |  SELECT g, lo, hi, n,
-         |    CASE WHEN hi = lo THEN 0
-         |      ELSE LEAST(CAST(floor((v - lo) / ((hi - lo) / 64.0e0))
-         |        AS BIGINT), 63) END AS bucket
-         |  FROM src JOIN rng USING (g)),
-         |h AS (
-         |  SELECT g, lo, hi, n, bucket, COUNT(*) AS cnt
-         |  FROM b GROUP BY 1, 2, 3, 4, 5),
-         |c AS (
-         |  SELECT *, SUM(cnt) OVER (PARTITION BY g ORDER BY bucket)
-         |    AS cum FROM h),
-         |qv AS (SELECT * FROM (VALUES (0.5e0), (0.95e0), (0.99e0)) t(q)),
-         |j AS (
-         |  SELECT c.*, q,
-         |    GREATEST(1, CAST(ceil(q * n) AS BIGINT)) AS r,
-         |    cum - cnt AS cumBefore
-         |  FROM c CROSS JOIN qv
-         |  WHERE cum >= GREATEST(1, CAST(ceil(q * n) AS BIGINT))),
-         |p AS (
-         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY g, q ORDER BY bucket)
-         |    AS rn FROM j)
-         |SELECT g AS l_returnflag, CAST(q * 100 AS INT) AS q_pct,
-         |  ${R6("CASE WHEN hi = lo THEN lo ELSE lo " +
-             "+ ((hi - lo) / 64.0e0) * CAST(bucket AS DOUBLE) " +
-             "+ ((hi - lo) / 64.0e0) * (CAST(r - cumBefore AS DOUBLE) " +
-             "/ CAST(cnt AS DOUBLE)) END")} AS est_micro
-         |FROM p WHERE rn = 1""".stripMargin,
-
-    // CM inner product: integer cell products, min over rows.
-    "q_cms_join_size" -> {
-      val bucket = s"(${Mix31Sql("user_id", "7 + row * 1000003")}) % 256"
-      s"""WITH d AS (SELECT * FROM range(0, 4) t(row)),
-         |ca AS (
-         |  SELECT row, $bucket AS bucket, COUNT(*) AS cnt
-         |  FROM events CROSS JOIN d WHERE event_type = 'click'
-         |  GROUP BY 1, 2),
-         |cb AS (
-         |  SELECT row, $bucket AS bucket, COUNT(*) AS cnt
-         |  FROM events CROSS JOIN d WHERE event_type = 'view'
-         |  GROUP BY 1, 2),
-         |ip AS (
-         |  SELECT ca.row, SUM(ca.cnt * cb.cnt) AS ip
-         |  FROM ca JOIN cb USING (row, bucket) GROUP BY 1),
-         |est AS (SELECT CAST(MIN(ip) AS BIGINT) AS join_size_est FROM ip),
-         |exact AS (
-         |  SELECT CAST(SUM(na * nb) AS BIGINT) AS exact_join_size FROM (
-         |    SELECT user_id, COUNT(*) AS na FROM events
-         |    WHERE event_type = 'click' GROUP BY 1) a
-         |  JOIN (
-         |    SELECT user_id, COUNT(*) AS nb FROM events
-         |    WHERE event_type = 'view' GROUP BY 1) b USING (user_id))
-         |SELECT est.join_size_est, exact.exact_join_size
-         |FROM est, exact""".stripMargin
-    },
-
-    // CMS: deterministic cells (mix31 per-row seeds), COUNT sums, min
-    // over depth rows — all integer arithmetic, bit-exact.
-    "q_cms_counts" -> {
-      val bucket = s"(${Mix31Sql("user_id", "5 + row * 1000003")}) % 256"
-      s"""WITH d AS (SELECT * FROM range(0, 4) t(row)),
-         |cells AS (
-         |  SELECT row, $bucket AS bucket, COUNT(*) AS cnt
-         |  FROM events CROSS JOIN d GROUP BY 1, 2),
-         |probe AS (
-         |  SELECT user_id, MIN(COALESCE(c.cnt, 0)) AS est
-         |  FROM (
-         |    SELECT user_id, row, $bucket AS bucket
-         |    FROM (SELECT DISTINCT user_id FROM events) CROSS JOIN d) k
-         |  LEFT JOIN cells c USING (row, bucket) GROUP BY 1),
-         |exact AS (
-         |  SELECT user_id, COUNT(*) AS exact_cnt FROM events GROUP BY 1)
-         |SELECT user_id, est, exact_cnt, est >= 80 AS is_heavy
-         |FROM probe JOIN exact USING (user_id)""".stripMargin
-    },
-
-    "q_c4_filters" ->
-      s"""SELECT doc_id,
-         |  length(regexp_replace(text, '[^.!?]', '', 'g')) >= 3
-         |    AS has_3_sentences,
-         |  NOT contains(lower(text), 'lorem ipsum') AS no_lorem,
-         |  NOT contains(text, '{') AS no_brace,
-         |  length(regexp_replace(text, '[^.!?]', '', 'g')) >= 3
-         |    AND NOT contains(lower(text), 'lorem ipsum')
-         |    AND NOT contains(text, '{') AS keep
-         |FROM documents""".stripMargin,
-
-    // flag decisions divide exact integer counts, so raw comparisons
-    // against the thresholds are engine-exact (no micro grid needed)
-    "q_gopher_quality" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, text,
-         |    string_split_regex(trim(text), '\\s+') AS toks,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS ltoks
-         |  FROM documents),
-         |m AS (
-         |  SELECT doc_id,
-         |    CAST(len(toks) AS DOUBLE) AS nw,
-         |    CAST(length(regexp_replace(text, '\\s+', '', 'g'))
-         |      AS DOUBLE) AS nchars,
-         |    CAST(length(regexp_replace(text, '[^#]', '', 'g'))
-         |      AS DOUBLE) AS nhash,
-         |    CAST((length(text) - length(regexp_replace(text,
-         |      '\\.\\.\\.', '', 'g'))) / 3 AS DOUBLE) AS nell,
-         |    CAST(len(list_filter(toks,
-         |      x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) AS nalpha,
-         |    len(list_filter(
-         |      ['the','a','an','and','or','of','to','in','is','are',
-         |       'was','it','that','this','for','on','with','as','at',
-         |       'by','be'],
-         |      w -> list_contains(ltoks, w))) AS nstops
-         |  FROM t)
-         |SELECT doc_id,
-         |  nw >= 10 AND nw <= 100000 AS word_count_ok,
-         |  nchars / nw >= 3.0 AND nchars / nw <= 10.0 AS mean_len_ok,
-         |  (nhash + nell) / nw <= 0.1 AS symbol_ok,
-         |  nalpha / nw >= 0.8 AS alpha_ok,
-         |  nstops >= 2 AS stops_ok,
-         |  (nw >= 10 AND nw <= 100000)
-         |    AND (nchars / nw >= 3.0 AND nchars / nw <= 10.0)
-         |    AND ((nhash + nell) / nw <= 0.1)
-         |    AND (nalpha / nw >= 0.8) AND (nstops >= 2) AS keep
-         |FROM m""".stripMargin,
-
-    "q_dsir" ->
-      s"""WITH $DsirCtes
-         |SELECT doc_id, n_tokens, ${R6("llr")} AS llr_micro
-         |FROM agg""".stripMargin,
-
-    // the resample face: micro-rounded sigmoid acceptance against the
-    // same portable bucket hash the Spark sampler uses
-    "q_dsir_resample" ->
-      s"""WITH $DsirCtes,
-         |p AS (
-         |  SELECT doc_id, n_tokens, llr,
-         |    floor((1.0 / (1.0 + exp(-((llr / n_tokens) / 0.25))))
-         |      * 1e6 + 0.5) / 1e6 AS w
-         |  FROM agg)
-         |SELECT doc_id, n_tokens, ${R6("llr")} AS llr_micro FROM p
-         |WHERE ${HashSql("doc_id", 11L)} <
-         |  CAST(floor(w * 1048576 + 0.5) AS BIGINT)""".stripMargin,
-
-    // benchmark decontamination: same 3-gram definition as
-    // q_dedup_jaccard's shingle CTEs; bench grams are DISTINCT and each
-    // doc's shingle set is a set, so the inner join's per-doc hit count
-    // IS the distinct-overlap count
-    "q_decontam" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS t
-         |  FROM documents),
-         |sh AS (
-         |  SELECT doc_id,
-         |    list_distinct(list_transform(generate_series(1, len(t) - 2),
-         |      i -> array_to_string(t[i:i+2], ' '))) AS shset
-         |  FROM toks),
-         |bench AS (
-         |  SELECT DISTINCT unnest(shset) AS gram FROM sh
-         |  WHERE doc_id % 53 = 0),
-         |corpus AS (
-         |  SELECT doc_id, len(shset) AS n_grams, unnest(shset) AS gram
-         |  FROM sh WHERE doc_id % 53 <> 0),
-         |ov AS (
-         |  SELECT c.doc_id, c.n_grams, COUNT(*) AS n_overlap
-         |  FROM corpus c JOIN bench b ON c.gram = b.gram
-         |  GROUP BY 1, 2)
-         |SELECT doc_id, n_overlap,
-         |  ${R6("n_overlap::DOUBLE / n_grams")} AS overlap_frac_micro
-         |FROM ov""".stripMargin,
-
-    // funnel audit with LSH off: the near_dup/packed stages ARE the
-    // sampled count (packing preserves rows)
-    "q_funnel" ->
-      s"""WITH w AS (
-         |  SELECT doc_id, text,
-         |    ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id)
-         |      AS rk
-         |  FROM documents),
-         |d AS (SELECT doc_id, text FROM w WHERE rk = 1),
-         |t AS (
-         |  SELECT doc_id, text,
-         |    string_split_regex(trim(text), '\\s+') AS toks,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS ltoks
-         |  FROM d),
-         |m AS (
-         |  SELECT doc_id,
-         |    CAST(len(toks) AS DOUBLE) AS nt,
-         |    CAST(len(list_filter(ltoks, x -> list_contains(
-         |      ['the','a','an','and','or','of','to','in','is','are','was',
-         |       'it','that','this','for','on','with','as','at','by','be'],
-         |      x))) AS DOUBLE) / len(toks) AS stop_ratio,
-         |    CAST(length(regexp_replace(text,
-         |      '[^.,;:!?''"()\\[\\]-]', '', 'g')) AS DOUBLE)
-         |      / length(text) AS punct_ratio,
-         |    CAST(length(regexp_replace(text, '[^A-Z]', '', 'g'))
-         |      AS DOUBLE) / length(text) AS upper_ratio
-         |  FROM t),
-         |q AS (
-         |  SELECT doc_id,
-         |    GREATEST(0.0, LEAST(1.0,
-         |      0.5 * (LEAST(nt / 50.0, 1.0) *
-         |        CASE WHEN nt > 10000 THEN 0.5 ELSE 1.0 END)
-         |      + 0.5 * LEAST(stop_ratio * 4.0, 1.0)
-         |      - LEAST(punct_ratio * 2.0, 0.5)
-         |      - LEAST(upper_ratio * 2.0, 0.5))) AS quality
-         |  FROM m),
-         |f AS (SELECT doc_id FROM q WHERE quality >= 0.2),
-         |s AS (SELECT doc_id FROM f
-         |  WHERE ${HashSql("doc_id", 5L)} < ${Sampling.threshold(0.9)})
-         |SELECT 'input' AS stage,
-         |  (SELECT COUNT(*) FROM documents) AS survivors
-         |UNION ALL SELECT 'exact_dedup', (SELECT COUNT(*) FROM d)
-         |UNION ALL SELECT 'quality_gate', (SELECT COUNT(*) FROM f)
-         |UNION ALL SELECT 'sampled', (SELECT COUNT(*) FROM s)
-         |UNION ALL SELECT 'near_dup', (SELECT COUNT(*) FROM s)
-         |UNION ALL SELECT 'packed', (SELECT COUNT(*) FROM s)""".stripMargin,
-
-    // source balance: per-source token sums, pairwise |xi - xj| on the
-    // tiny aggregate, Gini = sad / (2 k total)
-    "q_source_balance" ->
-      s"""WITH per AS (
-         |  SELECT source,
-         |    CAST(SUM(len(string_split_regex(trim(text), '\\s+')))
-         |      AS BIGINT) AS t
-         |  FROM documents GROUP BY 1),
-         |tot AS (
-         |  SELECT COUNT(*) AS k, CAST(SUM(t) AS BIGINT) AS tt,
-         |    CAST(MAX(t) AS BIGINT) AS mx
-         |  FROM per),
-         |pr AS (
-         |  SELECT CAST(SUM(ABS(a.t - b.t)) AS BIGINT) AS sad
-         |  FROM per a, per b)
-         |SELECT k AS n_sources, tt AS total_tokens,
-         |  ${R6("mx::DOUBLE / tt")} AS max_share_micro,
-         |  ${R6("sad::DOUBLE / (2.0 * k * tt)")} AS gini_micro
-         |FROM tot, pr""".stripMargin,
-
-    // token-yield curve: decile edges via quantile_cont (the
-    // winsorize-proven exactPercentiles twin), row-local tier counts,
-    // bounded cumulative window — bucket 1 = top quality tier
-    "q_token_yield" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, text,
-         |    string_split_regex(trim(text), '\\s+') AS toks,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS ltoks
-         |  FROM documents),
-         |m AS (
-         |  SELECT doc_id, len(toks) AS ntok,
-         |    CAST(len(toks) AS DOUBLE) AS nt,
-         |    CAST(len(list_filter(ltoks, x -> list_contains(
-         |      ['the','a','an','and','or','of','to','in','is','are','was',
-         |       'it','that','this','for','on','with','as','at','by','be'],
-         |      x))) AS DOUBLE) / len(toks) AS stop_ratio,
-         |    CAST(length(regexp_replace(text,
-         |      '[^.,;:!?''"()\\[\\]-]', '', 'g')) AS DOUBLE)
-         |      / length(text) AS punct_ratio,
-         |    CAST(length(regexp_replace(text, '[^A-Z]', '', 'g'))
-         |      AS DOUBLE) / length(text) AS upper_ratio
-         |  FROM t),
-         |q AS (
-         |  SELECT doc_id, ntok,
-         |    GREATEST(0.0, LEAST(1.0,
-         |      0.5 * (LEAST(nt / 50.0, 1.0) *
-         |        CASE WHEN nt > 10000 THEN 0.5 ELSE 1.0 END)
-         |      + 0.5 * LEAST(stop_ratio * 4.0, 1.0)
-         |      - LEAST(punct_ratio * 2.0, 0.5)
-         |      - LEAST(upper_ratio * 2.0, 0.5))) AS quality
-         |  FROM m),
-         |th AS (SELECT quantile_cont(quality,
-         |    [${(1 until 10).map(i => s"0.$i").mkString(", ")}]) AS t
-         |  FROM q),
-         |b AS (
-         |  SELECT doc_id, ntok,
-         |    10 - len(list_filter(th.t, x -> quality >= x)) AS bucket
-         |  FROM q, th),
-         |g AS (
-         |  SELECT bucket, COUNT(*) AS n_docs,
-         |    CAST(SUM(ntok) AS BIGINT) AS sum_tokens
-         |  FROM b GROUP BY 1),
-         |c AS (
-         |  SELECT bucket, n_docs, sum_tokens,
-         |    CAST(SUM(sum_tokens) OVER (ORDER BY bucket) AS BIGINT)
-         |      AS cum_tokens,
-         |    CAST(SUM(sum_tokens) OVER () AS BIGINT) AS total
-         |  FROM g)
-         |SELECT bucket, n_docs, sum_tokens, cum_tokens,
-         |  ${R6("cum_tokens::DOUBLE / total")} AS cum_frac_micro
-         |FROM c""".stripMargin,
-
-    // decontamination drop face: survivors after removing docs sharing
-    // >= 2 distinct 3-grams with the eval slice
-    "q_decontam_drop" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS t
-         |  FROM documents),
-         |sh AS (
-         |  SELECT doc_id,
-         |    list_distinct(list_transform(generate_series(1, len(t) - 2),
-         |      i -> array_to_string(t[i:i+2], ' '))) AS shset
-         |  FROM toks),
-         |bench AS (
-         |  SELECT DISTINCT unnest(shset) AS gram FROM sh
-         |  WHERE doc_id % 53 = 0),
-         |corpus AS (
-         |  SELECT doc_id, unnest(shset) AS gram
-         |  FROM sh WHERE doc_id % 53 <> 0),
-         |flagged AS (
-         |  SELECT c.doc_id FROM corpus c JOIN bench b ON c.gram = b.gram
-         |  GROUP BY 1 HAVING COUNT(*) >= 2)
-         |SELECT COUNT(*) AS n_docs, CAST(SUM(doc_id) AS BIGINT) AS id_sum
-         |FROM documents
-         |WHERE doc_id % 53 <> 0
-         |  AND doc_id NOT IN (SELECT doc_id FROM flagged)""".stripMargin,
-
-    // smooth TF-IDF: idf = ln((1+N)/(1+df)) + 1, per-term df as a window
-    // count over the (doc, term) postings — mirrors Retrieval.tfIdf
-    "q_tfidf" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS t
-         |  FROM documents),
-         |hits AS (SELECT doc_id, unnest(t) AS term FROM toks),
-         |tf AS (
-         |  SELECT doc_id, term, COUNT(*) AS tf FROM hits
-         |  WHERE term IN ('table', 'spark', 'vector') GROUP BY 1, 2),
-         |wdf AS (
-         |  SELECT doc_id, term, tf,
-         |    COUNT(*) OVER (PARTITION BY term) AS df
-         |  FROM tf),
-         |n AS (SELECT COUNT(*) AS n FROM documents)
-         |SELECT doc_id, term, tf, df,
-         |  ${R6("tf * (ln((1.0 + n) / (1.0 + df)) + 1.0)")} AS tfidf_micro
-         |FROM wdf, n""".stripMargin,
-
-    // PMI collocations: the ratio expression mirrors
-    // Retrieval.pmiCollocations's operation order exactly — each
-    // division/multiplication is correctly-rounded IEEE, so the doubles
-    // (and the top-k cut plus rank-50 tie-break they decide) are
-    // bit-identical across engines. Bigram total = tokens - non-null
-    // docs (each doc contributes len-1 adjacent pairs)
-    "q_pmi" ->
-      s"""WITH toks AS (
-         |  SELECT string_split_regex(trim(lower(text)), '\\s+') AS t
-         |  FROM documents WHERE text IS NOT NULL),
-         |uni AS (SELECT unnest(t) AS w FROM toks),
-         |ucnt AS (SELECT w, COUNT(*) AS c FROM uni GROUP BY 1),
-         |tot AS (SELECT (SELECT SUM(c) FROM ucnt) AS n,
-         |               (SELECT COUNT(text) FROM documents) AS nd),
-         |big AS (
-         |  SELECT unnest(list_transform(generate_series(1, len(t) - 1),
-         |    i -> t[i] || ' ' || t[i+1])) AS bg
-         |  FROM toks),
-         |bcnt AS (
-         |  SELECT bg, COUNT(*) AS pair_count FROM big
-         |  GROUP BY 1 HAVING COUNT(*) >= 3),
-         |scored AS (
-         |  SELECT split_part(bg, ' ', 1) AS w1,
-         |    split_part(bg, ' ', 2) AS w2, pair_count
-         |  FROM bcnt)
-         |SELECT w1, w2, pair_count, a.c AS c1, b.c AS c2,
-         |  ${R6("((CAST(pair_count AS DOUBLE) * n) / a.c) * (CAST(n AS DOUBLE) / b.c) / CAST(n - nd AS DOUBLE)")} AS pmi_ratio_micro
-         |FROM scored
-         |JOIN ucnt a ON scored.w1 = a.w
-         |JOIN ucnt b ON scored.w2 = b.w, tot
-         |ORDER BY ((CAST(pair_count AS DOUBLE) * n) / a.c) * (CAST(n AS DOUBLE) / b.c) / CAST(n - nd AS DOUBLE) DESC, w1, w2
-         |LIMIT 50""".stripMargin,
-
-    // fuzzy vocab: the naive quadratic levenshtein join over the
-    // vocabulary — blocking recall must be 1 against it
-    "q_fuzzy_vocab" ->
-      s"""WITH toks AS (
-         |  SELECT string_split_regex(trim(lower(text)), '\\s+') AS t
-         |  FROM documents),
-         |vocab AS (
-         |  SELECT w, COUNT(*)::BIGINT AS cnt
-         |  FROM (SELECT unnest(t) AS w FROM toks)
-         |  WHERE length(w) > 0 GROUP BY 1)
-         |SELECT a.w AS term_a, b.w AS term_b,
-         |  CAST(levenshtein(a.w, b.w) AS BIGINT) AS dist,
-         |  a.cnt AS cnt_a, b.cnt AS cnt_b
-         |FROM vocab a, vocab b
-         |WHERE a.w < b.w AND levenshtein(a.w, b.w) <= 2""".stripMargin,
-
-    // BPE trainer: the whole six-round merge learning replayed in SQL
-    "q_bpe_train" -> BpeTrainSql(6),
-
-    // BPE segmentation: learned merges folded into every document
-    "q_bpe_segment" -> BpeSegmentSql(6),
-
-    // BM25: identical operation order to Retrieval.bm25TopK (left-assoc
-    // arithmetic, (1.2 + 1.0) computed not pre-folded, DECIMAL(18,8)
-    // term-score sum) so the scores — and the top-k cut they decide —
-    // are bit-identical
-    "q_bm25" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS t
-         |  FROM documents),
-         |stats AS (SELECT COUNT(*) AS n, AVG(len(t)) AS avgdl FROM toks),
-         |hits AS (SELECT doc_id, len(t) AS dl, unnest(t) AS term
-         |  FROM toks),
-         |tf AS (
-         |  SELECT doc_id, dl, term, COUNT(*) AS tf FROM hits
-         |  WHERE term IN ('table', 'scan', 'join', 'vector')
-         |  GROUP BY 1, 2, 3),
-         |wdf AS (
-         |  SELECT doc_id, dl, term, tf,
-         |    COUNT(*) OVER (PARTITION BY term) AS df
-         |  FROM tf),
-         |sc AS (
-         |  SELECT doc_id,
-         |    (ln((n - df + 0.5) / (df + 0.5) + 1.0) * (tf * (1.2 + 1.0)))
-         |      / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)) AS s
-         |  FROM wdf, stats),
-         |agg AS (
-         |  SELECT doc_id, COUNT(*) AS n_terms,
-         |    CAST(SUM(CAST(s AS DECIMAL(18,8))) AS DOUBLE) AS score
-         |  FROM sc GROUP BY 1)
-         |SELECT doc_id, n_terms, ${R6("score")} AS score_micro
-         |FROM agg ORDER BY score DESC, doc_id LIMIT 15""".stripMargin,
-
-    // NDCG@10: per-query bm25 pools (the q_bm25 chain, parametrized)
-    // -> binary relevance -> rank windows -> DECIMAL-summed gains
-    "q_ndcg" -> {
-      def decGain(pos: String): String =
-        s"CASE WHEN $pos <= 10 THEN CAST(rel / (ln($pos + 1.0) / ln(2.0)) " +
-          "AS DECIMAL(18,8)) ELSE CAST(0 AS DECIMAL(18,8)) END"
-      s"""$NdcgPoolSql,
-         |ranked AS (
-         |  SELECT qid, rel,
-         |    ROW_NUMBER() OVER (PARTITION BY qid
-         |      ORDER BY score DESC, doc_id) AS pr,
-         |    ROW_NUMBER() OVER (PARTITION BY qid
-         |      ORDER BY rel DESC, doc_id) AS pi
-         |  FROM pool),
-         |agg AS (
-         |  SELECT qid,
-         |    CAST(SUM(${decGain("pr")}) AS DOUBLE) AS dcg,
-         |    CAST(SUM(${decGain("pi")}) AS DOUBLE) AS idcg,
-         |    COUNT(*) AS n_candidates
-         |  FROM ranked GROUP BY 1)
-         |SELECT qid, n_candidates, ${R6("dcg")} AS dcg_micro,
-         |  ${R6("CASE WHEN idcg > 0.0 THEN dcg / idcg END")} AS ndcg_micro
-         |FROM agg""".stripMargin
-    },
-
-    // MRR: first relevant position under the same ranking
-    "q_mrr" ->
-      s"""$NdcgPoolSql,
-         |ranked AS (
-         |  SELECT qid, rel,
-         |    ROW_NUMBER() OVER (PARTITION BY qid
-         |      ORDER BY score DESC, doc_id) AS pr
-         |  FROM pool),
-         |agg AS (
-         |  SELECT qid,
-         |    MIN(CASE WHEN rel > 0 AND pr <= 10 THEN pr END)
-         |      AS first_rel_rank
-         |  FROM ranked GROUP BY 1)
-         |SELECT qid, first_rel_rank,
-         |  ${R6("COALESCE(1.0 / first_rel_rank, 0.0)")} AS rr_micro
-         |FROM agg""".stripMargin,
-
-    // unit normalization: parallel unnests zip, dim is 0-based to match
-    // posexplode
-    "q_embed_quantize" ->
-      s"""WITH v AS (
-         |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS vec
-         |  FROM embeddings),
-         |m AS (
-         |  SELECT vec_id, vec, list_min(vec) AS mn,
-         |    (list_max(vec) - list_min(vec)) / 255.0 AS step
-         |  FROM v)
-         |SELECT vec_id, ${R6("mn")} AS lo_micro,
-         |  ${R6("step")} AS step_micro,
-         |  md5(array_to_string(list_transform(vec, x ->
-         |    CAST(CASE WHEN step = 0 THEN -128
-         |      ELSE CAST(floor((x - mn) / step + 0.5) AS BIGINT) - 128
-         |      END AS VARCHAR)), ',')) AS q_md5
-         |FROM m""".stripMargin,
-
-    "q_embed_normalize" ->
-      s"""WITH v AS (
-         |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS vec
-         |  FROM embeddings),
-         |n AS (
-         |  SELECT vec_id, vec,
-         |    sqrt(list_sum(list_transform(vec, x -> x * x))) AS nrm
-         |  FROM v)
-         |SELECT vec_id,
-         |  unnest(generate_series(0, len(vec) - 1)) AS dim,
-         |  unnest(list_transform(vec, x -> ${R6(
-             "CASE WHEN nrm = 0 THEN 0.0 ELSE x / nrm END")})) AS v_micro
-         |FROM n""".stripMargin,
-
-    // per-label centroids: decimal-summed element-wise means
-    "q_embed_meanpool" ->
-      s"""WITH v AS (
-         |  SELECT label, list_transform(embedding, x -> x::DOUBLE) AS vec
-         |  FROM embeddings),
-         |e AS (
-         |  SELECT label,
-         |    unnest(generate_series(0, len(vec) - 1)) AS dim,
-         |    unnest(vec) AS val
-         |  FROM v)
-         |SELECT label, dim,
-         |  ${R6("CAST(SUM(CAST(val AS DECIMAL(18,9))) AS DOUBLE) / COUNT(*)")}
-         |    AS mean_micro
-         |FROM e GROUP BY 1, 2""".stripMargin,
-
-    // PCA by unrolled power iteration: decimal covariance, canonical
-    // signs, deflation — the whole trainer replayed under the oracle
-    "q_pca" ->
-      s"""WITH ${PcaCtes(4, 6)}
-         |SELECT xc.vec_id, CAST(comps.comp AS BIGINT) AS comp,
-         |  ${R6("CAST(SUM(CAST(xc.v * comps.v AS DECIMAL(30,12))) " +
-                "AS DOUBLE)")} AS value_micro
-         |FROM xc JOIN comps ON xc.dim = comps.i
-         |GROUP BY 1, 2""".stripMargin,
-
-    // One group-wide window in SQL vs the Spark side's two-level scan —
-    // equality proves the bucketed construction IS the group rank.
-    "q_group_pct" ->
-      s"""SELECT doc_id, source,
-         |  ${R6("(ROW_NUMBER() OVER (PARTITION BY source " +
-        "ORDER BY CAST(n_chars AS DOUBLE), doc_id) - 1)::DOUBLE " +
-        "/ COUNT(*) OVER (PARTITION BY source)")} AS pct_micro
-         |FROM documents""".stripMargin,
-
-    // One global ROW_NUMBER over the same (bucket DESC, h, id) order the
-    // Spark side computes with the two-level scan — equality proves the
-    // sharded construction IS the global rank.
-    "q_balanced_shard" ->
-      s"""WITH b AS (
-         |  SELECT doc_id,
-         |    length(CAST(n_chars AS VARCHAR)) AS bucket,
-         |    ${HashSql("doc_id", 5L)} AS h
-         |  FROM documents),
-         |r AS (
-         |  SELECT doc_id,
-         |    ROW_NUMBER() OVER (ORDER BY bucket DESC, h, doc_id) - 1 AS rk
-         |  FROM b)
-         |SELECT doc_id, rk % 8 AS shard FROM r""".stripMargin,
-
-    "q_kmeans" ->
-      s"""WITH ${KmeansCtes(4, 2)}
-         |SELECT vec_id, c AS cluster FROM af""".stripMargin,
-
-    "q_semdedup" ->
-      s"""WITH RECURSIVE ${KmeansCtes(4, 2)},
-         |pr AS (
-         |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-         |  FROM af a JOIN af b ON a.c = b.c AND a.vec_id < b.vec_id
-         |  WHERE CAST(floor(
-         |    (list_sum(list_transform(generate_series(1, len(a.vec)),
-         |       i -> a.vec[i] * b.vec[i]))
-         |     / (sqrt(list_sum(list_transform(a.vec, x -> x * x)))
-         |        * sqrt(list_sum(list_transform(b.vec, x -> x * x)))))
-         |    * 1e6 + 0.5) AS BIGINT) >= 400000),
-         |edges AS (SELECT id_a AS u, id_b AS v FROM pr
-         |          UNION SELECT id_b, id_a FROM pr),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM edges
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-         |labels AS (
-         |  SELECT u AS vec_id, LEAST(u, MIN(v)) AS comp
-         |  FROM reach GROUP BY u),
-         |lab AS (
-         |  SELECT e.vec_id, e.label, COALESCE(l.comp, e.vec_id) AS comp
-         |  FROM embeddings e LEFT JOIN labels l USING (vec_id)),
-         |rk AS (
-         |  SELECT vec_id, label, ROW_NUMBER() OVER (
-         |    PARTITION BY comp ORDER BY vec_id) AS rk
-         |  FROM lab)
-         |SELECT vec_id, label FROM rk WHERE rk = 1""".stripMargin,
-
-    // content-defined chunking: cut after tokens whose md5 starts with
-    // '0'; a token's chunk = boundaries strictly before it
-    "q_cdc_chunks" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id,
-         |    unnest(generate_series(0, len(t) - 1)) AS pos,
-         |    unnest(t) AS tok
-         |  FROM (SELECT doc_id,
-         |      string_split_regex(trim(text), '\\s+') AS t
-         |    FROM documents)),
-         |b AS (
-         |  SELECT doc_id, pos, tok,
-         |    CASE WHEN substr(md5(tok), 1, 1) = '0' THEN 1 ELSE 0 END
-         |      AS is_b
-         |  FROM toks),
-         |c AS (
-         |  SELECT doc_id, pos, tok,
-         |    COALESCE(SUM(is_b) OVER (PARTITION BY doc_id ORDER BY pos
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS chunk_idx
-         |  FROM b)
-         |SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
-         |  COUNT(*) AS n_tokens,
-         |  md5(string_agg(tok, ' ' ORDER BY pos)) AS chunk_md5
-         |FROM c GROUP BY 1, 2""".stripMargin,
-
-    // dataset card: dup flag = not the md5 group's winner; quality CTEs
-    // identical to q_quality_score's with group columns carried through
-    "q_corpus_report" ->
-      s"""WITH w AS (
-         |  SELECT source, lang, doc_id, text,
-         |    ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id)
-         |      AS rk
-         |  FROM documents),
-         |t AS (
-         |  SELECT source, lang, rk, text,
-         |    string_split_regex(trim(text), '\\s+') AS toks,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS ltoks
-         |  FROM w),
-         |m AS (
-         |  SELECT source, lang, rk, text, toks,
-         |    CAST(len(toks) AS DOUBLE) AS nt,
-         |    CAST(len(list_filter(ltoks, x -> list_contains(
-         |      ['the','a','an','and','or','of','to','in','is','are','was',
-         |       'it','that','this','for','on','with','as','at','by','be'],
-         |      x))) AS DOUBLE) / len(toks) AS stop_ratio,
-         |    CAST(length(regexp_replace(text,
-         |      '[^.,;:!?''"()\\[\\]-]', '', 'g')) AS DOUBLE)
-         |      / length(text) AS punct_ratio,
-         |    CAST(length(regexp_replace(text, '[^A-Z]', '', 'g'))
-         |      AS DOUBLE) / length(text) AS upper_ratio
-         |  FROM t),
-         |q AS (
-         |  SELECT source, lang, rk, text, toks,
-         |    GREATEST(0.0, LEAST(1.0,
-         |      0.5 * (LEAST(nt / 50.0, 1.0) *
-         |        CASE WHEN nt > 10000 THEN 0.5 ELSE 1.0 END)
-         |      + 0.5 * LEAST(stop_ratio * 4.0, 1.0)
-         |      - LEAST(punct_ratio * 2.0, 0.5)
-         |      - LEAST(upper_ratio * 2.0, 0.5))) AS quality
-         |  FROM m)
-         |SELECT source, lang, COUNT(*) AS n_docs,
-         |  CAST(SUM(len(toks)) AS BIGINT) AS tokens,
-         |  CAST(SUM(length(text)) AS BIGINT) AS chars,
-         |  CAST(SUM(CASE WHEN rk > 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_exact_dups,
-         |  ${R6("CAST(SUM(CAST(quality AS DECIMAL(18,9))) AS DOUBLE) / COUNT(*)")}
-         |    AS mean_quality_micro
-         |FROM q GROUP BY 1, 2""".stripMargin,
-
-    // c-TF-IDF distinctive terms per language
-    "q_top_terms" ->
-      s"""WITH e AS (
-         |  SELECT lang,
-         |    unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
-         |  FROM documents),
-         |tf AS (SELECT lang, term, COUNT(*) AS tf FROM e GROUP BY 1, 2),
-         |wdf AS (
-         |  SELECT lang, term, tf,
-         |    COUNT(*) OVER (PARTITION BY term) AS df_g
-         |  FROM tf),
-         |g AS (SELECT COUNT(DISTINCT lang) AS g FROM documents),
-         |sc AS (
-         |  SELECT lang, term, tf, df_g,
-         |    tf * (ln((1.0 + g) / (1.0 + df_g)) + 1.0) AS score
-         |  FROM wdf, g),
-         |r AS (
-         |  SELECT lang, term, tf, df_g, score,
-         |    ROW_NUMBER() OVER (PARTITION BY lang
-         |      ORDER BY score DESC, term) AS rank
-         |  FROM sc)
-         |SELECT lang, term, tf, df_g, ${R6("score")} AS score_micro,
-         |  CAST(rank AS BIGINT) AS rank
-         |FROM r WHERE rank <= 5""".stripMargin,
-
-    // row-local tag face: per-doc |shingles ∩ bench shingles|, zero-
-    // overlap docs included
-    "q_decontam_tag" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS t
-         |  FROM documents),
-         |sh AS (
-         |  SELECT doc_id,
-         |    list_distinct(list_transform(generate_series(1, len(t) - 2),
-         |      i -> array_to_string(t[i:i+2], ' '))) AS shset
-         |  FROM toks),
-         |bl AS (
-         |  SELECT list(DISTINCT gram) AS bg FROM (
-         |    SELECT unnest(shset) AS gram FROM sh WHERE doc_id % 53 = 0))
-         |SELECT doc_id, len(list_intersect(shset, bg)) AS n_overlap
-         |FROM sh, bl WHERE doc_id % 53 <> 0""".stripMargin,
-
-    // the salted two-stage aggregation equals this plain GROUP BY
-    "q_salted_agg" ->
-      s"""SELECT lang, COUNT(*) AS n,
-         |  CAST(SUM(n_chars) AS BIGINT) AS sum_n_chars,
-         |  MIN(n_chars) AS min_n_chars, MAX(n_chars) AS max_n_chars
-         |FROM documents GROUP BY 1""".stripMargin,
-
-    // the salted join vs the PLAIN join — equality proves the salt is
-    // pure physical spreading, zero semantic residue
-    "q_salted_join" ->
-      s"""WITH d AS (SELECT lang, AVG(n_chars) AS a
-         |  FROM documents GROUP BY 1)
-         |SELECT doc_id, documents.lang, ${R6("a")} AS avg_chars_micro
-         |FROM documents JOIN d USING (lang)""".stripMargin,
-
-    // hybrid retrieval: the q_bm25 CTE chain (k=20, ranked) + the
-    // q_ann_cosine chain (query 0, k=20) fused by 1/(60+rank) with
-    // DECIMAL(18,12) contribution sums
-    "q_hybrid_rrf" ->
-      s"""WITH toksb AS (
-         |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS t
-         |  FROM documents),
-         |stats AS (SELECT COUNT(*) AS n, AVG(len(t)) AS avgdl FROM toksb),
-         |hits AS (SELECT doc_id, len(t) AS dl, unnest(t) AS term
-         |  FROM toksb),
-         |tfb AS (
-         |  SELECT doc_id, dl, term, COUNT(*) AS tf FROM hits
-         |  WHERE term IN ('table', 'scan', 'join', 'vector')
-         |  GROUP BY 1, 2, 3),
-         |wdfb AS (
-         |  SELECT doc_id, dl, term, tf,
-         |    COUNT(*) OVER (PARTITION BY term) AS df
-         |  FROM tfb),
-         |scb AS (
-         |  SELECT doc_id,
-         |    (ln((n - df + 0.5) / (df + 0.5) + 1.0) * (tf * (1.2 + 1.0)))
-         |      / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)) AS s
-         |  FROM wdfb, stats),
-         |aggb AS (
-         |  SELECT doc_id,
-         |    CAST(SUM(CAST(s AS DECIMAL(18,8))) AS DOUBLE) AS score
-         |  FROM scb GROUP BY 1),
-         |lex AS (
-         |  SELECT doc_id,
-         |    ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS rank
-         |  FROM aggb ORDER BY score DESC, doc_id LIMIT 20),
-         |v AS (
-         |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS vec
-         |  FROM embeddings),
-         |qv AS (SELECT vec AS q FROM v WHERE vec_id = 0),
-         |cosr AS (
-         |  SELECT c.vec_id AS doc_id,
-         |    list_sum(list_transform(generate_series(1, len(q)),
-         |      i -> q[i] * c.vec[i])) /
-         |    (sqrt(list_sum(list_transform(q, x -> x*x))) *
-         |     sqrt(list_sum(list_transform(c.vec, x -> x*x)))) AS cosv
-         |  FROM v c, qv WHERE c.vec_id <> 0),
-         |sem AS (
-         |  SELECT doc_id,
-         |    ROW_NUMBER() OVER (ORDER BY cosv DESC, doc_id) AS rank
-         |  FROM cosr ORDER BY cosv DESC, doc_id LIMIT 20),
-         |u AS (
-         |  SELECT doc_id, CAST(1.0 / (60.0 + rank) AS DECIMAL(18,12)) AS r
-         |  FROM lex
-         |  UNION ALL
-         |  SELECT doc_id, CAST(1.0 / (60.0 + rank) AS DECIMAL(18,12)) AS r
-         |  FROM sem),
-         |f AS (
-         |  SELECT doc_id, COUNT(*) AS n_lists,
-         |    CAST(SUM(r) AS DOUBLE) AS rrf
-         |  FROM u GROUP BY 1)
-         |SELECT doc_id, n_lists, ${R6("rrf")} AS rrf_micro
-         |FROM f ORDER BY rrf DESC, doc_id LIMIT 10""".stripMargin,
-
-    // add-k unigram NLL: model = corpus term counts; per-token logprob
-    // left-joined back (same arithmetic order as LmScore.meanNll)
-    "q_lm_score" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id,
-         |    unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
-         |  FROM documents),
-         |model AS (SELECT term, COUNT(*) AS cnt FROM toks GROUP BY 1),
-         |tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n, COUNT(*) AS v
-         |  FROM model),
-         |sc AS (
-         |  SELECT t.doc_id,
-         |    -ln((COALESCE(m.cnt, 0) + 0.5) / (n + 0.5 * v)) AS nll
-         |  FROM toks t LEFT JOIN model m ON t.term = m.term, tot)
-         |SELECT doc_id, COUNT(*) AS n_tokens,
-         |  ${R6("CAST(SUM(CAST(nll AS DECIMAL(18,9))) AS DOUBLE) / COUNT(*)")}
-         |    AS mean_nll_micro
-         |FROM sc GROUP BY 1""".stripMargin,
-
-    // conditional bigram NLL with unigram first-token fallback; LAG
-    // aligns each token with its predecessor inside the doc
-    "q_lm_bigram" ->
-      s"""WITH toks0 AS (
-         |  SELECT doc_id,
-         |    unnest(generate_series(0, len(t) - 1)) AS pos,
-         |    unnest(t) AS term
-         |  FROM (SELECT doc_id,
-         |      string_split_regex(trim(lower(text)), '\\s+') AS t
-         |    FROM documents)),
-         |toks AS (
-         |  SELECT doc_id, pos, term,
-         |    LAG(term) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
-         |  FROM toks0),
-         |uni AS (SELECT term, COUNT(*) AS uc FROM toks GROUP BY 1),
-         |bi AS (SELECT prev, term, COUNT(*) AS bc FROM toks
-         |  WHERE prev IS NOT NULL GROUP BY 1, 2),
-         |tot AS (SELECT CAST(SUM(uc) AS BIGINT) AS n, COUNT(*) AS v
-         |  FROM uni),
-         |sc AS (
-         |  SELECT t.doc_id,
-         |    CASE WHEN t.prev IS NULL THEN
-         |      -ln((COALESCE(u.uc, 0) + 0.5) / (n + 0.5 * v))
-         |    ELSE
-         |      -ln((COALESCE(b.bc, 0) + 0.5) /
-         |        (COALESCE(p.uc, 0) + 0.5 * v))
-         |    END AS nll
-         |  FROM toks t
-         |  LEFT JOIN bi b ON t.prev = b.prev AND t.term = b.term
-         |  LEFT JOIN uni p ON t.prev = p.term
-         |  LEFT JOIN uni u ON t.term = u.term, tot)
-         |SELECT doc_id, COUNT(*) AS n_tokens,
-         |  ${R6("CAST(SUM(CAST(nll AS DECIMAL(18,9))) AS DOUBLE) / COUNT(*)")}
-         |    AS mean_nll_micro
-         |FROM sc GROUP BY 1""".stripMargin,
-
-    // sliding-window chunking: chunk i covers tokens
-    // [i*24, i*24 + 32); last chunk index = ceil((n-32)/24) via
-    // integer arithmetic; list_slice clamps at the end like slice
-    "q_rag_chunks" ->
-      s"""WITH t AS (
-         |  SELECT doc_id,
-         |    string_split_regex(trim(text), '\\s+') AS toks
-         |  FROM documents),
-         |n AS (SELECT doc_id, toks, len(toks) AS n FROM t),
-         |c AS (
-         |  SELECT doc_id, toks, n,
-         |    unnest(generate_series(0, CASE WHEN n <= 32 THEN 0
-         |      ELSE (n - 32 + 23) // 24 END)) AS chunk_idx
-         |  FROM n)
-         |SELECT doc_id, chunk_idx,
-         |  LEAST(32, n - chunk_idx * 24) AS n_tokens,
-         |  md5(array_to_string(
-         |    list_slice(toks, chunk_idx * 24 + 1, chunk_idx * 24 + 32),
-         |    ' ')) AS chunk_md5
-         |FROM c""".stripMargin,
-
-    // character entropy via the count identity H = ln n - sum(c ln c)/n
-    "q_char_entropy" ->
-      s"""WITH cs AS (
-         |  SELECT doc_id, unnest(string_split(text, '')) AS ch
-         |  FROM documents),
-         |cnt AS (SELECT doc_id, ch, COUNT(*) AS c FROM cs GROUP BY 1, 2),
-         |h AS (SELECT doc_id, CAST(SUM(c) AS DOUBLE) AS n,
-         |    SUM(c * ln(c)) AS st
-         |  FROM cnt GROUP BY 1)
-         |SELECT doc_id, ${R6("ln(n) - st / n")} AS char_entropy_micro
-         |FROM h""".stripMargin,
-
-    // taxonomy routing: cnt columns AND the ties-to-smaller-name CASE
-    // chain are GENERATED from the same taxonomyLexicon constant as the
-    // Spark face, so adding/renaming/reordering a category cannot drift
-    // the two sides. The chain encodes the argmax only under sorted
-    // names, so that invariant is enforced here rather than assumed.
-    "q_taxonomy_tag" -> {
-      val cats = taxonomyLexicon.map(_._1)
-      require(cats == cats.sorted,
-        s"taxonomyLexicon categories must be sorted (ties-to-smaller-" +
-          s"name CASE chain depends on it): $cats")
-      def kws(ks: Seq[String]): String =
-        ks.map(k => "'" + k.replace("'", "''") + "'")
-          .mkString("[", ", ", "]")
-      val cntDefs = taxonomyLexicon.map { case (cat, ks) =>
-        s"    COALESCE(len(list_filter(lt, x -> list_contains(${kws(ks)},\n" +
-          s"      x))), 0) AS cnt_$cat"
-      }.mkString(",\n")
-      val allZero = cats.map(c => s"cnt_$c = 0").mkString(" AND ")
-      // WHEN cnt_i >= every later cnt THEN cat_i — first hit wins, so
-      // within ties the alphabetically smaller (earlier) name is chosen
-      val chain = cats.init.zipWithIndex.map { case (c, i) =>
-        val beats = cats.drop(i + 1).map(o => s"cnt_$c >= cnt_$o")
-          .mkString(" AND ")
-        s"    WHEN $beats THEN '$c'"
-      }.mkString("\n")
-      s"""WITH t AS (
-         |  SELECT doc_id,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS lt
-         |  FROM documents),
-         |c AS (
-         |  SELECT doc_id,
-         |$cntDefs
-         |  FROM t)
-         |SELECT doc_id, ${cats.map(c => s"cnt_$c").mkString(", ")},
-         |  CASE
-         |    WHEN $allZero THEN 'none'
-         |$chain
-         |    ELSE '${cats.last}' END AS top_category
-         |FROM c""".stripMargin
-    },
-
-    // q_mm_features: the image-header round-trip replayed ENTIRELY in
-    // SQL — synthesis and parse both — so the twin gates the byte
-    // arithmetic (PNG IHDR offsets, JPEG length-prefixed segment walk),
-    // not just row counts. The walk is unrolled into
-    // ImageHeaders.MaxJpegSegments CTE steps from the same constant as
-    // the Spark face; both sides do identical hex-string arithmetic, so
-    // the match is exact.
-    "q_mm_features" -> {
-      val steps = graft.multimodal.ImageHeaders.MaxJpegSegments
-      val sof = "('FFC0', 'FFC1', 'FFC2')"
-      val walk = (1 to steps).map { i =>
-        s"""w$i AS (
-           |  SELECT doc_id, n, hs, CASE
-           |      WHEN substr(hs, (pos*2-1)::INT, 4) IN $sof THEN pos
-           |      WHEN substr(hs, (pos*2-1)::INT, 2) = 'FF'
-           |          AND substr(hs, (pos*2-1)::INT, 4) <> 'FFD9'
-           |        THEN pos + 2
-           |          + ('0x' || substr(hs, (pos*2+3)::INT, 4))::BIGINT
-           |      ELSE NULL END AS pos
-           |  FROM w${i - 1})""".stripMargin
-      }.mkString(",\n")
-      s"""WITH m0 AS (
-         |  SELECT doc_id, text,
-         |    CAST(16 + doc_id % 2048 AS BIGINT) AS w,
-         |    CAST(16 + (doc_id * 7) % 2048 AS BIGINT) AS h,
-         |    CAST(doc_id % 64 AS BIGINT) AS pad
-         |  FROM documents),
-         |syn AS (
-         |  SELECT doc_id,
-         |    CASE WHEN doc_id % 2 = 0 THEN
-         |      from_hex('89504E470D0A1A0A0000000D49484452'
-         |        || lpad(hex(w), 8, '0') || lpad(hex(h), 8, '0')
-         |        || '080200000000000000') || encode(text)
-         |    ELSE
-         |      from_hex('FFD8FFE0' || lpad(hex(pad + 7), 4, '0')
-         |        || '4A46494600'
-         |        || substr(repeat('0', 512), 1, (pad * 2)::INT)
-         |        || CASE WHEN doc_id % 3 = 0 THEN 'FFE100040000'
-         |                ELSE '' END
-         |        || 'FFC0001108' || lpad(hex(h), 4, '0')
-         |        || lpad(hex(w), 4, '0')
-         |        || '03011100021101031101') || encode(text)
-         |    END AS content
-         |  FROM m0),
-         |w0 AS (
-         |  SELECT doc_id, CAST(octet_length(content) AS BIGINT) AS n,
-         |    hex(content) AS hs, CAST(3 AS BIGINT) AS pos
-         |  FROM syn),
-         |$walk,
-         |p AS (
-         |  SELECT doc_id, n, hs, pos,
-         |    (n >= 24 AND substr(hs, 1, 16) = '89504E470D0A1A0A'
-         |      AND substr(hs, 25, 8) = '49484452') AS png_ok,
-         |    (n >= 4 AND substr(hs, 1, 4) = 'FFD8'
-         |      AND substr(hs, (pos*2-1)::INT, 4) IN $sof
-         |      AND n >= pos + 8) AS jpeg_ok
-         |  FROM w$steps)
-         |SELECT doc_id,
-         |  CASE WHEN png_ok THEN 'png'
-         |       WHEN jpeg_ok THEN 'jpeg' END AS format,
-         |  CASE WHEN png_ok THEN ('0x' || substr(hs, 33, 8))::BIGINT
-         |       WHEN jpeg_ok
-         |         THEN ('0x' || substr(hs, (pos*2+13)::INT, 4))::BIGINT
-         |       END AS width,
-         |  CASE WHEN png_ok THEN ('0x' || substr(hs, 41, 8))::BIGINT
-         |       WHEN jpeg_ok
-         |         THEN ('0x' || substr(hs, (pos*2+9)::INT, 4))::BIGINT
-         |       END AS height,
-         |  n AS n_bytes
-         |FROM p""".stripMargin
-    },
-
-    // WAV/RIFF twin: same synthesis and little-endian chunk walk,
-    // hex-digit-for-hex-digit (LE fields read by reversing byte pairs)
-    "q_mm_audio" -> {
-      // little-endian WRITE of SQL expr v in `bytes` bytes
-      def leW(v: String, bytes: Int): String =
-        (bytes - 1 to 0 by -1).map(i =>
-          s"substr(lpad(hex($v), ${bytes * 2}, '0'), ${i * 2 + 1}, 2)")
-          .mkString("(", " || ", ")")
-      // little-endian READ of `bytes` bytes at 1-based byte pos expr p
-      def leR(p: String, bytes: Int): String =
-        "('0x' || " + (bytes - 1 to 0 by -1).map(i =>
-          s"substr(hs, ((($p) + $i) * 2 - 1)::INT, 2)")
-          .mkString(" || ") + ")::BIGINT"
-      val steps = graft.multimodal.WavHeaders.MaxChunks
-      val walk = (1 to steps).map { i =>
-        val sz = leR("pos + 4", 4)
-        s"""w$i AS (
-           |  SELECT doc_id, n, hs, CASE
-           |      WHEN length(hs) < pos * 2 + 15 THEN NULL
-           |      WHEN substr(hs, (pos*2-1)::INT, 8) = '64617461' THEN pos
-           |      ELSE pos + 8 + $sz + ($sz % 2) END AS pos,
-           |    CASE WHEN substr(hs, (pos*2-1)::INT, 8) = '666D7420'
-           |        AND fmt = 0 THEN pos ELSE fmt END AS fmt,
-           |    CASE WHEN substr(hs, (pos*2-1)::INT, 8) = '64617461'
-           |        AND dat = 0 THEN pos ELSE dat END AS dat
-           |  FROM w${i - 1})""".stripMargin
-      }.mkString(",\n")
-      s"""WITH m0 AS (
-         |  SELECT doc_id, text,
-         |    CAST(1 + doc_id % 2 AS BIGINT) AS ch,
-         |    CAST(8000 + (doc_id % 5) * 1000 AS BIGINT) AS rate,
-         |    CAST(8 + (doc_id % 2) * 8 AS BIGINT) AS bits,
-         |    CAST((doc_id % 32) * 2 AS BIGINT) AS pad,
-         |    CAST(octet_length(encode(text)) AS BIGINT) AS dlen
-         |  FROM documents),
-         |m1 AS (
-         |  SELECT *, ch * (bits // 8) AS blk, rate * ch * (bits // 8) AS br,
-         |    36 + CASE WHEN doc_id % 3 = 0 THEN 8 + pad ELSE 0 END + dlen
-         |      AS rlen
-         |  FROM m0),
-         |syn AS (
-         |  SELECT doc_id,
-         |    from_hex('52494646' || ${leW("rlen", 4)} || '57415645'
-         |      || '666D7420' || ${leW("16", 4)} || ${leW("1", 2)}
-         |      || ${leW("ch", 2)} || ${leW("rate", 4)} || ${leW("br", 4)}
-         |      || ${leW("blk", 2)} || ${leW("bits", 2)}
-         |      || CASE WHEN doc_id % 3 = 0 THEN
-         |           '4C495354' || ${leW("pad", 4)}
-         |             || substr(repeat('0', 512), 1, (pad * 2)::INT)
-         |         ELSE '' END
-         |      || '64617461' || ${leW("dlen", 4)}) || encode(text)
-         |      AS content
-         |  FROM m1),
-         |w0 AS (
-         |  SELECT doc_id, CAST(octet_length(content) AS BIGINT) AS n,
-         |    hex(content) AS hs, CAST(13 AS BIGINT) AS pos,
-         |    CAST(0 AS BIGINT) AS fmt, CAST(0 AS BIGINT) AS dat
-         |  FROM syn),
-         |$walk,
-         |p AS (
-         |  SELECT doc_id, n, hs, fmt, dat,
-         |    (n >= 44 AND substr(hs, 1, 8) = '52494646'
-         |      AND substr(hs, 17, 8) = '57415645'
-         |      AND fmt > 0 AND dat > 0
-         |      AND n >= dat + 7 AND n >= fmt + 23) AS ok
-         |  FROM w$steps)
-         |SELECT doc_id,
-         |  CASE WHEN ok THEN 'wav' END AS format,
-         |  CASE WHEN ok THEN ${leR("fmt + 10", 2)} END AS channels,
-         |  CASE WHEN ok THEN ${leR("fmt + 12", 4)} END AS sample_rate,
-         |  CASE WHEN ok THEN ${leR("fmt + 22", 2)} END AS bits,
-         |  CASE WHEN ok THEN ${leR("dat + 4", 4)} END AS data_bytes,
-         |  CASE WHEN ok THEN (CASE WHEN ${leR("fmt + 16", 4)} > 0
-         |    THEN (${leR("dat + 4", 4)} * 1000) // ${leR("fmt + 16", 4)}
-         |    END) END AS duration_ms,
-         |  n AS n_bytes
-         |FROM p""".stripMargin
-    }
-  )
+  /** RDD ids of the live shared fixtures owned by `s`; see
+    * [[graft.gates.Fixtures.sharedFixtureRddIds]]. */
+  def sharedFixtureRddIds(s: SparkSession): Set[Int] =
+    Fixtures.sharedFixtureRddIds(s)
+
+  /** Shared-fixture builds since the last drain: (fixture, seconds). */
+  def drainFixtureBuilds(): Seq[(String, Double)] =
+    Fixtures.drainFixtureBuilds()
+
+  // ScaleBench's q_pagerank_prep / q_kcore_prep attribution entries time
+  // these preps alone
+  private[graft] def tradeGraphEdges(s: SparkSession, dir: String): DataFrame =
+    Fixtures.tradeGraphEdges(s, dir)
+  private[graft] def coPurchasePairs(s: SparkSession, dir: String): DataFrame =
+    Fixtures.coPurchasePairs(s, dir)
 }

@@ -208,12 +208,14 @@ object VectorKernels {
     var j = 0
     while (j < m) {
       if (code.isNullAt(j)) return null
-      val c =
-        if (codeIsLong) code.getLong(j).toInt else code.getInt(j)
+      // range-check before narrowing: a long code of 2^32 must not wrap
+      // to index 0
+      val c: Long =
+        if (codeIsLong) code.getLong(j) else code.getInt(j).toLong
       val row = dtab.getArray(j)
       if (row == null || c < 0 || c >= row.numElements() ||
-        row.isNullAt(c)) return null
-      acc += row.getLong(c)
+        row.isNullAt(c.toInt)) return null
+      acc += row.getLong(c.toInt)
       j += 1
     }
     java.lang.Long.valueOf(acc)

@@ -288,4 +288,21 @@ class PqSpec extends SparkSpec {
           p.take(1500))
     }
   }
+
+  test("adcDist: codes outside [0, k) give null, long codes are " +
+    "range-checked before narrowing") {
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import graft.plans.VectorKernels.adcDist
+    def arr(xs: Any*) = new GenericArrayData(xs.toArray)
+    val k = 3
+    val dtab = arr(arr(10L, 20L, 30L), arr(1L, 2L, 3L))
+    assert(adcDist(dtab, arr(1, 2), 2, codeIsLong = false) == 23L)
+    assert(adcDist(dtab, arr(2L, 0L), 2, codeIsLong = true) == 31L)
+    for (bad <- Seq(-1, k))
+      assert(adcDist(dtab, arr(0, bad), 2, codeIsLong = false) == null,
+        s"int code $bad")
+    for (bad <- Seq(-1L, k.toLong, 1L << 32))
+      assert(adcDist(dtab, arr(0L, bad), 2, codeIsLong = true) == null,
+        s"long code $bad")
+  }
 }
