@@ -5,52 +5,33 @@ import org.apache.spark.sql.SparkSession
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * {"metric","value","unit","queries","sf"}.
   *
-  * An untimed warmup pass over the SAME scale factor first exercises
-  * whole-stage codegen and JIT for each query's actual (AQE-shaped) plan,
-  * so the timed pass measures steady-state execution rather than
-  * first-run Janino compilation — which would dominate at these small
-  * scale factors and say nothing about cluster-scale behavior.
-  *
-  * Contention self-adjudication: a fixed-cost calib probe runs at start
-  * (min-of-3 → `calib_sec`) AND after every ~25 queries
-  * (`calib_segments`/`calib_max`); queries measured inside a segment
-  * whose surrounding probes read >1.5x the quietest calib are
-  * re-measured once and the min kept (`n_remeasured`), so transient
-  * machine load shows up IN the artifact instead of requiring a manual
-  * quiet re-run to adjudicate.
-  *
-  * ABSOLUTE reference (round 15): the median-relative segment detector
-  * is blind to UNIFORM load — round 14 shipped a 198.8 s artifact for a
-  * 157.9 s engine with n_remeasured = 0 because every probe was equally
-  * inflated. The committed `bench_full.json` (the prior round's quiet
-  * run) now supplies the absolute yardstick: segments whose probes
-  * exceed 1.5x the committed quiet calib are dirty regardless of the
-  * run's own median, and any query measuring >1.5x its committed quiet
-  * time is re-measured (up to 2 extra passes, min kept). The artifact
-  * carries `vs_quiet_ratio` (this run / committed quiet, summed over
-  * the shared query set) so a reader can normalize residual load that
-  * re-measurement could not shed. Subset runs (SPARK_GRAFT_ONLY) write
-  * `bench_full_subset.json` so local iteration never clobbers the
-  * committed quiet reference.
+  * Protocol v4:
+  *  - an untimed warm-up pass over the same scale factor compiles each
+  *    query's actual (AQE-shaped) plan, so the timed pass measures
+  *    steady-state execution, not first-run codegen;
+  *  - each query's time is the min of SPARK_GRAFT_REPS reps; a failed
+  *    rep is never timed and the query is reported under `errors`;
+  *  - every persistent block except the shared fixtures is dropped
+  *    between queries, so no query inherits another's memory pressure;
+  *  - each fixture build is logged with the warm-up or the query and rep
+  *    that paid it (`fixture_builds`).
+  * The board reports wall-clock times as measured. A per-gate A/B is
+  * alternating SPARK_GRAFT_ONLY runs on one host, never a comparison
+  * against a record taken on another machine or in another window.
   */
 object Bench {
 
-  /** Measurement-protocol version, stamped into bench_full.json and
-    * required to MATCH when loading the committed quiet reference.
-    * Bump whenever the measurement discipline changes in a way that
-    * makes old quiet numbers incomparable. History:
+  /** Measurement-protocol version, stamped into every artifact. Bump
+    * whenever the measurement discipline changes in a way that makes
+    * old numbers incomparable. History:
     *   v1 — through r15's run (implicit; no stamp in the artifact);
-    *   v2 — 971cfe9's protocol: ALL persistent RDD blocks (incl.
-    *        localCheckpoint frames) dropped between timed queries, so
-    *        fixture-cache-heavy queries pay their warm-up every rep;
-    *   v3 — segment probes are min-of-3 (same estimator as the start
-    *        calib). The estimator changed mid-v2 without a bump; a
-    *        reference recorded under single-shot v2 carries
-    *        calib_segments whose median reads ~2x high and would
-    *        silently mis-calibrate dirty detection (r16 ADVICE). The
-    *        committed reference was re-recorded under min-of-3, so v3
-    *        only invalidates genuinely stale artifacts. */
-  private val ProtocolVersion = 3
+    *   v2 — ALL persistent RDD blocks (incl. localCheckpoint frames)
+    *        dropped between timed queries;
+    *   v3 — contention probes min-of-3, with load-triggered re-measures
+    *        folded into each query's min;
+    *   v4 — no contention probes or re-measures: the min is over the
+    *        SPARK_GRAFT_REPS reps only. */
+  private val ProtocolVersion = 4
 
   /** Max heap rounded to NEAREST GiB for artifact stamps (some
     * collectors report maxMemory slightly below -Xmx — a survivor
@@ -78,39 +59,6 @@ object Bench {
     maxBytes != Long.MaxValue &&
       maxBytes < (floorGb.toLong << 30) - (floorGb.toLong << 26)
 
-  /** The sub-second-population stamp the window-clearing rule keys on
-    * (COVERAGE.md quiet-record protocol): median of this-run/committed
-    * ratios over shared queries whose committed quiet time is
-    * sub-second but >= 0.1 s (below that, scheduler jitter alone is
-    * 1.5x — same floor as the re-measure pass). Extracted pure so the
-    * clearing-rule arithmetic is spec-pinned, not main()-only. */
-  private[graft] def subsecMedianOf(results: Map[String, Double],
-      quiet: Map[String, Double]): Option[Double] = {
-    val ratios = results.toSeq.collect {
-      case (name, t)
-          if quiet.get(name).exists(q => q >= 0.1 && q < 1.0) =>
-        t / quiet(name)
-    }.sorted
-    if (ratios.isEmpty) None else Some(ratios(ratios.size / 2))
-  }
-
-  /** Per-query re-measure selection (the absolute pass in main):
-    * queries reading above 1.5x-times-loadFactor their committed quiet
-    * time, with the same 0.1 s jitter floor as subsecMedianOf.
-    * loadFactor is the first-pass sub-second median clamped to >= 1.0
-    * — 1.0 on a quiet window (flat-rule behavior, bit-identical), the
-    * measured uniform-load ratio on a hot one, so only queries inflated
-    * BEYOND the window's own baseline are chased. Extracted pure so the
-    * hot-window arithmetic is spec-pinned, not main()-only. */
-  private[graft] def inflatedOf(results: Map[String, Double],
-      quiet: Map[String, Double], loadFactor: Double): Seq[String] =
-    results.toSeq.collect {
-      case (name, t)
-          if quiet.get(name).exists(q =>
-            t > 1.5 * loadFactor * math.max(q, 0.1)) =>
-        name
-    }
-
   /** Executable band verdict for the adjudicated q_stream_join_xbatch
     * irreducible floor (SCALE.md): "below" means the replay stopped
     * doing its mandated 4-trigger state work (a correctness smell,
@@ -124,7 +72,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     // decoupled for the strong-scaling probe (tools/core_scaling.py):
     // partition COUNT is a property of the data, parallelism of the
     // machine — tying them means fewer cores also means bigger
@@ -152,77 +101,6 @@ object Bench {
     }
     val queries = only.fold(SparkEntry.queries)(names =>
       SparkEntry.queries.filter { case (n, _) => names(n) })
-
-    // committed quiet reference (see header): parsed from the PRIOR
-    // round's bench_full.json before this run overwrites it. The file is
-    // machine-written single-line JSON from this very program, so two
-    // regexes suffice — no JSON dependency in the zero-egress image.
-    final case class QuietRef(calib: Double, times: Map[String, Double])
-    val quietRef: Option[QuietRef] = try {
-      val p = java.nio.file.Paths.get("bench_full.json")
-      if (!java.nio.file.Files.exists(p)) None
-      else {
-        val line = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        val protoRe = """"protocol":([0-9]+)""".r
-        val refProto = protoRe.findFirstMatchIn(line)
-          .map(_.group(1).toInt).getOrElse(1)
-        if (refProto != ProtocolVersion) {
-          // r15 lesson: a quiet reference recorded under DIFFERENT
-          // measurement rules (e.g. before the drop-all-blocks change)
-          // reads 1.2-1.33x off on fixture-heavy queries every run —
-          // burning re-measure passes and masking real regressions.
-          // An off-protocol yardstick is no yardstick.
-          System.err.println(s"[bench] committed quiet reference is " +
-            s"protocol v$refProto, this build measures v$ProtocolVersion" +
-            " — IGNORING it (vs_quiet_ratio will be null); re-record " +
-            "bench_full.json from a quiet full run")
-          None
-        } else {
-          val calibRe = """"calib_sec":([0-9.]+)""".r
-          val segRe = """"calib_segments":\[([0-9.,]*)\]""".r
-          val qBlockRe = """"queries":\{([^}]*)\}""".r
-          val entryRe = """"([^"]+)":([0-9.]+)""".r
-          for {
-            c <- calibRe.findFirstMatchIn(line).map(_.group(1).toDouble)
-            qb <- qBlockRe.findFirstMatchIn(line).map(_.group(1))
-          } yield {
-            // absolute contention reference = the committed run's MEDIAN
-            // segment probe, not its min-of-3 start calib: the dirty
-            // check compares SINGLE-SHOT probes, whose quiet-machine
-            // tail runs ~2x the min-of-3 (r16: a 0.181 calib reference
-            // flagged 5 segments / 125 queries dirty on a QUIET run,
-            // calib_max 0.361). Same-estimator comparison keeps the
-            // detector for real load (hogs push probes 3-10x) without
-            // burning re-measure passes on probe jitter.
-            val segMedian = segRe.findFirstMatchIn(line)
-              .map(_.group(1).split(",").filter(_.nonEmpty)
-                .map(_.toDouble).sorted)
-              .filter(_.nonEmpty)
-              .map(a => a(a.length / 2))
-            QuietRef(segMedian.getOrElse(c), entryRe.findAllMatchIn(qb)
-              .map(m => m.group(1) -> m.group(2).toDouble).toMap)
-          }
-        }
-      }
-    } catch { case _: Throwable => None }
-
-    // Contention sentinel: a fixed-cost data-independent aggregation
-    // (100M-row hash-sum, same on every machine and scale factor) timed
-    // exactly like the real queries. Two rounds running, the driver's
-    // bench artifact inflated 3-5x on a handful of queries purely from
-    // machine load; calib_sec lets any reader normalize a run against
-    // the recorded quiet-machine value (COVERAGE.md) instead of
-    // adjudicating by hand. Warm once, then min-of-3 (same estimator
-    // rationale as the query loop below).
-    def calibOnce(): Double = {
-      val t0 = System.nanoTime()
-      // bit_xor, not sum: summing 100M hashes overflows LONG under ANSI
-      spark.range(0L, 100000000L, 1L, cpus.toInt)
-        .selectExpr("bit_xor(xxhash64(id)) AS s").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    calibOnce()
-    val calib = (1 to 3).map(_ => calibOnce()).min
     def fmt(v: Double): String = f"$v%.3f"
 
     // between-query block hygiene: clearCache drops SQL-cached plans,
@@ -282,18 +160,15 @@ object Bench {
     // loudly, never as times
     var errors = Map.empty[String, String]
     def timeQuery(name: String,
-                  fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                  n: Int, recordErrors: Boolean = true): Option[Double] = {
+                  fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : Option[Double] = {
       var repBuilds = Vector.empty[(String, Double, Int)]
-      val times = (1 to n).flatMap { rep =>
+      val times = (1 to reps).flatMap { rep =>
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).count(); true }
           catch { case e: Throwable =>
-            // a contention RE-measurement that throws must not flag a
-            // query that already measured clean — keep its first-pass time
-            if (recordErrors)
-              errors += name -> e.toString.linesIterator.next().take(200)
+            errors += name -> e.toString.linesIterator.next().take(200)
             false
           }
         val d = (System.nanoTime() - t0) / 1e9
@@ -314,130 +189,17 @@ object Bench {
       }
       best.map(_._2)
     }
-    // Interleaved contention probes: the start-of-run calib alone proved
-    // blind to contention ARRIVING mid-run (two rounds of inflated
-    // artifacts adjudicated by judge re-runs). A probe closes every
-    // ~segSize queries; a segment whose surrounding probes exceed 1.5x
-    // the quietest observed calib is re-measured once more per query
-    // (min kept), so the artifact self-adjudicates transient load
-    // without a manual re-run.
-    val segSize = 25
-    val qseq = queries.toSeq
-    var segCalibs = Vector.empty[Double]
-    var firstPass = Map.empty[String, Double]
-    qseq.grouped(segSize).foreach { seg =>
-      seg.foreach { case (name, fn) =>
-        timeQuery(name, fn, reps).foreach(d => firstPass += name -> d)
-      }
-      // min-of-3, the SAME estimator as the start calib: single-shot
-      // probes spread 0.19-0.48 s on a QUIET 32-cpu box (scheduler
-      // jitter on the 32-task probe), so any sane threshold either
-      // false-fires on quiet runs (r16: 84-125 phantom re-measures per
-      // run) or misses real load. Under genuine contention all three
-      // shots inflate together, so the min still detects it.
-      segCalibs :+= (1 to 3).map(_ => calibOnce()).min
-    }
-    // dirty detection compares SEGMENT probes against each other only:
-    // the start calib is systematically slower (the probe's codegen loop
-    // is not C2-hot yet — measured 0.20 s at start vs 0.10 s mid-run on
-    // an idle machine), so mixing it in would flag the first segment on
-    // every quiet run. Reference is the MEDIAN probe, not the min: the
-    // probes are single-shot and the quietest one can read 3-4x below
-    // the rest on an idle machine (r14: one 0.089 s probe among 0.29-0.44
-    // flagged all 10 segments dirty and re-measured all 230 queries —
-    // a full extra pass). Median detects TRANSIENT load spikes, which is
-    // this mechanism's job; a uniformly-loaded run is what calib_sec /
-    // calib_max already expose to the reader.
-    val calibRef = segCalibs.sorted.apply(segCalibs.size / 2)
-    // a segment is dirty RELATIVE to this run's median (transient spike)
-    // OR ABSOLUTE to the committed quiet calib (uniform load — the r14
-    // blind spot: every probe inflated, median inflated with them)
-    val dirtySegs = segCalibs.zipWithIndex.filter { case (c, i) =>
-      val before = if (i == 0) c else segCalibs(i - 1)
-      val hi = math.max(before, c)
-      hi > 1.5 * calibRef || quietRef.exists(r => hi > 1.5 * r.calib)
-    }.map(_._2).toSet
-    val rerun = qseq.zipWithIndex.collect {
-      case ((name, fn), i)
-          if dirtySegs(i / segSize) && firstPass.contains(name) =>
-        (name, fn)
-    }
-    if (rerun.nonEmpty)
-      System.err.println(s"[bench] ${dirtySegs.size} contended segment(s) " +
-        s"(calib ref ${fmt(calibRef)}, quiet ref " +
-        s"${quietRef.fold("n/a")(r => fmt(r.calib))}, " +
-        s"max ${fmt(segCalibs.max)}): re-measuring ${rerun.size} queries")
-    var results = firstPass ++ rerun.flatMap { case (name, fn) =>
-      timeQuery(name, fn, 1, recordErrors = false)
-        .map(d => name -> math.min(d, firstPass(name)))
-    }
-    var nRemeasured = rerun.size
-    // per-query absolute pass: anything still >1.5x its committed quiet
-    // time gets up to 2 extra single-rep measurements (min kept). The
-    // 0.1 s floor keeps sub-100ms queries — where scheduler jitter alone
-    // is 1.5x — out of the loop. The threshold is LOAD-NORMALIZED by the
-    // first-pass sub-second median (the established machine-baseline
-    // proxy, see subsecMedianOf): the committed yardstick is a
-    // best-window statistic, so on a uniformly hot window the flat 1.5x
-    // flags a large fraction of the board and the pass re-measures
-    // near-wholesale (r19 driver window: 97; an r20 subsec-1.18 window:
-    // 195 of 241) — burning minutes on re-measures that CANNOT shed
-    // uniform load by construction (the whole window is hot; transient
-    // spikes are the SEGMENT probes' job above). Clamped at 1.0 so a
-    // quiet window's behavior is bit-identical to the flat rule. A
-    // genuinely regressed query still surfaces: the detector the judge
-    // reads compares committed entries, and the subsec_median /
-    // vs_quiet stamps self-label whatever this pass declined to chase.
-    quietRef.foreach { r =>
-      val fnOf = queries
-      val loadFactor =
-        math.max(1.0, subsecMedianOf(results, r.times).getOrElse(1.0))
-      if (loadFactor > 1.0)
-        System.err.println(f"[bench] hot window (first-pass subsec " +
-          f"median $loadFactor%.3f): per-query re-measure threshold " +
-          f"scaled to ${1.5 * loadFactor}%.2fx committed quiet")
-      var pass = 0
-      def inflated: Seq[String] = inflatedOf(results, r.times, loadFactor)
-      var pending = inflated
-      while (pass < 2 && pending.nonEmpty) {
-        System.err.println(s"[bench] ${pending.size} queries above " +
-          f"${1.5 * loadFactor}%.2fx committed quiet time: " +
-          s"re-measuring (pass ${pass + 1})")
-        pending.foreach { name =>
-          timeQuery(name, fnOf(name), 1, recordErrors = false).foreach { d =>
-            results += name -> math.min(d, results(name))
-            nRemeasured += 1
-          }
-        }
-        pass += 1
-        pending = inflated
-      }
-    }
-    // this run vs the committed quiet run over the SHARED query set: the
-    // residual-load normalizer for anything re-measurement couldn't shed
-    val vsQuietRatio: Option[Double] = quietRef.flatMap { r =>
-      val shared = results.keySet.intersect(r.times.keySet)
-      val quietSum = shared.toSeq.map(r.times).sum
-      if (quietSum > 0)
-        Some(shared.toSeq.map(results).sum / quietSum) else None
-    }
+    val results = queries.toSeq.flatMap { case (name, fn) =>
+      timeQuery(name, fn).map(name -> _)
+    }.toMap
     errors.toSeq.sortBy(_._1).foreach { case (n, e) =>
       System.err.println(s"[bench] FAILED $n: $e")
     }
     val total = if (results.nonEmpty) results.values.sum else 0.0
 
-    // emitted in the driver-facing total line so a hot window
-    // self-labels in BENCH_r*.json without consulting bench_full.json
-    // (r19 verdict item 5). vs_quiet_ratio is sum-weighted and so
-    // dominated by the multi-second gates; subsecMedian is the
-    // per-query machine-baseline reading the record/restore decision
-    // uses (see subsecMedianOf).
-    val subsecMedian: Option[Double] =
-      quietRef.flatMap(r => subsecMedianOf(results, r.times))
-
     // executable floor-band check (r19 verdict item 3; see
     // xbatchVerdict): the stamp self-labels every artifact and the
-    // stderr line makes a drift loud on quiet-record runs.
+    // stderr line makes a drift loud.
     val xbatchFloor: Option[String] =
       results.get("q_stream_join_xbatch").map { t =>
         val verdict = xbatchVerdict(t)
@@ -446,7 +208,7 @@ object Bench {
             s"$verdict the documented irreducible-floor band " +
             s"${XBatchFloorBand._1}-${XBatchFloorBand._2} s " +
             "(SCALE.md xbatch floor adjudication) — investigate the " +
-            "state machinery before recording")
+            "state machinery")
         verdict
       }
 
@@ -454,12 +216,8 @@ object Bench {
     // size-limited; this keeps every number for local regression diffs).
     // "env" records what the numbers were measured on — round-7 showed
     // two runs of identical code 2-3x apart across sessions, so a bench
-    // artifact without its environment is not comparable to anything
-    val calibMax = (calib +: segCalibs).max
-    val segJson = segCalibs.map(fmt).mkString("[", ",", "]")
-    val vsQuietJson = vsQuietRatio.fold("null")(fmt)
-    val quietCalibJson = quietRef.fold("null")(r => fmt(r.calib))
-    // reading convention (COVERAGE.md): a fixture paid_by "warmup"
+    // artifact without its environment is not comparable to anything.
+    // Reading convention for fixture_builds: a fixture paid_by "warmup"
     // costs NO timed query anything; paid_by a query name means the
     // build occurred during that query's reps and is included in its
     // recorded time ONLY when in_min is true (the min normally comes
@@ -469,9 +227,8 @@ object Bench {
         s""","rep":$r,"in_min":$inMin""" }
       s"""{"fixture":"$fx","sec":${fmt(sec)},"paid_by":"$by"$repJson}"""
     }.mkString("[", ",", "]")
-    val subsecJson = subsecMedian.fold("null")(fmt)
     val xbatchJson = xbatchFloor.fold("null")("\"" + _ + "\"")
-    val env = s""""protocol":$ProtocolVersion,"reps":$reps,"cpus":"$cpus","jvm":"${System.getProperty("java.version")}","heap_gb":${heapGbStamp(Runtime.getRuntime.maxMemory())},"calib_sec":${fmt(calib)},"calib_max":${fmt(calibMax)},"calib_segments":$segJson,"n_remeasured":$nRemeasured,"vs_quiet_ratio":$vsQuietJson,"subsec_median":$subsecJson,"xbatch_floor":$xbatchJson,"quiet_calib_ref":$quietCalibJson,"fixture_builds":$fixtureJson"""
+    val env = s""""protocol":$ProtocolVersion,"reps":$reps,"cpus":"$cpus","jvm":"${System.getProperty("java.version")}","heap_gb":${heapGbStamp(Runtime.getRuntime.maxMemory())},"xbatch_floor":$xbatchJson,"fixture_builds":$fixtureJson"""
     val full = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     def jstr(s: String): String =
@@ -484,31 +241,23 @@ object Bench {
       .mkString("{", ",", "}")
     val fullLine =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"n_failed":${errors.size},$env,"queries":$full,"errors":$errJson,"sf":"$sfDir"}"""
-    // NEVER write bench_full.json by default: the committed quiet
-    // reference is the absolute yardstick every future run calibrates
-    // against, and r16's driver run (contended, n_remeasured 51)
-    // clobbered it in the working tree where one careless `git add -A`
-    // would have committed the poisoned copy. Run output goes to
-    // bench_out.json; the yardstick refreshes ONLY under an explicit
-    // SPARK_GRAFT_RECORD_QUIET=1 on a full (non-subset) run.
-    val recordQuiet = sys.env.get("SPARK_GRAFT_RECORD_QUIET").contains("1")
+    // run output never overwrites the committed bench_full.json record;
+    // subset runs go to their own file so local iteration never clobbers
+    // a full run's breakdown
     val fullPath =
       if (only.isDefined) "bench_full_subset.json" else "bench_out.json"
     java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
       (fullLine + "\n").getBytes("UTF-8"))
-    if (recordQuiet && only.isEmpty)
-      java.nio.file.Files.write(java.nio.file.Paths.get("bench_full.json"),
-        (fullLine + "\n").getBytes("UTF-8"))
 
     // THE one JSON line. The driver captures only the last ~2000 chars of
     // stdout (sbt appends a ~100-char [success] trailer after this line),
     // so the line must stay well under that or it is truncated mid-JSON
     // and never parses — observed in every round before this budget
     // existed. Keep the slowest queries (the ones a perf grade hinges on)
-    // until the budget is spent; the full breakdown is in bench_full.json.
+    // until the budget is spent; the full breakdown is in bench_out.json.
     val budget = 1600
     val header =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"n_failed":${errors.size},"calib_sec":${fmt(calib)},"calib_max":${fmt(calibMax)},"vs_quiet_ratio":$vsQuietJson,"subsec_median":$subsecJson,"xbatch_floor":$xbatchJson,"n_remeasured":$nRemeasured,"queries":"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"n_failed":${errors.size},"xbatch_floor":$xbatchJson,"queries":"""
     val footer = s""","sf":"$sfDir"}"""
     val slowestFirst = results.toSeq.sortBy { case (k, v) => (-v, k) }
     val fixed = header.length + footer.length + 2 // braces of "queries"

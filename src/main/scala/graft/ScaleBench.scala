@@ -128,10 +128,7 @@ object ScaleBench {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def streamScaleFixture(s: SparkSession, dir: String): String =
     streamFixtureCache.computeIfAbsent(dir, d => {
-      val root =
-        s"${System.getProperty("java.io.tmpdir")}/graft_scale_stream_" +
-          java.lang.Integer.toHexString(d.hashCode) + "_" +
-          java.lang.ProcessHandle.current().pid()
+      val root = graft.gates.Fixtures.scratchRoot("scale_stream", d)
       val ev = Tables.tsToNs(Tables.events(s, d))
         .select(col("ts").as("ts_ns"), col("event_id"),
           col("event_type"), col("value"))
@@ -527,9 +524,8 @@ object ScaleBench {
         // the re-measure can itself fail: measure returns the -1.0
         // error sentinel on a throw, and min(clean, -1.0) would replace
         // a VALID reading with an error, poisoning the whole entry
-        // (slope null, ok=false) — the same doctrine as Bench.timeQuery:
-        // a contention re-measurement that throws must never flag a
-        // size that already measured clean (r19 ADVICE)
+        // (slope null, ok=false): a re-measurement that throws must
+        // never flag a size that already measured clean (r19 ADVICE)
         val r = measure(k1)
         times = times.updated(i, k1 -> (if (r >= 0) math.min(t1, r) else t1))
         remeasured ::= k1

@@ -53,7 +53,7 @@ object Fixtures {
     * for the fixtures keyed by sf dir rather than by run: concurrent
     * Verify and Bench JVMs must not race on one overwrite-then-read
     * directory. */
-  private[gates] def scratchRoot(kind: String, dir: String): String =
+  private[graft] def scratchRoot(kind: String, dir: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_${kind}_" +
       java.lang.Integer.toHexString(dir.hashCode) + "_" +
       java.lang.ProcessHandle.current().pid()

@@ -192,7 +192,8 @@ object Clustering {
     * `nHint`: the corpus row count, if the caller already knows it
     * (table metadata, a prior stage's count). It only SIZES the shard
     * key — ceil(log2(n / target)) sign planes — so an approximate hint
-    * merely shifts the average shard size, never correctness; without
+    * merely shifts the average shard size, never correctness (even an
+    * undercount to one shard still sub-splits oversized shards); without
     * it the operator pays one exact counting scan of the corpus before
     * any useful work, which at 100 TB is a full extra pass (r16
     * verdict). */
@@ -231,16 +232,19 @@ object Clustering {
       .fanOut(df.select(col(idCol).as("__sd_id"), vec.as("__sd_v")),
         col("__sd_id"))
     val base =
-      if (bits == 0) {
+      if (bits == 0 && nHint.isEmpty) {
         // single-shard face: every row's raw key is the same 0L, no shard
-        // can exceed 4x target (bits == 0 implies n <= target), and
-        // pmod(hash, 1) = 0 — so the size probe and the split join are
-        // algebraic no-ops; the shard key is exactly lit(0L). Same
-        // specialization as the signature's own bits == 0 arm above.
+        // can exceed 4x target (bits == 0 with an EXACT count implies
+        // n <= target), and pmod(hash, 1) = 0 — so the size probe and the
+        // split join are algebraic no-ops; the shard key is exactly
+        // lit(0L). A hinted n may undercount, so a hint always takes the
+        // split path below.
         keyed0.withColumn("__sd_s", lit(0L))
       } else {
+        // srpSignature needs >= 1 plane: zero bits is the one raw key 0L
         val keyed = keyed0.withColumn("__sd_raw",
-          Similarity.srpSignature(col("__sd_v"), bits, dims, seed))
+          if (bits == 0) lit(0L)
+          else Similarity.srpSignature(col("__sd_v"), bits, dims, seed))
         // bound the worst case: SRP sign buckets are similarity-preserving
         // but not balanced; a shard > 4x target hash-splits into
         // ceil(size / (2x target)) sub-shards (<= 4096, key packs below).

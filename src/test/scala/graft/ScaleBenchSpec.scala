@@ -203,8 +203,7 @@ class ScaleBenchSpec extends SparkSpec {
     // a THROWING re-measure (measureAt's -1.0 sentinel) must not
     // replace a valid clean reading — min(clean, -1.0) would poison
     // the entry (slope null, ok=false) for a transient failure during
-    // the repair pass, the exact class Bench.timeQuery's recordErrors
-    // guard exists for (r19 ADVICE)
+    // the repair pass (r19 ADVICE)
     val (fixed5, rm5) = ScaleBench.resolveInversions(
       Seq(1 -> 5.0, 4 -> 1.0), _ => -1.0)
     assert(rm5 == List(1))
@@ -243,47 +242,6 @@ class ScaleBenchSpec extends SparkSpec {
     // off-protocol run is still loudly below it
     assert(!Bench.heapBelowFloor(16L << 30, 12))
     assert(Bench.heapBelowFloor(8L << 30, 12))
-  }
-
-  test("subsecMedianOf implements the window-clearing rule's stamp: " +
-    "median ratio over shared queries with committed quiet time in " +
-    "[0.1, 1.0), ignoring jitter-floor and multi-second entries") {
-    val quiet = Map(
-      "a" -> 0.5, "b" -> 0.2, "c" -> 0.9,   // in the sub-second band
-      "tiny" -> 0.05,                        // below the 0.1 s floor
-      "big" -> 3.0,                          // multi-second gate
-      "gone" -> 0.4)                         // not in this run
-    val run = Map(
-      "a" -> 0.55, "b" -> 0.24, "c" -> 0.90,
-      "tiny" -> 0.50,   // 10x — must NOT poison the stamp
-      "big" -> 9.0,     // 3x — must NOT poison the stamp
-      "new" -> 0.2)     // no committed reference
-    // ratios considered: 1.1, 1.2, 1.0 -> sorted (1.0, 1.1, 1.2),
-    // median (size/2 = idx 1) = 1.1
-    assert(Bench.subsecMedianOf(run, quiet).exists(m =>
-      math.abs(m - 1.1) < 1e-9))
-    // no shared sub-second entries -> no stamp, never a division
-    assert(Bench.subsecMedianOf(Map("big" -> 2.0), quiet).isEmpty)
-    assert(Bench.subsecMedianOf(run, Map.empty).isEmpty)
-  }
-
-  test("inflatedOf load-normalizes the per-query re-measure threshold: " +
-    "quiet windows keep the flat 1.5x rule bit-identically, hot windows " +
-    "only chase queries inflated beyond their own uniform baseline") {
-    val quiet = Map("a" -> 1.0, "b" -> 0.5, "c" -> 2.0, "tiny" -> 0.05)
-    // a=1.6x, b=1.2x, c=2.0x, tiny=2x-but-under-the-0.1s-jitter-floor
-    val run = Map("a" -> 1.6, "b" -> 0.6, "c" -> 4.0, "tiny" -> 0.10,
-      "new" -> 9.0) // no committed reference -> never selected
-    // quiet window (factor 1.0): the flat rule — a and c exceed 1.5x
-    assert(Bench.inflatedOf(run, quiet, 1.0).toSet == Set("a", "c"))
-    // hot window stamped 1.18: threshold 1.77x — a (1.6x) is window
-    // position and is NOT chased; c (2.0x) still is
-    assert(Bench.inflatedOf(run, quiet, 1.18).toSet == Set("c"))
-    // the 0.1 s floor: tiny reads 2x its committed 0.05 but under
-    // 1.5 * max(0.05, 0.1) = 0.15 s absolute — never selected
-    assert(!Bench.inflatedOf(run, quiet, 1.0).contains("tiny"))
-    // empty references -> empty selection, never a throw
-    assert(Bench.inflatedOf(run, Map.empty, 1.0).isEmpty)
   }
 
   test("xbatchVerdict bands the streaming irreducible floor: below " +

@@ -279,6 +279,23 @@ class ClusteringSpec extends SparkSpec {
     intercept[IllegalArgumentException](run(Some(0L)))
   }
 
+  test("an undercounting nHint still sub-splits: hint 1 is not one " +
+    "unbounded shard") {
+    val rows = (0L until 60L).map(i =>
+      i -> Seq(math.sin(i * 0.37) * 3, math.cos(i * 0.53) * 3))
+    val pairs = Clustering.semDupPairsSharded(vecs(rows: _*), "id", "vec",
+        shardSizeTarget = 5, cellsPerShard = 1, maxIter = 0,
+        minCosine = -1.0, nHint = Some(1L))
+    val sizes = pairs.select(col("shard"), col("id_a").as("id"))
+      .union(pairs.select(col("shard"), col("id_b")))
+      .groupBy("shard").agg(countDistinct(col("id")).as("n"))
+      .collect().map(_.getLong(1))
+    // 60 rows > 4x target 5 => ceil(60 / 10) = 6 hash sub-shards of ~10;
+    // the unsplit shard would hold all 60
+    assert(sizes.length > 1, "hinted run kept all rows in one shard")
+    assert(sizes.max <= 20, s"largest shard ${sizes.max} rows")
+  }
+
   test("sharded face sub-splits a pathologically skewed shard") {
     // all vectors in the same orthant => ONE sign bucket regardless of
     // bits; with n >> 4x target the splitter must engage (no blow-up,

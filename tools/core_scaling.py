@@ -11,8 +11,8 @@ iterative PageRank, PQ codebook+top-k, iterative BPE agg), and writes
 CORE_SCALING.json with per-query times, 4->32 speedups, and parallel
 efficiency.
 
-Each Bench child runs in its own temp cwd so the repo's committed
-bench_full.json snapshot is never clobbered.
+Each Bench child runs in its own temp cwd so its per-query breakdown
+file never lands in the repo.
 
 Usage: python3 tools/core_scaling.py [x16_dir]
 """
@@ -57,8 +57,7 @@ def run_bench(data_dir: str, cores: int) -> dict:
         # read the COMPLETE per-query breakdown the child writes in its
         # cwd — the one-line stdout contract is size-limited and drops
         # the fastest queries once the set grows. Subset runs (ONLY set)
-        # write bench_full_subset.json so they never clobber the repo's
-        # committed quiet reference.
+        # write it as bench_full_subset.json.
         full = os.path.join(cwd, "bench_full_subset.json")
         if os.path.exists(full):
             with open(full) as f:
@@ -84,8 +83,7 @@ def main() -> None:
         missing = [q for q in QUERIES if q not in r["queries"]]
         if missing:
             sys.exit(f"bench at cores={c} returned no time for: {missing}")
-        runs[str(c)] = {"total": r["value"], "calib_sec": r["calib_sec"],
-                        "queries": r["queries"]}
+        runs[str(c)] = {"total": r["value"], "queries": r["queries"]}
         print(f"[cores] local[{c}]: total {r['value']:.1f} s", file=sys.stderr)
     lo, hi = str(CORES[0]), str(CORES[-1])
     ratio = CORES[-1] / CORES[0]
