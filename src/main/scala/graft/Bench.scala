@@ -70,10 +70,14 @@ object Bench {
     if (t < XBatchFloorBand._1) "below"
     else if (t > XBatchFloorBand._2) "above" else "ok"
 
+  /** `local[N]` width of Bench and ScaleBench: `SPARK_GRAFT_CPUS`, else
+    * the machine's processors, so a bare run is stamped with what ran. */
+  private[graft] def cpusFromEnv: String = sys.env.getOrElse(
+    "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
+    val cpus = cpusFromEnv
     // decoupled for the strong-scaling probe (tools/core_scaling.py):
     // partition COUNT is a property of the data, parallelism of the
     // machine — tying them means fewer cores also means bigger

@@ -10,7 +10,8 @@ import graft.operators.{AsOfJoin, Imbalance, TimeBins}
   * §2.3 J3/J5), the reference's core analytic
   * (`/root/reference/order_imbalance.py:242-475`).
   *
-  * `kind`:
+  * `kind` (one row of [[kinds]]; every OI column is built by
+  * [[graft.operators.Imbalance]]):
   *  - `vis`      A1 over visible executions (type 4)
   *  - `hid`      A2 probability-weighted over hidden executions (type 5)
   *  - `all`      A2 over types 4+5 with visible rows forced to prob 0/1
@@ -22,7 +23,8 @@ import graft.operators.{AsOfJoin, Imbalance, TimeBins}
   *               pred_dir x agg_ratio vs 0.5 (`order_imbalance.py:419-432`)
   *
   * Execution shape at scale: one as-of window shuffle on (ticker, price)
-  * [iceberg only], then ONE groupBy shuffle on (ticker, date, bin). The
+  * [iceberg only] or a per-(ticker, date) tercile aggregate broadcast back
+  * [size only], then ONE groupBy shuffle on (ticker, date, bin). The
   * panel is per (ticker, day) independent — partition-parallel across a
   * cluster; the spine join is a broadcast of a generated sequence.
   */
@@ -56,92 +58,61 @@ object Oi {
       .drop("asof_time", "__ts_ns")
   }
 
+  /** One panel kind: the rows it aggregates, an optional tagging step
+    * over them, and its OI columns as (suffix, row condition) pairs under
+    * one [[Imbalance]] builder. */
+  final case class Kind(rows: Column, oi: (String, Column) => Column,
+                        buckets: Seq[(String, Column)],
+                        tag: DataFrame => DataFrame = identity) {
+    def oiNames: Seq[String] = buckets.map(b => s"order_imbalance${b._1}")
+  }
+
+  private val sz = col("size").cast("double")
+  private val signed: (String, Column) => Column =
+    Imbalance.oiColumn(col("direction"), sz, _, _)
+  private def weighted(prob: Column): (String, Column) => Column =
+    Imbalance.weightedOiColumn(prob, sz, _, _)
+  private val byPredProb = weighted(col("pred_prob"))
+  private def isType(t: Int): Column = col("event_type") === t
+  private def suffixed(bs: Seq[(String, Column)]): Seq[(String, Column)] =
+    bs.map { case (b, c) => s"_$b" -> c }
+
+  /** The panel kinds by name. */
+  val kinds: Map[String, Kind] = Map(
+    "vis" -> Kind(isType(EventType.VisibleExec), signed,
+      Seq("_vis" -> lit(true))),
+    "hid" -> Kind(isType(EventType.HiddenExec), byPredProb,
+      Seq("_hid" -> lit(true))),
+    // visible rows get prob 0 (dir -1 / buy) or 1 (dir +1 / sell):
+    // order_imbalance.py:290-291
+    "all" -> Kind(
+      col("event_type").isin(EventType.VisibleExec, EventType.HiddenExec),
+      weighted(when(isType(EventType.VisibleExec),
+        when(col("direction") === -1, 0.0).otherwise(1.0))
+        .otherwise(col("pred_prob"))),
+      Seq("_all" -> lit(true))),
+    // tagIcebergs reads the submits and keeps only the visible execs
+    "iceberg" -> Kind(lit(true), signed,
+      Seq("_vis" -> (col("iceberg") === 0), "_ib" -> (col("iceberg") === 1)),
+      tagIcebergs(_)),
+    // per-(ticker, date) exact size terciles over hidden execs
+    "size" -> Kind(isType(EventType.HiddenExec), byPredProb,
+      suffixed(Imbalance.sizeBuckets(sz)),
+      Imbalance.tagSizeTerciles(_, Seq("ticker", "date"), sz)),
+    "agg" -> Kind(isType(EventType.HiddenExec), byPredProb,
+      suffixed(Imbalance.aggBuckets(col("pred_dir"), col("agg_ratio")))))
+
   /** The OI panel for one delta: one row per (ticker, date, bin) with the
-    * requested OI column(s) plus ordered first/last midprice and weighted
+    * kind's OI column(s) plus ordered first/last midprice and weighted
     * midprice (A5 via min_by/max_by on the explicit seq order). */
   def panel(events: DataFrame, deltaNs: Long, kind: String): DataFrame = {
-    val e = events.withColumn("bin_ns", binNs(deltaNs))
-    val keys = Seq(col("ticker"), col("date"), col("bin_ns"))
-    val side = col("direction")
-    val sz = col("size").cast("double")
-
-    val base: DataFrame = kind match {
-      case "vis" =>
-        val aggs = Imbalance.oiColumns(side, sz, "_vis") ++ firstLastAggs
-        e.filter(col("event_type") === EventType.VisibleExec)
-          .groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
-      case "hid" =>
-        val aggs = Imbalance.weightedOiColumns(col("pred_prob"), sz,
-          "_hid") ++ firstLastAggs
-        e.filter(col("event_type") === EventType.HiddenExec)
-          .groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
-      case "all" =>
-        // visible rows get prob 0 (dir -1 / buy) or 1 (dir +1 / sell):
-        // order_imbalance.py:290-291
-        val prob = when(col("event_type") === EventType.VisibleExec,
-          when(side === -1, 0.0).otherwise(1.0)).otherwise(col("pred_prob"))
-        val aggs = Imbalance.weightedOiColumns(prob, sz, "_all") ++
-          firstLastAggs
-        e.filter(col("event_type").isin(EventType.VisibleExec,
-            EventType.HiddenExec))
-          .groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
-      case "iceberg" =>
-        val tagged = tagIcebergs(events).withColumn("bin_ns", binNs(deltaNs))
-        def oi(cond: Column, sfx: String): Seq[Column] = {
-          val buy = sum(when(cond && side === -1, sz).otherwise(0.0))
-          val sell = sum(when(cond && side === 1, sz).otherwise(0.0))
-          Seq(((buy - sell) / when(buy + sell =!= 0.0, buy + sell))
-            .as(s"order_imbalance$sfx"))
-        }
-        val aggs = oi(col("iceberg") === 0, "_vis") ++
-          oi(col("iceberg") === 1, "_ib") ++ firstLastAggs
-        tagged.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
-      case "size" =>
-        // per-(ticker,date) exact size terciles over hidden execs
-        // (order_imbalance.py:435-448)
-        val hid = e.filter(col("event_type") === EventType.HiddenExec)
-        val terciles = hid.groupBy(col("ticker"), col("date")).agg(
-          expr("percentile(size, 0.3333333333333333)").as("__q1"),
-          expr("percentile(size, 0.6666666666666666)").as("__q2"))
-        val tagged = hid.join(broadcast(terciles), Seq("ticker", "date"))
-          .withColumn("__b", when(sz < col("__q1"), "small")
-            .when(sz <= col("__q2"), "medium").otherwise("large"))
-        def woi(b: String): Column = {
-          val cond = col("__b") === b
-          val num = sum(when(cond, sz * (lit(1.0) - lit(2.0) *
-            col("pred_prob"))).otherwise(0.0))
-          val den = sum(when(cond, sz).otherwise(0.0))
-          (num / when(den =!= 0.0, den)).as(s"order_imbalance_$b")
-        }
-        val aggs = Seq(woi("small"), woi("medium"), woi("large")) ++
-          firstLastAggs
-        tagged.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
-      case "agg" =>
-        // aggressiveness buckets (order_imbalance.py:419-432): relative to
-        // the PREDICTED direction, a hidden exec is low-aggressive when
-        // priced on the passive side of the half-spread, high-aggressive
-        // on the aggressive side; agg_ratio == 0.5 exactly is "mid"
-        val hid = e.filter(col("event_type") === EventType.HiddenExec)
-        val b = when(col("agg_ratio") === 0.5, "agg_mid")
-          .when((col("pred_dir") === 1 && col("agg_ratio") < 0.5) ||
-            (col("pred_dir") === -1 && col("agg_ratio") > 0.5), "agg_low")
-          .when((col("pred_dir") === 1 && col("agg_ratio") > 0.5) ||
-            (col("pred_dir") === -1 && col("agg_ratio") < 0.5), "agg_high")
-        def woiA(bkt: String): Column = {
-          val cond = col("__b") === bkt
-          val num = sum(when(cond, sz * (lit(1.0) - lit(2.0) *
-            col("pred_prob"))).otherwise(0.0))
-          val den = sum(when(cond, sz).otherwise(0.0))
-          (num / when(den =!= 0.0, den)).as(s"order_imbalance_$bkt")
-        }
-        val aggs = Seq(woiA("agg_low"), woiA("agg_mid"),
-          woiA("agg_high")) ++ firstLastAggs
-        hid.withColumn("__b", b).groupBy(keys: _*)
-          .agg(aggs.head, aggs.tail: _*)
-      case other => throw new IllegalArgumentException(
-        s"unknown OI kind: $other")
-    }
-    base
+    val k = kinds.getOrElse(kind,
+      throw new IllegalArgumentException(s"unknown OI kind: $kind"))
+    val aggs = k.buckets.map { case (sfx, cond) => k.oi(sfx, cond) } ++
+      firstLastAggs
+    k.tag(events.filter(k.rows)).withColumn("bin_ns", binNs(deltaNs))
+      .groupBy(col("ticker"), col("date"), col("bin_ns"))
+      .agg(aggs.head, aggs.tail: _*)
   }
 
   /** A5 first/last midprice + weighted midprice in explicit event order

@@ -21,11 +21,18 @@ object Pipelines {
     * (tests use a deterministic function; production uses
     * DirectionModel.attachPredictions upstream).
     *
+    * `kind` must name a single-OI-column kind of [[Oi.kinds]] (vis, hid,
+    * all); a multi-column kind is rejected before any plan is built.
+    *
     * Returns (panel with returns, fitted OlsFit rows).
     */
   def ep1(prepped: DataFrame, deltaNs: Long, kind: String = "vis",
           predictive: Boolean = false)
       : (DataFrame, Seq[Regression.OlsFit]) = {
+    val singles = Oi.kinds.collect {
+      case (k, kd) if kd.oiNames.size == 1 => k }.toSeq.sorted
+    require(singles.contains(kind), s"ep1 regresses on one OI column; " +
+      s"kind '$kind' is not one of ${singles.mkString(", ")}")
     val featured = Features.addMicrostructure(prepped)
     val withProb =
       if (featured.columns.contains("pred_prob")) featured
@@ -33,7 +40,7 @@ object Pipelines {
         when(col("direction") === -1, 0.0).otherwise(1.0))
     val panel = Oi.densifyPanel(Oi.panel(withProb, deltaNs, kind), deltaNs)
     val withRet = Returns.addLogReturns(panel, deltaNs = deltaNs)
-    val oiCol = s"order_imbalance_$kind"
+    val oiCol = Oi.kinds(kind).oiNames.head
     val y = if (predictive) "fut_log_ret" else "log_ret"
     val fitInput = withRet.filter(col(y).isNotNull && col(oiCol).isNotNull)
     val fits = Regression.olsByGroup(fitInput, y, Seq(oiCol), Seq("ticker"))

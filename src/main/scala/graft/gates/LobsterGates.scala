@@ -97,6 +97,18 @@ object LobsterGates {
        |      THEN ln(last_mid / first_mid) END AS log_ret
        |  FROM dense)""".stripMargin
 
+  /** A4 over lineitem (extended price plays size, discount plays
+    * pred_prob): weighted OI per bucket, one `oi_<bucket>_micro` column
+    * each, per return flag. */
+  private def lineitemBucketOi(li: DataFrame, buckets: Seq[(String, Column)])
+      : DataFrame = {
+    val ois = buckets.map { case (b, cond) => Imbalance.weightedOiColumn(
+      col("l_discount"), col("l_extendedprice"), s"_$b", cond) }
+    li.groupBy(col("l_returnflag")).agg(ois.head, ois.tail: _*)
+      .select(col("l_returnflag") +: buckets.map { case (b, _) =>
+        r6(col(s"order_imbalance_$b")).as(s"oi_${b}_micro") }: _*)
+  }
+
   /** Laplace-expansion determinant over symbolic SQL entries — used by the
     * q_m5_full oracle to spell the 5x5 Cramer solve as plain arithmetic.
     * DuckDB evaluates it with IEEE semantics; the Spark side solves the
@@ -144,11 +156,11 @@ object LobsterGates {
 
     // --- A2: probability-weighted OI (lineitem: discount as pseudo-prob) ---
     Gate("q_a2_weighted_oi", (s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      li.groupBy(col("l_returnflag"))
-        .agg((sum(col("l_extendedprice") * (lit(1.0) - lit(2.0) * col("l_discount"))) /
-              sum(col("l_extendedprice"))).as("woi"))
-        .select(col("l_returnflag"), r6(col("woi")).as("woi_micro"))
+      Tables.lineitem(s, dir).groupBy(col("l_returnflag"))
+        .agg(Imbalance.weightedOiColumn(col("l_discount"),
+          col("l_extendedprice")))
+        .select(col("l_returnflag"),
+          r6(col("order_imbalance")).as("woi_micro"))
     },
       s"""SELECT l_returnflag,
          |  ${R6("SUM(l_extendedprice * (1.0 - 2.0*l_discount)) / SUM(l_extendedprice)")} AS woi_micro
@@ -159,8 +171,9 @@ object LobsterGates {
       val ev = eventsNs(s, dir)
         .withColumn("bin_ns", TimeBins.ceilNs(col("ts_ns"), H * 6))
         .withColumn("flag", (col("event_id") % 2).cast("int"))
-      Imbalance.splitOrderImbalance(ev, Seq(col("bin_ns")),
-          side(col("event_type")), col("value"), col("flag"))
+      def oi(sfx: String, flag: Int): Column = Imbalance.oiColumn(
+        side(col("event_type")), col("value"), sfx, col("flag") === flag)
+      ev.groupBy(col("bin_ns")).agg(oi("_vis", 0), oi("_ib", 1))
         .select(col("bin_ns"),
           r6(col("order_imbalance_vis")).as("oi_vis_micro"),
           r6(col("order_imbalance_ib")).as("oi_ib_micro"))
@@ -775,27 +788,9 @@ object LobsterGates {
     // --- A4: size-tercile conditional weighted OI (exact per-group
     //     percentile terciles; discount plays pred_prob) ---
     Gate("q_a4_size_oi", (s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val terciles = li.groupBy(col("l_returnflag")).agg(
-        expr("percentile(l_quantity, 0.3333333333333333)").as("q1"),
-        expr("percentile(l_quantity, 0.6666666666666666)").as("q2"))
-      // reference bucket boundaries: strict < q1, [q1,q2], > q2
-      val tagged = li.join(broadcast(terciles), Seq("l_returnflag"))
-        .withColumn("bucket", when(col("l_quantity") < col("q1"), "small")
-          .when(col("l_quantity") <= col("q2"), "medium")
-          .otherwise("large"))
-      def woi(b: String): Column = {
-        val cond = col("bucket") === b
-        val num = sum(when(cond, col("l_extendedprice") *
-          (lit(1.0) - lit(2.0) * col("l_discount"))).otherwise(0.0))
-        val den = sum(when(cond, col("l_extendedprice")).otherwise(0.0))
-        (num / when(den =!= 0.0, den)).as(b)
-      }
-      tagged.groupBy(col("l_returnflag")).agg(
-          woi("small"), woi("medium"), woi("large"))
-        .select(col("l_returnflag"), r6(col("small")).as("oi_small_micro"),
-          r6(col("medium")).as("oi_medium_micro"),
-          r6(col("large")).as("oi_large_micro"))
+      val qty = col("l_quantity")
+      lineitemBucketOi(Imbalance.tagSizeTerciles(Tables.lineitem(s, dir),
+        Seq("l_returnflag"), qty), Imbalance.sizeBuckets(qty))
     },
       s"""WITH t AS (
          |  SELECT l_returnflag, quantile_cont(l_quantity, 0.3333333333333333) AS q1,
@@ -1517,20 +1512,8 @@ object LobsterGates {
         .withColumn("pred_dir",
           when(col("l_linenumber") % 2 === 0, 1).otherwise(-1))
         .withColumn("agg_ratio", col("l_discount") * 10.0)
-      val low = (col("pred_dir") === 1 && col("agg_ratio") < 0.5) ||
-        (col("pred_dir") === -1 && col("agg_ratio") > 0.5)
-      val mid = col("agg_ratio") === 0.5
-      val high = (col("pred_dir") === 1 && col("agg_ratio") > 0.5) ||
-        (col("pred_dir") === -1 && col("agg_ratio") < 0.5)
-      def woi(cond: Column, name: String): Column = {
-        val num = sum(when(cond, col("l_extendedprice") *
-          (lit(1.0) - lit(2.0) * col("l_discount"))).otherwise(0.0))
-        val den = sum(when(cond, col("l_extendedprice")).otherwise(0.0))
-        r6(num / when(den =!= 0.0, den)).as(name)
-      }
-      li.groupBy(col("l_returnflag")).agg(
-        woi(low, "oi_agg_low_micro"), woi(mid, "oi_agg_mid_micro"),
-        woi(high, "oi_agg_high_micro"))
+      lineitemBucketOi(li,
+        Imbalance.aggBuckets(col("pred_dir"), col("agg_ratio")))
     },
       s"""WITH t AS (
          |  SELECT l_returnflag, l_extendedprice, l_discount,

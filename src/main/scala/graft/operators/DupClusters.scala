@@ -86,13 +86,10 @@ object DupClusters {
     * far under any sane driver heap — while the star-contraction rounds
     * they replace cost 6-8 shuffle+checkpoint rounds of pure scheduler
     * overhead at that size (measured 3.3 s / 43 jobs on a 394-edge input
-    * at sf0.1). Override with -Dgraft.ccDriverMaxEdges; 0 disables.
-    * `graft.noSmallInputFastPaths=1` (ScaleBench) also disables it so
-    * committed growth laws keep measuring the distributed path. */
-  private def ccDriverMaxEdges: Long =
-    if (graft.core.Par.fastPathsOff) 0L
-    else sys.props.get("graft.ccDriverMaxEdges").map(_.toLong)
-      .getOrElse(1L << 20)
+    * at sf0.1). `graft.noSmallInputFastPaths=1` (ScaleBench) disables
+    * the fast path so committed growth laws keep measuring the
+    * distributed path. */
+  private val CcDriverMaxEdges: Long = 1L << 20
 
   /** Driver union-find with min-id roots over a COLLECTED edge list —
     * the small-input fast path of [[connectedComponents]]. Pointing the
@@ -134,7 +131,7 @@ object DupClusters {
     *
     * Small inputs take a driver union-find fast path: the initial
     * distinct+checkpoint already materializes the edge set and counts it
-    * (the checksum), so when the count is within [[ccDriverMaxEdges]]
+    * (the checksum), so when the count is within [[CcDriverMaxEdges]]
     * and the endpoints are integral, the edges collect to the driver and
     * label in microseconds instead of paying O(log n) star-contraction
     * rounds of shuffle+checkpoint machinery — the same bounded
@@ -163,7 +160,8 @@ object DupClusters {
         case ByteType | ShortType | IntegerType | LongType => true
         case _ => false
       })
-      if (!converged && integral && prev._1 <= ccDriverMaxEdges) {
+      if (!converged && integral && !graft.core.Par.fastPathsOff &&
+          prev._1 <= CcDriverMaxEdges) {
         val collected = edges
           .select(col("u").cast("long"), col("v").cast("long"))
           .collect().map(r => (r.getLong(0), r.getLong(1)))

@@ -31,6 +31,11 @@ object Graph {
   /** 1.0 of rank mass, in integer pico-units. */
   val Pico: Long = 1000000000000L
 
+  /** Edge-count ceilings for the PageRank and k-core driver fast paths
+    * (sizing arithmetic at each use). */
+  private val PrDriverMaxEdges: Long = 1L << 21
+  private val KcoreDriverMaxEdges: Long = 1L << 21
+
   /** Result of a [[pageRankRun]]: the rank frame plus how many
     * iterations actually ran (== the requested count unless convergence
     * stopped it early) and the final L1 rank delta in pico-units (None
@@ -157,18 +162,14 @@ object Graph {
     // edge count (~5 jobs x iterations for a graph that fits in one
     // task). Same bounded size-probed pattern as the CC union-find and
     // ANN brute-path guards; `graft.noSmallInputFastPaths=1`
-    // (ScaleBench) and -Dgraft.prDriverMaxEdges=0 disable it, so
-    // committed growth laws keep measuring the 100 TB code shape. The
+    // (ScaleBench) disables it, so committed growth laws keep
+    // measuring the 100 TB code shape. The
     // count probe reads the checkpointed blocks — no recompute. Cap:
     // 2^21 edges hold 4 longs each in primitive arrays (~64 MB steady,
     // ~200 MB transient during the collect) — bounded well under the
     // 8g bench / 16g protocol heaps, while a graph this size fits in
     // ONE task and pays ~5 scheduler jobs per iteration distributed.
-    val prCap: Long =
-      if (graft.core.Par.fastPathsOff) 0L
-      else sys.props.get("graft.prDriverMaxEdges").map(_.toLong)
-        .getOrElse(1L << 21)
-    if (prCap > 0L && eDeg.count() <= prCap) {
+    if (!graft.core.Par.fastPathsOff && eDeg.count() <= PrDriverMaxEdges) {
       val isSeedCol = seedPred.map(p => p(col("node"))).getOrElse(lit(true))
       val nodeRows = nodes
         .select(col("node"), col("__out"), isSeedCol.as("__seed"))
@@ -380,13 +381,10 @@ object Graph {
     // checkpointed and counted) adjacency reproduces the result
     // exactly — while each distributed peel round pays a
     // groupBy + two semi-joins + checkpoint of scheduler machinery.
-    // Same bounded probed pattern and switches as the PageRank and CC
+    // Same bounded probed pattern and switch as the PageRank and CC
     // fast paths; ScaleBench pins it off.
-    val kcCap: Long =
-      if (graft.core.Par.fastPathsOff) 0L
-      else sys.props.get("graft.kcoreDriverMaxEdges").map(_.toLong)
-        .getOrElse(1L << 21)
-    if (nEdges > 0L && nEdges <= kcCap) {
+    if (!graft.core.Par.fastPathsOff && nEdges > 0L &&
+        nEdges <= KcoreDriverMaxEdges) {
       val rows = adj.collect()
       graft.core.Lineage.unpersistCheckpoint(adj)
       var cur: Array[(Long, Long)] =

@@ -5,10 +5,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode}
 
+import graft.operators.Imbalance
+
 /** Structured-Streaming face of the OI family (SURVEY §2.10): the
   * reference is pure batch, but its time-bucketed OI is tumbling-window
-  * shaped, so the same conditional-sum aggregation runs over a stream with
-  * watermarked event time. "Drop the last incomplete bin"
+  * shaped, so the same conditional-sum aggregation (`Imbalance.oiColumn`)
+  * runs over a stream with watermarked event time. "Drop the last
+  * incomplete bin"
   * (`/root/reference/order_imbalance.py:324`) becomes emit-on-window-close
   * (append mode); J5 densification is a batch-side concern.
   *
@@ -26,14 +29,10 @@ object StreamingOi {
                  timeCol: String = "event_time",
                  side: Column = col("direction"),
                  size: Column = col("size")): DataFrame = {
-    val buy = sum(when(side === -1, size).otherwise(lit(0L)))
-    val sell = sum(when(side === 1, size).otherwise(lit(0L)))
     events
       .withWatermark(timeCol, watermark)
       .groupBy(window(col(timeCol), delta), col("ticker"))
-      .agg(((buy - sell) / when(buy + sell =!= 0, buy + sell))
-        .as("order_imbalance"),
-        count(lit(1)).as("n_events"))
+      .agg(Imbalance.oiColumn(side, size), count(lit(1)).as("n_events"))
       .select(col("window.start").as("bin_start"),
         col("window.end").as("bin_end"), col("ticker"),
         col("order_imbalance"), col("n_events"))

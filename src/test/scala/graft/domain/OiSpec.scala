@@ -1,5 +1,6 @@
 package graft.domain
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.fixtures.LobsterFixture
@@ -130,4 +131,164 @@ class OiSpec extends SparkSpec {
     assert(vis >= -1.0 && vis <= 1.0)
     // _ib may be null (no icebergs beyond the triplet's tagged events)
   }
+  // --- brute-force differential: every kind, every output column ---
+
+  /** One generated event; `aggRatio`/`predDir` may be null (no bucket). */
+  private case class Ev(ticker: String, day: java.time.LocalDate,
+      timeS: Double, eventType: Int, direction: Int, size: Long,
+      price: Long, seq: Long, mid: Double, wmp: Double, prob: Double,
+      predDir: java.lang.Integer, aggRatio: java.lang.Double) {
+    // same arithmetic as Oi.tsNs
+    val tsNs: Long = day.toEpochDay * 86400L * Oi.NsPerSec +
+      (timeS * 1e9).toLong
+  }
+
+  /** 2 tickers x 2 days: submits, deletes, visible and hidden execs at a
+    * few shared prices (so submits land near execs), zero-size rows,
+    * submits planted 0.5 / 1.0 / 1.2 ms after some visible execs, ties in
+    * size for the terciles, and agg_ratio exactly 0.5 or null. */
+  private lazy val diffEvents: Seq[Ev] = {
+    val rng = new scala.util.Random(2024)
+    var seq = 0L
+    val out = Seq.newBuilder[Ev]
+    for (t <- Seq("AAA", "BBB");
+         d <- Seq(java.time.LocalDate.of(2012, 6, 21),
+           java.time.LocalDate.of(2012, 6, 22))) {
+      var ts = 36000.0 + rng.nextDouble() * 60
+      def add(tS: Double, typ: Int, px: Long): Unit = {
+        seq += 1
+        val size = if (rng.nextInt(30) == 0) 0L else 1L + rng.nextInt(12)
+        val ratio: java.lang.Double = rng.nextInt(6) match {
+          case 0 => null
+          case 1 => 0.5
+          case k => Seq(0.0, 0.25, 0.75, 1.2)(k - 2)
+        }
+        val dir: java.lang.Integer =
+          if (rng.nextInt(15) == 0) null else if (rng.nextBoolean()) 1 else -1
+        out += Ev(t, d, tS, typ, if (rng.nextBoolean()) 1 else -1, size, px,
+          seq, 100 + rng.nextDouble(), 100 + rng.nextDouble(),
+          ((seq * 37) % 11) / 10.0, dir, ratio)
+      }
+      for (_ <- 1 to 160) {
+        ts += 0.001 + rng.nextDouble() * 25
+        val px = 10000L + 100L * rng.nextInt(4)
+        val typ = Seq(1, 1, 3, 4, 4, 4, 5, 5, 5)(rng.nextInt(9))
+        add(ts, typ, px)
+        if (typ == 4 && rng.nextInt(3) == 0)
+          add(ts + Seq(0.0005, 0.001, 0.0012)(rng.nextInt(3)), 1, px)
+      }
+    }
+    out.result()
+  }
+
+  private lazy val diffFrame = {
+    val rows = diffEvents.map(e => Row(e.ticker, java.sql.Date.valueOf(e.day),
+      e.timeS, e.eventType, e.direction, e.size, e.price, e.seq, e.mid,
+      e.wmp, e.prob, e.predDir, e.aggRatio))
+    df("ticker STRING, date DATE, time_s DOUBLE, event_type INT, " +
+      "direction INT, size BIGINT, price BIGINT, seq BIGINT, " +
+      "midprice DOUBLE, weighted_mp DOUBLE, pred_prob DOUBLE, " +
+      "pred_dir INT, agg_ratio DOUBLE",
+      new scala.util.Random(7).shuffle(rows): _*)
+  }
+
+  /** Driver-side reference panel: (ticker, date, bin_ns) -> column ->
+    * value, None where the reference has zero volume. */
+  private def brutePanel(kind: String, deltaNs: Long)
+      : Map[(String, Long, Long), Map[String, Option[Double]]] = {
+    def bin(e: Ev): Long =
+      if (deltaNs <= 0) e.day.toEpochDay * 86400L * Oi.NsPerSec
+      else e.tsNs + Math.floorMod(-e.tsNs, deltaNs)
+    def ratio(num: Double, den: Double): Option[Double] =
+      if (den == 0.0) None else Some(num / den)
+    def signed(es: Seq[Ev]): Option[Double] = {
+      val buy = es.filter(_.direction == -1).map(_.size.toDouble).sum
+      val sell = es.filter(_.direction == 1).map(_.size.toDouble).sum
+      ratio(buy - sell, buy + sell)
+    }
+    def weighted(es: Seq[Ev], p: Ev => Double): Option[Double] =
+      ratio(es.map(e => e.size * (1 - 2 * p(e))).sum, es.map(_.size).sum)
+    val vis = diffEvents.filter(_.eventType == 4)
+    val hid = diffEvents.filter(_.eventType == 5)
+    // J3: a submit at the same (ticker, price) within [t, t + 1 ms]
+    def iceberg(e: Ev): Boolean = diffEvents.exists(s => s.eventType == 1 &&
+      s.ticker == e.ticker && s.price == e.price &&
+      s.tsNs >= e.tsNs && s.tsNs - e.tsNs <= 1000000L)
+    // Spark `percentile`: linear interpolation between closest ranks
+    def pct(xs: Seq[Double], p: Double): Double = {
+      val s = xs.sorted; val pos = (s.size - 1) * p
+      val (lo, hi) = (math.floor(pos).toInt, math.ceil(pos).toInt)
+      if (lo == hi) s(lo) else (hi - pos) * s(lo) + (pos - lo) * s(hi)
+    }
+    val terciles = hid.groupBy(e => (e.ticker, e.day)).map { case (k, es) =>
+      k -> (pct(es.map(_.size.toDouble), 1.0 / 3),
+        pct(es.map(_.size.toDouble), 2.0 / 3))
+    }
+    def tercile(e: Ev) = terciles((e.ticker, e.day))
+    def low(e: Ev) = e.predDir != null && e.aggRatio != null &&
+      ((e.predDir == 1 && e.aggRatio < 0.5) ||
+        (e.predDir == -1 && e.aggRatio > 0.5))
+    def high(e: Ev) = e.predDir != null && e.aggRatio != null &&
+      ((e.predDir == 1 && e.aggRatio > 0.5) ||
+        (e.predDir == -1 && e.aggRatio < 0.5))
+    val (rows, ois): (Seq[Ev], Seq[Ev] => Seq[(String, Option[Double])]) =
+      kind match {
+        case "vis" => (vis, es => Seq("order_imbalance_vis" -> signed(es)))
+        case "hid" =>
+          (hid, es => Seq("order_imbalance_hid" -> weighted(es, _.prob)))
+        case "all" => (diffEvents.filter(e => e.eventType == 4 ||
+            e.eventType == 5), es => Seq("order_imbalance_all" -> weighted(es,
+            e => if (e.eventType == 5) e.prob
+                 else if (e.direction == -1) 0.0 else 1.0)))
+        case "iceberg" => (vis, es => Seq(
+          "order_imbalance_vis" -> signed(es.filterNot(iceberg)),
+          "order_imbalance_ib" -> signed(es.filter(iceberg))))
+        case "size" => (hid, es => Seq(
+          "order_imbalance_small" ->
+            weighted(es.filter(e => e.size < tercile(e)._1), _.prob),
+          "order_imbalance_medium" -> weighted(es.filter(e =>
+            e.size >= tercile(e)._1 && e.size <= tercile(e)._2), _.prob),
+          "order_imbalance_large" ->
+            weighted(es.filter(e => e.size > tercile(e)._2), _.prob)))
+        case "agg" => (hid, es => Seq(
+          "order_imbalance_agg_low" -> weighted(es.filter(low), _.prob),
+          "order_imbalance_agg_mid" -> weighted(es.filter(e =>
+            e.aggRatio != null && e.aggRatio == 0.5), _.prob),
+          "order_imbalance_agg_high" -> weighted(es.filter(high), _.prob)))
+      }
+    rows.groupBy(e => (e.ticker, e.day.toEpochDay, bin(e))).map {
+      case (k, es) =>
+        val first = es.minBy(_.seq); val last = es.maxBy(_.seq)
+        k -> (ois(es) ++ Seq("first_midprice" -> Some(first.mid),
+          "last_midprice" -> Some(last.mid),
+          "first_weighted_mp" -> Some(first.wmp),
+          "last_weighted_mp" -> Some(last.wmp))).toMap
+    }
+  }
+
+  for (kind <- Seq("vis", "hid", "all", "iceberg", "size", "agg"))
+    test(s"$kind panel vs driver-side brute force at 5 min and daily") {
+      for (delta <- Seq(M5, 0L)) {
+        val expect = brutePanel(kind, delta)
+        val p = Oi.panel(diffFrame, delta, kind)
+        val valueCols = p.columns.drop(3).toSeq
+        assert(valueCols.toSet == expect.head._2.keySet, s"$kind columns")
+        val got = p.collect().map { r =>
+          (r.getString(0), r.getDate(1).toLocalDate.toEpochDay,
+            r.getLong(2)) -> valueCols.map(c => c ->
+            (if (r.isNullAt(r.fieldIndex(c))) None
+             else Some(r.getAs[Double](c)))).toMap
+        }.toMap
+        assert(got.keySet == expect.keySet, s"$kind delta=$delta bins")
+        for ((k, cols) <- expect; (c, v) <- cols)
+          (got(k)(c), v) match {
+            case (Some(a), Some(e)) => assertApprox(a, e, 1e-12)
+            case (None, None) =>
+            case other => fail(s"$kind delta=$delta $k $c: $other")
+          }
+        if (delta == M5 && kind != "vis" && kind != "hid" && kind != "all")
+          assert(expect.values.exists(_.values.exists(_.isEmpty)),
+            s"$kind: no zero-volume bucket, the NULL rule is untested")
+      }
+    }
 }

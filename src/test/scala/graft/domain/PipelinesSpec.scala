@@ -21,6 +21,15 @@ class PipelinesSpec extends SparkSpec {
     assert(fit.r2 >= 0.0 && fit.r2 <= 1.0)
   }
 
+  test("EP1 rejects kinds without exactly one OI column, naming the rest") {
+    for (kind <- Seq("iceberg", "size", "agg", "nope")) {
+      val e = intercept[IllegalArgumentException](
+        Pipelines.ep1(prepped, 5L * 60 * 1000000000L, kind))
+      assert(e.getMessage.contains(s"'$kind'") &&
+        e.getMessage.contains("all, hid, vis"), e.getMessage)
+    }
+  }
+
   test("EP1 multi-delta fan-out computes panels per delta off one frame") {
     val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val m = Pipelines.ep1MultiDelta(prepped,

@@ -68,39 +68,42 @@ class DifferentialSpec extends SparkSpec {
   }
 
   test("size-tercile bucket OI vs brute force (pandas-interpolated terciles)") {
+    // A4 through the production path, Oi.panel("size"): hidden execs of
+    // one ticker-day, daily bin, weighted OI per tercile bucket
     val rng = new scala.util.Random(77)
     val evs = (1 to 90).map(i =>
-      (i.toLong, if (rng.nextBoolean()) -1 else 1,
-        (1 + rng.nextInt(500)).toDouble))
-    val d = df("id BIGINT, side INT, size DOUBLE",
+      (i.toLong, rng.nextInt(11) / 10.0, (1 + rng.nextInt(500)).toLong))
+    val d = df("seq BIGINT, pred_prob DOUBLE, size BIGINT",
       evs.map(e => Row(e._1, e._2, e._3)): _*)
-      .withColumn("k", lit("g")).withColumn("bin", lit(1L))
-    val got = Imbalance.sizeBucketOi(d, Seq("k"), Seq(col("bin")),
-      col("side"), "size").collect()(0)
+      .withColumn("ticker", lit("T"))
+      .withColumn("date", lit(java.sql.Date.valueOf("2012-06-21")))
+      .withColumn("time_s", col("seq").cast("double") + 36000.0)
+      .withColumn("event_type", lit(5))
+      .withColumn("midprice", lit(1.0)).withColumn("weighted_mp", lit(1.0))
+    val got = graft.domain.Oi.panel(d, 0L, "size").collect()
+    assert(got.length == 1)
     // brute force with linear-interpolated terciles (matches Spark
     // `percentile` == pandas quantile)
-    val sizes = evs.map(_._3).sorted
+    val sizes = evs.map(_._3.toDouble).sorted
     def q(p: Double): Double = {
       val h = (sizes.size - 1) * p
       val lo = sizes(h.toInt); val hi = sizes(math.ceil(h).toInt)
       lo + (hi - lo) * (h - math.floor(h))
     }
     val (q1, q2) = (q(1.0 / 3.0), q(2.0 / 3.0))
-    def oi(es: Seq[(Long, Int, Double)]): Option[Double] = {
-      val buy = es.filter(_._2 == -1).map(_._3).sum
-      val sell = es.filter(_._2 == 1).map(_._3).sum
-      if (buy + sell == 0) None else Some((buy - sell) / (buy + sell))
-    }
+    def woi(es: Seq[(Long, Double, Long)]): Double =
+      es.map(e => e._3 * (1 - 2 * e._2)).sum / es.map(_._3).sum
     // reference boundaries (order_imbalance.py:440-448): strict < q1,
     // [q1, q2] inclusive, > q2
     val small = evs.filter(_._3 < q1)
     val medium = evs.filter(e => e._3 >= q1 && e._3 <= q2)
     val large = evs.filter(_._3 > q2)
-    assertApprox(got.getAs[Double]("order_imbalance_small"),
-      oi(small).get, 1e-12)
-    assertApprox(got.getAs[Double]("order_imbalance_medium"),
-      oi(medium).get, 1e-12)
-    assertApprox(got.getAs[Double]("order_imbalance_large"),
-      oi(large).get, 1e-12)
+    assert(small.nonEmpty && medium.nonEmpty && large.nonEmpty)
+    assertApprox(got(0).getAs[Double]("order_imbalance_small"), woi(small),
+      1e-12)
+    assertApprox(got(0).getAs[Double]("order_imbalance_medium"),
+      woi(medium), 1e-12)
+    assertApprox(got(0).getAs[Double]("order_imbalance_large"), woi(large),
+      1e-12)
   }
 }

@@ -145,14 +145,13 @@ class DupClustersSpec extends SparkSpec {
     assert(fast == bruteForce(edges))
   }
 
-  test("graft.ccDriverMaxEdges=0 forces the distributed path (the " +
-    "ScaleBench contract); labels unchanged") {
+  test("fast paths off takes the distributed path; labels unchanged") {
     val p = pairs(1L -> 2L, 2L -> 3L, 10L -> 11L)
     val dist =
       try {
-        System.setProperty("graft.ccDriverMaxEdges", "0")
+        System.setProperty("graft.noSmallInputFastPaths", "1")
         labelsOf(p)
-      } finally System.clearProperty("graft.ccDriverMaxEdges")
+      } finally System.clearProperty("graft.noSmallInputFastPaths")
     assert(dist ==
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
   }

@@ -481,13 +481,6 @@ class GraphSpec extends SparkSpec {
         all()
       } finally System.clearProperty("graft.noSmallInputFastPaths")
     assert(fast == dist)
-    // -Dgraft.prDriverMaxEdges=0 also forces the distributed path
-    val dist2 =
-      try {
-        System.setProperty("graft.prDriverMaxEdges", "0")
-        snap(Graph.pageRankRun(g, "src", "dst", iterations = 6))
-      } finally System.clearProperty("graft.prDriverMaxEdges")
-    assert(dist2 == fast.head)
   }
 
   test("pageRank: all-dangling graph (no second-hop edges) keeps " +

@@ -42,8 +42,8 @@ class ImbalanceSpec extends SparkSpec {
     // p=0 -> weight 1 (buy), p=1 -> weight -1 (sell), p=.5 -> 0
     val d = df("bin BIGINT, p DOUBLE, size DOUBLE",
       Row(1L, 0.0, 10.0), Row(1L, 1.0, 10.0), Row(1L, 0.5, 20.0))
-    val aggs = Imbalance.weightedOiColumns(col("p"), col("size"))
-    val out = d.groupBy(col("bin")).agg(aggs.head, aggs.tail: _*)
+    val out = d.groupBy(col("bin"))
+      .agg(Imbalance.weightedOiColumn(col("p"), col("size")))
       .collect()(0).getDouble(1)
     assertApprox(out, 0.0) // 10*1 + 10*(-1) + 20*0 = 0
   }
@@ -52,32 +52,47 @@ class ImbalanceSpec extends SparkSpec {
     val d = df("bin BIGINT, side INT, size DOUBLE, flag INT",
       Row(1L, -1, 10.0, 0), Row(1L, 1, 10.0, 0),  // vis: balanced -> 0
       Row(1L, -1, 20.0, 1))                       // ib: all buy -> 1
-    val r = Imbalance.splitOrderImbalance(d, Seq(col("bin")), col("side"),
-      col("size"), col("flag")).collect()(0)
-    assertApprox(r.getDouble(1), 0.0)
-    assertApprox(r.getDouble(2), 1.0)
+    def oi(sfx: String, flag: Int) = Imbalance.oiColumn(col("side"),
+      col("size"), sfx, col("flag") === flag)
+    val r = d.groupBy(col("bin")).agg(oi("_vis", 0), oi("_ib", 1))
+      .collect()(0)
+    assertApprox(r.getAs[Double]("order_imbalance_vis"), 0.0)
+    assertApprox(r.getAs[Double]("order_imbalance_ib"), 1.0)
+  }
+
+  /** A4: tag by per-key terciles, then weighted OI per size bucket. */
+  private def weightedBucketOi(d: org.apache.spark.sql.DataFrame) = {
+    val ois = Imbalance.sizeBuckets(col("size")).map { case (b, c) =>
+      Imbalance.weightedOiColumn(col("p"), col("size"), s"_$b", c) }
+    Imbalance.tagSizeTerciles(d, Seq("k"), col("size"))
+      .groupBy(col("k")).agg(ois.head, ois.tail: _*)
   }
 
   test("A4 size-tercile OI buckets rows by exact per-key terciles") {
     // sizes 1..9 for key a: terciles at 3.67/6.33 -> small {1,2,3},
-    // medium {4,5,6}, large {7,8,9}; all buys -> OI 1 in each bucket
-    val rows = (1 to 9).map(i => Row("a", 1L, -1, i.toDouble))
-    val d = df("k STRING, bin BIGINT, side INT, size DOUBLE", rows: _*)
-    val out = Imbalance.sizeBucketOi(d, Seq("k"), Seq(col("bin")),
-      col("side"), "size").collect()(0)
+    // medium {4,5,6}, large {7,8,9}; all buys (p 0) -> OI 1 in each
+    val rows = (1 to 9).map(i => Row("a", 0.0, i.toDouble))
+    val d = df("k STRING, p DOUBLE, size DOUBLE", rows: _*)
+    val out = weightedBucketOi(d).collect()(0)
     assertApprox(out.getDouble(1), 1.0)
     assertApprox(out.getDouble(2), 1.0)
     assertApprox(out.getDouble(3), 1.0)
   }
 
   test("A4 buckets have expected membership counts") {
-    val rows = (1 to 9).map(i =>
-      Row("a", 1L, if (i <= 3) -1 else 1, i.toDouble))
-    val d = df("k STRING, bin BIGINT, side INT, size DOUBLE", rows: _*)
-    // small bucket = sizes 1,2,3, all side -1 -> OI 1; large = 7,8,9 all
-    // side +1 -> OI -1
-    val out = Imbalance.sizeBucketOi(d, Seq("k"), Seq(col("bin")),
-      col("side"), "size").collect()(0)
+    // key a: sizes 1..9 -> {1,2,3} {4,5,6} {7,8,9}; key b: sizes 1..7 put
+    // the terciles exactly on 3 and 5, which the medium bucket includes
+    // -> {1,2} {3,4,5} {6,7}
+    val rows = (1 to 9).map(i => Row("a", if (i <= 3) 0.0 else 1.0,
+      i.toDouble)) ++ (1 to 7).map(i => Row("b", 0.0, i.toDouble))
+    val d = df("k STRING, p DOUBLE, size DOUBLE", rows: _*)
+    val n = Imbalance.sizeBuckets(col("size")).map(b => count(when(b._2, 1)))
+    val counts = Imbalance.tagSizeTerciles(d, Seq("k"), col("size"))
+      .groupBy(col("k")).agg(n.head, n.tail: _*)
+      .collect().map(r => r.getString(0) -> (1 to 3).map(r.getLong)).toMap
+    assert(counts == Map("a" -> Seq(3L, 3L, 3L), "b" -> Seq(2L, 3L, 2L)))
+    // small = sizes 1,2,3 all p 0 -> OI 1; large = 7,8,9 all p 1 -> OI -1
+    val out = weightedBucketOi(d).filter(col("k") === "a").collect()(0)
     assertApprox(out.getDouble(1), 1.0)
     assertApprox(out.getDouble(3), -1.0)
   }
