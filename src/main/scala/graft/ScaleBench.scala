@@ -157,7 +157,7 @@ object ScaleBench {
     try f finally s.conf.set(key, prev)
   }
 
-  private def entries: Seq[(String, (SparkSession, String, Int) => DataFrame,
+  private[graft] def entries: Seq[(String, (SparkSession, String, Int) => DataFrame,
       String)] = {
     def q(name: String): (SparkSession, String, Int) => DataFrame =
       (s, dir, _) => SparkEntry.queries(name)(s, dir)

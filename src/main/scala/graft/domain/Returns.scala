@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * single session's DataFrame), so the last bin of day d has a null
   * future return, never the overnight jump into day d+1. Intraday
   * predictive regressions must not see overnight moves in the target.
-  * Set `perDay = false` only for genuinely daily panels (one row per
-  * (ticker, date)) where the next-day lead IS the intended semantics.
+  * Only [[addLogReturns]] on a genuinely daily panel (`deltaNs <= 0`)
+  * leads per ticker, where the next-day lead IS the intended semantics.
   */
 object Returns {
 
@@ -25,9 +25,6 @@ object Returns {
     .orderBy(col("bin_ns"))
   private def byTickerDay = Window.partitionBy(col("ticker"), col("date"))
     .orderBy(col("bin_ns"))
-
-  private def futWindow(perDay: Boolean) =
-    if (perDay) byTickerDay else byTicker
 
   /** Log return over the bin (last/first midprice) plus contemporaneous
     * and next-bin (future) returns (`order_imbalance.py:90-93`).
@@ -41,25 +38,13 @@ object Returns {
   def addLogReturns(panel: DataFrame,
                     firstCol: String = "first_midprice",
                     lastCol: String = "last_midprice",
-                    perDay: Boolean = true,
                     deltaNs: Long = 1L): DataFrame = {
-    val w = futWindow(perDay && deltaNs > 0)
+    val w = if (deltaNs > 0) byTickerDay else byTicker
     panel
       .withColumn("log_ret",
         when(col(firstCol) > 0 && col(lastCol) > 0,
           log(col(lastCol) / col(firstCol))))
       .withColumn("fut_log_ret", lead(col("log_ret"), 1).over(w))
-  }
-
-  /** Weighted-midprice returns (same shape on weighted_mp columns). */
-  def addWeightedReturns(panel: DataFrame,
-                         perDay: Boolean = true): DataFrame = {
-    val w = futWindow(perDay)
-    panel
-      .withColumn("w_log_ret",
-        when(col("first_weighted_mp") > 0 && col("last_weighted_mp") > 0,
-          log(col("last_weighted_mp") / col("first_weighted_mp"))))
-      .withColumn("fut_w_log_ret", lead(col("w_log_ret"), 1).over(w))
   }
 
   /** Market-excess return vs the SPY bins table (S6:
@@ -68,15 +53,14 @@ object Returns {
     * SPY row get a NULL excess return (the reference's pandas alignment
     * yields NaN there, dropping the row from downstream regressions —
     * market return is unknown, not zero). */
-  def addExcessVsSpy(panel: DataFrame, spyBins: DataFrame,
-                     perDay: Boolean = true): DataFrame = {
+  def addExcessVsSpy(panel: DataFrame, spyBins: DataFrame): DataFrame = {
     val spy = spyBins.select(col("bin_ns"),
       when(col("first_midprice") > 0 && col("last_midprice") > 0,
         log(col("last_midprice") / col("first_midprice"))).as("spy_ret"))
     panel.join(broadcast(spy), Seq("bin_ns"), "left")
       .withColumn("excess_ret", col("log_ret") - col("spy_ret"))
       .withColumn("fut_excess_ret",
-        lead(col("excess_ret"), 1).over(futWindow(perDay)))
+        lead(col("excess_ret"), 1).over(byTickerDay))
   }
 
   /** J6: broadcast-join Fama-French factors on date

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Stats
+import graft.operators.Regression
 
 /** Trading-strategy operators (SURVEY §2.9 M8/M10-M12, §2.8 F8/F9;
   * `/root/reference/trading_strategy.py`).
@@ -77,30 +78,22 @@ object Strategy {
     * day d's rows => signal (`trading_strategy.py:138-245`).
     *
     * Fully distributed, ONE plan, zero driver loops: the OLS normal
-    * equations are additive in the X'X / X'y power sums, so
+    * equations are additive in the moment sums, so
     *   1. one map-side-combinable groupBy(date) reduces the panel to one
-    *      row of k(k+1)/2 + k + 1 sums per day;
+    *      row of [[graft.operators.Regression.moments]] per day;
     *   2. a rolling window over the tiny day-level frame sums the previous
     *      `lookback` days' moments (the unpartitioned window is fine: its
     *      input is |days| rows — ~250/year — no matter the panel size);
-    *   3. a per-day (k+1)x(k+1) solve (commons-math QR, same as
-    *      [[graft.operators.Regression.olsByGroup]]) runs as a UDF on that
-    *      day frame;
+    *   3. [[graft.operators.Regression.solve]] (the rule `olsByGroup`
+    *      fits with) runs per day as a UDF on that day frame;
     *   4. the day->beta table broadcast-joins back onto the panel.
     * At 100x the panel only step 1 touches the data; steps 2-4 stay
     * O(days). Days whose trailing X'X is singular yield a null signal. */
   def rollingRefitSignals(panel: DataFrame, y: String, xs: Seq[String],
                           lookback: Int): DataFrame = {
     val k = xs.size
-    val cols: Seq[Column] = lit(1.0) +: xs.map(c => col(c).cast("double"))
-    val yc = col(y).cast("double")
-    val momentNames =
-      (for (i <- 0 to k; j <- i to k) yield s"xx_${i}_$j") ++
-        (0 to k).map(i => s"xy_$i")
-    var dayAggs = Seq.empty[Column]
-    for (i <- 0 to k; j <- i to k)
-      dayAggs :+= sum(cols(i) * cols(j)).as(s"xx_${i}_$j")
-    for (i <- 0 to k) dayAggs :+= sum(cols(i) * yc).as(s"xy_$i")
+    val names = Regression.momentNames(k)
+    val dayAggs = Regression.moments(y, xs)
     val daySums = panel.groupBy(col("date"))
       .agg(dayAggs.head, dayAggs.tail: _*)
 
@@ -111,55 +104,17 @@ object Strategy {
     val w = Window.partitionBy(lit(0))
       .orderBy(col("date")).rowsBetween(-lookback, -1)
     // null day-moments (all-null regressor day) roll up like the single-pass
-    // sum would: skipped by sum, 0.0 into the solve (olsByGroup's getAs)
+    // sum would: skipped by sum, 0.0 into the solve (as in olsByGroup)
     val rolled = daySums.select(
       (col("date") +:
-        momentNames.map(m => coalesce(sum(col(m)).over(w), lit(0.0)).as(m)) :+
+        names.map(m => coalesce(sum(col(m)).over(w), lit(0.0)).as(m)) :+
         count(lit(1)).over(w).as("__train_days")): _*)
       .filter(col("__train_days") === lookback)
 
-    val solve = udf((xxFlat: Seq[Double], xyFlat: Seq[Double]) => {
-      import org.apache.commons.math3.linear._
-      val p = xyFlat.size
-      if (p == 2) {
-        // single-regressor fast path: the SAME normalized-determinant
-        // guard and Cramer solve as the q_ep2_full DuckDB twin, in the
-        // same IEEE operation order — so the drop/keep decision AND the
-        // betas of a borderline-conditioned window are bit-identical
-        // across engines (a QR rDiag threshold and a determinant test
-        // are different criteria and can disagree at the boundary).
-        val n = xxFlat(0); val sx = xxFlat(1); val sxx = xxFlat(2)
-        val det = n * sxx - sx * sx
-        if (!(det > 1e-9 * (n * sxx + sx * sx))) null
-        else Seq((xyFlat(0) * sxx - sx * xyFlat(1)) / det,
-          (n * xyFlat(1) - sx * xyFlat(0)) / det)
-      } else {
-        val m = new Array2DRowRealMatrix(p, p)
-        var idx = 0
-        var maxAbs = 0.0
-        for (i <- 0 until p; j <- i until p) {
-          m.setEntry(i, j, xxFlat(idx)); m.setEntry(j, i, xxFlat(idx))
-          maxAbs = math.max(maxAbs, math.abs(xxFlat(idx)))
-          idx += 1
-        }
-        try {
-          // RELATIVE singularity threshold: the default exact-zero rDiag
-          // check only rejects bitwise-collinear windows, so a constant
-          // regressor whose determinant is pure fp summation noise would
-          // "solve" to garbage-huge betas — and which side of zero that
-          // noise lands on is engine-dependent (a latent oracle
-          // divergence). 1e-9 x the matrix scale drops anything
-          // conditioned worse than ~1e9, far above fp noise (~1e-16)
-          val beta = new QRDecomposition(m, 1e-9 * maxAbs).getSolver
-            .solve(new ArrayRealVector(xyFlat.toArray))
-          (0 until p).map(beta.getEntry)
-        } catch { case _: Exception => null }
-      }
-    })
-    val xxArr = array((for (i <- 0 to k; j <- i to k)
-      yield col(s"xx_${i}_$j")): _*)
-    val xyArr = array((0 to k).map(i => col(s"xy_$i")): _*)
-    val betas = rolled.select(col("date"), solve(xxArr, xyArr).as("__beta"))
+    val solve = udf((m: Seq[Double]) =>
+      Regression.solve(m, k).map(_.beta.toSeq: Seq[Double]).orNull)
+    val betas = rolled.select(col("date"),
+      solve(array(names.map(col): _*)).as("__beta"))
 
     val signal = xs.zipWithIndex.foldLeft(element_at(col("__beta"), 1)) {
       case (acc, (x, i)) =>

@@ -103,13 +103,4 @@ object Stats {
     }
     pacf.toSeq
   }
-
-  /** Basic describe (A8): count/mean/std/min/max + exact quartiles. */
-  def describeColumns(x: Column, colName: String): Seq[Column] = Seq(
-    count(x).as(s"${colName}_count"),
-    avg(x).as(s"${colName}_mean"),
-    stddev_samp(x).as(s"${colName}_std"),
-    min(x).as(s"${colName}_min"),
-    percentile_approx(x, lit(0.5), lit(100000)).as(s"${colName}_p50_approx"),
-    max(x).as(s"${colName}_max"))
 }

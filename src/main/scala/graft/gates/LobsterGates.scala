@@ -911,32 +911,17 @@ object LobsterGates {
          |  ${R6("corr(value, l3)")} AS acf3_micro
          |FROM l GROUP BY 1""".stripMargin),
 
-    // --- M7: multi-regressor OLS (2 regressors + intercept) via power
-    //     sums; closed-form Cramer solve both sides ---
+    // --- M7: multi-regressor OLS (2 regressors + intercept) through
+    //     Regression.olsByGroup (power sums + QR); the oracle solves the
+    //     same normal equations by Cramer's rule ---
     Gate("q_m7_multi_ols", (s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val x1 = col("l_quantity"); val x2 = col("l_discount")
-      val y = col("l_extendedprice")
-      val g = li.groupBy(col("l_returnflag")).agg(
-        count(lit(1)).cast("double").as("n"),
-        sum(x1).as("s1"), sum(x2).as("s2"), sum(x1 * x1).as("s11"),
-        sum(x1 * x2).as("s12"), sum(x2 * x2).as("s22"),
-        sum(y).as("sy"), sum(x1 * y).as("s1y"), sum(x2 * y).as("s2y"))
-      // normal equations [n s1 s2; s1 s11 s12; s2 s12 s22] b = [sy s1y s2y]
-      val det = col("n") * (col("s11") * col("s22") - col("s12") * col("s12")) -
-        col("s1") * (col("s1") * col("s22") - col("s12") * col("s2")) +
-        col("s2") * (col("s1") * col("s12") - col("s11") * col("s2"))
-      val b0 = (col("sy") * (col("s11") * col("s22") - col("s12") * col("s12")) -
-        col("s1") * (col("s1y") * col("s22") - col("s12") * col("s2y")) +
-        col("s2") * (col("s1y") * col("s12") - col("s11") * col("s2y"))) / det
-      val b1 = (col("n") * (col("s1y") * col("s22") - col("s2y") * col("s12")) -
-        col("sy") * (col("s1") * col("s22") - col("s12") * col("s2")) +
-        col("s2") * (col("s1") * col("s2y") - col("s1y") * col("s2"))) / det
-      val b2 = (col("n") * (col("s11") * col("s2y") - col("s12") * col("s1y")) -
-        col("s1") * (col("s1") * col("s2y") - col("s1y") * col("s2")) +
-        col("sy") * (col("s1") * col("s12") - col("s11") * col("s2"))) / det
-      g.select(col("l_returnflag"), r6(b0).as("b0_micro"),
-        r6(b1).as("b1_micro"), r6(b2).as("b2_micro"))
+      val fits = Regression.olsByGroup(Tables.lineitem(s, dir),
+        "l_extendedprice", Seq("l_quantity", "l_discount"),
+        Seq("l_returnflag"))
+      import s.implicits._
+      fits.map(f => (f.group(0).asInstanceOf[String], micro(f.intercept),
+          micro(f.coefs(0)), micro(f.coefs(1))))
+        .toDF("l_returnflag", "b0_micro", "b1_micro", "b2_micro")
     },
       s"""WITH g AS (
          |  SELECT l_returnflag, COUNT(*)::DOUBLE AS n, SUM(l_quantity) AS s1,
@@ -992,7 +977,7 @@ object LobsterGates {
     //     `trading_strategy.py:347-464`): daily panel -> M8
     //     Strategy.rollingRefitSignals (pooled cross-sectional OLS of ret
     //     on OI over the previous 3 sessions, distributed power sums +
-    //     per-day QR solve) -> out-of-sample signal -> magnitude veto ->
+    //     per-day closed form) -> out-of-sample signal -> magnitude veto ->
     //     M11/W4 Strategy.portfolio (per-day rank, top/bottom 25% with
     //     sign agreement) -> daily long-short PnL on FORWARD returns (F9)
     //     -> one M10 Stats.sharpeColumns row. The DuckDB twin re-derives
@@ -1025,7 +1010,7 @@ object LobsterGates {
     },
       // EP2 composition: every CTE is an already-proven oracle fragment —
       // the M8 pooled rolling normal equations in closed form (the twin of
-      // rollingRefitSignals' power-sum + QR path), M11 portfolio
+      // rollingRefitSignals' power-sum + closed-form path), M11 portfolio
       // rank/top-bottom with pct sizing and sign agreement, M10 power-sum
       // Sharpe
       s"""WITH e AS ($EventsNs),
@@ -1105,7 +1090,6 @@ object LobsterGates {
         count(lit(1)).as("n_bins"),
         sum(when(col("log_ret").isNull, 1L).otherwise(0L)).as("n_empty"),
         r6(sum(col("order_imbalance_vis"))).as("oi_sum_micro"))
-      def micro(v: Double): Long = math.floor(v * 1e6 + 0.5).toLong
       import s.implicits._
       val fitDf = fits.map(f => (f.group(0).asInstanceOf[String],
           micro(f.intercept), micro(f.coefs(0)), f.n))
@@ -1114,7 +1098,7 @@ object LobsterGates {
     },
       // q_ep1_full twin: the EP1 panel chain (ep1PanelSql) + per-ticker
       // closed-form simple OLS of log_ret on OI — the same normal equations
-      // the Spark side solves via QR on distributed power sums
+      // and closed form the Spark side solves on distributed power sums
       s"""WITH e AS ($EventsNs),
          |${ep1PanelSql(900L)},
          |pagg AS (
@@ -1258,11 +1242,11 @@ object LobsterGates {
           avg(col("value")).as("ret"))
       val sig = daily.withColumn("signal",
         lit(0.5) + lit(2.0) * col("oi"))
-      sig.groupBy(col("user_id")).agg(
-        r6(sum(when(col("signal") > 0, col("ret")).otherwise(0.0)) -
-          sum(when(col("signal") < 0, col("ret")).otherwise(0.0)))
-          .as("pnl_thresh_micro"),
-        r6(sum(signum(col("signal")) * col("ret"))).as("pnl_sign_micro"))
+      val pnl = graft.domain.Strategy.pnlColumns(col("signal"), col("ret"))
+      sig.groupBy(col("user_id")).agg(pnl.head, pnl.tail: _*)
+        .select(col("user_id"),
+          r6(col("pnl_thresh")).as("pnl_thresh_micro"),
+          r6(col("pnl_sign")).as("pnl_sign_micro"))
     },
       s"""WITH e AS ($EventsNs),
          |daily AS (
@@ -1460,28 +1444,17 @@ object LobsterGates {
          |  AND p.ts_ns >= se.session_start AND p.ts_ns <= se.session_end
          |GROUP BY 1, 2, 3, 4""".stripMargin),
 
-    // --- M6: t-values + adjusted R^2 for the M5 simple OLS, closed-form
-    //     power sums on both sides (chunk_pipeline.py:201-243) ---
+    // --- M6: t-values + adjusted R^2 for the M5 simple OLS through
+    //     Regression.olsByGroup (chunk_pipeline.py:201-243); the oracle
+    //     spells the same closed form over power sums ---
     Gate("q_m6_tvalues", (s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val x = col("l_quantity"); val y = col("l_extendedprice")
-      val g = li.groupBy(col("l_returnflag")).agg(
-        count(lit(1)).cast("double").as("n"),
-        sum(x).as("sx"), sum(y).as("sy"), sum(x * x).as("sxx"),
-        sum(x * y).as("sxy"), sum(y * y).as("syy"))
-      val sxxC = col("sxx") - col("sx") * col("sx") / col("n")
-      val tss = col("syy") - col("sy") * col("sy") / col("n")
-      val slope = (col("sxy") - col("sx") * col("sy") / col("n")) / sxxC
-      val icept = (col("sy") - slope * col("sx")) / col("n")
-      val rss = col("syy") - icept * col("sy") - slope * col("sxy")
-      val sigma2 = rss / (col("n") - 2)
-      g.select(col("l_returnflag"),
-        r6(slope / sqrt(sigma2 / sxxC)).as("t_slope_micro"),
-        r6(icept / sqrt(sigma2 * col("sxx") / (col("n") * sxxC)))
-          .as("t_icept_micro"),
-        r6(lit(1.0) - (rss / tss) * (col("n") - 1) / (col("n") - 2))
-          .as("adj_r2_micro"),
-        col("n").cast("long").as("n"))
+      val fits = Regression.olsByGroup(Tables.lineitem(s, dir),
+        "l_extendedprice", Seq("l_quantity"), Seq("l_returnflag"))
+      import s.implicits._
+      fits.map(f => (f.group(0).asInstanceOf[String], micro(f.tValues(0)),
+          micro(f.interceptT), micro(f.adjR2), f.n))
+        .toDF("l_returnflag", "t_slope_micro", "t_icept_micro",
+          "adj_r2_micro", "n")
     },
       s"""WITH g AS (
          |  SELECT l_returnflag, COUNT(*)::DOUBLE AS n,
@@ -1714,7 +1687,6 @@ object LobsterGates {
           col("mom").isNotNull)
       val fit = Regression.olsByGroup(panel, "fut_ret",
         Seq("oi", "f1", "f2", "mom"), Nil).head
-      def micro(v: Double): Long = math.floor(v * 1e6 + 0.5).toLong
       import s.implicits._
       Seq((micro(fit.intercept), micro(fit.coefs(0)), micro(fit.coefs(1)),
         micro(fit.coefs(2)), micro(fit.coefs(3)), fit.n))
@@ -1863,7 +1835,6 @@ object LobsterGates {
         (col("ts_ns") % lit(86400L * 1000000000L)).cast("double") / lit(1e9))
       val fits = Regression.olsByGroup(input, "value", Seq("x"),
         Seq("event_type"))
-      def micro(v: Double): Long = math.floor(v * 1e6 + 0.5).toLong
       import s.implicits._
       fits.map(f => (f.group(0).asInstanceOf[String], micro(f.coefs(0)),
           micro(f.intercept), f.n))
@@ -1949,14 +1920,13 @@ object LobsterGates {
       val acfs = withLags.groupBy(col("user_id")).agg(
         corr(col("value"), col("l1")).as("acf1"),
         corr(col("value"), col("l2")).as("acf2")).collect()
-      def micro(v: Double): Option[Long] =
-        if (v.isNaN) None else Some(math.floor(v * 1e6 + 0.5).toLong)
+      def microOpt(v: Double): Option[Long] = Option.when(!v.isNaN)(micro(v))
       import s.implicits._
       acfs.toSeq.map { r =>
         if (r.isNullAt(1) || r.isNullAt(2)) (r.getLong(0), None, None)
         else {
           val p = Stats.pacfFromAcf(Seq(r.getDouble(1), r.getDouble(2)))
-          (r.getLong(0), micro(p(0)), micro(p(1)))
+          (r.getLong(0), microOpt(p(0)), microOpt(p(1)))
         }
       }.toDF("user_id", "pacf1_micro", "pacf2_micro")
     },

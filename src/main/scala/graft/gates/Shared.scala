@@ -29,6 +29,9 @@ object Shared {
   /** Micro-unit fixed-point: floor(x*1e6+0.5) as BIGINT (see header). */
   private[gates] def r6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)).cast("long")
 
+  /** Driver-side [[r6]] of one collected double. */
+  private[gates] def micro(v: Double): Long = math.floor(v * 1e6 + 0.5).toLong
+
   /** SQL twin of [[r6]]. */
   private[gates] def R6(e: String): String = s"CAST(floor(($e) * 1e6 + 0.5) AS BIGINT)"
 

@@ -407,20 +407,6 @@ object Dedup {
       .drop("__bn")
   }
 
-  /** Band-bucket pair generation over a precomputed `(id, sig)` frame —
-    * the caller owns the signature frame's persistence and cleanup, so
-    * long-lived pipelines can unpersist deterministically (and reuse one
-    * signature pass across several band configurations).
-    *
-    * Degenerate-input guards (both essential at corpus scale):
-    *  - all-null signatures (empty/shingle-less docs, the
-    *    [[minHashSignature]] contract) are dropped BEFORE banding — they
-    *    carry zero similarity evidence, yet `concat_ws` maps every
-    *    all-null band slice to "", so without the filter every empty doc
-    *    in the corpus lands in ONE bucket per band: 10M boilerplate-empty
-    *    rows would mean O(10M^2) pairs;
-    *  - buckets over `maxBucket` rows are dropped (see [[capBuckets]]
-    *    for the overflow policy). */
   /** xxhash64 band-bucket key over a signature slice — the production
     * LSH bucket (shared with [[IncrementalDedup]]'s cross-frame join,
     * so an index built by one run probes against any later run). */
@@ -441,6 +427,20 @@ object Dedup {
         (a, v) => pmod(a * lit(1000003L) + v, lit(2147483648L))),
       lit(900001L) + b)
 
+  /** Band-bucket pair generation over a precomputed `(id, sig)` frame —
+    * the caller owns the signature frame's persistence and cleanup, so
+    * long-lived pipelines can unpersist deterministically (and reuse one
+    * signature pass across several band configurations).
+    *
+    * Degenerate-input guards (both essential at corpus scale):
+    *  - all-null signatures (empty/shingle-less docs, the
+    *    [[minHashSignature]] contract) are dropped BEFORE banding — they
+    *    carry zero similarity evidence, yet `concat_ws` maps every
+    *    all-null band slice to "", so without the filter every empty doc
+    *    in the corpus lands in ONE bucket per band: 10M boilerplate-empty
+    *    rows would mean O(10M^2) pairs;
+    *  - buckets over `maxBucket` rows are dropped (see [[capBuckets]]
+    *    for the overflow policy). */
   def minHashLshPairsFromSigs(sig: DataFrame, bands: Int, rowsPerBand: Int,
                               maxBucket: Int = 4096): DataFrame =
     lshPairsFromSigs(sig, bands, rowsPerBand, maxBucket,
@@ -458,17 +458,24 @@ object Dedup {
     lshPairsFromSigs(sig, bands, rowsPerBand, maxBucket,
       portableBandBucket(_, _, rowsPerBand))
 
+  /** Explode the live signatures of an `(id, sig)` frame into LSH band
+    * buckets: (id, sig, band, bucket). All-null signatures are dropped
+    * first (see [[minHashLshPairsFromSigs]]). Shared by the self-join
+    * pairs and [[IncrementalDedup.nearDupAgainst]]'s cross-frame join. */
+  private[operators] def bandedSigs(sig: DataFrame, bands: Int,
+      bucket: (Column, Column) => Column): DataFrame =
+    // a signature is all-null or all-non-null by construction, so the
+    // first element decides
+    sig.filter(element_at(col("sig"), 1).isNotNull)
+      .select(col("id"), col("sig"),
+        posexplode(transform(sequence(lit(0), lit(bands - 1)),
+          b => bucket(col("sig"), b))).as(Seq("band", "bucket")))
+
   private def lshPairsFromSigs(sig: DataFrame, bands: Int,
       rowsPerBand: Int, maxBucket: Int,
       bucket: (Column, Column) => Column): DataFrame = {
     val k = bands * rowsPerBand
-    // a signature is all-null or all-non-null by construction, so the
-    // first element decides
-    val live = sig.filter(element_at(col("sig"), 1).isNotNull)
-    val banded =
-      live.select(col("id"), col("sig"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => bucket(col("sig"), b))).as(Seq("band", "bucket")))
+    val banded = bandedSigs(sig, bands, bucket)
     // signatures ride the self-join so the agreement rate is computed
     // in-line (re-joining them per distinct pair was measured ~1 s
     // slower at sf0.1 — two more exchanges; at larger signature widths

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Incremental (cross-snapshot) deduplication: dedup a NEW ingest batch
@@ -64,26 +64,12 @@ object IncrementalDedup {
     Dedup.exact(misses.unionByName(verified), textCol, idCol)
   }
 
-  /** Explode a `(id, sig)` MinHash-signature frame into LSH band
-    * buckets: (id, sig, band, bucket). Shared by the self-join
-    * (in-corpus) and cross-join (incremental) paths; bucket keys come
-    * from [[Dedup]]'s shared band-bucket functions, so an index built
-    * by one run is probe-compatible with every later run on the same
-    * backend. */
-  private def banded(sig: DataFrame, bands: Int, rowsPerBand: Int,
-                     portable: Boolean): DataFrame =
-    sig.select(col("id"), col("sig"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => if (portable) Dedup.portableBandBucket(col("sig"), b,
-               rowsPerBand)
-             else Dedup.xxBandBucket(col("sig"), b, rowsPerBand)))
-        .as(Seq("band", "bucket")))
-
   /** Near-dup candidates of a NEW batch against a CORPUS signature index:
     * cross-frame LSH band-bucket join (the bucket keys are identical to
     * [[Dedup.minHashLshPairsFromSigs]] — an index built by one run is
     * probe-compatible with every later run), agreement-rate estimate,
-    * threshold. Returns (new_id, corpus_id, est_jaccard). The only
+    * threshold. All-null signatures (empty docs) on either side never
+    * pair. Returns (new_id, corpus_id, est_jaccard). The only
     * shuffle is the band-bucket join; candidates are bounded by bucket
     * co-occupancy exactly as in the self-join case. */
   def nearDupAgainst(newSigs: DataFrame, corpusSigs: DataFrame,
@@ -91,10 +77,13 @@ object IncrementalDedup {
                      minEstJaccard: Double = 0.0,
                      portable: Boolean = false): DataFrame = {
     val k = bands * rowsPerBand
-    val l = banded(newSigs, bands, rowsPerBand, portable)
+    val bucket: (Column, Column) => Column =
+      if (portable) Dedup.portableBandBucket(_, _, rowsPerBand)
+      else Dedup.xxBandBucket(_, _, rowsPerBand)
+    val l = Dedup.bandedSigs(newSigs, bands, bucket)
       .select(col("band"), col("bucket"),
         col("id").as("new_id"), col("sig").as("sig_a"))
-    val r = banded(corpusSigs, bands, rowsPerBand, portable)
+    val r = Dedup.bandedSigs(corpusSigs, bands, bucket)
       .select(col("band"), col("bucket"),
         col("id").as("corpus_id"), col("sig").as("sig_b"))
     l.join(r, Seq("band", "bucket"))

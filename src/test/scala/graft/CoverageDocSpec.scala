@@ -47,4 +47,14 @@ class CoverageDocSpec extends AnyFunSuite {
         s"${documented.diff(rowsOnly)} gone — update COVERAGE.md's header " +
         "paragraph (and this spec) so the doc stays truthful")
   }
+
+  test("every q_ name in COVERAGE.md is a registered gate or a ScaleBench " +
+    "entry") {
+    val known = SparkEntry.queries.keySet ++ ScaleBench.entries.map(_._1)
+    // family globs such as `q_stream_*` end in '_' and name no query
+    val named = """\bq_[a-z0-9_]*[a-z0-9]\b""".r.findAllIn(coverageDoc).toSet
+    val unknown = named -- known
+    assert(unknown.isEmpty,
+      s"COVERAGE.md names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+  }
 }

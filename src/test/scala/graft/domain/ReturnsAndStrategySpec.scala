@@ -98,6 +98,28 @@ class ReturnsAndStrategySpec extends SparkSpec {
     assertApprox(r, 6.0, 1e-8)
   }
 
+  test("rollingRefitSignals: a constant-regressor trailing window gives " +
+    "a NULL signal") {
+    // x = 1 on days 1-2, so day 3's 2-day window has a singular X'X;
+    // day 4's window (days 2-3) varies and fits y = 2x exactly
+    val rows = (1 to 4).flatMap { d =>
+      (1 to 3).map { i =>
+        val x = if (d <= 2) 1.0 else i.toDouble
+        Row("T", java.sql.Date.valueOf(s"2024-01-1$d"), i.toLong, x, 2.0 * x)
+      }
+    }
+    val p = df("ticker STRING, date DATE, bin_ns BIGINT, x DOUBLE, y DOUBLE",
+      rows: _*)
+    val out = Strategy.rollingRefitSignals(p, "y", Seq("x"), lookback = 2)
+      .select(col("date").cast("string"), col("bin_ns"), col("signal"))
+      .collect()
+    val day3 = out.filter(_.getString(0) == "2024-01-13")
+    assert(day3.length == 3 && day3.forall(_.isNullAt(2)))
+    val day4 = out.filter(_.getString(0) == "2024-01-14")
+    assert(day4.length == 3)
+    day4.foreach(r => assertApprox(r.getDouble(2), 2.0 * r.getLong(1), 1e-9))
+  }
+
   test("rollingRefitSignals: distributed power-sum form equals the " +
     "per-day refit loop (k=2, multi-ticker EP2 fixture)") {
     import graft.operators.Regression

@@ -68,6 +68,20 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(cross.nonEmpty) // the fixture genuinely plants near-dups
   }
 
+  test("nearDupAgainst: empty docs (all-null signatures) never pair") {
+    // concat_ws maps an all-null band slice to "", so without the live-
+    // signature filter every empty batch doc would meet every empty
+    // corpus doc in one bucket per band, at est_jaccard 0.0
+    val sigOf = (d: org.apache.spark.sql.DataFrame) =>
+      d.select(col("doc_id").as("id"),
+        Dedup.minHashSignature(col("text"), n = 3, k = 32).as("sig"))
+    val batch = docs(100L -> "", 101L -> "", 102L -> "")
+    val corpus = docs(1L -> "", 2L -> "", 3L -> "")
+    val pairs = IncrementalDedup.nearDupAgainst(
+      sigOf(batch), sigOf(corpus), bands = 8, rowsPerBand = 4)
+    assert(pairs.count() == 0L)
+  }
+
   test("filterFlagged drops flagged batch rows, keeps the rest") {
     val batch = docs(1L -> "a", 2L -> "b", 3L -> "c")
     val flagged = df("new_id BIGINT, corpus_id BIGINT",

@@ -83,4 +83,29 @@ class RegressionSpec extends SparkSpec {
     assertApprox(fits("a").coefs(0), 2.0, 1e-9)
     assertApprox(fits("b").coefs(0), -3.0, 1e-9)
   }
+
+  test("olsByGroup: a singular group fits NaN with its n; others unchanged") {
+    // group "c" has x = 2 on all 5 rows: X'X = [[5,10],[10,20]] is exactly
+    // singular (commons-math QR with a zero threshold throws on it)
+    val live = (1 to 8).map(i => Row("a", i.toDouble, 1.5 * i + (i % 3) * 0.25))
+    val constant = (1 to 5).map(i => Row("c", 2.0, i.toDouble))
+    val schema = "g STRING, x DOUBLE, y DOUBLE"
+    val fits = Regression.olsByGroup(df(schema, live ++ constant: _*), "y",
+      Seq("x"), Seq("g")).map(f => f.group.head.toString -> f).toMap
+    val c = fits("c")
+    assert(c.n == 5L)
+    assert(c.intercept.isNaN && c.coefs.forall(_.isNaN) &&
+      c.tValues.forall(_.isNaN) && c.interceptT.isNaN)
+    val alone = Regression.olsByGroup(df(schema, live: _*), "y", Seq("x"),
+      Seq("g")).head
+    val a = fits("a")
+    assert(a.n == alone.n)
+    // bit-identical, not approximate: the singular group must not leak
+    assert(a.intercept == alone.intercept)
+    assert(a.coefs.sameElements(alone.coefs))
+    assert(a.tValues.sameElements(alone.tValues))
+    assert(a.interceptT == alone.interceptT && a.r2 == alone.r2 &&
+      a.adjR2 == alone.adjR2 && a.sigma2 == alone.sigma2)
+    assert(a.xtxInv.sameElements(alone.xtxInv))
+  }
 }
