@@ -123,26 +123,31 @@ object Oi {
     min_by(col("weighted_mp"), col("seq")).as("first_weighted_mp"),
     max_by(col("weighted_mp"), col("seq")).as("last_weighted_mp"))
 
-  /** J5 + W7 spine: densify an intraday panel to every bin in
-    * (sessionStart+delta, sessionEnd] per (ticker, date), fill OI columns
-    * with 0, and drop the last (incomplete) intraday bin
-    * (`order_imbalance.py:301`, `321-324`, `338-359`). */
+  /** J5 + W7 spine: densify an intraday panel to every complete bin of
+    * (sessionStart+delta, sessionEnd] per (ticker, date) — the last
+    * (incomplete) intraday bin is left out of the spine
+    * (`order_imbalance.py:301`, `321-324`, `338-359`) — and fill the OI
+    * columns with 0. The spine's bounds are computed on the driver; a
+    * bin too wide to leave one complete bin in the session is refused. */
   def densifyPanel(panel: DataFrame, deltaNs: Long,
                    sessionStartSec: Double = 36000.0,
                    sessionEndSec: Double = 55800.0): DataFrame = {
     if (deltaNs <= 0) return panel // daily panels are already dense
+    val (first, endNs) = ((sessionStartSec * 1e9).toLong + deltaNs,
+      (sessionEndSec * 1e9).toLong)
+    require(first + deltaNs <= endNs, s"densifyPanel: a $deltaNs ns bin " +
+      s"leaves no complete bin in the session ($sessionStartSec s, " +
+      s"$sessionEndSec s]")
+    // the grid's last bin is first + m*delta, m = (end - first) / delta;
+    // that one is incomplete, so the spine stops one bin earlier
+    val last = first + ((endNs - first) / deltaNs - 1) * deltaNs
     val oiCols = panel.columns.filter(_.startsWith("order_imbalance"))
-    val days = panel.select(col("ticker"), col("date")).distinct()
-    val spine = days.select(col("ticker"), col("date"),
-      explode(sequence(
-        unix_date(col("date")).cast("long") * lit(86400L * NsPerSec) +
-          lit((sessionStartSec * 1e9).toLong + deltaNs),
-        unix_date(col("date")).cast("long") * lit(86400L * NsPerSec) +
-          lit((sessionEndSec * 1e9).toLong),
-        lit(deltaNs))).as("bin_ns"))
-    val dense = spine.join(panel, Seq("ticker", "date", "bin_ns"), "left")
+    val day = unix_date(col("date")).cast("long") * lit(86400L * NsPerSec)
+    val spine = panel.select(col("ticker"), col("date")).distinct()
+      .select(col("ticker"), col("date"), explode(sequence(day + lit(first),
+        day + lit(last), lit(deltaNs))).as("bin_ns"))
+    spine.join(panel, Seq("ticker", "date", "bin_ns"), "left")
       .na.fill(0.0, oiCols)
-    TimeBins.dropLastBin(dense, "bin_ns", Seq("ticker", "date"))
   }
 
   /** Combined panel (J4): join several kinds on the bin key

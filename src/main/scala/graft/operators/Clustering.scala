@@ -139,27 +139,6 @@ object Clustering {
     DupClusters.dedupByCluster(df, idCol, pairs, "id_a", "id_b", orderBy)
   }
 
-  /** [[assign]]'s twin against a centroid-ARRAY column instead of driver
-    * literals: same micro-rounded squared-L2 grid, same left-to-right
-    * dim fold, same tie-to-smaller-index rule — bit-identical decisions
-    * when the centroid values are equal. Native codegen'd kernel
-    * ([[graft.plans.ArgMinL2MicroDynExpr]]) since r20 — the interpreted
-    * twin below stays for the ClusteringSpec differential. */
-  private[operators] def assignDyn(vec: Column, cbs: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(graft.plans.ArgMinL2MicroDynExpr(
-      GraftColumnBridge.expression(vec),
-      GraftColumnBridge.expression(cbs)))
-  }
-
-  /** Interpreted higher-order twin of [[assignDyn]], kept for
-    * differential verification of the native kernel. */
-  private[operators] def assignDynHof(vec: Column, cbs: Column): Column =
-    array_min(transform(cbs, (cb, i) =>
-      struct(microL(aggregate(zip_with(vec, cb, (x, c) => (x - c) * (x - c)),
-        lit(0.0), (acc, v) => acc + v)).as("d"),
-        i.cast("int").as("c")))).getField("c")
-
   /** Within-cell near-duplicate pairs of the SHARDED SemDeDup — the
     * corpus-scale face. Flat Lloyd assignment is O(n·k); holding CELL
     * size constant (what bounds within-cell pair cost) forces k ∝ n,
@@ -169,14 +148,13 @@ object Clustering {
     * The fix is standard blocking: an O(n) signed-random-projection
     * pre-shard into ~n/`shardSizeTarget` buckets of cosine-similar
     * vectors, then the SAME deterministic k-means inside every shard
-    * JOINTLY with a constant `cellsPerShard` — so every stage is
-    * linear: the shard key is a row-local sign fold, each k-means
-    * iteration joins a vector to its OWN shard's ≤ cellsPerShard
-    * centroids (a shuffle join on the shard key, k constant), the
-    * centroid update is one partial-aggregated meanPool over
-    * (shard, cell), and pair generation is bounded by cell size.
+    * with a constant `cellsPerShard`. Shards never exchange data, so the
+    * corpus is grouped by shard ONCE and the whole per-shard k-means and
+    * pair scoring run where the shard's rows already are
+    * ([[graft.plans.SemDupShardGen]]: one shuffle, no per-iteration job).
     * Shards larger than 4x the target (SRP sign buckets are not
-    * balance-guaranteed) are hash-sub-split to bound the worst case.
+    * balance-guaranteed) are hash-sub-split to bound the per-shard buffer
+    * (SCALE.md states the bound).
     *
     * Tradeoff, stated plainly: near-duplicates that land in DIFFERENT
     * shards are never compared — the blocking recall loss every LSH
@@ -184,10 +162,11 @@ object Clustering {
     * co-shard: identical vectors have identical signatures). Raising
     * `shardSizeTarget` buys recall with cost.
     *
-    * With one shard (n ≤ shardSizeTarget) the composition reduces to
-    * EXACTLY [[semDupPairs]] with k = cellsPerShard — same init
-    * (k smallest ids), same argmin grid, same DECIMAL means, same
-    * emptied-cell rule — pinned bit-identical in ClusteringSpec.
+    * Each shard's pairs are EXACTLY [[semDupPairs]] with k =
+    * min(cellsPerShard, shard rows) run on that shard's rows alone —
+    * same init (k smallest ids), same argmin grid, same DECIMAL means,
+    * same emptied-cell rule — pinned bit-identical in ClusteringSpec for
+    * one shard and for many.
     *
     * `nHint`: the corpus row count, if the caller already knows it
     * (table metadata, a prior stage's count). It only SIZES the shard
@@ -202,9 +181,30 @@ object Clustering {
                          maxIter: Int, minCosine: Double,
                          seed: Long = 17L,
                          nHint: Option[Long] = None): DataFrame = {
-    require(shardSizeTarget >= 1, s"shardSizeTarget must be >= 1")
+    import org.apache.spark.sql.GraftColumnBridge
     require(cellsPerShard >= 1, s"cellsPerShard must be >= 1")
     require(maxIter >= 0, s"maxIter must be non-negative, got $maxIter")
+    val shards = shardKeyed(df, idCol, vecCol, shardSizeTarget, seed, nHint)
+      .groupBy(col("__sd_s"))
+      .agg(sort_array(collect_list(struct(col("__sd_id"), col("__sd_v"))))
+        .as("__rows"))
+    shards
+      .select(col("__sd_s").as("shard"),
+        GraftColumnBridge.column(graft.plans.SemDupShardGen(
+          GraftColumnBridge.expression(col("__rows")), cellsPerShard,
+          maxIter, math.floor(minCosine * 1e6 + 0.5).toLong,
+          !org.apache.spark.sql.internal.SQLConf.get.ansiEnabled)))
+      .where(col("id_a") < col("id_b"))
+      .select("id_a", "id_b", "shard", "cell", "cosine")
+  }
+
+  /** The sharded SemDeDup's rows keyed by shard: (__sd_id, __sd_v as
+    * ARRAY<DOUBLE>, __sd_s). */
+  private[operators] def shardKeyed(df: DataFrame, idCol: String,
+                                    vecCol: String, shardSizeTarget: Int,
+                                    seed: Long,
+                                    nHint: Option[Long]): DataFrame = {
+    require(shardSizeTarget >= 1, s"shardSizeTarget must be >= 1")
     nHint.foreach(h => require(h > 0, s"nHint must be positive, got $h"))
     // one probe pass, not two: count (when no hint) and width together —
     // first() is the same "any row decides" contract the old head() probe
@@ -226,105 +226,44 @@ object Clustering {
        else 64 - java.lang.Long.numberOfLeadingZeros(shardsWanted - 1))
         .min(50)
     val vec = transform(col(vecCol), _.cast("double"))
-    // fan the SRP-signature / assignment scans wide (row-local work over
-    // a possibly single-split local scan; no-op at cluster scale)
+    // fan the SRP-signature scan wide (row-local work over a possibly
+    // single-split local scan; no-op at cluster scale)
     val keyed0 = graft.core.Par
       .fanOut(df.select(col(idCol).as("__sd_id"), vec.as("__sd_v")),
         col("__sd_id"))
-    val base =
-      if (bits == 0 && nHint.isEmpty) {
-        // single-shard face: every row's raw key is the same 0L, no shard
-        // can exceed 4x target (bits == 0 with an EXACT count implies
-        // n <= target), and pmod(hash, 1) = 0 — so the size probe and the
-        // split join are algebraic no-ops; the shard key is exactly
-        // lit(0L). A hinted n may undercount, so a hint always takes the
-        // split path below.
-        keyed0.withColumn("__sd_s", lit(0L))
-      } else {
-        // srpSignature needs >= 1 plane: zero bits is the one raw key 0L
-        val keyed = keyed0.withColumn("__sd_raw",
-          if (bits == 0) lit(0L)
-          else Similarity.srpSignature(col("__sd_v"), bits, dims, seed))
-        // bound the worst case: SRP sign buckets are similarity-preserving
-        // but not balanced; a shard > 4x target hash-splits into
-        // ceil(size / (2x target)) sub-shards (<= 4096, key packs below).
-        // The per-raw-shard split table is O(#shards) rows — checkpoint it
-        // ONCE so the repeated derivations of `base` (init window, one per
-        // k-means iteration, the final pair pass) stop re-paying the
-        // full counting scan of the corpus the groupBy needs (r20: that
-        // was one extra corpus pass per derivation, 5 per invocation)
-        val splits = keyed.groupBy("__sd_raw")
-          .agg(count(lit(1)).as("__sn"))
-          .withColumn("__splits",
-            when(col("__sn") > 4L * shardSizeTarget,
-              least(ceil(col("__sn") / (2.0 * shardSizeTarget)), lit(4096L))
-                .cast("long"))
-              .otherwise(lit(1L)))
-          .select("__sd_raw", "__splits")
-          .localCheckpoint()
-        keyed.join(splits, "__sd_raw")
-          .withColumn("__sd_s", col("__sd_raw") * 4096L +
-            pmod(hash(col("__sd_id")), col("__splits").cast("int"))
+    if (bits == 0 && nHint.isEmpty) {
+      // single-shard face: every row's raw key is the same 0L, no shard
+      // can exceed 4x target (bits == 0 with an EXACT count implies
+      // n <= target), and pmod(hash, 1) = 0 — so the size probe and the
+      // split join are algebraic no-ops; the shard key is exactly
+      // lit(0L). A hinted n may undercount, so a hint always takes the
+      // split path below.
+      keyed0.withColumn("__sd_s", lit(0L))
+    } else {
+      // srpSignature needs >= 1 plane: zero bits is the one raw key 0L
+      val keyed = keyed0.withColumn("__sd_raw",
+        if (bits == 0) lit(0L)
+        else Similarity.srpSignature(col("__sd_v"), bits, dims, seed))
+      // bound the worst case: SRP sign buckets are similarity-preserving
+      // but not balanced; a shard > 4x target hash-splits into
+      // ceil(size / (2x target)) sub-shards (<= 4096, key packs below).
+      // The per-raw-shard split table is O(#shards) rows, checkpointed
+      // once (and left pinned: the returned lazy frame reads it)
+      val splits = keyed.groupBy("__sd_raw")
+        .agg(count(lit(1)).as("__sn"))
+        .withColumn("__splits",
+          when(col("__sn") > 4L * shardSizeTarget,
+            least(ceil(col("__sn") / (2.0 * shardSizeTarget)), lit(4096L))
               .cast("long"))
-          .select("__sd_id", "__sd_v", "__sd_s")
-      }
-    // init: the cellsPerShard smallest ids of each shard, as a centroid
-    // FRAME (shard, cell, vec) — k-means for every shard advances in
-    // one distributed pass per iteration, no driver loop over shards
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__sd_s")).orderBy(col("__sd_id"))
-    var cents = base
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number().over(w))
-      .filter(col("__rn") <= cellsPerShard)
-      .select(col("__sd_s"), (col("__rn") - 1).cast("int").as("__c"),
-        col("__sd_v").as("__cv"))
-      .localCheckpoint()
-    def gathered = cents.groupBy("__sd_s")
-      .agg(transform(
-        array_sort(collect_list(struct(col("__c"), col("__cv")))),
-        s => s.getField("__cv")).as("__cbs"))
-    def assigned = base.join(gathered, "__sd_s")
-      .withColumn("__c", assignDyn(col("__sd_v"), col("__cbs")))
-      .drop("__cbs")
-    for (_ <- 1 to maxIter) {
-      val means = Embeddings.meanPool(
-        assigned.select(col("__sd_s"), col("__c"), col("__sd_v")),
-        Seq("__sd_s", "__c"), "__sd_v", "__nv")
-      // an emptied cell keeps its previous centroid (flat kmeans rule)
-      val next = cents.join(means, Seq("__sd_s", "__c"), "left")
-        .select(col("__sd_s"), col("__c"),
-          coalesce(col("__nv"), col("__cv")).as("__cv"))
+            .otherwise(lit(1L)))
+        .select("__sd_raw", "__splits")
         .localCheckpoint()
-      graft.core.Lineage.unpersistCheckpoint(cents)
-      cents = next
+      keyed.join(splits, "__sd_raw")
+        .withColumn("__sd_s", col("__sd_raw") * 4096L +
+          pmod(hash(col("__sd_id")), col("__splits").cast("int"))
+            .cast("long"))
+        .select("__sd_id", "__sd_v", "__sd_s")
     }
-    // the final `cents` checkpoint stays pinned (the returned lazy frame
-    // reads it) — the caller-owned O(1) remainder, as in Graph/PageRank.
-    // Pair generation derives `assigned` ONCE: cells gather to a bounded
-    // list (cell size is capped by the shard-split rule, so the list is
-    // O(shardSizeTarget) rows — never the corpus) and the id-ordered
-    // pairs stream out of two pipelined explodes. The r19 x⋈y self-join
-    // executed the whole scan→shard→assign pipeline twice (once per join
-    // side) and shuffled both copies; this shuffles the assigned frame
-    // once and recomputes nothing. Pair SET and every cosine bit are
-    // unchanged: the same (id_a < id_b) orientation, the same row-local
-    // cosine expression on the same vectors.
-    val cells = assigned.groupBy(col("__sd_s"), col("__c"))
-      .agg(collect_list(struct(col("__sd_id"), col("__sd_v"))).as("__cell"))
-    cells
-      .select(col("__sd_s"), col("__c"), col("__cell"),
-        explode(col("__cell")).as("__a"))
-      .select(col("__sd_s"), col("__c"), col("__a"),
-        explode(col("__cell")).as("__b"))
-      .where(col("__a.__sd_id") < col("__b.__sd_id"))
-      .select(col("__a.__sd_id").as("id_a"), col("__b.__sd_id").as("id_b"),
-        col("__sd_s"), col("__c"),
-        Similarity.cosine(col("__a.__sd_v"), col("__b.__sd_v"))
-          .as("cosine"))
-      .where(microL(col("cosine")) >=
-        lit(math.floor(minCosine * 1e6 + 0.5).toLong))
-      .select(col("id_a"), col("id_b"), col("__sd_s").as("shard"),
-        col("__c").as("cell"), col("cosine"))
   }
 
   /** Sharded SemDeDup: [[semDupPairsSharded]] + one representative per

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression,
   Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
   ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst kernel for pairwise cosine similarity — the per-pair
@@ -53,7 +53,7 @@ object VectorKernels {
       out(b) = java.lang.Long.valueOf(bucket)
       b += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
   /** Per-row argmin-squared-L2 kernel (called from generated code).
@@ -96,21 +96,17 @@ object VectorKernels {
     bestI
   }
 
-  /** Dynamic-centroid argmin (called from generated code): the
-    * [[argMinL2Micro]] arithmetic against a centroid-ARRAY column
-    * instead of driver literals. Mirrors the HOF
-    * array_min(transform(cbs, ...)) composition exactly, including its
-    * richer null algebra: nullity here is PER ENTRY (a null centroid, a
-    * length mismatch with the vector, or a null element on either side
-    * nulls that entry's distance), and a null distance sorts before
-    * every real one — so the winner is the SMALLEST INDEX among null
-    * entries when any exist, else the strict argmin with ties to the
-    * smaller index. Null (boxed) only when cbs itself is null or empty
-    * (array_min of nothing). */
-  def argMinL2MicroDyn(vec: ArrayData, cbs: ArrayData): java.lang.Integer = {
-    if (cbs == null) return null
+  /** Dynamic-centroid argmin (called by [[kmeansCells]]): the
+    * [[argMinL2Micro]] arithmetic against a non-empty centroid ARRAY
+    * instead of driver literals. Nullity here is PER ENTRY (a null
+    * centroid, a length mismatch with the vector, or a null element on
+    * either side nulls that entry's distance), and a null distance sorts
+    * before every real one — so the winner is the SMALLEST INDEX among
+    * null entries when any exist, else the strict argmin with ties to the
+    * smaller index. A degenerate vector (null or with a null element)
+    * therefore lands at index 0, as in [[argMinL2Micro]]. */
+  def argMinL2MicroDyn(vec: ArrayData, cbs: ArrayData): Int = {
     val n = cbs.numElements()
-    if (n == 0) return null
     val vecBad = vec == null || {
       var i = 0; var hasNull = false
       val ne = vec.numElements()
@@ -122,7 +118,7 @@ object VectorKernels {
     var found = false
     var c = 0
     while (c < n) {
-      if (cbs.isNullAt(c)) return Integer.valueOf(c)
+      if (cbs.isNullAt(c)) return c
       val cb = cbs.getArray(c)
       var bad = vecBad || cb.numElements() != vec.numElements()
       if (!bad) {
@@ -130,7 +126,7 @@ object VectorKernels {
         val d = cb.numElements()
         while (i < d && !bad) { bad = cb.isNullAt(i); i += 1 }
       }
-      if (bad) return Integer.valueOf(c) // first null-distance entry wins
+      if (bad) return c // first null-distance entry wins
       var acc = 0.0
       var j = 0
       val d = cb.numElements()
@@ -143,7 +139,61 @@ object VectorKernels {
       if (!found || micro < best) { found = true; best = micro; bestI = c }
       c += 1
     }
-    Integer.valueOf(bestI)
+    bestI
+  }
+
+  /** The k-means of one SemDeDup shard (called by [[SemDupShardGen]]):
+    * `vecs` are the shard's vectors in ascending id order. Init from the
+    * first min(n, k) vectors; each of `maxIter` updates assigns every
+    * vector through [[argMinL2MicroDyn]] and replaces each cell's
+    * centroid by its per-dim mean summed as Embeddings.meanPoolLong sums
+    * it: every element cast to DECIMAL(18,9) (a null element, NaN or an
+    * overflow (when `nullOnOverflow`) is SQL NULL), summed exactly, the
+    * sum's double divided by the number of vectors long enough to have
+    * that dim; a dim with no non-null element is a NULL mean, and a cell
+    * with no non-empty vector keeps its centroid. The decimals are held
+    * as unscaled longs (n x dims x 8 B, cast once, not per iteration); a
+    * cell's sum past the long range (|sum| > 9.2e9) throws instead of
+    * widening. Returns the final assignment. */
+  def kmeansCells(vecs: Array[ArrayData], k: Int, maxIter: Int,
+                  nullOnOverflow: Boolean): Array[Int] = {
+    val n = vecs.length
+    val len = vecs.map(v => if (v == null) 0 else v.numElements())
+    val dims = len.max
+    val Null = Long.MinValue // unscaled DECIMAL(18,9) values are < 1e18
+    val dec = Array.tabulate(n * dims) { t =>
+      val (i, j) = (t / dims, t % dims)
+      if (j >= len(i) || vecs(i).isNullAt(j)) Null
+      else try {
+        val d = org.apache.spark.sql.types.Decimal(vecs(i).getDouble(j))
+        if (d.changePrecision(18, 9)) d.toUnscaledLong
+        else if (nullOnOverflow) Null
+        else throw new ArithmeticException(s"$d overflows DECIMAL(18,9)")
+      } catch { case _: NumberFormatException => Null }
+    }
+    val cents = Array.tabulate[Any](math.min(n, k))(vecs(_))
+    val cbs = new GenericArrayData(cents)
+    def assign(): Array[Int] = vecs.map(argMinL2MicroDyn(_, cbs))
+    for (_ <- 1 to maxIter) {
+      val cell = assign()
+      val sum = new Array[Long](cents.length * dims)
+      val cnt = new Array[Long](cents.length * dims)
+      val seen = new Array[Boolean](cents.length * dims)
+      for (i <- 0 until n; j <- 0 until len(i)) {
+        val (t, u) = (cell(i) * dims + j, dec(i * dims + j))
+        cnt(t) += 1
+        if (u != Null) { sum(t) = Math.addExact(sum(t), u); seen(t) = true }
+      }
+      for (c <- cents.indices) {
+        val l = (0 until dims).count(j => cnt(c * dims + j) > 0)
+        if (l > 0) cents(c) = new GenericArrayData(Array.tabulate[Any](l) { j =>
+          val t = c * dims + j
+          if (!seen(t)) null
+          else java.math.BigDecimal.valueOf(sum(t), 9).doubleValue / cnt(t)
+        })
+      }
+    }
+    assign()
   }
 
   /** Per-row PQ subdistance table (called from generated code): cell
@@ -185,11 +235,10 @@ object VectorKernels {
         }
         c += 1
       }
-      rows(j) =
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(cells)
+      rows(j) = new GenericArrayData(cells)
       j += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(rows)
+    new GenericArrayData(rows)
   }
 
   /** Per-pair ADC distance (called from generated code): the integer
@@ -351,61 +400,6 @@ case class ArgMinL2MicroExpr(child: Expression, centroids: Seq[Double],
       : ArgMinL2MicroExpr = copy(child = newChild)
 }
 
-/** Dynamic-centroid argmin over (vector, centroid-array) columns — the
-  * per-iteration assignment of the SHARDED SemDeDup, whose centroids
-  * arrive as a joined column rather than driver literals. One fused
-  * while-loop replacing an interpreted transform/aggregate chain
-  * evaluated per corpus row per k-means iteration (the 100 TB
-  * assignment path). Null contract mirrors the HOF exactly (see the
-  * kernel doc); nullable because a null/empty centroid array yields
-  * null. */
-case class ArgMinL2MicroDynExpr(left: Expression, right: Expression)
-    extends BinaryExpression with Serializable {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(ArrayType(DoubleType, _), _))
-        => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (ARRAY<DOUBLE>, ARRAY<ARRAY<DOUBLE>>), " +
-          s"got ${l.sql} and ${r.sql}")
-    }
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_argmin_l2_micro_dyn"
-
-  // the HOF twin yields a (null-entry-wins) result even for a NULL
-  // VECTOR as long as cbs is non-null — so only cbs-null short-circuits;
-  // the vector must flow through. Hence eval/doGenCode handle nulls
-  // manually instead of nullSafeEval.
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = left.eval(input)
-    val c = right.eval(input)
-    VectorKernels.argMinL2MicroDyn(
-      if (v == null) null else v.asInstanceOf[ArrayData],
-      if (c == null) null else c.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val l = left.genCode(ctx)
-    val r = right.genCode(ctx)
-    ev.copy(code = l.code + r.code +
-      code"""
-        java.lang.Integer ${ev.value}_r =
-          graft.plans.VectorKernels.argMinL2MicroDyn(
-            ${l.isNull} ? null : ${l.value},
-            ${r.isNull} ? null : ${r.value});
-        boolean ${ev.isNull} = ${ev.value}_r == null;
-        int ${ev.value} = ${ev.isNull} ? -1 : ${ev.value}_r.intValue();""")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ArgMinL2MicroDynExpr =
-    copy(left = newLeft, right = newRight)
-}
-
 /** PQ subdistance table over a query-vector column: m x k LONG cells,
   * codebooks carried FLATTENED row-major (m*k*dsub) as a Seq and bound
   * to a primitive array once per executor. Replaces an unrolled
@@ -552,4 +546,50 @@ case class CosineExpr(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineExpr =
     copy(left = newLeft, right = newRight)
+}
+
+/** One SemDeDup shard in, its within-cell near-duplicate pairs out: the
+  * child is the shard's ARRAY<STRUCT<id, vector>> in ascending id order
+  * (sort_array over collect_list), [[VectorKernels.kmeansCells]] assigns
+  * the cells, and every id-ordered same-cell index pair whose
+  * [[VectorKernels.cosine]] is non-null with
+  * floor(cosine * 1e6 + 0.5) >= `minMicro` streams out as (id_a, id_b,
+  * cell, cosine). Runs once per shard, so it is interpreted
+  * (CodegenFallback) and outside whole-stage codegen; the pairs are
+  * generated lazily, never buffered. */
+case class SemDupShardGen(child: Expression, cells: Int, maxIter: Int,
+                          minMicro: Long, nullOnOverflow: Boolean)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
+    with org.apache.spark.sql.catalyst.expressions.Generator
+    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.types.{IntegerType, StructType}
+
+  private lazy val idType = child.dataType.asInstanceOf[ArrayType].elementType
+    .asInstanceOf[StructType].head.dataType
+  override def elementSchema: StructType = new StructType()
+    .add("id_a", idType).add("id_b", idType)
+    .add("cell", IntegerType, nullable = false)
+    .add("cosine", DoubleType, nullable = false)
+  override def supportCodegen: Boolean = false
+  override def prettyName: String = "graft_semdup_shard"
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val rows = child.eval(input).asInstanceOf[ArrayData]
+    val structs = Array.tabulate(rows.numElements())(rows.getStruct(_, 2))
+    val vecs = structs.map(r => if (r.isNullAt(1)) null else r.getArray(1))
+    val cell = VectorKernels.kmeansCells(vecs, cells, maxIter, nullOnOverflow)
+    structs.indices.groupBy(cell(_)).iterator.flatMap { case (c, m) =>
+      for {
+        x <- m.indices.iterator
+        y <- (x + 1 until m.length).iterator
+        cos = VectorKernels.cosine(vecs(m(x)), vecs(m(y)))
+        if cos != null && Math.floor(cos * 1e6 + 0.5).toLong >= minMicro
+      } yield InternalRow(structs(m(x)).get(0, idType),
+        structs(m(y)).get(0, idType), c, cos.doubleValue)
+    }
+  }
+
+  override protected def withNewChildInternal(newChild: Expression)
+      : SemDupShardGen = copy(child = newChild)
 }

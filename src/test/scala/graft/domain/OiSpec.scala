@@ -115,6 +115,22 @@ class OiSpec extends SparkSpec {
     assert(row(0).isNullAt(row(0).fieldIndex("first_midprice")))
   }
 
+  test("densifyPanel: a bin too wide for one complete bin is refused") {
+    val vis = Oi.panel(day, M5, "vis")
+    val session = (55800L - 36000L) * 1000000000L
+    // half the session: bins (start, mid] and (mid, end]; the last is
+    // incomplete, so exactly one bin per ticker-day remains
+    val half = Oi.densifyPanel(Oi.panel(day, session / 2, "vis"), session / 2)
+    assert(half.count() == half.select("ticker", "date").distinct().count())
+    // one bin per session (formerly an empty panel) and a bin wider than
+    // the session (formerly an execution-time sequence error) fail at
+    // plan time, naming the cause
+    Seq(session, session + 1).foreach { d =>
+      val e = intercept[IllegalArgumentException](Oi.densifyPanel(vis, d))
+      assert(e.getMessage.contains("no complete bin"), e.getMessage)
+    }
+  }
+
   test("combined joins kinds on the bin key without column clashes") {
     val vis = Oi.densifyPanel(Oi.panel(day, M5, "vis"), M5)
     val hid = Oi.densifyPanel(Oi.panel(day, M5, "hid"), M5)

@@ -47,33 +47,6 @@ class ClusteringSpec extends SparkSpec {
     }
   }
 
-  test("native DYNAMIC argmin kernel is bit-identical to the HOF twin, " +
-    "including per-entry null algebra (r20 differential)") {
-    val rnd = new scala.util.Random(5)
-    def v4() = Seq.fill(4)(rnd.nextGaussian())
-    val goodCbs: Any = Seq(v4(), v4(), v4())
-    val rows: Seq[(Long, Any, Any)] =
-      (0L until 100L).map(i => (i, v4(): Any, goodCbs)) ++
-      Seq[(Long, Any, Any)](
-        (200L, null, goodCbs),                       // null vector
-        (201L, v4(), null),                          // null cbs
-        (202L, v4(), Seq.empty[Seq[Double]]),        // empty cbs
-        (203L, v4(), Seq[Any](v4(), null, v4())),    // null centroid entry
-        (204L, v4(), Seq(v4(), Seq(1.0, 2.0), v4())),// ragged centroid
-        (205L, Seq[Any](1.0, null, 3.0, 4.0), goodCbs), // null element
-        (206L, Seq(Double.NaN, 1.0, 2.0, 3.0), goodCbs))
-    val base = df("id BIGINT, vec ARRAY<DOUBLE>, cbs ARRAY<ARRAY<DOUBLE>>",
-      rows.map(r => Row(r._1, r._2, r._3)): _*)
-    base.select(col("id"),
-        Clustering.assignDyn(col("vec"), col("cbs")).as("k"),
-        Clustering.assignDynHof(col("vec"), col("cbs")).as("h"))
-      .collect()
-      .foreach { r =>
-        assert(r.get(1) == r.get(2),
-          s"id ${r.getLong(0)}: kernel ${r.get(1)} != hof ${r.get(2)}")
-      }
-  }
-
   test("kmeans separates well-separated blobs (one cluster per blob)") {
     val got = Clustering.kmeans(vecs(blobs: _*), "id", "vec",
         k = 3, maxIter = 3)
@@ -177,6 +150,50 @@ class ClusteringSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
         r.getDouble(3))).toSet
     assert(sharded == flat,
+      s"only-flat=${(flat -- sharded).take(5)} " +
+        s"only-sharded=${(sharded -- flat).take(5)}")
+  }
+
+  test("sharded face with MANY shards: each shard's pairs are bit-" +
+    "identical to flat semDupPairs on that shard's rows alone") {
+    // 120 rows over 3 SRP bits (target 15 => 8 raw shards; none reaches
+    // the 4x-target split). Degenerate rows, each with an id too large
+    // to seed a centroid (flat init cannot read a null vector): a null
+    // vector (id 900), a null element (id 901). ids 0 and 1 share a
+    // vector, so their shard seeds two centroids on one point, every tie
+    // goes to the smaller cell and cell 1 empties in the first update
+    // (keeping its centroid).
+    val rnd = new scala.util.Random(11L)
+    val rows: Seq[(Long, Any)] =
+      Seq[(Long, Any)](0L -> Seq(0.5, 0.5, 0.5), 1L -> Seq(0.5, 0.5, 0.5)) ++
+      (2L until 120L).map(i =>
+        i -> (Seq.fill(3)(rnd.nextGaussian()): Any)) ++
+      Seq[(Long, Any)](900L -> null, 901L -> Seq[Any](0.4, null, 0.6))
+    val d = df("id BIGINT, vec ARRAY<DOUBLE>",
+      rows.map(r => Row(r._1, r._2)): _*)
+    val (target, cells) = (15, 4)
+    val sharded = Clustering.semDupPairsSharded(d, "id", "vec",
+        shardSizeTarget = target, cellsPerShard = cells, maxIter = 3,
+        minCosine = 0.2)
+      .select("shard", "id_a", "id_b", "cell", "cosine").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(4)))).toSet
+    val members = Clustering.shardKeyed(d, "id", "vec", target, 17L, None)
+      .select("__sd_s", "__sd_id").collect()
+      .groupBy(_.getLong(0)).map { case (s, rs) => s -> rs.map(_.getLong(1)) }
+    val flat = members.toSeq.flatMap { case (s, ids) =>
+      Clustering.semDupPairs(d.where(col("id").isin(ids: _*)), "id", "vec",
+          k = math.min(cells, ids.length), maxIter = 3, minCosine = 0.2)
+        .collect().map(r => (s, r.getLong(0), r.getLong(1), r.getInt(2),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(3))))
+    }.toSet
+    // the fixture reaches every degenerate face it claims to
+    assert(members.size > 1, "one shard only")
+    assert(members.values.exists(_.length < cells),
+      s"no shard under $cells rows: ${members.values.map(_.length)}")
+    assert(Seq(900L, 901L).forall(i => members.values.exists(_.contains(i))))
+    assert(sharded.exists(p => p._2 == 0L && p._3 == 1L))
+    assert(sharded.nonEmpty && sharded == flat,
       s"only-flat=${(flat -- sharded).take(5)} " +
         s"only-sharded=${(sharded -- flat).take(5)}")
   }
