@@ -241,27 +241,17 @@ object TextFunctions {
 
   /** Content-defined rolling-hash fingerprint of the token STREAM
     * (order-sensitive; distinct from [[bowFingerprint]]'s bag semantics):
-    * left-fold of xxhash64(acc, token) — chained hashing avoids the Long
-    * overflow a polynomial hash would hit under ANSI arithmetic, and stays
-    * inside codegen via the higher-order `aggregate`. */
+    * left-fold of `mix31(acc XOR stringKey31(token), 11)` over the
+    * lowercased token stream. Both operands stay below 2^31 (mix31's
+    * range and the base-31 string key's), so every step is exact BIGINT
+    * arithmetic in any SQL engine — the q_text_quality oracle replays
+    * the chain in DuckDB via list_reduce — and the fold stays inside
+    * codegen via the higher-order `aggregate`. 31 bits of fingerprint. */
   def seqFingerprint(text: Column): Column =
-    aggregate(tokens(lower(text)), lit(0L),
-      (acc, t) => xxhash64(acc, t)).as("seq_fingerprint")
-
-  /** Engine-portable face of [[seqFingerprint]]: left-fold of
-    * `mix31(acc XOR stringKey31(token), seed)` over the lowercased
-    * token stream. Both operands stay below 2^31 (mix31's range and the
-    * base-31 string key's), so every step is exact BIGINT arithmetic in
-    * any SQL engine — the q_text_quality oracle replays the chain in
-    * DuckDB via list_reduce. Order-sensitive like the xxhash64 face
-    * (the chain, not a bag); 31 bits of fingerprint instead of 64, the
-    * usual portable-backend trade (production pipelines keep the
-    * xxhash64 face). */
-  def seqFingerprintPortable(text: Column, seed: Long = 11L): Column =
     aggregate(tokens(lower(text)), lit(0L),
       (acc, t) => graft.operators.Sampling.mix31(
         acc.bitwiseXOR(graft.operators.Sampling.stringKey31(t)),
-        lit(seed))).as("seq_fingerprint")
+        lit(11L))).as("seq_fingerprint")
 
   // --- language ID (character n-gram heuristic) ---
   // Marker character patterns + very-high-frequency function words per

@@ -333,27 +333,24 @@ object CurationGates {
          |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars
          |FROM documents GROUP BY 1""".stripMargin),
 
-    // --- LLM ops: the composite quality score alone IS oracle-portable
-    //     (split/list/char-class regex only — no lookahead); the bpe-ish
-    //     token count stays rows-only in q_text_quality below ---
+    // --- LLM ops: the composite quality score alone (split/list/
+    //     char-class regex only — no lookahead) ---
     Gate("q_quality_score", (s, dir) => {
       Tables.documents(s, dir).select(col("doc_id"),
         r6(TextFunctions.qualityScore(col("text"))).as("quality_micro"))
     },
       QualityScoreSql),
 
-    // --- LLM ops: composite quality score + BPE-ish token count
-    //     (rows-only: the (?=...) lookahead has no RE2 equivalent) ---
-    // r10: full oracle — the BPE-ish count's lookahead-free closed form
-    // and the mix31-chain fingerprint are both SQL-expressible (the
-    // xxhash64 fingerprint face stays the production default;
-    // TextFunctionsSpec pins the differentials)
+    // --- LLM ops: composite quality score + BPE-ish token count +
+    //     sequence fingerprint: the BPE-ish count's lookahead-free
+    //     closed form and the mix31-chain fingerprint are both
+    //     SQL-expressible ---
     Gate("q_text_quality", (s, dir) => {
       Tables.documents(s, dir).select(col("doc_id"),
         r6(TextFunctions.qualityScore(col("text"))).as("quality_micro"),
         TextFunctions.nTokensBpeIsh(col("text")).cast("long")
           .as("n_tokens_bpeish"),
-        TextFunctions.seqFingerprintPortable(col("text"))
+        TextFunctions.seqFingerprint(col("text"))
           .as("seq_fingerprint"))
     },
       // q_quality_score's chain + the lookahead-free BPE-ish count (every
@@ -582,22 +579,17 @@ object CurationGates {
 
     // --- LLM ops: the composed curation pipeline (exact dedup -> quality
     //     gate -> deterministic sample -> MinHash-LSH near-dup removal ->
-    //     group-scoped packing). Rows-only: the near-dup stage is
-    //     xxhash64-based, which DuckDB cannot reproduce ---
-    // --- LLM ops: the composed pipeline with the LSH stage ON, on the
-    //     PORTABLE MinHash backend (round 10) — signatures, band
-    //     buckets, pair agreement, greedy drop, and packing all
-    //     recomputed by the DuckDB oracle; the xxhash64 LSH face stays
-    //     the production default (DedupSpec/CurationSpec-pinned) ---
+    //     group-scoped packing) with the LSH stage ON — signatures,
+    //     slot-keyed band buckets, pair agreement, greedy drop, and
+    //     packing all recomputed by the DuckDB oracle ---
     Gate("q_curate", (s, dir) => {
       Curation.curate(Tables.documents(s, dir), "doc_id", "text",
           "n_chars", Curation.Config(minQuality = 0.2, sampleRate = 0.9,
-            nearDupJaccard = 0.9, nearDupPortable = true,
-            packBudget = 16384L, seed = 5L, groupCols = Seq("lang")))
+            nearDupJaccard = 0.9, packBudget = 16384L, seed = 5L, groupCols = Seq("lang")))
         .select(col("doc_id"), col("lang"), col("chunk_id"),
           col("chunk_offset"), r6(col("quality_score")).as("quality_micro"))
     },
-      // the composed pipeline with the PORTABLE LSH stage ON:
+      // the composed pipeline with the LSH stage ON:
       // q_curate_sql's dedup/quality/sample CTEs (ltoks carried through),
       // then mix31 MinHash signatures + band buckets over the SURVIVORS,
       // pairs at >= 29/32 slot agreement (= est_jaccard >= 0.9 exactly on
@@ -617,11 +609,9 @@ object CurationGates {
          |      i -> sig_a[i] = sig_b[i])) >= 29)),
          |${CuratePackSql("u")}""".stripMargin),
 
-    // --- LLM ops: oracle-checkable curation sibling — the same composed
-    //     pipeline with the near-dup (xxhash64 LSH) stage OFF, so every
-    //     remaining stage (md5 dedup winner, quality gate, hash sample,
-    //     prefix-sum packing) has an exact DuckDB twin and the gate is a
-    //     full hash match instead of rows-only ---
+    // --- LLM ops: curation sibling — the same composed pipeline with
+    //     the near-dup stage OFF: md5 dedup winner, quality gate, hash
+    //     sample and prefix-sum packing alone ---
     Gate("q_curate_sql", (s, dir) => {
       Curation.curate(Tables.documents(s, dir), "doc_id", "text",
           "n_chars", Curation.Config(minQuality = 0.2, sampleRate = 0.9,
@@ -640,10 +630,9 @@ object CurationGates {
 
     // --- LLM ops: the composed pipeline with the pairwise near-dup
     //     stage ON and deterministic — exact 3-gram Jaccard pairs
-    //     (PPJoin-pruned) replace the xxhash64 MinHash estimates, so the
-    //     ENTIRE five-stage composition (dedup -> quality -> sample ->
-    //     near-dup anti-join -> packing) hash-matches a DuckDB twin;
-    //     q_curate (LSH face) stays rows-only by hash construction.
+    //     (PPJoin-pruned) replace the MinHash estimates, so the ENTIRE
+    //     five-stage composition (dedup -> quality -> sample -> near-dup
+    //     anti-join -> packing) hash-matches a DuckDB twin.
     //     Threshold 0.8 (practical near-dup range): the PPJoin prefix is
     //     |A|(1-t)+1, so t=0.5 made every prefix HALF the doc — at 0.8
     //     the candidate join carries a fifth of the shingles for the

@@ -16,7 +16,7 @@ import Shared._
   * and decontamination. */
 object DedupGates {
 
-  /** DuckDB twin of [[graft.operators.Dedup.minHashSignaturePortable]]:
+  /** DuckDB twin of [[graft.operators.Dedup.minHashSignature]]:
     * CTE chain ending in `sigs(doc_id, sig)` — distinct 3-word shingles,
     * base-31 string keys, per-slot mix31 draws, min per slot, the k
     * mins gathered slot-ordered into a list. Docs with an empty shingle
@@ -28,12 +28,12 @@ object DedupGates {
        |  FROM documents),
        |""".stripMargin + MinhashSigCtesTok("mtoks", k)
 
-  /** DuckDB twin of [[graft.operators.Dedup.simHash64Portable]]: CTE
+  /** DuckDB twin of [[graft.operators.Dedup.simHash64]]: CTE
     * chain ending in `sfp(doc_id, fp)` — per-token mix31 draw pair
     * (hi << 31 | lo, 62 bits), per-bit votes over every token
     * OCCURRENCE, sign-of-vote fingerprint assembly. Docs with no
     * tokens get no sfp row (callers COALESCE to the kernel's 0). */
-  private def SimhashFpCtes(seed: Long): String =
+  private val SimhashFpCtes: String =
     s"""stoks AS (
        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS t
        |  FROM documents),
@@ -41,8 +41,8 @@ object DedupGates {
        |  SELECT doc_id, ${StringKey31Sql("token")} AS skey
        |  FROM (SELECT doc_id, unnest(t) AS token FROM stoks)),
        |sdraw AS (
-       |  SELECT doc_id, ${Mix31Sql("skey", seed.toString)} AS lo,
-       |    ${Mix31Sql("skey", (seed + 500009L).toString)} AS hi
+       |  SELECT doc_id, ${Mix31Sql("skey", "0")} AS lo,
+       |    ${Mix31Sql("skey", "500009")} AS hi
        |  FROM skeys),
        |svote AS (
        |  SELECT doc_id, j,
@@ -427,40 +427,34 @@ object DedupGates {
          |SELECT doc_id, source FROM rk WHERE rk = 1""".stripMargin),
 
     // --- LLM ops: incremental near-dup — batch MinHash sigs probed
-    //     against the corpus signature index via cross-frame LSH bands
-    //     (no oracle: xxhash64 signatures) ---
-    // PORTABLE backend since round 10: the cross-frame probe (new batch
-    // vs corpus signature index) is DuckDB-oracled end to end —
-    // signatures, shared band buckets, agreement threshold
+    //     against the corpus signature index via cross-frame LSH bands;
+    //     DuckDB-oracled end to end (signatures, shared slot-keyed band
+    //     buckets, agreement threshold) ---
     Gate("q_incr_neardup", (s, dir) => {
       val docs = Tables.documents(s, dir)
       def sigs(d: DataFrame) = d.select(col("doc_id").as("id"),
-        Dedup.minHashSignaturePortable(col("text"), n = 3, k = 32)
-          .as("sig"))
+        Dedup.minHashSignature(col("text"), n = 3, k = 32).as("sig"))
       IncrementalDedup.nearDupAgainst(
           sigs(docs.filter(col("source") =!= "src0")),
           sigs(docs.filter(col("source") === "src0")),
-          bands = 8, rowsPerBand = 4, minEstJaccard = 0.5,
-          portable = true)
+          bands = 8, rowsPerBand = 4, minEstJaccard = 0.5)
         .select(col("new_id"), col("corpus_id"),
           r6(col("est_jaccard")).as("est_jaccard_micro"))
     },
+      // one signature pass over ALL documents, then the new-batch side
+      // (source <> src0) probes the corpus side (src0) on the shared
+      // slot-keyed band buckets; est >= 0.5 is cnt >= 16 of 32 slots
+      // exactly
       s"""WITH ${MinhashSigCtes(32)},
          |sg AS (
          |  SELECT s.doc_id, d.source, s.sig
          |  FROM sigs s JOIN documents d USING (doc_id)),
-         |bd AS (
+         |bk AS (
          |  SELECT doc_id, source, sig, band,
-         |    list_reduce([0::BIGINT] ||
-         |        sig[band * 4 + 1 : band * 4 + 4],
-         |      (a, b) -> (a * 1000003 + b) % 2147483648) AS bfold
+         |    sig[band * 4 + 1 : band * 4 + 4] AS bucket
          |  FROM (SELECT doc_id, source, sig,
          |          unnest(generate_series(0, 7)) AS band
          |        FROM sg)),
-         |bk AS (
-         |  SELECT doc_id, source, sig, band,
-         |    ${Mix31Sql("bfold", "900001 + band")} AS bucket
-         |  FROM bd),
          |iprs AS (
          |  SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS corpus_id,
          |    a.sig AS sig_a, b.sig AS sig_b
@@ -511,22 +505,20 @@ object DedupGates {
          |    string_split_regex(trim(lower(text)), '\\s+'))), ' ')) AS bow_fingerprint
          |FROM documents""".stripMargin),
 
-    // --- LLM ops: MinHash signatures (no SQL oracle: xxhash64). The raw
-    //     array<bigint> is folded to ONE scalar per row: array columns are
-    //     unsortable by the driver's pandas row comparator (round-1 crash),
-    //     and the md5 of the joined signature pins every element anyway.
-    //     Null slots (empty shingle set) map to an explicit sentinel before
-    //     the join — concat_ws silently DROPS nulls, which would make
-    //     signatures differing only in null positions collide. PORTABLE
-    //     backend (mix31 over stringKey31 shingle keys) since round 10,
-    //     so the full signature is DuckDB-oracled; the xxhash64
-    //     production backend stays differentially pinned in DedupSpec
-    //     and exercised by the q_curate LSH face ---
+    // --- LLM ops: MinHash signatures. The raw array<bigint> is folded
+    //     to ONE scalar per row: array columns are unsortable by the
+    //     driver's pandas row comparator (round-1 crash), and the md5 of
+    //     the joined signature pins every element anyway. Null slots
+    //     (empty shingle set) map to an explicit sentinel before the
+    //     join — concat_ws silently DROPS nulls, which would make
+    //     signatures differing only in null positions collide. Every
+    //     draw is mix31 over stringKey31 shingle keys, so the full
+    //     signature is DuckDB-oracled ---
     Gate("q_minhash_sig", (s, dir) => {
       Tables.documents(s, dir).select(col("doc_id"),
         md5(concat_ws(",",
           transform(
-            Dedup.minHashSignaturePortable(col("text"), n = 3, k = 16),
+            Dedup.minHashSignature(col("text"), n = 3, k = 16),
             e => coalesce(e.cast("string"), lit("null"))))).as("sig_md5"))
     },
       s"""WITH ${MinhashSigCtes(16)}
@@ -536,17 +528,16 @@ object DedupGates {
          |    ELSE array_to_string(s.sig, ',') END) AS sig_md5
          |FROM documents d LEFT JOIN sigs s USING (doc_id)""".stripMargin),
 
-    // --- LLM ops: MinHash+LSH banded candidate pairs — the portable
-    //     backend makes the ENTIRE pipeline (signatures, band-fold
-    //     buckets, bucket cap, pair agreement rates) oracle-checkable ---
+    // --- LLM ops: MinHash+LSH banded candidate pairs — the ENTIRE
+    //     pipeline (signatures, slot-keyed band buckets, bucket cap, pair
+    //     agreement rates) is oracle-checked ---
     Gate("q_minhash_lsh_pairs", (s, dir) => {
-      Dedup.minHashLshPairsPortable(Tables.documents(s, dir), "doc_id",
-          "text")
+      Dedup.minHashLshPairs(Tables.documents(s, dir), "doc_id", "text")
         .select(col("id_a"), col("id_b"), r6(col("est_jaccard"))
           .as("est_jaccard_micro"))
     },
-      // full portable LSH pipeline: band fold + mix31 bucket, viral-bucket
-      // cap, within-bucket pairs, signature agreement rate
+      // full LSH pipeline: slot-keyed bands, viral-bucket cap,
+      // within-bucket pairs, signature agreement rate
       s"""WITH ${MinhashSigCtes(32)},
          |$MinhashBandCtes,
          |mpairs AS (
@@ -566,7 +557,7 @@ object DedupGates {
     //     own scale contract (Dedup.scala: "runs on a SAMPLE at corpus
     //     scale — the exact side is worst-case quadratic"): a
     //     deterministic bernoulliSample feeds the probe, the oracle
-    //     samples with the identical portable hash ---
+    //     samples with the identical mix31 hash ---
     Gate("q_lsh_tuning", (s, dir) => {
       Dedup.lshOperatingPoint(
         Sampling.bernoulliSample(Tables.documents(s, dir), "doc_id", 0.5,
@@ -574,10 +565,6 @@ object DedupGates {
         "doc_id", "text", n = 3, threshold = 0.5, bands = 8,
         rowsPerBand = 4)
     },
-      // incremental near-dup: one signature pass over ALL documents, then
-      // the new-batch side (source <> src0) probes the corpus side (src0)
-      // on the shared portable band buckets; est >= 0.5 is cnt >= 16 of
-      // 32 slots exactly
       // q_lsh_tuning twin: the q_minhash_lsh_pairs candidate CTEs + an
       // exact all-pairs Jaccard ground truth off the SAME msh shingle
       // sets, full-outer confusion counts; the S-curve constant is the
@@ -620,7 +607,7 @@ object DedupGates {
          |  ${Dedup.theoryCaptureMicro(0.5, 8, 4)} AS theory_capture_micro
          |FROM fo""".stripMargin),
 
-    // --- LLM ops: SimHash near-dup pairs via chunk blocking (rows-only).
+    // --- LLM ops: SimHash near-dup pairs via chunk blocking.
     //     maxDist=3 -> classic 4x16-bit pigeonhole: recall 1.0 by
     //     construction AND 16-bit bucket keys keep candidate volume
     //     ~n^2/65536 per chunk. Larger d is supported by the operator
@@ -630,20 +617,17 @@ object DedupGates {
     //     entry was q_dedup_jaccard's cache pollution, not simhash);
     //     d=3 since round 3 is a WORKLOAD change (pairs at hamming 4..10
     //     no longer emitted), so r3+ bench times for this query are not
-    //     comparable to r1/r2. PORTABLE 62-bit backend since round 10:
-    //     the whole pipeline (fingerprints, chunk keys, bucket cap,
-    //     Hamming filter) is DuckDB-oracled; chunk blocking itself is
-    //     hash-free, so the machinery is shared with the xxhash64
-    //     production face ---
+    //     comparable to r1/r2. The whole pipeline (62-bit fingerprints,
+    //     chunk keys, bucket cap, Hamming filter) is DuckDB-oracled ---
     Gate("q_simhash_pairs", (s, dir) => {
-      Dedup.simHashPairsPortable(Tables.documents(s, dir), "doc_id",
-          "text", maxDist = 3)
+      Dedup.simHashPairs(Tables.documents(s, dir), "doc_id", "text",
+          maxDist = 3)
         .select(col("id_a"), col("id_b"), col("hamming").cast("long")
           .as("hamming"))
     },
-      // portable simhash pairs: 4 x 16-bit chunk blocking (pigeonhole for
+      // simhash pairs: 4 x 16-bit chunk blocking (pigeonhole for
       // maxDist 3), left-side bucket cap, Hamming via bit_count(xor)
-      s"""WITH ${SimhashFpCtes(0L)},
+      s"""WITH $SimhashFpCtes,
          |sall AS (
          |  SELECT d.doc_id, COALESCE(f.fp, 0) AS fp
          |  FROM documents d LEFT JOIN sfp f USING (doc_id)),
@@ -667,16 +651,13 @@ object DedupGates {
          |  CAST(bit_count(xor(fa, fb)) AS BIGINT) AS hamming
          |FROM sprs WHERE bit_count(xor(fa, fb)) <= 3""".stripMargin),
 
-    // --- LLM ops: SimHash fingerprints (no SQL oracle: xxhash64) ---
-    // --- LLM ops: SimHash fingerprint on the PORTABLE 62-bit backend
-    //     (round 10) — the per-token mix31 draws are recomputed by the
-    //     DuckDB oracle bit-for-bit; the xxhash64 64-bit face stays the
-    //     production default (DedupSpec differential) ---
+    // --- LLM ops: SimHash fingerprints — the per-token mix31 draws
+    //     are recomputed by the DuckDB oracle bit-for-bit ---
     Gate("q_simhash", (s, dir) => {
       Tables.documents(s, dir).select(col("doc_id"),
-        Dedup.simHash64Portable(col("text")).as("simhash62"))
+        Dedup.simHash64(col("text")).as("simhash62"))
     },
-      s"""WITH ${SimhashFpCtes(0L)}
+      s"""WITH $SimhashFpCtes
          |SELECT d.doc_id, COALESCE(f.fp, 0) AS simhash62
          |FROM documents d LEFT JOIN sfp f USING (doc_id)""".stripMargin),
 

@@ -394,7 +394,7 @@ object Fixtures {
         .filter(!col("is_test"))
       graft.ml.QualityClassifier.train(trainDf, "text", "label",
         numFeatures = QClsFeatures, maxIter = 30,
-        portableSeed = Some(QClsSeed))
+        seed = QClsSeed)
     })
 
   /** The graph gates' ONE trade-graph edge prep per (session, sf dir):

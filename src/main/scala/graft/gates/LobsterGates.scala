@@ -1259,27 +1259,29 @@ object LobsterGates {
          |  ${R6("SUM(sign(signal) * ret)")} AS pnl_sign_micro
          |FROM sig GROUP BY 1""".stripMargin),
 
-    // --- J9/M12: bet-size normalization by per-group median ---
+    // --- J9/M12: bet-size normalization by per-group median, through
+    //     Strategy.betSizedPnl: suppliers play tickers, line revenue the
+    //     PnL, each line's extended price a daily close at unit volume ---
     Gate("q_j9_bet_size", (s, dir) => {
       val li = Tables.lineitem(s, dir)
-      val pnl = li.groupBy(col("l_suppkey"))
+      val pnl = li.groupBy(col("l_suppkey").as("ticker"))
         .agg(moneySum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .as("revenue"))
-      val med = li.groupBy(col("l_suppkey"))
-        .agg(expr("percentile(l_extendedprice, 0.5)").as("med_price"))
-      pnl.join(med, Seq("l_suppkey"))
-        .select(col("l_suppkey"),
-          r6(col("revenue") / col("med_price")).as("sized_micro"))
+          .as("pnl"))
+      val bars = li.select(col("l_suppkey").as("ticker"),
+        col("l_extendedprice").as("close"), lit(1L).as("volume"))
+      graft.domain.Strategy.betSizedPnl(pnl, bars)
+        .select(col("ticker"), r6(col("ppd")).as("ppd_micro"))
     },
       s"""WITH pnl AS (
-         |  SELECT l_suppkey,
-         |    ${MoneySum("l_extendedprice * (1.0 - l_discount)")} AS revenue
+         |  SELECT l_suppkey AS ticker,
+         |    ${MoneySum("l_extendedprice * (1.0 - l_discount)")} AS pnl
          |  FROM lineitem GROUP BY 1),
          |med AS (
-         |  SELECT l_suppkey, quantile_cont(l_extendedprice, 0.5) AS med_price
+         |  SELECT l_suppkey AS ticker,
+         |    quantile_cont(l_extendedprice * 1, 0.5) AS med_dollar_vol
          |  FROM lineitem GROUP BY 1)
-         |SELECT pnl.l_suppkey, ${R6("revenue / med_price")} AS sized_micro
-         |FROM pnl JOIN med ON pnl.l_suppkey = med.l_suppkey""".stripMargin),
+         |SELECT ticker, ${R6("pnl / (med_dollar_vol * 0.001)")} AS ppd_micro
+         |FROM pnl JOIN med USING (ticker)""".stripMargin),
 
     // --- A14: Mann-Whitney U between two event-type samples per user ---
     Gate("q_a14_mannwhitney", (s, dir) => {

@@ -107,9 +107,9 @@ object MlGates {
   val gates: Seq[Gate] = Seq(
 
     // --- LLM ops: fastText-style quality classifier — FULLY ORACLED
-    //     since r16 (was rows-only): train LR on PORTABLE-hashed BoW
-    //     (mix31∘stringKey31 — same accuracy as the Murmur3 production
-    //     face, reproducible in plain SQL) against the planted label
+    //     since r16 (was rows-only): train LR on hashed BoW
+    //     (mix31∘stringKey31, the classifier's only feature hash,
+    //     reproducible in plain SQL) against the planted label
     //     (quality heuristic at 0.6 — ~50/50 at these SFs), persist the
     //     LEARNED weights as a per-run parquet fixture, score the
     //     held-out split with the pure-Column margin fold. The oracle
@@ -126,7 +126,7 @@ object MlGates {
       val scorer = qClsSharedScorer(s, dir)
       writeScorer(s, scorer, QClsWeightsDir)
       val margin = graft.ml.QualityClassifier.marginExpr(col("text"),
-        scorer, Some(QClsSeed))
+        scorer, QClsSeed)
       tagged.filter(col("is_test"))
         .withColumn("__pred", (margin >= 0.0).cast("double"))
         .agg(count(lit(1)).as("n_test"),
@@ -181,7 +181,7 @@ object MlGates {
       val scorer = qClsSharedScorer(s, dir)
       writeScorer(s, scorer, QScoreWeightsDir)
       val margin = graft.ml.QualityClassifier.marginExpr(col("text"),
-        scorer, Some(QClsSeed))
+        scorer, QClsSeed)
       tagged.filter(col("is_test"))
         .select(col("doc_id"), r6(margin).as("margin_micro"),
           (margin >= 0.0).as("keep"))

@@ -256,22 +256,16 @@ object Shared {
       |      - LEAST(upper_ratio * 2.0, 0.5)))""".stripMargin
 
   /** DuckDB twin of the banding stage of
-    * [[graft.operators.Dedup.minHashLshPairs]] (8 bands of 4 slots,
-    * portable backend) over `sigs(doc_id, sig)`: `bnd` folds each band,
-    * `bkt` mix31-buckets it, `bsz` sizes each (band, bucket). */
+    * [[graft.operators.Dedup.minHashLshPairs]] (8 bands of 4 slots) over
+    * `sigs(doc_id, sig)`: `bkt` keys each band on its own slot values
+    * `sig[band*4+1 : band*4+4]`, `bsz` sizes each (band, bucket). */
   private[gates] val MinhashBandCtes: String =
-    s"""bnd AS (
+    """bkt AS (
        |  SELECT doc_id, sig, band,
-       |    list_reduce([0::BIGINT] ||
-       |        sig[band * 4 + 1 : band * 4 + 4],
-       |      (a, b) -> (a * 1000003 + b) % 2147483648) AS bfold
+       |    sig[band * 4 + 1 : band * 4 + 4] AS bucket
        |  FROM (SELECT doc_id, sig,
        |          unnest(generate_series(0, 7)) AS band
        |        FROM sigs)),
-       |bkt AS (
-       |  SELECT doc_id, sig, band,
-       |    ${Mix31Sql("bfold", "900001 + band")} AS bucket
-       |  FROM bnd),
        |bsz AS (
        |  SELECT band, bucket, COUNT(*) AS bn FROM bkt GROUP BY 1, 2)""".stripMargin
 

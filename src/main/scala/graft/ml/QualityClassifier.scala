@@ -22,17 +22,17 @@ import graft.functions.TextFunctions
   *     cluster; the scan stays in whole-stage codegen.
   *
   * Parity contract: training and scoring share ONE feature hash —
-  * `pmod(hash(lower_token), numFeatures)` (SQL Murmur3) — because the
-  * trainer featurizes with that very expression. `HashingTF` is
-  * deliberately NOT used: its murmur3 (`hashUnsafeBytes2`) differs from
-  * SQL `hash()` (`hashUnsafeBytes` tail handling), so HashingTF indices
-  * are not reproducible in a pure-Column scorer — the mismatch is
-  * pinned in QualityClassifierSpec as the reason for this design. The
-  * one UDF (index list -> ml Vector) runs at TRAINING time over the
-  * labeled sample only; the 100 TB scoring pass is UDF-free. Scoring
-  * sums weights in token order vs ml's index-order dot product —
-  * identical reals, FP-associativity differences only (spec bounds
-  * them at 1e-9 on the probability). */
+  * `mix31(stringKey31(lower_token), seed) % numFeatures`, the portable
+  * chain from [[graft.operators.Sampling]] — because the trainer
+  * featurizes with that very expression, and the whole scoring fold is
+  * reproducible in plain SQL on another engine (the DuckDB oracle
+  * gates). `HashingTF` is deliberately NOT used: its index is a murmur3
+  * of the token bytes, not reproducible in a pure-Column scorer that
+  * must also replay under the oracle. The one UDF (index list -> ml
+  * Vector) runs at TRAINING time over the labeled sample only; the
+  * 100 TB scoring pass is UDF-free. Scoring sums weights in token order
+  * vs ml's index-order dot product — identical reals, FP-associativity
+  * differences only (spec bounds them at 1e-9 on the probability). */
 object QualityClassifier {
 
   /** Learned scorer: weights[i] for hashed-token index i + intercept. */
@@ -41,69 +41,56 @@ object QualityClassifier {
     def numFeatures: Int = weights.length
   }
 
-  /** Hashed-token feature indices, the SHARED train/deploy hash.
-    * `portableSeed = None` uses SQL Murmur3 `hash()` (the production
-    * face — fastest codegen path); `Some(seed)` uses the engine-portable
-    * mix31∘stringKey31 chain from [[graft.operators.Sampling]] so the
-    * whole scoring fold is reproducible in plain SQL on another engine
-    * (the DuckDB oracle face — same accuracy, pricier per token). */
+  /** Hashed-token feature indices, the SHARED train/deploy hash. */
   private def featureIdx(text: Column, numFeatures: Int,
-                         portableSeed: Option[Long]): Column =
+                         seed: Long): Column =
     transform(
       coalesce(TextFunctions.tokens(lower(text)),
         array().cast("array<string>")),
-      t => tokenIdx(t, numFeatures, portableSeed))
+      t => tokenIdx(t, numFeatures, seed))
 
   /** One token's hashed feature index in [0, numFeatures). */
-  private def tokenIdx(tok: Column, numFeatures: Int,
-                       portableSeed: Option[Long]): Column =
-    portableSeed match {
-      case None => pmod(hash(tok), lit(numFeatures)).cast("long")
-      case Some(seed) =>
-        graft.operators.Sampling.mix31(
-          graft.operators.Sampling.stringKey31(tok), lit(seed)) %
-          lit(numFeatures.toLong)
-    }
+  private def tokenIdx(tok: Column, numFeatures: Int, seed: Long): Column =
+    graft.operators.Sampling.mix31(
+      graft.operators.Sampling.stringKey31(tok), lit(seed)) %
+      lit(numFeatures.toLong)
 
   private[ml] def featurize(df: DataFrame, textCol: String,
-                            numFeatures: Int,
-                            portableSeed: Option[Long] = None): DataFrame = {
+                            numFeatures: Int, seed: Long): DataFrame = {
     val toVec = udf((idxs: Seq[Long]) => {
       val a = new Array[Double](numFeatures)
       if (idxs != null) idxs.foreach(i => a(i.toInt) += 1.0)
       org.apache.spark.ml.linalg.Vectors.dense(a)
     })
     df.withColumn("features",
-      toVec(featureIdx(col(textCol), numFeatures, portableSeed)
+      toVec(featureIdx(col(textCol), numFeatures, seed)
         .cast("array<long>")))
   }
 
   /** Train on (textCol, labelCol in {0.0, 1.0}); returns the dense
     * scorer. numFeatures is the hash width — collisions are part of the
     * model (train and deploy share them by construction).
-    * `portableSeed`: see [[featureIdx]] — must match the one handed to
+    * `seed` keys the feature hash and must match the one handed to
     * [[scoreExpr]]. */
   def train(df: DataFrame, textCol: String, labelCol: String,
             numFeatures: Int = 1024, maxIter: Int = 50,
-            regParam: Double = 1e-4,
-            portableSeed: Option[Long] = None): LinearScorer = {
+            regParam: Double = 1e-4, seed: Long): LinearScorer = {
     val lr = new LogisticRegression().setMaxIter(maxIter)
       .setRegParam(regParam).setFeaturesCol("features")
       .setLabelCol(labelCol)
     val model: LogisticRegressionModel =
-      lr.fit(featurize(df, textCol, numFeatures, portableSeed))
+      lr.fit(featurize(df, textCol, numFeatures, seed))
     LinearScorer(model.coefficients.toArray, model.intercept)
   }
 
   /** The deployment face: P(label=1 | text) as a pure Column expression.
     * sigmoid(intercept + sum over token OCCURRENCES of
-    * weights[pmod(hash(lower token), n)]) — occurrence-summing equals
+    * weights[featureIdx(lower token)]) — occurrence-summing equals
     * the dot product with HashingTF's term-frequency vector. Empty/null
     * docs score sigmoid(intercept) (the model's prior), matching ml's
     * all-zero feature vector. */
-  def scoreExpr(text: Column, scorer: LinearScorer,
-                portableSeed: Option[Long] = None): Column = {
-    val margin = marginExpr(text, scorer, portableSeed)
+  def scoreExpr(text: Column, scorer: LinearScorer, seed: Long): Column = {
+    val margin = marginExpr(text, scorer, seed)
     (lit(1.0) / (lit(1.0) + exp(-margin))).as("quality_prob")
   }
 
@@ -113,8 +100,7 @@ object QualityClassifier {
     * arithmetic over the stored weights — bit-identical on any IEEE
     * engine folding the same token order, which is what the DuckDB
     * oracle face gates. margin >= 0 IS the prob >= 0.5 decision. */
-  def marginExpr(text: Column, scorer: LinearScorer,
-                 portableSeed: Option[Long] = None): Column = {
+  def marginExpr(text: Column, scorer: LinearScorer, seed: Long): Column = {
     val wArr = array(scorer.weights.map(lit): _*)
     // bind tokens once (1-element transform idiom) so the tokenizer
     // regex runs once per row, not once per token lookup
@@ -122,14 +108,13 @@ object QualityClassifier {
       aggregate(coalesce(t, array().cast("array<string>")),
         lit(scorer.intercept),
         (acc, tok) => acc + element_at(wArr,
-          tokenIdx(tok, scorer.numFeatures, portableSeed).cast("int") + 1)))
+          tokenIdx(tok, scorer.numFeatures, seed).cast("int") + 1)))
     element_at(perDoc, 1)
   }
 
   /** Keep documents scoring at or above `minProb` — the corpus-side
     * filter pass. Row-local, zero shuffles. */
   def filterByScore(df: DataFrame, textCol: String, scorer: LinearScorer,
-                    minProb: Double,
-                    portableSeed: Option[Long] = None): DataFrame =
-    df.filter(scoreExpr(col(textCol), scorer, portableSeed) >= minProb)
+                    minProb: Double, seed: Long): DataFrame =
+    df.filter(scoreExpr(col(textCol), scorer, seed) >= minProb)
 }

@@ -30,20 +30,10 @@ object Curation {
     *                     disables the stage
     * @param nearDupExact run the near-dup stage on EXACT n-gram Jaccard
     *                     ([[Dedup.jaccardPairs]], PPJoin-pruned) instead
-    *                     of MinHash-LSH estimates. Deterministic and
-    *                     SQL-expressible — the q_curate_jaccard gate
-    *                     hash-matches the WHOLE pipeline with the
-    *                     pairwise stage on (the LSH face stays rows-only:
-    *                     DuckDB cannot reproduce xxhash64 signatures).
-    *                     Costlier than LSH at equal recall; the LSH face
-    *                     remains the 100 TB default.
-    * @param nearDupPortable run the LSH stage on the PORTABLE MinHash
-    *                     backend ([[Dedup.minHashLshPairsPortable]]:
-    *                     mix31 signatures and band buckets) — same plan
-    *                     and guards as the xxhash64 default, but every
-    *                     draw is BIGINT-reproducible, so the q_curate
-    *                     gate hash-matches the whole pipeline with the
-    *                     LSH stage ON. Ignored when nearDupExact is set.
+    *                     of MinHash-LSH estimates. Costlier than LSH at
+    *                     equal recall; the LSH face remains the 100 TB
+    *                     default. Both faces are oracle-checked (the
+    *                     q_curate_jaccard and q_curate gates).
     * @param packBudget   tokens (cost units) per training chunk
     * @param groupCols    packing scope (e.g. language) — chunks never
     *                     span groups
@@ -52,7 +42,6 @@ object Curation {
                           sampleRate: Double = 1.0,
                           nearDupJaccard: Double = 0.8,
                           nearDupExact: Boolean = false,
-                          nearDupPortable: Boolean = false,
                           packBudget: Long = 16384L,
                           seed: Long = 0L,
                           groupCols: Seq[String] = Nil)
@@ -199,13 +188,10 @@ object Curation {
     sampled.join(pairs, Seq(idCol), "left_anti")
   }
 
-  /** The LSH pair stage on the configured backend (xxhash64 production
-    * default / portable mix31), thresholded at the config's Jaccard. */
+  /** The LSH pair stage, thresholded at the config's Jaccard. */
   private def lshPairs(sampled: DataFrame, idCol: String,
                        textCol: String, cfg: Config): DataFrame =
-    (if (cfg.nearDupPortable)
-       Dedup.minHashLshPairsPortable(sampled, idCol, textCol)
-     else Dedup.minHashLshPairs(sampled, idCol, textCol))
+    Dedup.minHashLshPairs(sampled, idCol, textCol)
       .filter(col("est_jaccard") >= cfg.nearDupJaccard)
 
   /** Config for [[curateFull]], the round-8 pipeline: segment-level

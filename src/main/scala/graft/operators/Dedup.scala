@@ -272,67 +272,37 @@ object Dedup {
   }
 
   /** MinHash signatures: k independent permutation approximations;
-    * signature[i] = min over shingles of xxhash64(seed_i, h(shingle)).
-    * Computed by the native codegen'd kernel
-    * [[graft.plans.MinHashSigExpr]] — one primitive while-loop per row,
-    * zero per-shingle allocations, no interpreted-lambda seam (round 5;
-    * bit-equal to the HOF twin below by DedupSpec). Empty shingle sets
+    * slot i carries min over shingles of
+    * `mix31(stringKey31(shingle), i*1000003)`. Every draw is plain
+    * BIGINT arithmetic ([[Sampling.mix31]] / [[Sampling.stringKey31]]),
+    * so the DuckDB oracle recomputes signatures and everything banded
+    * from them bit for bit. Computed by the native codegen'd kernel
+    * [[graft.plans.MinHashExpr]] — one primitive while-loop per row,
+    * zero per-shingle allocations, no interpreted-lambda seam
+    * (bit-equal to the HOF twin below by DedupSpec). Empty shingle sets
     * yield all-null signatures. Linear scan, no shuffle. */
   def minHashSignature(text: Column, n: Int, k: Int): Column = {
     import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(graft.plans.MinHashSigExpr(
+    GraftColumnBridge.column(graft.plans.MinHashExpr(
         GraftColumnBridge.expression(shingles(text, n)), k))
       .as("minhash_sig")
   }
 
-  /** Interpreted higher-order twin of [[minHashSignature]], kept for
-    * differential verification of the native expression (DedupSpec
-    * asserts bit equality). ONE aggregate pass carries all k running
-    * minimums in an array accumulator — but every fold step still
+  /** Interpreted Column twin of [[minHashSignature]], built from the
+    * SAME [[Sampling.mix31]]/[[Sampling.stringKey31]] Column forms the
+    * SQL oracle twins mirror — the differential link between the native
+    * kernel and the DuckDB gate. ONE aggregate pass carries all k
+    * running minimums in an array accumulator, but every fold step
     * allocates a k-element array per shingle, which is why the native
-    * kernel replaced it in the hot path. */
+    * kernel runs the hot path. */
   private[graft] def minHashSignatureHof(text: Column, n: Int,
                                          k: Int): Column = {
-    val hashes = transform(shingles(text, n), s => xxhash64(s))
-    val init = array((0 until k).map(_ => lit(Long.MaxValue)): _*)
-    aggregate(hashes, init,
-      (acc, h) => array((0 until k).map { i =>
-        least(element_at(acc, i + 1), xxhash64(lit(i), h))
-      }: _*),
-      acc => transform(acc, v =>
-        when(v === Long.MaxValue, lit(null).cast("long")).otherwise(v)))
-      .as("minhash_sig")
-  }
-
-  /** PORTABLE face of [[minHashSignature]]: slot i carries min over
-    * shingles of `mix31(stringKey31(shingle), seed + i*1000003)` — every
-    * draw is plain BIGINT arithmetic ([[Sampling.mix31]] /
-    * [[Sampling.stringKey31]]), reproducible bit-for-bit in any SQL
-    * engine, which is what lets the MinHash gates run under the DuckDB
-    * oracle (the xxhash64 face stays the production backend: stronger
-    * hash, no per-character fold). Same native-kernel shape
-    * ([[graft.plans.MinHashSigPortableExpr]]); DedupSpec pins bit
-    * equality against the interpreted Column twin below. */
-  def minHashSignaturePortable(text: Column, n: Int, k: Int,
-                               seed: Long = 0L): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(graft.plans.MinHashSigPortableExpr(
-        GraftColumnBridge.expression(shingles(text, n)), k, seed))
-      .as("minhash_sig")
-  }
-
-  /** Interpreted Column twin of [[minHashSignaturePortable]], built
-    * from the SAME [[Sampling.mix31]]/[[Sampling.stringKey31]] Column
-    * forms the SQL oracle twins mirror — the differential link between
-    * the native kernel and the DuckDB gate. */
-  private[graft] def minHashSignaturePortableHof(text: Column, n: Int,
-      k: Int, seed: Long = 0L): Column = {
     val keys = transform(shingles(text, n), s => Sampling.stringKey31(s))
     val init = array((0 until k).map(_ => lit(Long.MaxValue)): _*)
     aggregate(keys, init,
       (acc, key) => array((0 until k).map { i =>
         least(element_at(acc, i + 1),
-          Sampling.mix31(key, lit(seed + i * 1000003L)))
+          Sampling.mix31(key, lit(i * 1000003L)))
       }: _*),
       acc => transform(acc, v =>
         when(v === Long.MaxValue, lit(null).cast("long")).otherwise(v)))
@@ -367,20 +337,6 @@ object Dedup {
     minHashLshPairsFromSigs(sig, bands, rowsPerBand, maxBucket)
   }
 
-  /** [[minHashLshPairs]] on the PORTABLE signature/bucket backend —
-    * the oracle-checkable face (same plan, same persist barrier). */
-  def minHashLshPairsPortable(df: DataFrame, idCol: String,
-      textCol: String, n: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
-      maxBucket: Int = 4096, seed: Long = 0L): DataFrame = {
-    val k = bands * rowsPerBand
-    val sig = graft.core.Par
-      .fanOut(df.select(col(idCol).as("id"),
-        minHashSignaturePortable(col(textCol), n, k, seed).as("sig")),
-        col("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    minHashLshPairsFromSigsPortable(sig, bands, rowsPerBand, maxBucket)
-  }
-
   /** Standard LSH hygiene shared by the MinHash and SimHash pair
     * generators: a viral bucket of B rows yields B^2/2 candidate pairs in
     * the bucket self-join, so ONE degenerate key (all-empty boilerplate,
@@ -407,26 +363,6 @@ object Dedup {
       .drop("__bn")
   }
 
-  /** xxhash64 band-bucket key over a signature slice — the production
-    * LSH bucket (shared with [[IncrementalDedup]]'s cross-frame join,
-    * so an index built by one run probes against any later run). */
-  private[operators] def xxBandBucket(sig: Column, b: Column,
-                                      rowsPerBand: Int): Column =
-    xxhash64(lit("band"), b,
-      concat_ws(",", slice(sig, b * rowsPerBand + 1, lit(rowsPerBand))))
-
-  /** PORTABLE band-bucket key: base-1000003 fold of the band's slots
-    * (mix31 outputs < 2^31, so the fold stays in [0, 2^51)) through
-    * [[Sampling.mix31]] with a per-band seed — BIGINT-reproducible by
-    * the SQL oracle. Only valid over PORTABLE signatures. */
-  private[operators] def portableBandBucket(sig: Column, b: Column,
-                                            rowsPerBand: Int): Column =
-    Sampling.mix31(
-      aggregate(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)),
-        lit(0L),
-        (a, v) => pmod(a * lit(1000003L) + v, lit(2147483648L))),
-      lit(900001L) + b)
-
   /** Band-bucket pair generation over a precomputed `(id, sig)` frame —
     * the caller owns the signature frame's persistence and cleanup, so
     * long-lived pipelines can unpersist deterministically (and reuse one
@@ -435,47 +371,16 @@ object Dedup {
     * Degenerate-input guards (both essential at corpus scale):
     *  - all-null signatures (empty/shingle-less docs, the
     *    [[minHashSignature]] contract) are dropped BEFORE banding — they
-    *    carry zero similarity evidence, yet `concat_ws` maps every
-    *    all-null band slice to "", so without the filter every empty doc
-    *    in the corpus lands in ONE bucket per band: 10M boilerplate-empty
-    *    rows would mean O(10M^2) pairs;
+    *    carry zero similarity evidence, yet every all-null band slice
+    *    is the same key, so without the filter every empty doc in the
+    *    corpus lands in ONE bucket per band: 10M boilerplate-empty rows
+    *    would mean O(10M^2) pairs;
     *  - buckets over `maxBucket` rows are dropped (see [[capBuckets]]
     *    for the overflow policy). */
   def minHashLshPairsFromSigs(sig: DataFrame, bands: Int, rowsPerBand: Int,
-                              maxBucket: Int = 4096): DataFrame =
-    lshPairsFromSigs(sig, bands, rowsPerBand, maxBucket,
-      xxBandBucket(_, _, rowsPerBand))
-
-  /** [[minHashLshPairsFromSigs]] over PORTABLE signatures
-    * ([[minHashSignaturePortable]]): the band bucket is a base-1000003
-    * fold of the band's slots passed through [[Sampling.mix31]] with a
-    * per-band seed — plain BIGINT arithmetic end to end (slot values
-    * are mix31 outputs < 2^31, so the fold never leaves [0, 2^51)),
-    * reproducible by the DuckDB oracle. Same banding plan, same
-    * degenerate-input guards. */
-  def minHashLshPairsFromSigsPortable(sig: DataFrame, bands: Int,
-      rowsPerBand: Int, maxBucket: Int = 4096): DataFrame =
-    lshPairsFromSigs(sig, bands, rowsPerBand, maxBucket,
-      portableBandBucket(_, _, rowsPerBand))
-
-  /** Explode the live signatures of an `(id, sig)` frame into LSH band
-    * buckets: (id, sig, band, bucket). All-null signatures are dropped
-    * first (see [[minHashLshPairsFromSigs]]). Shared by the self-join
-    * pairs and [[IncrementalDedup.nearDupAgainst]]'s cross-frame join. */
-  private[operators] def bandedSigs(sig: DataFrame, bands: Int,
-      bucket: (Column, Column) => Column): DataFrame =
-    // a signature is all-null or all-non-null by construction, so the
-    // first element decides
-    sig.filter(element_at(col("sig"), 1).isNotNull)
-      .select(col("id"), col("sig"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => bucket(col("sig"), b))).as(Seq("band", "bucket")))
-
-  private def lshPairsFromSigs(sig: DataFrame, bands: Int,
-      rowsPerBand: Int, maxBucket: Int,
-      bucket: (Column, Column) => Column): DataFrame = {
+                              maxBucket: Int = 4096): DataFrame = {
     val k = bands * rowsPerBand
-    val banded = bandedSigs(sig, bands, bucket)
+    val banded = bandedSigs(sig, bands, rowsPerBand)
     // signatures ride the self-join so the agreement rate is computed
     // in-line (re-joining them per distinct pair was measured ~1 s
     // slower at sf0.1 — two more exchanges; at larger signature widths
@@ -493,72 +398,64 @@ object Dedup {
     l.join(r, Seq("band", "bucket"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        (size(filter(zip_with(col("sig_a"), col("sig_b"),
-          (x, y) => (x === y).cast("int")), v => v === 1)).cast("double")
-          / lit(k.toDouble)).as("est_jaccard"))
+        agreement(col("sig_a"), col("sig_b"), k).as("est_jaccard"))
       .distinct()
   }
 
-  /** 64-bit SimHash of the token stream: per-token xxhash64; fingerprint
-    * bit j = sign of the sum over tokens of bit_j(hash)∈{-1,+1}. Near-dups
-    * have small Hamming distance. Computed by the native codegen'd kernel
-    * [[graft.plans.SimHash64Expr]] — one primitive while-loop per row
-    * with a stack vote array, zero per-token allocations (round 5;
-    * bit-equal to the HOF twin below by DedupSpec). */
+  /** Estimated Jaccard of two k-slot signatures: the share of slots on
+    * which they agree. */
+  private[operators] def agreement(a: Column, b: Column, k: Int): Column =
+    size(filter(zip_with(a, b, (x, y) => (x === y).cast("int")),
+      v => v === 1)).cast("double") / lit(k.toDouble)
+
+  /** Explode the live signatures of an `(id, sig)` frame into LSH band
+    * buckets: (id, sig, band, bucket). A band's bucket is its own
+    * `rowsPerBand` slot values, `slice(sig, b*r+1, r)`: two signatures
+    * share a bucket exactly when they agree on every slot of the band,
+    * which is the banding condition itself — no bucket hash, so no
+    * spurious collisions, and the key is one codegen'd slice. All-null
+    * signatures are dropped first (see [[minHashLshPairsFromSigs]]).
+    * Shared by the self-join pairs and
+    * [[IncrementalDedup.nearDupAgainst]]'s cross-frame join, so an index
+    * built by one run probes against any later run. */
+  private[operators] def bandedSigs(sig: DataFrame, bands: Int,
+                                    rowsPerBand: Int): DataFrame =
+    // a signature is all-null or all-non-null by construction, so the
+    // first element decides
+    sig.filter(element_at(col("sig"), 1).isNotNull)
+      .select(col("id"), col("sig"),
+        posexplode(transform(sequence(lit(0), lit(bands - 1)),
+          b => slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))))
+          .as(Seq("band", "bucket")))
+
+  /** SimHash of the token stream: a 62-bit fingerprint whose per-token
+    * hash is two [[Sampling.mix31]] draws over the token's
+    * [[Sampling.stringKey31]] key (hi << 31 | lo); bit j = sign of the
+    * sum over tokens of bit_j(hash) in {-1,+1}. Near-dups have small
+    * Hamming distance. BIGINT-reproducible end to end, so the
+    * fingerprint AND the Hamming pairs derived from it run under the
+    * DuckDB oracle. Computed by the native codegen'd kernel
+    * [[graft.plans.SimHashExpr]] — one primitive while-loop per row
+    * with a stack vote array, zero per-token allocations (bit-equal to
+    * the HOF twin below by DedupSpec). */
   def simHash64(text: Column): Column = {
     import org.apache.spark.sql.GraftColumnBridge
     val toks = TextFunctions.tokens(lower(text))
-    GraftColumnBridge.column(graft.plans.SimHash64Expr(
+    GraftColumnBridge.column(graft.plans.SimHashExpr(
         GraftColumnBridge.expression(toks)))
       .as("simhash64")
   }
 
-  /** Interpreted higher-order twin of [[simHash64]], kept for
-    * differential verification of the native expression (DedupSpec
-    * asserts bit equality): ONE aggregate pass carrying an array of
-    * 64 vote counters, assembled to a long in the finish lambda — but
-    * each fold step still allocates a 64-element array per token. */
+  /** Interpreted Column twin of [[simHash64]] (the differential link to
+    * the SQL-mirrored [[Sampling]] forms, as with the minhash twin): ONE
+    * aggregate pass carrying an array of 62 vote counters, assembled to
+    * a long in the finish lambda. */
   private[graft] def simHash64Hof(text: Column): Column = {
-    val toks = TextFunctions.tokens(lower(text))
-    val hashes = transform(toks, t => xxhash64(t))
-    val init = array((0 until 64).map(_ => lit(0L)): _*)
-    val voted = aggregate(hashes, init,
-      (acc, h) => array((0 until 64).map { j =>
-        element_at(acc, j + 1) +
-          (shiftright(h, j).bitwiseAND(1L) * 2L - 1L)
-      }: _*),
-      acc => (0 until 64).map { j =>
-        when(element_at(acc, j + 1) > 0, shiftleft(lit(1L), j))
-          .otherwise(lit(0L))
-      }.reduce[Column]((a, b) => a.bitwiseOR(b)))
-    voted.as("simhash64")
-  }
-
-  /** PORTABLE face of [[simHash64]]: a 62-BIT fingerprint whose
-    * per-token hash is two [[Sampling.mix31]] draws over the token's
-    * [[Sampling.stringKey31]] key (hi << 31 | lo) — BIGINT-reproducible
-    * end to end, so the fingerprint AND the Hamming pairs derived from
-    * it run under the DuckDB oracle. The chunk-blocking machinery
-    * ([[simHashPairsFromSigs]]) is hash-free given a fingerprint and is
-    * shared unchanged; xxhash64 stays the production backend. */
-  def simHash64Portable(text: Column, seed: Long = 0L): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    val toks = TextFunctions.tokens(lower(text))
-    GraftColumnBridge.column(graft.plans.SimHash64PortableExpr(
-        GraftColumnBridge.expression(toks), seed))
-      .as("simhash62")
-  }
-
-  /** Interpreted Column twin of [[simHash64Portable]] (differential
-    * link to the SQL-mirrored [[Sampling]] forms, as with the portable
-    * minhash twin). */
-  private[graft] def simHash64PortableHof(text: Column,
-                                          seed: Long = 0L): Column = {
     val toks = TextFunctions.tokens(lower(text))
     val hs = transform(toks, t => {
       val k = Sampling.stringKey31(t)
-      shiftleft(Sampling.mix31(k, lit(seed + 500009L)), 31)
-        .bitwiseOR(Sampling.mix31(k, lit(seed)))
+      shiftleft(Sampling.mix31(k, lit(500009L)), 31)
+        .bitwiseOR(Sampling.mix31(k, lit(0L)))
     })
     val init = array((0 until 62).map(_ => lit(0L)): _*)
     aggregate(hs, init,
@@ -570,19 +467,7 @@ object Dedup {
         when(element_at(acc, j + 1) > 0, shiftleft(lit(1L), j))
           .otherwise(lit(0L))
       }.reduce[Column]((a, b) => a.bitwiseOR(b)))
-      .as("simhash62")
-  }
-
-  /** [[simHashPairs]] on the portable fingerprint — the
-    * oracle-checkable face (same chunk blocking, guards, and cap). */
-  def simHashPairsPortable(df: DataFrame, idCol: String, textCol: String,
-                           maxDist: Int = 3, allowWide: Boolean = false,
-                           maxBucket: Int = 4096,
-                           seed: Long = 0L): DataFrame = {
-    val sigs = df.select(col(idCol).as("id"),
-        simHash64Portable(col(textCol), seed).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    simHashPairsFromSigs(sigs, maxDist, allowWide, maxBucket)
+      .as("simhash64")
   }
 
   /** Hamming distance between two 64-bit fingerprints. */
@@ -820,14 +705,13 @@ object Dedup {
   def lshOperatingPoint(df: DataFrame, idCol: String, textCol: String,
                         n: Int = 3, threshold: Double = 0.5,
                         bands: Int = 8, rowsPerBand: Int = 4,
-                        maxBucket: Int = 4096, seed: Long = 0L)
-      : DataFrame = {
+                        maxBucket: Int = 4096): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
     val exact = jaccardPairs(df, idCol, textCol, n, threshold)
       .select(col("id_a"), col("id_b"), lit(1L).as("__t"))
-    val cand = minHashLshPairsPortable(df, idCol, textCol, n, bands,
-        rowsPerBand, maxBucket, seed)
+    val cand = minHashLshPairs(df, idCol, textCol, n, bands,
+        rowsPerBand, maxBucket)
       .select(col("id_a"), col("id_b"), lit(1L).as("__c"))
     val micro = (x: org.apache.spark.sql.Column) =>
       floor(x * 1e6 + 0.5).cast("long")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Incremental (cross-snapshot) deduplication: dedup a NEW ingest batch
@@ -65,8 +65,8 @@ object IncrementalDedup {
   }
 
   /** Near-dup candidates of a NEW batch against a CORPUS signature index:
-    * cross-frame LSH band-bucket join (the bucket keys are identical to
-    * [[Dedup.minHashLshPairsFromSigs]] — an index built by one run is
+    * cross-frame LSH band join on the band's slot values (the same keys
+    * as [[Dedup.minHashLshPairsFromSigs]] — an index built by one run is
     * probe-compatible with every later run), agreement-rate estimate,
     * threshold. All-null signatures (empty docs) on either side never
     * pair. Returns (new_id, corpus_id, est_jaccard). The only
@@ -74,23 +74,17 @@ object IncrementalDedup {
     * co-occupancy exactly as in the self-join case. */
   def nearDupAgainst(newSigs: DataFrame, corpusSigs: DataFrame,
                      bands: Int, rowsPerBand: Int,
-                     minEstJaccard: Double = 0.0,
-                     portable: Boolean = false): DataFrame = {
-    val k = bands * rowsPerBand
-    val bucket: (Column, Column) => Column =
-      if (portable) Dedup.portableBandBucket(_, _, rowsPerBand)
-      else Dedup.xxBandBucket(_, _, rowsPerBand)
-    val l = Dedup.bandedSigs(newSigs, bands, bucket)
+                     minEstJaccard: Double = 0.0): DataFrame = {
+    val l = Dedup.bandedSigs(newSigs, bands, rowsPerBand)
       .select(col("band"), col("bucket"),
         col("id").as("new_id"), col("sig").as("sig_a"))
-    val r = Dedup.bandedSigs(corpusSigs, bands, bucket)
+    val r = Dedup.bandedSigs(corpusSigs, bands, rowsPerBand)
       .select(col("band"), col("bucket"),
         col("id").as("corpus_id"), col("sig").as("sig_b"))
     l.join(r, Seq("band", "bucket"))
       .select(col("new_id"), col("corpus_id"),
-        (size(filter(zip_with(col("sig_a"), col("sig_b"),
-          (x, y) => (x === y).cast("int")), v => v === 1)).cast("double")
-          / lit(k.toDouble)).as("est_jaccard"))
+        Dedup.agreement(col("sig_a"), col("sig_b"), bands * rowsPerBand)
+          .as("est_jaccard"))
       .filter(col("est_jaccard") >= minEstJaccard)
       .distinct()
   }

@@ -42,11 +42,11 @@ object GraftExtensions {
 
   val simHashDescriptor: FunctionDescription = (
     FunctionIdentifier("graft_simhash64"),
-    new ExpressionInfo(classOf[SimHash64Expr].getName, "graft_simhash64"),
+    new ExpressionInfo(classOf[SimHashExpr].getName, "graft_simhash64"),
     (children: Seq[Expression]) => {
       require(children.size == 1,
         s"graft_simhash64 expects 1 argument (token array), got ${children.size}")
-      SimHash64Expr(children.head)
+      SimHashExpr(children.head)
     })
 
   val shinglesDescriptor: FunctionDescription = (
@@ -60,11 +60,11 @@ object GraftExtensions {
 
   val minHashDescriptor: FunctionDescription = (
     FunctionIdentifier("graft_minhash_sig"),
-    new ExpressionInfo(classOf[MinHashSigExpr].getName, "graft_minhash_sig"),
+    new ExpressionInfo(classOf[MinHashExpr].getName, "graft_minhash_sig"),
     (children: Seq[Expression]) => {
       require(children.size == 2,
         s"graft_minhash_sig expects (shingle array, k), got ${children.size} args")
-      MinHashSigExpr(children.head, intArg(children(1), "graft_minhash_sig", 2))
+      MinHashExpr(children.head, intArg(children(1), "graft_minhash_sig", 2))
     })
 
   val cosineDescriptor: FunctionDescription = (

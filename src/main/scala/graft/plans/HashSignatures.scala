@@ -1,8 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression,
-  XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
   ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -12,90 +11,26 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType,
 /** Native Catalyst expressions for the dedup signature scans — the
   * hottest per-row loops of the 100 TB text-dedup path.
   *
-  * The higher-order-function formulations in `Dedup.simHash64` /
-  * `Dedup.minHashSignature` are correct but interpreted: every token
+  * The higher-order-function formulations in `Dedup.simHash64Hof` /
+  * `Dedup.minHashSignatureHof` are correct but interpreted: every token
   * re-enters the lambda interpreter and every fold step allocates a fresh
-  * 64- (resp. k-) element array, so the signature scan costs
+  * 62- (resp. k-) element array, so the signature scan costs
   * O(tokens * width) allocations per document. These expressions run the
   * same arithmetic as one primitive while-loop per row (zero allocations
   * for simhash, one output array for minhash) and generate a single
   * static call under whole-stage codegen — no codegen-fallback seam, no
   * Row boxing (the [[NormalCdf]] pattern).
   *
-  * Bit parity with the HOF twins is load-bearing (the q_minhash_sig gate
-  * md5-folds signatures; DedupSpec asserts native == HOF): per-token
-  * hashes replicate `xxhash64(tok)` = XxHash64(seed 42) over a STRING,
-  * and per-slot minhash draws replicate `xxhash64(lit(i), h)` = fold
-  * hash(i: INT, seed 42) then hash(h: LONG, ·), via the same
-  * [[XxHash64Function]] Spark's own expression evaluates with. A null
-  * token contributes the seed (42) exactly as a null xxhash64 child is
-  * skipped; an empty token array yields simhash 0 / an all-null minhash
-  * signature; a null array yields null (UnaryExpression contract).
+  * Every draw is plain BIGINT arithmetic: a token or shingle keys to its
+  * base-31 code-point fold mod 2^31 ([[stringKey31]]) and each slot or
+  * bit draws [[mix31]] of that key, so the DuckDB oracle recomputes
+  * signatures, fingerprints and everything derived from them bit for
+  * bit. Bit parity with the HOF twins is load-bearing (DedupSpec asserts
+  * native == HOF). A null token keys to 0; an empty token array yields
+  * simhash 0 / an all-null minhash signature; a null array yields null
+  * (UnaryExpression contract).
   */
 object HashSignatures {
-
-  private final val Seed = 42L
-
-  /** Per-row simhash kernel (called from generated code). */
-  def simhash(arr: ArrayData): Long = {
-    val n = arr.numElements()
-    val votes = new Array[Int](64)
-    var i = 0
-    while (i < n) {
-      val h =
-        if (arr.isNullAt(i)) Seed
-        else XxHash64Function.hash(arr.getUTF8String(i), StringType, Seed)
-      var j = 0
-      while (j < 64) {
-        votes(j) += (if (((h >>> j) & 1L) == 1L) 1 else -1)
-        j += 1
-      }
-      i += 1
-    }
-    var sig = 0L
-    var j = 0
-    while (j < 64) {
-      if (votes(j) > 0) sig |= (1L << j)
-      j += 1
-    }
-    sig
-  }
-
-  /** Per-row minhash kernel (called from generated code). */
-  def minhash(arr: ArrayData, k: Int): ArrayData = {
-    val n = arr.numElements()
-    val acc = new Array[Long](k)
-    java.util.Arrays.fill(acc, Long.MaxValue)
-    // hoisted per-slot seeds: xxhash64(lit(i), h) folds the INT literal
-    // first, so hash(i, INT, 42) is a constant per slot
-    val slotSeed = new Array[Long](k)
-    var j = 0
-    while (j < k) {
-      slotSeed(j) = XxHash64Function.hash(j, IntegerType, Seed)
-      j += 1
-    }
-    var i = 0
-    while (i < n) {
-      val h =
-        if (arr.isNullAt(i)) Seed
-        else XxHash64Function.hash(arr.getUTF8String(i), StringType, Seed)
-      j = 0
-      while (j < k) {
-        val hj = XxHash64Function.hash(h, LongType, slotSeed(j))
-        if (hj < acc(j)) acc(j) = hj
-        j += 1
-      }
-      i += 1
-    }
-    val out = new Array[Any](k)
-    j = 0
-    while (j < k) {
-      out(j) = if (acc(j) == Long.MaxValue) null
-               else java.lang.Long.valueOf(acc(j))
-      j += 1
-    }
-    new GenericArrayData(out)
-  }
 
   /** JVM twin of [[graft.operators.Sampling.stringKey31]]: base-31
     * code-point fold mod 2^31. Iterates Unicode CODE POINTS (not UTF-16
@@ -135,14 +70,10 @@ object HashSignatures {
     x
   }
 
-  /** Per-row PORTABLE minhash kernel: slot j carries min over shingles
-    * of mix31(stringKey31(shingle), seed + j*1000003) — every draw is
-    * plain BIGINT arithmetic reproducible in any SQL engine, which is
-    * what lets the MinHash gates run under a DuckDB oracle. Same shape
-    * as [[minhash]] (one primitive loop, one output array); the
-    * xxhash64 kernel stays the production default (stronger hash, no
-    * per-char fold). */
-  def minhashPortable(arr: ArrayData, k: Int, seed: Long): ArrayData = {
+  /** Per-row minhash kernel (called from generated code): slot j
+    * carries min over shingles of mix31(stringKey31(shingle),
+    * j*1000003). */
+  def minhash(arr: ArrayData, k: Int): ArrayData = {
     val n = arr.numElements()
     val acc = new Array[Long](k)
     java.util.Arrays.fill(acc, Long.MaxValue)
@@ -152,7 +83,7 @@ object HashSignatures {
         if (arr.isNullAt(i)) 0L else stringKey31(arr.getUTF8String(i))
       var j = 0
       while (j < k) {
-        val hj = mix31(key, seed + j * 1000003L)
+        val hj = mix31(key, j * 1000003L)
         if (hj < acc(j)) acc(j) = hj
         j += 1
       }
@@ -168,21 +99,20 @@ object HashSignatures {
     new GenericArrayData(out)
   }
 
-  /** Per-row PORTABLE simhash kernel: a 62-BIT fingerprint (not 64 —
-    * two mix31 draws of 31 bits each, hi << 31 | lo) built from
-    * BIGINT-reproducible arithmetic, so fingerprints and the Hamming
-    * pairs derived from them can be recomputed by an external SQL
-    * oracle. The chunk-blocking pair machinery is hash-free given the
-    * fingerprint and works unchanged (the pigeonhole argument covers
-    * the two always-zero top bits trivially). Null tokens key to 0. */
-  def simhashPortable(arr: ArrayData, seed: Long): Long = {
+  /** Per-row simhash kernel (called from generated code): a 62-BIT
+    * fingerprint (not 64 — two mix31 draws of 31 bits each,
+    * hi << 31 | lo); bit j is the sign of the vote over tokens. The
+    * chunk-blocking pair machinery is hash-free given the fingerprint
+    * (the pigeonhole argument covers the two always-zero top bits
+    * trivially). */
+  def simhash(arr: ArrayData): Long = {
     val n = arr.numElements()
     val votes = new Array[Int](62)
     var i = 0
     while (i < n) {
       val key =
         if (arr.isNullAt(i)) 0L else stringKey31(arr.getUTF8String(i))
-      val h = (mix31(key, seed + 500009L) << 31) | mix31(key, seed)
+      val h = (mix31(key, 500009L) << 31) | mix31(key, 0L)
       var j = 0
       while (j < 62) {
         votes(j) += (if (((h >>> j) & 1L) == 1L) 1 else -1)
@@ -319,9 +249,9 @@ case class StaticGramOverlapExpr(child: Expression, grams: Seq[String])
       : StaticGramOverlapExpr = copy(child = newChild)
 }
 
-/** simhash64 over a token array: fingerprint bit j = sign of the sum over
-  * tokens of bit_j(xxhash64(token)) in {-1,+1}. */
-case class SimHash64Expr(child: Expression)
+/** 62-bit simhash fingerprint over a token array (see
+  * [[HashSignatures.simhash]]); SQL name `graft_simhash64`. */
+case class SimHashExpr(child: Expression)
     extends UnaryExpression with Serializable {
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -337,13 +267,13 @@ case class SimHash64Expr(child: Expression)
     defineCodeGen(ctx, ev, c => s"graft.plans.HashSignatures.simhash($c)")
 
   override protected def withNewChildInternal(newChild: Expression)
-      : SimHash64Expr = copy(child = newChild)
+      : SimHashExpr = copy(child = newChild)
 }
 
-/** k-slot minhash signature over a shingle array: slot i carries
-  * min over shingles of xxhash64(i, xxhash64(shingle)); empty input gives
-  * an all-null signature. */
-case class MinHashSigExpr(child: Expression, k: Int)
+/** k-slot minhash signature over a shingle array (see
+  * [[HashSignatures.minhash]]); empty input gives an all-null
+  * signature. SQL name `graft_minhash_sig`. */
+case class MinHashExpr(child: Expression, k: Int)
     extends UnaryExpression with Serializable {
   require(k > 0, s"minhash signature width must be positive, got $k")
 
@@ -361,55 +291,7 @@ case class MinHashSigExpr(child: Expression, k: Int)
       s"graft.plans.HashSignatures.minhash($c, $k)")
 
   override protected def withNewChildInternal(newChild: Expression)
-      : MinHashSigExpr = copy(child = newChild)
-}
-
-/** PORTABLE 62-bit simhash fingerprint (see
-  * [[HashSignatures.simhashPortable]]). */
-case class SimHash64PortableExpr(child: Expression, seed: Long)
-    extends UnaryExpression with Serializable {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    HashSignatures.requireStringArray(child.dataType, prettyName)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash_portable"
-
-  override def nullSafeEval(input: Any): Any =
-    HashSignatures.simhashPortable(input.asInstanceOf[ArrayData], seed)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.HashSignatures.simhashPortable($c, ${seed}L)")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : SimHash64PortableExpr = copy(child = newChild)
-}
-
-/** PORTABLE k-slot minhash signature (see
-  * [[HashSignatures.minhashPortable]]): engine-reproducible mix31 draws
-  * over base-31 string keys, so signatures and anything derived from
-  * them (LSH buckets, agreement rates) can be hash-checked by an
-  * external SQL oracle. Empty input gives an all-null signature. */
-case class MinHashSigPortableExpr(child: Expression, k: Int, seed: Long)
-    extends UnaryExpression with Serializable {
-  require(k > 0, s"minhash signature width must be positive, got $k")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    HashSignatures.requireStringArray(child.dataType, prettyName)
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def prettyName: String = "graft_minhash_sig_portable"
-
-  override def nullSafeEval(input: Any): Any =
-    HashSignatures.minhashPortable(input.asInstanceOf[ArrayData], k, seed)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.HashSignatures.minhashPortable($c, $k, ${seed}L)")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : MinHashSigPortableExpr = copy(child = newChild)
+      : MinHashExpr = copy(child = newChild)
 }
 
 /** Distinct word-n-gram shingle set over a token array — the scan cost

@@ -155,6 +155,38 @@ class PlanQualitySpec extends SparkSpec {
     assert(!p.contains("BroadcastNestedLoopJoin"), p.take(1500))
   }
 
+  test("MinHash-LSH banding keys on slot values: no ArrayAggregate in the " +
+    "band projection of minHashLshPairs, nearDupAgainst or q_curate") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate,
+      PosExplode}
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    import org.apache.spark.sql.functions.col
+    import graft.operators.{Dedup, IncrementalDedup}
+    // the band projection is the posexplode over per-band keys; an
+    // interpreted fold there (a hashed bucket built with `aggregate`)
+    // leaves codegen for every band of every row
+    def bandGenerators(d: DataFrame): Seq[Generate] =
+      d.queryExecution.optimizedPlan.collect {
+        case g: Generate if g.generator.isInstanceOf[PosExplode] => g
+      }
+    val docs = graft.core.Tables.documents(spark, sf)
+    def sigs(d: DataFrame) = d.select(col("doc_id").as("id"),
+      Dedup.minHashSignature(col("text"), n = 3, k = 32).as("sig"))
+    val plans = Seq(
+      "minHashLshPairs" -> Dedup.minHashLshPairs(docs, "doc_id", "text"),
+      "nearDupAgainst" -> IncrementalDedup.nearDupAgainst(
+        sigs(docs.filter(col("source") =!= "src0")),
+        sigs(docs.filter(col("source") === "src0")), 8, 4),
+      "q_curate" -> SparkEntry.queries("q_curate")(spark, sf))
+    plans.foreach { case (name, d) =>
+      val gens = bandGenerators(d)
+      assert(gens.nonEmpty, s"$name: no band posexplode in the plan")
+      gens.foreach(g => assert(
+        g.generator.find(_.isInstanceOf[ArrayAggregate]).isEmpty,
+        s"$name: interpreted fold in the band projection:\n$g"))
+    }
+  }
+
   test("q_bm25: corpus stats broadcast, top-k is TakeOrdered (no global " +
     "sort), nothing sort-merges") {
     val p = plan("q_bm25")

@@ -84,23 +84,13 @@ class TextFunctionsSpec extends SparkSpec {
 
   test("seqFingerprint: order sensitive") {
     val d = df("id INT, text STRING",
-      Row(1, "alpha beta"), Row(2, "beta alpha"), Row(3, "alpha beta"))
-    val fps = d.select(col("id"), TextFunctions.seqFingerprint(col("text")))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(fps(1) == fps(3))
-    assert(fps(1) != fps(2))
-  }
-
-  test("seqFingerprintPortable: order sensitive, rerun-stable, every " +
-    "value inside mix31's 31-bit range, null text -> null") {
-    val d = df("id INT, text STRING",
       Row(1, "alpha beta"), Row(2, "beta alpha"), Row(3, "alpha beta"),
       Row(4, ""), Row(5, null))
-    val fps = d.select(col("id"),
-        TextFunctions.seqFingerprintPortable(col("text")))
+    val fps = d.select(col("id"), TextFunctions.seqFingerprint(col("text")))
       .collect().map(r => r.getInt(0) ->
         (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
     assert(fps(1) == fps(3) && fps(1) != fps(2))
+    // every value inside mix31's 31-bit range; null text -> null
     assert(fps(4).isDefined, "empty text folds the [''] token")
     assert(fps(5).isEmpty)
     fps.values.flatten.foreach(v =>

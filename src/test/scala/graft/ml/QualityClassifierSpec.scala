@@ -3,7 +3,6 @@ package graft.ml
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.functions.TextFunctions
 
 class QualityClassifierSpec extends SparkSpec {
 
@@ -25,30 +24,9 @@ class QualityClassifierSpec extends SparkSpec {
     df("doc_id BIGINT, text STRING, label DOUBLE", rows: _*)
   }
 
-  test("HashingTF murmur3 != sql hash — the documented reason training " +
-    "featurizes with the SQL hash itself") {
-    val n = 64
-    val words = Seq("the", "quick", "fox", "buy", "click", "Zebra",
-      "émigré", "x1")
-    val tf = new org.apache.spark.ml.feature.HashingTF()
-      .setInputCol("t").setOutputCol("f").setNumFeatures(n)
-    val mlDf = spark.createDataFrame(
-      words.map(w => Tuple1(Seq(w)))).toDF("t")
-    val mlIdx = tf.transform(mlDf).collect().map { r =>
-      r.getAs[org.apache.spark.ml.linalg.SparseVector]("f").indices.head
-    }
-    val sqlIdx = spark.createDataFrame(words.map(Tuple1(_))).toDF("w")
-      .select(pmod(hash(col("w")), lit(n)).as("i"))
-      .collect().map(_.getInt(0))
-    // hashUnsafeBytes2 (ml) vs hashUnsafeBytes (sql) tail handling:
-    // if Spark ever unifies them this assert flips and the trainer can
-    // switch back to HashingTF
-    assert(!mlIdx.sameElements(sqlIdx))
-  }
-
   test("scoreExpr probability matches ml transform to 1e-9") {
     val d = corpus(300)
-    val feats = QualityClassifier.featurize(d, "text", 256)
+    val feats = QualityClassifier.featurize(d, "text", 256, seed = 7L)
     val lr = new org.apache.spark.ml.classification.LogisticRegression()
       .setMaxIter(30).setRegParam(1e-4).setLabelCol("label")
     val model = lr.fit(feats)
@@ -59,7 +37,7 @@ class QualityClassifierSpec extends SparkSpec {
       .map(r => r.getLong(0) ->
         r.getAs[org.apache.spark.ml.linalg.DenseVector](1)(1)).toMap
     val exprProbs = d.select(col("doc_id"),
-        QualityClassifier.scoreExpr(col("text"), scorer)).collect()
+        QualityClassifier.scoreExpr(col("text"), scorer, 7L)).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     mlProbs.foreach { case (id, p) =>
       assert(math.abs(p - exprProbs(id)) < 1e-9,
@@ -71,8 +49,9 @@ class QualityClassifierSpec extends SparkSpec {
     "prose and drops spam") {
     val d = corpus(400)
     val scorer = QualityClassifier.train(d, "text", "label",
-      numFeatures = 256)
-    val kept = QualityClassifier.filterByScore(d, "text", scorer, 0.5)
+      numFeatures = 256, seed = 7L)
+    val kept = QualityClassifier.filterByScore(d, "text", scorer, 0.5,
+        seed = 7L)
       .select("label").collect().map(_.getDouble(0))
     assert(kept.count(_ == 1.0).toDouble / kept.length > 0.95)
     assert(kept.length > 150) // most prose survives
@@ -81,9 +60,8 @@ class QualityClassifierSpec extends SparkSpec {
   test("portable face: expr matches ml transform, classes still separate, " +
     "margin sign == prob >= 0.5") {
     val d = corpus(300)
-    val seed = Some(7L)
-    val feats = QualityClassifier.featurize(d, "text", 256,
-      portableSeed = seed)
+    val seed = 7L
+    val feats = QualityClassifier.featurize(d, "text", 256, seed)
     val lr = new org.apache.spark.ml.classification.LogisticRegression()
       .setMaxIter(30).setRegParam(1e-4).setLabelCol("label")
     val model = lr.fit(feats)
@@ -99,14 +77,13 @@ class QualityClassifierSpec extends SparkSpec {
     rows.foreach { r =>
       val (id, p, m) = (r.getLong(0), r.getDouble(1), r.getDouble(2))
       assert(math.abs(p - mlProbs(id)) < 1e-9,
-        s"doc $id: ml ${mlProbs(id)} vs portable expr $p")
+        s"doc $id: ml ${mlProbs(id)} vs expr $p")
       assert((m >= 0.0) == (p >= 0.5), s"doc $id: margin/prob disagree")
     }
-    // the portable hash is as learnable as Murmur3 on the planted task
     val trained = QualityClassifier.train(d, "text", "label",
-      numFeatures = 256, portableSeed = seed)
+      numFeatures = 256, seed = seed)
     val kept = QualityClassifier
-      .filterByScore(d, "text", trained, 0.5, portableSeed = seed)
+      .filterByScore(d, "text", trained, 0.5, seed)
       .select("label").collect().map(_.getDouble(0))
     assert(kept.count(_ == 1.0).toDouble / kept.length > 0.95)
   }
@@ -115,7 +92,7 @@ class QualityClassifierSpec extends SparkSpec {
     val scorer = QualityClassifier.LinearScorer(
       Array.fill(16)(5.0), intercept = 0.0)
     val d = df("doc_id BIGINT, text STRING", Row(1L, null))
-    val p = d.select(QualityClassifier.scoreExpr(col("text"), scorer))
+    val p = d.select(QualityClassifier.scoreExpr(col("text"), scorer, 7L))
       .collect()(0).getDouble(0)
     assert(approx(p, 0.5)) // sigmoid(0)
   }

@@ -226,6 +226,27 @@ class DedupSpec extends SparkSpec {
     assert(full.count(p => p._1 >= 100L && p._2 >= 100L) == 50 * 49 / 2)
   }
 
+  test("band keys are the band's slot values: two bands a base-1000003 " +
+    "fold would collide never share a bucket") {
+    // band 0 of `a` is (0,0,1,0), of `b` (0,0,0,1000003): folding each
+    // band as a*1000003+v mod 2^31 maps both to 1000003, so a hashed
+    // bucket pairs them; band 1 differs everywhere. `c` agrees with `a`
+    // on band 0 exactly, the one pair banding must find.
+    val sigs = df("id BIGINT, sig ARRAY<BIGINT>",
+      Row(1L, Seq(0L, 0L, 1L, 0L, 1L, 2L, 3L, 4L)),
+      Row(2L, Seq(0L, 0L, 0L, 1000003L, 5L, 6L, 7L, 8L)),
+      Row(3L, Seq(0L, 0L, 1L, 0L, 9L, 10L, 11L, 12L)))
+    val self = Dedup.minHashLshPairsFromSigs(sigs, bands = 2,
+        rowsPerBand = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(self == Set((1L, 3L)), s"self-join pairs: $self")
+    val cross = IncrementalDedup.nearDupAgainst(
+        sigs.filter(col("id") === 2L || col("id") === 3L),
+        sigs.filter(col("id") === 1L), bands = 2, rowsPerBand = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(cross == Set((3L, 1L)), s"cross-frame pairs: $cross")
+  }
+
   test("native signature kernels == interpreted HOF twins bit-for-bit " +
     "(incl. empty, single-token, punctuation, and null docs)") {
     val d = docs(
@@ -234,7 +255,8 @@ class DedupSpec extends SparkSpec {
       3L -> "", 4L -> "one",
       5L -> "punct! marks? and, spacing   tabs\tnewlines",
       6L -> null,
-      7L -> ("repeated tokens " * 40))
+      7L -> ("repeated tokens " * 40),
+      8L -> "café naïve 中文 words mixed in here")
     val sim = d.select(col("doc_id"), Dedup.simHash64(col("text")).as("n"),
         Dedup.simHash64Hof(col("text")).as("h"))
       .collect()
@@ -278,41 +300,6 @@ class DedupSpec extends SparkSpec {
     }
   }
 
-  test("portable minhash: native kernel == mix31/stringKey31 Column " +
-    "twin bit-for-bit (incl. empty, null, unicode docs); nonzero seed") {
-    val d = docs(
-      1L -> "the quick brown fox jumps over the lazy dog",
-      2L -> "the quick brown fox jumps over the lazy cat",
-      3L -> "", 4L -> "one", 5L -> null,
-      6L -> "café naïve 中文 words mixed in here",
-      7L -> ("repeated tokens " * 40))
-    for (seed <- Seq(0L, 7L)) {
-      val out = d.select(col("doc_id"),
-          Dedup.minHashSignaturePortable(col("text"), n = 3, k = 16,
-            seed).as("n"),
-          Dedup.minHashSignaturePortableHof(col("text"), n = 3, k = 16,
-            seed).as("h"))
-        .collect()
-      out.foreach(r => assert(r.get(1) == r.get(2),
-        s"portable minhash diverged for doc ${r.getLong(0)} seed $seed: " +
-          s"${r.get(1)} vs ${r.get(2)}"))
-    }
-  }
-
-  test("minHashLshPairsPortable: identical docs pair at est_jaccard 1; " +
-    "empty docs and viral buckets guarded like the xxhash64 face") {
-    val base = (1 to 30).map(i => i.toLong ->
-      s"distinct document number $i with its own words ${i * 31}")
-    val d = docs(base :+ (100L -> base.head._2) :+ (200L -> "") :+
-      (201L -> "") : _*)
-    val out = Dedup.minHashLshPairsPortable(d, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(out.exists(p => p._1 == 1L && p._2 == 100L && p._3 == 1.0),
-      s"identical pair missing: ${out.mkString(", ")}")
-    assert(!out.exists(p => p._1 == 200L || p._2 == 201L),
-      "empty docs must never pair")
-  }
-
   test("portable simhash: native kernel == mix31/stringKey31 Column " +
     "twin bit-for-bit; fingerprint stays within 62 bits; near-identical " +
     "docs pair at small Hamming via the portable pairs face") {
@@ -322,21 +309,18 @@ class DedupSpec extends SparkSpec {
       4L -> "", 5L -> null,
       6L -> "café naïve 中文 words mixed in here",
       7L -> ("repeated tokens " * 40))
-    for (seed <- Seq(0L, 11L)) {
-      val out = d.select(col("doc_id"),
-          Dedup.simHash64Portable(col("text"), seed).as("n"),
-          Dedup.simHash64PortableHof(col("text"), seed).as("h"))
-        .collect()
-      out.foreach { r =>
-        assert(r.get(1) == r.get(2),
-          s"portable simhash diverged for doc ${r.getLong(0)} seed $seed")
-        if (!r.isNullAt(1))
-          assert((r.getLong(1) >>> 62) == 0L,
-            s"fingerprint exceeds 62 bits for doc ${r.getLong(0)}")
-      }
+    val out = d.select(col("doc_id"),
+        Dedup.simHash64(col("text")).as("n"),
+        Dedup.simHash64Hof(col("text")).as("h"))
+      .collect()
+    out.foreach { r =>
+      assert(r.get(1) == r.get(2),
+        s"simhash diverged for doc ${r.getLong(0)}")
+      if (!r.isNullAt(1))
+        assert((r.getLong(1) >>> 62) == 0L,
+          s"fingerprint exceeds 62 bits for doc ${r.getLong(0)}")
     }
-    val pairs = Dedup.simHashPairsPortable(d, "doc_id", "text",
-        maxDist = 3)
+    val pairs = Dedup.simHashPairs(d, "doc_id", "text", maxDist = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     assert(pairs.exists(p => p._1 == 1L && p._2 == 2L && p._3 == 0),
       s"identical docs must pair at Hamming 0: ${pairs.mkString(", ")}")

@@ -24,6 +24,12 @@ class NormalCdfSpec extends SparkSpec {
     assert(r.getSeq[String](1).contains("the quick brown"))
     assert(r.getSeq[java.lang.Long](2).length == 8)
     assertApprox(r.getAs[Double]("cos"), 1.0, 1e-14)
+    // the signature functions bind the same kernels as the Column API
+    val api = d.select(graft.operators.Dedup.simHash64(col("doc")),
+        graft.operators.Dedup.minHashSignature(col("doc"), n = 3, k = 8))
+      .collect()(0)
+    assert(r.getLong(0) == api.getLong(0))
+    assert(r.getSeq[java.lang.Long](2) == api.getSeq[java.lang.Long](1))
     // the sampling hash from SQL matches the Scala Column API
     val h = spark.sql(
       "SELECT graft_bucket_hash(42, 7) AS h1, graft_bucket_hash(42) AS h0")

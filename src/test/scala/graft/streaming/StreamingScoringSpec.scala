@@ -25,7 +25,7 @@ class StreamingScoringSpec extends SparkSpec {
       Array.tabulate(64)(i => (i % 7 - 3) * 0.25), intercept = 0.1)
     def score(df: org.apache.spark.sql.DataFrame) = df.select(
       col("doc_id"),
-      QualityClassifier.scoreExpr(col("text"), scorer).as("p"),
+      QualityClassifier.scoreExpr(col("text"), scorer, 7L).as("p"),
       TextFunctions.dupTokenFrac(col("text")).as("dtf"),
       TextFunctions.topNgramCharFrac(col("text"), 2).as("t2"))
 
