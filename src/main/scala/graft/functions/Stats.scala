@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Statistical aggregates: population moments matching scipy's bias=True
   * defaults, the skew/kurtosis-adjusted Sharpe test (SURVEY §2.9 M10;
-  * `/root/reference/iceberg_quantile.ipynb` cell 4), and the normal CDF.
+  * the reference notebook `iceberg_quantile.ipynb`, cell 4), and its
+  * p-value.
   *
   * All moments are expressed from power sums so one `groupBy.agg` pass
   * (map-side combinable) yields everything — and so a DuckDB oracle can
@@ -43,7 +44,8 @@ object Stats {
   /** The full Sharpe-test aggregate row per group (M10):
     * SR = mean/std(ddof=1); modified t-stat
     * SR / sqrt((1 - g3*SR + (g4-1)*SR^2/4) / (T-1)); annualized SR*sqrt(252).
-    * p-value needs the normal CDF — apply [[normalCdf]] on the tiny result.
+    * p-value needs the normal CDF — apply [[pValueTwoSided]] on the tiny
+    * result.
     */
   def sharpeColumns(ret: Column): Seq[Column] = {
     val t = count(ret).cast("double")
@@ -59,19 +61,12 @@ object Stats {
       (sr * sqrt(lit(252.0))).as("sharpe_annual"))
   }
 
-  /** Standard normal CDF via the Abramowitz-Stegun-style erf identity,
-    * computed with commons-math3 (exact erf). Registered as a scalar
-    * function; only ever applied to already-aggregated (tiny) frames, so a
-    * JVM function (not codegen) is fine here.
-    */
-  val normalCdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((x: Double) =>
-      0.5 * (1.0 + org.apache.commons.math3.special.Erf.erf(
-        x / math.sqrt(2.0))))
-
-  /** Two-sided p-value from a z-statistic: 2*min(Phi(z), 1-Phi(z)). */
+  /** Two-sided p-value from a z-statistic: 2*min(Phi(z), 1-Phi(z)), with
+    * Phi the codegen'd [[graft.plans.NormalCdf]]. */
   def pValueTwoSided(z: Column): Column = {
-    val phi = normalCdf(z)
+    import org.apache.spark.sql.GraftColumnBridge
+    val phi = GraftColumnBridge.column(graft.plans.NormalCdf(
+      GraftColumnBridge.expression(z.cast("double"))))
     (lit(2.0) * least(phi, lit(1.0) - phi)).as("p_value")
   }
 

@@ -60,6 +60,14 @@ object Shared {
         s"xor($y, $y // 65536)"
     }
 
+  /** A double as a DuckDB DOUBLE literal that round-trips bit for bit:
+    * the JVM's round-tripping digits in the `e0` form (a bare
+    * `1.5` would parse as DECIMAL). */
+  private[gates] def DoubleSql(d: Double): String = {
+    val t = d.toString
+    if (t.contains('E')) t.replace('E', 'e') else t + "e0"
+  }
+
   /** DuckDB twin of [[Sampling.stringKey31]] — the base-31 code-point
     * fold, mod 2^31, as a list_reduce. Exact on BMP text. */
   private[gates] def StringKey31Sql(e: String): String =
@@ -91,20 +99,22 @@ object Shared {
        |  FROM mmins GROUP BY 1)""".stripMargin
 
   /** DuckDB twin of the HLL estimator ([[Sketches.hllSketch]] +
-    * [[Sketches.hllEstimate]], portable backend): expects a preceding
-    * CTE `hkeys(g, k)` and emits the chain ending in `hll(g, est)`.
-    * Identical registers (mix31 draws), exact dyadic register sum
-    * (every 2^-rho term and the sum of <= 2^p of them are exact
-    * doubles in any order), alpha*m as a round-tripping double
-    * literal — bit-reproducible end to end. */
+    * [[Sketches.hllEstimate]]): expects a preceding CTE `hkeys(g, k)`
+    * and emits the chain ending in `hll(g, est)`. Identical registers
+    * (mix31 draws; the third draw h3 decides rho only where h2 = 0),
+    * exact dyadic register sum (every 2^-rho term is exact, and so is
+    * the sum of <= 2^p of them in any order while rho <= 35), alpha*m
+    * as a round-tripping double literal — bit-reproducible end to end. */
   private[gates] def HllRegsSql(seed: Long, p: Int, sfx: String): String =
     s"""hh$sfx AS (
        |  SELECT g, ${Mix31Sql("k", seed.toString)} AS h1,
-       |    (${Mix31Sql("k", (seed + 1000003L).toString)}) % 1048576 AS h2
+       |    (${Mix31Sql("k", (seed + 1000003L).toString)}) % 1048576 AS h2,
+       |    ${Mix31Sql("k", (seed + 2000006L).toString)} AS h3
        |  FROM hkeys$sfx),
        |hr$sfx AS (
        |  SELECT g, h1 // ${1L << (31 - p)} AS register,
-       |    MAX(CASE WHEN h2 = 0 THEN 21
+       |    MAX(CASE WHEN h2 = 0 THEN
+       |          (CASE WHEN h3 = 0 THEN 52 ELSE 52 - length(bin(h3)) END)
        |        ELSE 21 - length(bin(h2)) END) AS rho
        |  FROM hh$sfx GROUP BY 1, 2)""".stripMargin
   private[gates] def HllEstSql(p: Int, sfx: String): String = {
@@ -119,7 +129,7 @@ object Shared {
        |    (CAST($alphaM AS DOUBLE) * $m.0e0) / (sp + ($m - np)) AS raw
        |  FROM ha$sfx),
        |hll$sfx AS (
-       |  SELECT g, CASE WHEN raw <= ${2.5 * m}e0 AND v > 0
+       |  SELECT g, CASE WHEN raw <= ${DoubleSql(2.5 * m)} AND v > 0
        |    THEN $m.0e0 * ln($m.0e0 / v) ELSE raw END AS est
        |  FROM he$sfx)""".stripMargin
   }
@@ -330,7 +340,7 @@ object Shared {
     * each probe `q` of `qs`, `p` holds the first bucket (rn = 1) whose
     * cumulative count reaches rank r = ceil(q n). */
   private[gates] def HistWalkCtes(qs: Seq[Double]): String =
-    s"""qv AS (SELECT * FROM (VALUES ${qs.map(q => s"(${q}e0)").mkString(", ")}) t(q)),
+    s"""qv AS (SELECT * FROM (VALUES ${qs.map(q => s"(${DoubleSql(q)})").mkString(", ")}) t(q)),
        |j AS (
        |  SELECT c.*, q,
        |    GREATEST(1, CAST(ceil(q * n) AS BIGINT)) AS r,

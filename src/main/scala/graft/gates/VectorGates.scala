@@ -25,6 +25,13 @@ object VectorGates {
       |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS vec
       |  FROM embeddings)""".stripMargin
 
+  /** q_lsh_ann's 32 x 64 hyperplanes ([[Similarity.planes]], seed 42) as
+    * the CTE `plw(p, wl)`: one round-tripping DOUBLE literal per weight. */
+  private val LshPlanesCte: String =
+    Similarity.planes(32, 64, 42L).zipWithIndex
+      .map { case (w, p) => s"($p, [${w.map(DoubleSql).mkString(", ")}])" }
+      .mkString("plw AS (SELECT * FROM (VALUES\n  ", ",\n  ", ") t(p, wl))")
+
   /** DuckDB twin of the exact cosine between two double-list columns —
     * the same left-to-right fold as `plans.CosineExpr` / `exactCosine`
     * (list_sum over a preserved-order list), the pattern q_ann_cosine
@@ -249,32 +256,23 @@ object VectorGates {
          |LEFT JOIN ocnt ON j.label = ocnt.label
          |LEFT JOIN ncnt ON j.label = ncnt.label""".stripMargin),
 
-    // --- LLM ops: SRP-LSH bucketed ANN on the PORTABLE plane backend
-    //     (round 10) — mix31-derived hyperplane weights are exact
-    //     dyadics, so the oracle recomputes planes, sign signatures,
-    //     band buckets, candidates, and the cosine top-k end to end;
-    //     the Gaussian-plane face stays available (recall spec-pinned
-    //     for both) ---
+    // --- LLM ops: SRP-LSH bucketed ANN — the oracle reads the Gaussian
+    //     hyperplanes the engine runs (as round-tripping DOUBLE
+    //     literals) and recomputes sign signatures, band buckets,
+    //     candidates and the cosine top-k end to end; the same plane
+    //     family keys nearDupPairs' buckets and SemDeDup's shards ---
     Gate("q_lsh_ann", (s, dir) => {
       val emb = vectors(s, dir)
       val dims = emb.select(size(col("vec"))).first().getInt(0)
       Similarity.lshTopK(emb.filter(col("vec_id") < 10), emb,
-          "vec_id", "vec_id", "vec", "vec", k = 3, dims = dims,
-          portable = true)
+          "vec_id", "vec_id", "vec", "vec", k = 3, dims = dims)
         .select(annCols: _*)
     },
-      // SRP-LSH ANN on portable planes: weight (p, i-1) = mix31 draw
-      // scaled to [-1, 1) (exact dyadic), per-plane dot via the
-      // list-ordered fold (engine-exact), sign bits packed per 8-plane
-      // band, bucket-join candidates, cosine top-3
+      // SRP-LSH ANN: the engine's planes as literals, per-plane dot via
+      // the list-ordered fold (engine-exact), sign bits packed per
+      // 8-plane band, bucket-join candidates, cosine top-3
       s"""WITH $VectorsCte,
-         |pld AS (
-         |  SELECT p, i,
-         |    CAST(${Mix31Sql("(p * 64 + i - 1)", "42")} AS DOUBLE)
-         |      / 2147483648 * 2 - 1 AS w
-         |  FROM (SELECT unnest(generate_series(0, 31)) AS p) pp,
-         |       (SELECT unnest(generate_series(1, 64)) AS i) ii),
-         |plw AS (SELECT p, list(w ORDER BY i) AS wl FROM pld GROUP BY p),
+         |$LshPlanesCte,
          |sg AS (
          |  SELECT v.vec_id, pw.p,
          |    CASE WHEN list_sum(list_transform(generate_series(1, 64),
@@ -965,9 +963,10 @@ object VectorGates {
     //     emptied-cell rule) — so the sharded implementation's whole
     //     init/assign/update/pair/dedup plumbing is DuckDB-gated via
     //     q_semdedup's kmeans CTE twin (oracle shared below, the
-    //     streaming-twin pattern). The multi-shard face is
-    //     ClusteringSpec-pinned (SRP planes are Gaussian, not
-    //     SQL-reproducible) and ScaleBench-gated linear ---
+    //     streaming-twin pattern). The multi-shard face keys shards on
+    //     srpSignature, one band of the Gaussian planes q_lsh_ann's
+    //     oracle replays; it is ClusteringSpec-pinned and ScaleBench-gated
+    //     linear ---
     Gate("q_semdedup_sharded", (s, dir) => {
       Clustering.semDedupSharded(Tables.embeddings(s, dir), "vec_id",
           "embedding", shardSizeTarget = Int.MaxValue, cellsPerShard = 4,

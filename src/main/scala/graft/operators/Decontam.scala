@@ -16,9 +16,7 @@ import org.apache.spark.sql.functions._
   * n-gram set is broadcast and the whole check is ONE map-side
   * broadcast-semi-join over the exploded corpus n-grams plus one
   * aggregation by doc — no corpus-vs-corpus shuffle, no pairwise work.
-  * The n-gram explode itself is row-local (a Generate). With a genuinely
-  * large benchmark side, pass `broadcastBench = false` and AQE picks the
-  * join strategy.
+  * The n-gram explode itself is row-local (a Generate).
   *
   * Reuses [[Dedup.shingles]] (native ShinglesExpr kernel), so the n-gram
   * definition — distinct n-grams over `\s+` tokens of the lowercased,
@@ -38,19 +36,16 @@ object Decontam {
   def contaminationScores(docs: DataFrame, bench: DataFrame,
                           idCol: String, textCol: String,
                           benchTextCol: String = null,
-                          n: Int = 3,
-                          broadcastBench: Boolean = true): DataFrame = {
+                          n: Int = 3): DataFrame = {
     require(n >= 1, s"n-gram width must be >= 1, got $n")
     val benchText = Option(benchTextCol).getOrElse(textCol)
     val grams = docs.select(col(idCol),
         Dedup.shingles(col(textCol), n).as("__grams"))
       .select(col(idCol), size(col("__grams")).as("__n_grams"),
         explode(col("__grams")).as("__gram"))
-    val benchGrams0 = bench
+    val benchGrams = broadcast(bench
       .select(explode(Dedup.shingles(col(benchText), n)).as("__gram"))
-      .distinct()
-    val benchGrams =
-      if (broadcastBench) broadcast(benchGrams0) else benchGrams0
+      .distinct())
     // per-doc shingle sets are distinct, so the semi-join hit count IS the
     // distinct-overlap count; left_semi keeps the probe side map-local
     grams.join(benchGrams, Seq("__gram"), "left_semi")
@@ -68,10 +63,9 @@ object Decontam {
   def decontaminate(docs: DataFrame, bench: DataFrame,
                     idCol: String, textCol: String,
                     benchTextCol: String = null,
-                    n: Int = 3, minOverlap: Long = 1L,
-                    broadcastBench: Boolean = true): DataFrame = {
+                    n: Int = 3, minOverlap: Long = 1L): DataFrame = {
     val flagged = contaminationScores(docs, bench, idCol, textCol,
-        benchTextCol, n, broadcastBench)
+        benchTextCol, n)
       .filter(col("n_overlap") >= minOverlap)
       .select(col(idCol))
     docs.join(broadcast(flagged), Seq(idCol), "left_anti")

@@ -9,8 +9,13 @@ import org.apache.spark.sql.functions._
   * LSH-bucketed variant as the 100 TB scale path (candidates only within a
   * bucket; probes neighboring buckets via multi-band signatures).
   *
-  * Dot products use the higher-order `aggregate`/`zip_with` built-ins —
-  * vectorized by codegen, no UDFs, null-safe on ragged vectors.
+  * One hyperplane family, the Gaussian [[planes]], serves every SRP face:
+  * [[lshTopK]], the buckets of [[nearDupPairs]] and SemDeDup's shard key
+  * ([[srpSignature]]). The DuckDB oracle replays it in q_lsh_ann. Cosine
+  * and the SRP buckets run as native codegen'd kernels, each bit-equal to
+  * an interpreted higher-order twin (SimilaritySpec); [[dot]] and
+  * [[l2norm]] are plain `aggregate`/`zip_with` folds, null-safe on
+  * ragged vectors.
   */
 object Similarity {
 
@@ -159,42 +164,25 @@ object Similarity {
       .withColumnRenamed("__rk", "rank")
   }
 
-  /** Deterministic pseudo-random hyperplanes: plane p, dim d weight from a
-    * hash of (seed, p, d) mapped to [-1, 1). Generated as a literal array
-    * on the driver (tiny: planes x dims doubles) so the scan side is pure
-    * arithmetic. */
-  private def planes(nPlanes: Int, dims: Int, seed: Long)
+  /** The SRP hyperplanes: plane p, dim d = the (p*dims + d)-th draw of
+    * `java.util.Random(seed).nextGaussian`, which is specified on
+    * `StrictMath` and so repeats bit for bit on any JVM. Generated as a
+    * literal array at plan time (tiny: planes x dims doubles) so the
+    * scan side is pure arithmetic; the DuckDB twin of q_lsh_ann reads
+    * the same doubles as round-tripping literals. */
+  private[graft] def planes(nPlanes: Int, dims: Int, seed: Long)
       : Array[Array[Double]] = {
     val rng = new scala.util.Random(seed)
     Array.fill(nPlanes, dims)(rng.nextGaussian())
   }
 
-  /** PORTABLE hyperplanes: weight (p, d) = mix31(p*dims + d, seed)
-    * scaled to [-1, 1) — every weight an exact dyadic a SQL engine
-    * reproduces (BIGINT mix31, one exact division by 2^31, *2, -1), so
-    * SRP signatures and buckets become oracle-checkable. Uniform-cube
-    * rather than Gaussian planes: still a valid sign-random-projection
-    * family (symmetric about 0); recall is spec-pinned per face. */
-  private def planesPortable(nPlanes: Int, dims: Int, seed: Long)
-      : Array[Array[Double]] =
-    Array.tabulate(nPlanes, dims) { (p, d) =>
-      graft.plans.HashSignatures.mix31(p.toLong * dims + d, seed)
-        .toDouble / 2147483648.0 * 2.0 - 1.0
-    }
-
-  /** Random-hyperplane (SRP) LSH bucket signature: bit p = sign(v . plane_p).
-    * Cosine-similar vectors agree on most bits. */
+  /** Random-hyperplane (SRP) signature: bit p = sign(v . plane_p), so
+    * cosine-similar vectors agree on most bits. It is element 0 of a
+    * one-band [[srpBandBuckets]] over the same planes: the same kernel,
+    * and 0L for a null, ragged or null-element row. */
   def srpSignature(vec: Column, nPlanes: Int, dims: Int,
-                   seed: Long = 42L): Column = {
-    val ps = planes(nPlanes, dims, seed)
-    val bits = ps.zipWithIndex.map { case (p, i) =>
-      val planeLit = array(p.map(lit): _*)
-      val d = aggregate(zip_with(vec, planeLit, (x, w) => x * w),
-        lit(0.0), (acc, v) => acc + v)
-      when(d >= 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
-    }
-    bits.reduce[Column]((a, b) => a.bitwiseOR(b)).as("srp_sig")
-  }
+                   seed: Long = 42L): Column =
+    srpBandBuckets(vec, 1, nPlanes, dims, seed).getItem(0).as("srp_sig")
 
   /** Per-band SRP bucket array: band b's bucket packs the sign bits of
     * planes [b*bitsPerBand, (b+1)*bitsPerBand). Native codegen'd kernel
@@ -206,14 +194,12 @@ object Similarity {
     * a stateless plan with zero memory footprint at 100 TB corpus scale. */
   private[graft] def srpBandBuckets(vec: Column, bands: Int,
                                     bitsPerBand: Int, dims: Int,
-                                    seed: Long,
-                                    portable: Boolean = false): Column = {
+                                    seed: Long): Column = {
     import org.apache.spark.sql.GraftColumnBridge
-    val ps = if (portable) planesPortable(bands * bitsPerBand, dims, seed)
-             else planes(bands * bitsPerBand, dims, seed)
     GraftColumnBridge.column(graft.plans.SrpBandBucketsExpr(
       GraftColumnBridge.expression(vec.cast("array<double>")),
-      ps.flatten.toSeq, dims, bands, bitsPerBand))
+      planes(bands * bitsPerBand, dims, seed).flatten.toSeq, dims, bands,
+      bitsPerBand))
   }
 
   /** Interpreted higher-order twin of [[srpBandBuckets]], kept for
@@ -239,8 +225,8 @@ object Similarity {
     * to broadcast. */
   def lshTopK(queries: DataFrame, corpus: DataFrame, qId: String,
               cId: String, qVec: String, cVec: String, k: Int, dims: Int,
-              bands: Int = 4, bitsPerBand: Int = 8, seed: Long = 42L,
-              portable: Boolean = false): DataFrame = {
+              bands: Int = 4, bitsPerBand: Int = 8,
+              seed: Long = 42L): DataFrame = {
     def banded(df: DataFrame, id: String, vec: String, side: String)
         : DataFrame =
       // per-band plane slices ([[srpBandBuckets]]): no shared signature
@@ -249,7 +235,7 @@ object Similarity {
       df.select(col(id).as(s"${side}_id"), col(vec).as(s"__${side}v"))
         .select(col(s"${side}_id"), col(s"__${side}v"),
           posexplode(srpBandBuckets(col(s"__${side}v"), bands, bitsPerBand,
-            dims, seed, portable)).as(Seq("band", "bucket")))
+            dims, seed)).as(Seq("band", "bucket")))
     val qB = banded(queries, qId, qVec, "query")
     val cB = banded(corpus, cId, cVec, "corpus")
     val cand = qB.join(cB, Seq("band", "bucket"))
@@ -282,7 +268,7 @@ object Similarity {
     * locality (good for clustered embedding spaces), SRP-LSH by random
     * projection (distribution-free).
     *
-    * Centroids are `nCells` corpus rows picked by smallest xxhash64(id,
+    * Centroids are `nCells` corpus rows picked by smallest mix31(id,
     * seed) — a deterministic k-means|| seeding stand-in so specs and
     * reruns reproduce bit-for-bit; the assignment/probe/search machinery
     * is unchanged if real trained centroids are supplied upstream. Driver
@@ -307,9 +293,9 @@ object Similarity {
       col(cVec).cast("array<double>").as("__cv"))
     val q = queries.select(col(qId).cast("long").as("query_id"),
       col(qVec).cast("array<double>").as("__qv"))
-    // portable seeded pick (mix31, not xxhash64): the same ordered-draw
-    // rows are reproducible in BIGINT SQL, so the q_ivf_ann gate runs
-    // under the DuckDB oracle with these default centroids
+    // seeded mix31 pick: the same ordered-draw rows are reproducible in
+    // BIGINT SQL, so the q_ivf_ann gate runs under the DuckDB oracle with
+    // these default centroids
     val cents = centroids.getOrElse(
       c.withColumn("__h", Sampling.mix31(col("corpus_id"), lit(seed)))
         .orderBy(col("__h"), col("corpus_id")).limit(nCells)

@@ -16,30 +16,28 @@ import org.apache.spark.sql.functions._
   * reference's profiling counts (order_imbalance.py:210-236 event/count
   * summaries) re-expressed as bounded-state aggregations.
   *
-  * Two hash backends:
-  *  - `portable = true` (default): the engine-portable avalanche mixer
-  *    [[Sampling.mix31]] — every register and the final estimate are
-  *    bit-reproducible in any SQL engine (the DuckDB oracle gates prove
-  *    it). Register depth caps at 21, so
-  *    registers saturate only past ~2^21 distinct keys PER register —
-  *    ample for per-group profiling at test scale, and the estimator's
-  *    floating-point path is exact-by-construction (see below).
-  *  - `portable = false`: `xxhash64` (64-bit) — the production path for
-  *    100 TB cardinalities: p bucket bits + up to (64-p)-bit rho domain.
-  *    Not reproducible outside Spark; gate it rows-only.
+  * One hash backend: the engine-portable avalanche mixer
+  * [[Sampling.mix31]], so every register and the final estimate are
+  * bit-reproducible in any SQL engine (the DuckDB oracle gates replay
+  * them). Each key takes up to three independently-seeded draws: h1
+  * picks the register (top p of its 31 bits); h2 (20 bits) and, only
+  * when h2 = 0, h3 (31 bits) give rho = leading zeros of the 51-bit
+  * string h2‖h3, plus 1. So rho reaches 52, and a register saturates
+  * only past ~2^51 keys.
   *
-  * Float-parity design (portable path): every register term 2^-rho is an
-  * exact dyadic double computed as `1.0 / (1 << rho)` (integer shift +
-  * one exact division — no libm `pow`). A sum of m <= 2^18 such terms
-  * needs at most 18 + 21 mantissa bits, so the register sum is EXACT in
-  * IEEE double regardless of Spark's partial-aggregation order — the only
-  * libm call in the whole estimator is the small-range `ln`, absorbed by
-  * the gates' micro-rounding.
+  * Float-parity design: every register term 2^-rho is an exact dyadic
+  * double computed as `1.0 / (1 << rho)` (integer shift + one exact
+  * division — no libm `pow`). A sum of m <= 2^18 such terms needs at
+  * most 18 + max(rho) mantissa bits, so the register sum is EXACT in
+  * IEEE double, in any partial-aggregation order, while every rho <= 35.
+  * A key reaches rho >= 36 with probability 2^-35. The only libm call in
+  * the whole estimator is the small-range `ln`, absorbed by the gates'
+  * micro-rounding.
   */
 object Sketches {
 
-  private val PortableBits = 20            // rho draw domain: 2^20
-  private val SeedSpacing  = 1000003L      // spaces per-row/per-draw seeds
+  private val H2Bits      = 20            // first rho draw domain: 2^20
+  private val SeedSpacing = 1000003L      // spaces per-row/per-draw seeds
 
   /** Bit length of a non-negative integral column (0 for 0) — portable:
     * both Spark and DuckDB `bin()` print minimal-width binary. */
@@ -49,10 +47,6 @@ object Sketches {
   // ---------------------------------------------------------------------
   // HyperLogLog (Flajolet, Fusy, Gandouet, Meunier 2007)
   // ---------------------------------------------------------------------
-
-  /** Max register value (rho domain) for a given backend/precision. */
-  private def maxRho(p: Int, portable: Boolean): Int =
-    if (portable) PortableBits + 1 else 64 - p + 1
 
   private def alpha(m: Int): Double = m match {
     case 16 => 0.673
@@ -67,39 +61,28 @@ object Sketches {
     * densification shuffle needed). One partial-aggregated shuffle on
     * (group, register); state is at most m rows per group.
     *
-    * Portable path draws bucket and rho from two independently-seeded
-    * portable hashes (20 bits each); xxhash64 path splits one 64-bit
-    * word: top p bits bucket, low 64-p bits rho source. */
+    * Bucket and rho come from independently-seeded mix31 draws —
+    * bucketHash's single multiplicative round would correlate (bucket,
+    * rho) and pin each register's rho to a near-constant (see
+    * Sampling.mix31). The third draw h3 runs only where the 20-bit h2 is
+    * 0, extending the rho domain from 21 to 52. */
   def hllSketch(df: DataFrame, groupCols: Seq[String], keyCol: String,
-                p: Int = 10, seed: Long = 0L,
-                portable: Boolean = true): DataFrame = {
+                p: Int = 10, seed: Long = 0L): DataFrame = {
     require(p >= 4 && p <= 18, s"precision p must be in [4, 18], got $p")
     Sampling.requireIntegralKey(df, keyCol)
     val key = col(keyCol)
-    val (bucket, rho) =
-      if (portable) {
-        // Two independently-seeded avalanche draws — bucketHash's single
-        // multiplicative round would correlate (bucket, rho) and pin
-        // each register's rho to a near-constant (see Sampling.mix31).
-        val h1 = Sampling.mix31(key, lit(seed))
-        val h2 = pmod(Sampling.mix31(key, lit(seed + SeedSpacing)),
-          lit(1L << PortableBits))
-        (shiftright(h1, 31 - p),
-          when(h2 === 0L, lit(PortableBits + 1))
-            .otherwise(lit(PortableBits + 1) - bitLen(h2)))
-      } else {
-        val h = xxhash64(key, lit(seed))
-        val rest = h.bitwiseAND(lit((1L << (64 - p)) - 1))
-        (shiftrightunsigned(h, 64 - p),
-          when(rest === 0L, lit(64 - p + 1))
-            .otherwise(lit(64 - p + 1) - bitLen(rest)))
-      }
+    val bucket = shiftright(Sampling.mix31(key, lit(seed)), 31 - p)
+    val h2 = pmod(Sampling.mix31(key, lit(seed + SeedSpacing)),
+      lit(1L << H2Bits))
+    val h3 = Sampling.mix31(key, lit(seed + 2 * SeedSpacing))
+    val rho = when(h2 === 0L, lit(H2Bits + 31 + 1) - bitLen(h3))
+      .otherwise(lit(H2Bits + 1) - bitLen(h2))
     df.filter(key.isNotNull)
       .groupBy((groupCols.map(col) :+ bucket.as("register")): _*)
       .agg(max(rho).cast("int").as("rho"))
   }
 
-  /** Union-merge of sketch frames built with the same (p, seed, backend):
+  /** Union-merge of sketch frames built with the same (p, seed):
     * element-wise register max. Cross-snapshot distinct counts without
     * re-reading either corpus. */
   def hllMerge(sketches: Seq[DataFrame], groupCols: Seq[String]): DataFrame = {
@@ -113,7 +96,8 @@ object Sketches {
     * mean with the small-range linear-counting correction. Output:
     * groupCols :+ `distinct_est` (double). The input is at most m rows
     * per group, so this is a tiny aggregation. The 32-bit large-range
-    * correction is deliberately absent — neither backend wraps at 2^32. */
+    * correction is deliberately absent — the 51-bit rho source does not
+    * wrap at 2^32. */
   def hllEstimate(sketch: DataFrame, groupCols: Seq[String],
                   p: Int = 10): DataFrame = {
     val m = 1 << p
@@ -138,14 +122,12 @@ object Sketches {
   }
 
   /** Sketch + estimate in one call — the `approx_count_distinct` shape,
-    * but deterministic, engine-portable (portable backend), and with the
-    * intermediate register frame available via [[hllSketch]] when the
-    * caller wants to persist/merge sketches instead. */
+    * but deterministic and engine-portable, and with the intermediate
+    * register frame available via [[hllSketch]] when the caller wants to
+    * persist/merge sketches instead. */
   def hllDistinct(df: DataFrame, groupCols: Seq[String], keyCol: String,
-                  p: Int = 10, seed: Long = 0L,
-                  portable: Boolean = true): DataFrame =
-    hllEstimate(hllSketch(df, groupCols, keyCol, p, seed, portable),
-      groupCols, p)
+                  p: Int = 10, seed: Long = 0L): DataFrame =
+    hllEstimate(hllSketch(df, groupCols, keyCol, p, seed), groupCols, p)
 
   // ---------------------------------------------------------------------
   // Count-Min sketch (Cormode, Muthukrishnan 2005)

@@ -55,7 +55,8 @@ class StatsSpec extends SparkSpec {
 
   test("normalCdf: known values") {
     val d = df("z DOUBLE", Seq(0.0, 1.96, -1.96).map(Row(_)): _*)
-    val out = d.select(col("z"), Stats.normalCdf(col("z")))
+    graft.plans.GraftExtensions.register(spark)
+    val out = d.select(col("z"), expr("graft_norm_cdf(z)"))
       .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
     assertApprox(out(0.0), 0.5, 1e-12)
     assertApprox(out(1.96), 0.9750021, 1e-6)

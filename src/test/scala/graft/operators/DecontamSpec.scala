@@ -90,16 +90,6 @@ class DecontamSpec extends SparkSpec {
     assert(strict == Set(3L, 4L, 5L))
   }
 
-  test("shuffle-join path (broadcastBench = false) is identical") {
-    val a = Decontam.contaminationScores(docs(), bench(), "doc_id", "text",
-        benchTextCol = "q", n = 3, broadcastBench = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = Decontam.contaminationScores(docs(), bench(), "doc_id", "text",
-        benchTextCol = "q", n = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(a == b)
-  }
-
   // --- semanticContamination ---
 
   private def vecs(rows: (Long, Seq[Double])*) =

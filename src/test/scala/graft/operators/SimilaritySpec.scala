@@ -252,17 +252,6 @@ class SimilaritySpec extends SparkSpec {
     }
     val recall = recalls.sum / recalls.size
     assert(recall >= 0.9, f"recall@$k = $recall%.3f")
-    // the PORTABLE plane face (uniform-cube mix31 weights): same
-    // machinery, same recall bar on the same clustered corpus
-    val gotP = topSets(Similarity
-      .lshTopK(d, d, "id", "id", "v", "v", k, dims = 16,
-        portable = true).collect())
-    val recallsP = truth.map { case (q, ts) =>
-      gotP.getOrElse(q, Set.empty[Long]).intersect(ts).size.toDouble /
-        ts.size
-    }
-    val recallP = recallsP.sum / recallsP.size
-    assert(recallP >= 0.9, f"portable recall@$k = $recallP%.3f")
   }
 
   test("ivfTopK recall@3 >= 0.9 vs bruteForceTopK on the clustered corpus; " +
@@ -335,6 +324,28 @@ class SimilaritySpec extends SparkSpec {
     assert(sigs(1L) == sigs(2L))      // cosine 1 -> same halfspaces
     assert(sigs(1L) != sigs(3L))      // cosine -1 -> all bits flipped
     assert((sigs(1L) ^ sigs(3L)) == 0xFFFFL)
+  }
+
+  test("srpSignature(v, n) == srpBandBuckets(v, 1, n)[0] bit for bit " +
+    "(incl. null, ragged, null-element and NaN rows -> 0)") {
+    val rng = new scala.util.Random(5)
+    val d = df("id BIGINT, v ARRAY<DOUBLE>",
+      (Seq.tabulate(20)(i =>
+        Row(i.toLong, Seq.fill(4)(rng.nextGaussian()))) ++ Seq(
+        Row(20L, Seq(1.0, 2.0)),                   // ragged
+        Row(21L, Seq(1.0, null, 3.0, 0.5)),        // null element
+        Row(22L, null),                            // null vector
+        Row(23L, Seq(1.0, Double.NaN, 3.0, 0.5)))  // NaN dot: no bit set
+      ): _*)
+    val out = d.select(col("id"),
+        Similarity.srpSignature(col("v"), nPlanes = 16, dims = 4)
+          .as("sig"),
+        Similarity.srpBandBuckets(col("v"), 1, 16, 4, 42L)(0).as("b0"))
+      .collect()
+    out.foreach(r => assert(r.getLong(1) == r.getLong(2),
+      s"id ${r.getLong(0)}: ${r.getLong(1)} vs ${r.getLong(2)}"))
+    assert(out.filter(_.getLong(0) >= 20L).forall(_.getLong(1) == 0L))
+    assert(out.map(_.getLong(1)).distinct.length > 10)
   }
 
   test("hardNegatives: only different-label items rank, nearest first; " +

@@ -13,19 +13,35 @@ class SketchesSpec extends SparkSpec {
   // --- HLL ---
 
   test("hllDistinct estimates within 5% of truth at n/m ~ 10 " +
-    "(both backends; xxhash64 averaged over seeds — a single draw at " +
-    "m=1024 has sigma ~3.3%)") {
+    "(averaged over seeds — a single draw at m=1024 has sigma ~3.3%)") {
     val df = keys(10000)
-    val est = Sketches.hllDistinct(df, Nil, "k", p = 10)
-      .collect().head.getDouble(0)
-    assert(math.abs(est - 10000) / 10000.0 < 0.05, s"portable est=$est")
-    val xx = Seq(0L, 1L, 2L).map { s =>
-      Sketches.hllDistinct(df, Nil, "k", p = 10, seed = s,
-        portable = false).collect().head.getDouble(0)
+    val ests = Seq(0L, 1L, 2L).map { s =>
+      Sketches.hllDistinct(df, Nil, "k", p = 10, seed = s)
+        .collect().head.getDouble(0)
     }
-    val mean = xx.sum / xx.size
+    assert(math.abs(ests.head - 10000) / 10000.0 < 0.05,
+      s"seed 0 est=${ests.head}")
+    val mean = ests.sum / ests.size
     assert(math.abs(mean - 10000) / 10000.0 < 0.05,
-      s"xxhash64 ests=$xx mean=$mean")
+      s"ests=$ests mean=$mean")
+  }
+
+  test("hllSketch: a key whose 20-bit rho draw is 0 takes rho from a " +
+    "third draw (above 21), not the capped 21") {
+    // the first key with mix31(k, seed + 1000003) mod 2^20 = 0: about
+    // 10^6 tries, searched here rather than in Spark
+    val seed = 0L
+    val k = Iterator.from(0).map(_.toLong).find(k =>
+      graft.plans.HashSignatures.mix31(k, seed + 1000003L) % (1L << 20) == 0L)
+      .get
+    val h3 = graft.plans.HashSignatures.mix31(k, seed + 2000006L)
+    val expect = 52 - (64 - java.lang.Long.numberOfLeadingZeros(h3))
+    val regs = Sketches.hllSketch(this.df("k BIGINT", Row(k)), Nil, "k",
+        seed = seed).collect()
+    assert(regs.length == 1)
+    val rho = regs.head.getInt(1)
+    assert(rho > 21, s"key $k: rho=$rho")
+    assert(rho == expect, s"key $k: rho=$rho, expected $expect")
   }
 
   test("hllDistinct small range uses linear counting and is near-exact") {
